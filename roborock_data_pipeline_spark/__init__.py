@@ -1,4 +1,4 @@
-"""roborock_data_pipeline_spark — a PySpark-native analytics engine.
+"""roborock_data_pipeline_spark -- a PySpark-native analytics engine.
 
 Re-expresses the query/data-processing capabilities of the reference
 pipeline (nkratastr/roborock-data-pipeline, read-only at
@@ -6,7 +6,7 @@ pipeline (nkratastr/roborock-data-pipeline, read-only at
 the large-scale training-data-pipeline operators (dedup, similarity
 search, multimodal columns, text analysis) mandated by the north star.
 
-Design stance (SURVEY.md §7):
+Design stance (SURVEY.md sec 7):
 - DataFrame/SQL only; no RDDs; no custom Catalyst rules.
 - No Python UDFs on hot paths; Pandas UDFs only where built-ins
   genuinely can't express the semantics.

@@ -1,8 +1,8 @@
-"""Array/vector column functions — JVM-side higher-order functions.
+"""Array/vector column functions -- JVM-side higher-order functions.
 
 All math stays in whole-stage codegen: `zip_with`/`aggregate` compile
 to codegen'd loops over the array, no Python round-trip. Elements are
-cast float→double before accumulation so Spark and DuckDB (and any
+cast float->double before accumulation so Spark and DuckDB (and any
 other IEEE-754 engine summing left-to-right) agree bitwise.
 """
 

@@ -2,7 +2,7 @@
 
 The r11 two-model persist audit (PERSIST_AUDIT.json) kept a handful of
 persists exactly where the warm-rerun model wins 2-9x (bench.py's
-min-of-N convention; any session re-invoking a query) — but the
+min-of-N convention; any session re-invoking a query) -- but the
 contract ("caller must spark.catalog.clearCache() between queries")
 lived only in docstrings. ADVICE r11 (operators/dedup.py:146): a
 long-lived session that misses the prose contract accumulates
@@ -18,7 +18,7 @@ This module enforces the contract in code:
 
 Net effect: same-query warm reruns keep their measured 2-9x win (the
 owner's caches survive), while cross-query accumulation is bounded to
-ONE query's working set — a session sweeping the whole registry holds
+ONE query's working set -- a session sweeping the whole registry holds
 at most the caches of the query it is currently running. Sessions may
 still call :func:`release_all` (or clearCache) for a hard reset; both
 stay correct.
@@ -52,7 +52,7 @@ def begin_query(name: str) -> int:
     for df in drop:
         try:
             df.unpersist()
-        except Exception:  # noqa: BLE001 — releasing on a dying
+        except Exception:  # noqa: BLE001 -- releasing on a dying
             pass  # session must never fail the next query
     return len(drop)
 
@@ -70,10 +70,10 @@ def _plan_key(df: DataFrame):
 def track(df: DataFrame) -> DataFrame:
     """Register an ALREADY-persisted DataFrame as a deliberate leak
     owned by the currently-running registry query (or '' when called
-    outside the registry — released by any later begin_query).
+    outside the registry -- released by any later begin_query).
 
     ADVICE r12 (low): tracked entries dedup by ANALYZED-PLAN identity
-    within an owner — a warm rerun of an iterative query (pagerank
+    within an owner -- a warm rerun of an iterative query (pagerank
     tracks one frame per iteration per run) re-tracks plans that are
     semantically identical to the previous run's, and Spark's
     CacheManager already maps them to the same cache entry; keeping

@@ -2,9 +2,9 @@
 
 The scale path for near-duplicate detection: at 100 TB the pairwise
 jaccard (even blocked) is infeasible; MinHash+LSH makes candidate
-generation linear — shingle → k min-hashes → band buckets →
+generation linear -- shingle -> k min-hashes -> band buckets ->
 bucket-join. Everything below is built from `xxhash64` (JVM-side,
-deterministic), array ops, and aggregates — no Python UDFs and no
+deterministic), array ops, and aggregates -- no Python UDFs and no
 MLlib dependency, so it runs in whole-stage codegen.
 """
 
@@ -14,8 +14,8 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 N_PERM = 32  # minhash permutations
-N_BANDS = 16  # LSH bands (2 rows/band → s-curve threshold ≈ (1/16)^(1/2) = 0.25;
-# collision prob at jaccard 0.6 is 1-(1-0.36)^16 ≈ 0.999, while random pairs
+N_BANDS = 16  # LSH bands (2 rows/band -> s-curve threshold ~ (1/16)^(1/2) = 0.25;
+# collision prob at jaccard 0.6 is 1-(1-0.36)^16 ~ 0.999, while random pairs
 # in a shingled corpus (jaccard ~0.001) almost never collide)
 
 
@@ -24,9 +24,9 @@ def minhash_signature(shingles: Column, n_perm: int = N_PERM) -> Column:
 
     One xxhash64 per (shingle, seed); the min over shingles
     approximates a random permutation's first element. All inside
-    `transform`/`aggregate` — O(|shingles| × n_perm) codegen'd work.
+    `transform`/`aggregate` -- O(|shingles| x n_perm) codegen'd work.
 
-    NB: seeds are bound via closures, not lambda defaults — an extra
+    NB: seeds are bound via closures, not lambda defaults -- an extra
     defaulted parameter changes the lambda's arity, which pyspark
     uses to decide whether to pass the array index.
     """

@@ -5,9 +5,9 @@ document) can make a shuffle join stall on a single task. Two levers,
 in preference order:
 
 1. AQE skew-join splitting (`spark.sql.adaptive.skewJoin.enabled`,
-   on by default in session.prepare) — zero code, splits oversized
+   on by default in session.prepare) -- zero code, splits oversized
    partitions at runtime. Use it unless the skew is extreme.
-2. Explicit salting (this module) — for the pathological case AQE
+2. Explicit salting (this module) -- for the pathological case AQE
    can't fix (one key >> everything else, or a skewed aggregation
    rather than a join).
 
@@ -30,12 +30,12 @@ def salted_join(
     n_salts: int = 8,
     how: str = "inner",
 ) -> DataFrame:
-    """Equi-join `large ⋈ small` on `key`, spreading each key over
+    """Equi-join `large join small` on `key`, spreading each key over
     `n_salts` shuffle partitions.
 
-    The small side is exploded n_salts× (acceptable: it is small);
+    The small side is exploded n_saltsx (acceptable: it is small);
     the large side gets a uniform pseudo-random salt derived from a
-    per-row hash (deterministic — no rand(), so retries/resumes see
+    per-row hash (deterministic -- no rand(), so retries/resumes see
     the same assignment)."""
     salts = F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1))).alias("_salt")
     small_rep = small.select("*", salts)
@@ -49,7 +49,7 @@ def salted_join(
 
 def salted_count(df: DataFrame, key: str, n_salts: int = 8) -> DataFrame:
     """Two-phase skewed aggregation: count per (key, salt) partially,
-    then merge per key — the hot key's partial counts are computed by
+    then merge per key -- the hot key's partial counts are computed by
     n_salts tasks instead of one. (For plain count/sum, Spark's own
     partial aggregation already achieves this; the two-phase pattern
     matters for aggregates without map-side combine, e.g.

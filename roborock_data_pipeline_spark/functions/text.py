@@ -1,4 +1,4 @@
-"""Text column functions — tokenization, shingles, fingerprints.
+"""Text column functions -- tokenization, shingles, fingerprints.
 
 All JVM-side (split / array ops / hash functions); no Python UDFs.
 """
@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# BPE-ish word/number/symbol tokenizer — simple char classes only so
+# BPE-ish word/number/symbol tokenizer -- simple char classes only so
 # the same pattern means the same thing in Java regex and RE2/DuckDB.
 BPE_PATTERN = "[a-z]+|[0-9]+|[^a-z0-9 ]"
 
@@ -23,14 +23,14 @@ def distinct_tokens(text: Column) -> Column:
 
 
 def bpe_tokens(text: Column) -> Column:
-    """Regex tokenization (lowercased) — the BPE-ish token count."""
+    """Regex tokenization (lowercased) -- the BPE-ish token count."""
     return F.regexp_extract_all(F.lower(text), F.lit(BPE_PATTERN), F.lit(0))
 
 
 def fingerprint(text: Column) -> Column:
     """Order-insensitive document fingerprint: md5 over the sorted
     distinct token set. Two docs with the same vocabulary (any word
-    order / repetition) collide — the cheap rolling-hash analog."""
+    order / repetition) collide -- the cheap rolling-hash analog."""
     return F.md5(F.array_join(F.array_sort(distinct_tokens(text)), " "))
 
 
@@ -38,9 +38,9 @@ def hashed_shingles(text: Column, k: int = 3) -> Column:
     """Distinct word-k-shingles hashed to int64 (xxhash64).
 
     Set semantics are identical to the string shingle set (collision
-    odds ~|shingles|²/2⁶⁴), but intersections/unions on longs are far
+    odds ~|shingles|^2/2^64), but intersections/unions on longs are far
     cheaper than on 20-byte strings and the shuffle payload shrinks
-    ~3×. Use for similarity math; keep string shingles for display."""
+    ~3x. Use for similarity math; keep string shingles for display."""
     return F.array_distinct(F.transform(shingles(text, k), lambda s: F.xxhash64(s)))
 
 

@@ -4,14 +4,14 @@
 The eight rows-only queries (`q_approx_distinct`, `q_hll_daily_users`,
 `q_approx_percentiles`, `q_dedup_minhash`, `q_dedup_simhash`,
 `q_similarity_lsh`, `q_similarity_ivf`, `q_kmeans_clusters`) can never
-hash-match an ANSI oracle — their raw outputs are engine-specific by
+hash-match an ANSI oracle -- their raw outputs are engine-specific by
 construction. What IS oracle-expressible is the *accuracy contract*
 each one carries: estimate-within-bound of an exact twin, recall
 against ground truth, or a partition invariant. Each check below runs
 the sketch AND its exact twin in one Spark job, reduces to
 (exact-valued columns + within-bound booleans), and pairs with a
 DuckDB oracle that computes the same exact values and expects the
-booleans true — so the driver's hash compare becomes a first-class
+booleans true -- so the driver's hash compare becomes a first-class
 accuracy gate instead of a weak rows-only count.
 
 Bounds mirror the pytest suite (test_dedup.py, test_functions.py,
@@ -30,7 +30,7 @@ from roborock_data_pipeline_spark.registry import query
 from roborock_data_pipeline_spark.sources.tables import load
 
 # Wrap the exact-jaccard oracle (the ground-truth pair set) for the
-# minhash recall check — shared text, so the definitions cannot drift.
+# minhash recall check -- shared text, so the definitions cannot drift.
 _JACCARD_ORACLE = registry._REGISTRY["q_near_dup_jaccard"].oracle
 
 
@@ -49,11 +49,11 @@ def q_approx_distinct_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-visible form of test_dedup.py's <=max(2, 2%) bound.
 
     Gates the SAME estimator q_approx_distinct ships (DataSketches
-    HLL, lgK=14 — see its docstring for the r14 measured switch off
+    HLL, lgK=14 -- see its docstring for the r14 measured switch off
     the wide-buffer HLL++). Both aggregates run over the DISTINCT
-    key sets, one per column, joined on their 1-row outputs — NOT
+    key sets, one per column, joined on their 1-row outputs -- NOT
     one four-function agg over the raw events (the pre-r14 shape,
-    measured 2.6× the whole query at sf0.1). Two wins, both
+    measured 2.6x the whole query at sf0.1). Two wins, both
     semantics-free:
 
     - an HLL sketch is duplicate-idempotent, so sketching the
@@ -70,7 +70,7 @@ def q_approx_distinct_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Coverage note (ADVICE r14): because this gate sketches the
     pre-deduplicated key set, it does not exercise the sketch's
-    cross-partition merge path (sparse→dense promotion at volume);
+    cross-partition merge path (sparse->dense promotion at volume);
     that path is covered by q_hll_daily_users_check, which sketches
     the raw per-day event stream."""
     ev = load(spark, sf_dir, "events")
@@ -199,7 +199,7 @@ def q_dedup_minhash_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_simhash_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash completeness on the deterministic core: identical
     documents have identical simhashes (same block, hamming 0), so
-    every exact-duplicate pair MUST appear in the hamming<=8 output —
+    every exact-duplicate pair MUST appear in the hamming<=8 output --
     recall 1.0 by construction, and a regression tripwire for the
     signature/blocking code."""
     docs = load(spark, sf_dir, "documents")
@@ -229,16 +229,16 @@ def q_dedup_simhash_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ann_ratio_check(
     truth: DataFrame, approx: DataFrame, bound: float
 ) -> DataFrame:
-    """(k, ratio_ok): ANN approximation ratio — mean cosine of the ANN
+    """(k, ratio_ok): ANN approximation ratio -- mean cosine of the ANN
     top-k vs mean cosine of the exact top-k.
 
     Exact-id recall is the wrong metric on this corpus: the synthetic
     embeddings are near-uniform (exact top-10 mean cosine ~0.3), so
     the true top-k is an essentially arbitrary subset of a large
     near-tied shell and any partition-based ANN recovers ~the probed
-    fraction of it (measured 0.1-0.6 across SFs — geometry, not
+    fraction of it (measured 0.1-0.6 across SFs -- geometry, not
     implementation). The approximation ratio measures what ANN
-    actually promises — neighbors nearly as close as the exact ones —
+    actually promises -- neighbors nearly as close as the exact ones --
     and sits at 0.78-0.94 across SFs here; bound 0.7."""
     t = truth.agg(
         F.count("*").alias("k"), F.avg("cosine").alias("exact_mean")
@@ -301,7 +301,7 @@ def q_similarity_ivf_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_kmeans_clusters_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-means partition invariants, driver-checkable: every vector is
     assigned to exactly one cluster (populations sum to the corpus
-    size — an exact-valued oracle column), at most k clusters emerge,
+    size -- an exact-valued oracle column), at most k clusters emerge,
     and mean squared distances are non-negative."""
     from roborock_data_pipeline_spark.operators.clustering import (
         q_kmeans_clusters,
@@ -338,21 +338,21 @@ def q_similarity_pq_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Cap-engaged block-population gates (r9, closing VERDICT r8 "weak" #1):
 # every other approximate path has an accuracy gate, but the BLOCK_CAP
-# sub-split had none that ran WHILE THE CAP WAS ENGAGED — a 100 TB user
+# sub-split had none that ran WHILE THE CAP WAS ENGAGED -- a 100 TB user
 # whose blocks overflow the cap got silently degraded NN graphs. The
 # testdata corpus is near-uniform (zero cos >= 0.9 pairs at any SF), so
 # a recall gate on it would be vacuous: both gates instead run on a
-# twin-AUGMENTED corpus — every vector unioned with an identical twin at
+# twin-AUGMENTED corpus -- every vector unioned with an identical twin at
 # vec_id + 1_000_000, the same cos~1 twin structure the sf1 scale
-# generator creates — which doubles every block and, with GATE_CAP=16,
+# generator creates -- which doubles every block and, with GATE_CAP=16,
 # forces the cap to engage at every test SF (max base block 218 at
 # sf0.1 -> g in [8, 28]). The old vec_id-hash sub-split scores ~1/g
 # twin recall here; the banded LSH sub-split must score >= 95%.
 
 # Design envelope: GATE_CAP=16 puts the augmented test-SF blocks at
-# g = ceil(n/cap) in [8, 28] — inside the banded-LSH sub-split's
+# g = ceil(n/cap) in [8, 28] -- inside the banded-LSH sub-split's
 # 2^_SIG_BITS = 64-way envelope, the regime the gate is meant to
-# measure. Far beyond it (e.g. the sf1 corpus augmented: g ≈ 273)
+# measure. Far beyond it (e.g. the sf1 corpus augmented: g ~ 273)
 # the hash backstop dominates by design and recall degrades
 # gracefully; sf1 evidence for the REAL cap comes from the direct
 # 170/170 parity sweep instead (CORRECTNESS_SF1.json).
@@ -476,10 +476,10 @@ def q_knn_join_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cap-engaged k-NN gate on the twin-augmented corpus, rank-
     aligned: at every (vec_id, rk) the capped neighbor's cosine is
     compared to the exact neighbor's. Two promises: (1) twin edges
-    (exact cosine >= 0.9 — each vector's identical twin at rank 1)
+    (exact cosine >= 0.9 -- each vector's identical twin at rank 1)
     must surface in the capped graph >= 95% of the time; (2) the
     capped graph's mean neighbor cosine must reach 80% of the exact
-    optimum — on the near-uniform shell (exact rank-2/3 neighbors sit
+    optimum -- on the near-uniform shell (exact rank-2/3 neighbors sit
     in a near-tied band) edge-id recall is the wrong metric, the
     approximation ratio is what a capped NN graph actually promises
     (same argument as _ann_ratio_check)."""
@@ -487,7 +487,7 @@ def q_knn_join_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     aug = _augmented(spark, sf_dir)
     # the truth side must be UNCAPPED (cap high enough that the exact
-    # regime holds on any corpus) — at the default cap a large-enough
+    # regime holds on any corpus) -- at the default cap a large-enough
     # block would silently make this capped-vs-capped and vacuous
     exact = knn_join(aug, cap=10**9).select(
         "vec_id", "rk", F.col("cosine").alias("ec")

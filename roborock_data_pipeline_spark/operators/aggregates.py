@@ -1,7 +1,7 @@
-"""Aggregations (SURVEY §2.D).
+"""Aggregations (SURVEY sec 2.D).
 
 The reference's only declared aggregate is the never-implemented
-Daily_Summary (pipeline.py:307, sheets_client.py:299-307 — headers
+Daily_Summary (pipeline.py:307, sheets_client.py:299-307 -- headers
 declared twice, computed nowhere). ``q_daily_summary`` is that gold
 table, computed over the `events` telemetry stand-in; it is the
 engine's flagship query (driver ``entry()``).
@@ -54,7 +54,7 @@ def q_daily_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     ev = load(spark, sf_dir, "events")
     # date emitted as ISO string: DATE-typed columns round-trip
-    # differently through pandas in Spark vs DuckDB (SURVEY §7 risk 1).
+    # differently through pandas in Spark vs DuckDB (SURVEY sec 7 risk 1).
     return ev.groupBy(F.date_format("ts", "yyyy-MM-dd").alias("date")).agg(
         F.count("*").alias("total_cleanings"),
         F.round(F.sum("value"), 2).alias("total_area_m2"),
@@ -77,7 +77,7 @@ def q_daily_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_lifetime_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A1/S2: lifetime running totals per device — the engine computes
+    """A1/S2: lifetime running totals per device -- the engine computes
     what the reference reads pre-aggregated from the device
     (roborock_collector.py:365-396; snapshot append pipeline.py:523-530).
     """
@@ -102,7 +102,7 @@ def q_lifetime_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_consumables_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5/S3: current-value view = last row per (device, counter) —
+    """A5/S3: current-value view = last row per (device, counter) --
     the reference appends consumables snapshots and the "current"
     state is the latest row per device (pipeline.py:517-544).
     `event_type` stands in for the consumable name.
@@ -148,7 +148,7 @@ def q_row_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_tpch_q1_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7 (EXT): hash-aggregate at scale — TPC-H Q1 shape. Partial
+    """A7 (EXT): hash-aggregate at scale -- TPC-H Q1 shape. Partial
     aggregation reduces 600k rows to 6 groups map-side before the
     shuffle; the scan reads only the 7 referenced columns."""
     li = load(spark, sf_dir, "lineitem")
@@ -191,7 +191,7 @@ def q_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("q_approx_distinct")  # no oracle: HLL implementations differ by engine
 def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A8 (EXT, scale path): HLL-sketch distinct estimate — the
+    """A8 (EXT, scale path): HLL-sketch distinct estimate -- the
     100 TB variant of q_count_distinct. Rows-only driver check; the
     pytest suite asserts <2% relative error against the exact counts
     and q_approx_distinct_check is the oracle-checked gate.
@@ -201,7 +201,7 @@ def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     switched r14 on measurement: the HLL++ aggregate at rsd 0.01
     declares its 1639-long register file as individual buffer
     attributes, which costs ~0.65 s of fixed per-aggregate overhead
-    here and ~15 µs/row — 12× the DataSketches object sketch on the
+    here and ~15 us/row -- 12x the DataSketches object sketch on the
     same scan (0.13 s vs 1.5 s at sf0.1). Same sketch family, same
     bound, mergeable across systems."""
     ev = load(spark, sf_dir, "events")
@@ -225,7 +225,7 @@ def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_rollup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A9 (EXT): daily → monthly → grand-total rollup of the daily
+    """A9 (EXT): daily -> monthly -> grand-total rollup of the daily
     summary (one pass, partial-agg friendly)."""
     ev = load(spark, sf_dir, "events")
     return ev.rollup(
@@ -241,7 +241,7 @@ def q_rollup_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_hll_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8 at scale: per-day distinct users via MERGEABLE HLL sketches
     (DataSketches `hll_sketch_agg`), plus the month-to-date rollup by
-    sketch UNION — the pattern that makes distinct-count maintainable
+    sketch UNION -- the pattern that makes distinct-count maintainable
     at 100 TB: each partition/day keeps a kilobyte sketch, rollups
     union sketches instead of re-scanning raw events, and late
     partitions just re-union. `approx_count_distinct` (q_approx_distinct)
@@ -275,7 +275,7 @@ def q_hll_daily_users(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_cube_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A9 completion: full CUBE over (returnflag, linestatus) with the
-    grouping_id disambiguator — all four aggregation levels in one
+    grouping_id disambiguator -- all four aggregation levels in one
     pass. Spark expands the cube map-side (Expand) then runs one
     partial-agg-friendly hash aggregate, so the shuffle carries
     2^dims partial rows per map task, not 2^dims scans.

@@ -1,11 +1,11 @@
-"""Multi-join analytic shapes (SURVEY §2.F EXT — warehouse breadth).
+"""Multi-join analytic shapes (SURVEY sec 2.F EXT -- warehouse breadth).
 
 The reference never joins (single-entity pipeline); these are the
 classic decision-support shapes a warehouse user runs on the same
 tables, exercising join *ordering* and broadcast decisions beyond the
 two-table q_star_join/q_fact_join:
 
-- Q3 shape: selective dim filter → fact join → grouped top-k.
+- Q3 shape: selective dim filter -> fact join -> grouped top-k.
 - Q5 shape: 6-table snowflake with a cycle-closing equality
   (customer nation == supplier nation) that forces a join-order
   choice no pairwise greedy plan gets wrong at this size, and AQE
@@ -45,11 +45,11 @@ def q_tpch_q3_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     BUILDING-segment orders, top-10.
 
     Plan shape that matters at 100 TB: the segment filter prunes
-    customer ~5× before its join (customer scales with SF, so the
-    broadcast-vs-SMJ call is left to Catalyst/AQE — locally it
+    customer ~5x before its join (customer scales with SF, so the
+    broadcast-vs-SMJ call is left to Catalyst/AQE -- locally it
     auto-broadcasts); both date filters push to the parquet scans
-    (PushedFilters); the grouped top-10 plans as partial-agg →
-    exchange → TakeOrderedAndProject, never a global sort of all
+    (PushedFilters); the grouped top-10 plans as partial-agg ->
+    exchange -> TakeOrderedAndProject, never a global sort of all
     groups."""
     c = load(spark, sf_dir, "customer").where(F.col("c_mktsegment") == "BUILDING")
     o = load(spark, sf_dir, "orders").where(
@@ -104,7 +104,7 @@ def q_tpch_q5_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     join as an extra predicate instead of forcing a second shuffle of
     the fact. nation/region (fixed 25/5 rows) broadcast explicitly;
     customer/supplier scale with SF, so their join strategy is left
-    to Catalyst/AQE — auto-broadcast locally, SMJ at warehouse scale."""
+    to Catalyst/AQE -- auto-broadcast locally, SMJ at warehouse scale."""
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -166,14 +166,14 @@ def q_tpch_q5_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_scd2_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Slowly-changing-dimension type-2 build: collapse each user's
     event stream into state-validity intervals (valid_from inclusive,
-    valid_to = next interval's start, NULL while current) — the
+    valid_to = next interval's start, NULL while current) -- the
     snapshot-to-history derivation every warehouse runs on device
     state feeds (reference monitor state, pipeline.py:143-156, kept
     only the latest state; SCD2 keeps the full history).
 
     One shuffle on user_id serves all three window passes (lag edge
     flag, running segment id, lead close-off) plus the segment
-    groupBy — Catalyst reuses the (user_id)-hash exchange because
+    groupBy -- Catalyst reuses the (user_id)-hash exchange because
     every window/group key is a superset prefix. At 100 TB this
     partitions cleanly by user; no global ordering anywhere.
     """
@@ -228,7 +228,7 @@ def q_skew_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     key; phase 2 re-aggregates the <= 5 x 16 partials. Semantics are
     identical to a plain GROUP BY (the oracle), but at 100 TB a
     single 'view' key holding 40% of a trillion rows lands on ONE
-    reducer in the naive plan — the salt caps any reducer at 1/16 of
+    reducer in the naive plan -- the salt caps any reducer at 1/16 of
     the hottest key. avg is derived at the final stage (sum/count),
     never averaged-of-averages.
     """
@@ -277,7 +277,7 @@ def q_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The wide aggregate is one partial-agg pass (3 codegen CASE
     counters, no per-metric scans); unpivot/melt is a map-only
-    Expand node — 3x row fan-out with zero shuffle, so the whole
+    Expand node -- 3x row fan-out with zero shuffle, so the whole
     reshape costs exactly one exchange on user_id at any scale.
     """
     ev = load(spark, sf_dir, "events")
@@ -325,25 +325,25 @@ def q_unpivot_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strictly-ordered event funnel: signup → view → click →
+    """Strictly-ordered event funnel: signup -> view -> click ->
     purchase, each stage's timestamp strictly after the previous
     stage's FIRST occurrence; reports stage populations and end-to-end
     conversion.
 
-    ONE exchange (r15, guide §2.3/§7.2): the stage-chain form
+    ONE exchange (r15, guide sec 2.3/sec 7.2): the stage-chain form
     aggregated and semi-joined per stage, and the four stage COUNTS
-    re-evaluated the chain's prefixes — the signup subtree sat in the
+    re-evaluated the chain's prefixes -- the signup subtree sat in the
     plan four times, view three times, click twice (11 Exchange
     nodes). Funnel state per user is four timestamps computed by one
     ordered walk, so: group the four event types per user (ONE
     exchange), sort each user's (ts, type) list, and fold it with a
-    (t0..t3) struct accumulator — t_k = first event of type k
+    (t0..t3) struct accumulator -- t_k = first event of type k
     strictly after t_{k-1}, which on a ts-sorted list IS the MIN of
     the qualifying set, exactly the old per-stage MIN-join semantics
     (ties are safe: strict > rejects an equal-ts event regardless of
     its position in the sorted list). Stage populations are null
     counts on the fold result. Measured (interleaved 6-cycle A/B,
-    sf0.1): med 0.746 → 0.631 s; plan 11 Exchanges → 2. Per-user
+    sf0.1): med 0.746 -> 0.631 s; plan 11 Exchanges -> 2. Per-user
     state stays bounded (one event list, the sessionize pattern); at
     100 TB there is no cross-stage explosion and a single corpus
     exchange instead of four.
@@ -425,13 +425,13 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort retention matrix: users grouped by first-seen week,
-    counted distinct in each subsequent activity week — the
+    counted distinct in each subsequent activity week -- the
     engagement report behind every retention curve.
 
     The first-seen table is user-sized (one shuffle on user_id); the
     join back co-partitions on the same key, and the final
     (cohort, offset) aggregate is tiny. COUNT(DISTINCT user) shuffles
-    (cohort, offset, user) once — partial-distinct map-side first. At
+    (cohort, offset, user) once -- partial-distinct map-side first. At
     100 TB swap the exact distinct for the HLL-sketch rollup
     (q_hll_daily_users) if the matrix must be maintained
     incrementally.
@@ -478,7 +478,7 @@ def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     One shuffle on user_id for the lead() window (sequences stay
     inside their partition), then the pair counts collapse to
-    |types|² rows — the probability normalization window runs on that
+    |types|^2 rows -- the probability normalization window runs on that
     tiny table, never on raw events.
     """
     ev = load(spark, sf_dir, "events")
@@ -582,7 +582,7 @@ def q_tpch_q18_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     the HAVING subquery; this plan aggregates lineitem ONCE (partial
     agg before the exchange collapses 7 lines/order to 1 row) and
     joins the surviving ~1% of orders against the already-computed
-    sums — no second pass over the fact table. At 100 TB the hot set
+    sums -- no second pass over the fact table. At 100 TB the hot set
     is small enough that AQE turns the orders join into a broadcast
     of the aggregated side."""
     li = load(spark, sf_dir, "lineitem")
@@ -628,14 +628,14 @@ RFM_ANCHOR = "2024-01-31"
 )
 def q_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM segmentation (recency / frequency / monetary quartiles) of
-    purchasers — the standard CRM scoring query.
+    purchasers -- the standard CRM scoring query.
 
     One shuffle aggregates events to user grain; the three NTILE
     windows then run over the user-sized table (quartile assignment
     is deterministic: metric order with user_id tie-break, so the
     oracle and any re-run agree). At 100 TB the user table is the
     small output of the first agg; a global NTILE needs a single-
-    partition sort of users only — if even that is too large, swap
+    partition sort of users only -- if even that is too large, swap
     NTILE for approx-percentile bucket thresholds (the sketch path
     q_approx_percentiles demonstrates)."""
     ev = load(spark, sf_dir, "events").where(F.col("event_type") == "purchase")
@@ -681,14 +681,14 @@ def q_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top onboarding paths: the 20 most common sequences of each
-    user's first five events — the product-analytics 'what do users
+    user's first five events -- the product-analytics 'what do users
     actually do first' query.
 
     One shuffle on user_id serves both the row_number prune and the
     path assembly (same partitioning, Catalyst reuses the exchange);
     sequences are built JVM-side with array_sort over (ts, event_id,
-    type) structs + transform — no Python, no collect. Path strings
-    are ≤5 short tokens, so the final count groups on a bounded key
+    type) structs + transform -- no Python, no collect. Path strings
+    are <=5 short tokens, so the final count groups on a bounded key
     domain and the top-20 is TakeOrderedAndProject."""
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
@@ -745,19 +745,19 @@ def q_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_pmi_cooccur(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pointwise mutual information between event types co-occurring
-    in the same user's history — the association-mining signal behind
+    in the same user's history -- the association-mining signal behind
     'users who do A also do B' features.
 
     The distinct (user, type) projection is the only full-data
     shuffle; the self-join joins two copies of that deduped table on
     user_id (co-partitioned, and at most |types| rows per user), so
-    pair generation is |types|²-bounded per user, never quadratic in
+    pair generation is |types|^2-bounded per user, never quadratic in
     events. Type marginals (|types| rows) and the user count (1 row)
     are broadcast onto the pair table."""
     ev = load(spark, sf_dir, "events")
     # NOT persisted (r11, PERSIST_AUDIT.json): the deduped projection
     # ends at a shuffle, and shuffle-stage reuse serves the self-join's
-    # second read — dropping the cache measured 0.53× at sf1
+    # second read -- dropping the cache measured 0.53x at sf1
     ut = ev.select("user_id", "event_type").distinct()
     n_users = ev.agg(
         F.countDistinct("user_id").alias("n_users")
@@ -818,14 +818,14 @@ ACCTBAL_FLOOR = 1500
 def q_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape (parts/supplier relationship): how many
     qualified suppliers ship each brand+type, excluding a supplier
-    blocklist — the sourcing-risk query.
+    blocklist -- the sourcing-risk query.
 
     The blocklist subquery is a broadcast ANTI join (NOT IN is safe
     as anti here: s_suppkey is non-null), so the fact scan drops
     blocked suppliers map-side before the part join; part joins on
     its key (left to AQE at SF scale), and COUNT(DISTINCT suppkey)
     partial-aggregates per (brand, type, suppkey) before the final
-    distinct count — two-level, no row explosion. Top-30 is
+    distinct count -- two-level, no row explosion. Top-30 is
     TakeOrderedAndProject."""
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part")
@@ -862,7 +862,7 @@ def q_supplier_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape (order-priority checking): orders in one
     quarter with at least one line shipped after the order date,
-    counted per priority — the EXISTS-correlated-subquery pattern.
+    counted per priority -- the EXISTS-correlated-subquery pattern.
 
     The quarter filter pushes into the orders scan (1/24 of rows
     survive before any join); EXISTS plans as a LEFT SEMI join on
@@ -911,14 +911,14 @@ def q_order_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample z-test per event type between deterministic
-    hash-split user groups — the experiment-analysis readout (here a
+    hash-split user groups -- the experiment-analysis readout (here a
     null A/A test: both groups draw from the same distribution, so
     |z| should hover near 0, which the oracle confirms exactly).
 
     Group assignment reuses the md5-prefix trick from q_train_split
     (stable under corpus growth, no stored assignment table). One
     partial-aggregated pass computes (n, mean, var) per (type, grp);
-    the z computation is a self-join of the 10-row stats table —
+    the z computation is a self-join of the 10-row stats table --
     broadcast, trivially. At 100 TB the only fact-table cost is the
     single groupBy; metric sums and squares partial-aggregate
     map-side."""
@@ -976,11 +976,11 @@ def q_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trending event types: top-3 per tumbling hour — the 'what is
+    """Trending event types: top-3 per tumbling hour -- the 'what is
     hot right now' leaderboard, batch form of a streaming sliding
     rollup.
 
-    The count collapses events to |windows|×|types| rows in one
+    The count collapses events to |windows|x|types| rows in one
     partial-aggregated shuffle; the ranking window then runs on that
     tiny table partitioned by window (never on raw events). Rank is
     ROW_NUMBER over (cnt DESC, type) so top-3 membership is
@@ -1024,16 +1024,16 @@ def q_trending(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_top_spenders_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tie-aware grouped top-k: the 3 highest-spending customers per
     nation, keeping ALL customers tied at the cut (RANK, not
-    ROW_NUMBER — the semantics q_latest_per_device's row_number form
+    ROW_NUMBER -- the semantics q_latest_per_device's row_number form
     deliberately does not have).
 
     One shuffle aggregates orders to customer grain (partial sums
     map-side); nation broadcasts onto the result; the RANK window
     partitions by 25 nations over customer-count rows. Ranking runs
     on the ROUNDED spend so both engines see identical tie sets. At
-    scale, rank-≤-k per group cannot use TakeOrderedAndProject (ties
+    scale, rank-<=-k per group cannot use TakeOrderedAndProject (ties
     unknown until sorted), but each partition sorts only its own
-    nation's customers — no global sort."""
+    nation's customers -- no global sort."""
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     n = load(spark, sf_dir, "nation")
@@ -1083,15 +1083,15 @@ def q_top_spenders_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_growth_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly growth accounting — every active user classified as
+    """Weekly growth accounting -- every active user classified as
     new / retained / resurrected, plus the churn complement
     (last week's actives who didn't return): the decomposition
     behind 'is growth new users or resurrection'.
 
     The distinct (user, week) projection is the only full-data
     shuffle; the per-user lag window runs on that user-week table
-    (≤1 row per user-week), and the final classification collapses
-    to |weeks| rows — the churn lag window is over that tiny table.
+    (<=1 row per user-week), and the final classification collapses
+    to |weeks| rows -- the churn lag window is over that tiny table.
     All counts are integers end-to-end: parity is exact, no
     rounding anywhere."""
     ev = load(spark, sf_dir, "events")
@@ -1167,17 +1167,17 @@ def q_tpch_q7_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two independent dimension paths (supplier-nation, customer-nation)
     land on one fact pass; the disjunctive pair predicate can only be
     applied after both paths join, so the plan quality question is
-    whether the fact is scanned once and both nation joins broadcast —
+    whether the fact is scanned once and both nation joins broadcast --
     nation is 25 rows, both sides broadcast; the date filter pushes to
     the lineitem scan.
 
     Revenue sums as DECIMAL(23,8) in both engines: decimal addition
-    is exact and associative, so the sum is order-independent —
-    float64 sums over 10×-the-terms drifted ~1e-10 relative at the
+    is exact and associative, so the sum is order-independent --
+    float64 sums over 10x-the-terms drifted ~1e-10 relative at the
     sf1 probe and ROUND(,2) flipped the last penny on a few groups.
     Decimal is the money-rollup posture at any scale (and measured
     no slower than the double sum at sf0.1). The per-row
-    double→decimal cast rounds identically in both engines (a
+    double->decimal cast rounds identically in both engines (a
     binary fraction can't tie at the 8th decimal: that needs
     2^n | 10^8)."""
     li = load(spark, sf_dir, "lineitem").where(
@@ -1243,7 +1243,7 @@ def q_tpch_q7_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tpch_q12_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q12 shape (shipping latency vs priority): order-to-ship
-    latency buckets × priority class counts — the conditional-count
+    latency buckets x priority class counts -- the conditional-count
     aggregation pattern (SUM(CASE ...)) over one fact-fact join.
 
     The join carries only (orderkey, orderpriority, orderdate); the
@@ -1288,10 +1288,10 @@ def q_tpch_q12_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tpch_q14_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape (promotion effect): promo revenue share per
-    ship month — conditional-sum ratio over a broadcast part join.
+    ship month -- conditional-sum ratio over a broadcast part join.
 
     part is the small side (broadcast); the ratio is computed from two
-    partial-agg-friendly sums in ONE pass — never two scans or a
+    partial-agg-friendly sums in ONE pass -- never two scans or a
     self-join of the aggregate."""
     li = load(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -1339,12 +1339,12 @@ def q_tpch_q17_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     The correlated per-part average becomes a part-keyed aggregate
     joined back onto the fact; the brand filter rides the broadcast
     part join. The aggregate side carries NO broadcast hint (ADVICE
-    r3): broadcast viability is absolute, not relative — a
+    r3): broadcast viability is absolute, not relative -- a
     |parts|-cardinality build side does not fit executor memory at
     100 TB, so AQE decides at runtime (broadcast at small SF,
     shuffle join at scale). One fact scan feeds both the average
     build and the probe at warehouse scale via exchange reuse or a
-    cheap double scan — never a per-row subquery."""
+    cheap double scan -- never a per-row subquery."""
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part").where(
         F.col("p_brand").isin("Brand#1", "Brand#2")
@@ -1384,7 +1384,7 @@ def q_tpch_q19_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     part join.
 
     The pure-part conjuncts (brand+size per bracket, OR'd) are
-    derivable and push to the part scan; the mixed part×lineitem
+    derivable and push to the part scan; the mixed partxlineitem
     disjunction evaluates post-join. Single fact pass, broadcast
     part."""
     li = load(spark, sf_dir, "lineitem")
@@ -1440,7 +1440,7 @@ def q_tpch_q22_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The global average is a one-row aggregate broadcast as a cross
     join (never a collect); the NOT EXISTS is a broadcast-able LEFT
-    ANTI against the date-filtered orders projection — the date filter
+    ANTI against the date-filtered orders projection -- the date filter
     pushes into the orders scan so the anti build side is small."""
     c = load(spark, sf_dir, "customer")
     avg_bal = (
@@ -1488,12 +1488,12 @@ def q_cheapest_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The unit cost is integer-exact (total cents div total units):
     float AVG partial-aggregation order differs between engines and
-    flips the 4th decimal on ~1/200 parts — integer arithmetic is
+    flips the 4th decimal on ~1/200 parts -- integer arithmetic is
     associative, so the argmin is reproducible everywhere.
 
-    Two-level aggregate then ONE window over the (part × supplier)
-    aggregate — cardinality |parts|×|suppliers-per-part|, thousands of
-    times smaller than the fact — never a window over raw lineitem.
+    Two-level aggregate then ONE window over the (part x supplier)
+    aggregate -- cardinality |parts|x|suppliers-per-part|, thousands of
+    times smaller than the fact -- never a window over raw lineitem.
     The groupBy and the window share the part key, so the window
     reuses the aggregate's partitioning (no second exchange of note)."""
     li = load(spark, sf_dir, "lineitem")
@@ -1546,8 +1546,8 @@ def q_tpch_q8_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape (national market share): NATION_3's share of
     STANDARD-part revenue sold into ASIA customers, by order year.
 
-    The deepest dim fan here — customer-nation-region on one side,
-    supplier-nation on the other, plus the part filter — all landing
+    The deepest dim fan here -- customer-nation-region on one side,
+    supplier-nation on the other, plus the part filter -- all landing
     on ONE lineitem pass with every dim broadcast (nation/region are
     constant-size; part/customer/supplier auto-broadcast locally,
     AQE decides at warehouse scale). The share is a conditional-sum
@@ -1609,11 +1609,11 @@ def q_tpch_q4_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape (order-priority checking): orders in a quarter
     with at least one line shipped >60 days after the order date,
     counted by priority. (The reference testdata carries no
-    commit/receipt dates, so "late" is ship-vs-order latency — the
+    commit/receipt dates, so "late" is ship-vs-order latency -- the
     EXISTS shape is what Q4 exercises.)
 
     The correlated EXISTS compiles to a LEFT SEMI join on orderkey
-    with the latency predicate as a join condition — each order is
+    with the latency predicate as a join condition -- each order is
     counted at most once regardless of how many lines are late, with
     no post-join dedup. The date filter pushes to the orders scan;
     the semi join's build side is the filtered orders (6 months),
@@ -1649,7 +1649,7 @@ def q_tpch_q4_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_tpch_q6_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 shape (forecast revenue change): pure scan-aggregate —
+    """TPC-H Q6 shape (forecast revenue change): pure scan-aggregate --
     discount revenue left on the table for small, mid-discount lines
     in one year.
 
@@ -1657,7 +1657,7 @@ def q_tpch_q6_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet scan as PushedFilters (row-group stats skip whole chunks
     at 100 TB), only 4 columns are read, and the single global
     aggregate is partial-per-partition + one 1-row exchange. No join,
-    no wide shuffle — I/O-bound by design (plan-pinned in
+    no wide shuffle -- I/O-bound by design (plan-pinned in
     test_plans.py)."""
     li = load(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -1694,17 +1694,17 @@ def q_tpch_q6_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tpch_q9_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q9 shape (product-type profit): profit on widget parts by
     supplier nation and order year. (No partsupp table in the
-    testdata, so supply cost is proxied at 60% of retail price — the
+    testdata, so supply cost is proxied at 60% of retail price -- the
     join/aggregate shape is Q9's.)
 
     Four dims land on one lineitem pass: part (name-filtered,
-    broadcast — the filter prunes before the join), supplier + nation
+    broadcast -- the filter prunes before the join), supplier + nation
     (broadcast chain), and the orders join for the year, which is the
     only fact-fact shuffle (both sides keyed on orderkey). Profit is
-    computed map-side post-join; the group-by is tiny (nations ×
+    computed map-side post-join; the group-by is tiny (nations x
     years) so partial aggregation collapses nearly everything before
     the final exchange. The profit sum is DECIMAL(23,8) in both
-    engines for order-independence — see q_tpch_q7_shape."""
+    engines for order-independence -- see q_tpch_q7_shape."""
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part").where(F.col("p_name").like("%widget%"))
     s = load(spark, sf_dir, "supplier")
@@ -1748,14 +1748,14 @@ def q_tpch_q9_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tpch_q11_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q11 shape (important stock): parts whose traded value
-    through two nations' suppliers exceeds a fraction of the total —
+    through two nations' suppliers exceeds a fraction of the total --
     the scalar-subquery-threshold pattern. (partsupp doesn't exist in
     the testdata; lineitem extendedprice through nation-filtered
     suppliers is the value proxy.)
 
     The per-part aggregate is built ONCE and feeds both the threshold
     scalar (a second, 1-row aggregate) and the probe: the scalar rides
-    a broadcast cross-join (1 row — metadata-sized at any scale, same
+    a broadcast cross-join (1 row -- metadata-sized at any scale, same
     pattern as dq.py's contract gates), never a per-row subquery.
     Threshold comparison happens on the UNROUNDED sum; rounding is
     display-only, so engine-order float drift can't flip a boundary
@@ -1796,15 +1796,15 @@ def q_tpch_q11_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tpch_q13_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q13 shape (customer order-count distribution): how many
-    customers placed 0, 1, 2... non-urgent orders — the left-outer
+    customers placed 0, 1, 2... non-urgent orders -- the left-outer
     join + double aggregation pattern, including the customers with NO
     orders (the rows an inner join silently drops).
 
-    The priority predicate is a JOIN condition, not a WHERE filter —
+    The priority predicate is a JOIN condition, not a WHERE filter --
     on a left join those are different queries (a WHERE would drop the
     zero-order customers). COUNT(o_orderkey) counts matched rows only,
     so the null-extended rows land in the c_count=0 bucket. First
-    aggregation shuffles on custkey (same key as the join — one
+    aggregation shuffles on custkey (same key as the join -- one
     exchange reused); the second is over at most max-orders-per-
     customer distinct values, broadcast-sized."""
     c = load(spark, sf_dir, "customer").select("c_custkey")
@@ -1841,14 +1841,14 @@ def q_tpch_q13_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tpch_q15_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape (top supplier): supplier(s) with the maximum
-    quarterly revenue — the view-reused-against-its-own-max pattern.
+    quarterly revenue -- the view-reused-against-its-own-max pattern.
 
     The revenue aggregate is computed once; the max is a second 1-row
     aggregate over it, attached by broadcast cross-join (the Q11
     scalar pattern), and the equality filter runs on the UNROUNDED
     doubles so both sides of the comparison come from the same
     computation. Supplier attaches by broadcast after the filter has
-    reduced the left side to the argmax row(s) — joining the dim
+    reduced the left side to the argmax row(s) -- joining the dim
     last, against one row, not against every supplier's aggregate."""
     li = load(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
@@ -1883,15 +1883,15 @@ def q_tpch_q15_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tpch_q16_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q16 shape (part/supplier relationship): distinct supplier
     count per (brand, type, size) for a filtered part family.
-    (lineitem is the part-supplier bridge — the testdata has no
+    (lineitem is the part-supplier bridge -- the testdata has no
     partsupp.)
 
     All three predicates prune the broadcast part side BEFORE the
     join. COUNT(DISTINCT) over a join output expands to Spark's
     two-phase distinct aggregate: partial dedup of (group, suppkey)
-    map-side, then the count — the shuffle carries deduped pairs, not
+    map-side, then the count -- the shuffle carries deduped pairs, not
     raw lineitems, which is the difference between |lineitem| and
-    |parts×suppliers| exchange volume at 100 TB."""
+    |partsxsuppliers| exchange volume at 100 TB."""
     p = load(spark, sf_dir, "part").where(
         (F.col("p_brand") != "Brand#1")
         & (F.col("p_type") != "PROMO")
@@ -1929,13 +1929,13 @@ def q_tpch_q16_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tpch_q20_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q20 shape (potential part promotion): suppliers who moved
-    >50 units of some PROMO part in a year — the nested-semi-join
+    >50 units of some PROMO part in a year -- the nested-semi-join
     pattern (supplier IN (agg over part-filtered fact)). (availqty
     doesn't exist; shipped quantity per (supplier, part) is the
     stock-movement proxy.)
 
     Inner layer: part filter broadcast-prunes the fact, aggregate on
-    the composite (suppkey, partkey) key, HAVING filter — all before
+    the composite (suppkey, partkey) key, HAVING filter -- all before
     anything touches supplier. Outer layer: LEFT SEMI join on the
     tiny distinct-supplier set; supplier and nation stay dims. The
     expensive fact pass happens exactly once, inside the innermost
@@ -1988,14 +1988,14 @@ def q_tpch_q20_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tpch_q21_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q21 shape (suppliers who kept orders waiting): in
     finished multi-supplier orders, the supplier whose line shipped
-    >90 days late while every OTHER supplier's lines were on time —
+    >90 days late while every OTHER supplier's lines were on time --
     the semi-join + anti-join double probe of the same derived fact.
     (Ship-vs-order latency stands in for receipt-vs-commit; the
     testdata has no commit/receipt dates.)
 
     `late` is derived once (orders join keyed on orderkey) and probed
-    three times — as the driving side, the EXISTS (LEFT SEMI), and
-    the NOT EXISTS (LEFT ANTI) — all three keyed on the SAME
+    three times -- as the driving side, the EXISTS (LEFT SEMI), and
+    the NOT EXISTS (LEFT ANTI) -- all three keyed on the SAME
     orderkey, so the exchange is planned once and reused (Spark
     ReusedExchange; at warehouse scale this is one fact shuffle, not
     three). The supplier name attaches by broadcast after the probes
@@ -2011,7 +2011,7 @@ def q_tpch_q21_shape(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_suppkey",
         (
             F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 90 DAYS")
-        ).alias("is_late"),  # INTERVAL, not date_add — see q_tpch_q4_shape
+        ).alias("is_late"),  # INTERVAL, not date_add -- see q_tpch_q4_shape
     )
     l1 = late.where(F.col("is_late"))
     l2 = late.select(

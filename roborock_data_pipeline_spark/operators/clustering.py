@@ -1,6 +1,6 @@
-"""Embedding clustering (SURVEY §2.K EXT — LLM-data pipeline).
+"""Embedding clustering (SURVEY sec 2.K EXT -- LLM-data pipeline).
 
-K-means over the `embeddings` table — the semantic-dedup /
+K-means over the `embeddings` table -- the semantic-dedup /
 domain-mixing clustering step of pretraining pipelines (e.g.
 SemDeDup-style cluster-then-dedup-within-cluster): cluster the
 corpus, then sample/dedup per cluster. Also the offline step that
@@ -10,7 +10,7 @@ Lloyd's algorithm in its canonical distributed form (same geometry
 as Spark MLlib's KMeans): centroids are a k x d driver-side array
 (2 KB here) shipped into a map-only assignment pass each iteration;
 the update is a (cluster, dim)-keyed partial aggregate. The
-assignment kernel is an Arrow-batched numpy matmul — the same
+assignment kernel is an Arrow-batched numpy matmul -- the same
 delegate-to-BLAS choice MLlib makes (it hands the distance matrix to
 netlib); a pure-codegen HOF formulation (transform/zip_with/
 aggregate) was tried first and ran ~50x slower because Catalyst
@@ -20,7 +20,7 @@ policy (see tests/test_plans.py), alongside multimodal decode and the
 SpaceSaving sketch.
 
 The iteration is inherently non-SQL-expressible (fixed-point loop),
-so the registered query carries no DuckDB oracle — the driver runs
+so the registered query carries no DuckDB oracle -- the driver runs
 its rows-only check, and tests/test_clustering.py proves cluster
 recovery on synthetically separated data plus determinism across
 runs.
@@ -40,7 +40,7 @@ from roborock_data_pipeline_spark.sources.tables import load
 
 
 def _sq_dists(X, C, c_sq):
-    """THE assignment distance rule (single definition — ADVICE r14:
+    """THE assignment distance rule (single definition -- ADVICE r14:
     the fused training kernel and assign_clusters must never diverge
     on the formula or tie-break): squared-L2 matrix via the expansion
     ``|x|^2 - 2 X @ C.T + |c|^2``; callers take argmin(axis=1), whose
@@ -53,9 +53,9 @@ def assign_clusters(df: DataFrame, centroids: list[list[float]],
     """Add `cluster` (argmin squared-L2 centroid index, first-min
     tie-break) and `dist` (that squared distance) columns.
 
-    Map-only — rides the input partitioning at any scale. The kernel
+    Map-only -- rides the input partitioning at any scale. The kernel
     is one Arrow batch -> numpy matmul per task:
-    ``d2 = |x|^2 - 2 X @ C.T + |c|^2`` — O(n*k*d) flops at memory
+    ``d2 = |x|^2 - 2 X @ C.T + |c|^2`` -- O(n*k*d) flops at memory
     bandwidth instead of interpreted per-element expression eval. The
     k x d centroid array ships in the task closure (2 KB at k=8,
     d=64), never a join.
@@ -65,7 +65,7 @@ def assign_clusters(df: DataFrame, centroids: list[list[float]],
     C = np.asarray([[float(v) for v in c] for c in centroids],
                    dtype=np.float64)
     c_sq = (C * C).sum(axis=1)
-    # fresh StructType — StructType.add mutates in place, and
+    # fresh StructType -- StructType.add mutates in place, and
     # df.schema hands back pyspark's cached object for the frame
     out_schema = T.StructType(
         list(df.schema.fields)
@@ -98,7 +98,7 @@ def kmeans_fit(df: DataFrame, k: int, iters: int,
     id), `iters` assign/update rounds. Returns (assigned df, final
     centroids).
 
-    Driver round-trip per iteration is k x d floats — the unavoidable
+    Driver round-trip per iteration is k x d floats -- the unavoidable
     and tiny fixed-point state (MLlib does the same); the heavy work
     (assignment scan + (cluster, dim) mean) is fully distributed:
     update explodes to (cluster, pos, x) and partial-aggregates
@@ -112,7 +112,7 @@ def kmeans_fit(df: DataFrame, k: int, iters: int,
     for _ in range(iters):
         # Fused assign+partial-sum kernel (r14): the pre-r14 update
         # ran assign_clusters and then posexploded every member
-        # vector to (cluster, pos, x) — an n x d-row explode feeding
+        # vector to (cluster, pos, x) -- an n x d-row explode feeding
         # the per-dimension mean, per iteration. The assignment
         # kernel already holds the batch matrix, so it now emits ONE
         # (cluster, count, sum-vector) partial per cluster per task;
@@ -162,7 +162,7 @@ def kmeans_fit(df: DataFrame, k: int, iters: int,
 def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster the embedding corpus (k=8, 5 Lloyd iterations,
     deterministic lowest-vec_id init) and summarize each cluster:
-    population and mean squared distance to centroid — the
+    population and mean squared distance to centroid -- the
     cluster-profile report that drives SemDeDup-style per-cluster
     dedup budgets and IVF index training.
 
@@ -170,14 +170,14 @@ def q_kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (centroids ride the task closure, ~kB), the
     update shuffle carries at most k x d x P partial rows, and the
     output is k rows. Iteration count is fixed (5), so total cost is
-    5 scans — the standard trade against MLlib's convergence loop.
+    5 scans -- the standard trade against MLlib's convergence loop.
     """
     # NOT persisted (r11, PERSIST_AUDIT.json): re-reading the pruned
     # two-column parquet per Lloyd pass measured FASTER than caching
-    # (0.91× at both sf0.1 and sf1) — the scan is column-pruned and
+    # (0.91x at both sf0.1 and sf1) -- the scan is column-pruned and
     # decode-cheap, and an in-query persist leaked the working set
     # into the caller's session (VERDICT r10 wrong-#1). No
-    # repartition: the BLAS kernel needs ~µs per thousand rows, so
+    # repartition: the BLAS kernel needs ~us per thousand rows, so
     # parallelism should come from the input splits (thousands at
     # real scale); fanning a tiny corpus wide just pays per-task
     # Arrow/worker overhead 32x.

@@ -1,17 +1,17 @@
-"""Deduplication (SURVEY §2.K L1/L2 — north-star EXT).
+"""Deduplication (SURVEY sec 2.K L1/L2 -- north-star EXT).
 
 Ladder of dedup strategies, cheapest first:
-1. Exact: hash-groupBy on content (or md5 for wide text) — one
+1. Exact: hash-groupBy on content (or md5 for wide text) -- one
    shuffle on the hash, perfect precision.
-2. Fingerprint: md5 over the sorted distinct token set — catches
+2. Fingerprint: md5 over the sorted distinct token set -- catches
    reorderings/repetitions, still one shuffle.
-3. Near-dup jaccard: blocked pairwise — exact similarity inside
+3. Near-dup jaccard: blocked pairwise -- exact similarity inside
    cheap blocks. Correct but quadratic-in-block; the oracle-checked
    reference implementation.
-4. MinHash+LSH (q_dedup_minhash): the 100 TB path — linear candidate
+4. MinHash+LSH (q_dedup_minhash): the 100 TB path -- linear candidate
    generation via band buckets, jaccard verification only on
    candidates. Built entirely from xxhash64 + array ops (JVM-side).
-5. SimHash (q_dedup_simhash): 64-bit sketch, hamming≤k near-dup —
+5. SimHash (q_dedup_simhash): 64-bit sketch, hamming<=k near-dup --
    one long per doc, self-join on band keys.
 """
 
@@ -49,7 +49,7 @@ from roborock_data_pipeline_spark.sources.tables import load, spread
     """,
 )
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L1: exact dedup via content-hash groupBy — keep the lowest
+    """L1: exact dedup via content-hash groupBy -- keep the lowest
     doc_id per identical text. Hashing first means the shuffle key is
     16 bytes instead of the full document."""
     docs = load(spark, sf_dir, "documents")
@@ -71,7 +71,7 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L1+/L4: vocabulary-fingerprint dedup — md5 over the sorted
+    """L1+/L4: vocabulary-fingerprint dedup -- md5 over the sorted
     distinct token set collapses docs that differ only in word order
     or repetition."""
     docs = load(spark, sf_dir, "documents")
@@ -112,23 +112,23 @@ def q_near_dup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shingles (word 3-grams), not token sets: this corpus's docs share
     a small vocabulary, so token-set jaccard between *random* pairs
-    has median ≈0.66 (non-discriminative, quadratic output), while
-    3-shingle jaccard is ≈0.001 for random pairs vs ≥0.5 for genuine
+    has median ~0.66 (non-discriminative, quadratic output), while
+    3-shingle jaccard is ~0.001 for random pairs vs >=0.5 for genuine
     near-dups. Blocking key = length bucket (n_chars // 100):
     near-identical docs land in the same bucket, so the self-join is
     per-block quadratic instead of corpus quadratic. The linear
     100 TB candidate-generation path is q_dedup_minhash.
 
-    Physical strategy — inverted index, not pairwise intersects
+    Physical strategy -- inverted index, not pairwise intersects
     (identical results, oracle unchanged): explode the (hashed)
     shingle sets into postings, self-join postings on the shingle
-    value, and count co-occurrences per document pair — that count IS
-    |A∩B|, so jaccard needs no array intersection at all. Cost is
-    Σ|posting|² over shingles (measured 2.8M pair-occurrences at
-    sf0.1, max posting 25) instead of |block-pairs|×|set| element ops
-    (~600M) — ~100× less compute, and the shuffle rows are 4 longs.
-    The block predicates (same length bucket, ≤2× size ratio — the
-    latter implied by jaccard ≥ 0.5) ride along in the posting join
+    value, and count co-occurrences per document pair -- that count IS
+    |A&B|, so jaccard needs no array intersection at all. Cost is
+    sum|posting|^2 over shingles (measured 2.8M pair-occurrences at
+    sf0.1, max posting 25) instead of |block-pairs|x|set| element ops
+    (~600M) -- ~100x less compute, and the shuffle rows are 4 longs.
+    The block predicates (same length bucket, <=2x size ratio -- the
+    latter implied by jaccard >= 0.5) ride along in the posting join
     to keep exact parity with the blocked oracle definition."""
     docs = spread(load(spark, sf_dir, "documents"))
     t = docs.select(
@@ -138,11 +138,11 @@ def q_near_dup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn("n", F.size("sh"))
     # KEPT persist after a two-model audit (r11, PERSIST_AUDIT.json):
     # COLD single-shot (clearCache before every run) measures the
-    # cache as a net loss (0.76-0.84× faster without), but the WARM
-    # rerun model — a session re-invoking the query, which is what
+    # cache as a net loss (0.76-0.84x faster without), but the WARM
+    # rerun model -- a session re-invoking the query, which is what
     # bench.py's min-of-N-without-clearing measures and what a BI/
-    # curation loop does — is 2.6× faster WITH it (0.83 s vs 2.2 s at
-    # sf0.1). CALLER CONTRACT: the cache outlives the call —
+    # curation loop does -- is 2.6x faster WITH it (0.83 s vs 2.2 s at
+    # sf0.1). CALLER CONTRACT: the cache outlives the call --
     # long-lived sessions running many registry queries must
     # spark.catalog.clearCache() between them (bench/harness do).
     posting = leaked_persist(
@@ -171,9 +171,9 @@ def q_near_dup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2 (100 TB path): MinHash+LSH near-dup candidates.
 
-    shingle(3-word, hashed to int64) → 32 min-hashes → 16 bands →
-    explode bands → self-join on (band_id, band_hash) → verify exact
-    shingle jaccard ≥ 0.5 on the candidates only. Candidate
+    shingle(3-word, hashed to int64) -> 32 min-hashes -> 16 bands ->
+    explode bands -> self-join on (band_id, band_hash) -> verify exact
+    shingle jaccard >= 0.5 on the candidates only. Candidate
     generation is linear in corpus size; the quadratic step touches
     only same-bucket docs. Driver does a rows-only check;
     tests/test_dedup.py asserts candidates cover the blocked-jaccard
@@ -181,13 +181,13 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Shuffle discipline: the banded self-join carries only three longs
     per row (doc_id, band_id, band_hash); the shingle arrays are
-    joined back onto the (few) distinct candidate pairs afterwards —
-    never shuffled 16× through the band explosion."""
+    joined back onto the (few) distinct candidate pairs afterwards --
+    never shuffled 16x through the band explosion."""
     docs = spread(load(spark, sf_dir, "documents"))
     # KEPT persists after the r11 two-model audit (PERSIST_AUDIT.json):
-    # cold single-shot is 0.70-0.82× faster WITHOUT them, but the warm
+    # cold single-shot is 0.70-0.82x faster WITHOUT them, but the warm
     # rerun model (bench.py's measurement; any session re-invoking the
-    # query) is 2× faster WITH them (1.35 s vs 2.8 s at sf0.1) — the
+    # query) is 2x faster WITH them (1.35 s vs 2.8 s at sf0.1) -- the
     # durable form of this state is the persisted index
     # (incremental_dedup), and the caller contract is clearCache
     # between registry queries in long-lived sessions.
@@ -279,9 +279,9 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L2 (cluster step): near-dup *pairs* → duplicate *groups* via
+    """L2 (cluster step): near-dup *pairs* -> duplicate *groups* via
     connected components, so a canonical doc (min doc_id) can be kept
-    per group — the step every real dedup pipeline needs between LSH
+    per group -- the step every real dedup pipeline needs between LSH
     pair output and the filtered corpus, since near-dup is not
     transitive pairwise (A~B, B~C clusters {A,B,C} even if A~C fails
     the threshold).
@@ -290,36 +290,36 @@ def q_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge list (the DataFrame form of Pregel-style CC). Each round is
     one shuffle join (labels onto edge endpoints) + one min-groupBy;
     rounds needed = component diameter, and near-dup clusters are
-    shallow (pairs/triples), so this converges in 1–3 rounds — the
+    shallow (pairs/triples), so this converges in 1-3 rounds -- the
     driver-side `.count()` per round is the standard convergence
     check of an iterative algorithm, not a collect-anti-pattern. At
     100 TB: shuffle-stage reuse carries each round's labels (see the
     in-body note), `localCheckpoint` every few rounds cuts lineage,
     and switch to large-star/small-star alternation (Kiveris et al.)
-    if components were ever deep — O(log n) rounds with the same
+    if components were ever deep -- O(log n) rounds with the same
     join+min building blocks.
 
     Oracle: DuckDB recursive-CTE transitive closure over the same
-    (blocked, exact-jaccard) pair set — fine at oracle SF, impossible
+    (blocked, exact-jaccard) pair set -- fine at oracle SF, impossible
     at 100 TB, which is exactly why the iterative form exists.
     """
     pairs = q_near_dup_jaccard(spark, sf_dir).select("doc_id_1", "doc_id_2")
     # In-loop persists KEPT after the r11 two-model audit
-    # (PERSIST_AUDIT.json): cold single-shot runs ~0.9× faster
+    # (PERSIST_AUDIT.json): cold single-shot runs ~0.9x faster
     # without them (shuffle-stage reuse covers the re-evaluations),
-    # but the warm rerun model — bench.py's measurement and any
-    # session calling the query more than once — is 5.6× faster WITH
+    # but the warm rerun model -- bench.py's measurement and any
+    # session calling the query more than once -- is 5.6x faster WITH
     # them (0.87 s vs 4.8 s at sf0.1, because the whole upstream
     # jaccard pair computation re-enters the lineage of every
     # iteration). Intermediates unpersist in-loop; the final labels
     # cache is the caller-must-clearCache contract.
     # Self-loops ride in the edge table (r15): min-label propagation
-    # over E ∪ {(n,n)} computes min(label(n), min_nbr label(nbr)) —
-    # exactly the old union(labels, prop) merge — but each round's
+    # over E union {(n,n)} computes min(label(n), min_nbr label(nbr)) --
+    # exactly the old union(labels, prop) merge -- but each round's
     # plan then references `labels` ONCE instead of twice. The old
     # shape DOUBLED the logical plan per round (labels appeared under
-    # both the join and the union): plan size 2^rounds × the pair-
-    # build subtree — 2,200+ nodes by round 3 here, and a driver-side
+    # both the join and the union): plan size 2^rounds x the pair-
+    # build subtree -- 2,200+ nodes by round 3 here, and a driver-side
     # analysis blow-up long before the 20-round cap on any deep
     # component. With self-loops growth is linear in rounds.
     # ONE pass over the pair set builds forward, backward AND
@@ -327,8 +327,8 @@ def q_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # harmless under the min aggregate). The old shape union'd a
     # second SELECT over `pairs`, re-evaluating the whole posting
     # self-join subtree per branch; this evaluates it once. Measured
-    # (interleaved 6-cycle A/B, sf0.1): cold 3.74→2.98 s min,
-    # warm/bench model 1.12→0.72 s min together with the in-loop
+    # (interleaved 6-cycle A/B, sf0.1): cold 3.74->2.98 s min,
+    # warm/bench model 1.12->0.72 s min together with the in-loop
     # change below.
     edges = (
         pairs.select(
@@ -366,15 +366,15 @@ def q_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     for _ in range(20):  # cap >> diameter of any dup cluster
         # Convergence from the update aggregate itself (r15, VERDICT
-        # r14 #4): min-label propagation over E ∪ {(n,n)} computes
-        # min(label(n), min_nbr label(nbr)) — the old union(labels,
-        # prop) merge — with `labels` referenced ONCE (the old shape
+        # r14 #4): min-label propagation over E union {(n,n)} computes
+        # min(label(n), min_nbr label(nbr)) -- the old union(labels,
+        # prop) merge -- with `labels` referenced ONCE (the old shape
         # referenced it twice, doubling the logical plan per round:
         # 2^rounds growth, 2,200+ nodes by round 3, an analyzer
         # blow-up on any deep component at any corpus size). The
         # self-loop row carries each node's previous label through
         # the same join, so the convergence test is a filter-count on
-        # the freshly persisted aggregate — the per-round join of the
+        # the freshly persisted aggregate -- the per-round join of the
         # new label set against the old one (corpus-sized at scale)
         # is gone, and the count IS the materializing action: one job
         # per round.
@@ -440,13 +440,13 @@ def q_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L2 (final step): the deduplicated corpus — drop every non-
+    """L2 (final step): the deduplicated corpus -- drop every non-
     canonical member of each dup group (keep group_id == doc_id),
-    completing the pairs → groups → filtered-corpus pipeline.
+    completing the pairs -> groups -> filtered-corpus pipeline.
 
     One anti-join of the corpus against the (tiny) loser set; at
     100 TB the loser list is a per-snapshot artifact written once by
-    the clustering job and broadcast into every downstream read —
+    the clustering job and broadcast into every downstream read --
     dedup becomes a scan-level filter, not a recompute."""
     losers = (
         q_dup_groups(spark, sf_dir)
@@ -512,18 +512,18 @@ def q_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2 (canonicalization policy): per duplicate group, keep the
     HIGHEST-QUALITY member (tie-break lowest doc_id) instead of the
-    lowest id — what production curation actually does: near-dup
+    lowest id -- what production curation actually does: near-dup
     groups usually contain one clean original and N mangled
     re-crawls, and keep-lowest throws away the clean one whenever the
     mangled copy was crawled first. Composes the existing pieces:
-    q_dup_groups' connected components × q_quality_score's scalar,
+    q_dup_groups' connected components x q_quality_score's scalar,
     one row_number window per group.
 
     Scale: the join ships (doc_id, group_id, quality) triples only;
-    the argmax window partitions by group_id — groups are dup
+    the argmax window partitions by group_id -- groups are dup
     clusters (pairs/triples), so no partition is ever large. The
     apply step is the same broadcast anti join as q_dedup_apply with
-    (group member − keeper) as the loser set."""
+    (group member - keeper) as the loser set."""
     from pyspark.sql import Window as W
 
     from roborock_data_pipeline_spark.operators.text import q_quality_score
@@ -550,9 +550,9 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query("q_dedup_simhash")  # no oracle: xxhash64 is Spark-specific
 def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L2 (sketch variant): SimHash near-dup — 64-bit signature per
+    """L2 (sketch variant): SimHash near-dup -- 64-bit signature per
     doc, candidates block on the high 16 bits of the sketch, verified
-    by hamming distance ≤ 8. One long per doc ⇒ the shuffle payload
+    by hamming distance <= 8. One long per doc => the shuffle payload
     is 8 bytes regardless of document size."""
     from roborock_data_pipeline_spark.functions.hashing import hamming64
 
@@ -603,18 +603,18 @@ CONTAIN_MIN_SH = 5
     """,
 )
 def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L2+: directional shingle containment — |A∩B| / |A| ≥ 0.8
+    """L2+: directional shingle containment -- |A&B| / |A| >= 0.8
     flags document A as (near-)contained in B: quotes, excerpts, and
     boilerplate supersets that symmetric jaccard structurally misses
-    (a 50-shingle doc inside a 500-shingle doc has jaccard ≤ 0.1 but
+    (a 50-shingle doc inside a 500-shingle doc has jaccard <= 0.1 but
     containment 1.0).
 
     Same inverted-index physical strategy as q_near_dup_jaccard
     (posting self-join on hashed shingles; the co-occurrence count IS
-    the intersection) but WITHOUT the length-ratio block — asymmetric
+    the intersection) but WITHOUT the length-ratio block -- asymmetric
     pairs are the point. The posting join bounds work by posting-list
-    sizes (Σ|posting|², max posting ~25 here), never |docs|²; tiny
-    docs (<5 shingles) are dropped — every 3-shingle of a 4-shingle
+    sizes (sum|posting|^2, max posting ~25 here), never |docs|^2; tiny
+    docs (<5 shingles) are dropped -- every 3-shingle of a 4-shingle
     doc appearing anywhere would flag it. At 100 TB the same guard +
     a df(shingle) ceiling (drop stop-shingles, as q_boilerplate_
     segments does) keeps posting lists bounded."""
@@ -622,12 +622,12 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.select(
         "doc_id", hashed_shingles(F.col("text"), 3).alias("sh")
     ).withColumn("n", F.size("sh")).where(F.col("n") >= CONTAIN_MIN_SH)
-    # KEPT persist — the one measured winner of the r11 audit
+    # KEPT persist -- the one measured winner of the r11 audit
     # (PERSIST_AUDIT.json: dropping it cost 1.6% at sf0.1 and 7.5% at
     # sf1): the containment pair join re-evaluates the posting table
     # with a DIFFERENT projection per side, so shuffle reuse does not
     # cover it the way it does the equi-shaped self-joins. CALLER
-    # CONTRACT: the cache outlives this call — long-lived sessions
+    # CONTRACT: the cache outlives this call -- long-lived sessions
     # running the registry directly must spark.catalog.clearCache()
     # between queries (bench.py and the oracle harness already do).
     posting = leaked_persist(

@@ -1,9 +1,9 @@
-"""Data-quality audit (SURVEY §2 EXT — pipeline guardrails).
+"""Data-quality audit (SURVEY sec 2 EXT -- pipeline guardrails).
 
 The reference trusts its inputs blindly (no validation anywhere in
 pipeline.py); a 100 TB ingest cannot. One audit query emits a
-(check_name, value) row per invariant — row counts, null keys,
-duplicate PKs, FK orphans, domain-range violations — so a scheduler
+(check_name, value) row per invariant -- row counts, null keys,
+duplicate PKs, FK orphans, domain-range violations -- so a scheduler
 can gate downstream jobs on `value == 0` for the violation checks.
 
 Scale shape: all per-table checks fold into ONE conditional
@@ -49,7 +49,7 @@ from roborock_data_pipeline_spark.sources.tables import load
 )
 def q_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-table data-quality audit as one DataFrame of
-    (check_name, value) metric rows — see module docstring for the
+    (check_name, value) metric rows -- see module docstring for the
     one-scan-per-table design."""
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
@@ -106,14 +106,14 @@ def q_dq_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Statistical outlier gate: events more than 3σ from their
-    type's mean — the numeric-sanity sibling of q_dq_audit (a sensor
-    stuck at 10× its range shows up here, not in the null checks).
+    """Statistical outlier gate: events more than 3sigma from their
+    type's mean -- the numeric-sanity sibling of q_dq_audit (a sensor
+    stuck at 10x its range shows up here, not in the null checks).
 
     NOT a whole-partition window (PARTITION BY event_type would drag
     every row of a type through one task): the per-type stats are a
     partial-aggregated groupBy to a handful of rows, broadcast back
-    onto the scan — two map-only passes, no wide shuffle, same
+    onto the scan -- two map-only passes, no wide shuffle, same
     semantics as the oracle's window form."""
     ev = load(spark, sf_dir, "events")
     stats = ev.groupBy("event_type").agg(
@@ -146,21 +146,21 @@ def q_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winsorization: clip each reading into its type's [p1, p99]
-    band — the repair twin of q_outliers (that one flags, this one
+    band -- the repair twin of q_outliers (that one flags, this one
     fixes, both per-type).
 
     Same broadcast-stats shape: the per-type bounds are one
     partial-aggregated groupBy to a handful of rows, broadcast back
     onto the scan; the clip is codegen least/greatest. At 100 TB the
-    exact percentile becomes approx_percentile (mergeable sketch) —
+    exact percentile becomes approx_percentile (mergeable sketch) --
     the q_percentiles/q_approx_percentiles ladder applies verbatim.
 
     Bounds are DISCRETE percentiles (actual data values, SQL-standard
-    percentile_disc ≡ DuckDB quantile_disc, probed equal on
+    percentile_disc == DuckDB quantile_disc, probed equal on
     tie/even/odd edge sets): interpolated percentiles put the clip
     threshold between data points as a float expression whose last
     digit differs across engines exactly when the data is tied at the
-    cut — the sf1 probe's 10× replication parked p01/p99 on such a
+    cut -- the sf1 probe's 10x replication parked p01/p99 on such a
     knife edge. A value from the data has no interpolation to
     disagree about, at any scale."""
     ev = load(spark, sf_dir, "events")
@@ -210,13 +210,13 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Robust outlier audit via median absolute deviation: per event
     type, how many values sit beyond 3 robust standard deviations
-    (1.4826·MAD) of the median.
+    (1.4826*MAD) of the median.
 
     The z-score gate (q_outliers) breaks down when the outliers
     themselves inflate the mean/stddev; MAD is the standard robust
     replacement. Two exact-percentile aggregations collapse events to
     |types| rows each; both tiny tables broadcast back onto the fact
-    scan, so the flagging pass is one map-side comparison — the fact
+    scan, so the flagging pass is one map-side comparison -- the fact
     table shuffles only for the two groupBys (and at scale the exact
     percentiles swap for approx_percentile sketches, same shape as
     q_approx_percentiles)."""
@@ -275,15 +275,15 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_lang_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-drift audit: KL divergence of each source's
-    language mix against the whole-corpus mix — the monitoring
+    language mix against the whole-corpus mix -- the monitoring
     signal that catches one ingest feed silently going monolingual
     before it skews training data.
 
-    Everything after the one corpus groupBy runs on |sources|×|langs|
+    Everything after the one corpus groupBy runs on |sources|x|langs|
     rows: the corpus marginal (|langs| rows) and per-source totals
     broadcast onto the contingency table, and the KL sum collapses
-    ≤|langs| terms per source. A zero-count (source, lang) cell
-    contributes nothing (inner join semantics = 0·log0 := 0, the
+    <=|langs| terms per source. A zero-count (source, lang) cell
+    contributes nothing (inner join semantics = 0*log0 := 0, the
     standard KL convention)."""
     docs = load(spark, sf_dir, "documents")
     per_src = docs.groupBy("source", "lang").agg(F.count("*").alias("n"))
@@ -339,15 +339,15 @@ PSI_EPS = 1e-6
 )
 def q_numeric_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index of each event type's value
-    distribution against the pooled corpus — the numeric twin of
+    distribution against the pooled corpus -- the numeric twin of
     q_lang_drift (categorical KL): the alert that one event family's
     metric quietly shifted regime.
 
     Binning is a pure-codegen filter-count against a literal edge
     array (in production the edges come from last month's
-    approx-percentiles — a 9-row broadcast); everything after the
-    one groupBy runs on |types|×|bins| rows with broadcast marginals.
-    The ε-floor is the standard PSI guard for empty cells, applied
+    approx-percentiles -- a 9-row broadcast); everything after the
+    one groupBy runs on |types|x|bins| rows with broadcast marginals.
+    The eps-floor is the standard PSI guard for empty cells, applied
     identically in both engines so parity is exact."""
     ev = load(spark, sf_dir, "events")
     edges = F.array(*[F.lit(e) for e in PSI_EDGES])

@@ -1,8 +1,8 @@
-"""Filters / predicates (SURVEY §2.C).
+"""Filters / predicates (SURVEY sec 2.C).
 
 All predicates here are plain column expressions, so Catalyst pushes
 them into the parquet scan (visible as PushedFilters in
-`.explain("formatted")`) — at 100 TB with date-partitioned facts the
+`.explain("formatted")`) -- at 100 TB with date-partitioned facts the
 date predicates additionally prune whole partitions.
 """
 
@@ -24,7 +24,7 @@ from roborock_data_pipeline_spark.sources.tables import load
     """,
 )
 def q_state_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F1/F5: case-insensitive categorical membership — the
+    """F1/F5: case-insensitive categorical membership -- the
     reference's `is_cleaning`/`is_idle` predicates
     (roborock_collector.py:534-547; domains settings.py:37-38)."""
     ev = load(spark, sf_dir, "events")

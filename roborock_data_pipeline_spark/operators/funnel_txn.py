@@ -5,31 +5,31 @@
 batch: the MinHash index segment, the semantic index segment, and the
 curated output dir. Before this module each surface committed with its
 own rename, so a crash could leave the indexes advanced past an
-unpublished batch — correct only because every reader of that state
+unpublished batch -- correct only because every reader of that state
 replayed through per-surface stored-pair records. This module makes
 the batch a real transaction: all three surfaces stage fully
-(invisible to every reader — staging dirs match no ``batch-``/
+(invisible to every reader -- staging dirs match no ``batch-``/
 ``base-`` prefix), then ONE atomic hard-link of a commit record under
 ``out_dir/_txn/`` commits the batch id for all of them.
 
 Protocol (classic write-ahead commit, the same roll-forward shape
-Delta/Iceberg use for multi-file commits — one small manifest is the
+Delta/Iceberg use for multi-file commits -- one small manifest is the
 only thing that must be atomic):
 
-1. STAGE — each surface's content is fully written under its final
+1. STAGE -- each surface's content is fully written under its final
    parent's ``.staging/`` (writer-unique names, so a same-batch-id
    race never clobbers a peer's staging).
-2. COMMIT — a JSON record listing every (staged, final) pair is
+2. COMMIT -- a JSON record listing every (staged, final) pair is
    published via the commit seam's ``put_if_absent`` (local FS:
    temp + hard link; object store: conditional PUT) to
    ``_txn/commit-{batch_id}.json``. The record either exists after
    this line or it does not: THE commit point. A second writer racing the
    same batch id loses with ``ConcurrentWriterError`` (EEXIST), its
    staging intact for its own cleanup.
-3. FINALIZE — roll forward: rename each staged dir onto its final
+3. FINALIZE -- roll forward: rename each staged dir onto its final
    path, then unlink the record. Every step is idempotent (final
-   already exists → drop our staged copy; staged vanished + final
-   exists → a concurrent recovery won the rename), so ``recover``
+   already exists -> drop our staged copy; staged vanished + final
+   exists -> a concurrent recovery won the rename), so ``recover``
    can re-run it after a crash at ANY point past the commit link.
 
 All-or-nothing: before the link, no reader (index probe, curated
@@ -72,7 +72,7 @@ def link_commit(
 
     ``surfaces`` is ``[{"staged": ..., "final": ...}, ...]`` with every
     staged dir fully written. The record is hard-linked into place
-    (never observably empty or partial — the same temp+link discipline
+    (never observably empty or partial -- the same temp+link discipline
     as ``writer_lock``'s pid publish); EEXIST means another writer
     committed this batch id first and raises ``ConcurrentWriterError``
     with this writer's staging untouched. Returns the record path."""
@@ -97,13 +97,13 @@ def link_commit(
             f"funnel batch {batch_id!r} was already committed by a "
             "concurrent writer; this writer lost the race"
         )
-    token.close()  # a commit record is permanent — drop the pin only
+    token.close()  # a commit record is permanent -- drop the pin only
     return record
 
 
 def finalize(record: str) -> None:
     """Roll the committed transaction forward: rename every staged
-    surface onto its final path, then retire the record. Idempotent —
+    surface onto its final path, then retire the record. Idempotent --
     safe to re-run after a crash at any point past the commit link,
     concurrently with another recovery of the same record."""
     raw = commit_provider.read_pointer(record)
@@ -111,15 +111,20 @@ def finalize(record: str) -> None:
         return  # a concurrent recovery finished and retired it
     rec = json.loads(raw)
     from roborock_data_pipeline_spark.operators.index_segments import (
+        ensure_manifest,
         register_segment,
     )
 
     for s in rec["surfaces"]:
         staged, final = s["staged"], s["final"]
         parent, dname = os.path.split(final.rstrip(os.sep))
+        # a fresh surface gets its manifest BEFORE the rename, so a
+        # crash in between leaves a pending surface next to a
+        # manifest, never a manifest-less dir holding a segment
+        ensure_manifest(parent)
         if os.path.isdir(final):
             # already rolled forward (or re-published); our staged
-            # copy, if any, is redundant — but the manifest
+            # copy, if any, is redundant -- but the manifest
             # registration may still be pending (crash between the
             # rename and the pointer swap): re-register idempotently
             shutil.rmtree(staged, ignore_errors=True)
@@ -135,7 +140,7 @@ def finalize(record: str) -> None:
                 raise RuntimeError(
                     f"funnel transaction {rec['batch_id']!r} is committed "
                     f"but surface {final!r} has neither its staged copy "
-                    f"({staged!r}) nor a final publish — staged data was "
+                    f"({staged!r}) nor a final publish -- staged data was "
                     "deleted out from under a committed transaction"
                 ) from exc
             raise
@@ -154,7 +159,7 @@ def recover(out_dir: str) -> int:
     tdir = txn_dir(out_dir)
     # seam-native listing (r13: the record store may be an object
     # store, not a directory). Exact-shape match (ADVICE r12): only
-    # `commit-*.json` is a committed record — a staging temp
+    # `commit-*.json` is a committed record -- a staging temp
     # (dot-prefixed by the commit provider, but be robust to any
     # suffixed name) must NEVER be rolled forward as if its
     # transaction reached the commit point

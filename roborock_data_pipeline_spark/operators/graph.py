@@ -1,14 +1,14 @@
-"""Graph analytics on relational edges (SURVEY §2 EXT).
+"""Graph analytics on relational edges (SURVEY sec 2 EXT).
 
 Complements the iterative connected-components operator
 (``operators/dedup.py::q_dup_groups``) with PageRank power iteration
-— the importance ranking used for seed selection and crawl
-prioritization in web-corpus curation. The part⟷supplier bipartite
+-- the importance ranking used for seed selection and crawl
+prioritization in web-corpus curation. The part<->supplier bipartite
 graph from lineitem stands in for any entity graph.
 
 Unlike most engines' black-box graph libs, the iteration here is
 plain DataFrame algebra, so it is ALSO expressible as (unrolled) SQL
-— giving this iterative operator a real DuckDB oracle instead of a
+-- giving this iterative operator a real DuckDB oracle instead of a
 rows-only check.
 """
 
@@ -29,7 +29,7 @@ PR_ITERS = 5
 
 
 def _pagerank_oracle(iters: int = PR_ITERS, damping: float = DAMPING) -> str:
-    """Unrolled power iteration: r0..r{iters} as chained CTEs — the
+    """Unrolled power iteration: r0..r{iters} as chained CTEs -- the
     SQL twin of the DataFrame loop (recursive CTEs disallow the
     aggregate in the recursive term, so unrolling is the portable
     form for a fixed iteration count)."""
@@ -62,19 +62,19 @@ def pagerank(edges: DataFrame, iters: int = PR_ITERS,
     """Power-iteration PageRank over a directed edge list
     (columns ``src``, ``dst``). Returns (v, r).
 
-    Scale shape per iteration: ONE shuffle — the contribution
-    aggregate keyed on dst; the edges⋈ranks join co-partitions on src
+    Scale shape per iteration: ONE shuffle -- the contribution
+    aggregate keyed on dst; the edges join ranks join co-partitions on src
     (edges and outdeg share that partitioning across iterations via
     persist, so Catalyst reuses the layout), and the rank vector is
     node-sized, never edge-sized. Persists KEPT after the r11
-    two-model audit (PERSIST_AUDIT.json): cold single-shot is ~0.95×
-    faster without them, but the warm rerun model — bench.py's
-    measurement, and any session running pagerank more than once —
-    is 8.7× faster WITH them (0.68 s vs 5.9 s at sf0.1: every rerun
+    two-model audit (PERSIST_AUDIT.json): cold single-shot is ~0.95x
+    faster without them, but the warm rerun model -- bench.py's
+    measurement, and any session running pagerank more than once --
+    is 8.7x faster WITH them (0.68 s vs 5.9 s at sf0.1: every rerun
     otherwise re-derives the edge list from the 100 TB fact scan).
     Caller contract: clearCache between registry queries in
     long-lived sessions. Every ``checkpoint_every`` iterations the
-    lineage is CUT with localCheckpoint — without that, the
+    lineage is CUT with localCheckpoint -- without that, the
     accumulated plan tree grows with iteration count until plan
     stringification alone OOMs the driver (observed at 20
     iterations). On a fault-tolerant cluster use checkpoint() over
@@ -114,7 +114,7 @@ def pagerank(edges: DataFrame, iters: int = PR_ITERS,
 
 @query("q_pagerank", oracle=_pagerank_oracle())
 def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PageRank over the part⟷supplier bipartite graph (edges =
+    """PageRank over the part<->supplier bipartite graph (edges =
     distinct (partkey, suppkey) pairs from lineitem, both directions),
     damping 0.85, 5 iterations from a uniform start.
 
@@ -122,7 +122,7 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation) down to the edge set before any iteration touches it;
     iterations then cost O(edges) joins + one dst-keyed shuffle each,
     with the rank vector only ever node-sized. The oracle is the same
-    recurrence unrolled as SQL CTEs — float drift stays below the
+    recurrence unrolled as SQL CTEs -- float drift stays below the
     1e-6 rounding because each node's in-sum is short.
     """
     li = load(spark, sf_dir, "lineitem")

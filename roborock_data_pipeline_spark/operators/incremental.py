@@ -1,19 +1,19 @@
-"""Incremental / dedup semantics (SURVEY §2.C F2-F3, §2.D A3-A4, §3.2).
+"""Incremental / dedup semantics (SURVEY sec 2.C F2-F3, sec 2.D A3-A4, sec 3.2).
 
 This is the heart of the reference: a JSON state file holds, per
 device, the last-seen monotonic cleaning counter and the last-logged
 record timestamp (state_manager.py:50-87); each run processes only
 what advanced past that state. Here the "state" is itself derived
-relationally — a pre-cutoff aggregate standing in for the persisted
-state table — and the incremental predicate is a join + filter.
+relationally -- a pre-cutoff aggregate standing in for the persisted
+state table -- and the incremental predicate is a join + filter.
 
 Exactly-once note (T5): the reference advances state even when the
-sink write fails (pipeline.py:562-568, 749-750 — silent at-most-once
+sink write fails (pipeline.py:562-568, 749-750 -- silent at-most-once
 loss). The engine's equivalent is transactional by construction:
 state is derived from what the sink actually holds, so a failed write
 is simply retried next run. Documented here; nothing to code around.
 
-Scale: the state side is one row per device — always broadcast-able;
+Scale: the state side is one row per device -- always broadcast-able;
 the fact side shuffles only for its own aggregation. At 100 TB, the
 watermark predicate prunes date partitions before any shuffle.
 """
@@ -62,7 +62,7 @@ def _state_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_dedup_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F2/A3/A4: monotonic-counter change detection — "a new cleaning
+    """F2/A3/A4: monotonic-counter change detection -- "a new cleaning
     happened iff current_count > last_count", delta = max(0, cur-last)
     (state_manager.py:66-74; consumed at pipeline.py:505-507)."""
     ev = load(spark, sf_dir, "events")
@@ -95,13 +95,13 @@ def q_dedup_counter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_new_records_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F3/O3: event-time watermark filter — keep only records newer
+    """F3/O3: event-time watermark filter -- keep only records newer
     than the per-device high-water mark, emitted oldest-first
     (pipeline.py:717-737). The reference compares ISO strings; the
-    engine compares native timestamps (SURVEY §7 risk 3).
+    engine compares native timestamps (SURVEY sec 7 risk 3).
 
     O3's oldest-first ordering only needs to hold within each sink
-    task's output file, so it is a `sortWithinPartitions` — a global
+    task's output file, so it is a `sortWithinPartitions` -- a global
     `orderBy` would add a full range-shuffle of every new record at
     100 TB for an ordering nothing downstream relies on."""
     ev = load(spark, sf_dir, "events")
@@ -136,7 +136,7 @@ def q_new_records_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_state_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J1: current snapshot ⟕ keyed state — the reference's in-memory
+    """J1: current snapshot left-join keyed state -- the reference's in-memory
     `previous_states.get(device_id)` dict lookup (pipeline.py:141;
     state_manager.py:41-48) as a broadcast left join."""
     from pyspark.sql import Window as W
@@ -163,10 +163,10 @@ def q_state_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_anti_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4 (EXT): anti join — the batch form of "only keep rows not
+    """J4 (EXT): anti join -- the batch form of "only keep rows not
     already logged" (F2), phrased as customers-with-no-orders. A
     left_anti join shuffles both sides on the key but materializes
-    nothing from the right — the scalable NOT EXISTS."""
+    nothing from the right -- the scalable NOT EXISTS."""
     cust = load(spark, sf_dir, "customer")
     orders = load(spark, sf_dir, "orders").select(
         F.col("o_custkey").alias("c_custkey")
@@ -188,7 +188,7 @@ def q_anti_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_semi_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J4 (EXT): semi join — EXISTS without duplication (orders having
+    """J4 (EXT): semi join -- EXISTS without duplication (orders having
     at least one high-quantity line)."""
     orders = load(spark, sf_dir, "orders")
     li = (

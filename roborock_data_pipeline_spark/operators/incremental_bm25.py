@@ -2,7 +2,7 @@
 
 ``q_bm25_search`` (operators/text.py) is the ad-hoc, oracle-checked
 twin: it re-tokenizes the corpus, recomputes document-frequency stats
-and doc lengths, and rebuilds corpus-wide postings on every call — at
+and doc lengths, and rebuilds corpus-wide postings on every call -- at
 100 TB that is a full re-tokenization per retrieval query, and a
 contamination screen or seed-expansion loop runs retrieval
 repeatedly. This module is the missing sibling of the incremental
@@ -10,48 +10,44 @@ MinHash/semantic indexes (operators/incremental_dedup.py:169 pattern):
 BM25 state persisted once per ingest batch, probed many times.
 
 Why BM25 state is exactly segment-shaped: every corpus-wide quantity
-the score needs is MERGEABLE —
+the score needs is MERGEABLE --
 
-- ``df(term)``  = count of (term, doc) posting rows → a sum over
+- ``df(term)``  = count of (term, doc) posting rows -> a sum over
   segments, computed at probe time from only the probed terms'
   postings (which the probe must read anyway to score);
 - ``N`` and ``avgdl`` = (n_docs, sum_dl) per segment, summed.
 
-Segment layout (v2, VERDICT r11 missing-#2): TWO tables —
+Segment layout: TWO tables --
 
-- ``postings/``  (term, doc_id, tf, dl) — the inverted index with the
-  doc length DENORMALIZED onto every posting row. The r11 layout kept
-  a separate ``doclens/`` (doc_id, dl) table and joined it per probe;
-  that join scanned n_docs rows — corpus-sized at 100 TB — to fetch
-  lengths for the handful of scored docs, the one non-term-pruned
-  read in the probe. Carrying ``dl`` on the posting row makes the
-  probe PURELY term-pruned: postings (term-filtered at the footer)
-  plus the segments-count-sized stats table, nothing else. The cost
-  is one long per posting row (~8 bytes against a ~20+-byte row) paid
-  at ingest, where the batch-local join is small.
+- ``postings/``  (term, doc_id, tf, dl) -- the inverted index with the
+  doc length DENORMALIZED onto every posting row, so the probe is
+  PURELY term-pruned: postings (term-filtered at the footer) plus the
+  segments-count-sized stats table, nothing else. A separate doc-length
+  table would need a per-probe join scanning n_docs rows --
+  corpus-sized at 100 TB -- to fetch lengths for the handful of scored
+  docs. The cost is one long per posting row (~8 bytes against a
+  ~20+-byte row) paid at ingest, where the batch-local join is small.
 - ``stats/``     one row (n_docs, sum_dl). Computed from the batch's
   doc lengths INCLUDING zero-token docs (they carry no posting rows
-  but count toward N/avgdl — exactly q_bm25_search's stats).
+  but count toward N/avgdl -- exactly q_bm25_search's stats).
 
-Legacy (r11) segments — with ``doclens/`` and three-column postings —
-stay readable: the probe detects them per segment and joins their own
-doclens back in; :func:`compact_bm25_index` rewrites everything into
-the denormalized form, so one compaction IS the migration.
+A segment with a separate ``doclens/`` table (an older layout) is
+unsupported and refused by name.
 
-Lifecycle (shared index_segments framework — atomic publish,
+Lifecycle (shared index_segments framework -- atomic publish,
 generation-CAS compaction, absorbed manifest, deferred GC):
 
-- :func:`update_bm25_index` — stage the batch's tables fully
+- :func:`update_bm25_index` -- stage the batch's tables fully
   invisible, publish with ONE atomic commit; committed batch ids
   replay as no-ops (idempotent re-ingest under the funnel's
   transaction record).
-- :func:`probe_bm25_index` — top-k docs for a query-term set against
+- :func:`probe_bm25_index` -- top-k docs for a query-term set against
   ONE live-segments snapshot; postings are term-pruned at the scan
   (compacted bases are term-sorted, so parquet row-group stats skip
   non-matching term ranges at the footer); scores equal
   ``q_bm25_search``'s to the committed 6dp contract
   (tests/test_bm25_index.py pins the equality on the same corpus).
-- :func:`compact_bm25_index` — merge live segments into one base:
+- :func:`compact_bm25_index` -- merge live segments into one base:
   postings repartitioned + sorted on term (probe pruning), stats
   re-summed to one row. Readers superseded by the commit keep a full
   maintenance interval of grace (GC at the NEXT pass's entry, as
@@ -85,12 +81,6 @@ POST_SCHEMA = T.StructType([
     T.StructField("tf", T.LongType(), False),
     T.StructField("dl", T.LongType(), False),
 ])
-# r11 layout: postings without dl + a separate doclens table
-POST_SCHEMA_V1 = T.StructType(POST_SCHEMA.fields[:3])
-DL_SCHEMA = T.StructType([
-    T.StructField("doc_id", T.LongType(), False),
-    T.StructField("dl", T.LongType(), False),
-])
 STATS_SCHEMA = T.StructType([
     T.StructField("n_docs", T.LongType(), False),
     T.StructField("sum_dl", T.LongType(), False),
@@ -122,10 +112,10 @@ def update_bm25_index(
     batch_id: str | None = None,
 ) -> dict[str, int]:
     """Ingest a batch of NEW documents (doc_id, text) into the index.
-    Appends only — the caller's dedup gate (the curation funnel) is
+    Appends only -- the caller's dedup gate (the curation funnel) is
     what keeps doc_ids unique, same contract as the MinHash index.
     Returns {"docs": n, "terms": distinct terms} for the batch.
-    Replaying a committed ``batch_id`` is a no-op returning zeros —
+    Replaying a committed ``batch_id`` is a no-op returning zeros --
     the idempotence the funnel's single commit point needs."""
     batch_id = batch_id or uuid.uuid4().hex
     if is_committed(index_dir, batch_id):
@@ -163,44 +153,26 @@ def update_bm25_index(
 
 
 def _snapshot(index_dir: str) -> list[str]:
-    """One live_segments snapshot → segment dirs (the
-    manifest-consistent read set every probe uses)."""
+    """One live_segments snapshot -> segment dirs, base first (the
+    manifest-consistent read set every probe and compaction uses)."""
     base, batches = live_segments(index_dir)
     segs = ([base] if base is not None else []) + batches
-    if not segs:
-        raise ValueError(f"no BM25 index at {index_dir!r}")
+    for s in segs:
+        if os.path.isdir(os.path.join(s, "doclens")):
+            raise ValueError(
+                f"BM25 segment {s!r} keeps doc lengths in a separate "
+                "doclens/ table: that layout is unsupported -- rebuild "
+                "the index from the source corpus"
+            )
     return segs
 
 
 def _live_postings(spark: SparkSession, segs: list[str]) -> DataFrame:
-    """(term, doc_id, tf, dl) across the live segments. v2 segments
-    read denormalized in one multi-path scan (term pruning intact);
-    legacy r11 segments (detected by their ``doclens/`` table) join
-    their own doclens back in — correct but corpus-scan-shaped, cured
-    permanently by the next compaction."""
-    v2 = [s for s in segs if not os.path.isdir(os.path.join(s, "doclens"))]
-    legacy = [s for s in segs if s not in v2]
-    parts: list[DataFrame] = []
-    if v2:
-        parts.append(
-            spark.read.schema(POST_SCHEMA).parquet(
-                *[os.path.join(s, "postings") for s in v2]
-            )
-        )
-    if legacy:
-        lpost = spark.read.schema(POST_SCHEMA_V1).parquet(
-            *[os.path.join(s, "postings") for s in legacy]
-        )
-        ldl = spark.read.schema(DL_SCHEMA).parquet(
-            *[os.path.join(s, "doclens") for s in legacy]
-        )
-        parts.append(
-            lpost.join(ldl, "doc_id").select("term", "doc_id", "tf", "dl")
-        )
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df
+    """(term, doc_id, tf, dl) across the live segments in one
+    multi-path scan (term pruning intact)."""
+    return spark.read.schema(POST_SCHEMA).parquet(
+        *[os.path.join(s, "postings") for s in segs]
+    )
 
 
 def _corpus_stats(spark: SparkSession, segs: list[str]) -> DataFrame:
@@ -222,19 +194,21 @@ def probe_bm25_index(
     terms: list[str],
     top_k: int = 10,
 ) -> DataFrame:
-    """Top-k (doc_id, bm25) for a query-term set — THE retrieval
+    """Top-k (doc_id, bm25) for a query-term set -- THE retrieval
     endpoint. No tokenization, no corpus scan: the ONLY data read is
     the postings pruned to the query terms (an isin filter pushed
     into the parquet scan; term-sorted compacted bases skip
     non-matching row groups at the footer) plus the
-    segments-count-sized stats table — doc lengths ride ON the pruned
-    posting rows (r12 layout), so no corpus-sized doclens scan ever
+    segments-count-sized stats table -- doc lengths ride ON the pruned
+    posting rows, so no corpus-sized doc-length scan ever
     runs. Scores match q_bm25_search's formula bit-for-bit at the
     committed 6dp rounding: idf = ln((N - df + 0.5)/(df + 0.5) + 1),
     k1/b from operators/text.py."""
     if not terms:
         raise ValueError("probe_bm25_index needs at least one query term")
     segs = _snapshot(index_dir)
+    if not segs:
+        raise ValueError(f"no BM25 index at {index_dir!r}")
     post = _live_postings(spark, segs).where(
         F.col("term").isin(list(terms))
     )
@@ -267,19 +241,14 @@ def compact_bm25_index(
     """Merge all live segments into one base (per-ingest dirs grow
     unboundedly; every probe pays per-file opens). Postings are
     repartitioned AND SORTED on term so the base's parquet footers
-    carry tight term min/max — a probe's isin filter skips whole row
-    groups; stats collapse to one row. Legacy (r11, doclens-table)
-    segments are rewritten into the denormalized layout here — one
-    compaction migrates the index. Commit is the shared
+    carry tight term min/max -- a probe's isin filter skips whole row
+    groups; stats collapse to one row. Commit is the shared
     generation-CAS + atomic publish; superseded segments are GC'd at
     the NEXT pass's entry (reader grace window). Returns segments
     merged (0 = already compact)."""
     gc_superseded(index_dir)
-    base, batches = live_segments(index_dir)
-    n_input = len(batches) + (1 if base is not None else 0)
-    segs = ([base] if base is not None else []) + batches
-    legacy = [s for s in segs if os.path.isdir(os.path.join(s, "doclens"))]
-    if n_input <= 1 and not legacy:
+    segs = _snapshot(index_dir)
+    if len(segs) <= 1:
         return 0
     gen = next_base_gen(index_dir)
     staged = os.path.join(
@@ -307,10 +276,15 @@ def compact_bm25_index(
             _absorbed_ids,
         )
 
-        absorbed = list(_absorbed_ids(base)) if base is not None else []
-        absorbed += [os.path.basename(b)[len("batch-"):] for b in batches]
+        absorbed = []
+        for seg in segs:
+            dname = os.path.basename(seg)
+            if dname.startswith("base-"):
+                absorbed += _absorbed_ids(seg)
+            else:
+                absorbed.append(dname[len("batch-"):])
         commit_base(index_dir, staged, gen, absorbed)
     finally:
         if os.path.exists(staged):
             shutil.rmtree(staged, ignore_errors=True)
-    return n_input
+    return len(segs)

@@ -1,20 +1,20 @@
-"""Incremental near-dup maintenance (SURVEY §2.K L2 at steady state).
+"""Incremental near-dup maintenance (SURVEY sec 2.K L2 at steady state).
 
 A 100 TB corpus is not re-deduplicated from scratch every ingest; the
 MinHash index (shingle signatures + LSH band postings) is a persisted
 artifact, and each new batch:
 
 1. computes signatures/postings for the NEW docs only,
-2. band-joins new postings against (old ∪ new) postings — candidate
-   work is |new| × collision-rate, independent of corpus age,
+2. band-joins new postings against (old union new) postings -- candidate
+   work is |new| x collision-rate, independent of corpus age,
 3. jaccard-verifies only those candidates,
 4. publishes the batch's signatures+postings into the index with ONE
    atomic directory rename (both tables commit together, same
-   staged-rename contract as sources/sinks.append_rows — a crash
+   staged-rename contract as sources/sinks.append_rows -- a crash
    can never leave postings visible without their signatures).
 
 Pair-emission invariant across calls: every near-dup pair is returned
-by exactly one update — the one that ingested its later member
+by exactly one update -- the one that ingested its later member
 (new-new pairs normalized by (least, greatest); new-old pairs join
 new-side-left only). At warehouse scale the postings table is
 bucketed by band_hash so the recurring band-join never re-shuffles
@@ -70,7 +70,7 @@ def _snapshot_paths(index_dir: str, *tables: str) -> tuple[list[str], ...]:
     """Live parquet dirs for each requested index table, all derived
     from ONE ``live_segments`` listing (ADVICE r5: listing postings
     and signatures separately could straddle a compaction commit and
-    mix generations — one snapshot per reader call keeps the read set
+    mix generations -- one snapshot per reader call keeps the read set
     a single consistent index state)."""
     base, batches = live_segments(index_dir)
     segs = ([base] if base is not None else []) + batches
@@ -91,7 +91,7 @@ def stage_minhash_update(
     pairs}``) that no reader can see. Returns the staged path; the
     CALLER owns the commit (``publish_segment`` for a standalone
     single-surface ingest, or the funnel's single-record transaction
-    — operators/funnel_txn — when the segment must commit atomically
+    -- operators/funnel_txn -- when the segment must commit atomically
     WITH the semantic segment and the curated output) and the cleanup
     of the staged dir on failure."""
     batch_id = batch_id or uuid.uuid4().hex
@@ -147,7 +147,7 @@ def stage_minhash_update(
     )
     # The staged pair write materializes the pair set BEFORE any
     # commit (a failure never leaves the index advanced past an
-    # unemitted pair set); it commits WITH the batch — the replay
+    # unemitted pair set); it commits WITH the batch -- the replay
     # source. The persisted frames are released here: after the
     # writes everything lives in the staged parquet.
     staged = os.path.join(
@@ -179,12 +179,12 @@ def update_minhash_index(
 
     Replay contract (same as update_semantic_index): each committed
     batch stores the pairs it emitted (batch-{id}/pairs, part of the
-    one atomic rename); replaying a committed ``batch_id`` — latest
-    or not — returns the stored set verbatim instead of recomputing
+    one atomic rename); replaying a committed ``batch_id`` -- latest
+    or not -- returns the stored set verbatim instead of recomputing
     against batches published after it (which would re-emit their
     pairs). Without an explicit batch_id each call is a fresh batch
     and replay protection is the caller's commit point (e.g. the
-    curation funnel's transaction record — operators/funnel_txn).
+    curation funnel's transaction record -- operators/funnel_txn).
     Commit is ONE atomic rename of the staged segment (writer-unique
     staging: a same-batch-id race is decided by the rename,
     ConcurrentWriterError, never by two writers clobbering one
@@ -214,7 +214,7 @@ def probe_minhash_index(
 ) -> DataFrame:
     """READ-ONLY near-dup lookup: which indexed documents does each
     probe doc near-duplicate? Returns (probe_id, index_id, jaccard)
-    without ingesting anything — the "is this a dup of something we
+    without ingesting anything -- the "is this a dup of something we
     already have?" endpoint (dedup-before-ingest gating, contamination
     checks against a training corpus, serving-time lookups). The same
     band-join + jaccard-verify as update_minhash_index, but candidates
@@ -222,12 +222,12 @@ def probe_minhash_index(
     query), and no state changes. Probe ids are EXTERNAL to the index
     namespace by default (ADVICE r5): no id-equality filter is
     applied, so a probe whose id happens to collide with an indexed
-    id still surfaces its (likely exact) match — in the
+    id still surfaces its (likely exact) match -- in the
     dedup-before-ingest and contamination use cases that collision is
     precisely the duplicate that matters. Callers RE-PROBING
     documents that are already in the index share the namespace and
     would otherwise get one trivial jaccard-1.0 self row per doc
-    (VERDICT r7 #5) — pass ``exclude_self=True`` to drop
+    (VERDICT r7 #5) -- pass ``exclude_self=True`` to drop
     ``probe_id == index_id`` rows. Concurrency contract (ADVICE r5,
     stated precisely): the read set is ONE ``live_segments`` snapshot,
     manifest-consistent across a compaction COMMIT; superseded
@@ -240,7 +240,7 @@ def probe_minhash_index(
         raise ValueError(f"no index at {index_dir!r}")
     # stateless read path: no persist (nothing to pin across a
     # publish), the probe's shingle sets are rebuilt by the verify
-    # join from the same pruned scan — the cheap-rebuild posture
+    # join from the same pruned scan -- the cheap-rebuild posture
     # blocked_pairs documents
     probe_sig = _signatures(docs)
     probe_post = _postings(probe_sig)
@@ -295,18 +295,18 @@ def compact_minhash_index(
 ) -> int:
     """Merge all live segments (previous base + committed batches)
     into one base segment (VERDICT r4 #3: per-ingest batch dirs grow
-    unboundedly — ~9k dirs/year at hourly ingest — a widening
+    unboundedly -- ~9k dirs/year at hourly ingest -- a widening
     small-files/listing tax on every probe). Returns the number of
     segments merged (0 = already compact).
 
-    The merged postings are repartitioned on (band_id, band_hash) —
-    restoring the band co-location the per-batch layout loses — and
+    The merged postings are repartitioned on (band_id, band_hash) --
+    restoring the band co-location the per-batch layout loses -- and
     signatures on doc_id, each into ``n_files`` files (at warehouse
     scale, sized to executor-memory-fitting partitions). Stored pairs
     are carried VERBATIM into the base (file copies, no recompute), so
     replaying any absorbed batch id still returns its committed pair
     set. Commit is one atomic rename guarded by a generation CAS
-    (ConcurrentWriterError on an interleaved writer — VERDICT r5 #4);
+    (ConcurrentWriterError on an interleaved writer -- VERDICT r5 #4);
     segments superseded by the PREVIOUS compaction are garbage-
     collected at ENTRY, never at commit, so concurrent readers keep a
     full maintenance interval of grace (ADVICE r5; see index_segments
@@ -322,13 +322,13 @@ def compact_minhash_index(
         return 0
     gen = next_base_gen(index_dir)
     # writer-unique staging (VERDICT r5 #4): two racing compactions
-    # must not share a staging dir — the commit CAS decides the winner
+    # must not share a staging dir -- the commit CAS decides the winner
     staged = os.path.join(
         index_dir, ".staging", f"base-{gen:06d}-{uuid.uuid4().hex[:8]}"
     )
     try:
         # table paths derive from the SAME snapshot as the absorbed
-        # list — a batch published mid-compaction is neither read nor
+        # list -- a batch published mid-compaction is neither read nor
         # absorbed (it stays live), never read-but-unabsorbed
         segs = ([base] if base is not None else []) + batches
         post_paths = [os.path.join(s, "postings") for s in segs]

@@ -1,31 +1,31 @@
-"""Incremental semantic dedup (SURVEY §2.K — SemDeDup at steady
+"""Incremental semantic dedup (SURVEY sec 2.K -- SemDeDup at steady
 state; VERDICT r3 #7).
 
-The batch operators (operators/similarity.py: blocked_pairs →
+The batch operators (operators/similarity.py: blocked_pairs ->
 q_semantic_dedup) dedup a corpus in one pass; a 100 TB ingest
 pipeline instead maintains a persisted IVF index and processes each
 new embedding batch against it:
 
-1. TRAIN once — ``create_semantic_index`` fits cell centroids and
+1. TRAIN once -- ``create_semantic_index`` fits cell centroids and
    publishes them atomically; they are frozen metadata from then on
    (the standard IVF regime: retraining is an offline rebuild, not an
    ingest-path concern), so every batch assigns into a stable cell
    space and incremental results are reproducible.
-2. ASSIGN the new batch to its nearest cells (broadcast of the k×d
-   centroid table — index metadata, never the corpus).
-3. PAIR new vectors against (old ∪ new) vectors of the same cell —
-   candidate work is |new| × cell-occupancy, independent of corpus
+2. ASSIGN the new batch to its nearest cells (broadcast of the kxd
+   centroid table -- index metadata, never the corpus).
+3. PAIR new vectors against (old union new) vectors of the same cell --
+   candidate work is |new| x cell-occupancy, independent of corpus
    age. The join carries the same two 100 TB guards as
    ``blocked_pairs``: per-cell salting for parallelism and a
    cell-population cap (hash sub-split) bounding pair count at
-   cap·|cell|.
+   cap*|cell|.
 4. EMIT each qualifying pair exactly once across all updates: the
    update that ingests a pair's later member returns it (new-new
    pairs ordered by vec_id; new-old pairs exist in one join direction
    only). Losers (the keep-lowest rule's higher ids) derive from the
    returned pairs.
 5. PUBLISH the batch's (vec_id, embedding, cell, nrm) rows with one
-   atomic directory rename — same staged-rename contract as
+   atomic directory rename -- same staged-rename contract as
    incremental_dedup. Replays are idempotent: a deterministic
    ``batch_id`` that is already published recomputes the same pair
    set against the index state that preceded it and does NOT
@@ -71,7 +71,7 @@ def create_semantic_index(
     """Train cell centroids on ``train_emb`` and publish them as the
     index's frozen metadata. r12 #1: the commit is a `_current.json`
     pointer swap through the commit-provider seam (the pre-r13 direct
-    rename was non-atomic on object storage) — an index is never
+    rename was non-atomic on object storage) -- an index is never
     visible without its centroids, and a crash mid-publish leaves the
     previous centroids (or nothing, detected by has_centroids) rather
     than a torn directory."""
@@ -91,7 +91,7 @@ def create_semantic_index(
 
 def has_centroids(index_dir: str) -> bool:
     """Whether the index has COMMITTED centroids (a crashed create's
-    staging leftovers do not count — callers must re-create)."""
+    staging leftovers do not count -- callers must re-create)."""
     return versioned_dir.resolve(os.path.join(index_dir, "centroids")) is not None
 
 
@@ -99,7 +99,7 @@ def _centroids_live(index_dir: str) -> str:
     live = versioned_dir.resolve(os.path.join(index_dir, "centroids"))
     if live is None:
         raise FileNotFoundError(
-            f"no committed centroids at {index_dir!r} — run "
+            f"no committed centroids at {index_dir!r} -- run "
             "create_semantic_index first"
         )
     return live
@@ -108,7 +108,7 @@ def _centroids_live(index_dir: str) -> str:
 def _batch_vectors(batch_dir: str) -> str:
     """A batch's vector table. Current layout: batch-{id}/vectors
     (pairs beside it). ADVICE r4: indexes published before the
-    stored-pairs format kept vectors at the batch root — fall back so
+    stored-pairs format kept vectors at the batch root -- fall back so
     pre-existing indexes stay readable (their REPLAY still fails with
     a clear rebuild message via stored_pairs_path, since the replay
     record genuinely does not exist)."""
@@ -126,7 +126,7 @@ def _vector_paths(index_dir: str) -> list[str]:
 
 def _assign(spark: SparkSession, emb: DataFrame, index_dir: str) -> DataFrame:
     """(vec_id, embedding, cell, nrm) for a batch: nearest frozen
-    centroid per vector via a broadcast of the k×d metadata table."""
+    centroid per vector via a broadcast of the kxd metadata table."""
     cent = spark.read.parquet(_centroids_live(index_dir))
     cells = _nearest(
         emb.crossJoin(F.broadcast(cent)), "embedding", "cell", 1
@@ -146,7 +146,7 @@ def stage_semantic_update(
     cap: int = BLOCK_CAP,
     batch_id: str | None = None,
 ) -> str:
-    """Compute a batch's index segment WITHOUT publishing it — the
+    """Compute a batch's index segment WITHOUT publishing it -- the
     semantic twin of stage_minhash_update: the full
     update_semantic_index compute (centroid assignment, capped cell
     block join, cosine verify) materialized under a writer-unique
@@ -165,7 +165,7 @@ def stage_semantic_update(
     else:
         all_vec = new_vec.withColumn("is_new", F.lit(True))
 
-    # cell-population cap over the CURRENT index state (old ∪ new):
+    # cell-population cap over the CURRENT index state (old union new):
     # identical sub-split for both join sides within this update
     sizes = all_vec.groupBy("cell").agg(F.count("*").alias("_n"))
     keyed = (
@@ -212,7 +212,7 @@ def stage_semantic_update(
         )
     )
     # The staged write MATERIALIZES the pairs before any commit, so a
-    # failure never advances the index past an unemitted pair set —
+    # failure never advances the index past an unemitted pair set --
     # and the pair set itself becomes part of the committed batch
     # (the replay source). No caching survives staging: after the
     # writes everything lives in the staged parquet, so nothing is
@@ -242,11 +242,11 @@ def update_semantic_index(
 ) -> DataFrame:
     """Ingest an embedding batch and return the cosine>=threshold
     near-dup pairs (vec_id_1 < vec_id_2, cosine) involving at least
-    one new vector — each pair returned by exactly one update.
+    one new vector -- each pair returned by exactly one update.
 
     Replay contract: each published batch stores THE PAIRS IT EMITTED
     alongside its vectors (batch-{id}/{vectors,pairs}, one atomic
-    rename). Replaying a committed batch_id — latest or not — returns
+    rename). Replaying a committed batch_id -- latest or not -- returns
     the stored pair set verbatim, never a recompute against index
     state that did not exist when the batch first ran (recomputing a
     non-latest batch against later batches would re-emit pairs those
@@ -275,13 +275,13 @@ def compact_semantic_index(
     spark: SparkSession, index_dir: str, n_files: int = 8
 ) -> int:
     """Merge all live segments (previous base + committed batches)
-    into one base segment — the semantic twin of
+    into one base segment -- the semantic twin of
     compact_minhash_index (VERDICT r4 #3); see there for the
     commit/GC/replay contract. Vectors are repartitioned on cell
     (restoring cell co-location for the pair join) into ``n_files``
     files; the frozen centroids/ dir is metadata, not a segment, and
     is untouched. Commit is CAS-guarded and GC of the PREVIOUS
-    compaction's superseded segments runs at ENTRY (grace window —
+    compaction's superseded segments runs at ENTRY (grace window --
     see compact_minhash_index / index_segments). Returns the number
     of segments merged."""
     gc_superseded(index_dir)  # deferred cleanup from the LAST commit
@@ -322,15 +322,15 @@ def probe_semantic_index(
     exclude_self: bool = False,
 ) -> DataFrame:
     """READ-ONLY semantic lookup: which indexed vectors does each
-    probe embedding near-duplicate (cosine ≥ threshold)? Returns
-    (probe_id, index_id, cosine) without ingesting — the semantic
+    probe embedding near-duplicate (cosine >= threshold)? Returns
+    (probe_id, index_id, cosine) without ingesting -- the semantic
     twin of probe_minhash_index. Probes assign into the frozen cell
     space (broadcast centroids), join only against indexed vectors of
     the same cell, and change no state. Probe ids are EXTERNAL to the
     index namespace by default (ADVICE r5): no id-equality filter, so
     an id collision with an indexed vector still surfaces its (likely
     exact) match; callers RE-PROBING already-indexed vectors would
-    get one trivial cosine-1.0 self row per vector (VERDICT r7 #5) —
+    get one trivial cosine-1.0 self row per vector (VERDICT r7 #5) --
     pass ``exclude_self=True`` to drop ``probe_id == index_id``
     rows. Concurrency contract (ADVICE
     r5): one ``live_segments`` snapshot, manifest-consistent across a
@@ -351,7 +351,7 @@ def probe_semantic_index(
     cond = F.col("a.cell") == F.col("b.cell")
     if exclude_self:
         # pre-join filter: the self pair always shares a cell and
-        # always clears the threshold — drop it before the dot product
+        # always clears the threshold -- drop it before the dot product
         cond = cond & (F.col("a.vec_id") != F.col("b.vec_id"))
     return (
         a.join(b, cond)
@@ -371,11 +371,11 @@ def rebuild_semantic_index(
     (module docstring: "retraining is an offline rebuild, not an
     ingest-path concern"): retrain cell centroids on the CURRENT live
     vector set and re-publish everything as a fresh index at
-    ``dest_dir`` — one ``rebuild`` batch whose pair set is EMPTY (the
+    ``dest_dir`` -- one ``rebuild`` batch whose pair set is EMPTY (the
     corpus was already curated when it entered the old index; its
     near-dup decisions are history, not facts to re-emit). Replay
     history does NOT carry over: the rebuilt index starts a fresh
-    replay epoch, which is the point — rebuild when drift makes the
+    replay epoch, which is the point -- rebuild when drift makes the
     old cell space a bad fit, then swap directories at the caller's
     commit point. Returns the number of vectors republished."""
     batches = _vector_paths(index_dir)

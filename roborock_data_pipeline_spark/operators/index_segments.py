@@ -4,29 +4,27 @@ and the funnel's curated output.
 
 An index directory holds:
 
-- ``batch-{id}/`` — one dir per ingest;
-- at most one LIVE ``base-{gen}/`` — a compacted segment merging
+- ``batch-{id}/`` -- one dir per ingest;
+- at most one LIVE ``base-{gen}/`` -- a compacted segment merging
   earlier batches into one table set, carrying every absorbed batch's
   stored pairs under ``pairs/batch-{id}/`` plus an ``absorbed.json``
   listing the batch ids it supersedes;
-- ``centroids/`` (semantic index only) — frozen metadata, never part
+- ``centroids/`` (semantic index only) -- frozen metadata, never part
   of a segment;
-- **``_segments.json``** (layout v2, VERDICT r11 #1) — a generation-
-  numbered manifest naming the LIVE segments. On this layout the
-  commit point for every segment publish and base commit is ONE
-  single-file pointer swap through the commit-provider seam
-  (sources/commit_provider) — the same primitive the warehouse batch
-  log adopted in r11 and the local-FS form of an object store's
-  atomic manifest PUT. Directory renames become pure NAMING (a dir
-  not in the manifest is invisible); nothing depends on a dir rename
-  being atomic, which it is not on object storage. Readers resolve
-  the manifest — one pointer read — instead of a recursive listing.
+- **``_segments.json``** -- a generation-numbered manifest naming the
+  LIVE segments. The commit point for every segment publish and base
+  commit is ONE single-file pointer swap through the commit-provider
+  seam (sources/commit_provider) -- the primitive the warehouse batch
+  log uses too, and the local-FS form of an object store's atomic
+  manifest PUT. Directory renames are pure NAMING (a dir not in the
+  manifest is invisible); nothing depends on a dir rename being
+  atomic, which it is not on object storage. Readers resolve the
+  manifest -- one pointer read -- instead of a recursive listing.
 
-Layout selection: a NEW index (empty dir) bootstraps straight into
-the manifest layout; an existing rename-layout index keeps legacy
-listing semantics until :func:`migrate_index_manifest` upgrades it in
-place (idempotent, linearized against concurrent publishes by the
-naming lock). Every reader/writer here is dual-mode.
+A NEW index (absent or empty dir) bootstraps an empty generation-0
+manifest on its first write. A dir that holds segments but no
+manifest is the pre-manifest rename layout, which is unsupported:
+every reader and writer refuses it by name (``ValueError``).
 
 VERDICT r4 #3: without compaction the index grows one ``batch-*``
 directory per ingest forever (~9k dirs/year at hourly ingest), a
@@ -34,12 +32,12 @@ widening small-files/listing tax on every probe. Compaction collapses
 the live set to O(1) directories while preserving the replay contract:
 a committed batch id's stored pairs survive verbatim inside the base.
 
-Crash-safety (manifest layout): a publish/compaction crash BEFORE the
-pointer swap leaves an orphan dir no reader resolves (a retry of the
-same batch id clobbers it under the naming lock); after the swap the
-commit is complete. GC stays ABSORBED-BASED and deferred to the next
+Crash-safety: a publish/compaction crash BEFORE the pointer swap
+leaves an orphan dir no reader resolves (a retry of the same batch id
+clobbers it under the naming lock); after the swap the commit is
+complete. GC stays ABSORBED-BASED and deferred to the next
 maintenance pass (ADVICE r5 grace window): superseded segments
-survive a full maintenance interval, and — critically — GC never
+survive a full maintenance interval, and -- critically -- GC never
 judges by "not in the manifest", because a funnel transaction that
 committed its record but has not yet re-registered its surfaces
 (operators/funnel_txn roll-forward) owns dirs in exactly that state.
@@ -47,15 +45,15 @@ Readers that may outlive an interval should tolerate vanishing files
 (``spark.sql.files.ignoreMissingFiles``).
 
 Writers: the ingest loop is the funnel's serial commit point, and
-VERDICT r5 #4 makes the single-writer assumption a CHECKED invariant —
+VERDICT r5 #4 makes the single-writer assumption a CHECKED invariant --
 ``commit_base`` is a generation CAS (stage ``base-{gen}`` commits only
 if ``gen`` is still the next generation), so two interleaved
 compactions/ingests fail loudly (``ConcurrentWriterError``) instead of
 interleaving publishes: exactly one wins, the loser's staging is
-cleaned up by its own ``finally``. On the manifest layout the
-[naming rename → pointer swap] section additionally serializes on a
-millisecond-scale naming lock (the warehouse `_manifest_lock`
-pattern, shared via ``commit_provider.naming_lock``).
+cleaned up by its own ``finally``. The [naming rename -> pointer swap]
+section additionally serializes on a millisecond-scale naming lock
+(the warehouse `_manifest_lock` pattern, shared via
+``commit_provider.naming_lock``).
 """
 
 from __future__ import annotations
@@ -73,17 +71,8 @@ from roborock_data_pipeline_spark.sources.commit_provider import (  # noqa: F401
 ABSORBED_FILE = "absorbed.json"
 SEGMENTS_MANIFEST = "_segments.json"
 
-# r13 (VERDICT r12 #5): the legacy rename-commit WRITE path is gone.
-# Every write commits through the manifest; a write that meets a
-# legacy (pre-r12 rename-layout) index migrates it in the SAME locked
-# section — deciding legacy-vs-manifest under the lock, which also
-# closes the ADVICE r12 race where a legacy-branch rename could land
-# after a concurrent migration's listing and be silently omitted from
-# the gen-0 manifest. Legacy READS remain (live_segments/is_committed
-# fall back to the absorbed-filtered listing until migration).
-
 # the guarded section is [orphan clobber + one rename + one pointer
-# swap] — milliseconds; same TTL rationale as the warehouse naming
+# swap] -- milliseconds; same TTL rationale as the warehouse naming
 # lock
 SEGMENTS_LOCK_TTL_S = 60.0
 
@@ -95,7 +84,7 @@ def _trash_name(index_dir: str) -> str:
 
 
 def _to_trash(p: str, trash: list[str]) -> None:
-    """Rename a doomed dir to an invisible `.trash-*` name — one
+    """Rename a doomed dir to an invisible `.trash-*` name -- one
     metadata op, so it can run inside the millisecond-contract naming
     lock; the caller bulk-deletes AFTER releasing the lock (deleting
     in place out there would race a concurrent writer's freshly-named
@@ -124,14 +113,24 @@ def _seg_lock(index_dir: str):
 
 
 def _segments_manifest(index_dir: str) -> dict | None:
-    """The committed segments manifest, or None for the rename
-    layout. A PRESENT-but-unreadable manifest raises loudly: falling
-    back to the listing would promote uncommitted orphan dirs to live
-    segments — worse than failing the read."""
+    """The committed segments manifest, or None for an absent or empty
+    (never-written) index dir. A PRESENT-but-unreadable manifest
+    raises loudly: falling back to the listing would promote
+    uncommitted orphan dirs to live segments -- worse than failing the
+    read. A manifest-less dir that holds segments is the unsupported
+    rename layout and raises too."""
     raw = commit_provider.read_pointer(
         os.path.join(index_dir, SEGMENTS_MANIFEST)
     )
     if raw is None:
+        if os.path.isdir(index_dir) and any(
+            d.startswith(("batch-", "base-")) for d in os.listdir(index_dir)
+        ):
+            raise ValueError(
+                f"index dir {index_dir!r} holds segments but no "
+                f"{SEGMENTS_MANIFEST}: the rename-committed index layout "
+                "is unsupported -- rebuild the index from the source corpus"
+            )
         return None
     try:
         m = json.loads(raw)
@@ -142,7 +141,7 @@ def _segments_manifest(index_dir: str) -> dict | None:
         }
     except (ValueError, KeyError, TypeError) as exc:
         raise ValueError(
-            f"corrupt segments manifest in {index_dir!r}: {exc} — "
+            f"corrupt segments manifest in {index_dir!r}: {exc} -- "
             "refusing the directory-listing fallback (it would "
             "resurrect uncommitted orphan dirs); restore the manifest "
             "from the previous generation"
@@ -152,8 +151,8 @@ def _segments_manifest(index_dir: str) -> dict | None:
 def _commit_segments(
     index_dir: str, base: str | None, batches: list[str], generation: int
 ) -> None:
-    """THE manifest-layout commit point: one pointer swap through the
-    seam (verified read-back — a lost PUT fails the mutation whole)."""
+    """THE commit point: one pointer swap through the
+    seam (verified read-back -- a lost PUT fails the mutation whole)."""
     commit_provider.commit_pointer(
         os.path.join(index_dir, SEGMENTS_MANIFEST),
         json.dumps(
@@ -166,50 +165,42 @@ def _commit_segments(
     )
 
 
-def _manifest_or_migrate(index_dir: str) -> dict:
-    """The current manifest — migrating a legacy index's live set
-    into the returned dict when none exists. MUST be called inside
-    ``_seg_lock`` (the layout decision and the legacy listing are only
-    consistent against concurrent publishes/migrations under it —
-    ADVICE r12 medium). A FRESH index (no segments at all) first
-    commits an empty gen-0 manifest, so a crash between the caller's
-    naming rename and its manifest commit leaves a detectable orphan
-    rather than a dir a retry would mis-read as legacy-committed.
-    A LEGACY index's live set is returned at generation -1: the
-    caller's own commit (gen 0) lands the migration and its mutation
-    in one pointer swap."""
+def _manifest_or_bootstrap(index_dir: str) -> dict:
+    """The current manifest, committing an empty generation 0 for a
+    fresh index. MUST be called inside ``_seg_lock`` and before the
+    caller's naming rename, so a crash between that rename and its
+    manifest commit leaves a detectable orphan next to a manifest,
+    never a manifest-less dir holding segments."""
     m = _segments_manifest(index_dir)
-    if m is not None:
-        return m
-    base, batches = _legacy_live(index_dir)
-    if base is None and not batches:
+    if m is None:
         _commit_segments(index_dir, None, [], 0)
-        return {"generation": 0, "base": None, "batches": []}
-    return {
-        "generation": -1,
-        "base": os.path.basename(base) if base is not None else None,
-        "batches": [os.path.basename(b) for b in batches],
-    }
+        m = {"generation": 0, "base": None, "batches": []}
+    return m
+
+
+def ensure_manifest(index_dir: str) -> None:
+    """Bootstrap a fresh index's empty manifest (idempotent) -- for a
+    writer that names segment dirs outside ``publish_segment``, i.e.
+    the funnel transaction's roll-forward (operators/funnel_txn)."""
+    os.makedirs(index_dir, exist_ok=True)
+    with _seg_lock(index_dir):
+        _manifest_or_bootstrap(index_dir)
 
 
 def publish_segment(staged: str, dest: str) -> None:
     """Atomically publish ``staged`` as ``dest``.
 
-    The rename only NAMES the segment — still invisible — and the
+    The rename only NAMES the segment -- still invisible -- and the
     commit is the manifest pointer swap, both under the naming lock.
     A same-name dest that is already COMMITTED raises
     ``ConcurrentWriterError`` (same-id race: exactly one wins); an
     uncommitted same-name dest is a crashed attempt's orphan and is
-    clobbered so retries converge.
-
-    A legacy (pre-r12 rename-layout) index is migrated in the same
-    locked commit (r13 sunset: the legacy rename-commit write branch
-    is gone — new writes never extend a legacy layout)."""
+    clobbered so retries converge."""
     index_dir, dname = os.path.split(dest.rstrip(os.sep))
     os.makedirs(index_dir, exist_ok=True)
     trash: list[str] = []
     with _seg_lock(index_dir):
-        m = _manifest_or_migrate(index_dir)
+        m = _manifest_or_bootstrap(index_dir)
         if dname in m["batches"] or dname == m["base"] or (
             dname.startswith("batch-")
             and m["base"] is not None
@@ -218,12 +209,12 @@ def publish_segment(staged: str, dest: str) -> None:
         ):
             raise ConcurrentWriterError(
                 f"segment {dest!r} was already committed by a "
-                "concurrent writer; this writer lost the race — rerun "
+                "concurrent writer; this writer lost the race -- rerun "
                 "against the new index state if still needed"
             )
         if os.path.isdir(dest):
             # a crashed same-id attempt's orphan (named, never
-            # committed): clobber it so the retry converges — trash-
+            # committed): clobber it so the retry converges -- trash-
             # renamed here (metadata-only), deleted after the lock
             _to_trash(dest, trash)
         os.replace(staged, dest)
@@ -242,21 +233,14 @@ def publish_segment(staged: str, dest: str) -> None:
 
 
 def register_segment(index_dir: str, dname: str) -> None:
-    """Idempotently add an ALREADY-NAMED dir to the live manifest —
+    """Idempotently add an ALREADY-NAMED dir to the live manifest --
     the roll-forward half of a funnel transaction (funnel_txn
-    committed the record; its finalize renames each surface into
-    place and then registers it here). No-op for already-registered
-    names; a legacy index is migrated in the same locked commit (the
-    already-renamed dir is in the legacy live listing, so migration
-    registers it and this call is then the idempotent no-op)."""
+    committed the record; its finalize bootstraps the manifest
+    (ensure_manifest), renames each surface into place and then
+    registers it here). No-op for already-registered names."""
     os.makedirs(index_dir, exist_ok=True)
     with _seg_lock(index_dir):
-        m = _manifest_or_migrate(index_dir)
-        if m["generation"] == -1:
-            # legacy live set (which includes dname — its rename was
-            # the legacy commit): land the migration itself
-            _commit_segments(index_dir, m["base"], m["batches"], 0)
-            m = {**m, "generation": 0}
+        m = _manifest_or_bootstrap(index_dir)
         if dname in m["batches"] or dname == m["base"]:
             return
         if dname.startswith("batch-") and m["base"] is not None and (
@@ -277,24 +261,6 @@ def register_segment(index_dir: str, dname: str) -> None:
             )
 
 
-def migrate_index_manifest(index_dir: str) -> int:
-    """In-place upgrade of a legacy rename-committed index to the
-    manifest layout; idempotent (returns the current generation if
-    already migrated). The legacy live set is computed with the
-    absorbed-filtered listing, so crashed-compaction leftovers are
-    not promoted to live; the naming lock linearizes a concurrent
-    publish (r13: every publish decides the layout INSIDE this same
-    lock, so it either lands before the listing and is named by
-    generation 0, or blocks on the lock and commits generation 1)."""
-    os.makedirs(index_dir, exist_ok=True)
-    with _seg_lock(index_dir):
-        m = _manifest_or_migrate(index_dir)
-        if m["generation"] >= 0:
-            return m["generation"]
-        _commit_segments(index_dir, m["base"], m["batches"], 0)
-        return 0
-
-
 def _absorbed_ids(base_dir: str) -> list[str]:
     try:
         with open(os.path.join(base_dir, ABSORBED_FILE)) as fh:
@@ -303,29 +269,13 @@ def _absorbed_ids(base_dir: str) -> list[str]:
         return []
 
 
-def _legacy_live(index_dir: str) -> tuple[str | None, list[str]]:
-    """Listing-resolved live set (legacy layout / migration input)."""
-    if not os.path.isdir(index_dir):
-        return None, []
-    entries = os.listdir(index_dir)
-    bases = sorted(d for d in entries if d.startswith("base-"))
-    base = os.path.join(index_dir, bases[-1]) if bases else None
-    absorbed = set(_absorbed_ids(base)) if base is not None else set()
-    batches = sorted(
-        os.path.join(index_dir, d)
-        for d in entries
-        if d.startswith("batch-") and d[len("batch-"):] not in absorbed
-    )
-    return base, batches
-
-
 def live_segments(index_dir: str) -> tuple[str | None, list[str]]:
-    """(current base dir or None, live batch dirs). Manifest layout:
-    resolved from ONE pointer read — no directory listing at all (the
-    100 TB read path). Legacy layout: the absorbed-filtered listing."""
+    """(current base dir or None, live batch dirs), resolved from ONE
+    pointer read -- no directory listing at all (the 100 TB read
+    path). (None, []) for a fresh index."""
     m = _segments_manifest(index_dir)
     if m is None:
-        return _legacy_live(index_dir)
+        return None, []
     base = (
         os.path.join(index_dir, m["base"]) if m["base"] is not None else None
     )
@@ -333,47 +283,35 @@ def live_segments(index_dir: str) -> tuple[str | None, list[str]]:
 
 
 def is_committed(index_dir: str, batch_id: str) -> bool:
-    """Whether ``batch_id`` is durably part of the index — manifest
-    membership (or absorption into the live base) on the manifest
-    layout; directory presence on legacy. The replay guards of every
-    index use this instead of ``os.path.isdir`` (an orphan dir from a
-    crashed publish must NOT read as committed: skipping its
+    """Whether ``batch_id`` is durably part of the index -- manifest
+    membership, or absorption into the live base. The replay guards of
+    every index use this instead of ``os.path.isdir`` (an orphan dir
+    from a crashed publish must NOT read as committed: skipping its
     re-ingest would silently drop the batch)."""
     m = _segments_manifest(index_dir)
-    dname = f"batch-{batch_id}"
-    if m is not None:
-        if dname in m["batches"]:
-            return True
-        base = m["base"]
-    else:
-        if os.path.isdir(os.path.join(index_dir, dname)):
-            return True
-        base, _ = _legacy_live(index_dir)
-        base = os.path.basename(base) if base is not None else None
-    return base is not None and batch_id in set(
-        _absorbed_ids(os.path.join(index_dir, base))
+    if m is None:
+        return False
+    if f"batch-{batch_id}" in m["batches"]:
+        return True
+    return m["base"] is not None and batch_id in set(
+        _absorbed_ids(os.path.join(index_dir, m["base"]))
     )
 
 
 def stored_pairs_path(index_dir: str, batch_id: str) -> str | None:
     """Replay lookup: the committed pair set for ``batch_id``, whether
     the batch is still its own live segment or was compacted into the
-    base. None = never committed (fresh batch) — an orphan dir from a
-    crashed manifest-layout publish is NOT committed."""
+    base. None = never committed (fresh batch) -- an orphan dir from a
+    crashed publish is NOT committed."""
     m = _segments_manifest(index_dir)
     batch_dir = os.path.join(index_dir, f"batch-{batch_id}")
-    live_batch = (
-        f"batch-{batch_id}" in m["batches"]
-        if m is not None
-        else os.path.isdir(batch_dir)
-    )
-    if live_batch:
+    if m is not None and f"batch-{batch_id}" in m["batches"]:
         pairs = os.path.join(batch_dir, "pairs")
         if os.path.isdir(pairs):
             return pairs
         raise ValueError(
             f"index batch {batch_id!r} predates the stored-pairs format "
-            "(no pairs/ subdir) — its replay set was never recorded; "
+            "(no pairs/ subdir) -- its replay set was never recorded; "
             "rebuild the index from the source corpus"
         )
     base, _ = live_segments(index_dir)
@@ -395,7 +333,7 @@ def next_base_gen(index_dir: str) -> int:
 
 def carry_pairs(staged: str, base: str | None, batches: list[str]) -> list[str]:
     """Copy every live segment's stored pairs into ``staged/pairs/``
-    (verbatim file copies — the replay record must not be recomputed)
+    (verbatim file copies -- the replay record must not be recomputed)
     and return the full absorbed id list for the manifest."""
     pairs_root = os.path.join(staged, "pairs")
     os.makedirs(pairs_root, exist_ok=True)
@@ -414,7 +352,7 @@ def carry_pairs(staged: str, base: str | None, batches: list[str]) -> list[str]:
         if not os.path.isdir(src):
             raise ValueError(
                 f"cannot compact: batch {bid!r} predates the stored-pairs "
-                "format (no pairs/ subdir) — rebuild the index from the "
+                "format (no pairs/ subdir) -- rebuild the index from the "
                 "source corpus"
             )
         shutil.copytree(src, os.path.join(pairs_root, f"batch-{bid}"))
@@ -428,15 +366,14 @@ def commit_base(index_dir: str, staged: str, gen: int,
     as ``base-{gen}``. Generation CAS (VERDICT r5 #4): if another
     writer committed ANY base since this compaction snapshotted
     (``gen`` is no longer the next generation), raise
-    ``ConcurrentWriterError`` — our staged base was built from a
+    ``ConcurrentWriterError`` -- our staged base was built from a
     stale live set and absorbing it could drop the winner's data.
 
     The rename names the base invisibly; the COMMIT is one pointer
     swap that installs the base AND removes the absorbed batches from
     the live set together (under the naming lock, with the CAS
-    re-checked inside it; a legacy index migrates in the same locked
-    commit — r13 sunset). GC of superseded segments is deliberately
-    NOT run here — deferred to the next maintenance pass so concurrent
+    re-checked inside it). GC of superseded segments is deliberately
+    NOT run here -- deferred to the next maintenance pass so concurrent
     readers keep a full maintenance interval of grace (module
     docstring)."""
     with open(os.path.join(staged, ABSORBED_FILE), "w") as fh:
@@ -449,10 +386,10 @@ def commit_base(index_dir: str, staged: str, gen: int,
         if next_base_gen(index_dir) != gen:
             raise ConcurrentWriterError(
                 f"base generation advanced past {gen} while compacting "
-                f"{index_dir!r} — a concurrent writer committed first; "
+                f"{index_dir!r} -- a concurrent writer committed first; "
                 "this compaction's snapshot is stale and was discarded"
             )
-        m = _manifest_or_migrate(index_dir)
+        m = _manifest_or_bootstrap(index_dir)
         if os.path.isdir(dest):
             _to_trash(dest, trash)  # crashed orphan; deleted post-lock
         os.replace(staged, dest)
@@ -472,22 +409,22 @@ def commit_base(index_dir: str, staged: str, gen: int,
 
 def gc_superseded(index_dir: str) -> None:
     """Remove batch dirs absorbed into the live base and any lower-
-    generation bases. Best-effort and idempotent — readers are already
+    generation bases. Best-effort and idempotent -- readers are already
     consistent without it. Called at the START of each maintenance
     pass, never at commit time, so segments a just-committed base
     superseded stay readable for one full maintenance interval
-    (ADVICE r5 grace window). Deliberately ABSORBED-BASED on both
-    layouts (not "everything the manifest does not name"): a funnel
+    (ADVICE r5 grace window). Deliberately ABSORBED-BASED (not
+    "everything the manifest does not name"): a funnel
     surface that committed its transaction record but has not yet
     been re-registered into the manifest is not an orphan, and GC
     must never eat it.
 
     The sweep holds ``_seg_lock`` (ADVICE r12 low): without it the
-    base-dir pass could race another actor's lock-held [rename →
+    base-dir pass could race another actor's lock-held [rename ->
     pointer swap] window in commit_base and rmtree a base that is
-    milliseconds from being committed — the committed manifest would
+    milliseconds from being committed -- the committed manifest would
     then name a deleted directory. The lock makes the sweep's view of
-    "not the live base" stable — and the sweep itself stays
+    "not the live base" stable -- and the sweep itself stays
     metadata-only (trash renames; the bulk deletes run AFTER the lock
     releases, on dirs already outside the segment namespace), so GC
     of many absorbed segments cannot hold the lock past its TTL."""
@@ -495,12 +432,11 @@ def gc_superseded(index_dir: str) -> None:
         return
     trash: list[str] = []
     with _seg_lock(index_dir):
-        m = _segments_manifest(index_dir)
+        if _segments_manifest(index_dir) is None:
+            return  # fresh index: nothing committed, nothing superseded
         base, _ = live_segments(index_dir)
-        if base is None and m is None:
-            return  # legacy layout, no base: dir presence IS the commit
-        # manifest layout: a base dir the manifest does not name is a
-        # crashed compaction's orphan even when NO base is live yet —
+        # a base dir the manifest does not name is a crashed
+        # compaction's orphan even when NO base is live yet --
         # base commits happen only through the pointer swap, so unlike
         # batch dirs there is no pending-registration state for them
         absorbed = set(_absorbed_ids(base)) if base is not None else set()
@@ -517,14 +453,17 @@ def gc_superseded(index_dir: str) -> None:
 
 
 def describe_index(index_dir: str) -> dict[str, object] | None:
-    """Metadata-only health snapshot of one persisted index dir —
+    """Metadata-only health snapshot of one persisted index dir --
     the index twin of sinks.describe_table (VERDICT r12 #8): layout +
     generation, live segment counts, compaction state, GC backlog,
-    orphan count, and the legacy sunset flag. Pure file reads (one
-    pointer read + one directory listing), zero Spark jobs — a 100 TB
+    and orphan count. Pure file reads (one
+    pointer read + one directory listing), zero Spark jobs -- a 100 TB
     maintenance dashboard polls this. None = no index at the path."""
     if not os.path.isdir(index_dir):
         return None
+    # one key per dir on every commit backend (an object-store key has
+    # no working directory to resolve a relative path against)
+    index_dir = os.path.abspath(index_dir)
     m = _segments_manifest(index_dir)
     base, batches = live_segments(index_dir)
     absorbed = set(_absorbed_ids(base)) if base is not None else set()
@@ -551,23 +490,17 @@ def describe_index(index_dir: str) -> dict[str, object] | None:
         if d not in live_names and d not in superseded
     ]
     out: dict[str, object] = {
-        "layout": "segments-manifest" if m is not None else "rename",
+        "layout": "segments-manifest" if m is not None else None,
         "generation": m["generation"] if m is not None else None,
         "base": os.path.basename(base) if base is not None else None,
         "live_batches": len(batches),
         "absorbed_in_base": len(absorbed),
         "gc_backlog_dirs": len(superseded),
         "pending_or_orphan_dirs": len(orphans),
-        "layout_sunset": (
-            None
-            if m is not None
-            else "legacy rename layout — migrates at the next write or "
-                 "funnel_maintenance pass (r13 sunset)"
-        ),
     }
     try:
         # `base` is already index_dir-joined (live_segments returns
-        # full paths) — re-joining doubled the dir for relative
+        # full paths) -- re-joining doubled the dir for relative
         # index_dir paths and silently reported base_age_s None
         # (ADVICE r13 low)
         st = os.stat(base) if base else None
@@ -583,7 +516,7 @@ def describe_index(index_dir: str) -> dict[str, object] | None:
 
         out["centroids_generation"] = versioned_dir.generation(croot)
         # r14 (VERDICT r13 #6): the centroids root is a full
-        # versioned surface — surface its backlog/age too
+        # versioned surface -- surface its backlog/age too
         out["centroids_versioned"] = versioned_dir.describe_versioned_dir(
             croot
         )

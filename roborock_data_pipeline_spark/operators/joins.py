@@ -1,16 +1,16 @@
-"""Joins (SURVEY §2.F).
+"""Joins (SURVEY sec 2.F).
 
 The reference has no joins (single-entity pipeline); its only key
 correlation is the dict lookup of prior state (J1, in incremental.py).
 These are the engine's scale-out join surface:
 
-- J2 star join: dims are tiny (region=5, nation=25 rows) → broadcast,
+- J2 star join: dims are tiny (region=5, nation=25 rows) -> broadcast,
   so the fact table never shuffles for the join.
-- J3 fact-fact join: both sides large at 100 TB → sort-merge on the
+- J3 fact-fact join: both sides large at 100 TB -> sort-merge on the
   key; co-partitioning (bucketing) would remove the shuffle entirely
   on a warehouse deployment.
 - J5 as-of join: Spark lacks a native one; expressed as last-non-null
-  over an event-time window — one shuffle on the key, no range
+  over an event-time window -- one shuffle on the key, no range
   explosion (the classic union-and-window as-of technique).
 """
 
@@ -38,10 +38,10 @@ from roborock_data_pipeline_spark.sources.tables import load
 )
 def q_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2 (EXT): star-schema join. nation/region are FIXED-size dims
-    (25/5 rows at any TPC-H SF) — explicitly broadcast; customer
+    (25/5 rows at any TPC-H SF) -- explicitly broadcast; customer
     SCALES with SF, so its join is left to Catalyst/AQE: under the
     threshold it auto-broadcasts (locally identical plan, pinned in
-    tests/test_plans.py), above it AQE picks SMJ — an explicit
+    tests/test_plans.py), above it AQE picks SMJ -- an explicit
     broadcast hint there would OOM the build side at 100 TB."""
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
@@ -72,7 +72,7 @@ def q_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J3 (EXT): large-large equi-join (lineitem ⋈ orders). Above the
+    """J3 (EXT): large-large equi-join (lineitem join orders). Above the
     broadcast threshold Catalyst plans a sort-merge join; the status
     filter pushes below the join to shrink the build side first."""
     li = load(spark, sf_dir, "lineitem")
@@ -110,14 +110,14 @@ def q_fact_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_range_join_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J5+ (EXT): keyless interval join — all activity inside ±1 h
+    """J5+ (EXT): keyless interval join -- all activity inside +-1 h
     windows around the top-20 purchases by value.
 
     A naive range join with no equi-key is a nested-loop cartesian
-    (every event × every window). The scale technique: discretize
+    (every event x every window). The scale technique: discretize
     time into bins as wide as the window span (1 h), explode each
-    interval into the 2–3 bins it covers, stamp each event with its
-    bin, and equi-join on the bin — the range predicate then only
+    interval into the 2-3 bins it covers, stamp each event with its
+    bin, and equi-join on the bin -- the range predicate then only
     filters within-bin candidates. Catalyst gets a *hash* join key,
     so with a big interval side this shuffles on `bin` instead of
     looping; here the 20-window side is broadcast, so events stream
@@ -173,16 +173,16 @@ def q_range_join_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_interval_count_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J5+ (EXT): keyed interval join — for each purchase, how many
+    """J5+ (EXT): keyed interval join -- for each purchase, how many
     events the same user produced in the strictly-preceding 24 h
     (the Flink interval-join shape: equi-key + time range).
 
     Expressed as a RANGE-frame window over microsecond epochs rather
     than a self-join: one shuffle on user_id, each partition scanned
-    once with a sliding frame — linear where the join form is
-    per-user quadratic. Frame bounds are in µs (unix_micros /
+    once with a sliding frame -- linear where the join form is
+    per-user quadratic. Frame bounds are in us (unix_micros /
     epoch_us on both engines) so sub-second gaps at the 24 h boundary
-    resolve identically — the second-truncation trap q_sessionize
+    resolve identically -- the second-truncation trap q_sessionize
     hit does not apply here.
     """
     ev = load(spark, sf_dir, "events")
@@ -214,7 +214,7 @@ def q_interval_count_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_asof_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J5 (EXT): as-of join — for each purchase, the most recent
+    """J5 (EXT): as-of join -- for each purchase, the most recent
     strictly-earlier 'view' by the same user (the reference's
     nearest-status-before-session-start telemetry pattern, S1+S4).
 
@@ -248,12 +248,12 @@ def q_asof_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_view_purchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J5+ (EXT): attribution pairs — (purchase, view-within-1-hour)
+    """J5+ (EXT): attribution pairs -- (purchase, view-within-1-hour)
     per user. The batch twin of streaming/aggregations.py::
     purchase_view_join_stream (stream-stream interval join).
 
     Equi-join on user_id with the time range riding the join as a
-    predicate — one shuffle per side, no range explosion; output is
+    predicate -- one shuffle per side, no range explosion; output is
     bounded by genuine matches. At 100 TB both sides pre-filter on
     event_type at the scan, and AQE handles user skew."""
     ev = load(spark, sf_dir, "events")
@@ -305,12 +305,12 @@ def q_view_purchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_reconcile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J-family completion: FULL OUTER reconciliation of two period
-    aggregates of the same fact — the audit join that surfaces keys
+    aggregates of the same fact -- the audit join that surfaces keys
     present on only one side (churned / newly-acquired customers,
     or two pipelines' outputs that should agree).
 
     Both sides pre-aggregate to key-sized relations BEFORE the full
-    outer join, so the join input is |customers|, not |orders| — a
+    outer join, so the join input is |customers|, not |orders| -- a
     full outer join of raw facts would shuffle everything to preserve
     unmatched rows of both sides. Presence flags derive from the
     join's null pattern, costing nothing extra.

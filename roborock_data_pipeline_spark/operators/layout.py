@@ -1,10 +1,10 @@
 """Data-layout operators: Z-order clustering keys and time-spine
-gap fill (SURVEY §2 EXT).
+gap fill (SURVEY sec 2 EXT).
 
 At 100 TB, layout is a first-class operator: writing files clustered
 on an interleaved (Z-order) key makes per-file min/max statistics
 selective on BOTH dimensions, so later scans prune files for either
-predicate — the same trick Delta OPTIMIZE ZORDER BY and Iceberg
+predicate -- the same trick Delta OPTIMIZE ZORDER BY and Iceberg
 sort-order rewrites use. The gap-fill spine is the other chronic
 warehouse need: turning a sparse event stream into a dense
 time-series without driver-side loops.
@@ -26,7 +26,7 @@ Z_BITS = 8
 def zorder_key(x: Column, y: Column, bits: int = Z_BITS) -> Column:
     """Interleave the low ``bits`` of two non-negative ints into a
     2*bits Morton (Z-order) key: bit b of x lands at 2b, of y at
-    2b+1. Pure codegen bit arithmetic — a map-only expression that
+    2b+1. Pure codegen bit arithmetic -- a map-only expression that
     becomes the sort key of a write, never a shuffle of its own
     (the range-partitioned write that follows it does the shuffle).
     """
@@ -68,7 +68,7 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order layout planning for the orders table: Morton-interleave
     (customer mod 256, day-of-year mod 256), assign rows to 64 file
     buckets by Z-prefix, and report each bucket's min/max on both
-    dimensions — exactly the per-file statistics a Z-ordered write
+    dimensions -- exactly the per-file statistics a Z-ordered write
     produces. The bounded ranges on BOTH columns (vs. a plain sort,
     which leaves the second column unbounded per file) are what make
     two-dimensional file pruning work.
@@ -117,12 +117,12 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_date_scaffold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap-filled daily series: a (date x event_type) spine built from
     sequence()/explode over the observed date range, left-joined to
-    the daily counts so silent days appear as zeros — the dense input
+    the daily counts so silent days appear as zeros -- the dense input
     a forecasting or SLA job needs.
 
     Scale shape: the spine is days x types (tiny, broadcast side); the
     counts aggregate is the only real shuffle and is partial-agg
-    friendly. The spine generation is one row exploded JVM-side —
+    friendly. The spine generation is one row exploded JVM-side --
     never a driver loop.
     """
     ev = load(spark, sf_dir, "events").withColumn("d", F.to_date("ts"))

@@ -1,18 +1,18 @@
-"""Record linkage, CDC merge, and categorical repair (SURVEY §2 EXT).
+"""Record linkage, CDC merge, and categorical repair (SURVEY sec 2 EXT).
 
 Three operators every warehouse-grade engine ends up needing around
 the reference's sync loop (reference pipeline.py:481-568 rebuilds its
 Sheets "snapshot" by re-reading everything; these are the incremental
 equivalents):
 
-- ``cdc_merge`` / ``q_cdc_apply`` — apply a change batch (upserts +
+- ``cdc_merge`` / ``q_cdc_apply`` -- apply a change batch (upserts +
   tombstones) onto a keyed snapshot, latest-writer-wins. This is the
   MERGE INTO shape a Delta/Iceberg sink runs per micro-batch.
-- ``q_fuzzy_match`` — blocked Levenshtein linkage over a *vocabulary*
-  (distinct values first, then pair within blocks) — the entity-
+- ``q_fuzzy_match`` -- blocked Levenshtein linkage over a *vocabulary*
+  (distinct values first, then pair within blocks) -- the entity-
   resolution shape that stays linear-ish at 100 TB because pairing
   happens on the deduplicated value table, never the raw rows.
-- ``q_mode_impute`` — per-group modal value with a deterministic
+- ``q_mode_impute`` -- per-group modal value with a deterministic
   tie-break, the categorical twin of q_winsorize's numeric repair.
 """
 
@@ -37,16 +37,16 @@ def cdc_merge(snapshot: DataFrame, changes: DataFrame, key_cols: list[str],
     rows outrank snapshot rows only at EXACTLY equal ``order_cols``
     (a rewrite of the same version is by definition newer). Keeping
     ``order_cols`` dominant is what makes late-arriving old versions
-    harmless: a change row older than the stored version — including
-    a stored tombstone — loses. Rows whose winning version has
-    ``delete_col = true`` are tombstones and drop out entirely —
+    harmless: a change row older than the stored version -- including
+    a stored tombstone -- loses. Rows whose winning version has
+    ``delete_col = true`` are tombstones and drop out entirely --
     unless ``keep_tombstones`` is set, which retains them (with
     ``delete_col``) so a *stored* snapshot remembers deletions and a
     late-arriving older version cannot resurrect a deleted key. The
     streaming upserter stores with tombstones and filters on read.
 
     Scale shape: one shuffle on ``key_cols`` (the window), rank=1
-    filter inside the window operator — identical cost to
+    filter inside the window operator -- identical cost to
     q_latest_per_device regardless of how many versions per key. In a
     real deployment this runs per micro-batch inside ``foreachBatch``
     against a transactional table format; the pure-DataFrame form here
@@ -140,7 +140,7 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Blocked fuzzy linkage: candidate variant pairs of the part-name
-    vocabulary — distinct (adjective, noun) values, paired within a
+    vocabulary -- distinct (adjective, noun) values, paired within a
     noun block when the adjectives are within Levenshtein distance 2.
 
     The scale discipline is the order of operations: DISTINCT first
@@ -148,7 +148,7 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows, and still only ~millions from 100 TB), THEN the quadratic
     pairing inside tiny blocks. Pairing raw rows would be O(n^2) in
     the corpus; pairing the blocked vocabulary is O(sum of block^2)
-    over vocabulary blocks — the standard entity-resolution blocking
+    over vocabulary blocks -- the standard entity-resolution blocking
     shape. levenshtein() is JVM codegen in Spark.
     """
     p = load(spark, sf_dir, "part")
@@ -198,7 +198,7 @@ def q_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_mode_impute(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group modal value with deterministic tie-break (smallest
     key wins): each market segment's most common nation, plus how many
-    of the segment's customers already sit at the mode — the lookup
+    of the segment's customers already sit at the mode -- the lookup
     table a categorical-imputation repair pass broadcasts.
 
     Two-level aggregate: (segment, nation) counts shuffle once, the

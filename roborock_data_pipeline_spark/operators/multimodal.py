@@ -1,15 +1,15 @@
-"""Multimodal columns (SURVEY §2.K L5 — EXT).
+"""Multimodal columns (SURVEY sec 2.K L5 -- EXT).
 
 Treatment of image/audio/video at 100 TB: the payload is an opaque
 `binary` column travelling next to a typed metadata struct; decode /
 feature-extraction runs as Arrow-batched Pandas functions via
-`mapInPandas` (per-partition batch iterator — the only part of the
+`mapInPandas` (per-partition batch iterator -- the only part of the
 engine allowed off the JVM, because codec work is genuinely Python).
 
 The container has no image/audio codecs, so `decode_media` is a
 STUB: real decode raises NotImplementedError; the default is a
 deterministic fake (byte-statistics features) so the Spark-side
-plumbing — schema, batch iteration, partitioning — is real and
+plumbing -- schema, batch iteration, partitioning -- is real and
 tested end to end.
 """
 
@@ -66,7 +66,7 @@ def _decode_png_gray8(blob: bytes) -> tuple[int, int, bytes] | None:
     r5 #2): parse IHDR/IDAT chunks, zlib-inflate, undo all five PNG
     row filters (None/Sub/Up/Average/Paeth, bpp=1). Returns
     (width, height, pixels row-major) or None if the blob is not a
-    PNG of exactly this shape — the caller falls back to Pillow (or
+    PNG of exactly this shape -- the caller falls back to Pillow (or
     raises). This is NOT a general codec; it exists so the real-codec
     slot's contract executes in codec-free environments instead of
     permanently skipping."""
@@ -137,9 +137,9 @@ def decode_media(blob: bytes, fmt: str, *, fake: bool = True) -> list[float]:
     byte-statistic features so the pipeline is testable without
     codecs. `fake=False` takes the real-codec path: Pillow when
     installed; otherwise the stdlib gray8-PNG fallback decoder
-    (VERDICT r5 #2 — the contract executes even in this codec-free
+    (VERDICT r5 #2 -- the contract executes even in this codec-free
     container). Shapes neither path can decode raise
-    NotImplementedError naming the dependency — never a silent
+    NotImplementedError naming the dependency -- never a silent
     fallback to the fake."""
     if not fake:
         if fmt.startswith("image/"):
@@ -153,14 +153,14 @@ def decode_media(blob: bytes, fmt: str, *, fake: bool = True) -> list[float]:
                 decoded = _decode_png_gray8(blob)
                 if decoded is None:
                     raise NotImplementedError(
-                        f"no codec for this {fmt!r} payload — the stdlib "
+                        f"no codec for this {fmt!r} payload -- the stdlib "
                         "fallback handles 8-bit grayscale PNG only; "
                         "install Pillow for the general image decode path"
                     ) from None
                 px = list(decoded[2])
             return [sum(px) / len(px), float(px[0])] if px else [0.0, 0.0]
         raise NotImplementedError(
-            f"no codec for {fmt!r} in this environment — plug in the real "
+            f"no codec for {fmt!r} in this environment -- plug in the real "
             "decoder here (av.open / soundfile.read)"
         )
     if not blob:
@@ -170,11 +170,11 @@ def decode_media(blob: bytes, fmt: str, *, fake: bool = True) -> list[float]:
 
 def resize_image(blob: bytes, width: int, height: int) -> bytes:
     """L5 image op, real-codec path (VERDICT r4 #7): grayscale +
-    nearest-neighbor resize to exactly width*height bytes — the
+    nearest-neighbor resize to exactly width*height bytes -- the
     classic aHash prologue. Pillow when installed; otherwise the
     stdlib gray8-PNG fallback (VERDICT r5 #2) with Pillow's NEAREST
-    center-sampling semantics — source index floor((i+0.5)*m/n),
-    computed in exact integer arithmetic — so both paths are
+    center-sampling semantics -- source index floor((i+0.5)*m/n),
+    computed in exact integer arithmetic -- so both paths are
     byte-identical on the shapes the fallback supports (pinned by
     test_multimodal's real-codec test, which asserts against
     independently computed pixels AND against Pillow when present).
@@ -189,7 +189,7 @@ def resize_image(blob: bytes, width: int, height: int) -> bytes:
         decoded = _decode_png_gray8(blob)
         if decoded is None:
             raise NotImplementedError(
-                "no codec for this image payload — the stdlib fallback "
+                "no codec for this image payload -- the stdlib fallback "
                 "handles 8-bit grayscale PNG only; install Pillow for "
                 "the general resize path"
             ) from None
@@ -216,11 +216,11 @@ def sample_frames(blob: bytes, every_n: int = 30) -> list[bytes]:
 
 
 def _extract_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas worker: Arrow batch in → feature frame out.
+    """mapInPandas worker: Arrow batch in -> feature frame out.
 
     The fake decode is vectorized with numpy inside the batch (the
     shape real decoders take: batch of blobs in, matrix of features
-    out) — not a per-row Python loop."""
+    out) -- not a per-row Python loop."""
     import numpy as np
 
     for pdf in batches:
@@ -287,7 +287,7 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L5: metadata-only scan — aggregating the typed struct without
+    """L5: metadata-only scan -- aggregating the typed struct without
     ever touching the blob. At 100 TB this is the crucial access
     pattern: parquet column pruning means the multi-GB binary column
     is never read."""
@@ -307,12 +307,12 @@ FRAME_EVERY_N = 3  # keep every Nth frame
 def resize_media(df: DataFrame, width: int, height: int,
                  *, fake: bool = True) -> DataFrame:
     """L5 image-op plumbing, real end to end: Arrow batches of
-    (doc_id, media, fmt) in → (doc_id, media, width, height) out,
+    (doc_id, media, fmt) in -> (doc_id, media, width, height) out,
     with `media` resized to exactly width*height bytes.
 
     The fake path (codec-free container) is a deterministic strided
-    byte resample — index i reads source byte (i*len)//(w*h), the
-    nearest-neighbor downsample a real resizer performs per channel —
+    byte resample -- index i reads source byte (i*len)//(w*h), the
+    nearest-neighbor downsample a real resizer performs per channel --
     so the batch shape, schema, and vectorization are exactly what a
     PIL-backed implementation drops into (see resize_image for the
     gated real path)."""
@@ -333,7 +333,7 @@ def resize_media(df: DataFrame, width: int, height: int,
                 if fake:
                     src = np.frombuffer(m, dtype=np.uint8)
                     if len(src) == 0:
-                        # nothing to resample from — empty out (ADVICE
+                        # nothing to resample from -- empty out (ADVICE
                         # r3: zero-filled padding diverged from the
                         # oracle's md5 over an empty selection)
                         out.append(b"")
@@ -356,9 +356,9 @@ def sample_media_frames(df: DataFrame, chunk: int = FRAME_CHUNK,
                         every_n: int = FRAME_EVERY_N,
                         *, fake: bool = True) -> DataFrame:
     """L5 video-op plumbing, real end to end: one input blob explodes
-    into multiple frame rows — (doc_id, frame_idx, frame) — keeping
+    into multiple frame rows -- (doc_id, frame_idx, frame) -- keeping
     every Nth fixed-size chunk. This is the row-expanding mapInPandas
-    shape a real av-backed frame sampler uses (decode → keep every
+    shape a real av-backed frame sampler uses (decode -> keep every
     Nth frame); the fake treats the byte stream as the frame sequence
     (frame k = bytes [k*chunk, (k+1)*chunk))."""
     out_schema = T.StructType([
@@ -376,8 +376,8 @@ def sample_media_frames(df: DataFrame, chunk: int = FRAME_CHUNK,
                         ids.append(doc_id); idxs.append(k); frames.append(fr)
                     continue
                 b = bytes(m)
-                # empty media → zero frames (a real demuxer yields no
-                # frames from an empty stream; ADVICE r3 — the oracle's
+                # empty media -> zero frames (a real demuxer yields no
+                # frames from an empty stream; ADVICE r3 -- the oracle's
                 # range(0, ceil(len/chunk)) agrees)
                 n_chunks = (len(b) + chunk - 1) // chunk
                 for k in range(0, n_chunks, every_n):
@@ -412,7 +412,7 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     (strided byte selection == strided char selection on ascii
     payloads). Digest + size computed JVM-side on the binary
     output. NOTE: this oracle indexes CHARACTERS of `text` while the
-    engine strides BYTES of its utf-8 encoding — equivalent only on
+    engine strides BYTES of its utf-8 encoding -- equivalent only on
     an ASCII corpus (which the synthetic documents table is; the
     byte-true oracle pattern, hex-pair extraction over encode(text),
     is used by q_media_ahash / q_media_near_dup)."""
@@ -448,8 +448,8 @@ def q_media_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L5: frame sampling through the real row-expanding mapInPandas
     plumbing (every 3rd 64-byte chunk); digests JVM-side. At 100 TB
-    the frame explosion is map-only — no shuffle until a downstream
-    aggregate — and the blob column never leaves the stage."""
+    the frame explosion is map-only -- no shuffle until a downstream
+    aggregate -- and the blob column never leaves the stage."""
     frames = sample_media_frames(media_table(spark, sf_dir))
     return frames.select(
         "doc_id",
@@ -459,48 +459,48 @@ def q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Banding geometry for the 64-bit aHash: 8 bands × 8 bits. Pigeonhole
-# GUARANTEES recall for hamming ≤ 7 (7 differing bits cannot dirty all
-# 8 bands); 8–12 is probabilistic and property-tested ≥95% recall on
-# uniformly-scattered perturbations (test_multimodal.py) — real image
+# Banding geometry for the 64-bit aHash: 8 bands x 8 bits. Pigeonhole
+# GUARANTEES recall for hamming <= 7 (7 differing bits cannot dirty all
+# 8 bands); 8-12 is probabilistic and property-tested >=95% recall on
+# uniformly-scattered perturbations (test_multimodal.py) -- real image
 # edits cluster their differences, which banding catches even better.
-# (VERDICT r4 #4: the previous 4×16 geometry guaranteed only ≤3.)
+# (VERDICT r4 #4: the previous 4x16 geometry guaranteed only <=3.)
 AHASH_BANDS = 8
 AHASH_BAND_BITS = 8
 
 
 def ahash_fingerprints(media: DataFrame, *, fake: bool = True) -> DataFrame:
-    """(doc_id, media, ...) → (doc_id, ahash): 64-bit average-hash per
-    blob. Real aHash grayscales + resizes to 8×8 then thresholds each
+    """(doc_id, media, ...) -> (doc_id, ahash): 64-bit average-hash per
+    blob. Real aHash grayscales + resizes to 8x8 then thresholds each
     pixel against the mean; here the resize is the engine's fake-codec
     strided resample (the same mapInPandas slot a PIL grayscale+resize
     drops into), and the threshold/bit-packing runs JVM-side.
 
     Byte extraction is hex()+conv() directly on the BINARY column
     (ADVICE r4: the previous UTF-8 decode round-trip silently
-    diverged on non-ASCII payloads — multibyte sequences split by the
+    diverged on non-ASCII payloads -- multibyte sequences split by the
     strided resample decode to U+FFFD; this path is byte-true for any
     blob). The mean is hoisted via aggregate()'s finish lambda: the
     fold result (byte sum) binds ONCE and each bit compares
-    `x*64 > sum` — the integer-exact form of `x > mean` — instead of
+    `x*64 > sum` -- the integer-exact form of `x > mean` -- instead of
     re-evaluating a 64-element aggregate per bit (VERDICT r4:
-    projection collapse had inlined mu → O(64²)/row).
+    projection collapse had inlined mu -> O(64^2)/row).
 
     ``fake=False`` routes the resize through the real codec slot
-    (PIL grayscale+resize, import-gated) — everything downstream of
+    (PIL grayscale+resize, import-gated) -- everything downstream of
     the kernel is identical either way, so the hash math is too.
 
-    r15 (guide §7.2 duplicated subtrees): the resize kernel now
+    r15 (guide sec 7.2 duplicated subtrees): the resize kernel now
     emits the 64 pixel VALUES as an int array instead of a binary
     blob the JVM re-parsed. The old hex()+conv()-per-byte extraction
     was an interpreted 64-element HOF that appeared TWICE in the
     projection (once under the byte-sum fold, once under the
-    threshold transform — HOF lambdas sit outside codegen's common-
+    threshold transform -- HOF lambdas sit outside codegen's common-
     subexpression elimination), so every blob was hex-decoded 128
     times per row. The kernel already holds the resampled numpy
     array; shipping ints is the same bytes, one Arrow column wider,
     zero extra passes. Measured (interleaved 6-cycle A/B, sf0.1):
-    q_media_ahash med 0.974 → 0.857 s; outputs bit-identical ×3 SFs
+    q_media_ahash med 0.974 -> 0.857 s; outputs bit-identical x3 SFs
     (the empty-blob filter moves into the kernel: empty sources
     yield no row, exactly the old length>0 filter)."""
     import numpy as np
@@ -536,7 +536,7 @@ def ahash_fingerprints(media: DataFrame, *, fake: bool = True) -> DataFrame:
 
     # codec work is the dominant per-row cost: widen single-split
     # scans to every core before the MapInPandas stage (no-op on
-    # multi-split 100 TB inputs — spread() gates on input files)
+    # multi-split 100 TB inputs -- spread() gates on input files)
     resized = (
         spread(media)
         .select("doc_id", "media")
@@ -598,7 +598,7 @@ def ahash_fingerprints(media: DataFrame, *, fake: bool = True) -> DataFrame:
 )
 def q_media_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L5 media dedup: aHash fingerprint per blob (see
-    ahash_fingerprints), shipped with its eight 8-bit bands — the
+    ahash_fingerprints), shipped with its eight 8-bit bands -- the
     SimHash banding trick applied to media: exact dedup groups by the
     full hash (`n_same_hash` counts the group inline); near-dup
     candidates block on any matching band and verify hamming inside
@@ -625,24 +625,24 @@ def q_media_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def media_near_dup_pairs(
     fp: DataFrame, max_hamming: int = 12, probe_bands: int = 2
 ) -> DataFrame:
-    """(doc_id, ahash) fingerprints → near-dup pairs: block on any of
-    the eight 8-bit bands — the first ``probe_bands`` of them probed
-    at radius 1 — then verify exact hamming ≤ max_hamming inside the
+    """(doc_id, ahash) fingerprints -> near-dup pairs: block on any of
+    the eight 8-bit bands -- the first ``probe_bands`` of them probed
+    at radius 1 -- then verify exact hamming <= max_hamming inside the
     candidate set.
 
     RADIUS-1 MULTI-PROBE on the first two bands (r10, VERDICT r9 #5):
     the probe side emits those bands' values plus their eight one-bit
-    variants, so a pair collides there when the band differs by ≤ 1
+    variants, so a pair collides there when the band differs by <= 1
     bit instead of 0. Exact recall math on the worst (uniform-spread)
-    perturbation profile — h dirty bits uniform over 64, miss iff
-    every band is dirty AND both probed bands have ≥ 2 dirty bits:
+    perturbation profile -- h dirty bits uniform over 64, miss iff
+    every band is dirty AND both probed bands have >= 2 dirty bits:
     P(miss) at h=10/11/12 = 0.14%/0.69%/1.99% (vs 4.4%/8.7%/14.3%
-    plain — the r9-measured 0.88 sf1 recall), so ≥ 98% recall at the
+    plain -- the r9-measured 0.88 sf1 recall), so >= 98% recall at the
     full advertised radius even with uniformly-scattered differences;
-    clustered real-image edits do better still, and h ≤ 7 stays
-    pigeonhole-lossless. Candidate cost is (8 + 2·8)/8 = 3× band
-    keys on the probe side ONLY — far from the guaranteed variant's
-    9×-both-sides (13.6× wall at sf1), and the fingerprint stage
+    clustered real-image edits do better still, and h <= 7 stays
+    pigeonhole-lossless. Candidate cost is (8 + 2*8)/8 = 3x band
+    keys on the probe side ONLY -- far from the guaranteed variant's
+    9x-both-sides (13.6x wall at sf1), and the fingerprint stage
     (the real cost) is untouched.
 
     Physical representation is PACKED INTEGERS, not bit arrays: band
@@ -653,20 +653,20 @@ def media_near_dup_pairs(
     long, never two 64-element arrays. Because the verify is ~free,
     it runs BEFORE the distinct (a pair re-verified once per shared
     band costs 2 instructions; shuffling every unverified candidate
-    into a distinct costs a 64-byte exchange row) — on any corpus the
+    into a distinct costs a 64-byte exchange row) -- on any corpus the
     overwhelming majority of band collisions fail the radius filter,
     so the exchange sees only true near-dups. Same final pair set
     either way (hamming is a function of the pair).
 
-    Candidate work is Σ|band-bucket|²: an 8-bit band has only 256
+    Candidate work is sum|band-bucket|^2: an 8-bit band has only 256
     values, so on a pathological corpus of uniformly-random hashes
-    buckets grow as N/256 per band — the price of the pigeonhole
+    buckets grow as N/256 per band -- the price of the pigeonhole
     recall guarantee (7 dirty bits cannot touch all 8 bands). Real
     media corpora cluster their hashes (near-identical images, flat
     frames), concentrating bucket mass on true duplicate groups.
 
     The caller is responsible for materializing `fp` (persist /
-    checkpoint) — Catalyst does NOT reuse the fingerprint subtree
+    checkpoint) -- Catalyst does NOT reuse the fingerprint subtree
     across the aliased self-join sides, and the codec/resize stage is
     the dominant cost of any real media pipeline (VERDICT r4 #1; same
     lesson as dedup.py's persisted shingle postings)."""
@@ -687,8 +687,8 @@ def media_near_dup_pairs(
         ).alias("band_idx", "band"),
     )
     # probe side: first `probe_bands` bands also emit their radius-1
-    # variants (band XOR 2^j); x-variant == y-exact ⟺ the bands
-    # differ by ≤ 1 bit. Build side stays single-key, so candidate
+    # variants (band XOR 2^j); x-variant == y-exact <=> the bands
+    # differ by <= 1 bit. Build side stays single-key, so candidate
     # growth is probe-side keys only.
     probe = banded.withColumn(
         "band",
@@ -733,16 +733,16 @@ def media_near_dup_pairs_guaranteed(
     """Multi-probe variant of media_near_dup_pairs with a RECALL
     GUARANTEE covering the full advertised radius: the probe side
     emits, per band, the band value plus its eight radius-1 variants
-    (band XOR 2^i), so a pair collides iff SOME band differs by ≤1
-    bit. Pigeonhole: 8 bands × 2 = 16 > 15, so every pair at hamming
-    ≤ 15 ≥ max_hamming=12 is guaranteed a collision — banding becomes
+    (band XOR 2^i), so a pair collides iff SOME band differs by <=1
+    bit. Pigeonhole: 8 bands x 2 = 16 > 15, so every pair at hamming
+    <= 15 >= max_hamming=12 is guaranteed a collision -- banding becomes
     semantically invisible and the result EQUALS exact all-pairs
-    hamming ≤ 12 (which is why q_media_near_dup_guaranteed can carry
+    hamming <= 12 (which is why q_media_near_dup_guaranteed can carry
     a brute-force oracle that knows nothing about bands).
 
-    Cost vs the probabilistic path: 9× probe keys (72/doc) and ~9×
+    Cost vs the probabilistic path: 9x probe keys (72/doc) and ~9x
     band-collision candidates on a worst-case uniformly-random
-    corpus — the classic multi-index-hashing trade (Norouzi et al.):
+    corpus -- the classic multi-index-hashing trade (Norouzi et al.):
     probes buy guarantee. The verify stays two bit_count instructions,
     so candidates are cheap; pick this path when a missed duplicate
     costs more than the probe fan-out (e.g. copyright/compliance
@@ -826,12 +826,12 @@ def media_near_dup_pairs_guaranteed(
 )
 def q_media_near_dup_guaranteed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L5 media near-dup, guaranteed-recall mode: radius-1 multi-probe
-    banding whose result PROVABLY equals exact all-pairs hamming ≤ 12
-    (see media_near_dup_pairs_guaranteed) — and the oracle is exactly
+    banding whose result PROVABLY equals exact all-pairs hamming <= 12
+    (see media_near_dup_pairs_guaranteed) -- and the oracle is exactly
     that: a brute-force all-pairs join that knows nothing about bands,
     so the hash check verifies the guarantee itself, not just an
     agreed approximation. The engine side still never goes all-pairs:
-    candidate work is Σ|probe-bucket| collisions, 9× the probabilistic
+    candidate work is sum|probe-bucket| collisions, 9x the probabilistic
     path's keys."""
     fp = track(ahash_fingerprints(media_table(spark, sf_dir)).persist())
     return media_near_dup_pairs_guaranteed(fp)
@@ -897,36 +897,36 @@ def q_media_near_dup_guaranteed(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_media_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L5 media near-dup pairs over the documents-backed media table.
-    Recall is GUARANTEED to hamming ≤ 7 (pigeonhole over 8 bands of
+    Recall is GUARANTEED to hamming <= 7 (pigeonhole over 8 bands of
     8 bits: 7 differing bits cannot dirty all 8 bands) and, with the
-    r10 radius-1 multi-probe on the first two bands, ≥ 98% by exact
-    combinatorics across the advertised 4–12 radius even for
-    uniformly-scattered perturbations (the worst profile — see
-    media_near_dup_pairs; property-tested in test_multimodal.py) —
+    r10 radius-1 multi-probe on the first two bands, >= 98% by exact
+    combinatorics across the advertised 4-12 radius even for
+    uniformly-scattered perturbations (the worst profile -- see
+    media_near_dup_pairs; property-tested in test_multimodal.py) --
     real image edits (crop edge, watermark, re-encode artifact)
     cluster their differences, which banding catches better still.
 
     The fingerprint frame is PERSISTED before the band self-join so
-    the codec/resize MapInPandas stage physically runs ONCE — without
+    the codec/resize MapInPandas stage physically runs ONCE -- without
     it Catalyst plans two full fingerprint subtrees, one per aliased
     join side (VERDICT r4: the double decode was the slowest bench
-    query). The persisted frame is (doc_id, 64-char string) — tiny
+    query). The persisted frame is (doc_id, 64-char string) -- tiny
     relative to the blobs it summarizes.
 
     On THIS corpus the result is deliberately empty: synthetic word
     soup gives near-uniform 64-bit hashes (pairwise hamming ~32), so
-    zero pairs pass — verified empty-vs-empty against the oracle; the
+    zero pairs pass -- verified empty-vs-empty against the oracle; the
     recall property test pins non-empty behavior on actual perturbed
     duplicates.
 
     Recall history: r9 measured 0.88 on sf1's Caesar-rotation twins
-    (uniformly-spread differences concentrated at hamming 8-12 —
-    P(no clean band) ≈ 14% at h=12 with plain banding). The r10
+    (uniformly-spread differences concentrated at hamming 8-12 --
+    P(no clean band) ~ 14% at h=12 with plain banding). The r10
     two-band radius-1 multi-probe cuts the worst-case miss to 2.0%
-    at h=12 (0.69% at h=11, 0.14% at h=10 — exact combinatorics in
-    media_near_dup_pairs) at 3× probe-side band keys; re-measured on
-    the same sf1 exact set ≥ 0.95 (scripts/sf1_quadratic_parity.py).
-    The ≤7 radius stays lossless by pigeonhole. When a recall SLA
+    at h=12 (0.69% at h=11, 0.14% at h=10 -- exact combinatorics in
+    media_near_dup_pairs) at 3x probe-side band keys; re-measured on
+    the same sf1 exact set >= 0.95 (scripts/sf1_quadratic_parity.py).
+    The <=7 radius stays lossless by pigeonhole. When a recall SLA
     must be EXACT over the full 12 radius, use
     q_media_near_dup_guaranteed."""
     fp = track(ahash_fingerprints(media_table(spark, sf_dir)).persist())

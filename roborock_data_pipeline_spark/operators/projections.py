@@ -1,9 +1,9 @@
-"""Projections, derived columns, scalar functions (SURVEY §2.B).
+"""Projections, derived columns, scalar functions (SURVEY sec 2.B).
 
 Everything the reference does per-record in Python (`to_row()`
 serialization, unit conversion, enum normalization, null-coalescing,
-casts) is expressed here as native column expressions — zero Python
-UDFs, so all of it stays inside whole-stage codegen (§2.J goal).
+casts) is expressed here as native column expressions -- zero Python
+UDFs, so all of it stays inside whole-stage codegen (sec 2.J goal).
 """
 
 from __future__ import annotations
@@ -27,7 +27,7 @@ from roborock_data_pipeline_spark.sources.tables import load
     """,
 )
 def q_project_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P1/P7: fixed-order column projection with renames + casts — the
+    """P1/P7: fixed-order column projection with renames + casts -- the
     `to_row()` serialization of each reference dataclass
     (roborock_collector.py:33-47 etc.), done declaratively so Catalyst
     prunes the scan to exactly these columns."""
@@ -51,8 +51,8 @@ def q_project_rename(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_unit_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P2/P3: unit conversions cm²→m² (`round(area/10000, 2)`,
-    roborock_collector.py:332,384,487-488) and s→min
+    """P2/P3: unit conversions cm^2->m^2 (`round(area/10000, 2)`,
+    roborock_collector.py:332,384,487-488) and s->min
     (`round(dur/60, 1)`, :480-481)."""
     ev = load(spark, sf_dir, "events")
     return ev.select(
@@ -73,7 +73,7 @@ def q_unit_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_case_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P4: categorical normalization — the reference stringifies enums
+    """P4: categorical normalization -- the reference stringifies enums
     (`.name` if enum else `str(x)`, roborock_collector.py:308-325,
     491-503) at six sites; declaratively that's a CASE expression."""
     ev = load(spark, sf_dir, "events")
@@ -129,7 +129,7 @@ def q_null_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P9 (EXT): JSON field extraction from a string column — the
+    """P9 (EXT): JSON field extraction from a string column -- the
     reference's only JSON is its state file (state_manager.py:24-38);
     the engine does it as a column op, JVM-side."""
     ev = load(spark, sf_dir, "events")
@@ -151,7 +151,7 @@ def q_json_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_timestamp_format(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P6/P8: ISO-8601 timestamp formatting + display truncation
     (`timestamp[:19]`, pipeline.py:56,70). Native timestamps end to
-    end; formatting only at the sink boundary (SURVEY §1.3)."""
+    end; formatting only at the sink boundary (SURVEY sec 1.3)."""
     ev = load(spark, sf_dir, "events")
     iso = F.date_format("ts", "yyyy-MM-dd'T'HH:mm:ss")
     return ev.select(

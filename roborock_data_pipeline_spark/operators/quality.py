@@ -1,4 +1,4 @@
-"""Training-data curation operators (SURVEY §2.K EXT).
+"""Training-data curation operators (SURVEY sec 2.K EXT).
 
 The quality ladder a 100 TB pretraining pipeline runs between raw
 scrape and tokenizer: repetition scoring (Gopher-style), stratified
@@ -8,7 +8,7 @@ and token-budget batch packing. All per-row work is JVM codegen
 posting join (inverted-index shaped, same as q_near_dup_jaccard) and
 the final small aggregates.
 
-Reference parity: the reference has no text corpus at all — this
+Reference parity: the reference has no text corpus at all -- this
 family is part of the EXT surface the brief mandates for LLM data
 pipelines, exercised on the driver's `documents` table.
 """
@@ -43,10 +43,10 @@ def q_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition signals: duplicate-word and
     duplicate-bigram fractions per document.
 
-    Pure per-row array math (split → array_distinct → size), no
-    explode and no shuffle — at 100 TB this is a map-only pass that
+    Pure per-row array math (split -> array_distinct -> size), no
+    explode and no shuffle -- at 100 TB this is a map-only pass that
     rides whatever scan partitioning the input has, and the filter
-    that consumes it (`dup_bigram_frac > θ`) fuses into the same
+    that consumes it (`dup_bigram_frac > theta`) fuses into the same
     WholeStageCodegen stage.
     """
     d = load(spark, sf_dir, "documents")
@@ -77,7 +77,7 @@ def q_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified deterministic sampling: downsample the dominant
-    language (en 1/16) harder than the tail (1/4) — the standard
+    language (en 1/16) harder than the tail (1/4) -- the standard
     rebalancing step before pretraining mixes.
 
     Content-hash thresholding (not rand()) keeps the sample identical
@@ -122,7 +122,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Inverted-index shape, not pairwise: explode each side to
     (shingle, doc) postings, distinct the train side, and equi-join
-    on the shingle — work is Σ postings, linear in corpus size, the
+    on the shingle -- work is sum postings, linear in corpus size, the
     same scale geometry as q_near_dup_jaccard. At 100 TB the join
     key would be xxhash64(shingle) (8-byte shuffle rows) and the
     train-side distinct posting list is built once and reused across
@@ -132,7 +132,7 @@ def q_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load(spark, sf_dir, "documents"))
     toks = tokens(F.col("text"))
     # persist: both join sides (test postings, train distinct) read
-    # this relation — without it the corpus is scanned and re-shingled
+    # this relation -- without it the corpus is scanned and re-shingled
     # twice (no exchange reuse across the filtered branches)
     sh = d.where(F.size(toks) >= 5).select(
         "doc_id",
@@ -180,7 +180,7 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The corpus is synthetic word-soup with no real PII, so the query
     first derives a contact line per document (deterministic from
-    doc_id) — the redaction then has non-trivial matches for the
+    doc_id) -- the redaction then has non-trivial matches for the
     oracle to verify (md5 of the redacted text proves byte parity).
     Patterns use only char classes so Java regex and RE2 agree.
     Map-only pass: regex_replace is codegen'd JVM work, no shuffle.
@@ -218,12 +218,12 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_token_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Length-bucket histogram (power-of-two token buckets) — the
+    """Length-bucket histogram (power-of-two token buckets) -- the
     sizing pass before sequence packing: how many docs and tokens
     land in each context-length class.
 
     Partial aggregation on a handful of bucket keys: map-side
-    combine collapses each scan partition to ≤~10 rows before the
+    combine collapses each scan partition to <=~10 rows before the
     exchange, so the shuffle is negligible at any scale.
     """
     d = load(spark, sf_dir, "documents")
@@ -272,8 +272,8 @@ def q_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Two distributed passes over one exploded posting table (persisted):
     (1) count bigram frequencies (map-side partial agg), (2) join each
-    doc's postings back to the counts — inverted-index shape, work
-    linear in Σ bigrams. At 100 TB the join key becomes
+    doc's postings back to the counts -- inverted-index shape, work
+    linear in sum bigrams. At 100 TB the join key becomes
     xxhash64(bigram) (8-byte shuffle rows) and the count table is
     heavy-hitter-truncated + broadcast; strings are kept here so the
     DuckDB oracle can verify exact semantics.
@@ -314,9 +314,9 @@ def q_global_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus) WITHOUT the single-partition global window.
 
     `ROW_NUMBER() OVER (ORDER BY doc_id)` with no PARTITION BY pulls
-    the whole table through one task — the classic scale-killer. The
+    the whole table through one task -- the classic scale-killer. The
     distributed form: (1) one tiny aggregate learns ~equi-depth
-    doc_id boundaries (percentile_approx — same statistics pass AQE
+    doc_id boundaries (percentile_approx -- same statistics pass AQE
     does); (2) each row gets a range-bucket from pure codegen
     comparisons; (3) per-bucket counts (B rows) turn into exclusive
     prefix offsets with a B-row window; (4) offsets broadcast-join
@@ -388,7 +388,7 @@ def q_boilerplate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     document into non-overlapping 5-token segments, mark segments
     that recur in >= 3 distinct documents (nav bars, footers, license
     headers at web scale), and score each document by its boilerplate
-    fraction — the pre-filter before paragraph-level dedup.
+    fraction -- the pre-filter before paragraph-level dedup.
 
     Inverted-index shape again: explode to (segment, doc) postings,
     count document frequency per segment with a map-side partial agg,
@@ -398,7 +398,7 @@ def q_boilerplate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     table, which measured ~20% faster than materializing the postings
     at sf0.1 (r4 isolated: 1.49 s vs 1.73 s min-of-4) and avoids
     caching a table larger than its input at 100 TB. The join-back is
-    unhinted — the frequent set's size scales with the corpus's
+    unhinted -- the frequent set's size scales with the corpus's
     boilerplate universe, so broadcast viability is AQE's runtime
     call, not a hint (the Q17 rule). At 100 TB the segment key
     becomes xxhash64(segment) (8-byte shuffle rows); strings are kept
@@ -476,15 +476,15 @@ def q_boilerplate_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Boilerplate REMOVAL — the rewrite step after
+    """Boilerplate REMOVAL -- the rewrite step after
     q_boilerplate_segments's detection: drop every 5-token segment
     that recurs in >= 3 distinct documents and reassemble each
     document's remaining segments IN ORDER (plus the <5-token tail
     the segmenter can't cover). This is the C4/RefinedWeb "remove
     repeated lines across the corpus" pass, order-preserving.
 
-    Same inverted-index skeleton as the detector — posting explode,
-    document-frequency count, tiny frequent set — but the join-back
+    Same inverted-index skeleton as the detector -- posting explode,
+    document-frequency count, tiny frequent set -- but the join-back
     is a LEFT ANTI (drop hits) and the reassembly is a sort-free
     collect: segments carry their position, array_sort on the
     (pos, seg) struct restores order INSIDE each group without a
@@ -508,9 +508,9 @@ def q_boilerplate_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NOT persisted (r15, PERSIST_AUDIT.json two-model re-audit with
     # alternating arm order + 5 no-persist control queries): the r14
     # cache measured as a WARM-model loss in both r15 runs
-    # (nopersist/persist 0.834 and 0.919 — recomputing the explode
+    # (nopersist/persist 0.834 and 0.919 -- recomputing the explode
     # beats paying cache build + memory for it) and cold-neutral
-    # (1.011/0.938 vs a ±17% cold control band). The r14 win was
+    # (1.011/0.938 vs a +-17% cold control band). The r14 win was
     # measured before the audit interleaved arms and alternated
     # order; today's evidence says drop it.
     e = base.where(F.col("nseg") >= 1).select(
@@ -581,13 +581,13 @@ _STOPWORDS = ["the", "and", "of", "a", "in", "to", "is"]
     """,
 )
 def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gopher-style rule-based quality gate (Rae et al. 2021, §A1.1):
+    """Gopher-style rule-based quality gate (Rae et al. 2021, sec A1.1):
     token-count bounds, mean-token-length window, alphabetic-token
     fraction, and stopword presence, combined into one pass/fail
     flag. The boolean gate is computed on the ROUNDED signals in both
     engines so float boundary noise can never flip it.
 
-    Pure per-row array math (split → HOF filter/aggregate), no
+    Pure per-row array math (split -> HOF filter/aggregate), no
     explode, no shuffle: at 100 TB this is a map-only codegen pass
     and the gate predicate fuses into the consuming filter stage.
     """
@@ -650,7 +650,7 @@ def q_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents are replicated rep times with a copy_id.
 
     Two tiny aggregates (per-language counts, then one global total)
-    broadcast back onto the corpus — the fact table never shuffles;
+    broadcast back onto the corpus -- the fact table never shuffles;
     replication is a codegen explode(sequence(1, rep)). CEIL (not
     ROUND) keeps the factor engine-portable: Spark HALF_UP vs Python
     banker's rounding can never disagree on a ceiling.
@@ -702,19 +702,19 @@ def q_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide top-20 tokens via SpaceSaving-style candidate
-    pruning + exact recount — the vocabulary/heavy-hitter pass of
+    pruning + exact recount -- the vocabulary/heavy-hitter pass of
     tokenizer training.
 
     A naive groupBy(token) shuffles one row per distinct token per
     scan partition; at web scale (billions of distinct tokens/URLs)
     that shuffle dwarfs the answer. Instead: (1) an Arrow-batched
     per-partition SpaceSaving sketch (mapInPandas, vectorized
-    value_counts) emits only each partition's top-M candidates —
+    value_counts) emits only each partition's top-M candidates --
     shuffle bounded at P x M rows regardless of vocabulary size; (2)
     the candidate set (<= P x M, deduped) broadcasts back for an
     exact recount, so reported counts are exact. A token is missed
     only if it is outside the top-M of EVERY partition, which bounds
-    its global count below P x (M-th local count) — with M >> k the
+    its global count below P x (M-th local count) -- with M >> k the
     standard SpaceSaving union guarantee; at test SF the vocabulary
     is far smaller than M, so the result is exactly the oracle's.
     The sketch phase is the sanctioned Arrow-batch pattern (same as
@@ -770,7 +770,7 @@ def q_batch_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     Offset chunking is the scalable stand-in for greedy bin packing:
     a prefix sum is one window pass, deterministic under retries, and
     at 100 TB it partitions by (lang, day) so no single window spans
-    the corpus — true greedy packing is inherently sequential and
+    the corpus -- true greedy packing is inherently sequential and
     does not distribute.
     """
     d = load(spark, sf_dir, "documents")
@@ -804,7 +804,7 @@ def q_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed reservoir sampling, k=5 per language, as bottom-k
     by uniform hash: ranking every row by md5(id) and keeping the k
     smallest IS a uniform k-sample, and unlike the classic
-    single-pass reservoir it is mergeable — each partition keeps its
+    single-pass reservoir it is mergeable -- each partition keeps its
     local bottom-k and the merge keeps the global bottom-k, which is
     exactly what Spark's partial TakeOrdered/window machinery does.
     Deterministic under retries (hash order, id tie-break), unlike
@@ -843,7 +843,7 @@ def q_reservoir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic train/val/test assignment (80/10/10) by Knuth
-    multiplicative hash of the document id — the split that stays
+    multiplicative hash of the document id -- the split that stays
     stable as the corpus grows (a doc's split never changes when new
     docs arrive, unlike percentile- or rand()-based splits) and needs
     no shuffle to assign: the hash is a map-side expression, and only
@@ -891,11 +891,11 @@ def q_train_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weighted reservoir sampling (Efraimidis–Spirakis A-Res): each
+    """Weighted reservoir sampling (Efraimidis-Spirakis A-Res): each
     doc draws key u^(1/w) from a deterministic uniform u (md5 of its
     id) with weight w = n_chars; the top-k keys per language are a
     without-replacement sample where inclusion probability scales
-    with document length — the standard long-document-upweighted
+    with document length -- the standard long-document-upweighted
     corpus draw.
 
     Same mergeable bottom/top-k scale shape as q_reservoir_sample
@@ -946,14 +946,14 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Unigram token entropy per document — the information-density
+    """Unigram token entropy per document -- the information-density
     quality signal between Gopher's ratio gates and the bigram-LM
     fluency score: near-zero entropy flags degenerate repetition
     (the same tokens over and over), entropy_norm ~1 flags
     every-token-unique word salad; natural text sits between.
 
     One explode + two keyed aggregates, both on doc_id (token counts
-    key on (doc_id, token) — a superset of doc_id, so the second
+    key on (doc_id, token) -- a superset of doc_id, so the second
     aggregate reuses the first exchange's co-location): map-side
     partial counts collapse repeated tokens before the shuffle, the
     entropy sum is pure codegen arithmetic, and normalization uses
@@ -1015,18 +1015,18 @@ def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_pareto_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nucleus-style coverage selection: per language, the smallest
     prefix of sources (by token volume, deterministic ties) that
-    reaches 90% of the language's tokens — the mix-analysis question
+    reaches 90% of the language's tokens -- the mix-analysis question
     ("which sources do we actually depend on?") and the top-p pattern
     applied to corpus composition. A source is kept iff the
     cumulative total BEFORE it is still under the threshold, so the
     boundary source that crosses 90% is included and selection is
     prefix-closed.
 
-    Two-level shape: the token sums aggregate to (lang × source)
-    cardinality FIRST — windows run over that tiny relation, never
+    Two-level shape: the token sums aggregate to (lang x source)
+    cardinality FIRST -- windows run over that tiny relation, never
     over documents. Both windows share the lang partition key (one
     exchange); the threshold compares integer token counts against
-    0.9·total computed from the SAME cumulative sum, so no float
+    0.9*total computed from the SAME cumulative sum, so no float
     boundary drift between engines."""
     d = load(spark, sf_dir, "documents")
     st = d.groupBy("lang", "source").agg(
@@ -1083,7 +1083,7 @@ _SOURCE_CAP_ORACLE = f"""
 
 @query("q_source_cap", oracle=_SOURCE_CAP_ORACLE)
 def q_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXT (curation ladder): per-source document cap — the domain
+    """EXT (curation ladder): per-source document cap -- the domain
     capping every web-corpus pipeline applies so no single domain
     dominates the training mix (the C4/Gopher "top-k per domain"
     rule). Keeps the best ``SOURCE_CAP`` docs per source by the
@@ -1094,7 +1094,7 @@ def q_source_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition). The exact row_number form here is right while
     per-source cardinality fits a partition; past that,
     ``source_cap_two_phase`` keeps the same semantics at 100 TB (see
-    below — VERDICT r5 #6 shipped it). AQE skew-join/partition
+    below -- VERDICT r5 #6 shipped it). AQE skew-join/partition
     splitting (pinned in test_skew) is the runtime backstop either
     way."""
     from roborock_data_pipeline_spark.operators.text import q_quality_score
@@ -1119,24 +1119,24 @@ def source_cap_two_phase(
     docs_quality: DataFrame, cap: int = SOURCE_CAP, grid: int = SOURCE_CAP_GRID
 ) -> DataFrame:
     """VERDICT r5 #6: the two-phase form of the per-source cap for
-    skewed domains — EXACTLY the q_source_cap result, without ever
+    skewed domains -- EXACTLY the q_source_cap result, without ever
     shuffling a whole mega-domain into one window partition.
 
     Phase 1 (approx quantile, broadcast): a fixed-width histogram of
     the quality scalar per source (``grid`` buckets over [0,1], one
     narrow partial-aggregated groupBy), cumulated top-down to find
-    each source's threshold bucket — the highest bucket at which at
-    least ``cap`` docs sit at-or-above. |sources| × 1 rows, broadcast.
+    each source's threshold bucket -- the highest bucket at which at
+    least ``cap`` docs sit at-or-above. |sources| x 1 rows, broadcast.
 
     Phase 2 (scan filter + boundary window): the corpus scan keeps
     only rows whose bucket >= the source's threshold (sources smaller
-    than the cap have no threshold row — kept wholesale via the null
+    than the cap have no threshold row -- kept wholesale via the null
     coalesce), and the exact row_number window runs on that sliver.
 
     Equivalence argument: every dropped row's bucket is strictly
     below the threshold bucket, so its quality is strictly below
     every kept row's of the same source (equal qualities share a
-    bucket) — ordering between kept rows is untouched and the top
+    bucket) -- ordering between kept rows is untouched and the top
     ``cap`` all sit at-or-above the threshold by construction, so the
     sliver's row_number equals the full window's for every surviving
     row. The sliver is ~cap + n/grid rows per source: a 10^9-doc
@@ -1176,7 +1176,7 @@ def source_cap_two_phase(
 @query("q_source_cap_two_phase", oracle=_SOURCE_CAP_ORACLE)
 def q_source_cap_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXT: the scale path of q_source_cap, oracle-checked against
-    the SAME exact-window SQL — the two-phase threshold + boundary
+    the SAME exact-window SQL -- the two-phase threshold + boundary
     window must reproduce the exact result row-for-row (equivalence
     argument in source_cap_two_phase)."""
     from roborock_data_pipeline_spark.operators.text import q_quality_score
@@ -1187,11 +1187,11 @@ def q_source_cap_two_phase(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # A shingle appearing in more documents than this is boilerplate, not
-# novelty — its contribution is 0 BY DEFINITION (nothing seen in >10k
+# novelty -- its contribution is 0 BY DEFINITION (nothing seen in >10k
 # docs is "new content"), and excluding it from the first-occurrence
 # table bounds the postings-join fan-out: without the cap a viral
-# boilerplate shingle (df ≫ 10⁴) back-fans every one of its
-# occurrences through the join — the same skew exposure the
+# boilerplate shingle (df >> 10^4) back-fans every one of its
+# occurrences through the join -- the same skew exposure the
 # boilerplate/contamination queries mitigate by df-thresholding
 # (VERDICT r11 "what's wrong #2"). The cap never binds at test SFs
 # (< 10k docs total); the K-semantics are encoded identically in the
@@ -1266,26 +1266,26 @@ def ngram_novelty(docs: DataFrame, df_cap: int = NOVELTY_DF_CAP) -> DataFrame:
     """,
 )
 def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L4+ (r11): per-document n-gram novelty — the fraction of a
+    """L4+ (r11): per-document n-gram novelty -- the fraction of a
     doc's distinct 3-shingles whose EARLIEST corpus occurrence (min
     doc_id, the ingest-order proxy) is the doc itself. The curation
     signal behind "how much new content does this doc add": ~0 for a
     late near-copy (winnow/minhash find the pair; novelty quantifies
-    the residue), ~1 for genuinely fresh text — the marginal-utility
+    the residue), ~1 for genuinely fresh text -- the marginal-utility
     ordering used for curriculum construction and incremental-corpus
     pruning (what RefinedWeb-style pipelines compute as "fraction of
     previously unseen n-grams").
 
     Plan shape (inverted index, like every shingle op here): one
     distinct-shingle explode, a min-groupBy over shingles (partial
-    agg — first-occurrence table is vocabulary-sized) with the
+    agg -- first-occurrence table is vocabulary-sized) with the
     NOVELTY_DF_CAP filter sitting UNDER the join (r12: a viral
-    boilerplate shingle cannot back-fan its df² occurrences — it is
+    boilerplate shingle cannot back-fan its df^2 occurrences -- it is
     dropped from the first-occurrence side, contributing 0 novelty by
     definition), a shingle-keyed postings LEFT join back (fan-out
     bounded by the cap), and a per-doc conditional-count agg. Linear
-    in Σ shingles; the shuffle carries (hash, doc_id) longs only —
+    in sum shingles; the shuffle carries (hash, doc_id) longs only --
     shingles are xxhash64'd for the join/groupBy identity (collision
-    odds ~|shingles|²/2⁶⁴, far below oracle resolution), exactly the
+    odds ~|shingles|^2/2^64, far below oracle resolution), exactly the
     q_near_dup_jaccard discipline."""
     return ngram_novelty(spread(load(spark, sf_dir, "documents")))

@@ -1,9 +1,9 @@
-"""Semi-structured (VARIANT) columns — Spark 4 native JSON handling.
+"""Semi-structured (VARIANT) columns -- Spark 4 native JSON handling.
 
 The reference stores device state as ad-hoc JSON (state file:
 src/state_manager.py:24-38) and the testdata carries a JSON string
 column (`events.props`). Round 1 extracted it with
-`get_json_object`/`from_json` (q_json_extract, q_map_extract) —
+`get_json_object`/`from_json` (q_json_extract, q_map_extract) --
 string re-parsing on every access. This module is the scale-correct
 form: parse ONCE into Spark 4's `VariantType` (a shredded binary
 encoding) and do typed path extraction with `variant_get`, which
@@ -42,11 +42,11 @@ def q_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     per event type, count / mean / max of `props.k` plus a
     threshold count.
 
-    `parse_json` → `variant_get(..., '$.k', 'int')` happens inside
+    `parse_json` -> `variant_get(..., '$.k', 'int')` happens inside
     whole-stage codegen (no Python, no schema inference pass); the
     aggregate is an ordinary partial+final hash agg on a 5-value
     key. On materialized variant columns the parse disappears
-    entirely and only the binary path-walk remains — the reason this
+    entirely and only the binary path-walk remains -- the reason this
     beats get_json_object at the 100 TB grain."""
     ev = load(spark, sf_dir, "events")
     k = F.variant_get(F.parse_json("props"), "$.k", "int")

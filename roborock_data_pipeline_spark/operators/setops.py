@@ -1,8 +1,8 @@
-"""Set operations (SURVEY §2.H).
+"""Set operations (SURVEY sec 2.H).
 
-The reference keeps two shapes of the same entity — live-captured
-Cleaning_History and device-memory Cleaning_Records (§1.2.1 vs
-§1.2.5) — in separate tables; the engine can merge them. Set ops are
+The reference keeps two shapes of the same entity -- live-captured
+Cleaning_History and device-memory Cleaning_Records (sec 1.2.1 vs
+sec 1.2.5) -- in separate tables; the engine can merge them. Set ops are
 plain shuffles on the full row; at scale prefer UNION ALL + a later
 group-by over UNION when duplicates are acceptable downstream.
 """
@@ -28,7 +28,7 @@ from roborock_data_pipeline_spark.sources.tables import load
 )
 def q_union_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """H (EXT): merge two overlapping projections of the same entity
-    with duplicate elimination — the Cleaning_History ∪
+    with duplicate elimination -- the Cleaning_History union
     Cleaning_Records merge."""
     ev = load(spark, sf_dir, "events")
     a = ev.where(F.col("event_type").isin("click", "view"))
@@ -46,7 +46,7 @@ def q_union_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """H (EXT): EXCEPT — devices that purchased and never errored."""
+    """H (EXT): EXCEPT -- devices that purchased and never errored."""
     ev = load(spark, sf_dir, "events")
     buyers = ev.where(F.col("event_type") == "purchase").select("user_id").distinct()
     errored = ev.where(F.col("event_type") == "error").select("user_id").distinct()
@@ -62,7 +62,7 @@ def q_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """H (EXT): INTERSECT — devices seen in both categories."""
+    """H (EXT): INTERSECT -- devices seen in both categories."""
     ev = load(spark, sf_dir, "events")
     a = ev.where(F.col("event_type") == "click").select("user_id").distinct()
     b = ev.where(F.col("event_type") == "signup").select("user_id").distinct()

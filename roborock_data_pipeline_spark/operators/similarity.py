@@ -1,9 +1,9 @@
-"""Similarity search over embeddings (SURVEY §2.K L3/P10 — EXT).
+"""Similarity search over embeddings (SURVEY sec 2.K L3/P10 -- EXT).
 
-Baseline: brute-force cosine top-k — a broadcast of the query vector
+Baseline: brute-force cosine top-k -- a broadcast of the query vector
 against a linear scan; the dot product runs in codegen via
 zip_with/aggregate (no Python). Scale paths: LSH bucketing (random
-hyperplanes → candidate buckets → exact rerank) and label-blocked
+hyperplanes -> candidate buckets -> exact rerank) and label-blocked
 all-pairs. At 100 TB the brute force is still embarrassingly
 parallel (scan + per-row math + TakeOrdered(k)), but LSH cuts the
 scan by the bucket selectivity.
@@ -43,24 +43,24 @@ N_SALTS = 8
 # Multi-probe banded sign-LSH for oversized blocks (r9, closing the
 # VERDICT r8 "weak" grade): N_BANDS independent sub-splits instead of
 # one similarity-oblivious hash split; _SIG_BITS caps the per-band
-# signature width (sub-splits up to 2**_SIG_BITS ways — blocks beyond
-# _SIG_BITS·cap members fall back to the hash backstop for the rest).
+# signature width (sub-splits up to 2**_SIG_BITS ways -- blocks beyond
+# _SIG_BITS*cap members fall back to the hash backstop for the rest).
 N_BANDS = 4
 _SIG_BITS = 6
 # Streaming form's fixed per-band signature width (no per-label
-# sizing is possible on a stream): 3 bits → per-band collide
-# probability (1-θ/π)^3 ≈ 0.63 at the cos ≥ 0.9 boundary, miss-all-4
-# ≈ 1.9%.
+# sizing is possible on a stream): 3 bits -> per-band collide
+# probability (1-theta/pi)^3 ~ 0.63 at the cos >= 0.9 boundary, miss-all-4
+# ~ 1.9%.
 _SIG_BITS_STREAM = 3
 
 # Driver-side regime telemetry (r10, VERDICT r9 next-round #8): the
 # last blocked_pairs plan decision, readable by warehouse_health /
-# `--mode health` so a 100 TB operator sees exact↔banded regime flips
-# without reading Spark plans. Driver-local by design — the decision
+# `--mode health` so a 100 TB operator sees exact<->banded regime flips
+# without reading Spark plans. Driver-local by design -- the decision
 # itself is made on the driver.
 #
 # r11 (ADVICE): last-call-wins alone misleads when one logical query
-# builds multiple plans — the accuracy gates call blocked_pairs twice
+# builds multiple plans -- the accuracy gates call blocked_pairs twice
 # (exact truth at cap=1e9, then the capped production form), so a
 # health poll could surface the truth run's "exact" regime as the
 # production query's. The record is now (a) thread-safe, (b) a
@@ -81,14 +81,14 @@ def _record_regime(**kw) -> None:
 
 
 def _lsh_projs(vec, n_bands: int, n_bits: int):
-    """All ``n_bands``·``n_bits`` sign-LSH hyperplane projections of
-    ``vec`` in ONE traversal (r10 — clears the BENCH_SCALE q_knn_join
-    17× flag, whose root cause was one independent zip_with+aggregate
+    """All ``n_bands``*``n_bits`` sign-LSH hyperplane projections of
+    ``vec`` in ONE traversal (r10 -- clears the BENCH_SCALE q_knn_join
+    17x flag, whose root cause was one independent zip_with+aggregate
     fold per (band, bit): 8 redundant 64-step vector walks per row at
     the sf1 shape). A single fold over zip(vec, index) carries a
     struct of running dot products, one field per (band, bit) slot;
     component j of plane (band, i) = xxhash64(band, i, j) mapped to
-    [-0.5, 0.5) — identical literal types, component values, and
+    [-0.5, 0.5) -- identical literal types, component values, and
     left-to-right add order as the per-band construction it replaces,
     so the packed signatures are bit-identical and every committed
     sf1 parity record stays valid."""
@@ -122,7 +122,7 @@ def _lsh_projs(vec, n_bands: int, n_bits: int):
 
 def _lsh_sig_from_projs(projs, band: int, n_bits: int):
     """Pack band ``band``'s ``n_bits`` sign bits out of a
-    materialized :func:`_lsh_projs` struct column — same bit layout
+    materialized :func:`_lsh_projs` struct column -- same bit layout
     as the retired per-band ``_lsh_sig`` (bit i set iff projection
     (band, i) > 0)."""
     bits = F.lit(0)
@@ -143,15 +143,15 @@ def _pair_join(
     """Salted self-join producing each qualifying unordered pair
     exactly once per (band, subblk, subsub) cell: probe side hashed
     to one of ``n_salts`` salts, build side replicated across all
-    salts — few distinct blocks can't cap join parallelism.
+    salts -- few distinct blocks can't cap join parallelism.
 
     With ``first_collision_bands`` = n_bands (the banded branch), the
     input rows carry every band's full cell key as arrays
     (``_subblks``/``_subsubs``) and the join adds the FIRST-COLLISION
     predicate: a pair forms in band r only if no earlier band's cell
     already matched. Each qualifying pair then appears EXACTLY ONCE
-    across all bands — replacing r9's 20M+-row (id1, id2) dedup
-    aggregate (and its duplicate cosine folds) with ≤ n_bands-1
+    across all bands -- replacing r9's 20M+-row (id1, id2) dedup
+    aggregate (and its duplicate cosine folds) with <= n_bands-1
     integer comparisons per candidate, the dominant overhead of the
     banded regime at sf1 (r10, clearing the BENCH_SCALE flag). It is
     also what makes the streaming form executable at all: no
@@ -160,7 +160,7 @@ def _pair_join(
     ``min_cos`` places the caller's cosine threshold INSIDE the join
     condition, AFTER the cheap conjuncts (r10): a ``.where`` on the
     returned frame is pushed by Catalyst through the projection into
-    the join condition — PREPENDED, so every enumerated candidate
+    the join condition -- PREPENDED, so every enumerated candidate
     (including the half failing ``vec_id <`` and every cross-band
     duplicate) paid the 64-step cosine fold before the cheap integer
     checks could short-circuit, and survivors paid it AGAIN in the
@@ -206,10 +206,10 @@ def _pair_join(
 
 
 # Largest cell the Arrow/BLAS pair kernel will materialize densely.
-# Honest peak per task (r10 review): TWO n×n float64 buffers coexist
-# (the accumulator and a reused scratch) plus the n×n bool mask —
+# Honest peak per task (r10 review): TWO nxn float64 buffers coexist
+# (the accumulator and a reused scratch) plus the nxn bool mask --
 # ~17 MB/task at the default cap (1024), ~71 MB at this bound. Kept
-# at 2× the default cap so a generic 4-8 GB executor running 8-16
+# at 2x the default cap so a generic 4-8 GB executor running 8-16
 # concurrent cells stays comfortably inside memory; callers with a
 # larger cap (the uncapped exact-truth runs in the accuracy gates
 # and parity scripts) take the join path, whose memory is O(1) per
@@ -222,29 +222,29 @@ def _cell_pairs_kernel(
 ):
     """applyInPandas kernel: all (id1 < id2, cos) pairs WITHIN one
     (label, band, subblk, subsub) cell via 64 vectorized rank-1
-    updates (r10 — the VERDICT r9 "one matrix multiply in the
+    updates (r10 -- the VERDICT r9 "one matrix multiply in the
     existing Arrow/BLAS kernel pattern" option; clears the BENCH_SCALE
     q_knn_join flag that per-pair HOF folds could not).
 
     BIT-PARITY with the join form is engineered, not hoped for: the
     accumulation runs ``acc += outer(A[:, j], A[:, j])`` for j
-    ascending — each acc[i, k] element receives EXACTLY the HOF
-    fold's IEEE-754 sequence ((0.0 + p_0) + p_1) + …, the same
-    float32→float64 casts, the same single nrm_i·nrm_k product in
-    the divisor — so cos values are identical to the last bit and
+    ascending -- each acc[i, k] element receives EXACTLY the HOF
+    fold's IEEE-754 sequence ((0.0 + p_0) + p_1) + ..., the same
+    float32->float64 casts, the same single nrm_i*nrm_k product in
+    the divisor -- so cos values are identical to the last bit and
     every DuckDB oracle / committed parity record is unaffected
     (verified pairwise on the test corpus; a deliberate np.dot/gemm
     would NOT be: pairwise summation reorders the adds).
 
-    Cost per cell: n ≤ cap rows → 64 rank-1 updates on an n×n
-    float64 buffer (2·64·n² flops, BLAS/SIMD) — at sf1's 545-row
+    Cost per cell: n <= cap rows -> 64 rank-1 updates on an nxn
+    float64 buffer (2*64*n^2 flops, BLAS/SIMD) -- at sf1's 545-row
     cells ~19 MFLOP, microseconds. The cell IS the parallel unit
     (bounded by cap + backstop), so no salting is needed; stragglers
     are impossible by construction."""
     import numpy as np
 
     def kernel(pdf):
-        import pandas as pd  # noqa: F811 — worker-side import
+        import pandas as pd  # noqa: F811 -- worker-side import
 
         n = len(pdf)
         if n < 2:
@@ -253,7 +253,7 @@ def _cell_pairs_kernel(
             )
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
         A = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-        # exactly two n×n float64 buffers live at once: `acc` and a
+        # exactly two nxn float64 buffers live at once: `acc` and a
         # reused scratch (`tmp` hosts each outer product, then the
         # nrm outer, and the divide lands back in `acc` in place)
         acc = np.zeros((n, n), dtype=np.float64)
@@ -293,7 +293,7 @@ def _cell_pairs(
     first_collision_bands: int,
     min_cos: float | None,
 ) -> DataFrame:
-    """Group the celled frame and run the pair kernel — the batch
+    """Group the celled frame and run the pair kernel -- the batch
     fast path of :func:`blocked_pairs` (join form retained for
     streaming and for caps beyond _KERNEL_MAX_CELL)."""
     return cells.groupBy("label", "band", "subblk", "subsub").applyInPandas(
@@ -312,7 +312,7 @@ def blocked_pairs(
     tag: str | None = None,
 ) -> DataFrame:
     """All within-block unordered vector pairs (id1 < id2) with their
-    raw cosine — the shared engine behind q_embedding_near_dup and
+    raw cosine -- the shared engine behind q_embedding_near_dup and
     q_knn_join. Input needs (vec_id, label, embedding).
 
     Scale shape (the guards a 100 TB corpus needs):
@@ -320,61 +320,61 @@ def blocked_pairs(
     0. ARROW/BLAS PAIR KERNEL (r10, the batch fast path): cells are
        cap-bounded, so each (label, band, subblk, subsub) cell is ONE
        applyInPandas group computing its dense pair-cosine matrix via
-       64 vectorized rank-1 updates — bit-identical to the join
+       64 vectorized rank-1 updates -- bit-identical to the join
        form's HOF fold by construction (see :func:`_cell_pairs_kernel`)
-       and 2.3× faster at sf1 (13.1 s → 5.8 s). The cell is the
+       and 2.3x faster at sf1 (13.1 s -> 5.8 s). The cell is the
        parallel unit; per-cell work is bounded by the cap, so no
        salting and no stragglers. The join form below remains for
        streaming inputs and for caps beyond _KERNEL_MAX_CELL
        (uncapped exact-truth runs need O(1) memory per candidate).
-    1. SALTED block self-join (join form) — few distinct labels would
+    1. SALTED block self-join (join form) -- few distinct labels would
        cap join parallelism and straggle; probe side hashed to one of
        ``n_salts`` salts, build side replicated across all salts, so
        each qualifying pair meets exactly once while every block
        spreads over ``n_salts`` tasks (see :func:`_pair_join`).
-    2. BLOCK-POPULATION CAP, recall-preserving (r9) — salting fixes
-       parallelism but not pair *count*, which is O(|block|²). A
-       driver-side regime probe (max block population — one number,
+    2. BLOCK-POPULATION CAP, recall-preserving (r9) -- salting fixes
+       parallelism but not pair *count*, which is O(|block|^2). A
+       driver-side regime probe (max block population -- one number,
        via a label-only pruned scan) keeps the banded machinery OUT
-       of the plan entirely when no block overflows: blocks ≤ ``cap``
-       take the exact path — the complete all-pairs semantics, the
+       of the plan entirely when no block overflows: blocks <= ``cap``
+       take the exact path -- the complete all-pairs semantics, the
        pre-r9 plan shape (which is why the oracle checks stay green
        at every test SF with the default cap). A block larger than ``cap`` is
        sub-split GEOMETRY-AWARE instead of by vec_id hash: each member
        emits into ``n_bands`` independent bands, band r's sub-block
        key = the low ceil(log2(ceil(n/cap))) bits of a sign-LSH
        signature under band-r hyperplanes, and pairs form within a
-       (band, sub-block). A pair at angle θ collides per band with
-       prob (1-θ/π)^bits, so a true near-dup pair (cos ≥ 0.9 →
-       θ/π ≤ 0.144) is missed by ALL bands with prob ≤ (1-(1-θ/π)^
-       bits)^n_bands — at the sf1 shape (g=3 → 2 bits, 4 bands) that
-       is ≤ 0.5% at the 0.9 boundary and ~1e-9 for the generator's
-       cos≈1 twins, vs the old hash split's guaranteed (g-1)/g ≈ 67%
+       (band, sub-block). A pair at angle theta collides per band with
+       prob (1-theta/pi)^bits, so a true near-dup pair (cos >= 0.9 ->
+       theta/pi <= 0.144) is missed by ALL bands with prob <= (1-(1-theta/pi)^
+       bits)^n_bands -- at the sf1 shape (g=3 -> 2 bits, 4 bands) that
+       is <= 0.5% at the 0.9 boundary and ~1e-9 for the generator's
+       cos~1 twins, vs the old hash split's guaranteed (g-1)/g ~ 67%
        forfeit. Cross-band duplicates are eliminated at the JOIN by
-       the first-collision predicate (r10 — each row carries every
+       the first-collision predicate (r10 -- each row carries every
        band's full cell key; a pair forms only in its first colliding
        band, see :func:`_pair_join`), replacing r9's 20M+-row
-       (id1, id2) dedup aggregate and its duplicate cosine folds —
+       (id1, id2) dedup aggregate and its duplicate cosine folds --
        the overhead that kept q_knn_join over the sf1 scale envelope.
-       Cost bound: expected per-band bucket ≈ cap, so candidate
-       volume ≤ n_bands·cap·|block| — the old bound times a constant
-       — and a HASH BACKSTOP re-splits any LSH bucket that still
+       Cost bound: expected per-band bucket ~ cap, so candidate
+       volume <= n_bands*cap*|block| -- the old bound times a constant
+       -- and a HASH BACKSTOP re-splits any LSH bucket that still
        exceeds ``cap`` (a mega-clique of mutually-near vectors lands
        in one bucket in every band), so the hard bound survives
        adversarial geometry. When the backstop engages, recall
-       degrades gracefully — and q_semantic_dedup_check /
+       degrades gracefully -- and q_semantic_dedup_check /
        q_knn_join_check (operators/accuracy.py) measure exactly that
        cap-engaged regime, at GATE_CAP per-round and at the
        production cap on sf1 (scripts/sf1_gate_run.py).
 
     The per-label size lookup is one tiny aggregate (rows = distinct
-    labels, i.e. cluster count — index metadata) broadcast back onto
+    labels, i.e. cluster count -- index metadata) broadcast back onto
     the scan; the per-bucket backstop lookup (oversized branch only)
-    is the same pattern at (labels·bands·2^bits) rows. The slim
+    is the same pattern at (labels*bands*2^bits) rows. The slim
     projection is NOT persisted: the size aggregate and both join
     sides rebuild it from the column-pruned scan, which measured ~30%
     faster than caching at sf0.1 (r4 isolated min-of-3: 0.78 s vs
-    0.93 s) — and at 100 TB persisting a corpus-wide projection is
+    0.93 s) -- and at 100 TB persisting a corpus-wide projection is
     not an option anyway; cheap rebuilds from pruned scans are the
     scale posture."""
     e = (
@@ -387,27 +387,27 @@ def blocked_pairs(
         # the kernel's groupBy but never under the join's null-unsafe
         # label equality. Both classes are meaningless for cosine
         # blocking, so they are excluded here, upstream of either
-        # form — the pinned kernel↔join bit-equivalence now holds on
+        # form -- the pinned kernel<->join bit-equivalence now holds on
         # degenerate inputs too (tests/test_pair_kernel.py).
         .where(F.col("nrm") > 0)
         .where(F.col("label").isNotNull())
     )
     sizes = e.groupBy("label").agg(F.count("*").alias("_blk_n"))
 
-    # Regime probe (r9 bench fix): ONE driver-side number — the max
+    # Regime probe (r9 bench fix): ONE driver-side number -- the max
     # block population, index metadata of the same class as the IVF
-    # centroid count — decides whether the banded machinery enters
-    # the plan at all. Leaving it in unconditionally cost 2.2-2.7×
+    # centroid count -- decides whether the banded machinery enters
+    # the plan at all. Leaving it in unconditionally cost 2.2-2.7x
     # on every blocked query at sf0.1 (the empty oversized branch
     # still pays its 24-projection codegen + extra stages); the probe
     # is a label-only pruned scan, and below the cap the plan is the
     # exact pre-banding shape. The probe is EAGER and bakes the
-    # regime into the returned plan — a caller that holds the plan
+    # regime into the returned plan -- a caller that holds the plan
     # while the source GROWS past the cap must pass
     # ``force_banded=True`` to get the lazily-split union form whose
     # cap guard holds at every execution. A STREAMING input (where an
     # eager action is illegal and the source grows by definition)
-    # auto-selects that form — the footgun VERDICT r9 "missing #3"
+    # auto-selects that form -- the footgun VERDICT r9 "missing #3"
     # named is unreachable by construction (r10).
     if emb.isStreaming:
         force_banded = True
@@ -415,7 +415,7 @@ def blocked_pairs(
         0 if force_banded else sizes.agg(F.max("_blk_n")).first()[0] or 0
     )
     # batch cells are cap-bounded, so the Arrow/BLAS pair kernel
-    # applies whenever the dense n×n buffer stays small; the join
+    # applies whenever the dense nxn buffer stays small; the join
     # form remains for streaming (no applyInPandas re-grouping mid
     # plan) and for uncapped exact-truth runs (O(1) memory per
     # candidate at any block size)
@@ -442,7 +442,7 @@ def blocked_pairs(
     if emb.isStreaming:
         # STREAMING form: every data-dependent knob (per-label bits,
         # backstop moduli) is an aggregate over the stream, which a
-        # single continuous plan cannot consume — so the split is
+        # single continuous plan cannot consume -- so the split is
         # FIXED-WIDTH: n_bands bands of _SIG_BITS_STREAM bits, no
         # backstop (subsub = 0), no exact small-block branch. Recall
         # at the 0.9 boundary: per band P(collide) = (1 - theta/pi)^3
@@ -455,9 +455,9 @@ def blocked_pairs(
         #
         # STATE CAVEAT (r10 review): a stream-stream inner self-join
         # without a watermark retains every input row in the join
-        # state store for the life of the query (×bands ×salt
+        # state store for the life of the query (xbands xsalt
         # replicas). This form is therefore for BOUNDED probe
-        # streams — a finite backfill, a windowed replay — not an
+        # streams -- a finite backfill, a windowed replay -- not an
         # unbounded production feed; the unbounded-feed pattern is
         # foreachBatch over the batch form against a persisted index
         # (operators/incremental_semdedup), which carries no join
@@ -528,8 +528,8 @@ def blocked_pairs(
     # oversized path: multi-probe banded LSH sub-split + hash backstop.
     # The regime probe already read the max block size, so only the
     # signature bits the LARGEST block needs are computed (the per-row
-    # pmod masks down further for smaller blocks) — at the sf1 shape
-    # (g=3 → 2 bits) that is 8 hyperplane folds per row, not 24.
+    # pmod masks down further for smaller blocks) -- at the sf1 shape
+    # (g=3 -> 2 bits) that is 8 hyperplane folds per row, not 24.
     max_bits = (
         _SIG_BITS  # sizes unknown ahead of execution: full width
         if force_banded
@@ -546,7 +546,7 @@ def blocked_pairs(
         F.lit(_SIG_BITS),
     )
     p2g = F.pow(F.lit(2.0), n_bits.cast("double")).cast("int")
-    # One fold computes every band's projections (r10 — the r9 shape
+    # One fold computes every band's projections (r10 -- the r9 shape
     # re-ran the full fold once per band x bit); materializing the
     # struct in its own projection keeps CollapseProject from inlining
     # the (non-cheap) fold into each of the n_bands signature uses.
@@ -564,11 +564,11 @@ def blocked_pairs(
         ),
     ).drop("_projs")
     # Backstop moduli per band, attached via n_bands tiny broadcast
-    # joins (bucket_sizes has <= labels * bands * 2^bits rows — index
+    # joins (bucket_sizes has <= labels * bands * 2^bits rows -- index
     # metadata): every row must know EVERY band's full cell key, not
     # just its exploded band's, so the first-collision predicate can
     # decide band ownership without the (id1, id2) dedup aggregate
-    # r9 paid (20M+-row shuffle at sf1 — the BENCH_SCALE flag).
+    # r9 paid (20M+-row shuffle at sf1 -- the BENCH_SCALE flag).
     ex = sigd.select("label", F.posexplode("_subblks").alias("band", "subblk"))
     bucket_sizes = ex.groupBy("label", "band", "subblk").agg(
         F.count("*").alias("_bkt_n")
@@ -591,7 +591,7 @@ def blocked_pairs(
     # band-seeded backstop: each band re-splits an oversized bucket
     # DIFFERENTLY, so even backstop-degraded recall compounds across
     # bands (1-(1-1/g)^n_bands) instead of collapsing to one shared
-    # 1/g split. Same hash inputs as r9 (int band, vec_id) — the
+    # 1/g split. Same hash inputs as r9 (int band, vec_id) -- the
     # committed sf1 parity records stay valid.
     subsubs = F.array(
         *[
@@ -659,7 +659,7 @@ def blocked_pairs(
     """,
 )
 def q_similarity_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L3: brute-force cosine top-k — query vector vs the corpus.
+    """L3: brute-force cosine top-k -- query vector vs the corpus.
 
     The query vector is a 1-row broadcast cross join; cosine is pure
     higher-order-function SQL (functions/arrays.py); the global top-k
@@ -713,10 +713,10 @@ def q_embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     `label` (the cluster id) so the self-join is per-block quadratic.
     The unblocked scale path is q_similarity_lsh.
 
-    Pair generation (salted block self-join + block-population cap —
+    Pair generation (salted block self-join + block-population cap --
     the two 100 TB guards) lives in :func:`blocked_pairs`; this query
     is just its cos >= 0.9 threshold view. Shuffle volume is
-    |corpus| + N_SALTS·|corpus| of slim normed rows, and AQE
+    |corpus| + N_SALTS*|corpus| of slim normed rows, and AQE
     skew-join splitting remains as the runtime backstop."""
     from roborock_data_pipeline_spark.sources.tables import spread
 
@@ -739,9 +739,9 @@ def q_similarity_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L3 (100 TB path): random-hyperplane LSH top-k with multi-probe.
 
     6 pseudo-random hyperplanes (deterministic: plane i's component j
-    = a hash of (i, j), centered) → 6-bit bucket signature → search
+    = a hash of (i, j), centered) -> 6-bit bucket signature -> search
     the query's bucket plus all buckets within hamming distance 2
-    (multi-probe: 22 of 64 buckets ≈ 34% of the corpus instead of a
+    (multi-probe: 22 of 64 buckets ~ 34% of the corpus instead of a
     full scan), exact cosine rerank inside the probed set. Recall vs
     the brute-force top-k is tested in tests/test_similarity.py."""
     emb = load(spark, sf_dir, "embeddings")
@@ -805,7 +805,7 @@ def _nearest(joined: DataFrame, vec_col: str, out: str, n: int) -> DataFrame:
 
 def build_ivf_index(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
     """IVF index build (one batch pass): centroids = per-cluster mean
-    vectors (posexplode → per-dimension avg → re-assemble); every
+    vectors (posexplode -> per-dimension avg -> re-assemble); every
     vector assigned to its nearest centroid via broadcast cross join.
     Returns (centroids, indexed) where indexed = emb + `cell`."""
     dims = emb.select("vec_id", "label", F.posexplode("embedding"))
@@ -846,9 +846,9 @@ def ivf_probe_indexed(
     """ANN query against the persisted IVF index.
 
     Centroid ranking touches only the metadata table (rows = number
-    of cells — the tiny collect is index metadata, like reading a
+    of cells -- the tiny collect is index metadata, like reading a
     file footer, not data); the vector scan then carries
-    `cell IN (probed)` which Catalyst turns into PartitionFilters —
+    `cell IN (probed)` which Catalyst turns into PartitionFilters --
     unprobed partitions are never listed or read. Exact cosine
     rerank + top-k inside the probed fraction."""
     qv = F.array(*[F.lit(float(x)) for x in query_vec])
@@ -878,39 +878,39 @@ def ivf_topk(
     emb: DataFrame, query_vec_id: int, k: int = TOP_K, nprobe: int = 2
 ) -> DataFrame:
     """IVF (inverted-file) ANN over an (vec_id, embedding, label)
-    DataFrame — the reusable operator behind q_similarity_ivf.
+    DataFrame -- the reusable operator behind q_similarity_ivf.
 
     Index build (one batch pass, incremental-friendly): centroids =
-    per-cluster mean vectors (posexplode → per-dimension avg →
+    per-cluster mean vectors (posexplode -> per-dimension avg ->
     re-assemble), every vector assigned to its nearest centroid via a
     broadcast cross join. Query: probe the nprobe nearest centroid
     cells and exact-rerank only their members (~nprobe/k_cells of the
-    corpus). Recall depends on data locality: ≈1.0 on clustered
+    corpus). Recall depends on data locality: ~1.0 on clustered
     corpora (tests/test_similarity.py proves this on a synthetic
     clustered set); on uniform-random vectors no partition-based ANN
-    beats the probed fraction — that is geometry, not implementation.
+    beats the probed fraction -- that is geometry, not implementation.
 
     At 100 TB the assignment table is written out partitioned by
-    centroid_id, so a probe reads only the probed partitions — that
+    centroid_id, so a probe reads only the probed partitions -- that
     persisted layout is write_ivf_index / ivf_probe_indexed below.
 
-    r15 restructure (guide §7.2 duplicated subtrees): the one-plan
+    r15 restructure (guide sec 7.2 duplicated subtrees): the one-plan
     form evaluated the whole centroid aggregation subtree TWICE (once
     under the corpus assignment, once under the probe selection) and
     ranked the probe cells with a second window chain. Centroids are
-    index METADATA (cells × d — the same k×d driver state kmeans_fit
+    index METADATA (cells x d -- the same kxd driver state kmeans_fit
     holds), so ONE job now collects them together with the probe
     vector, probe cells are ranked driver-side with bit-identical
     arithmetic (same as_double widening, same sequential fold order
     as functions.arrays.cosine, NaN-first on the descending sort like
     Spark), and the main job keeps the JVM broadcast-cross assignment
     but reads the centroids from a broadcast LocalRelation instead of
-    recomputing them. Results verified bit-identical ×3 SFs."""
+    recomputing them. Results verified bit-identical x3 SFs."""
     spark = emb.sparkSession
     cent_agg, _ = build_ivf_index(emb)
 
     # ONE metadata job: k centroid rows + the probe vector (tagged by
-    # a null centroid_id; as_double is the exact f32→f64 widening
+    # a null centroid_id; as_double is the exact f32->f64 widening
     # cosine() itself applies).
     rows = (
         cent_agg.select(
@@ -925,7 +925,11 @@ def ivf_topk(
         )
         .collect()
     )
-    qv = next(r["centroid"] for r in rows if r["centroid_id"] is None)
+    qv = next(
+        (r["centroid"] for r in rows if r["centroid_id"] is None), None
+    )
+    if qv is None:
+        raise ValueError(f"ivf_topk: no vector with vec_id {query_vec_id!r}")
     cents = [
         (int(r["centroid_id"]), list(r["centroid"]))
         for r in rows
@@ -946,7 +950,7 @@ def ivf_topk(
         denom = na ** 0.5 * nb ** 0.5
         try:
             return dot / denom
-        except ZeroDivisionError:  # JVM double: 0/0=NaN, x/0=±Inf
+        except ZeroDivisionError:  # JVM double: 0/0=NaN, x/0=+-Inf
             return float("nan") if dot == 0.0 else float(
                 "inf" if dot > 0 else "-inf"
             )
@@ -988,7 +992,7 @@ def ivf_topk(
 @query("q_similarity_ivf")  # no oracle: index assignment is engine-internal
 def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L3 (100 TB path, preferred): IVF ANN over the embeddings table
-    — see ivf_topk for the algorithm and scale notes."""
+    -- see ivf_topk for the algorithm and scale notes."""
     return ivf_topk(load(spark, sf_dir, "embeddings"), QUERY_VEC_ID)
 
 
@@ -1005,7 +1009,7 @@ def q_similarity_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P10: vector scalar math (norms / component sums) as
-    higher-order functions — the building block the similarity
+    higher-order functions -- the building block the similarity
     queries compose."""
     emb = load(spark, sf_dir, "embeddings")
     comp_sum = F.aggregate(
@@ -1027,19 +1031,19 @@ def brute_topk_pandas(
     k: int = TOP_K,
     exclude_vec_id: int | None = None,
 ) -> DataFrame:
-    """Arrow-batched numpy top-k — the sanctioned Python path for
+    """Arrow-batched numpy top-k -- the sanctioned Python path for
     numeric-heavy rerank stages (same policy slot as the multimodal
     decode: vectorized inside the batch, never per-row).
 
-    Each Arrow batch becomes ONE BLAS matmul (batch_rows × dims @
+    Each Arrow batch becomes ONE BLAS matmul (batch_rows x dims @
     dims), the practical throughput ceiling for Python-side math;
     every batch then prunes itself to its local top-k by
-    (cosine desc, vec_id asc) — a dropped row is strictly worse than
-    k kept rows, so the prune is lossless — and only those k-row
+    (cosine desc, vec_id asc) -- a dropped row is strictly worse than
+    k kept rows, so the prune is lossless -- and only those k-row
     heads reach the global TakeOrdered(k). Shipping k rows per batch
     instead of the batch itself is what keeps the exchange tiny at
     100 TB. Rounding happens JVM-side after the UDF (numpy rounds
-    half-even, SQL rounds half-away — mixing them breaks parity).
+    half-even, SQL rounds half-away -- mixing them breaks parity).
 
     Equality with the codegen-HOF q_similarity_search is pinned in
     tests/test_similarity.py."""
@@ -1107,13 +1111,13 @@ KNN_K = 3
     """,
 )
 def q_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L3+ (EXT): blocked k-NN join — every vector's top-3 cosine
+    """L3+ (EXT): blocked k-NN join -- every vector's top-3 cosine
     neighbors within its label block: the neighbor-graph build behind
-    SemDeDup-style semantic dedup (cluster → per-cluster NN → drop
+    SemDeDup-style semantic dedup (cluster -> per-cluster NN -> drop
     near-neighbors) and graph-based curation.
 
     Pair generation (salted block self-join + recall-preserving
-    block-population cap — the 100 TB guards) lives in
+    block-population cap -- the 100 TB guards) lives in
     :func:`blocked_pairs`; see :func:`knn_join` for the plan shape.
     Cap-engaged neighbor quality is gated by q_knn_join_check
     (operators/accuracy.py)."""
@@ -1126,7 +1130,7 @@ def knn_join(emb: DataFrame, cap: int = BLOCK_CAP, k: int = KNN_K) -> DataFrame:
     """Blocked k-NN join over (vec_id, label, embedding): each
     unordered pair's dot product is computed ONCE (blocked_pairs) and
     exploded into both directions, then one per-src window over the
-    pair list (|block|·k rows, never the corpus²). Cosine is rounded
+    pair list (|block|*k rows, never the corpus^2). Cosine is rounded
     to 6dp BEFORE ranking so the (cos, nbr_id) order is bit-stable
     across engines."""
     pairs = blocked_pairs(emb, cap=cap, tag="knn_join").select(
@@ -1180,12 +1184,12 @@ _NEAR_DUP_ORACLE = _registry._REGISTRY["q_embedding_near_dup"].oracle
 )
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2-embedding apply (SemDeDup): the deduplicated embedding
-    corpus — drop the higher-id member of every cosine>=0.9
+    corpus -- drop the higher-id member of every cosine>=0.9
     within-block pair (keep-lowest canonical rule), the
     cluster-then-dedup-within-cluster step of semantic dedup.
 
     The loser set is |pairs|-sized (tiny next to the corpus), so the
-    apply is a broadcast anti join — dedup becomes a scan-level
+    apply is a broadcast anti join -- dedup becomes a scan-level
     filter, exactly like q_dedup_apply on the text side."""
     losers = (
         q_embedding_near_dup(spark, sf_dir)
@@ -1199,22 +1203,22 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Product quantization (IVF-PQ's compression half; Jégou et al. 2011)
+# Product quantization (IVF-PQ's compression half; Jegou et al. 2011)
 
 PQ_M = 16      # subspaces (64-dim embeddings -> 16 x 4-dim subvectors)
 PQ_KSUB = 16   # codes per subspace codebook (4-bit codes, 8 B/vector)
 PQ_ITERS = 3
 # m=16/ksub=16 measured approximation ratio 0.82-0.86 across SFs vs
-# 0.59-0.61 at m=8 — finer subspaces beat more codes per subspace on
+# 0.59-0.61 at m=8 -- finer subspaces beat more codes per subspace on
 # this near-uniform geometry (same 64-bit code budget either way).
 
 
 def _pq_subspace_codes(x, s: int, d_sub: int, cents, half_norms):
-    """THE per-subspace encode rule (single definition — ADVICE r14:
+    """THE per-subspace encode rule (single definition -- ADVICE r14:
     the fused training kernel and the encoder must never diverge on
     the distance formula or tie-break): slice subspace ``s`` out of
     the batch matrix and argmin distance to its centroids as
-    ``argmax(<sub, c> - |c|^2/2)`` — one BLAS matmul per call,
+    ``argmax(<sub, c> - |c|^2/2)`` -- one BLAS matmul per call,
     first-max tie-break = lowest code, matching exact arithmetic.
     Returns (sub_view, codes)."""
     import numpy as np
@@ -1225,14 +1229,14 @@ def _pq_subspace_codes(x, s: int, d_sub: int, cents, half_norms):
 
 def _pq_codes_udf(codebook: list[list[list[float]]]):
     """Vectorized PQ encoder: codes array per embedding via one BLAS
-    matmul per subspace inside an Arrow batch — the same sanctioned
+    matmul per subspace inside an Arrow batch -- the same sanctioned
     Arrow/BLAS-kernel pattern as clustering.assign_clusters.
 
     A literal Catalyst expression was tried first and rejected by
     measurement: m*ksub*d_sub (=1,024) literal ops per row blows the
     JVM's 64 KB codegen method limit, falls back to interpreted
     per-row eval (~1 ms/row), and costs ~14 s of driver-side
-    analysis/compile per plan — the relational join form adds two
+    analysis/compile per plan -- the relational join form adds two
     n*m-row shuffles instead. The Arrow kernel is map-only (no
     shuffle, partitioning preserved); the argmin/tie rule is
     _pq_subspace_codes, shared with the training kernel."""
@@ -1264,19 +1268,19 @@ def pq_fit(
     """Train per-subspace codebooks with Lloyd iterations.
 
     Scale shape mirrors kmeans_fit: the ONLY driver state is the
-    codebook (m*ksub*d_sub floats — 1 KB here, index metadata at any
+    codebook (m*ksub*d_sub floats -- 1 KB here, index metadata at any
     corpus size), re-collected once per iteration to break lineage.
     Assignment is the Arrow/BLAS kernel (map-only, no join, no
-    shuffle — see _pq_codes_udf for why not a literal expression);
-    the update is one shuffle of (sub, code, dim) partial sums —
+    shuffle -- see _pq_codes_udf for why not a literal expression);
+    the update is one shuffle of (sub, code, dim) partial sums --
     bounded by m*ksub*d_sub*P rows, independent of corpus size.
     Codes that lose every member keep their previous centroid (no
     empty-cluster collapse).
 
-    Seeds: the ksub vectors with the smallest xxhash64(vec_id) — a
+    Seeds: the ksub vectors with the smallest xxhash64(vec_id) -- a
     deterministic pseudo-random sample, no RNG state. A caller that
     already holds those rows (pq_topk fetches them in the same job
-    as its probe vector — r15: one Spark job per fit saved) passes
+    as its probe vector -- r15: one Spark job per fit saved) passes
     them via ``seed_rows`` (ordered by (xxhash64(vec_id), vec_id))."""
     if seed_rows is None:
         seed_rows = (
@@ -1285,7 +1289,7 @@ def pq_fit(
             .limit(ksub)
             .collect()
         )
-    # d from the seed rows — a separate first() was one whole extra
+    # d from the seed rows -- a separate first() was one whole extra
     # Spark job per training call
     d = len(seed_rows[0]["embedding"])
     d_sub = d // m
@@ -1306,7 +1310,7 @@ def pq_fit(
         # rows before the mean aggregation. The encode kernel already
         # holds the batch and the subspace views, so it now emits ONE
         # (sub, code, count, sum-subvector) partial per populated
-        # code per task — the update aggregation input shrinks from
+        # code per task -- the update aggregation input shrinks from
         # n x d rows to tasks x m x ksub x d_sub, corpus-size-free.
         # float64 accumulation as before; codebooks verified
         # identical at sf0.001/0.01/0.1 against the exploded form.
@@ -1357,10 +1361,10 @@ def pq_topk(
     """PQ ANN: rank the corpus by asymmetric-distance (ADC) approximate
     cosine, return the top-k with their EXACT cosines.
 
-    Query plan after training: ONE map-only scan — codes come from
+    Query plan after training: ONE map-only scan -- codes come from
     the Arrow/BLAS encode kernel, the ADC score is a codegen
     expression (the distance lookup table is a literal m*ksub array
-    of partial dots, only m lambda terms — small), approximate cosine
+    of partial dots, only m lambda terms -- small), approximate cosine
     divides by the exact stored norm, and the top-k is
     TakeOrderedAndProject. Zero exchanges, zero joins (plan-pinned):
     at 100 TB this is the scan-speed ANN pass you run over stored
@@ -1369,7 +1373,7 @@ def pq_topk(
     candidates come out exact-scored for free (the rerank step of a
     real IVF-PQ)."""
     # ONE metadata job fetches the probe vector AND the training
-    # seeds (r15: they were two separate collects — each a whole
+    # seeds (r15: they were two separate collects -- each a whole
     # Spark job at the measured ~0.35 s fresh-plan/job floor). Both
     # subtrees stay scan-shaped at any scale: a pushed-down point
     # filter and a TakeOrdered over (xxhash64(vec_id), vec_id). The
@@ -1387,7 +1391,9 @@ def pq_topk(
         .limit(PQ_KSUB)
     )
     rows = probe.unionAll(seeds).collect()
-    q = next(r["embedding"] for r in rows if r["h"] is None)
+    q = next((r["embedding"] for r in rows if r["h"] is None), None)
+    if q is None:
+        raise ValueError(f"pq_topk: no vector with vec_id {query_vec_id!r}")
     seed_rows = sorted(
         (r for r in rows if r["h"] is not None),
         key=lambda r: (r["h"], r["vec_id"]),
@@ -1395,7 +1401,7 @@ def pq_topk(
     codebook = pq_fit(emb, seed_rows=seed_rows)
     d_sub = len(codebook[0][0])
     qn = sum(float(x) * float(x) for x in q) ** 0.5
-    # LUT[sub][code] = <q_sub, centroid> — driver-side metadata math
+    # LUT[sub][code] = <q_sub, centroid> -- driver-side metadata math
     lut = [
         [
             sum(
@@ -1437,7 +1443,7 @@ def pq_topk(
 
 @query("q_similarity_pq")  # no oracle: codebook training is engine-internal
 def q_similarity_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L3 (compressed-scan path): product-quantization ANN — see
+    """L3 (compressed-scan path): product-quantization ANN -- see
     pq_topk for the algorithm and the zero-exchange query plan;
     accuracy gated by q_similarity_pq_check."""
     return pq_topk(load(spark, sf_dir, "embeddings"), QUERY_VEC_ID)
@@ -1447,17 +1453,17 @@ def q_similarity_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
 # IVF-PQ: the two pieces composed into the production ANN layout
 
 def write_ivfpq_index(emb: DataFrame, index_dir: str) -> None:
-    """Persist the full IVF-PQ layout — the ANN index shape a 100 TB
+    """Persist the full IVF-PQ layout -- the ANN index shape a 100 TB
     corpus actually serves from:
 
     - vectors parquet-partitioned by IVF ``cell`` (probes are
       partition-pruned scans; unprobed cells are never listed),
     - each row carrying its PQ ``codes`` (8 B) and exact ``vnorm``
-      alongside the raw embedding — the ADC phase reads ONLY
+      alongside the raw embedding -- the ADC phase reads ONLY
       (vec_id, codes, vnorm) thanks to parquet column pruning; the
       raw vector column is touched just for the final rerank rows,
     - NESTED ``_centroids`` (IVF cell metadata) and ``_codebook``
-      (PQ subspace centroids) tables inside the index root — Spark's
+      (PQ subspace centroids) tables inside the index root -- Spark's
       parquet reader skips underscore-prefixed subdirs, so the vector
       scan never sees them, and the whole mutually-consistent index
       (vectors encoded WITH this codebook, assigned WITH these
@@ -1469,8 +1475,8 @@ def write_ivfpq_index(emb: DataFrame, index_dir: str) -> None:
     everything stages invisibly under the index root and THE commit is
     one verified ``_current.json`` pointer swap
     (sources/versioned_dir). The old index serves until that single
-    swap; a kill anywhere — including mid-publish, the window the old
-    two-rename swap left with NO index visible — leaves old-or-new,
+    swap; a kill anywhere -- including mid-publish, the window the old
+    two-rename swap left with NO index visible -- leaves old-or-new,
     never neither. Superseded versions get one publish of grace for
     in-flight probes."""
     import shutil
@@ -1486,8 +1492,8 @@ def write_ivfpq_index(emb: DataFrame, index_dir: str) -> None:
 
 
 def _ivfpq_live(index_dir: str) -> str:
-    """The live IVF-PQ data dir: pointer-resolved (or the legacy
-    pre-seam root). Raises for an absent/empty index."""
+    """The live IVF-PQ data dir: pointer-resolved. Raises for an
+    absent/empty index."""
     live = versioned_dir.resolve(index_dir)
     if live is None:
         raise FileNotFoundError(
@@ -1531,22 +1537,22 @@ def rebuild_ivfpq_index(
     spark: SparkSession, index_dir: str, emb: DataFrame | None = None
 ) -> int:
     """VERDICT r5 #7: offline codebook/centroid refresh for the
-    persisted IVF-PQ index — the retrain path the PQ family lacked
+    persisted IVF-PQ index -- the retrain path the PQ family lacked
     (rebuild_semantic_index covers only the plain IVF index; PQ
     codebooks drift as the corpus shifts, degrading ADC ranking until
     the approximation-ratio gate fails).
 
     Retrains IVF centroids AND per-subspace Lloyd codebooks from the
-    CURRENT vectors (``emb`` when the corpus moved — the common case
-    — else the index's own stored vectors), re-encodes every vector,
+    CURRENT vectors (``emb`` when the corpus moved -- the common case
+    -- else the index's own stored vectors), re-encodes every vector,
     and commits the complete new index with ONE pointer swap (r12 #1:
     vectors+centroids+codebook live under one version dir named by
     ``_current.json``), so a concurrent probe reads either the old
     consistent index or the new one, never codes from one generation
-    scored against the other's codebook — and a kill mid-rebuild
+    scored against the other's codebook -- and a kill mid-rebuild
     leaves the OLD index serving (the pre-seam two-rename swap had a
     window with no index visible at all). Post-rebuild the caller
-    re-runs the approximation-ratio gate (check_topk_quality — pinned
+    re-runs the approximation-ratio gate (check_topk_quality -- pinned
     in tests/test_similarity.py). Returns vectors republished."""
     if emb is None:
         emb = spark.read.parquet(_ivfpq_live(index_dir)).select(
@@ -1570,25 +1576,25 @@ def ivfpq_probe_indexed(
     exclude_vec_id: int | None = None,
 ) -> DataFrame:
     """ANN query against the persisted IVF-PQ index: partition-pruned
-    cell scan → ADC ranking over 8-byte codes → exact rerank of the
+    cell scan -> ADC ranking over 8-byte codes -> exact rerank of the
     top ``rerank`` candidates only.
 
     The three scale properties, in plan terms: (1) `cell IN (probed)`
-    becomes PartitionFilters — unprobed cells' files are never read;
+    becomes PartitionFilters -- unprobed cells' files are never read;
     (2) the ADC pass reads (vec_id, label, codes, vnorm), NOT the
-    embedding column (parquet column pruning — 8 B codes against
+    embedding column (parquet column pruning -- 8 B codes against
     256 B raw vectors is the scan-volume win); (3) the ``rerank``
-    surviving candidate ids come back to the driver (≤ rerank rows —
+    surviving candidate ids come back to the driver (<= rerank rows --
     query-endpoint traffic, like the probed-cell list) and are
-    inlined into the rerank scan as `vec_id IN (...)` — PushedFilters
+    inlined into the rerank scan as `vec_id IN (...)` -- PushedFilters
     on a within-cell-sorted layout skip the row groups that hold no
     candidate, so the raw vector column is decoded for candidate row
     groups only. Centroid/codebook reads are metadata (rows = cells,
-    m×ksub).
+    mxksub).
 
     The live version dir is resolved ONCE up front, so every read in
     the probe (centroids, codebook, ADC scan, rerank scan) comes from
-    the SAME index generation even if a rebuild commits mid-probe —
+    the SAME index generation even if a rebuild commits mid-probe --
     the superseded version keeps one publish of GC grace."""
     index_dir = _ivfpq_live(index_dir)
     cent = spark.read.parquet(os.path.join(index_dir, "_centroids"))

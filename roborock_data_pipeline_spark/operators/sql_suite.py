@@ -1,7 +1,7 @@
 """SQL-API surface: subqueries, grouping sets, pivot, percentiles,
 statistics, string functions, analytic windows.
 
-These queries are written as `spark.sql` over registered views —
+These queries are written as `spark.sql` over registered views --
 Catalyst produces the same plans as the DataFrame API, and the
 correlated-subquery forms showcase its decorrelation (a correlated
 scalar subquery becomes an aggregate + join, no per-row re-execution;
@@ -10,7 +10,7 @@ Python loops).
 
 Parity notes: Spark `percentile` (exact, interpolated) == DuckDB
 `quantile_cont`; corr/stddev/var match at 6 dp (verified at two SFs);
-`mode`/`min_by` are excluded from oracles — tie-breaking is
+`mode`/`min_by` are excluded from oracles -- tie-breaking is
 engine-defined.
 """
 
@@ -44,7 +44,7 @@ def _sql(spark: SparkSession, sf_dir: str, stmt: str) -> DataFrame:
 )
 def q_pivot_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot: one column per category (explicit value list so the
-    plan is a single pass — no dictionary-discovery job)."""
+    plan is a single pass -- no dictionary-discovery job)."""
     ev = load(spark, sf_dir, "events")
     return (
         ev.groupBy("user_id")
@@ -88,7 +88,7 @@ def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_subquery_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Correlated scalar subquery — orders at >2× their customer's
+    """Correlated scalar subquery -- orders at >2x their customer's
     average. Catalyst decorrelates into an aggregate + join (visible
     in the plan: no per-row subquery execution)."""
     return _sql(
@@ -114,7 +114,7 @@ def q_subquery_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_subquery_in(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IN-subquery → planned as a left-semi join."""
+    """IN-subquery -> planned as a left-semi join."""
     return _sql(
         spark,
         sf_dir,
@@ -139,7 +139,7 @@ def q_subquery_in(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles. At 100 TB switch to
-    percentile_approx (t-digest sketch, mergeable map-side) — same
+    percentile_approx (t-digest sketch, mergeable map-side) -- same
     query shape, bounded memory."""
     ev = load(spark, sf_dir, "events")
     return ev.groupBy("event_type").agg(
@@ -152,7 +152,7 @@ def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query("q_approx_percentiles")  # no oracle: sketch impls differ by engine
 def q_approx_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale path for q_percentiles: approx_percentile
-    (Greenwald-Khanna sketch — mergeable map-side, bounded memory),
+    (Greenwald-Khanna sketch -- mergeable map-side, bounded memory),
     the 100 TB replacement for exact interpolated percentiles whose
     sort-based evaluation doesn't scale. Rows-only driver check;
     tests/test_dedup.py-style accuracy bound asserted in
@@ -198,7 +198,7 @@ def q_corr_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width histogram via bucketed group-by (one pass,
-    partial-agg friendly — the scalable histogram)."""
+    partial-agg friendly -- the scalable histogram)."""
     ev = load(spark, sf_dir, "events")
     return ev.groupBy(
         F.floor(F.col("value") / 20).cast("long").alias("bucket")
@@ -222,7 +222,7 @@ def q_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """String scalar functions (P-family breadth): case, concat,
-    padding, regex replace — all codegen'd."""
+    padding, regex replace -- all codegen'd."""
     docs = load(spark, sf_dir, "documents")
     return docs.select(
         "doc_id",
@@ -282,7 +282,7 @@ def q_rank_dense(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Calendar part extraction + date arithmetic. Convention trap
     handled explicitly: Spark `dayofweek` is 1=Sunday while DuckDB
-    `isodow` is 1=Monday — the engine emits ISO day-of-week
+    `isodow` is 1=Monday -- the engine emits ISO day-of-week
     (`weekday()+1`) so downstream logic is engine-portable."""
     ev = load(spark, sf_dir, "events")
     return ev.select(
@@ -305,7 +305,7 @@ def q_date_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic ~1/8 sample via content hashing — unlike
+    """Deterministic ~1/8 sample via content hashing -- unlike
     `TABLESAMPLE`/`rand()`, the same rows are selected on every run,
     every engine, and every retry (resume-safe at 100 TB, and the
     predicate pushes to the scan)."""
@@ -325,7 +325,7 @@ def q_deterministic_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_map_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JSON-object → MapType column: parse once, then key/value ops
+    """JSON-object -> MapType column: parse once, then key/value ops
     are JVM-side collection functions (the engine's map-column
     surface; the reference's only map is its state dict)."""
     ev = load(spark, sf_dir, "events")
@@ -369,7 +369,7 @@ def q_array_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """lag/lead deltas — the declarative form of the reference's
+    """lag/lead deltas -- the declarative form of the reference's
     previous-vs-current comparisons (pipeline.py:141-159)."""
     from pyspark.sql import Window as W
 
@@ -395,7 +395,7 @@ def q_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_ntile_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution windows (ntile / percent_rank / cume_dist) — the
+    """Distribution windows (ntile / percent_rank / cume_dist) -- the
     quantile-bucketing surface BI layers expect. One shuffle on the
     partition key; the (value, event_id) tiebreak makes every rank
     deterministic so the oracle comparison is exact."""

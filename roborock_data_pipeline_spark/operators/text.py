@@ -1,6 +1,6 @@
-"""Text analysis (SURVEY §2.K L4 — north-star EXT).
+"""Text analysis (SURVEY sec 2.K L4 -- north-star EXT).
 
-Language-ID, quality scoring, token counting, fingerprint grouping —
+Language-ID, quality scoring, token counting, fingerprint grouping --
 all as JVM-side column expressions over the `documents` table. No
 Python UDFs: split/explode/array ops/regex all run in codegen, so
 these scale to a 100 TB corpus limited only by the (map-side
@@ -30,7 +30,7 @@ from roborock_data_pipeline_spark.sources.tables import load
     """,
 )
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L4: corpus statistics per language — the lang-distribution +
+    """L4: corpus statistics per language -- the lang-distribution +
     size profile a training-data pipeline reports first."""
     docs = load(spark, sf_dir, "documents")
     n_tok = F.size(tokens(F.col("text"))).cast("long")
@@ -54,7 +54,7 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_token_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L4: vocabulary frequency via explode + groupBy (min support 10
     to bound output). Partial aggregation collapses each partition's
-    token stream before the shuffle — the scalable word count."""
+    token stream before the shuffle -- the scalable word count."""
     docs = load(spark, sf_dir, "documents")
     return (
         docs.select(F.explode(tokens(F.col("text"))).alias("token"))
@@ -75,7 +75,7 @@ def q_token_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L4: per-doc token counting — whitespace and BPE-ish regex
+    """L4: per-doc token counting -- whitespace and BPE-ish regex
     (word/number/symbol classes). The token-budget accounting step of
     a training-data pipeline."""
     docs = load(spark, sf_dir, "documents")
@@ -105,7 +105,7 @@ def q_token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L4: heuristic quality score per document — length saturation +
+    """L4: heuristic quality score per document -- length saturation +
     type-token ratio (lexical diversity). The filterable scalar a
     pipeline thresholds on before training."""
     docs = load(spark, sf_dir, "documents")
@@ -151,11 +151,11 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L4 (EXT): corpus-derived language identification — build a
+    """L4 (EXT): corpus-derived language identification -- build a
     top-20-token profile per language, score each doc by profile
     hits, predict the argmax. Self-contained n-gram-style heuristic:
     no external model, two aggregation shuffles + one broadcast join
-    (the profile is lang×20 rows)."""
+    (the profile is langx20 rows)."""
     docs = load(spark, sf_dir, "documents")
     tok = docs.select(
         "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("token")
@@ -215,16 +215,16 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L4+: per-document top-3 terms by TF-IDF (smoothed IDF) — the
+    """L4+: per-document top-3 terms by TF-IDF (smoothed IDF) -- the
     classic salient-term extraction before indexing or keyword
     filtering.
 
-    One exploded token table (NOT persisted — r11 PERSIST_AUDIT:
-    caching it measured 0.41× slower at sf0.1 / 0.89× at sf1 than
+    One exploded token table (NOT persisted -- r11 PERSIST_AUDIT:
+    caching it measured 0.41x slower at sf0.1 / 0.89x at sf1 than
     rebuilding from the pruned scan) feeds two partial-aggregated
     groupBys; the
-    IDF table is term-keyed and joins back onto TF postings —
-    inverted-index shape, linear in Σ tokens. At 100 TB the IDF
+    IDF table is term-keyed and joins back onto TF postings --
+    inverted-index shape, linear in sum tokens. At 100 TB the IDF
     table for a bounded vocabulary broadcasts, making the score join
     map-only; the per-doc top-3 is a bounded window inside each
     doc's partition, never a global sort."""
@@ -269,7 +269,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_sentence_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sentence segmentation: split each document on '. ' boundaries
-    and emit (doc_id, sent_idx, sentence, n_words) — the unit-of-work
+    and emit (doc_id, sent_idx, sentence, n_words) -- the unit-of-work
     table for sentence-level dedup, quality scoring, or parallel-data
     mining. The split regex is deliberately lookbehind-free so the
     exact same pattern runs on any RE2-class engine.
@@ -323,18 +323,18 @@ CHUNK_S = 24
     """,
 )
 def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Overlapping token-window chunking (window 32, stride 24) —
+    """Overlapping token-window chunking (window 32, stride 24) --
     the context-length shaping step between curation and training:
-    every document becomes ≥1 chunks, and consecutive chunks share
-    W−S = 8 tokens of overlap so no span is ever split mid-context.
+    every document becomes >=1 chunks, and consecutive chunks share
+    W-S = 8 tokens of overlap so no span is ever split mid-context.
 
     Pure codegen: split once, explode the stride-spaced start
-    offsets (sequence), slice per start — the token array is built
+    offsets (sequence), slice per start -- the token array is built
     one time per document and shared by all its chunk slices, and
     the explode is map-side (no shuffle at all: chunking is
     embarrassingly parallel, output partitioning rides the input).
     At 100 TB this runs as a map-only stage writing straight to the
-    training-shard sink; chunk_ix is (start−1)/stride so chunk
+    training-shard sink; chunk_ix is (start-1)/stride so chunk
     identity is deterministic without a window function."""
     docs = load(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
@@ -347,7 +347,7 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).where(
         # drop a tail start the previous chunk fully contains: a
-        # later chunk must add ≥1 token beyond the shared overlap
+        # later chunk must add >=1 token beyond the shared overlap
         (F.col("start") == 1)
         | (F.col("start") + (CHUNK_W - CHUNK_S) <= F.size("toks"))
     )
@@ -385,21 +385,21 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise vocabulary Jaccard between ingest sources — the
+    """Pairwise vocabulary Jaccard between ingest sources -- the
     corpus-composition signal behind 'are these two feeds scraping
-    the same sites' (high overlap → dedup harder, diversity lower).
+    the same sites' (high overlap -> dedup harder, diversity lower).
 
     The DISTINCT (source, token) projection is the only pass over
     text; the pair join is an inverted-index join on token (each
-    token matches ≤|sources| rows — bounded fan-out, the same
-    postings shape as q_near_dup_jaccard, never documents²).
+    token matches <=|sources| rows -- bounded fan-out, the same
+    postings shape as q_near_dup_jaccard, never documents^2).
     Intersections and vocabulary sizes stay exact integers until the
     final division, so the Jaccard is bit-identical across engines
     with no rounding at all."""
     docs = load(spark, sf_dir, "documents")
     # NOT persisted (r11, PERSIST_AUDIT): the distinct projection ends
     # at a shuffle, so the pair join's second read reuses the shuffle
-    # files — caching measured no win at either SF
+    # files -- caching measured no win at either SF
     vocab = (
         docs.select("source", F.explode(F.split("text", " ")).alias("tok"))
         .distinct()
@@ -461,8 +461,8 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L1++/L4: winnowing document fingerprints (Schleimer et al.,
-    MOSS) — the rolling local-minimum fingerprint scheme: hash every
-    3-word shingle (md5 — portable across engines, unlike xxhash64),
+    MOSS) -- the rolling local-minimum fingerprint scheme: hash every
+    3-word shingle (md5 -- portable across engines, unlike xxhash64),
     slide a window of 4 consecutive shingle hashes, keep each
     window's minimum; the distinct minima are the document's
     fingerprint set (guaranteed match coverage for any shared run
@@ -471,14 +471,14 @@ def q_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark shape for 100 TB: shingle hashing is map-only (transform
     over the token array); the rolling minimum is ONE window over
     (doc_id, pos) and the fingerprint collapse is a groupBy on the
-    same doc_id key, so the sort-shuffle is paid once and reused —
+    same doc_id key, so the sort-shuffle is paid once and reused --
     never a per-window self-join. The digest column makes the whole
     set hash-comparable; the count feeds dedup-pair budgets.
 
     Rejected alternative (measured, not guessed): the oracle's
-    array-level shape — per-doc rolling min via
-    transform+array_min(slice(hs,...)) with no explode/sort at all —
-    is byte-identical but 5× SLOWER here (min-of-6: 10.0 s vs 1.9 s
+    array-level shape -- per-doc rolling min via
+    transform+array_min(slice(hs,...)) with no explode/sort at all --
+    is byte-identical but 5x SLOWER here (min-of-6: 10.0 s vs 1.9 s
     at sf0.1): higher-order-function lambdas evaluate interpreted
     (outside whole-stage codegen) and each window slices a fresh
     array, while the window MIN stays fully codegen'd. Map-only is
@@ -487,11 +487,11 @@ def q_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Two deliberate choices in this prologue:
     # - tokenize ONCE per row before the shingle hashing: split()
     #   inside a per-shingle expression would re-split the full text
-    #   per shingle (O(tokens²) per doc — measured 2x the whole
+    #   per shingle (O(tokens^2) per doc -- measured 2x the whole
     #   query's cost);
     # - repartition by doc_id BEFORE the heavy md5 hashing: the
     #   window below requires hash(doc_id) distribution anyway, so
-    #   this is the query's one exchange moved early — the shingle
+    #   this is the query's one exchange moved early -- the shingle
     #   hashing then runs on every core instead of inside the
     #   (possibly single-split) scan stage, and shuffles compact
     #   token arrays instead of exploded hash rows.
@@ -499,8 +499,8 @@ def q_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs.select("doc_id", F.split("text", " ").alias("w"))
         .repartition("doc_id")
     )
-    # Explode cheap shingle POSITIONS, then hash per exploded row —
-    # NOT explode(transform(..md5..)) (the r13 shape, measured 2.9×
+    # Explode cheap shingle POSITIONS, then hash per exploded row --
+    # NOT explode(transform(..md5..)) (the r13 shape, measured 2.9x
     # the query at sf0.1): with the hash array as the generator
     # input, InferFiltersFromGenerate pins a `size(<md5 transform>)
     # > 0` filter below the exchange that re-evaluates EVERY shingle
@@ -509,7 +509,7 @@ def q_winnow_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     # transform lambda itself evaluates interpreted, outside
     # whole-stage codegen. Hashing after the explode runs md5 once
     # per shingle as a plain codegen expression; the inferred filter
-    # degrades to size(sequence(..)) — token-count arithmetic.
+    # degrades to size(sequence(..)) -- token-count arithmetic.
     posed = tok.select(
         "doc_id",
         # n = |shingles| derived from the token count
@@ -582,7 +582,7 @@ _BM25_QUERY_TERMS = 3
     """,
 )
 def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L4+ (r10): BM25 relevance ranking — the lexical-retrieval
+    """L4+ (r10): BM25 relevance ranking -- the lexical-retrieval
     scorer a curation pipeline uses for contamination screens, seed
     expansion, and quality-by-query filtering (the retrieval half of
     every "find training docs like these benchmark questions" step).
@@ -591,14 +591,14 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines derive identical query terms.
 
     Plan shape: one exploded token table rebuilt from the pruned scan
-    per aggregate (NOT persisted — r11 PERSIST_AUDIT.json: caching it
+    per aggregate (NOT persisted -- r11 PERSIST_AUDIT.json: caching it
     measured no win and leaked corpus-wide postings into the caller's
     session; the PERSISTED form of this state is the real index,
     operators/incremental_bm25.py), the query-term table is LIMIT-3
     tiny and BROADCAST,
     the per-doc length joins on doc_id, corpus stats are a 1-row
-    broadcast cross join, and the final top-10 is TakeOrdered —
-    postings-shaped and linear in Σ tokens at 100 TB, like
+    broadcast cross join, and the final top-10 is TakeOrdered --
+    postings-shaped and linear in sum tokens at 100 TB, like
     q_tfidf_top_terms. Scores use the standard smoothed idf
     ln((N-df+0.5)/(df+0.5)+1), k1=1.2, b=0.75, rounded to 6dp before
     the (score, doc_id) order so ranking is bit-stable across

@@ -1,17 +1,17 @@
-"""Time-series analytics over the events stream (SURVEY §2 EXT).
+"""Time-series analytics over the events stream (SURVEY sec 2 EXT).
 
 The reference materializes one daily rollup (pipeline.py:151 tab
 `Daily_Summary`); real telemetry warehouses immediately ask the next
-two questions — "smooth the daily series" and "fill the days the
+two questions -- "smooth the daily series" and "fill the days the
 fleet was dark". Both are expressed as window functions over the
-*day-grain* table (tiny — one row per day per series), never over raw
+*day-grain* table (tiny -- one row per day per series), never over raw
 events, so the expensive part stays a single partial-aggregated
 shuffle of the fact table.
 
-Scale posture (100 TB): the day-grain table is O(days × series); the
+Scale posture (100 TB): the day-grain table is O(days x series); the
 global ORDER BY d windows here are per-series windows on a real
 deployment (partitionBy(series_key)), so no single-partition sort of
-the whole table ever happens. See SCALE.md §timeseries.
+the whole table ever happens. See SCALE.md sec timeseries.
 """
 
 from __future__ import annotations
@@ -42,7 +42,7 @@ SPARSE_MOD = 499
     """,
 )
 def q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """7-day rolling *median* of daily event value — the robust
+    """7-day rolling *median* of daily event value -- the robust
     smoother ops dashboards use where a rolling mean would chase one
     bad day.
 
@@ -112,11 +112,11 @@ def q_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear interpolation of a gappy daily series onto the full
-    date spine — the gap-repair step before any rolling-window or
+    date spine -- the gap-repair step before any rolling-window or
     forecasting consumer (which silently mis-window on missing days).
 
     Composition: date scaffold (sequence-explode, as q_date_scaffold)
-    ⟕ observed days, then two IGNORE NULLS window passes find the
+    left-join observed days, then two IGNORE NULLS window passes find the
     bracketing observations and the fill is a pure-codegen lerp.
     Edges clamp to the nearest observation. The windows run on the
     day-grain spine (O(days) rows); at scale they are per-series
@@ -184,16 +184,16 @@ def q_interpolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing 7-day distinct active users per day (WAU) — the
+    """Trailing 7-day distinct active users per day (WAU) -- the
     engagement curve every product dashboard starts from, and the
     canonical 'COUNT(DISTINCT) over a sliding window' problem SQL
     window frames cannot express directly.
 
     Scalable form: dedupe to (user, day) grain first (one shuffle
-    that collapses raw events ~per-user-daily-rate ×), then each
-    active-day row *fans out to the ≤7 window days it serves* —
+    that collapses raw events ~per-user-daily-rate x), then each
+    active-day row *fans out to the <=7 window days it serves* --
     map-side explode, no self-join of the spine against the fact
-    table (the oracle's join shape, quadratic in days×events). The
+    table (the oracle's join shape, quadratic in daysxevents). The
     distinct count then partial-aggregates on (window_day, user).
     At 100 TB the fanout input is the deduped user-day table, orders
     of magnitude smaller than events; for wider windows or when
@@ -237,17 +237,17 @@ EWMA_ALPHA = 0.3
 )
 def q_ewma_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TS: per-user exponentially-weighted moving average of event
-    values — the BATCH TWIN of streaming/anomaly.py's EWMA detector
+    values -- the BATCH TWIN of streaming/anomaly.py's EWMA detector
     (the same recurrence the GroupState carries across micro-batches,
     folded over history in one pass), giving that streaming path an
     oracle-checked reference like the other stream/batch twins.
 
     The fold is a codegen'd `aggregate` over the per-user ordered
-    value array, seeded with the FIRST value and folding the rest —
+    value array, seeded with the FIRST value and folding the rest --
     exactly DuckDB's list_reduce semantics, same left-to-right double
     arithmetic, so the engines agree bitwise. Scale: one exchange
     (groupBy user_id); per-user history must fit an array, which is
-    the same bound the sort-based window alternative has — for
+    the same bound the sort-based window alternative has -- for
     unbounded histories the streaming path IS the answer (state
     carries the accumulator; nothing re-folds)."""
     ev = load(spark, sf_dir, "events")
@@ -285,7 +285,7 @@ def q_ewma_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_weekday_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TS+ (r11): day-of-week seasonal profile — mean daily event
+    """TS+ (r11): day-of-week seasonal profile -- mean daily event
     volume per weekday and its share of the weekly total, the
     seasonal baseline an anomaly detector divides out before
     thresholding (the streaming EWMA detector's batch-side
@@ -293,7 +293,7 @@ def q_weekday_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan shape: one date-grain partial-agg over events (the only
     full-data pass), then a 7-row weekday aggregate; the share window
-    runs over those 7 rows — aggregate-over-aggregate, never a
+    runs over those 7 rows -- aggregate-over-aggregate, never a
     full-data window. Weekday key is Monday=0 in BOTH engines
     (Spark `weekday` == DuckDB `isodow - 1`; `dayofweek` differs
     between them and is avoided)."""

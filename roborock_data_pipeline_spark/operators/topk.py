@@ -1,13 +1,13 @@
-"""Sorts / limits / top-k (SURVEY §2.E).
+"""Sorts / limits / top-k (SURVEY sec 2.E).
 
 Spark plans global top-k as TakeOrderedAndProject: each partition
-keeps its local top-k, the driver merges k×partitions rows — no full
+keeps its local top-k, the driver merges kxpartitions rows -- no full
 sort, no full shuffle. That is exactly the scan-side limit pushdown
 the reference hand-rolls by slicing the id list before the N+1 detail
 fetch (roborock_collector.py:459-462).
 
-Determinism: `ts` can tie after µs truncation, so every ordering adds
-`event_id` as the tie-break — otherwise top-k membership is
+Determinism: `ts` can tie after us truncation, so every ordering adds
+`event_id` as the tie-break -- otherwise top-k membership is
 nondeterministic across engines and runs.
 """
 

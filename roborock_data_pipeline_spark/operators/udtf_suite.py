@@ -1,30 +1,30 @@
-"""Python UDTF surface (SURVEY §2.J — the table-function extension
+"""Python UDTF surface (SURVEY sec 2.J -- the table-function extension
 point).
 
 The engine's UDF story is: native expressions first, Arrow-batched
 Pandas kernels where Python is genuinely needed (multimodal codecs,
-BLAS assignment), and — this module — the **user-defined TABLE
-function** for row→rows expansion with per-row Python state, the one
+BLAS assignment), and -- this module -- the **user-defined TABLE
+function** for row->rows expansion with per-row Python state, the one
 Spark extension point the rest of the engine doesn't exercise. The
 reference has no UDTFs either; this is forward surface for engine
 users (VERDICT r3 #6).
 
 The demonstrator is a document sentence-splitter that tracks the
-running character offset of each sentence — the span bookkeeping is
+running character offset of each sentence -- the span bookkeeping is
 naturally stateful per input row (a running cursor), which is exactly
 the shape a UDTF expresses more directly than nested
 posexplode/aggregate gymnastics. It is registered via
 ``spark.udtf.register`` and consumed through a LATERAL join.
 
-Arrow note: the UDTF is declared ``useArrow=True`` — batches cross
+Arrow note: the UDTF is declared ``useArrow=True`` -- batches cross
 the JVM/Python boundary as Arrow record batches, same transfer plane
 as the engine's mapInPandas kernels. This stays OFF the hot paths:
 every other oracle-checked query remains 100% JVM-side (pinned by
 tests/test_plans.py::test_hot_path_has_no_python_udf, which exempts
 exactly the sanctioned Python surfaces).
 
-100 TB posture: a UDTF is a map-side flat-map — no shuffle, output
-partitioning follows the input — so the scale argument is the same
+100 TB posture: a UDTF is a map-side flat-map -- no shuffle, output
+partitioning follows the input -- so the scale argument is the same
 as any explode: it widens rows, it never exchanges them. The Python
 boundary costs ~an Arrow serialization per batch; keep UDTFs for
 logic that genuinely needs imperative per-row state, not for
@@ -39,7 +39,7 @@ from pyspark.sql.functions import udtf
 from roborock_data_pipeline_spark.registry import query
 from roborock_data_pipeline_spark.sources.tables import load
 
-SENT_SEP = ". "  # literal separator — same token in Spark and DuckDB
+SENT_SEP = ". "  # literal separator -- same token in Spark and DuckDB
 
 
 @udtf(
@@ -54,7 +54,7 @@ class SentenceSpans:
     with its ordinal, word count, and starting character offset.
 
     The offset cursor advances over blank fragments too (they consume
-    characters even though they emit no row) — that running state is
+    characters even though they emit no row) -- that running state is
     what makes this a UDTF rather than a generator expression."""
 
     def eval(self, doc_id: int, text: str):  # noqa: D102 - UDTF contract
@@ -89,8 +89,8 @@ class SentenceSpans:
     """,
 )
 def q_udtf_sentence_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """§2.J UDTF: sentence spans via a LATERAL join against the
-    registered Python table function — each document row fans out to
+    """sec 2.J UDTF: sentence spans via a LATERAL join against the
+    registered Python table function -- each document row fans out to
     its sentences with running character offsets.
 
     The oracle reconstructs the offset cursor as a prefix sum over

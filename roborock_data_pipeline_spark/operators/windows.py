@@ -1,9 +1,9 @@
-"""Window functions & sessionization (SURVEY §2.G, §2.I T2/T6).
+"""Window functions & sessionization (SURVEY sec 2.G, sec 2.I T2/T6).
 
 The reference's continuous monitor keeps a per-device dict of the
 previous status and fires a "cleaning session completed" event on the
-cleaning→idle transition (pipeline.py:104-156). Declaratively that is
-`lag(state) OVER (PARTITION BY device ORDER BY ts)` — one shuffle on
+cleaning->idle transition (pipeline.py:104-156). Declaratively that is
+`lag(state) OVER (PARTITION BY device ORDER BY ts)` -- one shuffle on
 the device key, then a narrow filter. The genuinely streaming twin
 lives in streaming/sessionize.py; these batch forms are the
 oracle-checkable contract.
@@ -32,7 +32,7 @@ from roborock_data_pipeline_spark.sources.tables import load
     """,
 )
 def q_session_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T2 as batch: state-transition (edge) detection — the monitor's
+    """T2 as batch: state-transition (edge) detection -- the monitor's
     previous-state comparison (pipeline.py:143-156) as a lag window.
     Emits every row where the device's state changed."""
     ev = load(spark, sf_dir, "events")
@@ -74,8 +74,8 @@ def q_session_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T2/T6 (EXT): gap-based sessionization — lag(ts) → new-session
-    flag → running sum → per-session aggregate. The batch equivalent
+    """T2/T6 (EXT): gap-based sessionization -- lag(ts) -> new-session
+    flag -> running sum -> per-session aggregate. The batch equivalent
     of `session_window(ts, '30 minutes')`; one shuffle on user_id,
     reused by both window steps and the final group-by."""
     ev = load(spark, sf_dir, "events")
@@ -125,7 +125,7 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T6: Spark's native `session_window` (gap-based session
-    aggregation in one groupBy — also the streaming form). Same
+    aggregation in one groupBy -- also the streaming form). Same
     sessions as the hand-rolled q_sessionize; note Spark defines
     session end as last-event + gap, mirrored in the oracle."""
     ev = load(spark, sf_dir, "events")
@@ -156,7 +156,7 @@ def q_session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G (EXT): 7-day moving average over the daily summary — frame
+    """G (EXT): 7-day moving average over the daily summary -- frame
     spec `rowsBetween(-6, 0)`. The unpartitioned window runs on one
     task, which is fine: its input is already one row per day."""
     ev = load(spark, sf_dir, "events")
@@ -183,7 +183,7 @@ def q_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T6 (EXT): tumbling event-time window as a batch group-by on
-    date_trunc — byte-identical semantics to the streaming
+    date_trunc -- byte-identical semantics to the streaming
     `window(ts, '1 hour')` aggregation in streaming/aggregations.py,
     which is how the oracle can check it."""
     ev = load(spark, sf_dir, "events")
@@ -206,7 +206,7 @@ def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3-adjacent (EXT): per-device running total — the engine-side
+    """A3-adjacent (EXT): per-device running total -- the engine-side
     derivation of the device's lifetime counter at every point in
     time (the reference only ever sees the device's own running total,
     roborock_collector.py:365-396)."""
@@ -242,11 +242,11 @@ def q_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T6+ (EXT): sliding event-time window (1 h length, 30 min
-    slide) — each event lands in exactly length/slide = 2 windows.
+    slide) -- each event lands in exactly length/slide = 2 windows.
 
     Spark's `window(ts, '1 h', '30 min')` explodes each row into its
     covering windows before the partial aggregation, so the shuffle
-    carries pre-combined (window, type) partials — at 100 TB the
+    carries pre-combined (window, type) partials -- at 100 TB the
     overlap factor multiplies map output, not exchange rows. The
     oracle unnests the same two epoch-aligned window starts."""
     ev = load(spark, sf_dir, "events")
@@ -293,15 +293,15 @@ def q_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def q_user_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G (EXT): gaps-and-islands — each user's longest run of
+    """G (EXT): gaps-and-islands -- each user's longest run of
     consecutive active days (earliest on ties): the classic streak
     query (DAU retention, habit metrics).
 
-    Island id = day − row_number (consecutive days share it); both
+    Island id = day - row_number (consecutive days share it); both
     windows and both aggregates key on user_id, so after the initial
     (user, day) dedupe the whole query rides ONE user-keyed exchange.
-    Cardinality collapses immediately: events → |user × day| rows →
-    |islands| rows → |users| rows — at 100 TB the heavy step is the
+    Cardinality collapses immediately: events -> |user x day| rows ->
+    |islands| rows -> |users| rows -- at 100 TB the heavy step is the
     first distinct, a partial-agg-friendly dedupe."""
     ev = load(spark, sf_dir, "events")
     d = ev.select("user_id", F.to_date("ts").alias("day")).distinct()

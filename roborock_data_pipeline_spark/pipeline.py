@@ -1,20 +1,20 @@
-"""The reference pipeline's modes, Spark-first — full CLI parity.
+"""The reference pipeline's modes, Spark-first -- full CLI parity.
 
-Mirror of /root/reference/pipeline.py:795-833 (argparse dispatch) —
+Mirror of /root/reference/pipeline.py:795-833 (argparse dispatch) --
 same modes a reference user runs today, re-expressed over a parquet
 warehouse instead of Google Sheets, with the semantics upgraded
-where the reference is buggy (T5 at-most-once → exactly-once by
+where the reference is buggy (T5 at-most-once -> exactly-once by
 deriving state from what the sink actually holds).
 
   mode setup         S9  provision the warehouse tables
   mode status        read-only formatted snapshot per device
                          (quick_status, pipeline.py:393-438)
   mode log           S1  one-shot: append current device status
-  mode smart         §3.1 counter-dedup'd incremental sync
+  mode smart         sec 3.1 counter-dedup'd incremental sync
   mode schedule      T4  smart sync on a 12 h cadence
                          (schedule_sync, pipeline.py:575-594)
-  mode record_sync   §3.2 watermark incremental sync of records
-  mode monitor       §3.3 continuous session detection (streaming)
+  mode record_sync   sec 3.2 watermark incremental sync of records
+  mode monitor       sec 3.3 continuous session detection (streaming)
   mode history       O1  print the k most recent records
   mode daily_summary A6  build the gold table the reference declared
                          but never implemented
@@ -23,12 +23,12 @@ deriving state from what the sink actually holds).
 
 Library-level maintenance (T4-schedulable via run_scheduled):
 refresh_device_lifetime (keyed delta-merge IVM), gold_maintenance
-(fold both golds, then vacuum every batch log — refresh-before-vacuum
+(fold both golds, then vacuum every batch log -- refresh-before-vacuum
 keeps later runs delta-sized), funnel_maintenance (compact the
 curation indexes + curated output), sinks.warehouse_maintenance.
 
 "Device cloud" stand-in: a parquet directory of device telemetry
-(device_status + cleaning_records shapes) — the process boundary the
+(device_status + cleaning_records shapes) -- the process boundary the
 reference crosses via MQTT/HTTPS (roborock_collector.py:295-352)
 becomes a table scan; everything downstream is identical semantics.
 """
@@ -43,6 +43,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from roborock_data_pipeline_spark import schemas
 from roborock_data_pipeline_spark.sources import (
@@ -77,13 +78,13 @@ def mode_log(spark: SparkSession, cloud: str, warehouse: str) -> None:
 
 def mode_status(spark: SparkSession, cloud: str) -> DataFrame:
     """'status' mode (reference pipeline.py:393-438 quick_status +
-    :801 mode choice): READ-ONLY formatted snapshot — the latest
+    :801 mode choice): READ-ONLY formatted snapshot -- the latest
     status tick per device plus device-side lifetime totals, printed
     in the reference's per-device block. Mutates nothing (unlike
     mode_log, which appends the same data); returns the snapshot
     DataFrame for programmatic use.
 
-    The collect is |devices|-bounded — a terminal display is
+    The collect is |devices|-bounded -- a terminal display is
     driver-side by definition; both views derive from one status
     scan."""
     st = _cloud(spark, cloud, "device_status")
@@ -121,9 +122,9 @@ def mode_status(spark: SparkSession, cloud: str) -> DataFrame:
 
 
 def mode_smart(spark: SparkSession, cloud: str, warehouse: str) -> None:
-    """§3.1 smart_sync: per device, only if the cleaning counter
+    """sec 3.1 smart_sync: per device, only if the cleaning counter
     advanced past what the warehouse already holds, append the new
-    summary snapshot + latest status. State is the sink itself —
+    summary snapshot + latest status. State is the sink itself --
     re-running after a failed write simply retries (exactly-once),
     unlike pipeline.py:562-568 which advances state regardless."""
     st = _cloud(spark, cloud, "device_status")
@@ -156,7 +157,7 @@ def mode_smart(spark: SparkSession, cloud: str, warehouse: str) -> None:
 
 
 def mode_record_sync(spark: SparkSession, cloud: str, warehouse: str) -> None:
-    """§3.2 sync_new_records: per device, append only records with
+    """sec 3.2 sync_new_records: per device, append only records with
     start_time beyond the warehouse's high-water mark, oldest first.
     Native timestamps, not ISO-string compares (fixes T7)."""
     recs = _cloud(spark, cloud, "cleaning_records")
@@ -172,7 +173,7 @@ def mode_record_sync(spark: SparkSession, cloud: str, warehouse: str) -> None:
             > F.coalesce(F.col("wm"), F.lit("1970-01-01").cast("timestamp"))
         )
         .drop("wm")
-        # O3 oldest-first: per-partition sort at the sink is enough —
+        # O3 oldest-first: per-partition sort at the sink is enough --
         # a global orderBy would total-shuffle every new record at
         # 100 TB for an ordering no downstream query depends on
         .sortWithinPartitions("start_time")
@@ -184,9 +185,9 @@ def mode_record_sync(spark: SparkSession, cloud: str, warehouse: str) -> None:
 def mode_monitor(
     spark: SparkSession, cloud: str, warehouse: str, checkpoint: str
 ) -> None:
-    """§3.3 continuous monitor: streaming edge detection over status
-    ticks → completed sessions appended to cleaning_history. State
-    lives in the checkpoint (survives restarts — the reference's
+    """sec 3.3 continuous monitor: streaming edge detection over status
+    ticks -> completed sessions appended to cleaning_history. State
+    lives in the checkpoint (survives restarts -- the reference's
     dicts don't, pipeline.py:104-106)."""
     from roborock_data_pipeline_spark.streaming.sessionize import (
         detect_sessions_stream,
@@ -233,12 +234,12 @@ def _daily_rollup(recs: DataFrame) -> DataFrame:
 
 
 def mode_daily_summary(spark: SparkSession, warehouse: str) -> None:
-    """A6: build the Daily_Summary gold table from cleaning_records —
+    """A6: build the Daily_Summary gold table from cleaning_records --
     the aggregation the reference declared twice (pipeline.py:307,
     sheets_client.py:299-307) and never computed."""
     recs = sinks.read_table(spark, warehouse, "cleaning_records")
     daily = _daily_rollup(recs)
-    # gold table is a full rebuild from cleaning_records — overwrite so
+    # gold table is a full rebuild from cleaning_records -- overwrite so
     # re-runs are idempotent (an append would duplicate per-date rows)
     sinks.overwrite_rows(daily, warehouse, "daily_summary")
 
@@ -246,7 +247,7 @@ def mode_daily_summary(spark: SparkSession, warehouse: str) -> None:
 # --- incremental gold-table maintenance (EXT, VERDICT r5 'What's
 # missing' closure: the 100 TB form of mode_daily_summary) ----------
 
-GOLD_PART_TABLE = "daily_summary_by_date"
+GOLD_PART_TABLE = "daily_summary_by_date"  # declared in sinks.PARTITIONED_TABLES
 
 
 def _rollup_watermark_path(warehouse: str) -> str:
@@ -259,7 +260,7 @@ def _rollup_watermark_path(warehouse: str) -> str:
 # publishes. _publish_stamp_ns is taken AFTER the Spark write,
 # immediately before the publish rename (sinks.append_rows), so a
 # batch's stamp can only lag its visibility by the stamp->rename gap
-# — microseconds normally, longer only if the OS preempts the writer
+# -- microseconds normally, longer only if the OS preempts the writer
 # between those two calls. Re-listing a 5-minute band below the
 # watermark and deduplicating by batch id therefore folds every such
 # late batch EXACTLY ONCE (ADVICE r7: this closes the stamp->rename
@@ -267,28 +268,31 @@ def _rollup_watermark_path(warehouse: str) -> str:
 # publish side adds a freeze FENCE (r9, sinks.append_rows): a writer
 # whose stamp aged past half this grace before it reached the rename
 # re-stamps first, so even a multi-minute freeze cannot publish
-# below the floor — the authoritative constant lives in sinks, next
+# below the floor -- the authoritative constant lives in sinks, next
 # to that fence.
 FOLD_GRACE_NS = sinks.FOLD_GRACE_NS
 
 
-def _parse_fold_state(raw: str) -> dict:
-    """Fold-state file: JSON ``{"wm": stamp, "folded": [batch ids
-    within the grace band]}``. A legacy plain-stamp file (pre-grace
-    vintage) carries no folded set — treat its whole grace band as
-    already folded (``legacy``), else a delta-merge refresh would
-    re-fold pre-migration batches and double-count."""
-    raw = raw.strip()
+def _read_fold_state(path: str | None) -> dict:
+    """Fold state at ``path``: JSON ``{"wm": stamp, "folded": [batch
+    ids within the grace band]}``; an absent file is the fresh state.
+    A plain-stamp file (the pre-grace format, which carries no folded
+    set) is unsupported and raises, naming the path -- guessing its
+    grace band would either re-fold or skip batches."""
+    raw = ""
+    if path is not None and os.path.exists(path):
+        with open(path) as fh:
+            raw = fh.read().strip()
     if not raw:
-        return {"wm": "", "folded": [], "legacy": False}
-    if raw.startswith("{"):
-        d = json.loads(raw)
-        return {
-            "wm": d.get("wm", ""),
-            "folded": list(d.get("folded", [])),
-            "legacy": False,
-        }
-    return {"wm": raw, "folded": [], "legacy": True}
+        return {"wm": "", "folded": []}
+    if not raw.startswith("{"):
+        raise ValueError(
+            f"fold state {path!r} is a plain watermark stamp: that "
+            "pre-grace format is unsupported -- delete it and rebuild "
+            "the gold view (mode daily_summary / a full refresh)"
+        )
+    d = json.loads(raw)
+    return {"wm": d.get("wm", ""), "folded": list(d.get("folded", []))}
 
 
 def _grace_floor(wm: str) -> str:
@@ -299,7 +303,7 @@ def _base_provably_folded(
     table_dir: str, base: str, folded: set[str], lo: str
 ) -> bool:
     """A vacuum base holds no unfolded rows iff every batch it
-    absorbed is itself folded — in the folded set, or stamped at or
+    absorbed is itself folded -- in the folded set, or stamped at or
     below the grace floor (the floor IS the fold invariant: anything
     below it was folded, recursively so for absorbed bases, whose
     stamp equals their newest absorbed stamp). An unreadable manifest
@@ -311,7 +315,7 @@ def _base_provably_folded(
         return False
     # membership by LOGICAL batch id (batch_fold_id): a v2 row rewrite
     # republishes a batch under a versioned physical name, and a later
-    # vacuum's absorbed list records that versioned name — the fold
+    # vacuum's absorbed list records that versioned name -- the fold
     # proof must still recognize it as the batch that was folded
     return all(
         sinks.batch_fold_id(a) in folded
@@ -330,19 +334,19 @@ def _select_unfolded(
     case and a late grace-band publish. A vacuum base that lands in
     the band holding only already-folded content (the normal
     refresh-before-vacuum cadence) is recognized via its absorbed
-    manifest and skipped — returned as implicitly folded so the state
+    manifest and skipped -- returned as implicitly folded so the state
     advance records it and later runs stay delta-sized."""
     wm = state["wm"]
     if not wm:
         return list(batches), []
-    lo = wm if state["legacy"] else _grace_floor(wm)
+    lo = _grace_floor(wm)
     folded = set(state["folded"])
     new: list[str] = []
     implicit: list[str] = []
     for b in batches:
         # fold membership by LOGICAL id: a v2 DML rewrite changes a
         # batch's physical dirname (`.rw` version segment) but not its
-        # identity — an in-band batch folded before a rewrite must not
+        # identity -- an in-band batch folded before a rewrite must not
         # be re-selected (double-count) after it
         if (
             sinks._batch_ns_prefix(b) <= lo  # noqa: SLF001
@@ -363,7 +367,7 @@ def _select_unfolded(
 def _advance_fold_state(
     state: dict, new: list[str], implicit: list[str] = ()
 ) -> dict:
-    """Post-fold state: watermark = max stamp seen (never regresses —
+    """Post-fold state: watermark = max stamp seen (never regresses --
     a late grace-band batch must not pull it back), folded set pruned
     to the new grace band (ids below the floor can never be
     re-selected, so the set stays O(grace-window publish rate), not
@@ -375,17 +379,17 @@ def _advance_fold_state(
         + [sinks._batch_ns_prefix(b) for b in new]  # noqa: SLF001
     )
     if not wm:  # nothing ever folded: the algebra stays total
-        return {"wm": "", "folded": [], "legacy": False}
+        return {"wm": "", "folded": []}
     lo = _grace_floor(wm)
     # stored as LOGICAL ids (batch_fold_id) so a later v2 DML rewrite
-    # of an in-band batch — which changes its physical dirname — still
+    # of an in-band batch -- which changes its physical dirname -- still
     # matches the fold record
     folded = sorted({
         sinks.batch_fold_id(b)
         for b in set(state["folded"]) | set(new) | set(implicit)
         if sinks._batch_ns_prefix(b) > lo  # noqa: SLF001
     })
-    return {"wm": wm, "folded": folded, "legacy": False}
+    return {"wm": wm, "folded": folded}
 
 
 def _dump_fold_state(state: dict) -> str:
@@ -393,11 +397,7 @@ def _dump_fold_state(state: dict) -> str:
 
 
 def _read_rollup_state(warehouse: str) -> dict:
-    p = _rollup_watermark_path(warehouse)
-    if not os.path.exists(p):
-        return _parse_fold_state("")
-    with open(p) as fh:
-        return _parse_fold_state(fh.read())
+    return _read_fold_state(_rollup_watermark_path(warehouse))
 
 
 def _write_rollup_state(warehouse: str, state: dict) -> None:
@@ -415,7 +415,7 @@ def _write_rollup_state(warehouse: str, state: dict) -> None:
 # flagged in the funnel). The in-between dates' recompute is
 # byte-identical to their published partitions (deterministic from
 # the base), so the only cost is rewriting some untouched partitions
-# — and a touched set that large is almost always dense anyway.
+# -- and a touched set that large is almost always dense anyway.
 DATE_RESIDUAL_CAP = 256
 
 
@@ -424,14 +424,14 @@ def rollup_for_dates(
 ) -> DataFrame:
     """Recompute the daily rollup for ``dates`` from the full
     cleaning_records log. The scan carries a start_time RANGE bound
-    (min..max+1d) that pushes into the parquet reader (PushedFilters —
+    (min..max+1d) that pushes into the parquet reader (PushedFilters --
     row-group min/max stats prune non-touched history; on a
     date-partitioned layout the same predicate becomes partition
     pruning), plus the exact formatted-date membership as a residual
-    while the touched set is small (≤DATE_RESIDUAL_CAP — beyond that
+    while the touched set is small (<=DATE_RESIDUAL_CAP -- beyond that
     the whole range is recomputed; see the cap's comment).
     Per-date recompute-from-base beats merging partial aggregates
-    here because the published gold values are ROUNDED — re-merging
+    here because the published gold values are ROUNDED -- re-merging
     rounded sums would drift from the full rebuild."""
     recs = sinks.read_table(spark, warehouse, "cleaning_records")
     lo, hi = min(dates), max(dates)
@@ -450,11 +450,11 @@ def rollup_for_dates(
 
 
 def refresh_daily_summary(spark: SparkSession, warehouse: str) -> dict[str, int]:
-    """EXT: INCREMENTAL maintenance of the Daily_Summary gold table —
+    """EXT: INCREMENTAL maintenance of the Daily_Summary gold table --
     the 100 TB form of mode_daily_summary's full rebuild.
 
     mode_daily_summary recomputes every date from all of history on
-    every run — fine at the reference's ~1-2 rows/day, a full-table
+    every run -- fine at the reference's ~1-2 rows/day, a full-table
     scan per refresh at warehouse scale. This refresh does
     new-batch-sized work instead:
 
@@ -470,30 +470,30 @@ def refresh_daily_summary(spark: SparkSession, warehouse: str) -> dict[str, int]
        range-pruned scan (rollup_for_dates);
     4. swap the touched date partitions into the hive-partitioned
        gold table with a dynamic partition overwrite
-       (sinks.overwrite_partitions) — untouched dates' files are
+       (sinks.overwrite_partitions) -- untouched dates' files are
        never rewritten;
     5. advance the fold state (watermark + grace-band folded ids,
        atomic tmp+rename).
 
     Crash-safety: the fold state moves LAST, so a crash after the
-    partition swap replays the same batches — the recompute is
+    partition swap replays the same batches -- the recompute is
     deterministic from the base table, so the re-swap publishes
     byte-identical partitions (idempotent convergence, same discipline
     as the funnel's publish-is-the-commit-point). Vacuum interplay:
     a vacuum base stamped newer than the grace floor and not yet in
     the folded set makes the 'new' scan OVER-approximate touched
-    dates (the base also holds already-folded rows) —
+    dates (the base also holds already-folded rows) --
     recompute-from-base makes any over-approximation safe, never
     wrong, and the base enters the folded set so it costs one pass.
 
-    Single-writer: the watermark read → recompute → partition swap →
+    Single-writer: the watermark read -> recompute -> partition swap ->
     watermark write sequence is a read-modify-write, so it runs under
-    ``sinks.writer_lock`` on the gold table — a second concurrent
+    ``sinks.writer_lock`` on the gold table -- a second concurrent
     refresh fails loudly instead of interleaving partition overwrites.
 
     Reader honesty note: a query running over the gold table WHILE a
     touched partition is being swapped can transiently fail on the
-    replaced files (each date directory is atomic; the set is not) —
+    replaced files (each date directory is atomic; the set is not) --
     a retry reads the new state. Same trade the vacuum documents for
     the batch log; a transactional table format (Delta/Iceberg commit
     log) is what removes the window on a real deployment.
@@ -545,30 +545,36 @@ def _refresh_daily_summary_locked(
 
 LIFETIME_TABLE = "device_lifetime"
 LIFETIME_WATERMARK = "_folded_watermark"
+# the delta-merged snapshot's storage schema (UNROUNDED sums: rounded
+# values do not merge -- see refresh_device_lifetime); pinned on every
+# read so building the frame runs no schema-inference job
+LIFETIME_SCHEMA = T.StructType([
+    T.StructField("device_name", T.StringType(), False),
+    T.StructField("n", T.LongType(), False),
+    T.StructField("area_sum", T.DoubleType(), True),
+    T.StructField("time_sum", T.DoubleType(), True),
+])
 
 
 def _lifetime_live(warehouse: str) -> str | None:
-    """The live lifetime snapshot dir: `_current.json`-resolved
-    version dir (r12 #1), or the pre-seam legacy root, or None."""
+    """The live lifetime snapshot dir (the `_current.json`-resolved
+    version dir, sources/versioned_dir), or None before the first
+    refresh."""
     return versioned_dir.resolve(sinks.table_path(warehouse, LIFETIME_TABLE))
 
 
 def _read_lifetime_state(warehouse: str) -> dict:
     """The lifetime rollup's fold state (committed INSIDE the snapshot
-    dir so data+watermark publish atomically) — shared by the refresh
+    dir so data+watermark publish atomically) -- shared by the refresh
     and the health snapshot so the location/format cannot drift."""
     live = _lifetime_live(warehouse)
-    wm_path = (
+    return _read_fold_state(
         os.path.join(live, LIFETIME_WATERMARK) if live is not None else None
     )
-    if wm_path is None or not os.path.exists(wm_path):
-        return _parse_fold_state("")
-    with open(wm_path) as fh:
-        return _parse_fold_state(fh.read())
 
 
 def refresh_device_lifetime(spark: SparkSession, warehouse: str) -> dict[str, object]:
-    """EXT: KEYED incremental view maintenance — the delta-merge twin
+    """EXT: KEYED incremental view maintenance -- the delta-merge twin
     of refresh_daily_summary's partition swap. A per-device lifetime
     rollup has no date axis to swap partitions on; instead it exploits
     that count/sum are MERGEABLE: scan only the new batches, partial-
@@ -582,16 +588,16 @@ def refresh_device_lifetime(spark: SparkSession, warehouse: str) -> dict[str, ob
     - Exactly-once, not at-least-once: replaying a batch into a
       delta-merge DOUBLE-COUNTS (the dated refresh just recomputed).
       So the folded watermark is committed INSIDE the snapshot
-      directory and the two publish in ONE atomic rename — there is
+      directory and the two publish in ONE atomic rename -- there is
       no crash window where data advanced but the watermark did not.
     - Vacuum bases break the delta property: a base newer than the
       watermark absorbed already-folded rows, so folding it as a
-      delta would double-count. Detected → this refresh falls back
+      delta would double-count. Detected -> this refresh falls back
       to one full recompute (correct by construction), then resumes
       delta-sized work on later runs.
 
     Mergeability dictates the storage schema: the snapshot holds
-    UNROUNDED sums (rounded values do not merge — re-rounding partial
+    UNROUNDED sums (rounded values do not merge -- re-rounding partial
     sums drifts); presentation rounding happens in
     read_device_lifetime. Returns {"new_batches": n, "mode":
     "delta"|"full"|"noop"}.
@@ -614,8 +620,8 @@ def refresh_device_lifetime(spark: SparkSession, warehouse: str) -> dict[str, ob
         state = _read_lifetime_state(warehouse)
         batches = sinks.list_batches(warehouse, "cleaning_records")
         # grace-band re-list + id dedup (see FOLD_GRACE_NS): a batch
-        # whose publish rename landed late — stamp below a watermark
-        # another writer+refresh advanced in the stamp->rename gap —
+        # whose publish rename landed late -- stamp below a watermark
+        # another writer+refresh advanced in the stamp->rename gap --
         # is still selected here, and the folded set guarantees it is
         # delta-merged exactly once (replay would double-count).
         new, implicit = _select_unfolded(
@@ -626,7 +632,7 @@ def refresh_device_lifetime(spark: SparkSession, warehouse: str) -> dict[str, ob
                 # record proven-folded bases: one verified pointer
                 # swap of the in-snapshot state file (data untouched;
                 # metadata-only, so mutating the live version in
-                # place is safe — it cannot change query results)
+                # place is safe -- it cannot change query results)
                 commit_provider.commit_pointer(
                     wm_path,
                     _dump_fold_state(
@@ -655,7 +661,7 @@ def refresh_device_lifetime(spark: SparkSession, warehouse: str) -> dict[str, ob
             delta = _partial(
                 sinks.read_batch_dirs(spark, warehouse, "cleaning_records", new)
             )
-            prior = spark.read.parquet(live)
+            prior = spark.read.schema(LIFETIME_SCHEMA).parquet(live)
             merged = (
                 prior.unionByName(delta)
                 .groupBy("device_name")
@@ -668,8 +674,8 @@ def refresh_device_lifetime(spark: SparkSession, warehouse: str) -> dict[str, ob
         # snapshot + folded watermark publish in ONE pointer commit
         # (r12 #1, sources/versioned_dir): no crash window between
         # data and watermark (delta-merge is not replay-idempotent,
-        # unlike the dated refresh's recompute), and — unlike the
-        # pre-r13 two-rename swap — no kill window where NO snapshot
+        # unlike the dated refresh's recompute), and -- unlike the
+        # pre-r13 two-rename swap -- no kill window where NO snapshot
         # is visible: readers see old-or-new, never a missing table
         staged = versioned_dir.staging_dir(table_dir)
         try:
@@ -687,11 +693,13 @@ def refresh_device_lifetime(spark: SparkSession, warehouse: str) -> dict[str, ob
 
 def read_device_lifetime(spark: SparkSession, warehouse: str) -> DataFrame:
     """Presentation view over the delta-merged snapshot: rounding is
-    applied HERE, never stored (rounded values do not merge)."""
+    applied HERE, never stored (rounded values do not merge). Empty
+    before the first refresh."""
     live = _lifetime_live(warehouse)
-    snap = spark.read.parquet(
-        live if live is not None
-        else sinks.table_path(warehouse, LIFETIME_TABLE)
+    snap = (
+        spark.read.schema(LIFETIME_SCHEMA).parquet(live)
+        if live is not None
+        else spark.createDataFrame([], LIFETIME_SCHEMA)
     )
     return snap.select(
         "device_name",
@@ -706,9 +714,8 @@ def fold_health(warehouse: str) -> dict[str, dict[str, object]]:
     #7): per gold view, the fold watermark's age (a stuck watermark on
     a supposedly-scheduled refresh means folding stopped), the
     grace-band folded-set population (bounded by the grace-window
-    publish rate by construction — unbounded growth would mean the
-    band prune broke), and whether the state is a pre-grace legacy
-    stamp. Pure file reads, no Spark job."""
+    publish rate by construction -- unbounded growth would mean the
+    band prune broke). Pure file reads, no Spark job."""
     now_ns = time.time_ns()
     states = {
         GOLD_PART_TABLE: _read_rollup_state(warehouse),
@@ -720,7 +727,6 @@ def fold_health(warehouse: str) -> dict[str, dict[str, object]]:
                 round((now_ns - int(s["wm"])) / 1e9, 3) if s["wm"] else None
             ),
             "grace_band_folded": len(s["folded"]),
-            "legacy_state": bool(s["legacy"]),
         }
         for t, s in states.items()
     }
@@ -733,17 +739,16 @@ def warehouse_health(
 ) -> dict[str, dict[str, object]]:
     """One operator snapshot: describe_table per table (batch counts,
     retention, schema, lock holder/age/staleness) merged with the
-    fold-state signals — and, when ``funnel_state_dir`` is given, the
+    fold-state signals -- and, when ``funnel_state_dir`` is given, the
     index layer's ``funnel_health`` under ``_indexes`` (VERDICT r12
-    #8) — everything a 100 TB maintenance dashboard polls, with zero
+    #8) -- everything a 100 TB maintenance dashboard polls, with zero
     Spark jobs.
 
     r14 (VERDICT r13 #6): ``_versioned`` describes every
-    ``_current.json`` surface — the lifetime gold snapshot always,
+    ``_current.json`` surface -- the lifetime gold snapshot always,
     plus any caller-registered roots (the IVF-PQ index dir, a JSONL
-    export dir) via ``versioned_roots`` (name → root path):
-    generation, grace/staging/trash backlog, legacy-root flag,
-    live-dir age."""
+    export dir) via ``versioned_roots`` (name -> root path):
+    generation, grace/staging/trash backlog, live-dir age."""
     report = sinks.describe_warehouse(warehouse)
     for t, f in fold_health(warehouse).items():
         report.setdefault(t, {}).update(
@@ -752,13 +757,13 @@ def warehouse_health(
     # Blocked-pairs regime telemetry (r10, VERDICT r9 #8): which path
     # the last blocked_pairs plan took (exact vs banded), the probed
     # max block vs the cap, and whether the banded form was forced
-    # (streaming / explicit). An operator sees an exact→banded regime
-    # flip — the moment recall becomes probabilistic and cost becomes
-    # cap-bounded — on the dashboard instead of in a Spark plan diff.
+    # (streaming / explicit). An operator sees an exact->banded regime
+    # flip -- the moment recall becomes probabilistic and cost becomes
+    # cap-bounded -- on the dashboard instead of in a Spark plan diff.
     # Driver-local by design: the regime decision is made driver-side
     # at plan-build time, the same place this snapshot runs.
     #
-    # r11 (ADVICE): last-call-wins alone is ambiguous — the accuracy
+    # r11 (ADVICE): last-call-wins alone is ambiguous -- the accuracy
     # gates build two plans per query (exact truth at cap=1e9, then
     # the capped production form), so the snapshot could surface the
     # truth run's "exact" regime as the production query's. Each
@@ -791,9 +796,9 @@ def warehouse_health(
 
 def funnel_health(state_dir: str) -> dict[str, dict[str, object] | None]:
     """Index-layer health (VERDICT r12 #8): describe_index over the
-    funnel's persisted indexes (MinHash / semantic / BM25) — layout +
+    funnel's persisted indexes (MinHash / semantic / BM25) -- layout +
     generation, live segment counts, compaction age, GC backlog,
-    orphan count, centroid generation, legacy sunset notice. Pure
+    orphan count, centroid generation. Pure
     file reads, zero Spark jobs; merged into ``warehouse_health``
     when it is called with ``funnel_state_dir``."""
     from roborock_data_pipeline_spark.operators.index_segments import (
@@ -810,13 +815,13 @@ def funnel_health(state_dir: str) -> dict[str, dict[str, object] | None]:
 def gold_maintenance(
     spark: SparkSession, warehouse: str, retain_last_n: int = 24
 ) -> dict[str, object]:
-    """One schedulable pass over the warehouse's derived state — the
+    """One schedulable pass over the warehouse's derived state -- the
     gold twin of funnel_maintenance, T4-pairable via ``run_scheduled``:
     fold new batches into both gold views, then vacuum the batch logs.
 
     ORDER IS THE CONTRACT: refresh BEFORE vacuum. Refreshing first
     folds every pending batch, so the vacuum base (stamped with the
-    newest ABSORBED publish time) lands at-or-below both watermarks —
+    newest ABSORBED publish time) lands at-or-below both watermarks --
     the next lifetime refresh stays delta-sized instead of tripping
     the base-past-watermark full-recompute fallback, and the daily
     refresh's touched-date set stays new-batch-sized instead of
@@ -829,9 +834,10 @@ def gold_maintenance(
 
 def read_daily_summary(spark: SparkSession, warehouse: str) -> DataFrame:
     """The partition-maintained gold table, normalized back to the
-    daily_summary schema (partition value re-typed to the ISO string;
-    columns in declared order). Date filters prune partitions at
-    planning time, same as sinks.read_partitioned."""
+    daily_summary schema (partition value as the ISO string; columns
+    in declared order). Date filters prune partitions at planning
+    time, same as sinks.read_partitioned. Empty before the first
+    refresh."""
     df = sinks.read_partitioned(spark, warehouse, GOLD_PART_TABLE)
     cols = [f.name for f in sinks.table_schema(warehouse, "daily_summary").fields]
     return df.withColumn("date", F.col("date").cast("string")).select(*cols)
@@ -844,24 +850,24 @@ def mode_curate(
     export_shards: int = 0,
 ) -> dict[str, int]:
     """EXT: the end-to-end training-data curation funnel over the
-    documents table — the composition every operator in
+    documents table -- the composition every operator in
     operators/quality.py + operators/dedup.py exists for:
 
-    1. near-dup clustering → drop non-canonical group members,
+    1. near-dup clustering -> drop non-canonical group members,
     2. quality gate (Gopher-style repetition threshold),
     3. stratified language rebalance (deterministic content-hash),
     4. token-budget batch packing,
-    5. atomic publish of the curated corpus (staged rename — a
+    5. atomic publish of the curated corpus (staged rename -- a
        half-written curated set is never visible),
     6. (optional, ``export_shards > 0``) overlapping token-window
        chunking of the curated text + deterministic JSONL shard
-       export with a manifest — the trainer-facing egress
+       export with a manifest -- the trainer-facing egress
        (operators/text.py q_doc_chunks + sources/export.py).
 
     Returns the funnel counts per stage (the run report a scheduler
     logs). Each stage is a doc_id semi/anti-join against a
     (relatively tiny) decision set, so the corpus itself streams
-    through scan-shaped filters — no stage re-shuffles the text."""
+    through scan-shaped filters -- no stage re-shuffles the text."""
     from roborock_data_pipeline_spark.operators.dedup import q_dup_groups
     from roborock_data_pipeline_spark.operators.quality import (
         q_repetition_ratio,
@@ -958,25 +964,25 @@ def keep_first_apply(
     candidates: DataFrame, pairs: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """VERDICT r5 #1: the funnel's keep-first dedup apply, FULLY
-    DISTRIBUTED — (losers, survivors) for one ingest batch. Pair
+    DISTRIBUTED -- (losers, survivors) for one ingest batch. Pair
     members (columns ``i``/``j``) are classified new-vs-indexed by
     JOINING against the batch's candidate ids instead of collecting
     them into a driver-side set (at 100 TB ingest a micro-batch is
-    millions of ids — a multi-hundred-MB Python set); the loser of
-    each pair is derived per-row (both new → keep-lowest, one new →
+    millions of ids -- a multi-hundred-MB Python set); the loser of
+    each pair is derived per-row (both new -> keep-lowest, one new ->
     the new member loses to the indexed one), and the pair-bounded
     distinct loser set applies to the candidates as a BROADCAST ANTI
-    JOIN — the exact q_dedup_apply shape (operators/dedup.py:380).
+    JOIN -- the exact q_dedup_apply shape (operators/dedup.py:380).
     Only counts ever reach the driver (the funnel's _funnel.json).
 
     Every join broadcasts the PAIR-BOUNDED side, so the batch itself
     is never shuffled: oriented pair members broadcast onto the
-    candidate scan (inner — output is |members|), the other-side ids
-    broadcast as a semi-join probe (output ≤ |members|), the loser
+    candidate scan (inner -- output is |members|), the other-side ids
+    broadcast as a semi-join probe (output <= |members|), the loser
     rule evaluates on those two pair-bounded frames, and the distinct
-    loser set (≤ |pairs|, the quantity banding caps) broadcasts back
+    loser set (<= |pairs|, the quantity banding caps) broadcasts back
     as the anti join. Total batch cost: two column-pruned scans plus
-    the survivor scan — zero exchanges of batch-sized data."""
+    the survivor scan -- zero exchanges of batch-sized data."""
     cand_ids = candidates.select("doc_id")
     members = pairs.select(
         F.col("i").alias("m"), F.col("j").alias("o")
@@ -986,7 +992,7 @@ def keep_first_apply(
     new_members = cand_ids.join(
         F.broadcast(members), F.col("doc_id") == F.col("m")
     ).select("m", "o")
-    # which partner ids are themselves new — pairs-bounded
+    # which partner ids are themselves new -- pairs-bounded
     new_others = cand_ids.join(
         F.broadcast(members.select("o").distinct()),
         F.col("doc_id") == F.col("o"),
@@ -995,7 +1001,7 @@ def keep_first_apply(
     losers = (
         new_members.join(new_others, "o", "left")
         .where(
-            # partner indexed → the new member loses; both new →
+            # partner indexed -> the new member loses; both new ->
             # keep-lowest (the greater id loses, emitted exactly once
             # by the orientation where m > o)
             ~F.coalesce("o_new", F.lit(False)) | (F.col("m") > F.col("o"))
@@ -1017,33 +1023,33 @@ def mode_curate_stream(
     jaccard_threshold: float = 0.5,
     cosine_threshold: float = 0.9,
 ) -> dict[str, int]:
-    """EXT: ONE ingest batch through the streaming curation funnel —
+    """EXT: ONE ingest batch through the streaming curation funnel --
     the composition the incremental indexes exist for (VERDICT r3 #7
     closed the pieces; this is the funnel):
 
     1. quality gate FIRST (Gopher-style duplicate-bigram threshold,
-       the shared functions/text.shingles expression) — gate-failing
+       the shared functions/text.shingles expression) -- gate-failing
        docs never reach the indexes, so a rejected doc can never
        become an indexed ghost that future near-dups lose to;
     2. text near-dup check of the gate-passers against the persisted
-       MinHash index (operators/incremental_dedup) — a new doc
+       MinHash index (operators/incremental_dedup) -- a new doc
        matching anything already indexed, or an earlier doc of this
        batch, loses;
     3. semantic near-dup check against the persisted frozen-centroid
        IVF index (operators/incremental_semdedup), same rule, with
        ``vec_id == doc_id`` (each document's embedding);
-    4. atomic commit of the WHOLE batch — both index segments plus
-       the curated docs under ``out_dir/batch-{batch_id}`` — through
+    4. atomic commit of the WHOLE batch -- both index segments plus
+       the curated docs under ``out_dir/batch-{batch_id}`` -- through
        one transaction record (operators/funnel_txn).
 
     Every indexed doc is therefore gate-passing, and is either
-    published or an intra-batch loser whose keeper is published — so
+    published or an intra-batch loser whose keeper is published -- so
     any future doc dropped against the index has a published
     representative in its near-dup component (the same
     equivalence-class treatment q_dup_groups applies in batch).
 
     Dedup policy is KEEP-FIRST, not the batch operators' keep-lowest:
-    in an ingest stream the already-published doc must win — dropping
+    in an ingest stream the already-published doc must win -- dropping
     a doc retroactively because a lower-id near-dup arrived later
     would retract published training data. Within one batch (both
     members new) the tie-break is keep-lowest, matching the batch
@@ -1054,13 +1060,13 @@ def mode_curate_stream(
     transaction across all three surfaces. Both index segments and
     the curated output STAGE fully (invisible to every reader), then
     a single atomic hard-link of a commit record
-    (``out_dir/_txn/commit-{batch_id}.json`` — operators/funnel_txn)
+    (``out_dir/_txn/commit-{batch_id}.json`` -- operators/funnel_txn)
     commits the batch id for all of them; roll-forward renames make
     the surfaces visible and are completed by ``recover`` at the next
     funnel entry / maintenance pass if a crash interrupts them. So a
-    crash at ANY point before the link leaves NOTHING visible — no
+    crash at ANY point before the link leaves NOTHING visible -- no
     index segment without its published batch, no published batch
-    without its index segments — and a replayed batch_id whose record
+    without its index segments -- and a replayed batch_id whose record
     committed returns the recorded counts without recomputing (the
     foreachBatch idempotence pattern, same as streaming/cdc_upsert).
     Scale: every stage is the underlying operator's shape (posting
@@ -1091,9 +1097,9 @@ def mode_curate_stream(
 
     funnel = {"input": docs.count()}
 
-    # 1. gate first — rejected docs must not enter the indexes. The
+    # 1. gate first -- rejected docs must not enter the indexes. The
     # bigram expression is the shared shingles() helper (n<2 guarded:
-    # a single-token doc shingles to one joined token, frac 0, pass —
+    # a single-token doc shingles to one joined token, frac 0, pass --
     # the hand-rolled sequence(1, size-1) this replaces crashed
     # element_at on such docs).
     bigrams = shingles(F.col("text"), 2)
@@ -1108,7 +1114,7 @@ def mode_curate_stream(
     mh_index = os.path.join(state_dir, "minhash")
     sem_index = os.path.join(state_dir, "semantic")
     if not _has_centroids(sem_index):
-        # frozen index metadata, not batch state — created once,
+        # frozen index metadata, not batch state -- created once,
         # idempotent if a crash lands between this and the commit
         # (a crashed create's staging leftovers read as NOT committed)
         create_semantic_index(spark, emb, sem_index)
@@ -1178,7 +1184,7 @@ def mode_curate_stream(
         committed = True
     finally:
         if not committed:
-            # ADVICE r4: clean ONLY this batch's staged dirs — a
+            # ADVICE r4: clean ONLY this batch's staged dirs -- a
             # committed transaction's staging belongs to the finalize
             # renames (recovery completes them after a crash), and
             # deleting the whole .staging tree would race a
@@ -1204,11 +1210,11 @@ def run_curate_stream(
     on_batch: Callable[[str, dict[str, int]], None] | None = None,
 ):
     """VERDICT r4 #2: the curation funnel under the REAL streaming
-    engine — a file-source ``readStream`` over a documents directory,
+    engine -- a file-source ``readStream`` over a documents directory,
     each micro-batch routed through ``mode_curate_stream`` via
     ``foreachBatch`` with Spark's own epoch id as the funnel batch id.
     Returns the started StreamingQuery (``availableNow`` trigger:
-    drains everything currently in the source, then stops — the
+    drains everything currently in the source, then stops -- the
     incremental-ingest shape; rerun on a schedule for a T4-style
     loop; reference analog: the continuous monitor loop,
     pipeline.py:108-130).
@@ -1220,15 +1226,15 @@ def run_curate_stream(
     - ``mode_curate_stream``'s transaction record is the funnel's own
       commit point (operators/funnel_txn): a replayed epoch id whose
       record committed returns the recorded counts and touches
-      neither the indexes nor the output — both index segments and
+      neither the indexes nor the output -- both index segments and
       the publish dir committed together under that one record. So
-      publish-then-crash-then-replay publishes nothing twice — proven
+      publish-then-crash-then-replay publishes nothing twice -- proven
       under a real kill/restart in tests/test_curate_stream.py.
 
     ``emb`` is a batch-side lookup (vec_id == doc_id): the funnel
     semi-joins it down to each micro-batch's gate survivors, so at
     100 TB it is the embedding store, not a second stream to align.
-    ``on_batch`` (epoch_id, funnel_counts) is an observability hook —
+    ``on_batch`` (epoch_id, funnel_counts) is an observability hook --
     raising inside it is the crash-injection seam the recovery test
     uses."""
     stream = spark.readStream.schema(schemas.DOCUMENTS)
@@ -1277,7 +1283,7 @@ def _curated_batch_counts(out_dir: str, batch_id: str) -> dict | None:
 
 
 def read_curated_stream(spark: SparkSession, out_dir: str) -> DataFrame:
-    """All published curated batches of the streaming funnel — the
+    """All published curated batches of the streaming funnel -- the
     compacted base segment's data (if any) plus live batch dirs."""
     from roborock_data_pipeline_spark.operators.index_segments import (
         live_segments,
@@ -1292,7 +1298,7 @@ def compact_curated_output(
     spark: SparkSession, out_dir: str, n_files: int = 8
 ) -> int:
     """Merge the funnel's per-batch publish dirs into one base segment
-    — the funnel-output twin of compact_minhash_index (the curated
+    -- the funnel-output twin of compact_minhash_index (the curated
     corpus grows one directory per ingest exactly like the indexes
     did; VERDICT r4 #3's argument applies verbatim to the thing
     training jobs actually read). Each absorbed batch's recorded
@@ -1367,8 +1373,8 @@ def funnel_maintenance(
     """One maintenance pass over everything the streaming funnel
     grows: compact both persisted indexes and the curated output into
     their base segments. Safe to run between ingests on any cadence
-    (each compactor is a no-op when there is ≤1 live segment, and the
-    commit→GC window is reader-consistent); the natural T4 pairing is
+    (each compactor is a no-op when there is <=1 live segment, and the
+    commit->GC window is reader-consistent); the natural T4 pairing is
     ``run_scheduled(lambda: funnel_maintenance(...), interval)``.
     Returns segments merged per surface."""
     from roborock_data_pipeline_spark.operators import funnel_txn
@@ -1387,17 +1393,6 @@ def funnel_maintenance(
     merged = {}
     mh = os.path.join(state_dir, "minhash")
     sem = os.path.join(state_dir, "semantic")
-    # r12 sunset (index twin of warehouse_maintenance's default
-    # migration): a pre-r12 rename-layout index dir upgrades to the
-    # manifest-committed layout here — idempotent, linearized by the
-    # naming lock; new index dirs bootstrap straight into it
-    from roborock_data_pipeline_spark.operators.index_segments import (
-        migrate_index_manifest,
-    )
-
-    for d in (mh, sem, out_dir):
-        if os.path.isdir(d):
-            migrate_index_manifest(d)
     merged["minhash"] = (
         compact_minhash_index(spark, mh, n_files) if os.path.isdir(mh) else 0
     )
@@ -1423,7 +1418,7 @@ def run_scheduled(
 ) -> int:
     """T4: the reference's scheduled re-run loop (pipeline.py:575-594
     runs smart_sync every 12 h; :755-792 runs record sync hourly),
-    including its 60 s error backoff — a failed tick sleeps the
+    including its 60 s error backoff -- a failed tick sleeps the
     backoff, not the full interval, then retries.
 
     ``sleep``/``max_runs`` are injectable so tests drive ticks without
@@ -1457,7 +1452,7 @@ def mode_schedule(
     sleep: Callable[[float], None] = time.sleep,
 ) -> int:
     """'schedule' mode (reference pipeline.py:575-594 schedule_sync +
-    :801 mode choice): smart_sync on a fixed cadence — default 12 h,
+    :801 mode choice): smart_sync on a fixed cadence -- default 12 h,
     with run_scheduled's 60 s error backoff. A thin named wrapper so
     the reference CLI's mode list round-trips; ``--interval`` on any
     other mode remains the general looping form. Returns the number

@@ -24,7 +24,7 @@ def plan_string(df: DataFrame, mode: str = "formatted") -> str:
 
 
 def executed_plan_string(df: DataFrame) -> str:
-    """Execute the query and return the FINAL adaptive plan — the only
+    """Execute the query and return the FINAL adaptive plan -- the only
     place WholeStageCodegen spans (and AQE runtime decisions like
     coalesced partitions or demoted joins) are visible."""
     df.collect()  # the same QueryExecution backs the action, so AQE finalizes it

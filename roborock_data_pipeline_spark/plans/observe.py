@@ -1,9 +1,9 @@
 """Zero-extra-pass observability: metrics and expectation gates.
 
-The reference logs row counts by re-counting after每 write (reference
+The reference logs row counts by re-counting after each write (reference
 pipeline.py logs `len(rows)` it just built in Python). On Spark,
 re-counting means re-running the plan; the engine-native form is
-`DataFrame.observe` — named aggregate expressions evaluated AS the
+`DataFrame.observe` -- named aggregate expressions evaluated AS the
 job runs, collected from the same pass that produced the output.
 
 Two layers:
@@ -14,12 +14,12 @@ Two layers:
   shape): declare row-level validity predicates; after the single
   pass, raise ``ExpectationError`` if the violation fraction exceeds
   the budget. Because the check rides the job, a pipeline can gate
-  publishing on contract compliance without re-reading anything —
+  publishing on contract compliance without re-reading anything --
   pair with the staged-atomic sinks: observe on the staging write,
   publish only if the gate passes.
 
 100 TB: observation metrics are Spark AccumulatorV2-style aggregates
-merged on the driver — bytes per metric, independent of data size.
+merged on the driver -- bytes per metric, independent of data size.
 """
 
 from __future__ import annotations
@@ -39,9 +39,9 @@ class ExpectationError(AssertionError):
 def run_with_metrics(
     df: DataFrame, metrics: dict[str, F.Column], action=None
 ) -> dict:
-    """Evaluate ``metrics`` (name → aggregate Column) in the same job
+    """Evaluate ``metrics`` (name -> aggregate Column) in the same job
     that executes ``df``. ``action(df)`` forces execution (default:
-    noop-format write — full computation, no sink I/O). Returns the
+    noop-format write -- full computation, no sink I/O). Returns the
     observed values."""
     obs = Observation()
     observed = df.observe(obs, *[c.alias(n) for n, c in metrics.items()])
@@ -58,7 +58,7 @@ def expect(
     max_violation_frac: float = 0.0,
     action=None,
 ) -> dict:
-    """Gate a job on row-level contracts. ``expectations`` maps name →
+    """Gate a job on row-level contracts. ``expectations`` maps name ->
     BOOLEAN Column that must hold per row. Runs ONE job; raises
     ``ExpectationError`` naming every breached contract if its
     violation fraction exceeds ``max_violation_frac``; otherwise

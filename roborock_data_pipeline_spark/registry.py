@@ -26,14 +26,14 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 class QuerySpec:
     name: str
     fn: QueryFn
-    oracle: str | None  # DuckDB SQL; None → driver does rows-only check
+    oracle: str | None  # DuckDB SQL; None -> driver does rows-only check
     doc: str
 
 
 _REGISTRY: dict[str, QuerySpec] = {}
 
 # Operator modules that register queries on import. Order is the
-# SURVEY §7 milestone order. Listing order MATTERS for the driver,
+# SURVEY sec 7 milestone order. Listing order MATTERS for the driver,
 # which checks a fixed-size prefix sample of queries(): all_queries()
 # therefore pulls each accuracy gate (``X_check``) directly behind its
 # base query ``X`` so any prefix that contains a rows-only sketch also
@@ -73,7 +73,7 @@ def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
     The registered callable is wrapped with
     :func:`functions.cache_tracking.begin_query` so that the caches a
     previous query deliberately left alive (the audit-kept warm-rerun
-    persists) are released before a DIFFERENT query runs — the
+    persists) are released before a DIFFERENT query runs -- the
     clearCache contract enforced in code (ADVICE r11) instead of
     docstring prose. The module-level symbol stays the UNWRAPPED
     function, so intra-module composition (q_dup_groups calling

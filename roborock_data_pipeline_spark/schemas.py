@@ -1,9 +1,9 @@
-"""Explicit schemas — fixed, code-declared, never inferred.
+"""Explicit schemas -- fixed, code-declared, never inferred.
 
 Mirrors the reference's schema discipline (dataclass fields + header
 constants, /root/reference/src/roborock_collector.py:16-147,579-635;
-SURVEY §1.4) for the domain tables, and pins the driver testdata
-schemas (FIXTURES.md §B) so reads never depend on inference.
+SURVEY sec 1.4) for the domain tables, and pins the driver testdata
+schemas (FIXTURES.md sec B) so reads never depend on inference.
 """
 
 from __future__ import annotations
@@ -11,11 +11,11 @@ from __future__ import annotations
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
-# Driver testdata tables (FIXTURES.md §B). `events.ts` has shipped as BOTH
+# Driver testdata tables (FIXTURES.md sec B). `events.ts` has shipped as BOTH
 # parquet TIMESTAMP(MICROS) and TIMESTAMP(NANOS) across testdata vintages, so
-# the schema is unit-aware: `EVENTS` is the native µs read; `EVENTS_RAW` reads
-# ns-encoded files as epoch-ns long (spark.sql.legacy.parquet.nanosAsLong —
-# Spark has no ns timestamp type) which sources.tables truncates to µs.
+# the schema is unit-aware: `EVENTS` is the native us read; `EVENTS_RAW` reads
+# ns-encoded files as epoch-ns long (spark.sql.legacy.parquet.nanosAsLong --
+# Spark has no ns timestamp type) which sources.tables truncates to us.
 # sources.tables.events_ts_unit() sniffs the parquet footer and picks.
 # ---------------------------------------------------------------------------
 
@@ -42,7 +42,7 @@ def events_schema(unit: str) -> T.StructType:
     """Pinned events schema for a sniffed on-disk ``ts`` unit.
 
     ``"ns"`` (TIMESTAMP(NANOS) / raw int64 epoch-ns) reads via the
-    long workaround; anything µs-or-coarser reads natively."""
+    long workaround; anything us-or-coarser reads natively."""
     return EVENTS_RAW if unit == "ns" else EVENTS
 
 DOCUMENTS = T.StructType([
@@ -118,7 +118,7 @@ LINEITEM = T.StructType([
 ])
 
 TESTDATA_SCHEMAS: dict[str, T.StructType] = {
-    "events": EVENTS,  # native µs; ns vintages go through events_schema("ns")
+    "events": EVENTS,  # native us; ns vintages go through events_schema("ns")
     "documents": DOCUMENTS,
     "embeddings": EMBEDDINGS,
     "region": REGION,
@@ -131,7 +131,7 @@ TESTDATA_SCHEMAS: dict[str, T.StructType] = {
 }
 
 # ---------------------------------------------------------------------------
-# Reference-domain tables (SURVEY §1.2). Used by the streaming demo, the
+# Reference-domain tables (SURVEY sec 1.2). Used by the streaming demo, the
 # sessionization operator's unit tests, and as the documented target schema
 # for anyone pointing this engine at real device telemetry.
 # ---------------------------------------------------------------------------

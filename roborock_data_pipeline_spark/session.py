@@ -17,20 +17,20 @@ from pyspark.sql import SparkSession
 # Runtime-settable confs required for correctness / oracle parity.
 _RUNTIME_CONFS = {
     # testdata events.ts is parquet TIMESTAMP(NANOS); Spark has no ns
-    # timestamp — read as raw epoch-ns long, converted in sources.tables.
+    # timestamp -- read as raw epoch-ns long, converted in sources.tables.
     "spark.sql.legacy.parquet.nanosAsLong": "true",
     # DuckDB timestamps are UTC-naive; pin Spark to UTC so to_date /
     # date_trunc agree with the oracle.
     "spark.sql.session.timeZone": "UTC",
-    # AQE: runtime shuffle-partition coalescing + skew-join handling —
-    # the 100 TB posture (SURVEY §4).
+    # AQE: runtime shuffle-partition coalescing + skew-join handling --
+    # the 100 TB posture (SURVEY sec 4).
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
     "spark.sql.adaptive.skewJoin.enabled": "true",
     # Arrow for any pandas interchange (Pandas UDFs, toPandas).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
     # Spark's Hive-compat default writes timestamps as parquet INT96,
-    # which carries NO min/max statistics — every warehouse table the
+    # which carries NO min/max statistics -- every warehouse table the
     # engine itself writes (append_rows, vacuum bases, gold tables)
     # would silently lose timestamp predicate pushdown and file
     # skipping. INT64 micros carries full stats (and is what DuckDB

@@ -2,26 +2,26 @@
 
 Every COMMIT-POINT primitive the warehouse and index layers use goes
 through this one small interface; Spark data writes (parquet dirs)
-stay native — only the instants that make data VISIBLE route here:
+stay native -- only the instants that make data VISIBLE route here:
 
-- ``swap_pointer(path, data)``   — atomically publish pointer content
+- ``swap_pointer(path, data)``   -- atomically publish pointer content
   (a generation-numbered manifest naming live dirs). Local FS: tmp +
   fsync + ``os.replace``. Object store: one atomic PUT of the
   manifest object (conditional-on-generation where offered).
-- ``put_if_absent(path, data)``  — atomic create-if-missing, the lock/
+- ``put_if_absent(path, data)``  -- atomic create-if-missing, the lock/
   lease/transaction-record publish. Local FS: temp + ``os.link``
   (never observably empty). Object store: PUT If-None-Match, or one
   conditional insert in a lock table.
-- lease operations               — ``is_mine`` / ``heartbeat`` /
+- lease operations               -- ``is_mine`` / ``heartbeat`` /
   ``inspect`` / ``steal`` / ``release``: a TTL'd heartbeat lease with
   fenced takeover. Local FS: mtime heartbeat through a pinned inode
   fd + rename-aside steal. Real deployment: DynamoDB lock client /
-  ZK session — the contract (one holder, loud losers, bounded
+  ZK session -- the contract (one holder, loud losers, bounded
   takeover, a fenced zombie cannot publish) is what carries over.
 
 ``commit_pointer`` adds the read-back verification an eventually-
 consistent store needs: a swap that was ACKed but lost (or a stale
-read-after-write) is DETECTED, not silently absorbed — locally this
+read-after-write) is DETECTED, not silently absorbed -- locally this
 is one tiny json re-read per commit; on an object store it is the
 standard read-your-writes check. The ``FaultInjectingBackend`` below
 simulates exactly those two failure modes (lost PUT, stale read) so
@@ -46,7 +46,7 @@ from dataclasses import dataclass
 class ConcurrentWriterError(RuntimeError):
     """Two writers raced a commit; exactly one won. The loser's staged
     state is intact (its own cleanup removes it); the committed state
-    is the WINNER's — rerun the losing operation against the new
+    is the WINNER's -- rerun the losing operation against the new
     state if still needed."""
 
 
@@ -61,7 +61,7 @@ class CommitLostError(RuntimeError):
 class LeaseToken:
     """The held side of a put_if_absent: carries the backend-specific
     identity proof (local FS: an fd pinning the lock file's inode,
-    opened on the temp file BEFORE the hard link published it — the
+    opened on the temp file BEFORE the hard link published it -- the
     link shares the inode and the held fd blocks inode reuse, so a
     steal+re-acquire at the same path can never read as ours; object
     store: the conditional insert's version number in ``ident``)."""
@@ -132,13 +132,13 @@ class LocalFSBackend:
         """None = the path already exists (a racing writer won).
 
         The staging temp is DOT-PREFIXED in the target's directory
-        (ADVICE r12): a temp named ``{path}.acq-…`` would match any
+        (ADVICE r12): a temp named ``{path}.acq-...`` would match any
         prefix-based directory scan over the target's name (e.g. the
         funnel's ``commit-*`` recovery listing), making a crashed or
         racing writer's HALF-staged record look committed. A dot
         prefix can never share a prefix with a real record name. The
-        temp is unlinked on EVERY exit path — including a non-EEXIST
-        link failure — so no orphan survives to confuse a later scan.
+        temp is unlinked on EVERY exit path -- including a non-EEXIST
+        link failure -- so no orphan survives to confuse a later scan.
         """
         d, base = os.path.split(path)
         tmp = os.path.join(d or ".", f".acq-{uuid.uuid4().hex[:8]}-{base}")
@@ -168,7 +168,7 @@ class LocalFSBackend:
 
     def list_keys(self, dir_path: str) -> list[str]:
         """Names (not paths) of the pointer objects under one
-        directory/prefix — the object-store LIST-by-prefix analog.
+        directory/prefix -- the object-store LIST-by-prefix analog.
         Dot-prefixed staging temps are never real keys."""
         try:
             return sorted(
@@ -235,13 +235,13 @@ class LocalFSBackend:
 
     def steal(self, path: str, identity: int | None, name: str,
               min_age_s: float = 0.0) -> None:
-        """Remove a lease judged stale — verifying it is STILL the
+        """Remove a lease judged stale -- verifying it is STILL the
         judged one. The rename-aside is atomic (exactly one concurrent
         stealer wins); the stolen file must then (a) carry the
         identity captured at judge time AND (b) still be at least
         ``min_age_s`` silent (r12: identity alone is an inode number
-        locally, which a release→re-acquire inside the judge→steal
-        gap can REUSE — but the re-acquired lease is heartbeat-fresh,
+        locally, which a release->re-acquire inside the judge->steal
+        gap can REUSE -- but the re-acquired lease is heartbeat-fresh,
         so the freshness re-check catches what identity reuse hides;
         it also restores a judged holder whose heartbeat resumed in
         the gap, which is exactly the contender backing off). On
@@ -275,10 +275,10 @@ class LocalFSBackend:
     def sweep_steal_litter(self, path: str, ttl_s: float) -> int:
         """GC ``.stale-*`` asides left by steals that LOST their
         restore race (VERDICT r13 #4: the ``FileExistsError`` branch
-        above strands the aside forever — dot-invisible to listings
+        above strands the aside forever -- dot-invisible to listings
         but unbounded litter an object-store deployment pays for).
         Judged by CTIME, not mtime: the rename-aside PRESERVES the
-        stale holder's last-heartbeat mtime (old by construction —
+        stale holder's last-heartbeat mtime (old by construction --
         that is why it was judged stale), while ctime updates at the
         rename itself, so ctime-age measures how long the aside has
         existed. An in-flight steal's aside lives microseconds
@@ -309,7 +309,7 @@ _VERIFY_WAIT_S = 0.02
 
 def commit_pointer(path: str, data: bytes) -> None:
     """THE pointer-commit door: swap + verified read-back. A lost PUT
-    or staleness beyond the retry window raises CommitLostError —
+    or staleness beyond the retry window raises CommitLostError --
     the caller's mutation failed whole and must be retried; it never
     silently half-lands (the swap is all-or-nothing on every
     backend)."""
@@ -321,7 +321,7 @@ def commit_pointer(path: str, data: bytes) -> None:
             time.sleep(_VERIFY_WAIT_S * (attempt + 1))
     raise CommitLostError(
         f"pointer commit at {path!r} was acknowledged but never became "
-        "readable — treating the commit as lost; retry the mutation"
+        "readable -- treating the commit as lost; retry the mutation"
     )
 
 
@@ -331,7 +331,7 @@ def read_pointer(path: str) -> bytes | None:
 
 @contextmanager
 def naming_lock(lock_path: str, name: str, ttl_s: float):
-    """Short-TTL naming lock serializing a [stamp → naming rename →
+    """Short-TTL naming lock serializing a [stamp -> naming rename ->
     manifest swap] commit section (milliseconds held). Unlike a
     writer LEASE this WAITS (contention resolves in kind) instead of
     raising, and steals a holder silent past ``ttl_s`` through the
@@ -352,7 +352,7 @@ def naming_lock(lock_path: str, name: str, ttl_s: float):
                 pass  # a faster contender stole it; re-race
         if time.monotonic() > deadline:
             raise ConcurrentWriterError(
-                f"{name}: naming lock held past {2 * ttl_s:.0f}s — a "
+                f"{name}: naming lock held past {2 * ttl_s:.0f}s -- a "
                 "commit section this long means a wedged writer; "
                 f"investigate {lock_path!r}"
             )
@@ -380,11 +380,11 @@ class FaultInjectingBackend(LocalFSBackend):
     modes a local FS can never produce, on a deterministic schedule:
 
     - ``lose_swaps_at``: swap_pointer call indexes (0-based, counted
-      per backend instance) that are ACKed but NOT applied — the
+      per backend instance) that are ACKed but NOT applied -- the
       lost-PUT mode. commit_pointer's read-back must detect these
       (CommitLostError) so the mutation fails whole.
     - ``stale_reads_after_swap``: number of read_pointer calls after
-      each successful swap that return the PRE-swap bytes — the
+      each successful swap that return the PRE-swap bytes -- the
       stale read-after-write mode. commit_pointer's bounded retry
       must absorb these transparently.
     """
@@ -423,7 +423,7 @@ class FaultInjectingBackend(LocalFSBackend):
 
 class InMemoryObjectStoreBackend:
     """A faithful in-memory model of an object store's commit
-    primitives — the DEPLOYMENT RECIPE made runnable (VERDICT r12 #4):
+    primitives -- the DEPLOYMENT RECIPE made runnable (VERDICT r12 #4):
     swapping ``BACKEND`` to (the production analog of) this class is
     the entire port, and the lifecycle suites run against it to prove
     the protocols never lean on anything POSIX-only.
@@ -433,7 +433,7 @@ class InMemoryObjectStoreBackend:
     - **no rename**: pointers/locks live in a dict keyed by path; a
       swap is one whole-object PUT, a lock acquire is one conditional
       insert (If-None-Match), a steal is one conditional delete.
-      ``os.replace`` simply does not exist here — any engine code
+      ``os.replace`` simply does not exist here -- any engine code
       path that still depended on it for a COMMIT would fail loudly.
     - **bounded read staleness** (``stale_reads``): the first N
       ``read_pointer`` calls after a swap serve the PRE-swap bytes,
@@ -444,7 +444,7 @@ class InMemoryObjectStoreBackend:
       ``steal`` verify it instead of an inode.
 
     Data (parquet dirs) stays on the real filesystem on every
-    backend — only the commit instants route here, which is the whole
+    backend -- only the commit instants route here, which is the whole
     design claim: a deployment maps this class onto S3/GCS
     conditional PUTs or a DynamoDB lock table and changes NOTHING
     else. Enable for a test run with SPARK_GRAFT_COMMIT_BACKEND=memory
@@ -464,7 +464,7 @@ class InMemoryObjectStoreBackend:
         self._next = 0
         self._stale_n = stale_reads
         # r14 (VERDICT r13 #5): the ACKed-lost-PUT mode on the
-        # rename-free backend — swap_pointer call indexes that are
+        # rename-free backend -- swap_pointer call indexes that are
         # acknowledged but never applied, so the CommitLostError
         # protocol paths (verified read-back, mutation-fails-whole)
         # are exercised where os.replace does not exist at all.
@@ -569,7 +569,7 @@ class InMemoryObjectStoreBackend:
               min_age_s: float = 0.0) -> None:
         """Conditional delete: remove the lease only if it is STILL
         the judged one (same version id, still silent past
-        ``min_age_s``) — the object-store form of the local backend's
+        ``min_age_s``) -- the object-store form of the local backend's
         identity+freshness-checked rename-aside."""
         with self._mu:
             cur = self._ids.get(path)
@@ -594,7 +594,7 @@ class InMemoryObjectStoreBackend:
 
     def lose_next_swaps(self, offsets: set[int]) -> None:
         """Arm the lost-PUT schedule RELATIVE to the current swap
-        count — lets a test provision its warehouse cleanly first and
+        count -- lets a test provision its warehouse cleanly first and
         then aim the faults at the op alphabet (the FS twin does the
         same by swapping the backend in after setup)."""
         with self._mu:
@@ -608,6 +608,6 @@ class InMemoryObjectStoreBackend:
             self._stale.clear()
 
     def sweep_steal_litter(self, path: str, ttl_s: float) -> int:
-        """The object-store steal is ONE conditional delete — it
+        """The object-store steal is ONE conditional delete -- it
         creates no aside, so there is no litter to sweep."""
         return 0

@@ -1,24 +1,24 @@
-"""Training-shard export: curated rows → deterministic JSONL shards.
+"""Training-shard export: curated rows -> deterministic JSONL shards.
 
 The reference's only egress is row-appends to a Sheets tab
-(reference roborock_connect.py:169-204 — the BI-feed form). A
+(reference roborock_connect.py:169-204 -- the BI-feed form). A
 training pipeline's egress is different: the curated corpus must
 land as a *fixed set of deterministic shards* (JSONL is the lingua
 franca of LM data loaders), each small enough to stream, with a
 manifest the trainer can checksum before it trusts the data.
 
 Design:
-- Shard assignment is ``xxhash64(key) mod n_shards`` — stable under
-  re-runs and corpus growth (same row → same shard), no coordination
+- Shard assignment is ``xxhash64(key) mod n_shards`` -- stable under
+  re-runs and corpus growth (same row -> same shard), no coordination
   and no global sort. Spark's JSON writer emits line-delimited JSON
   natively, one file tree per shard via ``partitionBy``.
 - The manifest (row + byte-ish token totals per shard) is computed
-  with one aggregate over the same DataFrame — n_shards rows to the
+  with one aggregate over the same DataFrame -- n_shards rows to the
   driver, never the data.
 - Publish commits through the commit-provider seam (r12 #1,
   sources/versioned_dir): the staged shard tree is named as an
   invisible version dir and THE commit is one verified
-  ``_current.json`` pointer swap — readers see the old export or the
+  ``_current.json`` pointer swap -- readers see the old export or the
   complete new one, never a half-written tree, and a kill mid-publish
   can never leave NO export visible (the pre-r13 two-rename swap
   could). Superseded versions get one publish of grace for a trainer
@@ -91,9 +91,9 @@ def _export_live(out_dir: str) -> str:
 
 
 def read_export(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Read a published export back (pointer-resolved version dir, or
-    the pre-seam legacy root; schema from the JSONL; the shard
-    partition column comes from the directory names)."""
+    """Read a published export back (pointer-resolved version dir;
+    schema from the JSONL; the shard partition column comes from the
+    directory names)."""
     return spark.read.json(_export_live(out_dir))
 
 

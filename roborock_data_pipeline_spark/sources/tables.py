@@ -1,6 +1,6 @@
 """Table loaders over the driver parquet testdata.
 
-Scan discipline for 100 TB (SURVEY §4): always `spark.read.parquet`
+Scan discipline for 100 TB (SURVEY sec 4): always `spark.read.parquet`
 with the pinned schema (no inference, no footer merging), keep
 projections/filters on the DataFrame so Catalyst pushes them into the
 scan. On a real deployment the same loaders point at date-partitioned
@@ -30,7 +30,7 @@ def _physical_parquet_files(sf_dir: str, name: str) -> list[str]:
     """The physical parquet file(s) behind the paths the engine reads.
 
     Batch load() reads exactly ``{sf_dir}/{name}.parquet`` (plain file
-    or directory layout) — when that exists, the sniffer inspects it
+    or directory layout) -- when that exists, the sniffer inspects it
     and nothing else, so it can never classify from a file the scan
     does not read. The STREAMING file source reads the glob
     ``{sf_dir}/{name}*``; when the exact batch path is absent the
@@ -63,7 +63,7 @@ def _physical_parquet_files(sf_dir: str, name: str) -> list[str]:
 # Footers sniffed per table: first/last plus an even spread. At 100 TB
 # a table is thousands of files; reading every footer would serialize
 # a large driver-side listing for a property that is uniform per
-# vintage — the spread catches a mixed-vintage directory without it.
+# vintage -- the spread catches a mixed-vintage directory without it.
 _SNIFF_MAX_FILES = 16
 
 
@@ -74,7 +74,7 @@ def ns_timestamp_cols(sf_dir: str, name: str) -> tuple[str, ...]:
     Testdata vintages have shipped ``events.ts`` as both
     TIMESTAMP(MICROS) and TIMESTAMP(NANOS); a foreign-parquet reader
     must sniff the footer, never assume (round 2 lost 35 queries to
-    exactly that). Checked for EVERY pinned timestamp column —
+    exactly that). Checked for EVERY pinned timestamp column --
     ``orders.o_orderdate`` / ``lineitem.l_shipdate`` could drift
     vintage the same way.
 
@@ -83,7 +83,7 @@ def ns_timestamp_cols(sf_dir: str, name: str) -> tuple[str, ...]:
     are ns-encoded; TIMESTAMP(MICROS/MILLIS) read natively; any OTHER
     physical type (DATE/int32/...) raises instead of being silently
     misread as epoch-ns 1970-era values. Multi-file tables are
-    sniffed across a spread of files and must agree — a mixed-unit
+    sniffed across a spread of files and must agree -- a mixed-unit
     directory raises rather than letting one file speak for the rest.
     """
     pinned = schemas.TESTDATA_SCHEMAS.get(name)
@@ -116,17 +116,17 @@ def ns_timestamp_cols(sf_dir: str, name: str) -> tuple[str, ...]:
         if len(kinds) > 1:
             raise ValueError(
                 f"{name}.{c}: mixed physical types across files {sorted(kinds)} "
-                f"in {sf_dir} — refusing to guess a timestamp unit"
+                f"in {sf_dir} -- refusing to guess a timestamp unit"
             )
         t = kinds.pop()
         if t.startswith("timestamp[ns") or t == "int64":
             out.append(c)
         elif t.startswith("timestamp"):
-            pass  # µs/ms — Spark reads natively
+            pass  # us/ms -- Spark reads natively
         else:
             raise ValueError(
                 f"{name}.{c}: pinned TimestampType but stored as {t!r} in "
-                f"{sf_dir} — unsupported vintage, not silently epoch-ns"
+                f"{sf_dir} -- unsupported vintage, not silently epoch-ns"
             )
     return tuple(out)
 
@@ -140,10 +140,10 @@ def events_ts_unit(sf_dir: str) -> str:
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table with its pinned schema.
 
-    Timestamp columns are unit-sniffed from the footer: µs-encoded
+    Timestamp columns are unit-sniffed from the footer: us-encoded
     files read natively as TimestampType; ns-encoded files read as
-    epoch-ns long (legacy.parquet.nanosAsLong) and truncate to µs —
-    exactly what DuckDB's ns→µs cast does, so oracle comparisons on
+    epoch-ns long (legacy.parquet.nanosAsLong) and truncate to us --
+    exactly what DuckDB's ns->us cast does, so oracle comparisons on
     timestamps agree bit-for-bit either way.
     """
     prepare(spark)  # idempotent; the driver's session needs these confs
@@ -167,7 +167,7 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def spread(df: DataFrame, factor: int = 1) -> DataFrame:
-    """Round-robin repartition up to cluster parallelism — for
+    """Round-robin repartition up to cluster parallelism -- for
     compute-heavy operators reading small single-row-group files.
 
     The local testdata is one parquet row group per table, which
@@ -180,14 +180,14 @@ def spread(df: DataFrame, factor: int = 1) -> DataFrame:
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism * factor
     # Guard (VERDICT r2 #2): only widen scans that genuinely cannot
-    # fan out — i.e. fewer input files than cores. df.inputFiles() is
+    # fan out -- i.e. fewer input files than cores. df.inputFiles() is
     # a driver-side FileIndex listing (no job, no Python->RDD
     # conversion); on a real 100 TB deployment inputs arrive as
     # thousands of splits and this is a no-op, so library operators
     # do not carry an unconditional full shuffle to a cluster.
     try:
         n_files = len(df.inputFiles())
-    except Exception:  # non-file relation (in-memory, stream) — widen
+    except Exception:  # non-file relation (in-memory, stream) -- widen
         n_files = 0
     if n_files >= target:
         return df

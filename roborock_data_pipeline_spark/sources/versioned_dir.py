@@ -13,7 +13,7 @@ index segment layer adopted:
 
 - new content stages under ``root/.staging-<hex>`` (invisible),
 - a millisecond naming section (``commit_provider.naming_lock``)
-  renames it to ``root/v-{gen}`` — still invisible, pure naming —
+  renames it to ``root/v-{gen}`` -- still invisible, pure naming --
 - THE commit is one ``commit_provider.commit_pointer`` swap of
   ``root/_current.json`` naming the live version dir (verified
   read-back: an ACKed-but-lost PUT fails the publish whole),
@@ -26,11 +26,10 @@ swap the new ``v-{gen}`` dir is an invisible orphan (clobbered by the
 next publish's naming section); after the swap the publish is
 complete and only GC remains (re-run by the next publish).
 
-Legacy layout: a root whose data sits directly in ``root`` (written
-by the pre-seam code) stays readable — ``resolve`` returns ``root``
-itself when no pointer exists. The first versioned publish leaves the
-legacy files in place (they ARE the previous live version, so they
-get the same one-publish grace); the second publish removes them.
+A root with no pointer is fresh only while it holds no data: data
+sitting directly in ``root`` is the pre-pointer two-rename layout,
+which is unsupported -- ``resolve`` and ``publish`` refuse it by name
+(``ValueError``) rather than serve or bury it.
 """
 
 from __future__ import annotations
@@ -52,19 +51,19 @@ _LOCK_TTL_S = 60.0
 # Staging liveness is a HEARTBEAT, not an mtime bar (VERDICT r13 #2:
 # a 100 TB-scale re-encode whose writer stalls >1 h between its last
 # file landing and its publish call must NOT have its staging swept
-# by a concurrent publisher — wall-clock-since-last-write is not a
+# by a concurrent publisher -- wall-clock-since-last-write is not a
 # liveness signal). staging_dir() plants a dot-prefixed heartbeat
 # file its writer's daemon thread refreshes every _STAGING_HEARTBEAT_S;
 # publish() sweeps only stagings heartbeat-silent past _STAGING_TTL_S
 # (the writer-lease discipline next door in sinks.writer_lock). A
 # silent heartbeat means the writer PROCESS is dead or frozen past
-# the TTL — the same condition under which its lease would be fenced.
+# the TTL -- the same condition under which its lease would be fenced.
 _HEARTBEAT_FILE = ".writer-heartbeat"
 _STAGING_HEARTBEAT_S = 20.0
 _STAGING_TTL_S = 600.0
 
 # pre-r14 staging dirs carry no heartbeat file: their only signal is
-# dir mtime — kept as the conservative fallback for those orphans
+# dir mtime -- kept as the conservative fallback for those orphans
 _STALE_STAGING_S = 3600.0
 
 
@@ -77,18 +76,28 @@ def _lock(root: str):
 
 
 def _pointer(root: str) -> dict | None:
-    """The committed version pointer, or None (legacy / fresh root).
-    Present-but-corrupt raises loudly: falling back to the legacy
-    listing would serve a superseded (possibly GC'd) version."""
+    """The committed version pointer, or None for a fresh (absent or
+    data-free) root. Present-but-corrupt raises loudly: falling back
+    to a listing would serve a superseded (possibly GC'd) version. A
+    pointer-less root holding data raises too: that pre-pointer
+    layout is unsupported."""
     raw = commit_provider.read_pointer(os.path.join(root, CURRENT_POINTER))
     if raw is None:
+        if os.path.isdir(root) and any(
+            not d.startswith((".", "_", "v-")) for d in os.listdir(root)
+        ):
+            raise ValueError(
+                f"versioned root {root!r} holds data but no "
+                f"{CURRENT_POINTER}: the pre-pointer layout is "
+                "unsupported -- republish the surface into a fresh root"
+            )
         return None
     try:
         m = json.loads(raw)
         return {"generation": int(m["generation"]), "dir": str(m["dir"])}
     except (ValueError, KeyError, TypeError) as exc:
         raise ValueError(
-            f"corrupt version pointer in {root!r}: {exc} — restore "
+            f"corrupt version pointer in {root!r}: {exc} -- restore "
             "_current.json from the previous generation"
         ) from exc
 
@@ -105,8 +114,8 @@ def staging_dir(root: str) -> str:
 
     Liveness (r14, VERDICT r13 #2): a daemon thread refreshes the
     staging's dot-prefixed heartbeat file every _STAGING_HEARTBEAT_S
-    for as long as the dir exists, so an arbitrarily slow writer —
-    hours between its last data file and its publish call — is still
+    for as long as the dir exists, so an arbitrarily slow writer --
+    hours between its last data file and its publish call -- is still
     visibly ALIVE to concurrent publishers. The thread exits on its
     own the moment the dir leaves the namespace (publish renamed it,
     or the caller's finally removed it)."""
@@ -121,7 +130,7 @@ def staging_dir(root: str) -> str:
         while True:
             time.sleep(_STAGING_HEARTBEAT_S)
             try:
-                # utime ONLY — never re-create: a beat that recreated
+                # utime ONLY -- never re-create: a beat that recreated
                 # the file could race the writer's own cleanup rmtree
                 # (or publish's unlink) and resurrect a heartbeat in a
                 # half-removed dir, leaving an orphan staging that
@@ -140,15 +149,14 @@ def staging_dir(root: str) -> str:
 
 
 def resolve(root: str) -> str | None:
-    """The live data directory: pointer-named version dir when
-    committed, else the legacy root itself (pre-seam layout), else
-    None for an empty/absent root."""
+    """The live data directory: the pointer-named version dir, or
+    None for a fresh root."""
     m = _pointer(root)
     if m is not None:
         live = os.path.join(root, m["dir"])
         if not os.path.isdir(live):
             # r14 (VERDICT r13 #3): between our pointer read and this
-            # probe, TWO back-to-back publishes can land — the first
+            # probe, TWO back-to-back publishes can land -- the first
             # supersedes the version our stale pointer names, the
             # second trash-renames it (one-publish grace exhausted).
             # One pointer re-read makes that race structurally
@@ -163,21 +171,16 @@ def resolve(root: str) -> str | None:
                 return live2
             raise ValueError(
                 f"version pointer in {root!r} names "
-                f"{(m2 or m)['dir']!r} but the directory is missing — "
+                f"{(m2 or m)['dir']!r} but the directory is missing -- "
                 "the live version was deleted out from under the "
                 "committed pointer"
             )
         return live
-    if not os.path.isdir(root):
-        return None
-    legacy = [
-        d for d in os.listdir(root) if not d.startswith((".", "_", "v-"))
-    ]
-    return root if legacy else None
+    return None
 
 
 def generation(root: str) -> int | None:
-    """Live generation number (None = legacy or fresh)."""
+    """Live generation number (None = fresh)."""
     m = _pointer(root)
     return m["generation"] if m is not None else None
 
@@ -186,13 +189,13 @@ def describe_versioned_dir(root: str) -> dict | None:
     """Metadata-only health snapshot of a versioned surface (VERDICT
     r13 #6: the IVF-PQ index root, JSONL export root, and lifetime
     gold snapshot are all ``_current.json`` surfaces with no describe
-    — a dashboard could not see their generation, staging/trash
-    backlog, or a legacy root pending migration). Pure listings +
+    -- a dashboard could not see their generation or staging/trash
+    backlog). Pure listings +
     stat, zero Spark jobs; None for an absent/empty root.
 
     ``staging_dead`` counts stagings the next publish WILL sweep
     (heartbeat silent past the TTL, or heartbeat-less past the mtime
-    bar) — a persistently nonzero value means writers are dying
+    bar) -- a persistently nonzero value means writers are dying
     mid-stage; a growing ``trash_backlog`` means publishes are being
     killed between trash-rename and bulk delete."""
     if not os.path.isdir(root):
@@ -202,8 +205,7 @@ def describe_versioned_dir(root: str) -> dict | None:
     versions = sorted(d for d in entries if d.startswith("v-"))
     stagings = [d for d in entries if d.startswith(".staging-")]
     trash = [d for d in entries if d.startswith(".trash-")]
-    legacy = [d for d in entries if not d.startswith((".", "_", "v-"))]
-    if m is None and not (versions or stagings or trash or legacy):
+    if m is None and not (versions or stagings or trash):
         return None
     now = time.time()
     dead = 0
@@ -218,12 +220,9 @@ def describe_versioned_dir(root: str) -> dict | None:
         except OSError:
             pass
     out: dict = {
-        "layout": "versioned-pointer" if m is not None else "legacy-root",
+        "layout": "versioned-pointer" if m is not None else None,
         "generation": m["generation"] if m is not None else None,
-        "live": (
-            m["dir"] if m is not None
-            else ("(legacy root)" if legacy else None)
-        ),
+        "live": m["dir"] if m is not None else None,
         "versions_on_disk": len(versions),
         "grace_dirs": len(
             [v for v in versions if m is None or v != m["dir"]]
@@ -231,10 +230,6 @@ def describe_versioned_dir(root: str) -> dict | None:
         "staging_dirs": len(stagings),
         "staging_dead": int(dead),
         "trash_backlog": len(trash),
-        "legacy_files": len(legacy),
-        # True = pre-seam data still serving (or graced-out files
-        # awaiting the second publish's GC)
-        "legacy_root_flag": m is None and bool(legacy),
         "live_age_s": None,
     }
     if m is not None:
@@ -253,13 +248,13 @@ def publish(root: str, staged: str) -> str:
     versions get one publish of grace (module docstring).
 
     The naming lock's contract is a MILLISECOND hold, but a version
-    dir can be arbitrarily large — so nothing slow runs inside it:
+    dir can be arbitrarily large -- so nothing slow runs inside it:
     doomed dirs (a crashed attempt's orphan, grace-expired versions,
-    graced-out legacy dirs) are RENAMED to invisible ``.trash-*``
+    dead stagings) are RENAMED to invisible ``.trash-*``
     names under the lock (pure metadata) and bulk-deleted after
     release. Deleting outside the lock is safe precisely BECAUSE of
     the rename: a concurrent publish can never be touching a dir that
-    has already left the version namespace — deleting in place out
+    has already left the version namespace -- deleting in place out
     there would race the next publisher's freshly-named (not yet
     committed) version dir. A kill between trash-rename and delete
     leaves ``.trash-*`` orphans, swept by the next publish."""
@@ -280,7 +275,7 @@ def publish(root: str, staged: str) -> str:
         dest = os.path.join(root, dname)
         if os.path.isdir(dest):
             # a crashed publish's invisible orphan (named, never
-            # committed — the pointer cannot name gen+1 yet)
+            # committed -- the pointer cannot name gen+1 yet)
             _to_trash(dest)
         os.replace(staged, dest)  # pure naming: invisible until the swap
         try:
@@ -295,13 +290,7 @@ def publish(root: str, staged: str) -> str:
             json.dumps({"generation": gen, "dir": dname}).encode(),
         )
         prev = m["dir"] if m is not None else None
-        _gc_mark(
-            root,
-            keep={dname, prev},
-            legacy_had_grace=prev is not None,
-            to_trash=_to_trash,
-            trash=trash,
-        )
+        _gc_mark(root, keep={dname, prev}, to_trash=_to_trash, trash=trash)
     for t in trash:
         if os.path.isdir(t):
             shutil.rmtree(t, ignore_errors=True)
@@ -313,13 +302,10 @@ def publish(root: str, staged: str) -> str:
     return dest
 
 
-def _gc_mark(root: str, keep: set, legacy_had_grace: bool,
-             to_trash, trash: list[str]) -> None:
+def _gc_mark(root: str, keep: set, to_trash, trash: list[str]) -> None:
     """Mark for removal (rename-to-trash, metadata-only): superseded
-    versions, dead staging orphans, a previous publish's undeleted
-    trash, and — once a prior VERSIONED publish was the grace holder
-    (the legacy files' own grace window has passed) — the legacy
-    root-level data files."""
+    versions, dead staging orphans, and a previous publish's undeleted
+    trash."""
     now = time.time()
     for d in os.listdir(root):
         p = os.path.join(root, d)
@@ -330,7 +316,7 @@ def _gc_mark(root: str, keep: set, legacy_had_grace: bool,
             trash.append(p)  # a killed publish's undeleted trash
         elif d.startswith(".staging-"):
             # liveness = heartbeat silence past the TTL (r14, VERDICT
-            # r13 #2) — never wall-clock since the last data write. A
+            # r13 #2) -- never wall-clock since the last data write. A
             # heartbeat-less staging (pre-r14 orphan, or a kill -9
             # before the first touch survived) falls back to the old
             # conservative dir-mtime bar.
@@ -344,10 +330,3 @@ def _gc_mark(root: str, keep: set, legacy_had_grace: bool,
                 dead = False
             if dead:
                 to_trash(p)
-        elif d == CURRENT_POINTER or d.startswith("."):
-            continue
-        elif legacy_had_grace:
-            # pre-seam layout's data files, superseded for a full
-            # publish cycle by now (files unlink after the lock too —
-            # one syscall each, but a legacy PARQUET DIR can be big)
-            to_trash(p)

@@ -2,36 +2,36 @@
 r7 missing #2) via Spark's Python Data Source API.
 
 The problem: a temp view created over ``read_table(...)`` SNAPSHOTS
-the batch listing — Spark pins the parquet file index when the
+the batch listing -- Spark pins the parquet file index when the
 DataFrame is created, and ``refreshByPath`` does not re-list new
 batch dirs. A ``spark.sql`` user silently read pre-append data until
 re-registering the views; a real user hits that daily.
 
 The fix: a Python Data Source whose ``read()`` lists the table's LIVE
-batch dirs at EXECUTION time — every query against the view (each
+batch dirs at EXECUTION time -- every query against the view (each
 query plans a fresh scan; verified empirically, not assumed) sees
-every batch published up to that moment, with the same crash
-consistency as read_table (absorbed leftovers filtered via the vacuum
-base's manifest) and the same migration resolution (evolved columns
-null on old batches, widened types promoted, renamed columns
+every batch published up to that moment, with the same read set as
+read_table (the batch dirs the committed manifest names,
+sinks.live_paths) and the same schema-evolution resolution (evolved
+columns null on old batches, widened types promoted, renamed columns
 recovered from their retired physical names).
 
 Positioning (honesty about the slow path): rows flow through
-pyarrow → Arrow batches → the JVM, so this is the INTERACTIVE/BI
-convenience surface, not the engine's hot path — every ``queries()``
+pyarrow -> Arrow batches -> the JVM, so this is the INTERACTIVE/BI
+convenience surface, not the engine's hot path -- every ``queries()``
 operator reads through the native JVM parquet scan (read_table).
 What keeps the view surface respectable at scale:
 
 - batch files are hash-distributed across ``partitions`` input
   splits (parallel Arrow decode, no single-worker funnel);
 - simple comparison/membership predicates are PUSHED into the
-  pyarrow parquet read (``pushFilters``) — row groups whose
+  pyarrow parquet read (``pushFilters``) -- row groups whose
   statistics exclude the predicate are never decoded;
 - the per-query overhead is one directory listing + one manifest
   read, no data motion.
 
 On a real cluster the warehouse dir must be on a shared filesystem
-(it already must be — the batch-log contract assumes one namespace).
+(it already must be -- the batch-log contract assumes one namespace).
 
 Reference analog: the spreadsheet IS the reference's always-fresh
 query surface (every sheets_client read hits the live document,
@@ -69,7 +69,7 @@ DEFAULT_PARTITIONS = 16
 
 # filters translatable to pyarrow compute expressions; temporal
 # columns are excluded (timestamp literal timezone semantics differ
-# between engines — Spark re-applies what we decline, so declining is
+# between engines -- Spark re-applies what we decline, so declining is
 # always correct, never wrong)
 _PUSHABLE_TYPES = {
     "byte", "short", "int", "integer", "long", "bigint",
@@ -174,21 +174,13 @@ class WarehouseTableReader(DataSourceReader):
         return [InputPartition(i) for i in range(self.n_parts)]
 
     def _live_files(self) -> list[str]:
-        """The table's data files AT THIS INSTANT — the whole point of
-        the data source. Same read set as sinks.read_table: root part
-        files plus live (absorbed-filtered) batch dirs."""
+        """The table's data files AT THIS INSTANT -- the whole point of
+        the data source: the parquet files under sinks.live_paths, the
+        manifest-named read set read_table scans."""
         from roborock_data_pipeline_spark.sources import sinks
 
-        table_dir = sinks.table_path(self.warehouse_dir, self.table)
-        if not os.path.isdir(table_dir):
-            return []
-        files = [
-            os.path.join(table_dir, f)
-            for f in os.listdir(table_dir)
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        ]
-        for b in sinks.list_batches(self.warehouse_dir, self.table):
-            bdir = os.path.join(table_dir, b)
+        files = []
+        for bdir in sinks.live_paths(self.warehouse_dir, self.table):
             for root, _dirs, names in os.walk(bdir):
                 files.extend(
                     os.path.join(root, n)

@@ -1,12 +1,12 @@
-"""Streaming windowed aggregations + incremental sync (SURVEY §2.I
+"""Streaming windowed aggregations + incremental sync (SURVEY sec 2.I
 T1/T3/T6).
 
 - `hourly_rollup_stream`: the streaming twin of
-  operators/windows.py::q_tumbling_window — tumbling event-time
+  operators/windows.py::q_tumbling_window -- tumbling event-time
   window with a watermark for late data (the reference's
   string-compare watermark, pipeline.py:725-726, silently DROPS any
   late record; `withWatermark` admits bounded lateness instead).
-- `incremental_sync`: Trigger.AvailableNow file-source run — the
+- `incremental_sync`: Trigger.AvailableNow file-source run -- the
   exactly-once replacement for the reference's JSON-state one-shot
   sync (pipeline.py:472-572): the checkpoint replaces
   config/last_state.json, and state only advances when the sink
@@ -43,7 +43,7 @@ def events_stream(spark: SparkSession, sf_dir: str,
         reader = reader.option(k, v)
     raw = reader.load(f"{sf_dir}/events*")
     if unit == "ns":
-        # same ns→µs conversion as the batch loader
+        # same ns->us conversion as the batch loader
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return raw
 
@@ -71,7 +71,7 @@ def incremental_sync(
 ) -> None:
     """One Trigger.AvailableNow pass: process exactly the files not
     yet recorded in the checkpoint, append to the parquet sink,
-    stop. Re-running with the same checkpoint is a no-op — the
+    stop. Re-running with the same checkpoint is a no-op -- the
     idempotence invariant the reference enforces by hand with its
     counter file (state_manager.py:66-74)."""
     q = (
@@ -94,7 +94,7 @@ def dedup_stream(
     roborock_connect.py:118-141): a broker retry re-delivers the same
     reading, and the reference would double-append it to the sink.
     `dropDuplicatesWithinWatermark` keeps one row per key while the
-    key stays inside the watermark horizon — the state store holds
+    key stays inside the watermark horizon -- the state store holds
     O(events per lateness window), NOT O(stream history), so at
     100 TB/day the dedup state stays bounded and is sharded across
     executors by the key hash like any stateful operator.
@@ -105,13 +105,13 @@ def dedup_stream(
 
 
 def purchase_view_join_stream(events: DataFrame) -> DataFrame:
-    """T-EXT: stream-stream interval join — every purchase matched to
+    """T-EXT: stream-stream interval join -- every purchase matched to
     the same user's views in the preceding hour.
 
     Both sides carry watermarks so the join state is bounded: a
     buffered view can be dropped once event time passes view.ts + 1 h
     (no purchase can match it anymore), which Spark derives from the
-    time-range condition — state is O(events per hour), not O(stream).
+    time-range condition -- state is O(events per hour), not O(stream).
     Batch twin (same semantics, oracle-checked): operators/joins.py::
     q_view_purchase_pairs; equality is pinned in tests/test_streaming.py.
     """
@@ -146,7 +146,7 @@ def purchase_view_join_stream(events: DataFrame) -> DataFrame:
 
 
 def purchase_attribution_stream(events: DataFrame) -> DataFrame:
-    """T-EXT: watermarked stream-stream LEFT OUTER interval join —
+    """T-EXT: watermarked stream-stream LEFT OUTER interval join --
     every purchase attributed to a preceding-hour view when one
     exists, or emitted with a NULL view_id (organic purchase) once
     the watermark proves no matching view can still arrive.
@@ -154,7 +154,7 @@ def purchase_attribution_stream(events: DataFrame) -> DataFrame:
     The outer side is the part the inner join (purchase_view_join_
     stream) cannot express: a purchase with no view must wait until
     event time passes p_ts + 1 h before the engine may emit the
-    unmatched row — exactly the late-data contract `withWatermark`
+    unmatched row -- exactly the late-data contract `withWatermark`
     encodes. State stays O(events per hour) per the time-range
     condition; the NULL-emission check lives in
     tests/test_streaming.py::test_stream_left_outer_attribution.

@@ -1,13 +1,13 @@
-"""Stateful streaming anomaly detection (SURVEY §2.I T2 — second
+"""Stateful streaming anomaly detection (SURVEY sec 2.I T2 -- second
 custom stateful operator).
 
 The reference's monitor only detects categorical edges
-(cleaning→idle); a fleet pipeline also needs NUMERIC anomaly edges —
-a battery draining 10× too fast, an area counter jumping backwards.
+(cleaning->idle); a fleet pipeline also needs NUMERIC anomaly edges --
+a battery draining 10x too fast, an area counter jumping backwards.
 This operator keeps a per-device exponentially-weighted mean/variance
 (Welford-style EWMA) in `GroupState` and emits an alert row whenever
 a reading deviates more than `threshold` sigmas from the running
-estimate. EWMA state is three doubles per device — constant memory
+estimate. EWMA state is three doubles per device -- constant memory
 per key, checkpoint-durable, and the warm-up count gate stops the
 first readings from alerting on an uninitialized estimate.
 
@@ -80,7 +80,7 @@ def _detect_anomalies(
 
 
 def detect_anomalies_stream(readings: DataFrame) -> DataFrame:
-    """(device_name, ts, value) readings → alert rows, per-device
+    """(device_name, ts, value) readings -> alert rows, per-device
     EWMA state carried across micro-batches."""
     return readings.groupBy("device_name").applyInPandasWithState(
         _detect_anomalies,

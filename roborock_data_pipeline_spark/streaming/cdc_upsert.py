@@ -1,11 +1,11 @@
 """Streaming CDC upsert: maintain a keyed snapshot table from a
-change stream (SURVEY §2.I T3/T5 depth).
+change stream (SURVEY sec 2.I T3/T5 depth).
 
 This is the streaming production form of ``operators/linkage.
 cdc_merge``: each micro-batch merges into the stored snapshot inside
 ``foreachBatch`` and publishes atomically (staged-dir + rename, the
 same exactly-once discipline as ``sources/sinks.overwrite_rows``).
-The stored snapshot KEEPS tombstones — a deleted key must stay
+The stored snapshot KEEPS tombstones -- a deleted key must stay
 remembered so a late-arriving older version of it cannot resurrect;
 ``read_snapshot`` filters them out for consumers.
 
@@ -13,7 +13,7 @@ Exactly-once story: the checkpoint tracks which source files each
 batch consumed; the snapshot replace is a single atomic rename. A
 crash between sink write and checkpoint commit replays the batch,
 and the merge is idempotent (latest-writer-wins over the same rows
-yields the same snapshot), so replays are safe — the fix-class for
+yields the same snapshot), so replays are safe -- the fix-class for
 the reference's at-most-once T5 bug (reference pipeline.py:562-568,
 state saved before the write is confirmed).
 

@@ -1,34 +1,34 @@
 """Streaming near-dup pairs with BOUNDED state (VERDICT r10 #5).
 
 A raw streaming caller who hands ``blocked_pairs`` an unbounded
-embedding stream gets the banded stream-stream self-join — correct,
+embedding stream gets the banded stream-stream self-join -- correct,
 but its join state store retains every input row for the life of the
-query (×bands ×salt replicas): fine for a finite backfill, fatal for
+query (xbands xsalt replicas): fine for a finite backfill, fatal for
 a production feed (the r10 self-review documented exactly this).
 
-THIS module is the production entry point for "emit cos≥t pairs as
+THIS module is the production entry point for "emit cos>=t pairs as
 vectors arrive": the curation funnel's ``foreachBatch`` pattern
 promoted to a first-class near-dup-pairs surface. Each micro-batch
 runs the BATCH pair engine against the persisted semantic index
-(operators/incremental_semdedup) — new×new pairs within the batch,
-new×indexed pairs against everything ingested before it — and the
+(operators/incremental_semdedup) -- newxnew pairs within the batch,
+newxindexed pairs against everything ingested before it -- and the
 index absorbs the batch. Properties the stream-stream form cannot
 give:
 
 - ZERO streaming state: foreachBatch runs batch jobs, so the state
   store holds nothing (the test pins ``stateOperators == []`` across
-  ≥3 batches) — corpus memory lives in the INDEX, on disk,
+  >=3 batches) -- corpus memory lives in the INDEX, on disk,
   compactable, probe-pruned, instead of in executor state forever;
 - exactly-once pair emission under crash/replay: the epoch id is the
   index batch id, and a replayed epoch returns its committed pair
   set verbatim (the index's stored-pairs replay contract) while the
   pair sink's epoch-named publish is idempotent;
 - completeness: every qualifying pair is emitted exactly once, in
-  the batch its LATER member arrives (union over batches ≡ the
-  one-shot batch run on the whole corpus — pinned by test).
+  the batch its LATER member arrives (union over batches == the
+  one-shot batch run on the whole corpus -- pinned by test).
 
 Setup contract: the index must exist (``create_semantic_index`` on a
-training sample — frozen centroids are what make cell assignment
+training sample -- frozen centroids are what make cell assignment
 stable across batches).
 """
 
@@ -53,15 +53,25 @@ EPOCHS_LOCK_TTL_S = 60.0
 
 
 def _epochs_manifest(pairs_dir: str) -> dict | None:
-    """Committed epoch manifest, or None for the legacy listing
-    layout. Present-but-corrupt raises (the listing fallback would
-    resurrect uncommitted orphan dirs)."""
+    """Committed epoch manifest, or None for an absent or empty pairs
+    dir. Present-but-corrupt raises (the listing fallback would
+    resurrect uncommitted orphan dirs); so does a manifest-less dir
+    holding epoch dirs -- the rename-committed layout is unsupported."""
     import json
 
     raw = commit_provider.read_pointer(
         os.path.join(pairs_dir, EPOCHS_MANIFEST)
     )
     if raw is None:
+        if os.path.isdir(pairs_dir) and any(
+            d.startswith("epoch-") for d in os.listdir(pairs_dir)
+        ):
+            raise ValueError(
+                f"pairs dir {pairs_dir!r} holds epoch dirs but no "
+                f"{EPOCHS_MANIFEST}: the rename-committed layout is "
+                "unsupported -- rebuild it by replaying the stream into "
+                "a fresh dir"
+            )
         return None
     try:
         m = json.loads(raw)
@@ -97,21 +107,11 @@ PAIR_SCHEMA = T.StructType([
 
 
 def read_pairs(spark: SparkSession, pairs_dir: str) -> DataFrame:
-    """All pairs emitted so far (one dir per committed epoch). Layout
-    v2 (r12): committed epochs are resolved from `_epochs.json` — one
-    pointer read, no listing, object-store-safe; a pre-manifest pairs
-    dir falls back to the legacy epoch-dir listing."""
+    """All pairs emitted so far (one dir per committed epoch),
+    resolved from `_epochs.json` -- one pointer read, no listing,
+    object-store-safe."""
     m = _epochs_manifest(pairs_dir)
-    if m is not None:
-        dirs = [os.path.join(pairs_dir, d) for d in m["epochs"]]
-    else:
-        dirs = [
-            os.path.join(pairs_dir, d)
-            for d in (
-                os.listdir(pairs_dir) if os.path.isdir(pairs_dir) else []
-            )
-            if d.startswith("epoch-")
-        ]
+    dirs = [os.path.join(pairs_dir, d) for d in m["epochs"]] if m else []
     if not dirs:
         return spark.createDataFrame([], PAIR_SCHEMA)
     return spark.read.schema(PAIR_SCHEMA).parquet(*dirs)
@@ -129,7 +129,7 @@ def near_dup_pairs_stream(
 ) -> StreamingQuery:
     """Start the bounded-state near-dup pair stream over a parquet
     file source of embeddings. Returns the started query
-    (``availableNow``: drains the current source then stops — rerun
+    (``availableNow``: drains the current source then stops -- rerun
     on a schedule for continuous ingest; the checkpoint makes reruns
     incremental)."""
     stream = spark.readStream.schema(EMB_STREAM_SCHEMA)
@@ -149,17 +149,7 @@ def near_dup_pairs_stream(
         dname = f"epoch-{epoch_id:012d}"
         dest = os.path.join(pairs_dir, dname)
         m = _epochs_manifest(pairs_dir)
-        legacy_epochs = [
-            d
-            for d in (
-                os.listdir(pairs_dir) if os.path.isdir(pairs_dir) else []
-            )
-            if d.startswith("epoch-")
-        ] if m is None else []
-        committed = (
-            dname in m["epochs"] if m is not None else dname in legacy_epochs
-        )
-        if committed:
+        if m is not None and dname in m["epochs"]:
             return  # replayed epoch: pairs already published
         staged = os.path.join(
             pairs_dir, ".staging", f"epoch-{epoch_id}-{uuid.uuid4().hex[:8]}"
@@ -168,13 +158,10 @@ def near_dup_pairs_stream(
             pairs.select("vec_id_1", "vec_id_2", "cosine").write.mode(
                 "overwrite"
             ).parquet(staged)
-            # The rename only NAMES the epoch dir (invisible — readers
+            # The rename only NAMES the epoch dir (invisible -- readers
             # resolve the manifest); the COMMIT is one pointer swap
             # under the naming lock. A crashed attempt's orphan dir is
-            # clobbered so the checkpoint replay converges. r13
-            # sunset: the legacy rename-commit write branch is gone —
-            # a pre-manifest pairs dir is migrated in this same locked
-            # commit (its epoch-dir listing IS the committed set).
+            # clobbered so the checkpoint replay converges.
             os.makedirs(pairs_dir, exist_ok=True)
             for d in os.listdir(pairs_dir):
                 # sweep a killed epoch's undeleted trash (already out
@@ -190,22 +177,13 @@ def near_dup_pairs_stream(
             ):
                 cur = _epochs_manifest(pairs_dir)
                 if cur is None:
-                    listed = [
-                        d
-                        for d in os.listdir(pairs_dir)
-                        if d.startswith("epoch-")
-                    ]
-                    if listed:  # legacy migration folds into this commit
-                        cur = {"generation": -1, "epochs": listed}
-                    else:
-                        # fresh dir: bootstrap an empty gen-0 manifest
-                        # BEFORE the naming rename, so a crash between
-                        # rename and commit leaves a detectable orphan
-                        # (not a dir a retry mis-reads as legacy)
-                        _commit_epochs(pairs_dir, [], 0)
-                        cur = {"generation": 0, "epochs": []}
+                    # fresh dir: bootstrap an empty gen-0 manifest
+                    # BEFORE the naming rename, so a crash between
+                    # rename and commit leaves a detectable orphan
+                    _commit_epochs(pairs_dir, [], 0)
+                    cur = {"generation": 0, "epochs": []}
                 if dname in cur["epochs"]:
-                    return  # concurrent replay (or legacy commit) won
+                    return  # concurrent replay won
                 if os.path.isdir(dest):
                     # crashed attempt's orphan: trash-rename inside
                     # the lock (metadata-only), delete after release

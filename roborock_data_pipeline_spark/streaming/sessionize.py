@@ -1,13 +1,13 @@
-"""Stateful streaming sessionization (SURVEY §2.I T2).
+"""Stateful streaming sessionization (SURVEY sec 2.I T2).
 
 The reference's continuous monitor (pipeline.py:92-196) keeps two
-in-memory dicts keyed by device — previous status and
-session-start battery — and emits a CleaningRecord when a device
-transitions cleaning→idle. State dies with the process (§3.3).
+in-memory dicts keyed by device -- previous status and
+session-start battery -- and emits a CleaningRecord when a device
+transitions cleaning->idle. State dies with the process (sec 3.3).
 
 Streaming twin here: `applyInPandasWithState` keyed by device with a
 (prev_state, start_battery, start_ts) state tuple, checkpointable so
-state survives restarts — strictly better than the reference. The
+state survives restarts -- strictly better than the reference. The
 batch-expressible shape (oracle-checked) is operators/windows.py::
 q_session_edges; this module is the live-stream form, exercised by
 tests/test_streaming.py via the in-memory sink.
@@ -26,7 +26,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from roborock_data_pipeline_spark.schemas import CLEANING_STATES, IDLE_STATES
 
 # Emitted on each detected session end (cf. CleaningRecord,
-# roborock_collector.py:16-28 — the live-captured shape).
+# roborock_collector.py:16-28 -- the live-captured shape).
 SESSION_SCHEMA = T.StructType([
     T.StructField("device_name", T.StringType(), False),
     T.StructField("session_start", T.TimestampType(), True),
@@ -57,7 +57,7 @@ def _detect_sessions(
     out = []
     # a device's micro-batch group can span multiple Arrow chunks
     # (>maxRecordsPerBatch rows) delivered in arbitrary relative
-    # order — concatenate before sorting or edges come out wrong
+    # order -- concatenate before sorting or edges come out wrong
     chunks = [pdf for pdf in batches if len(pdf)]
     if chunks:
         pdf = pd.concat(chunks, ignore_index=True).sort_values("ts")
@@ -94,7 +94,7 @@ def _detect_sessions(
 
 
 def detect_sessions_stream(status_stream: DataFrame) -> DataFrame:
-    """status ticks (device_name, ts, state, battery) → completed
+    """status ticks (device_name, ts, state, battery) -> completed
     sessions, as an unbounded stream with per-device state."""
     return status_stream.groupBy("device_name").applyInPandasWithState(
         _detect_sessions,

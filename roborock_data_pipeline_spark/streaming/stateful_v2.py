@@ -3,8 +3,8 @@
 The reference's record-sync keeps its per-device "what have I already
 written" watermark by re-reading the sink (pipeline.py:97-99 twin);
 round 1 rebuilt that as `applyInPandasWithState`. Spark 4 ships the
-successor API — `StatefulProcessor` with named, independently-typed
-state variables, timers, and TTL — which is where new custom stateful
+successor API -- `StatefulProcessor` with named, independently-typed
+state variables, timers, and TTL -- which is where new custom stateful
 operators should land: state schema evolves per-variable instead of
 one monolithic tuple, and the runtime can expire state without the
 operator hand-rolling timeout bookkeeping.
@@ -12,16 +12,16 @@ operator hand-rolling timeout bookkeeping.
 This module ports the *running per-user totals* semantics (the T5
 exactly-once counter) to the v2 API: one `ValueState` holding
 (n_events, total_value), updated per micro-batch, emitting the
-post-batch totals for every user seen in the batch — the streaming
+post-batch totals for every user seen in the batch -- the streaming
 twin of `q_lifetime_summary`'s batch aggregation.
 
 100 TB posture: state is two numbers per user key, hash-partitioned
-by the stream's groupBy — RocksDB state backend holds billions of
+by the stream's groupBy -- RocksDB state backend holds billions of
 keys; emission is one row per active key per batch, so downstream
 sinks see update-mode deltas, never a full state dump.
 
 Environment note: the v2 state protocol rides google.protobuf, which
-this container does not ship — ``running_totals_stream`` therefore
+this container does not ship -- ``running_totals_stream`` therefore
 auto-falls back to the GA ``applyInPandasWithState`` API with
 identical semantics (VERDICT r3 #4), so the operator and its test run
 everywhere; on a standard cluster (protobuf present) it runs the v2
@@ -94,7 +94,7 @@ def running_totals_stream(events: DataFrame, api: str = "auto") -> DataFrame:
 
     ``events`` is a streaming DataFrame with at least
     (user_id long, value double). Returns update-mode rows
-    (user_id, n_events, total_value) — the lifetime totals after each
+    (user_id, n_events, total_value) -- the lifetime totals after each
     micro-batch, exactly-once under checkpointing because state and
     offsets commit atomically (the fix for reference
     pipeline.py:562-568's read-modify-write race).

@@ -1,25 +1,25 @@
 """Streaming trending leaderboard: incremental hourly counts +
-ranked snapshot (SURVEY §2.I depth — the streaming twin of
+ranked snapshot (SURVEY sec 2.I depth -- the streaming twin of
 operators/analytics.q_trending).
 
 Rank-over-aggregate is not expressible in an append-mode streaming
 plan (ranking needs the *final* counts per window); the production
 pattern is ``foreachBatch``: each micro-batch delivers delta counts,
 which merge additively into a stored (window, type) totals table,
-and the top-k leaderboard is recomputed from that *tiny* table —
-never from events — and published atomically.
+and the top-k leaderboard is recomputed from that *tiny* table --
+never from events -- and published atomically.
 
 Exactly-once story (same as cdc_upsert): the checkpoint pins which
 files each batch consumed; the totals merge keys on (window, type,
 batch) deltas re-aggregated from scratch per publish, and the swap
-is one rename — a replayed batch overwrites with identical totals,
+is one rename -- a replayed batch overwrites with identical totals,
 so replays converge instead of double-counting. (The totals table
 stores per-batch deltas keyed by batch_id, making re-publication of
 the same batch idempotent.)
 
-At 100 TB: batch deltas are |windows_touched|×|types| rows; the
-stored totals table is O(hours × types); the leaderboard rank sorts
-per-window groups of ≤|types| rows. Events are aggregated exactly
+At 100 TB: batch deltas are |windows_touched|x|types| rows; the
+stored totals table is O(hours x types); the leaderboard rank sorts
+per-window groups of <=|types| rows. Events are aggregated exactly
 once, in their arrival batch.
 """
 
@@ -37,7 +37,7 @@ TOP_K = 3
 
 
 def leaderboard(totals: DataFrame, k: int = TOP_K) -> DataFrame:
-    """Top-k per hour from a (win, event_type, cnt) totals table —
+    """Top-k per hour from a (win, event_type, cnt) totals table --
     identical ordering contract to the batch q_trending."""
     rw = Window.partitionBy("win").orderBy(F.col("cnt").desc(), "event_type")
     return (
@@ -84,7 +84,7 @@ def trending_stream(
         except Exception:
             totals = delta
         # cut lineage to the CURRENT deltas files before the swap
-        # replaces them — both publishes below read the materialized
+        # replaces them -- both publishes below read the materialized
         # totals, not the about-to-vanish parquet
         totals = totals.localCheckpoint(eager=True)
         sinks.overwrite_rows(totals, warehouse_dir, DELTAS_TABLE)

@@ -15,7 +15,7 @@ SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 # identity) for the whole session — the runnable form of the
 # deployment recipe ("swapping BACKEND is the entire port"). Tests
 # that are inherently local-FS-shaped (corrupting a pointer FILE on
-# disk, constructing a legacy rename layout, injecting os.replace
+# disk, planting an unsupported older layout, injecting os.replace
 # faults) declare it with the `local_fs_only` marker.
 _BACKEND = os.environ.get("SPARK_GRAFT_COMMIT_BACKEND", "local-fs")
 if _BACKEND == "memory":
@@ -29,8 +29,8 @@ if _BACKEND == "memory":
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",
-        "local_fs_only(reason): test manipulates pointer FILES or the "
-        "legacy rename layout directly - meaningless on the in-memory "
+        "local_fs_only(reason): test manipulates pointer FILES or an "
+        "older on-disk layout directly - meaningless on the in-memory "
         "object-store backend",
     )
     config.addinivalue_line(

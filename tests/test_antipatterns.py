@@ -8,7 +8,8 @@ scale posture as a test instead of a per-round re-grep:
 - driver-side .collect() stays confined to the files where it is
   documented metadata-sized (dates, centroids, codebooks, manifest
   state) — a new collect anywhere forces a conscious allowlist edit;
-- no RDD API on the query path (DataFrame-only engine).
+- no RDD API on the query path (DataFrame-only engine);
+- engine sources are ASCII-only.
 """
 
 from __future__ import annotations
@@ -115,10 +116,10 @@ def test_driver_collects_stay_metadata_sized():
 # r13 (VERDICT r12 #1 done-condition): NO os.replace may make a
 # target reader-visible — a rename is either (a) inside
 # commit_provider itself (the local-FS form of the atomic pointer
-# PUT / rename-aside steal), (b) pure NAMING under a naming lock
-# (the dir stays invisible until a manifest/pointer commit), or
-# (c) a one-time read+migrate layout upgrade. Adding a rename
-# anywhere else must fail this pin and force a conscious review.
+# PUT / rename-aside steal) or (b) pure NAMING under a naming lock
+# (the dir stays invisible until a manifest/pointer commit). Adding a
+# rename anywhere else must fail this pin and force a conscious
+# review.
 REPLACE_ALLOW = {
     # (a) the provider's own primitives
     "sources/commit_provider.py": 2,   # swap_pointer tmp->path; steal aside
@@ -129,14 +130,10 @@ REPLACE_ALLOW = {
     "operators/index_segments.py": 3,  # publish/commit_base naming + trash rename
     "operators/funnel_txn.py": 1,      # roll-forward naming (record = commit)
     "streaming/near_dup_pairs.py": 2,  # epoch naming + trash rename
-    "sources/sinks.py": 9,             # append/overwrite/DML-rw/merge-base
-                                       # naming under _manifest_lock (4 sites)
-                                       # + migrate_root_file_table's naming
-                                       # (r14, same pattern: invisible until
-                                       # the gen-0 manifest swap),
-                                       # plus (c) _migrate_legacy_partitions'
-                                       # one-time layout upgrade (3 calls +
-                                       # the crashed-attempt heal move-back)
+    "sources/sinks.py": 5,             # append/overwrite/DML-rw/merge-base
+                                       # naming under _manifest_lock, and
+                                       # overwrite_partitions' version-dir
+                                       # naming (commit = _partitions.json)
     # local build artifact (executor zip), not a data commit
     "session.py": 1,
 }
@@ -158,3 +155,13 @@ def test_no_reader_visible_os_replace_outside_the_seam():
         f"commit_provider / versioned_dir instead): {unexpected}"
     )
     assert over == [], f"os.replace count grew: {over}"
+
+
+def test_engine_sources_are_ascii_only():
+    offenders = []
+    for rel, src in _engine_files():
+        for n, line in enumerate(src.splitlines(), 1):
+            bad = sorted({c for c in line if ord(c) > 127})
+            if bad:
+                offenders.append(f"{rel}:{n}: {''.join(bad)!r}")
+    assert offenders == [], f"non-ASCII in engine sources: {offenders[:20]}"

@@ -7,10 +7,7 @@ form: one atomic manifest PUT). These tests pin:
 - chaos at every new window (append / vacuum / DML, pre- and
   post-commit crashes): readers always see a committed generation,
   orphans are invisible and GC'd by the next vacuum;
-- both layouts stay green on the core flow (append → read → as-of →
-  DML → vacuum) with identical results;
-- in-place migration from the rename layout (absorbed leftovers not
-  promoted, appends linearized, idempotent);
+- the core flow (append → read → as-of → DML → vacuum) end to end;
 - fold identity across v2 DML rewrites (batch_fold_id);
 - manifest-lock fencing (a stolen lock's holder cannot publish).
 """
@@ -62,18 +59,6 @@ def _manifest(wh):
         sinks.table_path(wh, "cleaning_records"), sinks.BATCHES_MANIFEST
     )
     return json.loads(commit_provider.read_pointer(p))
-
-
-def _strip_manifest(w, name="cleaning_records"):
-    """Construct a legacy rename-layout table from a committed one:
-    deleting `_batches.json` leaves exactly the pre-r11 byte layout
-    (commit = dir presence, absorbed-filtered listing). r13 removed
-    the legacy WRITE path, so tests build legacy states this way —
-    only valid on tables whose live set equals the dir listing (pure
-    appends, or post-vacuum with leftovers stranded explicitly)."""
-    p = os.path.join(sinks.table_path(w, name), sinks.BATCHES_MANIFEST)
-    if os.path.exists(p):
-        os.unlink(p)
 
 
 def _rows(spark, wh):
@@ -329,33 +314,20 @@ def test_corrupt_manifest_refuses_listing_fallback(spark, wh):
 
 
 # --------------------------------------------------------------- #
-# both layouts: identical core-flow semantics                      #
+# core flow end to end                                             #
 # --------------------------------------------------------------- #
 
 
-@pytest.mark.parametrize(
-    "layout",
-    [
-        pytest.param(
-            "legacy",
-            marks=pytest.mark.local_fs_only(
-                "legacy rename layout is a local-FS artifact"
-            ),
-        ),
-        "manifest",
-    ],
-)
+@pytest.mark.parametrize("layout", ["manifest"])
 def test_core_flow_identical_on_both_layouts(spark, tmp_path, layout):
-    """Reads are identical on a legacy (pre-r11) table and a manifest
-    one; the first WRITE on a legacy table migrates it in place (r13
-    sunset) and the whole DML/vacuum flow proceeds on the manifest."""
+    """append → read → as-of → DML → vacuum on the manifest layout
+    (the one supported layout; older ones are refused by name —
+    tests/test_layout_contract.py)."""
     w = str(tmp_path / f"wh-{layout}")
     sinks.setup_warehouse(spark, w)
     stamps = []
     for i in range(5):
         sinks.append_rows(_mk(spark, i), w, "cleaning_records")
-        if layout == "legacy":
-            _strip_manifest(w)  # keep the table on the legacy listing
         stamps.append(
             int(
                 sinks._batch_ns_prefix(
@@ -363,15 +335,6 @@ def test_core_flow_identical_on_both_layouts(spark, tmp_path, layout):
                 )
             )
         )
-    from roborock_data_pipeline_spark.sources import commit_provider
-
-    has_manifest = commit_provider.read_pointer(
-        os.path.join(
-            sinks.table_path(w, "cleaning_records"),
-            sinks.BATCHES_MANIFEST,
-        )
-    ) is not None
-    assert has_manifest == (layout == "manifest")
     assert _rows(spark, w) == 5
     assert (
         sinks.read_table_as_of(
@@ -384,14 +347,6 @@ def test_core_flow_identical_on_both_layouts(spark, tmp_path, layout):
     )
     assert res["rows_deleted"] == 1
     assert _rows(spark, w) == 4
-    # r13: the write refused to extend the legacy layout — it
-    # migrated first, so the manifest now governs on BOTH arms
-    assert commit_provider.read_pointer(
-        os.path.join(
-            sinks.table_path(w, "cleaning_records"),
-            sinks.BATCHES_MANIFEST,
-        )
-    ) is not None
     assert sinks.vacuum_table(
         spark, w, "cleaning_records", retain_last_n=2
     ) == 3
@@ -403,45 +358,6 @@ def test_core_flow_identical_on_both_layouts(spark, tmp_path, layout):
         ).count()
         == 4
     )
-
-
-# --------------------------------------------------------------- #
-# migration in place                                               #
-# --------------------------------------------------------------- #
-
-
-@pytest.mark.local_fs_only("legacy rename layout is a local-FS artifact (constructed by deleting the manifest file)")
-def test_migration_from_rename_layout(spark, tmp_path, monkeypatch):
-    w = str(tmp_path / "wh-mig")
-    sinks.setup_warehouse(spark, w)
-    for i in range(4):
-        sinks.append_rows(_mk(spark, i), w, "cleaning_records")
-    sinks.vacuum_table(spark, w, "cleaning_records", retain_last_n=2)
-    td = sinks.table_path(w, "cleaning_records")
-    _strip_manifest(w)  # pre-r11 layout: base + retained batch dirs
-    # strand a crashed-vacuum leftover: a dir named by the base's
-    # absorbed manifest, back on disk
-    base = next(
-        b
-        for b in sinks.list_batches(w, "cleaning_records")
-        if b.endswith(sinks.VACUUM_BASE_SUFFIX)
-    )
-    leftover = sinks._base_absorbed(os.path.join(td, base))[0]
-    os.makedirs(os.path.join(td, leftover))
-    before = sinks.list_batches(w, "cleaning_records")
-    before_rows = _rows(spark, w)
-
-    gen = sinks.migrate_batch_manifest(w, "cleaning_records")
-    assert gen == 0
-    assert sinks.migrate_batch_manifest(w, "cleaning_records") == 0  # idem
-    assert sinks.list_batches(w, "cleaning_records") == before
-    assert leftover not in sinks.list_batches(w, "cleaning_records")
-    assert _rows(spark, w) == before_rows
-    # post-migration appends commit through the manifest
-    sinks.append_rows(_mk(spark, 9), w, "cleaning_records")
-    m = _manifest(w)
-    assert m["generation"] == 1
-    assert _rows(spark, w) == before_rows + 1
 
 
 # --------------------------------------------------------------- #
@@ -502,30 +418,6 @@ def test_incremental_refresh_not_double_counted_by_dml(
         for r in sinks.read_table(spark, wh, "daily_summary").collect()
     }
     assert gold1 == gold0
-
-
-@pytest.mark.local_fs_only("legacy rename layout is a local-FS artifact")
-def test_maintenance_migrates_whole_warehouse(spark, tmp_path, monkeypatch):
-    """warehouse_maintenance(migrate_layout=True) is the rollout
-    path: every legacy batch-log table converts to the manifest
-    layout in one maintenance window, reads unchanged; fresh or
-    already-migrated tables are untouched (idempotent)."""
-    w = str(tmp_path / "wh-roll")
-    sinks.setup_warehouse(spark, w)
-    for i in range(3):
-        sinks.append_rows(_mk(spark, i), w, "cleaning_records")
-    _strip_manifest(w)
-    before = _rows(spark, w)
-    sinks.warehouse_maintenance(spark, w, retain_last_n=24,
-                                migrate_layout=True)
-    td = sinks.table_path(w, "cleaning_records")
-    assert os.path.exists(os.path.join(td, sinks.BATCHES_MANIFEST))
-    assert _rows(spark, w) == before
-    # idempotent second pass; post-migration append goes through v2
-    sinks.warehouse_maintenance(spark, w, retain_last_n=24,
-                                migrate_layout=True)
-    sinks.append_rows(_mk(spark, 9), w, "cleaning_records")
-    assert _rows(spark, w) == before + 1
 
 
 _MANIFEST_SIGSTOP_CHILD = r"""
@@ -672,12 +564,16 @@ def test_vacuum_aborts_when_absorbed_batches_replaced(spark, wh):
     survivor = [b for b in m["live"] if b not in old]
     from roborock_data_pipeline_spark.sources import commit_provider
 
+    mpath = os.path.join(td, sinks.BATCHES_MANIFEST)
     commit_provider.BACKEND.swap_pointer(
-        os.path.join(td, sinks.BATCHES_MANIFEST),
+        mpath,
         json.dumps(
             {"generation": m["generation"] + 1, "live": survivor}
         ).encode(),
     )
+    # the out-of-tree commit has landed: drain a possible modeled-stale
+    # read (the raw swap skips commit_pointer's verified read-back)
+    commit_provider.read_pointer(mpath)
     with pytest.raises(sinks.ConcurrentWriterError, match="resurrect"):
         sinks._merge_batches(spark, wh, "cleaning_records", old)
     after = _manifest(wh)
@@ -719,43 +615,3 @@ def test_snapshot_stamp_lands_before_data_commit(spark, wh, monkeypatch):
     assert sinks._manifest(wh, "daily_summary").get("layout") == "snapshot"
     with pytest.raises(ValueError, match="snapshot"):
         sinks.delete_rows(spark, wh, "daily_summary", "1=1")
-
-
-@pytest.mark.local_fs_only("legacy rename layout is a local-FS artifact")
-def test_legacy_layout_sunset_grace_then_migrate(spark, tmp_path):
-    """r12 sunset (VERDICT r11 #8): a legacy table met by DEFAULT
-    maintenance is stamped with a sunset notice on the first pass
-    (surfaced by describe_table.layout_sunset) and auto-migrated on
-    the next; migrate_layout=False opts out permanently."""
-    w = str(tmp_path / "wh")
-    sinks.setup_warehouse(spark, w)
-    for i in range(2):
-        sinks.append_rows(_mk(spark, i), w, "cleaning_records")
-    _strip_manifest(w)
-    d = sinks.describe_table(w, "cleaning_records")
-    assert d["layout"] == "rename" and "pending" in d["layout_sunset"]
-    # pass 1: notice stamped, still legacy
-    sinks.warehouse_maintenance(spark, w, retain_last_n=24)
-    d = sinks.describe_table(w, "cleaning_records")
-    assert d["layout"] == "rename"
-    assert "auto-migrates" in d["layout_sunset"]
-    # pass 2: migrated in place, content intact
-    sinks.warehouse_maintenance(spark, w, retain_last_n=24)
-    d = sinks.describe_table(w, "cleaning_records")
-    assert d["layout"] == "batch-manifest" and d["layout_sunset"] is None
-    assert sinks.read_table(spark, w, "cleaning_records").count() == 2
-
-
-@pytest.mark.local_fs_only("legacy rename layout is a local-FS artifact")
-def test_legacy_layout_sunset_opt_out(spark, tmp_path):
-    w = str(tmp_path / "wh")
-    sinks.setup_warehouse(spark, w)
-    sinks.append_rows(_mk(spark, 1), w, "cleaning_records")
-    _strip_manifest(w)
-    for _ in range(3):
-        sinks.warehouse_maintenance(
-            spark, w, retain_last_n=24, migrate_layout=False
-        )
-    assert (
-        sinks.describe_table(w, "cleaning_records")["layout"] == "rename"
-    )

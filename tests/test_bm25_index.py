@@ -148,67 +148,25 @@ def test_probe_reads_postings_and_stats_only(spark, sf_dir, idx):
     assert "postings" in plan and "stats" in plan
 
 
-def _legacy_segment(spark, docs, seg_dir):
-    """Write an r11-layout segment: 3-column postings + a separate
-    doclens table + stats."""
+def test_doclens_segment_refused(spark, sf_dir, tmp_path):
+    """A segment keeping doc lengths in a separate ``doclens/`` table
+    (postings without ``dl``) would score with null lengths: probe and
+    compaction refuse it by name instead."""
+    from roborock_data_pipeline_spark.operators import index_segments
     from roborock_data_pipeline_spark.operators.incremental_bm25 import (
         _doclens,
         _postings,
     )
 
-    post = _postings(docs)
-    dl = _doclens(docs)
-    post.write.mode("overwrite").parquet(os.path.join(seg_dir, "postings"))
-    dl.write.mode("overwrite").parquet(os.path.join(seg_dir, "doclens"))
-    dl.groupBy().agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl"),
-    ).write.mode("overwrite").parquet(os.path.join(seg_dir, "stats"))
-
-
-def test_legacy_doclens_segments_probe_and_migrate(
-    spark, sf_dir, tmp_path
-):
-    """An r11 index (doclens-table layout) keeps probing correctly,
-    mixed legacy+v2 segments agree with the ad-hoc query, and ONE
-    compaction rewrites everything into the denormalized layout."""
-    d = str(tmp_path / "legacy")
+    d = str(tmp_path / "old")
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    os.makedirs(d, exist_ok=True)
-    _legacy_segment(
-        spark, docs.where(F.col("doc_id") % 2 == 0),
-        os.path.join(d, "batch-l0"),
-    )
-    # v2 ingest lands next to the legacy segment
-    update_bm25_index(
-        spark, docs.where(F.col("doc_id") % 2 == 1), d, batch_id="v1"
-    )
-    terms = _corpus_terms(spark, sf_dir)
-    expected = _scores(q_bm25_search(spark, sf_dir))
-    assert _scores(probe_bm25_index(spark, d, terms)) == expected
-    # compaction == migration: doclens gone, probe unchanged, and the
-    # compacted probe plan is doclens-free
-    assert compact_bm25_index(spark, d) == 2
-    from roborock_data_pipeline_spark.operators.index_segments import (
-        live_segments,
-    )
-
-    base, batches = live_segments(d)
-    assert base is not None and not batches
-    assert not os.path.isdir(os.path.join(base, "doclens"))
-    assert _scores(probe_bm25_index(spark, d, terms)) == expected
-
-
-def test_single_legacy_base_migrates(spark, sf_dir, tmp_path):
-    """A fully-compacted r11 index (one legacy base, nothing else)
-    still migrates: compaction is not a no-op while any legacy
-    segment remains."""
-    d = str(tmp_path / "legacy-only")
-    docs = load(spark, sf_dir, "documents").select("doc_id", "text")
-    os.makedirs(d, exist_ok=True)
-    _legacy_segment(spark, docs, os.path.join(d, "batch-l0"))
-    terms = _corpus_terms(spark, sf_dir)
-    before = _scores(probe_bm25_index(spark, d, terms))
-    assert compact_bm25_index(spark, d) == 1
-    assert compact_bm25_index(spark, d) == 0  # now truly compact
-    assert _scores(probe_bm25_index(spark, d, terms)) == before
+    index_segments.ensure_manifest(d)
+    seg = os.path.join(d, "batch-l0")
+    _postings(docs).write.parquet(os.path.join(seg, "postings"))
+    _doclens(docs).write.parquet(os.path.join(seg, "doclens"))
+    index_segments.register_segment(d, "batch-l0")
+    with pytest.raises(ValueError, match="doclens") as exc:
+        probe_bm25_index(spark, d, ["alpha"])
+    assert seg in str(exc.value)
+    with pytest.raises(ValueError, match="doclens"):
+        compact_bm25_index(spark, d)

@@ -83,22 +83,11 @@ def _backdate_last_batch(warehouse, below_ns: str) -> str:
 # --- unit: selection / state algebra -------------------------------
 
 
-def test_parse_legacy_watermark_treats_band_as_folded():
-    st = pipeline._parse_fold_state("00000000000000000042")
-    assert st["wm"] == "00000000000000000042"
-    assert st["legacy"] is True
-    # legacy state has no folded set: the band below the watermark
-    # must NOT be re-selected (pre-migration batches were folded)
-    batches = ["batch-00000000000000000041-aaaa", "batch-00000000000000000043-bbbb"]
-    assert pipeline._select_unfolded(batches, st) == ([batches[1]], [])
-
-
 def test_select_unfolded_grace_band_dedup():
     wm = 10**18
     st = {
         "wm": f"{wm:020d}",
         "folded": [f"batch-{wm:020d}-ffff"],
-        "legacy": False,
     }
     in_band_new = f"batch-{wm - 5:020d}-aaaa"
     below_band = f"batch-{wm - pipeline.FOLD_GRACE_NS - 1:020d}-bbbb"
@@ -117,7 +106,7 @@ def test_in_band_vacuum_base_proven_folded_is_skipped(tmp_path):
     folded_id = f"batch-{wm:020d}-ffff"
     below = f"batch-{wm - pipeline.FOLD_GRACE_NS - 1:020d}-oldd"
     unknown = f"batch-{wm - 3:020d}-unkn"
-    st = {"wm": f"{wm:020d}", "folded": [folded_id], "legacy": False}
+    st = {"wm": f"{wm:020d}", "folded": [folded_id]}
 
     def _mk_base(name, absorbed):
         d = tmp_path / name
@@ -140,7 +129,7 @@ def test_in_band_vacuum_base_proven_folded_is_skipped(tmp_path):
 
 def test_advance_fold_state_never_regresses_and_prunes():
     wm = 10**18
-    st = {"wm": f"{wm:020d}", "folded": [], "legacy": False}
+    st = {"wm": f"{wm:020d}", "folded": []}
     late = f"batch-{wm - 7:020d}-aaaa"
     nxt = pipeline._advance_fold_state(st, [late])
     # a late fold must not pull the watermark back
@@ -149,7 +138,7 @@ def test_advance_fold_state_never_regresses_and_prunes():
     # ids falling below the grace floor are pruned (bounded state)
     old = f"batch-{wm - pipeline.FOLD_GRACE_NS - 10:020d}-oooo"
     nxt2 = pipeline._advance_fold_state(
-        {"wm": st["wm"], "folded": [old, late], "legacy": False}, []
+        {"wm": st["wm"], "folded": [old, late]}, []
     )
     assert old not in nxt2["folded"] and late in nxt2["folded"]
 
@@ -193,8 +182,7 @@ def test_lifetime_refresh_folds_late_publish_without_double_count(
         pipeline._lifetime_live(warehouse),
         pipeline.LIFETIME_WATERMARK,
     )
-    with open(wm_file) as fh:
-        wm = pipeline._parse_fold_state(fh.read())["wm"]
+    wm = pipeline._read_fold_state(wm_file)["wm"]
 
     _append(spark, warehouse, [_rec(2, "robo-a", 30.0, 40)])
     _backdate_last_batch(warehouse, wm)
@@ -206,36 +194,6 @@ def test_lifetime_refresh_folds_late_publish_without_double_count(
     assert row["total_clean_count"] == 2
     assert row["total_clean_area"] == 40.0
     assert row["total_clean_time"] == 60
-
-
-def test_lifetime_legacy_watermark_file_migrates(spark, warehouse):
-    """A pre-grace plain-stamp watermark file reads as legacy state
-    (whole band folded) and upgrades to JSON on the next refresh."""
-    _append(spark, warehouse, [_rec(1, "robo-a", 10.0, 20)])
-    pipeline.refresh_device_lifetime(spark, warehouse)
-    # r13: the watermark lives INSIDE the pointer-resolved live
-    # snapshot version dir (data + watermark commit in one swap)
-    wm_file = os.path.join(
-        pipeline._lifetime_live(warehouse),
-        pipeline.LIFETIME_WATERMARK,
-    )
-    with open(wm_file) as fh:
-        wm = pipeline._parse_fold_state(fh.read())["wm"]
-    with open(wm_file, "w") as fh:
-        fh.write(wm)  # rewrite in the legacy plain-stamp format
-
-    # legacy band is treated as folded: no refold, no double count
-    assert pipeline.refresh_device_lifetime(spark, warehouse)["mode"] == "noop"
-    _append(spark, warehouse, [_rec(2, "robo-a", 30.0, 40)])
-    assert pipeline.refresh_device_lifetime(spark, warehouse)["mode"] == "delta"
-    # re-resolve: the delta refresh published a NEW snapshot version
-    wm_file = os.path.join(
-        pipeline._lifetime_live(warehouse), pipeline.LIFETIME_WATERMARK
-    )
-    with open(wm_file) as fh:
-        assert json.loads(fh.read())["folded"]  # upgraded format
-    row = pipeline.read_device_lifetime(spark, warehouse).collect()[0]
-    assert row["total_clean_count"] == 2
 
 
 # --- property: exactly-once under arbitrary in-contract schedules ---
@@ -275,7 +233,7 @@ def test_every_in_contract_publish_folds_exactly_once(events):
     against the fold-state algebra. Every batch must be selected
     EXACTLY once across all refreshes, and the watermark must never
     regress."""
-    state = pipeline._parse_fold_state("")
+    state = pipeline._read_fold_state(None)
     live: list[str] = []
     fold_counts: dict[str, int] = {}
     hi = BASE_NS
@@ -326,8 +284,7 @@ def test_noop_refresh_records_proven_folded_base(spark, warehouse):
         pipeline._lifetime_live(warehouse),
         pipeline.LIFETIME_WATERMARK,
     )
-    with open(wm_file) as fh:
-        assert base in pipeline._parse_fold_state(fh.read())["folded"]
+    assert base in pipeline._read_fold_state(wm_file)["folded"]
     row = pipeline.read_device_lifetime(spark, warehouse).collect()[0]
     assert row["total_clean_count"] == 2
 
@@ -341,7 +298,6 @@ def test_warehouse_health_surfaces_fold_and_lock_signals(spark, warehouse):
     g0 = h0[pipeline.GOLD_PART_TABLE]
     assert g0["fold_watermark_age_s"] is None
     assert g0["fold_grace_band_folded"] == 0
-    assert g0["fold_legacy_state"] is False
     assert h0["cleaning_records"]["lock_holder_pid"] is None
     assert h0["cleaning_records"]["lock_stale"] is False
 
@@ -355,7 +311,6 @@ def test_warehouse_health_surfaces_fold_and_lock_signals(spark, warehouse):
         # batch sits in the grace band
         assert 0 <= f["fold_watermark_age_s"] < 600, table
         assert f["fold_grace_band_folded"] >= 1, table
-        assert f["fold_legacy_state"] is False, table
 
     # a held lease surfaces through the same snapshot
     with sinks.writer_lock(warehouse, "cleaning_records"):

@@ -3,8 +3,7 @@ base commits go through ONE `_segments.json` pointer swap — the same
 manifest-commit primitive the warehouse batch log adopted in r11 —
 instead of relying on directory-rename atomicity (absent on object
 storage). Pins: bootstrap, chaos at every new crash window
-(mid-publish, mid-compaction, mid-GC) on the manifest layout, legacy
-behavior preserved, in-place migration, funnel roll-forward
+(mid-publish, mid-compaction, mid-GC), funnel roll-forward
 registration, and GC never eating a committed-but-unregistered
 funnel surface."""
 
@@ -175,44 +174,6 @@ def test_gc_spares_committed_but_unregistered_funnel_surface(
     assert len(iseg.live_segments(idx)[1]) == len(after)
 
 
-@pytest.mark.local_fs_only("legacy rename layout is a local-FS artifact (constructed by deleting the manifest file)")
-def test_legacy_layout_unchanged_and_migrates(spark, tmp_path):
-    """A pre-r12 rename-layout index (constructed by stripping the
-    manifest from a committed one — byte-identical: every dir's
-    content is the same, commit = dir presence) reads through the
-    absorbed-filtered listing; migrate_index_manifest upgrades in
-    place without promoting absorbed leftovers, and later publishes
-    commit through the manifest (r13: writes on a legacy index always
-    migrate first — the rename-commit write branch is gone)."""
-    idx = str(tmp_path / "idx")
-    for i in range(3):
-        update_minhash_index(
-            spark, _docs(spark, range(4 * i, 4 * i + 4)), idx,
-            batch_id=f"b{i}",
-        )
-    compact_minhash_index(spark, idx)  # base committed; b* absorbed
-    os.unlink(os.path.join(idx, iseg.SEGMENTS_MANIFEST))  # -> legacy
-    assert not os.path.exists(os.path.join(idx, iseg.SEGMENTS_MANIFEST))
-    # absorbed dirs still on disk (GC deferred) = the crashed-vacuum
-    # leftover state — migration must NOT promote them to live
-    base, batches = iseg.live_segments(idx)
-    assert base is not None and batches == []
-    leftover = [d for d in os.listdir(idx) if d.startswith("batch-")]
-    assert leftover  # absorbed dirs awaiting GC
-    gen = iseg.migrate_index_manifest(idx)
-    assert gen == 0
-    assert iseg.migrate_index_manifest(idx) == 0  # idempotent
-    m = _manifest(idx)
-    assert m["base"] == os.path.basename(base) and m["batches"] == []
-    # same live view pre/post migration; replay intact
-    assert iseg.live_segments(idx) == (base, [])
-    assert iseg.is_committed(idx, "b1")
-    # post-migration publish commits via the manifest
-    update_minhash_index(spark, _docs(spark, range(20, 24)), idx,
-                         batch_id="b9")
-    assert "batch-b9" in _manifest(idx)["batches"]
-
-
 def test_same_id_race_still_loses_loudly(spark, tmp_path):
     """Two writers publishing the SAME batch id: exactly one commits;
     the loser raises ConcurrentWriterError (manifest layout — the
@@ -242,32 +203,6 @@ def test_epoch_sink_manifest(spark, tmp_path):
     df.write.parquet(os.path.join(pairs_dir, "epoch-000000000001"))
     got = ndp.read_pairs(spark, pairs_dir)
     assert got.count() == 1  # the orphan is invisible
-
-
-@pytest.mark.local_fs_only("legacy rename layout is a local-FS artifact")
-def test_funnel_maintenance_migrates_legacy_index(spark, tmp_path, monkeypatch):
-    """The index twin of the warehouse sunset: a pre-r12 rename-layout
-    index dir is upgraded to the manifest layout by the next
-    funnel_maintenance pass (idempotent; compaction then commits
-    through the manifest)."""
-    from roborock_data_pipeline_spark import pipeline
-
-    state = str(tmp_path / "state")
-    idx = os.path.join(state, "minhash")
-    for i in range(2):
-        update_minhash_index(
-            spark, _docs(spark, range(4 * i, 4 * i + 4)), idx,
-            batch_id=f"b{i}",
-        )
-    os.unlink(os.path.join(idx, iseg.SEGMENTS_MANIFEST))  # -> legacy
-    assert not os.path.exists(os.path.join(idx, iseg.SEGMENTS_MANIFEST))
-    out = str(tmp_path / "out")
-    merged = pipeline.funnel_maintenance(spark, state, out)
-    assert os.path.exists(os.path.join(idx, iseg.SEGMENTS_MANIFEST))
-    assert merged["minhash"] == 2  # compaction ran through the manifest
-    m = _manifest(idx)
-    assert m["base"] is not None and m["batches"] == []
-    assert iseg.is_committed(idx, "b0")
 
 
 @pytest.mark.local_fs_only("drives the FS-based FaultInjectingBackend; the memory backend gets staleness natively via stale_reads and lost PUTs via lose_swaps_at (r14)")
@@ -326,7 +261,6 @@ def test_describe_index_and_funnel_health(spark, tmp_path):
     assert d["generation"] == 3  # empty bootstrap + 3 publishes
     assert d["live_batches"] == 3 and d["base"] is None
     assert d["gc_backlog_dirs"] == 0 and d["pending_or_orphan_dirs"] == 0
-    assert d["layout_sunset"] is None
 
     compact_minhash_index(spark, idx)  # base commits; GC deferred
     d = iseg.describe_index(idx)
@@ -372,15 +306,3 @@ def test_describe_index_base_age_on_relative_dir(
     d = iseg.describe_index("relidx")
     assert d["base"] is not None
     assert d["base_age_s"] is not None and d["base_age_s"] >= 0
-
-
-@pytest.mark.local_fs_only(
-    "legacy rename layout is a local-FS artifact"
-)
-def test_describe_index_surfaces_legacy_sunset(spark, tmp_path):
-    idx = str(tmp_path / "idx")
-    update_minhash_index(spark, _docs(spark, range(4)), idx, batch_id="b0")
-    os.unlink(os.path.join(idx, iseg.SEGMENTS_MANIFEST))
-    d = iseg.describe_index(idx)
-    assert d["layout"] == "rename" and "sunset" in d["layout_sunset"]
-    assert d["generation"] is None and d["live_batches"] == 1

@@ -1,27 +1,13 @@
-"""ADVICE r13 (high) — first-manifest root-file guard.
+"""Root-file guard: a plain-parquet table (rows in root-level part
+files, no batch manifest) is an unsupported pre-manifest layout.
 
-The instant a table's first ``_batches.json`` commits, read_table
-stops reading root-level part files (they become "provisioning
-empties or a replaced snapshot awaiting GC"). r13's layout sunset
-made every first-commit path build that manifest from the batch-dir
-listing alone, WITHOUT verifying the root files were row-free — so a
-pre-r11 plain-parquet table (rows in root part files) that received
-an append, a DML, a vacuum, or a maintenance migration had its root
-rows silently vanish from all subsequent reads.
-
-These tests pin the fix:
-
-- every first-manifest path (append_rows, migrate_batch_manifest,
-  row DML's migrate-first, vacuum's migrate-first) REFUSES loudly
-  while root part files carry rows, and the legacy read stays intact;
-- ``migrate_root_file_table`` folds root rows (and any legacy batch
-  dirs) into ONE gen-0 snapshot batch with nothing lost, after which
-  appends flow normally;
-- ``warehouse_maintenance`` treats a root-file table as legacy:
-  sunset grace pass (no crash, table untouched), then migration via
-  the spark-aware helper;
-- provisioning EMPTIES (0-row root files) never trip the guard;
-- an unreadable root file is treated as data-bearing and refused.
+Provisioning is manifest-first (setup_warehouse commits an empty
+generation-0 ``_batches.json`` and writes no part files), so a table
+dir that holds root part files but no manifest can only be an older
+layout. These tests pin that it is refused by name on every path that
+would otherwise commit a manifest over it and silently drop its root
+rows — append, vacuum, row DML — and that provisioned tables never
+trip the guard.
 """
 
 from __future__ import annotations
@@ -36,7 +22,7 @@ from pyspark.sql import Row
 from roborock_data_pipeline_spark.sources import sinks
 
 pytestmark = pytest.mark.local_fs_only(
-    "plain-parquet root-file layout (pre-r11) is a local-FS artifact "
+    "the plain-parquet root-file layout is a local-FS artifact "
     "constructed by planting part files in the table dir"
 )
 
@@ -71,8 +57,8 @@ def wh(tmp_path, spark):
 
 
 def _plant_root_rows(spark, wh, i: int = 1, n: int = 5) -> None:
-    """Fabricate the pre-r11 plain-parquet layout: data-bearing part
-    files at the table root, no batch manifest."""
+    """Fabricate the plain-parquet layout: data-bearing part files at
+    the table root, no batch manifest."""
     td = sinks.table_path(wh, NAME)
     tmp = td + ".rootsrc"
     _mk(spark, i, n).write.mode("overwrite").parquet(tmp)
@@ -100,125 +86,48 @@ def _rows(spark, wh) -> int:
     return sinks.read_table(spark, wh, NAME).count()
 
 
-def test_append_refuses_and_keeps_legacy_read(spark, wh):
-    _plant_root_rows(spark, wh, n=5)
-    assert _rows(spark, wh) == 5
-    with pytest.raises(ValueError, match="migrate_root_file_table"):
-        sinks.append_rows(_mk(spark, 9), wh, NAME)
-    # nothing committed, nothing lost: still the legacy read set
-    td = sinks.table_path(wh, NAME)
-    assert sinks._batches_manifest(td) is None  # noqa: SLF001
-    assert _rows(spark, wh) == 5
-
-
-def test_migrate_batch_manifest_refuses(spark, wh):
-    sinks.append_rows(_mk(spark, 1), wh, NAME)
-    _strip_manifest(wh)
-    _plant_root_rows(spark, wh, i=2, n=3)
-    assert _rows(spark, wh) == 4  # mixed legacy: 1 batch row + 3 root
-    with pytest.raises(ValueError, match="root-level part files"):
-        sinks.migrate_batch_manifest(wh, NAME)
-    assert _rows(spark, wh) == 4
-
-
 def test_vacuum_and_dml_refuse_on_mixed_legacy(spark, wh):
     for i in range(3):
         sinks.append_rows(_mk(spark, i), wh, NAME)
     _strip_manifest(wh)
     _plant_root_rows(spark, wh, i=7, n=2)
-    assert _rows(spark, wh) == 5
-    with pytest.raises(ValueError, match="root-level part files"):
-        sinks.vacuum_table(spark, wh, NAME, 0)
-    # a predicate matching root rows hits the pre-existing snapshot
-    # refusal; one matching ONLY batch-dir rows reaches the new
-    # migrate-first guard — both must refuse
-    with pytest.raises(ValueError, match="root-level"):
-        sinks.delete_rows(spark, wh, NAME, "device_name = 'd1'")
-    with pytest.raises(ValueError, match="root-level part files"):
-        sinks.delete_rows(spark, wh, NAME, "device_name = 'd0'")
-    assert _rows(spark, wh) == 5
-
-
-def test_migrate_root_file_table_preserves_rows(spark, wh):
-    _plant_root_rows(spark, wh, n=5)
-    assert sinks.migrate_root_file_table(spark, wh, NAME) == 0
     td = sinks.table_path(wh, NAME)
-    m = sinks._batches_manifest(td)  # noqa: SLF001
-    assert m is not None and m["generation"] == 0
-    assert len(m["live"]) == 1
-    assert _rows(spark, wh) == 5
-    # the replaced root files are GC'd, and appends now flow
-    assert sinks._root_rows(td) == 0  # noqa: SLF001
-    sinks.append_rows(_mk(spark, 9), wh, NAME)
-    assert _rows(spark, wh) == 6
-    # idempotent: returns the current generation, changes nothing
-    assert sinks.migrate_root_file_table(spark, wh, NAME) == 1
-    assert _rows(spark, wh) == 6
-
-
-def test_migrate_root_file_table_mixed_legacy(spark, wh):
-    for i in range(2):
-        sinks.append_rows(_mk(spark, i), wh, NAME)
-    _strip_manifest(wh)
-    _plant_root_rows(spark, wh, i=5, n=3)
-    assert _rows(spark, wh) == 5
-    assert sinks.migrate_root_file_table(spark, wh, NAME) == 0
-    assert _rows(spark, wh) == 5
-    td = sinks.table_path(wh, NAME)
-    m = sinks._batches_manifest(td)  # noqa: SLF001
-    # everything folded into the one gen-0 snapshot batch; the
-    # replaced legacy dirs are GC'd
-    assert len(m["live"]) == 1
-    assert sum(1 for d in os.listdir(td) if d.startswith("batch-")) == 1
-
-
-def test_maintenance_grace_then_migrates_root_table(spark, wh):
-    _plant_root_rows(spark, wh, n=4)
-    td = sinks.table_path(wh, NAME)
-    # pass 1: sunset noticed, table untouched (vacuum skipped — it
-    # would refuse), nothing lost
-    sinks.warehouse_maintenance(spark, wh)
-    assert sinks._batches_manifest(td) is None  # noqa: SLF001
-    assert sinks._manifest(wh, NAME)[  # noqa: SLF001
-        "legacy_layout_noticed_ns"
-    ]
-    assert _rows(spark, wh) == 4
-    # pass 2: migrated through the root-aware helper
-    sinks.warehouse_maintenance(spark, wh)
-    assert sinks._batches_manifest(td) is not None  # noqa: SLF001
-    assert _rows(spark, wh) == 4
-
-
-def test_maintenance_opt_out_leaves_root_table_alone(spark, wh):
-    _plant_root_rows(spark, wh, n=4)
-    td = sinks.table_path(wh, NAME)
-    for _ in range(2):
-        sinks.warehouse_maintenance(spark, wh, migrate_layout=False)
-        assert sinks._batches_manifest(td) is None  # noqa: SLF001
-        assert _rows(spark, wh) == 4
-
-
-def test_maintenance_immediate_migrates_root_table(spark, wh):
-    _plant_root_rows(spark, wh, n=4)
-    sinks.warehouse_maintenance(spark, wh, migrate_layout=True)
-    td = sinks.table_path(wh, NAME)
-    assert sinks._batches_manifest(td) is not None  # noqa: SLF001
-    assert _rows(spark, wh) == 4
+    before = sorted(os.listdir(td))
+    for mutate in (
+        lambda: sinks.vacuum_table(spark, wh, NAME, 0),
+        lambda: sinks.delete_rows(spark, wh, NAME, "device_name = 'd1'"),
+        lambda: sinks.append_rows(_mk(spark, 9), wh, NAME),
+        lambda: sinks.overwrite_rows(_mk(spark, 9), wh, NAME),
+    ):
+        with pytest.raises(ValueError, match="unsupported") as exc:
+            mutate()
+        assert td in str(exc.value)
+    # nothing committed over the old layout, no data file touched
+    assert sorted(os.listdir(td)) == before
+    with pytest.raises(ValueError, match="unsupported"):
+        _rows(spark, wh)
 
 
 def test_provisioning_empties_do_not_trip_guard(spark, wh):
-    # fresh provisioned table: root part files (if any) are 0-row
-    # empties — the bootstrap commit must proceed as before
-    sinks.append_rows(_mk(spark, 1), wh, NAME)
+    # manifest-first provisioning writes no root part files at all,
+    # only the schema manifest and an empty generation-0 batch log
     td = sinks.table_path(wh, NAME)
-    assert sinks._batches_manifest(td) is not None  # noqa: SLF001
+    assert not [f for f in os.listdir(td) if f.endswith(".parquet")]
+    assert sinks._batches_manifest(td) == {  # noqa: SLF001
+        "generation": 0, "live": [],
+    }
+    sinks.append_rows(_mk(spark, 1), wh, NAME)
+    assert sinks._batches_manifest(td)["generation"] == 1  # noqa: SLF001
     assert _rows(spark, wh) == 1
 
 
 def test_unreadable_root_file_refuses_loudly(spark, wh):
+    # refused from the listing alone: the junk footer is never opened
     td = sinks.table_path(wh, NAME)
     with open(os.path.join(td, "part-junk.parquet"), "wb") as fh:
         fh.write(b"not a parquet footer")
     _strip_manifest(wh)
-    with pytest.raises(ValueError, match="unreadable root parquet"):
+    with pytest.raises(ValueError, match="unsupported"):
         sinks.append_rows(_mk(spark, 1), wh, NAME)
+    with pytest.raises(ValueError, match="unsupported"):
+        sinks.read_table(spark, wh, NAME)

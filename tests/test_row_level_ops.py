@@ -342,12 +342,22 @@ def test_partition_layout_refused_via_declared_manifest(spark, warehouse):
         )
 
 
+def _strip_batch_manifest(warehouse, name):
+    """Turn a provisioned table dir into a manifest-less one (through
+    the commit seam, so it works on any backend)."""
+    from roborock_data_pipeline_spark.sources import commit_provider
+
+    commit_provider.BACKEND.delete_pointer(
+        os.path.join(sinks.table_path(warehouse, name), sinks.BATCHES_MANIFEST)
+    )
+
+
 def test_legacy_partition_dirs_without_batches_still_refused(spark, warehouse):
-    """The structural fallback survives ONLY for the legacy
-    pre-manifest gold layout: key=value dirs and no batch log at
-    all. DML still refuses there rather than silently erasing
-    nothing."""
+    """The pre-manifest gold layout — key=value dirs holding data, no
+    manifest at all — is refused by name: DML never silently erases
+    nothing from it."""
     td = sinks.table_path(warehouse, "daily_summary")
+    _strip_batch_manifest(warehouse, "daily_summary")
     leaf = os.path.join(td, "date=2024-03-01")
     os.makedirs(leaf, exist_ok=True)
     spark.createDataFrame(
@@ -361,10 +371,12 @@ def test_legacy_partition_dirs_without_batches_still_refused(spark, warehouse):
                 os.path.join(td, ".tmp-legacy", f), os.path.join(leaf, f)
             )
     shutil.rmtree(os.path.join(td, ".tmp-legacy"), ignore_errors=True)
-    with pytest.raises(ValueError, match="partition-overwrite"):
+    with pytest.raises(ValueError, match="unsupported"):
         sinks.delete_rows(
             spark, warehouse, "daily_summary", "device_id = 'dev-a'"
         )
+    with pytest.raises(ValueError, match="unsupported"):
+        sinks.read_partitioned(spark, warehouse, "daily_summary")
 
 
 def test_first_conversion_crash_leaves_no_layout_stamp(
@@ -433,6 +445,7 @@ def test_legacy_partition_data_with_stray_batch_still_refused(
     Conversely an EMPTY key=value dir keeps not blocking (covered by
     test_stray_partition_dirname_does_not_block_dml)."""
     td = sinks.table_path(warehouse, "daily_summary")
+    _strip_batch_manifest(warehouse, "daily_summary")
     leaf = os.path.join(td, "date=2024-03-01")
     os.makedirs(leaf, exist_ok=True)
     spark.createDataFrame(
@@ -447,7 +460,7 @@ def test_legacy_partition_data_with_stray_batch_still_refused(
             )
     shutil.rmtree(os.path.join(td, ".tmp-leg2"), ignore_errors=True)
     os.makedirs(os.path.join(td, "batch-00000000000000000001-x"), exist_ok=True)
-    with pytest.raises(ValueError, match="partition-overwrite"):
+    with pytest.raises(ValueError, match="unsupported"):
         sinks.delete_rows(
             spark, warehouse, "daily_summary", "device_id = 'dev-a'"
         )

@@ -44,6 +44,31 @@ def test_ivf_recall_on_clustered_data(spark):
     assert all(r.label == 0 for r in got)
 
 
+def _small_emb(spark, dims: int):
+    return spark.createDataFrame(
+        [(i, [float((i * 7 + d) % 5) for d in range(dims)], 0) for i in range(12)],
+        "vec_id long, embedding array<double>, label int",
+    )
+
+
+def test_ivf_topk_names_a_missing_query_vector(spark):
+    import pytest
+
+    from roborock_data_pipeline_spark.operators.similarity import ivf_topk
+
+    with pytest.raises(ValueError, match="vec_id 999"):
+        ivf_topk(_small_emb(spark, 8), query_vec_id=999, k=3, nprobe=1)
+
+
+def test_pq_topk_names_a_missing_query_vector(spark):
+    import pytest
+
+    from roborock_data_pipeline_spark.operators.similarity import pq_topk
+
+    with pytest.raises(ValueError, match="vec_id 999"):
+        pq_topk(_small_emb(spark, 64), query_vec_id=999, k=3)
+
+
 def test_ivf_runs_on_testdata(spark, sf_dir):
     """Machinery check on the real table (uniform-random vectors →
     recall is geometry-bound; assert shape + score validity only)."""

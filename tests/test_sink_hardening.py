@@ -441,61 +441,3 @@ def test_partition_overwrite_keeps_reader_grace_version(spark, tmp_path):
         for r in sinks.read_partitioned(spark, wh, "daily").collect()
     ]
     assert got == [("2024-01-01", 3)]
-
-
-def test_partition_overwrite_migrates_legacy_layout(spark, tmp_path):
-    """A table written by the pre-r8 plain dynamic overwrite (files
-    directly under date=X) is migrated on first versioned write and
-    reads back identically, untouched dates included."""
-    wh = str(tmp_path / "wh")
-    legacy = _daily(
-        spark, [("2024-01-01", 1, 10.0), ("2024-01-02", 2, 20.0)]
-    )
-    # legacy layout: plain partitioned write, no manifest
-    legacy.write.partitionBy("d").parquet(os.path.join(wh, "daily"))
-    sinks.overwrite_partitions(
-        _daily(spark, [("2024-01-02", 99, 99.0)]), wh, "daily", ["d"]
-    )
-    got = {
-        (str(r.d), r.n)
-        for r in sinks.read_partitioned(spark, wh, "daily").collect()
-    }
-    assert got == {("2024-01-01", 1), ("2024-01-02", 99)}
-
-
-def test_partition_migration_heals_crashed_move(spark, tmp_path):
-    """r13: a kill MID-MOVE during the one-time legacy-partition
-    migration strands some files in an invisible `.mig-*` staging dir.
-    The retry must move them BACK first — otherwise it would version
-    only the remaining files and the stranded rows would be lost."""
-    wh = str(tmp_path / "wh")
-    _daily(spark, [("2024-01-01", 1, 10.0)]).write.partitionBy(
-        "d"
-    ).parquet(os.path.join(wh, "daily"))
-    _daily(
-        spark, [("2024-01-01", 2, 20.0), ("2024-01-02", 3, 30.0)]
-    ).write.mode("append").partitionBy("d").parquet(
-        os.path.join(wh, "daily")
-    )
-    pdir = os.path.join(wh, "daily", "d=2024-01-01")
-    files = [
-        f for f in os.listdir(pdir)
-        if f.endswith(".parquet") and not f.startswith((".", "_"))
-    ]
-    assert len(files) >= 2
-    # simulate the crash: ONE file already moved into the staging dir
-    stray = os.path.join(pdir, ".mig-deadbeef")
-    os.makedirs(stray)
-    os.replace(os.path.join(pdir, files[0]), os.path.join(stray, files[0]))
-
-    # first versioned write triggers the migration; the heal must
-    # recover the stranded file so every original row survives
-    sinks.overwrite_partitions(
-        _daily(spark, [("2024-01-02", 99, 99.0)]), wh, "daily", ["d"]
-    )
-    got = {
-        (str(r.d), r.n)
-        for r in sinks.read_partitioned(spark, wh, "daily").collect()
-    }
-    assert got == {("2024-01-01", 1), ("2024-01-01", 2), ("2024-01-02", 99)}
-    assert not os.path.isdir(stray)

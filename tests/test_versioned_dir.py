@@ -9,8 +9,8 @@ What these tests pin:
   directory visible there;
 - retries converge over the invisible orphan;
 - a lost ACKed PUT (FaultInjectingBackend) fails the publish whole;
-- legacy (pre-seam) roots stay readable and get one publish of GC
-  grace before their files are reclaimed.
+- a pointer-less root holding data (the pre-pointer layout) is
+  refused by name (tests/test_layout_contract.py).
 """
 
 from __future__ import annotations
@@ -121,30 +121,6 @@ def test_lost_acked_put_fails_publish_whole(tmp_path, monkeypatch):
     _write_marker(s3, "v2")
     vd.publish(root, s3)
     assert _read_live(root) == "v2"
-
-
-def test_legacy_root_readable_then_graced_out(tmp_path):
-    """A pre-seam root (data directly in the directory) resolves to
-    itself; the first versioned publish leaves the legacy files in
-    place (they are the grace holder), the second removes them."""
-    root = str(tmp_path / "surface")
-    os.makedirs(root)
-    with open(os.path.join(root, "data.txt"), "w") as fh:
-        fh.write("legacy")
-    assert vd.resolve(root) == root
-    assert vd.generation(root) is None
-
-    s1 = vd.staging_dir(root)
-    _write_marker(s1, "v1")
-    vd.publish(root, s1)
-    assert _read_live(root) == "v1"
-    assert os.path.exists(os.path.join(root, "data.txt"))  # grace
-
-    s2 = vd.staging_dir(root)
-    _write_marker(s2, "v2")
-    vd.publish(root, s2)
-    assert _read_live(root) == "v2"
-    assert not os.path.exists(os.path.join(root, "data.txt"))  # GC'd
 
 
 def test_corrupt_pointer_raises_loudly(tmp_path):
@@ -396,20 +372,19 @@ def test_resolve_retries_pointer_on_missing_dir(tmp_path, monkeypatch):
 
 def test_describe_versioned_dir_surface(tmp_path):
     """VERDICT r13 #6: metadata-only describe for `_current.json`
-    surfaces — generation, grace/staging/trash backlog, legacy flag,
-    live age. Zero Spark jobs (pure listings)."""
+    surfaces — generation, grace/staging/trash backlog, live age.
+    Zero Spark jobs (pure listings)."""
     import time as _time
 
     assert vd.describe_versioned_dir(str(tmp_path / "absent")) is None
 
-    # legacy root: pre-seam data files, no pointer
-    leg = str(tmp_path / "legacy")
-    os.makedirs(leg)
-    with open(os.path.join(leg, "data.txt"), "w") as fh:
+    # pre-pointer root: data files, no pointer — refused, not described
+    old = str(tmp_path / "old")
+    os.makedirs(old)
+    with open(os.path.join(old, "data.txt"), "w") as fh:
         fh.write("old")
-    d = vd.describe_versioned_dir(leg)
-    assert d["layout"] == "legacy-root" and d["legacy_root_flag"]
-    assert d["generation"] is None and d["legacy_files"] == 1
+    with pytest.raises(ValueError, match="unsupported"):
+        vd.describe_versioned_dir(old)
 
     # versioned surface with one superseded version in grace
     root = str(tmp_path / "surface")
@@ -422,7 +397,6 @@ def test_describe_versioned_dir_surface(tmp_path):
     assert d["generation"] == 2 and d["live"] == "v-000002"
     assert d["versions_on_disk"] == 2 and d["grace_dirs"] == 1
     assert d["live_age_s"] is not None and d["live_age_s"] >= 0
-    assert not d["legacy_root_flag"]
 
     # a live staging counts; a heartbeat-silent one counts as dead
     s = vd.staging_dir(root)

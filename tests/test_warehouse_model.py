@@ -68,12 +68,8 @@ _ops = st.one_of(
         ),
     ),
     st.tuples(st.just("vacuum"), st.integers(0, 2), st.booleans()),
-    # layout v2 migration (r11): an in-place upgrade is just another
-    # op the DML/vacuum/migration interleavings must commute with
-    st.tuples(st.just("migrate")),
-    # r12 sunset: DEFAULT-path maintenance (grace-then-migrate) — on a
-    # legacy table the first hit stamps the notice and the second
-    # auto-migrates, interleaved with everything else
+    # a default warehouse_maintenance pass (vacuum every table),
+    # interleaved with everything else
     st.tuples(st.just("maintenance")),
     # migration alphabet (r9): each mutates the logical schema the
     # DML ops then have to live with
@@ -95,40 +91,16 @@ def _df_current_schema(spark, wh, rows9):
     )
 
 
-@given(st.booleans(), st.lists(_ops, min_size=2, max_size=6))
+@given(st.lists(_ops, min_size=2, max_size=6))
 @settings(
     max_examples=8,
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-def test_random_dml_interleavings_match_model(spark, start_legacy, ops):
+def test_random_dml_interleavings_match_model(spark, ops):
     wh = tempfile.mkdtemp()
     sinks.setup_warehouse(spark, wh)
     model: list[tuple] = []  # mirrors cleaning_records rows (base 9 cols)
-    # r13 sunset (VERDICT r12 #5): the legacy WRITE ops are gone from
-    # the alphabet — half the examples START from a legacy
-    # rename-layout table instead (a committed append with the
-    # manifest stripped, byte-identical to pre-r11), so the sequences
-    # exercise reads on the legacy listing plus the auto-migration the
-    # FIRST write performs, interleaved with the explicit "migrate"
-    # and tri-state "maintenance" ops.
-    if start_legacy:
-        import os as _os
-
-        from roborock_data_pipeline_spark.sources import commit_provider
-
-        seed = [_row(DEVICES[0], 1, 5, "seed")]
-        sinks.append_rows(
-            _df_current_schema(spark, wh, seed), wh, "cleaning_records"
-        )
-        model.extend(seed)
-        # strip via the seam so the construction works on any backend
-        commit_provider.BACKEND.delete_pointer(
-            _os.path.join(
-                sinks.table_path(wh, "cleaning_records"),
-                sinks.BATCHES_MANIFEST,
-            )
-        )
     widened = False
     rename_n = 0  # clean_mode -> mode_v1 -> mode_v2 -> ...
     add_n = 0
@@ -186,12 +158,7 @@ def test_random_dml_interleavings_match_model(spark, start_legacy, ops):
                     spark, wh, "cleaning_records", op[1],
                     cluster_by=["start_time"] if op[2] else None,
                 )
-            elif op[0] == "migrate":
-                sinks.migrate_batch_manifest(wh, "cleaning_records")
             elif op[0] == "maintenance":
-                # default tri-state path: content must be preserved
-                # whether this pass stamps the sunset notice, performs
-                # the auto-migration, or just vacuums a v2 table
                 sinks.warehouse_maintenance(spark, wh, retain_last_n=2)
             elif op[0] == "widen":
                 if widened:
