@@ -343,10 +343,15 @@ def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ties are safe: strict > rejects an equal-ts event regardless of
     its position in the sorted list). Stage populations are null
     counts on the fold result. Measured (interleaved 6-cycle A/B,
-    sf0.1): med 0.746 -> 0.631 s; plan 11 Exchanges -> 2. Per-user
-    state stays bounded (one event list, the sessionize pattern); at
-    100 TB there is no cross-stage explosion and a single corpus
-    exchange instead of four.
+    sf0.1): med 0.746 -> 0.631 s; plan 11 Exchanges -> 2. At 100 TB
+    there is no cross-stage explosion and a single corpus exchange
+    instead of four.
+
+    Per-user state is NOT bounded: the collect_list holds every
+    signup/view/click/purchase event of a user in one array, in one
+    task. The ceiling is one user's four-type event history; a
+    bot-skewed user with millions of such events is one task holding
+    all of them.
     """
     ev = load(spark, sf_dir, "events")
     ev4 = ev.where(

@@ -188,9 +188,8 @@ def q_dedup_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cold single-shot is 0.70-0.82x faster WITHOUT them, but the warm
     # rerun model (bench.py's measurement; any session re-invoking the
     # query) is 2x faster WITH them (1.35 s vs 2.8 s at sf0.1) -- the
-    # durable form of this state is the persisted index
-    # (incremental_dedup), and the caller contract is clearCache
-    # between registry queries in long-lived sessions.
+    # caller contract is clearCache between registry queries in
+    # long-lived sessions.
     sh = leaked_persist(
         docs.select("doc_id", hashed_shingles(F.col("text"), 3).alias("sh"))
         .withColumn("n", F.size("sh"))

@@ -249,8 +249,7 @@ def q_asof_status(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_view_purchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J5+ (EXT): attribution pairs -- (purchase, view-within-1-hour)
-    per user. The batch twin of streaming/aggregations.py::
-    purchase_view_join_stream (stream-stream interval join).
+    per user.
 
     Equi-join on user_id with the time range riding the join as a
     predicate -- one shuffle per side, no range explosion; output is

@@ -11,7 +11,7 @@ scan by the bucket selectivity.
 
 from __future__ import annotations
 
-import os
+import math
 import threading
 from collections import deque
 
@@ -27,7 +27,6 @@ from roborock_data_pipeline_spark.functions.arrays import (
     norm,
 )
 from roborock_data_pipeline_spark.registry import query
-from roborock_data_pipeline_spark.sources import versioned_dir
 from roborock_data_pipeline_spark.sources.tables import load
 
 QUERY_VEC_ID = 0  # the probe vector for top-k queries
@@ -47,11 +46,6 @@ N_SALTS = 8
 # _SIG_BITS*cap members fall back to the hash backstop for the rest).
 N_BANDS = 4
 _SIG_BITS = 6
-# Streaming form's fixed per-band signature width (no per-label
-# sizing is possible on a stream): 3 bits -> per-band collide
-# probability (1-theta/pi)^3 ~ 0.63 at the cos >= 0.9 boundary, miss-all-4
-# ~ 1.9%.
-_SIG_BITS_STREAM = 3
 
 # Driver-side regime telemetry (r10, VERDICT r9 next-round #8): the
 # last blocked_pairs plan decision, readable by warehouse_health /
@@ -153,9 +147,7 @@ def _pair_join(
     across all bands -- replacing r9's 20M+-row (id1, id2) dedup
     aggregate (and its duplicate cosine folds) with <= n_bands-1
     integer comparisons per candidate, the dominant overhead of the
-    banded regime at sf1 (r10, clearing the BENCH_SCALE flag). It is
-    also what makes the streaming form executable at all: no
-    aggregate after the join.
+    banded regime at sf1 (r10, clearing the BENCH_SCALE flag).
 
     ``min_cos`` places the caller's cosine threshold INSIDE the join
     condition, AFTER the cheap conjuncts (r10): a ``.where`` on the
@@ -294,8 +286,8 @@ def _cell_pairs(
     min_cos: float | None,
 ) -> DataFrame:
     """Group the celled frame and run the pair kernel -- the batch
-    fast path of :func:`blocked_pairs` (join form retained for
-    streaming and for caps beyond _KERNEL_MAX_CELL)."""
+    fast path of :func:`blocked_pairs` (join form retained for caps
+    beyond _KERNEL_MAX_CELL)."""
     return cells.groupBy("label", "band", "subblk", "subsub").applyInPandas(
         _cell_pairs_kernel(first_collision_bands, min_cos),
         schema="id1 long, id2 long, cos double",
@@ -307,7 +299,6 @@ def blocked_pairs(
     cap: int = BLOCK_CAP,
     n_salts: int = N_SALTS,
     n_bands: int = N_BANDS,
-    force_banded: bool = False,
     min_cos: float | None = None,
     tag: str | None = None,
 ) -> DataFrame:
@@ -325,8 +316,8 @@ def blocked_pairs(
        and 2.3x faster at sf1 (13.1 s -> 5.8 s). The cell is the
        parallel unit; per-cell work is bounded by the cap, so no
        salting and no stragglers. The join form below remains for
-       streaming inputs and for caps beyond _KERNEL_MAX_CELL
-       (uncapped exact-truth runs need O(1) memory per candidate).
+       caps beyond _KERNEL_MAX_CELL (uncapped exact-truth runs need
+       O(1) memory per candidate).
     1. SALTED block self-join (join form) -- few distinct labels would
        cap join parallelism and straggle; probe side hashed to one of
        ``n_salts`` salts, build side replicated across all salts, so
@@ -402,34 +393,22 @@ def blocked_pairs(
     # still pays its 24-projection codegen + extra stages); the probe
     # is a label-only pruned scan, and below the cap the plan is the
     # exact pre-banding shape. The probe is EAGER and bakes the
-    # regime into the returned plan -- a caller that holds the plan
-    # while the source GROWS past the cap must pass
-    # ``force_banded=True`` to get the lazily-split union form whose
-    # cap guard holds at every execution. A STREAMING input (where an
-    # eager action is illegal and the source grows by definition)
-    # auto-selects that form -- the footgun VERDICT r9 "missing #3"
-    # named is unreachable by construction (r10).
-    if emb.isStreaming:
-        force_banded = True
-    max_blk = (
-        0 if force_banded else sizes.agg(F.max("_blk_n")).first()[0] or 0
-    )
-    # batch cells are cap-bounded, so the Arrow/BLAS pair kernel
-    # applies whenever the dense nxn buffer stays small; the join
-    # form remains for streaming (no applyInPandas re-grouping mid
-    # plan) and for uncapped exact-truth runs (O(1) memory per
-    # candidate at any block size)
-    use_kernel = not emb.isStreaming and cap <= _KERNEL_MAX_CELL
+    # regime into the returned plan: a caller that holds the plan
+    # while the source grows past the cap must rebuild it.
+    max_blk = sizes.agg(F.max("_blk_n")).first()[0] or 0
+    # cells are cap-bounded, so the Arrow/BLAS pair kernel applies
+    # whenever the dense nxn buffer stays small; the join form remains
+    # for uncapped exact-truth runs (O(1) memory per candidate at any
+    # block size)
+    use_kernel = cap <= _KERNEL_MAX_CELL
     _record_regime(
         tag=tag,
-        path="banded" if (force_banded or max_blk > cap) else "exact",
-        max_block=None if force_banded else max_blk,
+        path="banded" if max_blk > cap else "exact",
+        max_block=max_blk,
         cap=cap,
-        forced=force_banded,
-        streaming=emb.isStreaming,
         kernel=use_kernel,
     )
-    if not force_banded and max_blk <= cap:
+    if max_blk <= cap:
         exact = (
             e.withColumn("band", F.lit(0))
             .withColumn("subblk", F.lit(0))
@@ -438,76 +417,6 @@ def blocked_pairs(
         if use_kernel:
             return _cell_pairs(exact, 0, min_cos)
         return _pair_join(exact, n_salts, min_cos=min_cos)
-
-    if emb.isStreaming:
-        # STREAMING form: every data-dependent knob (per-label bits,
-        # backstop moduli) is an aggregate over the stream, which a
-        # single continuous plan cannot consume -- so the split is
-        # FIXED-WIDTH: n_bands bands of _SIG_BITS_STREAM bits, no
-        # backstop (subsub = 0), no exact small-block branch. Recall
-        # at the 0.9 boundary: per band P(collide) = (1 - theta/pi)^3
-        # ~ 0.63, miss-all-4 ~ 1.9%; the quadratic guard is the 8-way
-        # split itself (best-effort, no hard cap bound on a stream).
-        # Callers needing exact per-batch semantics should run the
-        # BATCH form inside foreachBatch (the curation funnel's
-        # pattern). First-collision (below) keeps the plan free of
-        # post-join aggregates, so it executes under append mode.
-        #
-        # STATE CAVEAT (r10 review): a stream-stream inner self-join
-        # without a watermark retains every input row in the join
-        # state store for the life of the query (xbands xsalt
-        # replicas). This form is therefore for BOUNDED probe
-        # streams -- a finite backfill, a windowed replay -- not an
-        # unbounded production feed; the unbounded-feed pattern is
-        # foreachBatch over the batch form against a persisted index
-        # (operators/incremental_semdedup), which carries no join
-        # state at all. A caller who needs continuous mode on a
-        # time-keyed stream should withWatermark both sides and add
-        # a time-range join predicate BEFORE calling (Spark can then
-        # evict state); nothing in this function prevents that.
-        sigd = e.withColumn(
-            "_projs",
-            _lsh_projs(F.col("embedding"), n_bands, _SIG_BITS_STREAM),
-        )
-        subblks = F.array(
-            *[
-                _lsh_sig_from_projs(
-                    F.col("_projs"), r, _SIG_BITS_STREAM
-                ).cast("int")
-                for r in range(n_bands)
-            ]
-        )
-        zeros = F.array(*[F.lit(0) for _ in range(n_bands)])
-        banded = (
-            sigd.withColumn("_subblks", subblks)
-            .withColumn("_subsubs", zeros)
-            .drop("_projs")
-            .select(
-                "vec_id", "label", "embedding", "nrm",
-                "_subblks", "_subsubs",
-                F.explode(
-                    F.array(
-                        *[
-                            F.struct(
-                                F.lit(r).alias("band"),
-                                F.element_at("_subblks", r + 1)
-                                .alias("subblk"),
-                                F.lit(0).alias("subsub"),
-                            )
-                            for r in range(n_bands)
-                        ]
-                    )
-                ).alias("_c"),
-            )
-            .select(
-                "vec_id", "label", "embedding", "nrm",
-                "_subblks", "_subsubs",
-                "_c.band", "_c.subblk", "_c.subsub",
-            )
-        )
-        return _pair_join(
-            banded, n_salts, first_collision_bands=n_bands, min_cos=min_cos
-        )
 
     keyed = e.join(F.broadcast(sizes), "label")
 
@@ -530,13 +439,8 @@ def blocked_pairs(
     # signature bits the LARGEST block needs are computed (the per-row
     # pmod masks down further for smaller blocks) -- at the sf1 shape
     # (g=3 -> 2 bits) that is 8 hyperplane folds per row, not 24.
-    max_bits = (
-        _SIG_BITS  # sizes unknown ahead of execution: full width
-        if force_banded
-        else min(
-            _SIG_BITS,
-            max(1, ((max_blk + cap - 1) // cap - 1).bit_length()),
-        )
+    max_bits = min(
+        _SIG_BITS, max(1, ((max_blk + cap - 1) // cap - 1).bit_length())
     )
     big = keyed.where(F.col("_blk_n") > cap)
     n_bits = F.least(
@@ -803,14 +707,13 @@ def _nearest(joined: DataFrame, vec_col: str, out: str, n: int) -> DataFrame:
     )
 
 
-def build_ivf_index(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """IVF index build (one batch pass): centroids = per-cluster mean
-    vectors (posexplode -> per-dimension avg -> re-assemble); every
-    vector assigned to its nearest centroid via broadcast cross join.
-    Returns (centroids, indexed) where indexed = emb + `cell`."""
+def _ivf_centroids(emb: DataFrame) -> DataFrame:
+    """IVF centroids (one batch pass): per-cluster mean vectors
+    (posexplode -> per-dimension avg -> re-assemble), one row per
+    cell."""
     dims = emb.select("vec_id", "label", F.posexplode("embedding"))
     per_dim = dims.groupBy("label", "pos").agg(F.avg("col").alias("c"))
-    centroids = (
+    return (
         per_dim.groupBy("label")
         .agg(
             F.transform(
@@ -818,59 +721,6 @@ def build_ivf_index(emb: DataFrame) -> tuple[DataFrame, DataFrame]:
             ).alias("centroid")
         )
         .select(F.col("label").alias("centroid_id"), "centroid")
-    )
-    assigned = _nearest(
-        emb.crossJoin(F.broadcast(centroids)), "embedding", "cell", 1
-    )
-    return centroids, emb.join(assigned, "vec_id")
-
-
-def write_ivf_index(emb: DataFrame, index_dir: str) -> None:
-    """Persist the IVF index in its 100 TB layout: vectors
-    parquet-partitioned by `cell` (a probe is then a partition-pruned
-    scan that never opens unprobed cells' files) + a sibling
-    `<dir>_centroids` metadata table (one row per cell)."""
-    centroids, indexed = build_ivf_index(emb)
-    indexed.write.partitionBy("cell").mode("overwrite").parquet(index_dir)
-    centroids.write.mode("overwrite").parquet(index_dir + "_centroids")
-
-
-def ivf_probe_indexed(
-    spark: SparkSession,
-    index_dir: str,
-    query_vec: list[float],
-    k: int = TOP_K,
-    nprobe: int = 2,
-    exclude_vec_id: int | None = None,
-) -> DataFrame:
-    """ANN query against the persisted IVF index.
-
-    Centroid ranking touches only the metadata table (rows = number
-    of cells -- the tiny collect is index metadata, like reading a
-    file footer, not data); the vector scan then carries
-    `cell IN (probed)` which Catalyst turns into PartitionFilters --
-    unprobed partitions are never listed or read. Exact cosine
-    rerank + top-k inside the probed fraction."""
-    qv = F.array(*[F.lit(float(x)) for x in query_vec])
-    cent = spark.read.parquet(index_dir + "_centroids")
-    cells = [
-        r["centroid_id"]
-        for r in cent.withColumn("sim", cosine(qv, F.col("centroid")))
-        .orderBy(F.col("sim").desc(), "centroid_id")
-        .limit(nprobe)
-        .collect()
-    ]
-    scan = spark.read.parquet(index_dir).where(F.col("cell").isin(cells))
-    if exclude_vec_id is not None:
-        scan = scan.where(F.col("vec_id") != exclude_vec_id)
-    return (
-        scan.select(
-            "vec_id",
-            "label",
-            F.round(cosine(F.col("embedding"), qv), 4).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), "vec_id")
-        .limit(k)
     )
 
 
@@ -890,9 +740,8 @@ def ivf_topk(
     clustered set); on uniform-random vectors no partition-based ANN
     beats the probed fraction -- that is geometry, not implementation.
 
-    At 100 TB the assignment table is written out partitioned by
-    centroid_id, so a probe reads only the probed partitions -- that
-    persisted layout is write_ivf_index / ivf_probe_indexed below.
+    At 100 TB the assignment table would be written out partitioned
+    by centroid_id, so a probe reads only the probed partitions.
 
     r15 restructure (guide sec 7.2 duplicated subtrees): the one-plan
     form evaluated the whole centroid aggregation subtree TWICE (once
@@ -907,7 +756,7 @@ def ivf_topk(
     but reads the centroids from a broadcast LocalRelation instead of
     recomputing them. Results verified bit-identical x3 SFs."""
     spark = emb.sparkSession
-    cent_agg, _ = build_ivf_index(emb)
+    cent_agg = _ivf_centroids(emb)
 
     # ONE metadata job: k centroid rows + the probe vector (tagged by
     # a null centroid_id; as_double is the exact f32->f64 widening
@@ -947,15 +796,15 @@ def ivf_topk(
         nb = 0.0
         for y in b:
             nb = nb + y * y
-        denom = na ** 0.5 * nb ** 0.5
+        # math.sqrt is correctly rounded like the JVM's Math.sqrt on
+        # every libm; ``** 0.5`` goes through pow, which need not be
+        denom = math.sqrt(na) * math.sqrt(nb)
         try:
             return dot / denom
         except ZeroDivisionError:  # JVM double: 0/0=NaN, x/0=+-Inf
             return float("nan") if dot == 0.0 else float(
                 "inf" if dot > 0 else "-inf"
             )
-
-    import math
 
     scored = [(cid, _cos(qv, c)) for cid, c in cents]
     # Spark desc sort: NaN ranks ABOVE every double
@@ -1022,61 +871,6 @@ def q_vector_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
         "label",
         F.round(norm(F.col("embedding")), 4).alias("l2_norm"),
         F.round(comp_sum, 4).alias("comp_sum"),
-    )
-
-
-def brute_topk_pandas(
-    emb: DataFrame,
-    query_vec: list[float],
-    k: int = TOP_K,
-    exclude_vec_id: int | None = None,
-) -> DataFrame:
-    """Arrow-batched numpy top-k -- the sanctioned Python path for
-    numeric-heavy rerank stages (same policy slot as the multimodal
-    decode: vectorized inside the batch, never per-row).
-
-    Each Arrow batch becomes ONE BLAS matmul (batch_rows x dims @
-    dims), the practical throughput ceiling for Python-side math;
-    every batch then prunes itself to its local top-k by
-    (cosine desc, vec_id asc) -- a dropped row is strictly worse than
-    k kept rows, so the prune is lossless -- and only those k-row
-    heads reach the global TakeOrdered(k). Shipping k rows per batch
-    instead of the batch itself is what keeps the exchange tiny at
-    100 TB. Rounding happens JVM-side after the UDF (numpy rounds
-    half-even, SQL rounds half-away -- mixing them breaks parity).
-
-    Equality with the codegen-HOF q_similarity_search is pinned in
-    tests/test_similarity.py."""
-    import numpy as np
-    import pandas as pd
-
-    q = np.asarray(query_vec, dtype=np.float64)
-    qn = float(np.linalg.norm(q))
-
-    def score(batches):
-        for pdf in batches:
-            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            cos = (m @ q) / (np.linalg.norm(m, axis=1) * qn)
-            out = pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "label": pdf["label"],
-                    "cosine": cos,
-                }
-            )
-            yield out.sort_values(
-                ["cosine", "vec_id"], ascending=[False, True]
-            ).head(k)
-
-    src = emb
-    if exclude_vec_id is not None:
-        src = src.where(F.col("vec_id") != exclude_vec_id)
-    return (
-        src.select("vec_id", "label", "embedding")
-        .mapInPandas(score, "vec_id long, label int, cosine double")
-        .select("vec_id", "label", F.round("cosine", 4).alias("cosine"))
-        .orderBy(F.col("cosine").desc(), "vec_id")
-        .limit(k)
     )
 
 
@@ -1203,7 +997,7 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Product quantization (IVF-PQ's compression half; Jegou et al. 2011)
+# Product quantization (Jegou et al. 2011)
 
 PQ_M = 16      # subspaces (64-dim embeddings -> 16 x 4-dim subvectors)
 PQ_KSUB = 16   # codes per subspace codebook (4-bit codes, 8 B/vector)
@@ -1447,208 +1241,3 @@ def q_similarity_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     pq_topk for the algorithm and the zero-exchange query plan;
     accuracy gated by q_similarity_pq_check."""
     return pq_topk(load(spark, sf_dir, "embeddings"), QUERY_VEC_ID)
-
-
-# ---------------------------------------------------------------------------
-# IVF-PQ: the two pieces composed into the production ANN layout
-
-def write_ivfpq_index(emb: DataFrame, index_dir: str) -> None:
-    """Persist the full IVF-PQ layout -- the ANN index shape a 100 TB
-    corpus actually serves from:
-
-    - vectors parquet-partitioned by IVF ``cell`` (probes are
-      partition-pruned scans; unprobed cells are never listed),
-    - each row carrying its PQ ``codes`` (8 B) and exact ``vnorm``
-      alongside the raw embedding -- the ADC phase reads ONLY
-      (vec_id, codes, vnorm) thanks to parquet column pruning; the
-      raw vector column is touched just for the final rerank rows,
-    - NESTED ``_centroids`` (IVF cell metadata) and ``_codebook``
-      (PQ subspace centroids) tables inside the index root -- Spark's
-      parquet reader skips underscore-prefixed subdirs, so the vector
-      scan never sees them, and the whole mutually-consistent index
-      (vectors encoded WITH this codebook, assigned WITH these
-      centroids) lives under ONE directory that publishes and swaps
-      atomically (VERDICT r5 #7; pre-r6 the metadata sat in sibling
-      dirs, which no single rename could swap consistently).
-
-    Publish goes through the commit-provider seam (VERDICT r12 #1):
-    everything stages invisibly under the index root and THE commit is
-    one verified ``_current.json`` pointer swap
-    (sources/versioned_dir). The old index serves until that single
-    swap; a kill anywhere -- including mid-publish, the window the old
-    two-rename swap left with NO index visible -- leaves old-or-new,
-    never neither. Superseded versions get one publish of grace for
-    in-flight probes."""
-    import shutil
-
-    spark = emb.sparkSession
-    staged = versioned_dir.staging_dir(index_dir)
-    try:
-        _write_ivfpq_tables(spark, emb, staged)
-        versioned_dir.publish(index_dir, staged)
-    finally:
-        if os.path.exists(staged):
-            shutil.rmtree(staged, ignore_errors=True)
-
-
-def _ivfpq_live(index_dir: str) -> str:
-    """The live IVF-PQ data dir: pointer-resolved. Raises for an
-    absent/empty index."""
-    live = versioned_dir.resolve(index_dir)
-    if live is None:
-        raise FileNotFoundError(
-            f"no IVF-PQ index published at {index_dir!r}"
-        )
-    return live
-
-
-def _write_ivfpq_tables(spark, emb: DataFrame, dest: str) -> None:
-    """Train (IVF centroids + PQ codebooks), encode, and write the
-    three mutually-consistent IVF-PQ tables under one root."""
-    centroids, indexed = build_ivf_index(emb)
-    codebook = pq_fit(emb)
-    cb_rows = [
-        (sub, code, cent)
-        for sub, cents in enumerate(codebook)
-        for code, cent in enumerate(cents)
-    ]
-    (
-        indexed.withColumn(
-            "codes", _pq_codes_udf(codebook)(F.col("embedding"))
-        )
-        .withColumn("vnorm", norm(F.col("embedding")))
-        # vec_id-sorted within each cell: the rerank scan's
-        # `vec_id IN (...)` pushdown then skips candidate-free row
-        # groups via parquet min/max stats
-        .sortWithinPartitions("cell", "vec_id")
-        .write.partitionBy("cell")
-        .mode("overwrite")
-        .parquet(dest)
-    )
-    centroids.write.mode("overwrite").parquet(
-        os.path.join(dest, "_centroids")
-    )
-    spark.createDataFrame(
-        cb_rows, "sub int, code int, centroid array<double>"
-    ).write.mode("overwrite").parquet(os.path.join(dest, "_codebook"))
-
-
-def rebuild_ivfpq_index(
-    spark: SparkSession, index_dir: str, emb: DataFrame | None = None
-) -> int:
-    """VERDICT r5 #7: offline codebook/centroid refresh for the
-    persisted IVF-PQ index -- the retrain path the PQ family lacked
-    (rebuild_semantic_index covers only the plain IVF index; PQ
-    codebooks drift as the corpus shifts, degrading ADC ranking until
-    the approximation-ratio gate fails).
-
-    Retrains IVF centroids AND per-subspace Lloyd codebooks from the
-    CURRENT vectors (``emb`` when the corpus moved -- the common case
-    -- else the index's own stored vectors), re-encodes every vector,
-    and commits the complete new index with ONE pointer swap (r12 #1:
-    vectors+centroids+codebook live under one version dir named by
-    ``_current.json``), so a concurrent probe reads either the old
-    consistent index or the new one, never codes from one generation
-    scored against the other's codebook -- and a kill mid-rebuild
-    leaves the OLD index serving (the pre-seam two-rename swap had a
-    window with no index visible at all). Post-rebuild the caller
-    re-runs the approximation-ratio gate (check_topk_quality -- pinned
-    in tests/test_similarity.py). Returns vectors republished."""
-    if emb is None:
-        emb = spark.read.parquet(_ivfpq_live(index_dir)).select(
-            "vec_id", "embedding", "label"
-        )
-        # reading the superseded version mid-publish is already safe
-        # (one publish of GC grace), but materialize anyway so the
-        # rebuild never races its own grace window
-        emb = emb.localCheckpoint(eager=True)
-    write_ivfpq_index(emb, index_dir)
-    return spark.read.parquet(_ivfpq_live(index_dir)).count()
-
-
-def ivfpq_probe_indexed(
-    spark: SparkSession,
-    index_dir: str,
-    query_vec: list[float],
-    k: int = TOP_K,
-    nprobe: int = 2,
-    rerank: int = 50,
-    exclude_vec_id: int | None = None,
-) -> DataFrame:
-    """ANN query against the persisted IVF-PQ index: partition-pruned
-    cell scan -> ADC ranking over 8-byte codes -> exact rerank of the
-    top ``rerank`` candidates only.
-
-    The three scale properties, in plan terms: (1) `cell IN (probed)`
-    becomes PartitionFilters -- unprobed cells' files are never read;
-    (2) the ADC pass reads (vec_id, label, codes, vnorm), NOT the
-    embedding column (parquet column pruning -- 8 B codes against
-    256 B raw vectors is the scan-volume win); (3) the ``rerank``
-    surviving candidate ids come back to the driver (<= rerank rows --
-    query-endpoint traffic, like the probed-cell list) and are
-    inlined into the rerank scan as `vec_id IN (...)` -- PushedFilters
-    on a within-cell-sorted layout skip the row groups that hold no
-    candidate, so the raw vector column is decoded for candidate row
-    groups only. Centroid/codebook reads are metadata (rows = cells,
-    mxksub).
-
-    The live version dir is resolved ONCE up front, so every read in
-    the probe (centroids, codebook, ADC scan, rerank scan) comes from
-    the SAME index generation even if a rebuild commits mid-probe --
-    the superseded version keeps one publish of GC grace."""
-    index_dir = _ivfpq_live(index_dir)
-    cent = spark.read.parquet(os.path.join(index_dir, "_centroids"))
-    qv_lit = F.array(*[F.lit(float(x)) for x in query_vec])
-    cells = [
-        r["centroid_id"]
-        for r in cent.withColumn("sim", cosine(qv_lit, F.col("centroid")))
-        .orderBy(F.col("sim").desc(), "centroid_id")
-        .limit(nprobe)
-        .collect()
-    ]
-    cb_rows = spark.read.parquet(os.path.join(index_dir, "_codebook")).collect()
-    m = 1 + max(r["sub"] for r in cb_rows)
-    ksub = 1 + max(r["code"] for r in cb_rows)
-    d_sub = len(cb_rows[0]["centroid"])
-    lut = [[0.0] * ksub for _ in range(m)]
-    for r in cb_rows:
-        lut[r["sub"]][r["code"]] = sum(
-            float(query_vec[r["sub"] * d_sub + j]) * r["centroid"][j]
-            for j in range(d_sub)
-        )
-    qn = sum(float(x) * float(x) for x in query_vec) ** 0.5
-    lut_lit = F.array(*[F.array(*[F.lit(v) for v in row]) for row in lut])
-    approx_dot = F.aggregate(
-        F.zip_with(
-            F.col("codes"),
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda c, s: F.element_at(F.element_at(lut_lit, s + 1), c + 1),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    adc_scan = spark.read.parquet(index_dir).where(F.col("cell").isin(cells))
-    if exclude_vec_id is not None:
-        adc_scan = adc_scan.where(F.col("vec_id") != exclude_vec_id)
-    candidate_ids = [
-        r["vec_id"]
-        for r in adc_scan.select(
-            "vec_id",
-            (approx_dot / (F.lit(qn) * F.col("vnorm"))).alias("approx_cosine"),
-        )
-        .orderBy(F.col("approx_cosine").desc(), "vec_id")
-        .limit(rerank)
-        .collect()
-    ]
-    rerank_scan = spark.read.parquet(index_dir).where(
-        F.col("cell").isin(cells) & F.col("vec_id").isin(candidate_ids)
-    )
-    return (
-        rerank_scan.select(
-            "vec_id",
-            "label",
-            F.round(cosine(F.col("embedding"), qv_lit), 4).alias("cosine"),
-        )
-        .orderBy(F.col("cosine").desc(), "vec_id")
-        .limit(k)
-    )

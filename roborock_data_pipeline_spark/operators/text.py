@@ -593,9 +593,7 @@ def q_bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan shape: one exploded token table rebuilt from the pruned scan
     per aggregate (NOT persisted -- r11 PERSIST_AUDIT.json: caching it
     measured no win and leaked corpus-wide postings into the caller's
-    session; the PERSISTED form of this state is the real index,
-    operators/incremental_bm25.py), the query-term table is LIMIT-3
-    tiny and BROADCAST,
+    session), the query-term table is LIMIT-3 tiny and BROADCAST,
     the per-doc length joins on doc_id, corpus stats are a 1-row
     broadcast cross join, and the final top-10 is TakeOrdered --
     postings-shaped and linear in sum tokens at 100 TB, like

@@ -237,19 +237,18 @@ EWMA_ALPHA = 0.3
 )
 def q_ewma_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TS: per-user exponentially-weighted moving average of event
-    values -- the BATCH TWIN of streaming/anomaly.py's EWMA detector
-    (the same recurrence the GroupState carries across micro-batches,
-    folded over history in one pass), giving that streaming path an
-    oracle-checked reference like the other stream/batch twins.
+    values: the recurrence mean <- alpha*x + (1-alpha)*mean that a
+    streaming detector would carry in GroupState across micro-batches,
+    folded over history in one pass.
 
     The fold is a codegen'd `aggregate` over the per-user ordered
     value array, seeded with the FIRST value and folding the rest --
     exactly DuckDB's list_reduce semantics, same left-to-right double
     arithmetic, so the engines agree bitwise. Scale: one exchange
     (groupBy user_id); per-user history must fit an array, which is
-    the same bound the sort-based window alternative has -- for
-    unbounded histories the streaming path IS the answer (state
-    carries the accumulator; nothing re-folds)."""
+    the same bound the sort-based window alternative has; unbounded
+    histories need a streaming fold whose state carries the
+    accumulator."""
     ev = load(spark, sf_dir, "events")
     vals = F.transform(
         F.array_sort(F.collect_list(F.struct("ts", "event_id", "value"))),

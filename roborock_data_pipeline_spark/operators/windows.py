@@ -183,9 +183,9 @@ def q_moving_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_tumbling_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T6 (EXT): tumbling event-time window as a batch group-by on
-    date_trunc -- byte-identical semantics to the streaming
-    `window(ts, '1 hour')` aggregation in streaming/aggregations.py,
-    which is how the oracle can check it."""
+    date_trunc -- byte-identical semantics to a streaming
+    `window(ts, '1 hour')` aggregation, and expressible as the
+    oracle's GROUP BY."""
     ev = load(spark, sf_dir, "events")
     return ev.groupBy(
         F.date_trunc("hour", F.col("ts")).alias("window_start"),

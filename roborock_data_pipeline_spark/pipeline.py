@@ -24,8 +24,7 @@ deriving state from what the sink actually holds).
 Library-level maintenance (T4-schedulable via run_scheduled):
 refresh_device_lifetime (keyed delta-merge IVM), gold_maintenance
 (fold both golds, then vacuum every batch log -- refresh-before-vacuum
-keeps later runs delta-sized), funnel_maintenance (compact the
-curation indexes + curated output), sinks.warehouse_maintenance.
+keeps later runs delta-sized), sinks.warehouse_maintenance.
 
 "Device cloud" stand-in: a parquet directory of device telemetry
 (device_status + cleaning_records shapes) -- the process boundary the
@@ -411,11 +410,11 @@ def _write_rollup_state(warehouse: str, state: dict) -> None:
 # Above this many touched dates the refresh recomputes the whole
 # [min, max] range instead of carrying a per-date isin residual: a
 # backfill touching years of dates would otherwise inline thousands
-# of literals into the plan (the isin-literal scale trap VERDICT r5
-# flagged in the funnel). The in-between dates' recompute is
-# byte-identical to their published partitions (deterministic from
-# the base), so the only cost is rewriting some untouched partitions
-# -- and a touched set that large is almost always dense anyway.
+# of literals into the plan (the isin-literal scale trap). The
+# in-between dates' recompute is byte-identical to their published
+# partitions (deterministic from the base), so the only cost is
+# rewriting some untouched partitions -- and a touched set that large
+# is almost always dense anyway.
 DATE_RESIDUAL_CAP = 256
 
 
@@ -478,8 +477,8 @@ def refresh_daily_summary(spark: SparkSession, warehouse: str) -> dict[str, int]
     Crash-safety: the fold state moves LAST, so a crash after the
     partition swap replays the same batches -- the recompute is
     deterministic from the base table, so the re-swap publishes
-    byte-identical partitions (idempotent convergence, same discipline
-    as the funnel's publish-is-the-commit-point). Vacuum interplay:
+    byte-identical partitions (idempotent convergence: the publish is
+    the commit point). Vacuum interplay:
     a vacuum base stamped newer than the grace floor and not yet in
     the folded set makes the 'new' scan OVER-approximate touched
     dates (the base also holds already-folded rows) --
@@ -732,23 +731,13 @@ def fold_health(warehouse: str) -> dict[str, dict[str, object]]:
     }
 
 
-def warehouse_health(
-    warehouse: str,
-    funnel_state_dir: str | None = None,
-    versioned_roots: dict[str, str] | None = None,
-) -> dict[str, dict[str, object]]:
+def warehouse_health(warehouse: str) -> dict[str, dict[str, object]]:
     """One operator snapshot: describe_table per table (batch counts,
     retention, schema, lock holder/age/staleness) merged with the
-    fold-state signals -- and, when ``funnel_state_dir`` is given, the
-    index layer's ``funnel_health`` under ``_indexes`` (VERDICT r12
-    #8) -- everything a 100 TB maintenance dashboard polls, with zero
-    Spark jobs.
-
-    r14 (VERDICT r13 #6): ``_versioned`` describes every
-    ``_current.json`` surface -- the lifetime gold snapshot always,
-    plus any caller-registered roots (the IVF-PQ index dir, a JSONL
-    export dir) via ``versioned_roots`` (name -> root path):
-    generation, grace/staging/trash backlog, live-dir age."""
+    fold-state signals -- everything a 100 TB maintenance dashboard
+    polls, with zero Spark jobs. ``_versioned`` describes the lifetime
+    gold snapshot's ``_current.json`` surface: generation,
+    grace/staging/trash backlog, live-dir age."""
     report = sinks.describe_warehouse(warehouse)
     for t, f in fold_health(warehouse).items():
         report.setdefault(t, {}).update(
@@ -756,8 +745,7 @@ def warehouse_health(
         )
     # Blocked-pairs regime telemetry (r10, VERDICT r9 #8): which path
     # the last blocked_pairs plan took (exact vs banded), the probed
-    # max block vs the cap, and whether the banded form was forced
-    # (streaming / explicit). An operator sees an exact->banded regime
+    # max block vs the cap. An operator sees an exact->banded regime
     # flip -- the moment recall becomes probabilistic and cost becomes
     # cap-bounded -- on the dashboard instead of in a Spark plan diff.
     # Driver-local by design: the regime decision is made driver-side
@@ -778,45 +766,20 @@ def warehouse_health(
     if last:
         report["_blocked_pairs_regime"] = last
         report["_blocked_pairs_regime_history"] = history
-    vroots = {
-        LIFETIME_TABLE: sinks.table_path(warehouse, LIFETIME_TABLE),
-        **(versioned_roots or {}),
-    }
-    described = {
-        name: versioned_dir.describe_versioned_dir(path)
-        for name, path in vroots.items()
-    }
-    report["_versioned"] = {
-        name: d for name, d in described.items() if d is not None
-    }
-    if funnel_state_dir is not None:
-        report["_indexes"] = funnel_health(funnel_state_dir)
-    return report
-
-
-def funnel_health(state_dir: str) -> dict[str, dict[str, object] | None]:
-    """Index-layer health (VERDICT r12 #8): describe_index over the
-    funnel's persisted indexes (MinHash / semantic / BM25) -- layout +
-    generation, live segment counts, compaction age, GC backlog,
-    orphan count, centroid generation. Pure
-    file reads, zero Spark jobs; merged into ``warehouse_health``
-    when it is called with ``funnel_state_dir``."""
-    from roborock_data_pipeline_spark.operators.index_segments import (
-        describe_index,
+    lifetime = versioned_dir.describe_versioned_dir(
+        sinks.table_path(warehouse, LIFETIME_TABLE)
     )
-
-    return {
-        name: describe_index(os.path.join(state_dir, name))
-        for name in ("minhash", "semantic", "bm25")
-        if os.path.isdir(os.path.join(state_dir, name))
-    } or {}
+    report["_versioned"] = (
+        {LIFETIME_TABLE: lifetime} if lifetime is not None else {}
+    )
+    return report
 
 
 def gold_maintenance(
     spark: SparkSession, warehouse: str, retain_last_n: int = 24
 ) -> dict[str, object]:
-    """One schedulable pass over the warehouse's derived state -- the
-    gold twin of funnel_maintenance, T4-pairable via ``run_scheduled``:
+    """One schedulable pass over the warehouse's derived state,
+    T4-pairable via ``run_scheduled``:
     fold new batches into both gold views, then vacuum the batch logs.
 
     ORDER IS THE CONTRACT: refresh BEFORE vacuum. Refreshing first
@@ -958,453 +921,6 @@ def mode_curate(
         )
         funnel["exported_chunks"] = manifest["total_rows"]
     return funnel
-
-
-def keep_first_apply(
-    candidates: DataFrame, pairs: DataFrame
-) -> tuple[DataFrame, DataFrame]:
-    """VERDICT r5 #1: the funnel's keep-first dedup apply, FULLY
-    DISTRIBUTED -- (losers, survivors) for one ingest batch. Pair
-    members (columns ``i``/``j``) are classified new-vs-indexed by
-    JOINING against the batch's candidate ids instead of collecting
-    them into a driver-side set (at 100 TB ingest a micro-batch is
-    millions of ids -- a multi-hundred-MB Python set); the loser of
-    each pair is derived per-row (both new -> keep-lowest, one new ->
-    the new member loses to the indexed one), and the pair-bounded
-    distinct loser set applies to the candidates as a BROADCAST ANTI
-    JOIN -- the exact q_dedup_apply shape (operators/dedup.py:380).
-    Only counts ever reach the driver (the funnel's _funnel.json).
-
-    Every join broadcasts the PAIR-BOUNDED side, so the batch itself
-    is never shuffled: oriented pair members broadcast onto the
-    candidate scan (inner -- output is |members|), the other-side ids
-    broadcast as a semi-join probe (output <= |members|), the loser
-    rule evaluates on those two pair-bounded frames, and the distinct
-    loser set (<= |pairs|, the quantity banding caps) broadcasts back
-    as the anti join. Total batch cost: two column-pruned scans plus
-    the survivor scan -- zero exchanges of batch-sized data."""
-    cand_ids = candidates.select("doc_id")
-    members = pairs.select(
-        F.col("i").alias("m"), F.col("j").alias("o")
-    ).unionByName(pairs.select(F.col("j").alias("m"), F.col("i").alias("o")))
-    # pair members that are NEW this batch (each new-new pair appears
-    # in both orientations; new-indexed pairs survive in one)
-    new_members = cand_ids.join(
-        F.broadcast(members), F.col("doc_id") == F.col("m")
-    ).select("m", "o")
-    # which partner ids are themselves new -- pairs-bounded
-    new_others = cand_ids.join(
-        F.broadcast(members.select("o").distinct()),
-        F.col("doc_id") == F.col("o"),
-        "left_semi",
-    ).select(F.col("doc_id").alias("o"), F.lit(True).alias("o_new"))
-    losers = (
-        new_members.join(new_others, "o", "left")
-        .where(
-            # partner indexed -> the new member loses; both new ->
-            # keep-lowest (the greater id loses, emitted exactly once
-            # by the orientation where m > o)
-            ~F.coalesce("o_new", F.lit(False)) | (F.col("m") > F.col("o"))
-        )
-        .select(F.col("m").alias("doc_id"))
-        .distinct()
-    )
-    survivors = candidates.join(F.broadcast(losers), "doc_id", "left_anti")
-    return losers, survivors
-
-
-def mode_curate_stream(
-    spark: SparkSession,
-    docs: DataFrame,
-    emb: DataFrame,
-    state_dir: str,
-    out_dir: str,
-    batch_id: str,
-    jaccard_threshold: float = 0.5,
-    cosine_threshold: float = 0.9,
-) -> dict[str, int]:
-    """EXT: ONE ingest batch through the streaming curation funnel --
-    the composition the incremental indexes exist for (VERDICT r3 #7
-    closed the pieces; this is the funnel):
-
-    1. quality gate FIRST (Gopher-style duplicate-bigram threshold,
-       the shared functions/text.shingles expression) -- gate-failing
-       docs never reach the indexes, so a rejected doc can never
-       become an indexed ghost that future near-dups lose to;
-    2. text near-dup check of the gate-passers against the persisted
-       MinHash index (operators/incremental_dedup) -- a new doc
-       matching anything already indexed, or an earlier doc of this
-       batch, loses;
-    3. semantic near-dup check against the persisted frozen-centroid
-       IVF index (operators/incremental_semdedup), same rule, with
-       ``vec_id == doc_id`` (each document's embedding);
-    4. atomic commit of the WHOLE batch -- both index segments plus
-       the curated docs under ``out_dir/batch-{batch_id}`` -- through
-       one transaction record (operators/funnel_txn).
-
-    Every indexed doc is therefore gate-passing, and is either
-    published or an intra-batch loser whose keeper is published -- so
-    any future doc dropped against the index has a published
-    representative in its near-dup component (the same
-    equivalence-class treatment q_dup_groups applies in batch).
-
-    Dedup policy is KEEP-FIRST, not the batch operators' keep-lowest:
-    in an ingest stream the already-published doc must win -- dropping
-    a doc retroactively because a lower-id near-dup arrived later
-    would retract published training data. Within one batch (both
-    members new) the tie-break is keep-lowest, matching the batch
-    semantics. Losers are decided per pair: the new member loses;
-    new-new pairs drop the higher id.
-
-    Exactly-once and atomicity (VERDICT r6 #6): the batch is ONE
-    transaction across all three surfaces. Both index segments and
-    the curated output STAGE fully (invisible to every reader), then
-    a single atomic hard-link of a commit record
-    (``out_dir/_txn/commit-{batch_id}.json`` -- operators/funnel_txn)
-    commits the batch id for all of them; roll-forward renames make
-    the surfaces visible and are completed by ``recover`` at the next
-    funnel entry / maintenance pass if a crash interrupts them. So a
-    crash at ANY point before the link leaves NOTHING visible -- no
-    index segment without its published batch, no published batch
-    without its index segments -- and a replayed batch_id whose record
-    committed returns the recorded counts without recomputing (the
-    foreachBatch idempotence pattern, same as streaming/cdc_upsert).
-    Scale: every stage is the underlying operator's shape (posting
-    joins, cell-pruned pair joins, broadcast anti applies); the
-    batch, not the corpus, is the unit of work, and the commit record
-    is a few hundred bytes regardless of batch size.
-    """
-    import json
-    import shutil
-
-    from roborock_data_pipeline_spark.operators import funnel_txn
-    from roborock_data_pipeline_spark.operators.incremental_dedup import (
-        stage_minhash_update,
-    )
-    from roborock_data_pipeline_spark.operators.incremental_semdedup import (
-        create_semantic_index,
-        has_centroids as _has_centroids,
-        stage_semantic_update,
-    )
-
-    batch_dir = os.path.join(out_dir, f"batch-{batch_id}")
-    funnel_txn.recover(out_dir)  # roll forward any crashed finalize
-    counts = _curated_batch_counts(out_dir, batch_id)
-    if counts is not None:  # replay: committed (live dir or compacted)
-        return counts
-
-    from roborock_data_pipeline_spark.functions.text import shingles
-
-    funnel = {"input": docs.count()}
-
-    # 1. gate first -- rejected docs must not enter the indexes. The
-    # bigram expression is the shared shingles() helper (n<2 guarded:
-    # a single-token doc shingles to one joined token, frac 0, pass --
-    # the hand-rolled sequence(1, size-1) this replaces crashed
-    # element_at on such docs).
-    bigrams = shingles(F.col("text"), 2)
-    dup_bigram_frac = 1.0 - F.size(F.array_distinct(bigrams)) / F.size(
-        bigrams
-    ).cast("double")
-    candidates = docs.where(dup_bigram_frac <= 0.2)
-    funnel["gate_fails"] = funnel["input"] - candidates.count()
-
-    import uuid as _uuid
-
-    mh_index = os.path.join(state_dir, "minhash")
-    sem_index = os.path.join(state_dir, "semantic")
-    if not _has_centroids(sem_index):
-        # frozen index metadata, not batch state -- created once,
-        # idempotent if a crash lands between this and the commit
-        # (a crashed create's staging leftovers read as NOT committed)
-        create_semantic_index(spark, emb, sem_index)
-
-    committed = False
-    staged_dirs: list[str] = []
-    try:
-        mh_staged = stage_minhash_update(
-            spark, candidates, mh_index,
-            threshold=jaccard_threshold, batch_id=batch_id,
-        )
-        staged_dirs.append(mh_staged)
-        text_pairs = spark.read.parquet(os.path.join(mh_staged, "pairs"))
-
-        cand_emb = emb.join(
-            candidates.select(F.col("doc_id").alias("vec_id")),
-            "vec_id", "left_semi",
-        )
-        sem_staged = stage_semantic_update(
-            spark, cand_emb, sem_index,
-            threshold=cosine_threshold, batch_id=batch_id,
-        )
-        staged_dirs.append(sem_staged)
-        sem_pairs = spark.read.parquet(os.path.join(sem_staged, "pairs"))
-
-        losers, survivors = keep_first_apply(
-            candidates,
-            text_pairs.select(
-                F.col("doc_id_1").alias("i"), F.col("doc_id_2").alias("j")
-            ).unionByName(
-                sem_pairs.select(
-                    F.col("vec_id_1").alias("i"), F.col("vec_id_2").alias("j")
-                )
-            ),
-        )
-        losers.persist()
-        try:
-            funnel["dup_losers"] = losers.count()
-            funnel["published"] = survivors.count()
-
-            # writer-unique staging: a same-batch-id race is decided
-            # by the commit link, never by two writers clobbering one
-            # staging dir
-            cur_staged = os.path.join(
-                out_dir, ".staging",
-                f"batch-{batch_id}-{_uuid.uuid4().hex[:8]}",
-            )
-            staged_dirs.append(cur_staged)
-            survivors.write.mode("overwrite").parquet(cur_staged)
-            with open(os.path.join(cur_staged, "_funnel.json"), "w") as fh:
-                json.dump(funnel, fh)
-        finally:
-            losers.unpersist()
-
-        # THE commit point: one atomic link commits the batch id for
-        # all three surfaces; everything before this line is invisible
-        record = funnel_txn.link_commit(
-            out_dir, batch_id,
-            [
-                {"staged": mh_staged,
-                 "final": os.path.join(mh_index, f"batch-{batch_id}")},
-                {"staged": sem_staged,
-                 "final": os.path.join(sem_index, f"batch-{batch_id}")},
-                {"staged": cur_staged, "final": batch_dir},
-            ],
-        )
-        committed = True
-    finally:
-        if not committed:
-            # ADVICE r4: clean ONLY this batch's staged dirs -- a
-            # committed transaction's staging belongs to the finalize
-            # renames (recovery completes them after a crash), and
-            # deleting the whole .staging tree would race a
-            # concurrently publishing batch.
-            for d in staged_dirs:
-                shutil.rmtree(d, ignore_errors=True)
-    # roll forward; on a crash here recover() finishes the renames at
-    # the next funnel entry and the replay returns the recorded counts
-    funnel_txn.finalize(record)
-    return funnel
-
-
-def run_curate_stream(
-    spark: SparkSession,
-    docs_stream_dir: str,
-    emb: DataFrame,
-    state_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    jaccard_threshold: float = 0.5,
-    cosine_threshold: float = 0.9,
-    max_files_per_trigger: int | None = None,
-    on_batch: Callable[[str, dict[str, int]], None] | None = None,
-):
-    """VERDICT r4 #2: the curation funnel under the REAL streaming
-    engine -- a file-source ``readStream`` over a documents directory,
-    each micro-batch routed through ``mode_curate_stream`` via
-    ``foreachBatch`` with Spark's own epoch id as the funnel batch id.
-    Returns the started StreamingQuery (``availableNow`` trigger:
-    drains everything currently in the source, then stops -- the
-    incremental-ingest shape; rerun on a schedule for a T4-style
-    loop; reference analog: the continuous monitor loop,
-    pipeline.py:108-130).
-
-    Exactly-once composition, two commit layers:
-    - Spark's checkpoint replays any micro-batch whose epoch committed
-      to the SINK but not to the CHECKPOINT (crash between the two);
-      the replay arrives with the SAME epoch id.
-    - ``mode_curate_stream``'s transaction record is the funnel's own
-      commit point (operators/funnel_txn): a replayed epoch id whose
-      record committed returns the recorded counts and touches
-      neither the indexes nor the output -- both index segments and
-      the publish dir committed together under that one record. So
-      publish-then-crash-then-replay publishes nothing twice -- proven
-      under a real kill/restart in tests/test_curate_stream.py.
-
-    ``emb`` is a batch-side lookup (vec_id == doc_id): the funnel
-    semi-joins it down to each micro-batch's gate survivors, so at
-    100 TB it is the embedding store, not a second stream to align.
-    ``on_batch`` (epoch_id, funnel_counts) is an observability hook --
-    raising inside it is the crash-injection seam the recovery test
-    uses."""
-    stream = spark.readStream.schema(schemas.DOCUMENTS)
-    if max_files_per_trigger is not None:
-        stream = stream.option("maxFilesPerTrigger", max_files_per_trigger)
-    docs_stream = stream.parquet(docs_stream_dir)
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        counts = mode_curate_stream(
-            spark, batch_df, emb, state_dir, out_dir,
-            batch_id=str(epoch_id),
-            jaccard_threshold=jaccard_threshold,
-            cosine_threshold=cosine_threshold,
-        )
-        if on_batch is not None:
-            on_batch(str(epoch_id), counts)
-
-    return (
-        docs_stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def _curated_batch_counts(out_dir: str, batch_id: str) -> dict | None:
-    """Replay lookup for the funnel's commit point: the recorded
-    counts of ``batch_id``, whether its publish dir is still live or
-    was compacted into a base segment. None = never committed."""
-    import json
-
-    from roborock_data_pipeline_spark.operators.index_segments import (
-        live_segments,
-    )
-
-    path = os.path.join(out_dir, f"batch-{batch_id}", "_funnel.json")
-    if not os.path.exists(path):
-        base, _ = live_segments(out_dir)
-        if base is None:
-            return None
-        path = os.path.join(base, "counts", f"batch-{batch_id}.json")
-        if not os.path.exists(path):
-            return None
-    with open(path) as fh:
-        return json.load(fh)
-
-
-def read_curated_stream(spark: SparkSession, out_dir: str) -> DataFrame:
-    """All published curated batches of the streaming funnel -- the
-    compacted base segment's data (if any) plus live batch dirs."""
-    from roborock_data_pipeline_spark.operators.index_segments import (
-        live_segments,
-    )
-
-    base, batches = live_segments(out_dir)
-    paths = [os.path.join(base, "data")] if base is not None else []
-    return spark.read.parquet(*(paths + batches))
-
-
-def compact_curated_output(
-    spark: SparkSession, out_dir: str, n_files: int = 8
-) -> int:
-    """Merge the funnel's per-batch publish dirs into one base segment
-    -- the funnel-output twin of compact_minhash_index (the curated
-    corpus grows one directory per ingest exactly like the indexes
-    did; VERDICT r4 #3's argument applies verbatim to the thing
-    training jobs actually read). Each absorbed batch's recorded
-    counts move to ``base/counts/batch-{id}.json`` so replaying a
-    compacted batch id still returns them; data is repartitioned into
-    ``n_files`` files. Same commit/GC contract as index_segments:
-    CAS-guarded commit, GC at entry (grace window)."""
-    import json as _json
-    import shutil
-
-    from roborock_data_pipeline_spark.operators.index_segments import (
-        commit_base,
-        gc_superseded,
-        live_segments,
-        next_base_gen,
-    )
-
-    gc_superseded(out_dir)  # deferred cleanup from the LAST commit
-    base, batches = live_segments(out_dir)
-    n_input = len(batches) + (1 if base is not None else 0)
-    if n_input <= 1:
-        return 0
-    gen = next_base_gen(out_dir)
-    import uuid as _uuid
-
-    # writer-unique staging; the commit CAS decides a race's winner
-    staged = os.path.join(
-        out_dir, ".staging", f"base-{gen:06d}-{_uuid.uuid4().hex[:8]}"
-    )
-    try:
-        data_paths = (
-            [os.path.join(base, "data")] if base is not None else []
-        ) + batches  # _funnel.json is _-prefixed: invisible to the reader
-        spark.read.parquet(*data_paths).repartition(n_files).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(staged, "data"))
-        counts_root = os.path.join(staged, "counts")
-        os.makedirs(counts_root, exist_ok=True)
-        absorbed: list[str] = []
-        if base is not None:
-            old_counts = os.path.join(base, "counts")
-            if os.path.isdir(old_counts):
-                for f in os.listdir(old_counts):
-                    shutil.copy2(
-                        os.path.join(old_counts, f),
-                        os.path.join(counts_root, f),
-                    )
-            from roborock_data_pipeline_spark.operators.index_segments import (
-                _absorbed_ids,
-            )
-
-            absorbed.extend(_absorbed_ids(base))
-        for b in batches:
-            bid = os.path.basename(b)[len("batch-"):]
-            with open(os.path.join(b, "_funnel.json")) as fh:
-                counts = _json.load(fh)
-            with open(
-                os.path.join(counts_root, f"batch-{bid}.json"), "w"
-            ) as fh:
-                _json.dump(counts, fh)
-            absorbed.append(bid)
-        commit_base(out_dir, staged, gen, absorbed)
-    finally:
-        if os.path.exists(staged):
-            shutil.rmtree(staged, ignore_errors=True)
-    return n_input
-
-
-def funnel_maintenance(
-    spark: SparkSession, state_dir: str, out_dir: str, n_files: int = 8
-) -> dict[str, int]:
-    """One maintenance pass over everything the streaming funnel
-    grows: compact both persisted indexes and the curated output into
-    their base segments. Safe to run between ingests on any cadence
-    (each compactor is a no-op when there is <=1 live segment, and the
-    commit->GC window is reader-consistent); the natural T4 pairing is
-    ``run_scheduled(lambda: funnel_maintenance(...), interval)``.
-    Returns segments merged per surface."""
-    from roborock_data_pipeline_spark.operators import funnel_txn
-    from roborock_data_pipeline_spark.operators.incremental_dedup import (
-        compact_minhash_index,
-    )
-    from roborock_data_pipeline_spark.operators.incremental_semdedup import (
-        compact_semantic_index,
-    )
-
-    if os.path.isdir(out_dir):
-        # roll forward any committed-but-unfinalized ingest before
-        # compacting, so its surfaces join this pass's merge instead
-        # of straddling it
-        funnel_txn.recover(out_dir)
-    merged = {}
-    mh = os.path.join(state_dir, "minhash")
-    sem = os.path.join(state_dir, "semantic")
-    merged["minhash"] = (
-        compact_minhash_index(spark, mh, n_files) if os.path.isdir(mh) else 0
-    )
-    merged["semantic"] = (
-        compact_semantic_index(spark, sem, n_files)
-        if os.path.isdir(sem) else 0
-    )
-    merged["curated"] = (
-        compact_curated_output(spark, out_dir, n_files)
-        if os.path.isdir(out_dir) else 0
-    )
-    return merged
 
 
 def run_scheduled(

@@ -12,11 +12,11 @@ from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
 # Driver testdata tables (FIXTURES.md sec B). `events.ts` has shipped as BOTH
-# parquet TIMESTAMP(MICROS) and TIMESTAMP(NANOS) across testdata vintages, so
-# the schema is unit-aware: `EVENTS` is the native us read; `EVENTS_RAW` reads
-# ns-encoded files as epoch-ns long (spark.sql.legacy.parquet.nanosAsLong --
-# Spark has no ns timestamp type) which sources.tables truncates to us.
-# sources.tables.events_ts_unit() sniffs the parquet footer and picks.
+# parquet TIMESTAMP(MICROS) and TIMESTAMP(NANOS) across testdata vintages.
+# `EVENTS` is the native us read; sources.tables.ns_timestamp_cols() sniffs
+# the parquet footer, and load() reads ns-encoded columns as epoch-ns long
+# (spark.sql.legacy.parquet.nanosAsLong -- Spark has no ns timestamp type)
+# and truncates them to us.
 # ---------------------------------------------------------------------------
 
 EVENTS = T.StructType([
@@ -27,23 +27,6 @@ EVENTS = T.StructType([
     T.StructField("value", T.DoubleType(), False),
     T.StructField("props", T.StringType(), True),  # JSON string, e.g. {"k": 87}
 ])
-
-EVENTS_RAW = T.StructType([
-    T.StructField("event_id", T.LongType(), False),
-    T.StructField("ts", T.LongType(), False),  # epoch ns (see module doc)
-    T.StructField("user_id", T.LongType(), False),
-    T.StructField("event_type", T.StringType(), False),
-    T.StructField("value", T.DoubleType(), False),
-    T.StructField("props", T.StringType(), True),  # JSON string, e.g. {"k": 87}
-])
-
-
-def events_schema(unit: str) -> T.StructType:
-    """Pinned events schema for a sniffed on-disk ``ts`` unit.
-
-    ``"ns"`` (TIMESTAMP(NANOS) / raw int64 epoch-ns) reads via the
-    long workaround; anything us-or-coarser reads natively."""
-    return EVENTS_RAW if unit == "ns" else EVENTS
 
 DOCUMENTS = T.StructType([
     T.StructField("doc_id", T.LongType(), False),
@@ -118,7 +101,7 @@ LINEITEM = T.StructType([
 ])
 
 TESTDATA_SCHEMAS: dict[str, T.StructType] = {
-    "events": EVENTS,  # native us; ns vintages go through events_schema("ns")
+    "events": EVENTS,  # native us; ns vintages are sniffed by sources.tables
     "documents": DOCUMENTS,
     "embeddings": EMBEDDINGS,
     "region": REGION,
@@ -192,15 +175,6 @@ CLEANING_RECORDS = T.StructType([  # CleaningHistoryRecord, roborock_collector.p
     T.StructField("clean_way", T.StringType(), True),
     T.StructField("error_code", T.IntegerType(), True),
     T.StructField("task_status", T.StringType(), True),
-])
-
-STATE = T.StructType([  # state_manager.py:50-87 keyed state
-    T.StructField("device_name", T.StringType(), False),
-    T.StructField("last_clean_count", T.LongType(), True),
-    T.StructField("last_total_area", T.DoubleType(), True),
-    T.StructField("last_total_time", T.LongType(), True),
-    T.StructField("last_record_timestamp", T.TimestampType(), True),
-    T.StructField("last_updated", T.TimestampType(), True),
 ])
 
 # Device-state categorical domains (config/settings.py:37-38).

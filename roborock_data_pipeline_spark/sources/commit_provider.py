@@ -1,6 +1,6 @@
 """Commit-provider seam (VERDICT r11 missing-#3).
 
-Every COMMIT-POINT primitive the warehouse and index layers use goes
+Every COMMIT-POINT primitive the warehouse layer uses goes
 through this one small interface; Spark data writes (parquet dirs)
 stay native -- only the instants that make data VISIBLE route here:
 
@@ -9,7 +9,7 @@ stay native -- only the instants that make data VISIBLE route here:
   fsync + ``os.replace``. Object store: one atomic PUT of the
   manifest object (conditional-on-generation where offered).
 - ``put_if_absent(path, data)``  -- atomic create-if-missing, the lock/
-  lease/transaction-record publish. Local FS: temp + ``os.link``
+  lease publish. Local FS: temp + ``os.link``
   (never observably empty). Object store: PUT If-None-Match, or one
   conditional insert in a lock table.
 - lease operations               -- ``is_mine`` / ``heartbeat`` /
@@ -29,9 +29,9 @@ tests exercise protocol behavior the local FS can never produce;
 the hypothesis warehouse model runs its op alphabet against it
 (tests/test_warehouse_model.py).
 
-Swapping ``BACKEND`` is the entire port: sinks.py, index_segments.py,
-funnel_txn.py and the streaming pair sink construct no commit
-primitive directly.
+Swapping ``BACKEND`` is the entire port: sinks.py, versioned_dir.py
+and pipeline.py's fold-state commits construct no commit primitive
+directly.
 """
 
 from __future__ import annotations
@@ -72,9 +72,7 @@ class LeaseToken:
     ident: int | None = None
 
     def close(self) -> None:
-        """Drop the identity pin WITHOUT releasing (for permanent
-        records published via put_if_absent, e.g. funnel transaction
-        records)."""
+        """Drop the identity pin WITHOUT releasing."""
         if self.fd is not None:
             try:
                 os.close(self.fd)
@@ -133,9 +131,8 @@ class LocalFSBackend:
 
         The staging temp is DOT-PREFIXED in the target's directory
         (ADVICE r12): a temp named ``{path}.acq-...`` would match any
-        prefix-based directory scan over the target's name (e.g. the
-        funnel's ``commit-*`` recovery listing), making a crashed or
-        racing writer's HALF-staged record look committed. A dot
+        prefix-based directory scan over the target's name, making a
+        crashed or racing writer's HALF-staged record look committed. A dot
         prefix can never share a prefix with a real record name. The
         temp is unlinked on EVERY exit path -- including a non-EEXIST
         link failure -- so no orphan survives to confuse a later scan.
@@ -163,25 +160,6 @@ class LocalFSBackend:
                 os.unlink(tmp)
             except OSError:
                 pass
-
-    # -- pointer namespace ops -------------------------------------- #
-
-    def list_keys(self, dir_path: str) -> list[str]:
-        """Names (not paths) of the pointer objects under one
-        directory/prefix -- the object-store LIST-by-prefix analog.
-        Dot-prefixed staging temps are never real keys."""
-        try:
-            return sorted(
-                f for f in os.listdir(dir_path) if not f.startswith(".")
-            )
-        except FileNotFoundError:
-            return []
-
-    def delete_pointer(self, path: str) -> None:
-        try:
-            os.unlink(path)
-        except FileNotFoundError:
-            pass
 
     # -- lease protocol -------------------------------------------- #
 
@@ -516,23 +494,6 @@ class InMemoryObjectStoreBackend:
                 holder=data.decode("utf-8", "replace"),
                 ident=self._next,
             )
-
-    # -- pointer namespace ops -------------------------------------- #
-
-    def list_keys(self, dir_path: str) -> list[str]:
-        prefix = dir_path.rstrip("/") + "/"
-        with self._mu:
-            return sorted(
-                k[len(prefix):]
-                for k in self._objs
-                if k.startswith(prefix) and "/" not in k[len(prefix):]
-            )
-
-    def delete_pointer(self, path: str) -> None:
-        with self._mu:
-            self._objs.pop(path, None)
-            self._ids.pop(path, None)
-            self._mtimes.pop(path, None)
 
     # -- lease protocol -------------------------------------------- #
 

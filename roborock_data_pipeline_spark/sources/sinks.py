@@ -32,11 +32,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from roborock_data_pipeline_spark import schemas
-from roborock_data_pipeline_spark.operators.index_segments import (
-    ConcurrentWriterError,
-)
 from roborock_data_pipeline_spark.sources import commit_provider
 from roborock_data_pipeline_spark.sources.commit_provider import (
+    ConcurrentWriterError,
     commit_pointer,
 )
 
@@ -55,31 +53,6 @@ WAREHOUSE_TABLES: dict[str, T.StructType] = {
         T.StructField("total_time_min", T.LongType(), True),
         T.StructField("avg_area_m2", T.DoubleType(), True),
         T.StructField("avg_time_min", T.DoubleType(), True),
-    ]),
-    # streaming CDC snapshot (streaming/cdc_upsert.py) -- tombstones
-    # are stored (is_delete=true) so late older versions can't
-    # resurrect deleted keys; read_snapshot filters them
-    "user_state_cdc": T.StructType([
-        T.StructField("user_id", T.LongType(), False),
-        T.StructField("last_op", T.StringType(), False),
-        T.StructField("last_value", T.DoubleType(), True),
-        T.StructField("ts", T.TimestampType(), False),
-        T.StructField("event_id", T.LongType(), False),
-        T.StructField("is_delete", T.BooleanType(), False),
-    ]),
-    # streaming trending leaderboard (streaming/trending.py):
-    # per-batch delta counts + the ranked snapshot derived from them
-    "trending_deltas": T.StructType([
-        T.StructField("win", T.TimestampType(), False),
-        T.StructField("event_type", T.StringType(), False),
-        T.StructField("cnt", T.LongType(), False),
-        T.StructField("batch_id", T.LongType(), False),
-    ]),
-    "trending_board": T.StructType([
-        T.StructField("window_start", T.StringType(), False),
-        T.StructField("event_type", T.StringType(), False),
-        T.StructField("cnt", T.LongType(), False),
-        T.StructField("rnk", T.IntegerType(), False),
     ]),
 }
 
@@ -1175,8 +1148,8 @@ def merge_rows(
     The update half and the insert half are each atomic; a crash
     between them re-runs cleanly: already-updated rows match their
     source values again, and the insert half appends only
-    still-unmatched keys. Snapshot-table upserts are linkage.cdc_merge
-    / streaming.cdc_upsert; this is the batch-log form."""
+    still-unmatched keys. Snapshot-table upserts are
+    linkage.cdc_merge; this is the batch-log form."""
     schema = table_schema(warehouse_dir, name)
     missing = [c for c in on if c not in schema.fieldNames()]
     if missing:
@@ -1575,8 +1548,7 @@ def _steal_stale(lock: str, stale_ino: int | None, name: str,
 @contextmanager
 def writer_lock(warehouse_dir: str, name: str):
     """Single-writer lease for a table's MUTATING maintenance
-    (vacuum/compact, incremental gold refresh) -- the batch-log twin
-    of the index layer's CAS guard (operators/index_segments): a
+    (vacuum/compact, incremental gold refresh): a
     second concurrent writer fails LOUDLY (ConcurrentWriterError)
     instead of interleaving.
 
@@ -1979,9 +1951,8 @@ def warehouse_maintenance(
     retain_last_n: int = 24,
     cluster_by: dict[str, list[str]] | None = None,
 ) -> dict[str, int]:
-    """One retention pass over every provisioned warehouse table --
-    the batch-log twin of pipeline.funnel_maintenance, schedulable
-    with run_scheduled (T4). Default retention of 24 batches keeps a
+    """One retention pass over every provisioned warehouse table,
+    schedulable with run_scheduled (T4). Default retention of 24 batches keeps a
     day of hourly as-of versions addressable while bounding every
     table at 25 live directories. ``cluster_by`` maps table name ->
     clustering columns for that table's vacuum base (see
@@ -2059,8 +2030,8 @@ def overwrite_partitions(
     version dirs (readers unaffected; a deterministic re-run
     converges and the orphans are GC'd).
 
-    Version GC runs at ENTRY, not at commit (the index_segments grace
-    pattern): versions superseded by the PREVIOUS overwrite are
+    Version GC runs at ENTRY, not at commit (a grace window):
+    versions superseded by the PREVIOUS overwrite are
     reclaimed here, so a reader that resolved the old manifest keeps
     its files for a full maintenance interval. Disk cost: at most two
     versions per partition.

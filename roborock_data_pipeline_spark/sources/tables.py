@@ -131,12 +131,6 @@ def ns_timestamp_cols(sf_dir: str, name: str) -> tuple[str, ...]:
     return tuple(out)
 
 
-def events_ts_unit(sf_dir: str) -> str:
-    """Unit of ``events.ts`` on disk: ``"ns"`` or ``"us"`` (see
-    ns_timestamp_cols)."""
-    return "ns" if "ts" in ns_timestamp_cols(sf_dir, "events") else "us"
-
-
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table with its pinned schema.
 

@@ -1,15 +1,13 @@
 """Versioned-directory publish: whole-surface swaps through the
 commit-provider seam (VERDICT r12 missing-#1).
 
-Three surfaces used to publish a complete new directory by a
-TWO-rename swap (move the live dir aside, move the staged dir in):
-the IVF-PQ index rebuild, the semantic index's frozen centroids, and
-the JSONL training-shard export (the incremental gold snapshot used
-the same pattern). A kill between the two renames leaves NOTHING
-visible until manual recovery, and on an object store each rename is
-a non-atomic mass copy. This module replaces the pattern with the
-same pointer-manifest discipline the warehouse batch log and the
-index segment layer adopted:
+Two surfaces publish a complete new directory at once: the JSONL
+training-shard export and the incremental lifetime gold snapshot. A
+TWO-rename swap (move the live dir aside, move the staged dir in)
+leaves NOTHING visible if killed between the renames, and on an
+object store each rename is a non-atomic mass copy. This module
+publishes them with the same pointer-manifest discipline the
+warehouse batch log uses:
 
 - new content stages under ``root/.staging-<hex>`` (invisible),
 - a millisecond naming section (``commit_provider.naming_lock``)
@@ -186,12 +184,11 @@ def generation(root: str) -> int | None:
 
 
 def describe_versioned_dir(root: str) -> dict | None:
-    """Metadata-only health snapshot of a versioned surface (VERDICT
-    r13 #6: the IVF-PQ index root, JSONL export root, and lifetime
-    gold snapshot are all ``_current.json`` surfaces with no describe
-    -- a dashboard could not see their generation or staging/trash
-    backlog). Pure listings +
-    stat, zero Spark jobs; None for an absent/empty root.
+    """Metadata-only health snapshot of a versioned surface (the
+    JSONL export root and the lifetime gold snapshot are
+    ``_current.json`` surfaces; without this a dashboard could not see
+    their generation or staging/trash backlog). Pure listings + stat,
+    zero Spark jobs; None for an absent/empty root.
 
     ``staging_dead`` counts stagings the next publish WILL sweep
     (heartbeat silent past the TTL, or heartbeat-less past the mtime

@@ -27,11 +27,20 @@ def events_stream(spark: SparkSession, sf_dir: str,
     the MQTT/HTTPS device feed, roborock_collector.py:295-352).
     Extra ``options`` reach the reader (e.g. maxFilesPerTrigger to
     force multi-micro-batch runs)."""
-    from roborock_data_pipeline_spark.sources.tables import events_ts_unit
+    from pyspark.sql import types as T
 
-    unit = events_ts_unit(sf_dir)  # same footer sniff as the batch loader
+    from roborock_data_pipeline_spark.sources.tables import ns_timestamp_cols
+
+    # same footer sniff as the batch loader: ns-encoded ts reads as
+    # epoch-ns long and is truncated to us below
+    ns = "ts" in ns_timestamp_cols(sf_dir, "events")
+    schema = T.StructType([
+        T.StructField(f.name, T.LongType(), f.nullable)
+        if ns and f.name == "ts" else f
+        for f in schemas.EVENTS.fields
+    ])
     reader = (
-        spark.readStream.schema(schemas.events_schema(unit))
+        spark.readStream.schema(schema)
         .format("parquet")
         # glob, not the bare file path: the file source requires its
         # inferred basePath to be a directory; the glob keeps sf_dir as
@@ -42,7 +51,7 @@ def events_stream(spark: SparkSession, sf_dir: str,
     for k, v in options.items():
         reader = reader.option(k, v)
     raw = reader.load(f"{sf_dir}/events*")
-    if unit == "ns":
+    if ns:
         # same ns->us conversion as the batch loader
         raw = raw.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return raw

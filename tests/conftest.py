@@ -77,3 +77,23 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture()
+def drop_pointer():
+    """Delete one commit-seam pointer on whichever backend is active --
+    how a test plants a manifest-less table dir. The engine itself
+    never deletes a pointer, so the seam has no such operation."""
+    from roborock_data_pipeline_spark.sources import commit_provider as cp
+
+    def drop(path: str) -> None:
+        backend = cp.BACKEND
+        if isinstance(backend, cp.InMemoryObjectStoreBackend):
+            with backend._mu:  # noqa: SLF001
+                for store in (backend._objs, backend._ids,  # noqa: SLF001
+                              backend._mtimes, backend._stale):  # noqa: SLF001
+                    store.pop(path, None)
+        else:
+            os.remove(path)
+
+    return drop

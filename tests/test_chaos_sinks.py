@@ -1,8 +1,8 @@
 """Fault injection for every staged-rename publish (VERDICT r4 #8).
 
 The atomic rename is load-bearing for each exactly-once claim in the
-engine: warehouse appends, both incremental indexes, and the curation
-funnel's batch publish. Two injected faults per surface:
+engine: warehouse appends, vacuum, overwrites and the versioned gold
+snapshot. Two injected faults per surface:
 
 - FAIL BETWEEN stage-write and ``os.replace`` (the publish rename
   itself dies): nothing may become visible, staging must be cleaned,
@@ -17,22 +17,13 @@ from __future__ import annotations
 import os
 
 import pytest
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from roborock_data_pipeline_spark.sources.tables import load
 
 
 
-def _record_exists(out, batch_id):
-    """Backend-agnostic commit-record probe (the record store is the
-    commit seam, which may be the in-memory object store)."""
-    from roborock_data_pipeline_spark.operators import funnel_txn
-    from roborock_data_pipeline_spark.sources import commit_provider
+def _staging_empty(root):
+    s = os.path.join(root, ".staging")
+    return not os.path.isdir(s) or not os.listdir(s)
 
-    return commit_provider.read_pointer(
-        funnel_txn.record_path(out, batch_id)
-    ) is not None
 
 def _fail_replace_once(monkeypatch, match: str) -> dict:
     """Patch os.replace to raise ONCE for destinations under `match`
@@ -49,381 +40,6 @@ def _fail_replace_once(monkeypatch, match: str) -> dict:
 
     monkeypatch.setattr("os.replace", bomb)
     return state
-
-
-def _poison(df, col="text"):
-    """A DataFrame whose write job always fails (test-only UDF; the
-    no-UDF policy covers operators, not fault injection)."""
-
-    @F.udf(T.StringType())
-    def boom(x):
-        raise RuntimeError("injected mid-write failure")
-
-    return df.withColumn(col, boom(col))
-
-
-def _segments(idx):
-    if not os.path.isdir(idx):
-        return []
-    return sorted(
-        d for d in os.listdir(idx)
-        if d.startswith(("batch-", "base-"))
-    )
-
-
-def _staging_empty(root):
-    s = os.path.join(root, ".staging")
-    return not os.path.isdir(s) or not os.listdir(s)
-
-
-def _pairs(df):
-    return {tuple(r) for r in df.collect()}
-
-
-def test_minhash_index_publish_faults(spark, sf_dir, tmp_path, monkeypatch):
-    from roborock_data_pipeline_spark.operators.incremental_dedup import (
-        update_minhash_index,
-    )
-
-    docs = load(spark, sf_dir, "documents")
-    b1 = docs.where(F.col("doc_id") % 2 == 0)
-    b2 = docs.where(F.col("doc_id") % 2 == 1)
-    idx = str(tmp_path / "mh")
-    ctl = str(tmp_path / "mh_ctl")
-    update_minhash_index(spark, b1, idx, batch_id="b1")
-    update_minhash_index(spark, b1, ctl, batch_id="b1")
-    before = _segments(idx)
-
-    # fault 1: crash on the publish rename
-    state = _fail_replace_once(monkeypatch, idx)
-    with pytest.raises(OSError, match="injected"):
-        update_minhash_index(spark, b2, idx, batch_id="b2")
-    assert state["fired"]
-    assert _segments(idx) == before, "partial batch became visible"
-    assert _staging_empty(idx)
-    monkeypatch.undo()
-
-    # fault 2: crash mid-write of the staged tables
-    with pytest.raises(Exception):
-        update_minhash_index(spark, _poison(b2), idx, batch_id="b2")
-    assert _segments(idx) == before
-    assert _staging_empty(idx)
-
-    # retry converges to the no-crash result
-    got = _pairs(update_minhash_index(spark, b2, idx, batch_id="b2"))
-    want = _pairs(update_minhash_index(spark, b2, ctl, batch_id="b2"))
-    assert got == want and got, "retry diverged from the no-crash control"
-
-
-def test_semantic_index_publish_faults(spark, sf_dir, tmp_path, monkeypatch):
-    from roborock_data_pipeline_spark.operators.incremental_semdedup import (
-        create_semantic_index,
-        update_semantic_index,
-    )
-
-    emb = load(spark, sf_dir, "embeddings")
-    b1 = emb.where(F.col("vec_id") % 2 == 0)
-    b2 = emb.where(F.col("vec_id") % 2 == 1)
-    idx = str(tmp_path / "sem")
-    ctl = str(tmp_path / "sem_ctl")
-    create_semantic_index(spark, emb, idx)
-    create_semantic_index(spark, emb, ctl)
-    update_semantic_index(spark, b1, idx, threshold=0.25, batch_id="b1")
-    update_semantic_index(spark, b1, ctl, threshold=0.25, batch_id="b1")
-    before = _segments(idx)
-
-    state = _fail_replace_once(monkeypatch, idx)
-    with pytest.raises(OSError, match="injected"):
-        update_semantic_index(spark, b2, idx, threshold=0.25, batch_id="b2")
-    assert state["fired"]
-    assert _segments(idx) == before, "partial batch became visible"
-    assert _staging_empty(idx)
-    monkeypatch.undo()
-
-    @F.udf(T.ArrayType(T.FloatType()))
-    def boom(x):
-        raise RuntimeError("injected mid-write failure")
-
-    with pytest.raises(Exception):
-        update_semantic_index(
-            spark, b2.withColumn("embedding", boom("embedding")), idx,
-            threshold=0.25, batch_id="b2",
-        )
-    assert _segments(idx) == before
-    assert _staging_empty(idx)
-
-    got = _pairs(update_semantic_index(spark, b2, idx, threshold=0.25,
-                                       batch_id="b2"))
-    want = _pairs(update_semantic_index(spark, b2, ctl, threshold=0.25,
-                                        batch_id="b2"))
-    assert got == want and got, "retry diverged from the no-crash control"
-
-
-def test_index_compaction_publish_faults(spark, sf_dir, tmp_path, monkeypatch):
-    """A compaction that dies on its base-commit rename must leave the
-    pre-compaction segments fully live; the retry compacts cleanly."""
-    from roborock_data_pipeline_spark.operators.incremental_dedup import (
-        compact_minhash_index,
-        update_minhash_index,
-    )
-
-    docs = load(spark, sf_dir, "documents")
-    idx = str(tmp_path / "mh")
-    for i in range(2):
-        update_minhash_index(
-            spark, docs.where(F.col("doc_id") % 2 == i), idx, batch_id=f"b{i}"
-        )
-    before = _segments(idx)
-
-    state = _fail_replace_once(monkeypatch, idx)
-    with pytest.raises(OSError, match="injected"):
-        compact_minhash_index(spark, idx)
-    assert state["fired"]
-    assert _segments(idx) == before, "half-committed base became visible"
-    assert _staging_empty(idx)
-    monkeypatch.undo()
-
-    assert compact_minhash_index(spark, idx) == 2
-    # replay records survived the crashed attempt + the retry
-    got = _pairs(update_minhash_index(spark, docs.limit(0), idx,
-                                      batch_id="b1"))
-    assert got == _pairs(
-        update_minhash_index(spark, docs.limit(0), idx, batch_id="b1")
-    )
-
-
-def test_curate_funnel_crash_mid_finalize_rolls_forward(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """Crash DURING the roll-forward renames, after the commit link
-    (the former per-surface publish window): the transaction record is
-    the truth — the retry's recovery completes the interrupted rename
-    and returns the RECORDED counts, equal to the no-crash control's;
-    the output converges byte-identically."""
-    from roborock_data_pipeline_spark import pipeline
-    from roborock_data_pipeline_spark.operators import funnel_txn
-
-    docs = load(spark, sf_dir, "documents")
-    emb = load(spark, sf_dir, "embeddings")
-    d1, d2 = docs.where(F.col("doc_id") < 250), docs.where(F.col("doc_id") >= 250)
-    state_dir, out = str(tmp_path / "s"), str(tmp_path / "o")
-    ctl_state, ctl_out = str(tmp_path / "cs"), str(tmp_path / "co")
-    f1 = pipeline.mode_curate_stream(spark, d1, emb, state_dir, out, "b1")
-    pipeline.mode_curate_stream(spark, d1, emb, ctl_state, ctl_out, "b1")
-
-    # the curated surface finalizes LAST: the crash leaves the two
-    # index segments renamed, the curated rename pending, record live
-    state = _fail_replace_once(monkeypatch, os.path.join(out, "batch-b2"))
-    with pytest.raises(OSError, match="injected"):
-        pipeline.mode_curate_stream(spark, d2, emb, state_dir, out, "b2")
-    assert state["fired"]
-    monkeypatch.undo()
-    assert _record_exists(out, "b2"), (
-        "commit record must survive a crashed finalize"
-    )
-    visible = sorted(d for d in os.listdir(out) if d.startswith("batch-"))
-    assert visible == ["batch-b1"], "half-finalized batch leaked"
-    assert pipeline.read_curated_stream(spark, out).count() == f1["published"]
-
-    # retry = replay: recovery rolls the rename forward and the
-    # RECORDED counts come back (no recompute), equal to the control's
-    f2 = pipeline.mode_curate_stream(spark, d2, emb, state_dir, out, "b2")
-    ctl2 = pipeline.mode_curate_stream(spark, d2, emb, ctl_state, ctl_out, "b2")
-    assert f2 == ctl2
-    assert not _record_exists(out, "b2")
-    assert _staging_empty(out)
-    assert (
-        pipeline.read_curated_stream(spark, out).count()
-        == f1["published"] + f2["published"]
-    )
-    kept = sorted(
-        r["doc_id"]
-        for r in pipeline.read_curated_stream(spark, out)
-        .select("doc_id").collect()
-    )
-    kept_ctl = sorted(
-        r["doc_id"]
-        for r in pipeline.read_curated_stream(spark, ctl_out)
-        .select("doc_id").collect()
-    )
-    assert kept == kept_ctl
-
-
-def test_curate_funnel_crash_after_commit_link_before_any_rename(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """Crash immediately AFTER the commit link, before ANY surface
-    rename: logically committed, physically nothing visible yet. The
-    next funnel touch recovers all three surfaces together and the
-    replay returns the recorded counts — all-or-nothing at the
-    transaction level."""
-    from roborock_data_pipeline_spark import pipeline
-    from roborock_data_pipeline_spark.operators import funnel_txn
-
-    docs = load(spark, sf_dir, "documents")
-    emb = load(spark, sf_dir, "embeddings")
-    d1, d2 = docs.where(F.col("doc_id") < 250), docs.where(F.col("doc_id") >= 250)
-    state_dir, out = str(tmp_path / "s"), str(tmp_path / "o")
-    ctl_state, ctl_out = str(tmp_path / "cs"), str(tmp_path / "co")
-    pipeline.mode_curate_stream(spark, d1, emb, state_dir, out, "b1")
-    pipeline.mode_curate_stream(spark, d1, emb, ctl_state, ctl_out, "b1")
-
-    real_finalize = funnel_txn.finalize
-    state = {"fired": False}
-
-    def bomb(record):
-        if not state["fired"]:
-            state["fired"] = True
-            raise RuntimeError("injected crash after commit link")
-        return real_finalize(record)
-
-    monkeypatch.setattr(funnel_txn, "finalize", bomb)
-    with pytest.raises(RuntimeError, match="injected"):
-        pipeline.mode_curate_stream(spark, d2, emb, state_dir, out, "b2")
-    assert state["fired"]
-    monkeypatch.undo()
-
-    # committed but not yet rolled forward: no surface visible
-    assert _record_exists(out, "b2")
-    for surface in (
-        os.path.join(state_dir, "minhash"),
-        os.path.join(state_dir, "semantic"),
-        out,
-    ):
-        assert "batch-b2" not in _segments(surface), surface
-
-    # recovery at the next touch makes all three visible TOGETHER and
-    # the replay returns the recorded counts
-    f2 = pipeline.mode_curate_stream(spark, d2, emb, state_dir, out, "b2")
-    ctl2 = pipeline.mode_curate_stream(spark, d2, emb, ctl_state, ctl_out, "b2")
-    assert f2 == ctl2
-    for surface in (
-        os.path.join(state_dir, "minhash"),
-        os.path.join(state_dir, "semantic"),
-        out,
-    ):
-        assert "batch-b2" in _segments(surface), surface
-    assert not _record_exists(out, "b2")
-    assert _staging_empty(out)
-    kept = sorted(
-        r["doc_id"]
-        for r in pipeline.read_curated_stream(spark, out)
-        .select("doc_id").collect()
-    )
-    kept_ctl = sorted(
-        r["doc_id"]
-        for r in pipeline.read_curated_stream(spark, ctl_out)
-        .select("doc_id").collect()
-    )
-    assert kept == kept_ctl
-
-
-def test_curate_funnel_crash_at_commit_link(
-    spark, sf_dir, tmp_path, monkeypatch
-):
-    """Crash ON the commit link itself (before the record exists):
-    nothing is committed, every staged dir is cleaned, all three
-    surfaces untouched; a plain retry recomputes and converges."""
-    from roborock_data_pipeline_spark import pipeline
-    from roborock_data_pipeline_spark.operators import funnel_txn
-
-    docs = load(spark, sf_dir, "documents")
-    emb = load(spark, sf_dir, "embeddings")
-    d1, d2 = docs.where(F.col("doc_id") < 250), docs.where(F.col("doc_id") >= 250)
-    state_dir, out = str(tmp_path / "s"), str(tmp_path / "o")
-    ctl_state, ctl_out = str(tmp_path / "cs"), str(tmp_path / "co")
-    pipeline.mode_curate_stream(spark, d1, emb, state_dir, out, "b1")
-    pipeline.mode_curate_stream(spark, d1, emb, ctl_state, ctl_out, "b1")
-
-    state = {"fired": False}
-
-    def bomb(*a, **k):
-        state["fired"] = True
-        raise OSError("injected crash at commit link")
-
-    monkeypatch.setattr(funnel_txn, "link_commit", bomb)
-    with pytest.raises(OSError, match="injected"):
-        pipeline.mode_curate_stream(spark, d2, emb, state_dir, out, "b2")
-    assert state["fired"]
-    monkeypatch.undo()
-
-    assert not _record_exists(out, "b2")
-    for surface in (
-        os.path.join(state_dir, "minhash"),
-        os.path.join(state_dir, "semantic"),
-        out,
-    ):
-        assert "batch-b2" not in _segments(surface), surface
-        assert _staging_empty(surface), surface
-
-    f2 = pipeline.mode_curate_stream(spark, d2, emb, state_dir, out, "b2")
-    ctl2 = pipeline.mode_curate_stream(spark, d2, emb, ctl_state, ctl_out, "b2")
-    assert f2 == ctl2
-
-
-def test_curate_funnel_crash_between_index_stages(spark, sf_dir, tmp_path,
-                                                  monkeypatch):
-    """The former mid-batch window, now CLOSED by the single commit
-    (VERDICT r6 #6): the MinHash segment is fully staged, the semantic
-    staging dies. Before the transaction this left the MinHash index
-    COMMITTED ahead of an unpublished batch; now NOTHING is visible on
-    any surface — no index segment, no output, no record — and a plain
-    retry recomputes everything, matching a no-crash control."""
-    from roborock_data_pipeline_spark import pipeline
-    from roborock_data_pipeline_spark.operators import (
-        funnel_txn,
-        incremental_semdedup,
-    )
-
-    docs = load(spark, sf_dir, "documents")
-    emb = load(spark, sf_dir, "embeddings")
-    d1 = docs.where(F.col("doc_id") < 250)
-    d2 = docs.where(F.col("doc_id") >= 250)
-    state_dir, out = str(tmp_path / "s"), str(tmp_path / "o")
-    ctl_state, ctl_out = str(tmp_path / "cs"), str(tmp_path / "co")
-    pipeline.mode_curate_stream(spark, d1, emb, state_dir, out, "b1")
-    pipeline.mode_curate_stream(spark, d1, emb, ctl_state, ctl_out, "b1")
-
-    real = incremental_semdedup.stage_semantic_update
-    state = {"fired": False}
-
-    def bomb(*a, **k):
-        if not state["fired"]:
-            state["fired"] = True
-            raise RuntimeError("injected crash after minhash staging")
-        return real(*a, **k)
-
-    # the funnel imports stage_semantic_update inside the call, so the
-    # module attribute is the single binding to patch
-    monkeypatch.setattr(incremental_semdedup, "stage_semantic_update", bomb)
-    with pytest.raises(RuntimeError, match="injected"):
-        pipeline.mode_curate_stream(spark, d2, emb, state_dir, out, "b2")
-    assert state["fired"]
-    # all-or-nothing: NO surface advanced — in particular the MinHash
-    # index, which the pre-transaction funnel would have committed
-    assert not os.path.isdir(os.path.join(state_dir, "minhash", "batch-b2"))
-    assert not os.path.isdir(os.path.join(state_dir, "semantic", "batch-b2"))
-    assert not os.path.isdir(os.path.join(out, "batch-b2"))
-    assert not _record_exists(out, "b2")
-    for surface in (os.path.join(state_dir, "minhash"),
-                    os.path.join(state_dir, "semantic"), out):
-        assert _staging_empty(surface), surface
-
-    f2 = pipeline.mode_curate_stream(spark, d2, emb, state_dir, out, "b2")
-    ctl2 = pipeline.mode_curate_stream(spark, d2, emb, ctl_state, ctl_out,
-                                       "b2")
-    assert f2 == ctl2
-    kept = sorted(
-        r["doc_id"]
-        for r in pipeline.read_curated_stream(spark, out)
-        .select("doc_id").collect()
-    )
-    kept_ctl = sorted(
-        r["doc_id"]
-        for r in pipeline.read_curated_stream(spark, ctl_out)
-        .select("doc_id").collect()
-    )
-    assert kept == kept_ctl
 
 
 def test_vacuum_rename_fault_then_retry(spark, tmp_path, monkeypatch):

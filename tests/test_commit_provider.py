@@ -200,16 +200,12 @@ def test_append_commit_lost_put_fails_whole_and_retries(
 def test_crashed_put_temp_never_matches_record_listing(tmp_path):
     """A put_if_absent staging temp is dot-prefixed: a writer killed
     between the temp write and the link leaves NOTHING a prefix-based
-    record scan (funnel recover's `commit-*.json` listing) could
-    mistake for a committed transaction record — the pre-r13 naming
-    (`{path}.acq-<hex>`) matched `startswith('commit-')` and could
-    roll forward a transaction that never reached its commit point."""
-    from roborock_data_pipeline_spark.operators import funnel_txn
-
-    out = str(tmp_path / "out")
-    tdir = funnel_txn.txn_dir(out)
+    scan of the directory (e.g. a ``commit-*.json`` listing) could
+    mistake for a committed record — the pre-r13 naming
+    (`{path}.acq-<hex>`) matched `startswith('commit-')`."""
+    tdir = str(tmp_path / "records")
     os.makedirs(tdir)
-    record = funnel_txn.record_path(out, "b1")
+    record = os.path.join(tdir, "commit-b1.json")
 
     # simulate the kill: stage exactly as the provider does, no link
     orig_link = os.link
@@ -228,16 +224,10 @@ def test_crashed_put_temp_never_matches_record_listing(tmp_path):
     assert staged_names and all(
         n.startswith(".") for n in staged_names
     ), staged_names
+    assert not any(n.startswith("commit-") for n in staged_names)
     # the temp was unlinked even on the non-EEXIST failure (ADVICE
-    # r12: the old code leaked it), and recover sees zero records
+    # r12: the old code leaked it)
     assert os.listdir(tdir) == []
-    assert funnel_txn.recover(out) == 0
-
-    # a manually-stranded dot-temp (kill between write and unlink)
-    # is still invisible to recovery's exact-shape match
-    with open(os.path.join(tdir, ".acq-deadbeef-commit-b9.json"), "wb") as fh:
-        fh.write(b"{}")
-    assert funnel_txn.recover(out) == 0
 
 
 # ------------------------------------------------------------------ #
@@ -277,17 +267,6 @@ def test_memory_backend_staleness_absorbed_by_commit_pointer(monkeypatch):
     cp.commit_pointer("/p/x", b"v2")
     b.read_pointer("/p/x")  # drain
     assert b.read_pointer("/p/x") == b"v2"
-
-
-def test_memory_backend_list_and_delete():
-    b = cp.InMemoryObjectStoreBackend()
-    b.swap_pointer("/t/_txn/commit-a.json", b"{}")
-    b.swap_pointer("/t/_txn/commit-b.json", b"{}")
-    b.swap_pointer("/t/_txn/nested/commit-c.json", b"{}")
-    assert b.list_keys("/t/_txn") == ["commit-a.json", "commit-b.json"]
-    b.delete_pointer("/t/_txn/commit-a.json")
-    assert b.list_keys("/t/_txn") == ["commit-b.json"]
-    assert b.list_keys("/t/absent") == []
 
 
 def test_memory_backend_lost_put_raises_commit_lost(monkeypatch):

@@ -76,200 +76,3 @@ def test_approx_distinct_error_bound(spark, sf_dir):
     assert abs(approx.n_devices - exact.n_devices) <= max(2, 0.02 * exact.n_devices)
     assert abs(approx.n_states - exact.n_states) <= max(1, 0.02 * exact.n_states)
 
-
-def test_incremental_minhash_matches_full_batch(spark, sf_dir, tmp_path):
-    """Two incremental ingests (even doc_ids, then odd) emit exactly
-    the full-batch q_dedup_minhash pair set, each pair exactly once —
-    the index accumulates, candidates stay new×all."""
-    from pyspark.sql import functions as F
-
-    from roborock_data_pipeline_spark.operators.dedup import q_dedup_minhash
-    from roborock_data_pipeline_spark.operators.incremental_dedup import (
-        update_minhash_index,
-    )
-    from roborock_data_pipeline_spark.sources.tables import load
-
-    truth = {
-        (r.doc_id_1, r.doc_id_2, r.jaccard)
-        for r in q_dedup_minhash(spark, sf_dir).collect()
-    }
-    docs = load(spark, sf_dir, "documents")
-    idx = str(tmp_path / "mh_index")
-    p1 = update_minhash_index(spark, docs.where(F.col("doc_id") % 2 == 0), idx)
-    p2 = update_minhash_index(spark, docs.where(F.col("doc_id") % 2 == 1), idx)
-    got1 = [(r.doc_id_1, r.doc_id_2, r.jaccard) for r in p1.collect()]
-    got2 = [(r.doc_id_1, r.doc_id_2, r.jaccard) for r in p2.collect()]
-    got = got1 + got2
-    assert len(got) == len(set(got)), "a pair was emitted twice"
-    assert set(got) == truth
-
-
-def test_incremental_semdedup_matches_full_batch(spark, sf_dir, tmp_path):
-    """VERDICT r3 #7: two incremental embedding ingests (even vec_ids,
-    then odd) against a frozen-centroid IVF index emit exactly the
-    single-call pair set, each pair exactly once, and the cumulative
-    loser set matches the batch loser set."""
-    from pyspark.sql import functions as F
-
-    from roborock_data_pipeline_spark.operators.incremental_semdedup import (
-        create_semantic_index,
-        semantic_losers,
-        update_semantic_index,
-    )
-    from roborock_data_pipeline_spark.sources.tables import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    full_idx = str(tmp_path / "sem_full")
-    incr_idx = str(tmp_path / "sem_incr")
-    # identical training corpus → identical frozen cell space
-    create_semantic_index(spark, emb, full_idx)
-    create_semantic_index(spark, emb, incr_idx)
-
-    full = update_semantic_index(spark, emb, full_idx, threshold=0.25)
-    truth = {(r.vec_id_1, r.vec_id_2, r.cosine) for r in full.collect()}
-    assert truth, "test needs a non-empty pair set to be meaningful"
-
-    p1 = update_semantic_index(
-        spark, emb.where(F.col("vec_id") % 2 == 0), incr_idx, threshold=0.25
-    )
-    p2 = update_semantic_index(
-        spark, emb.where(F.col("vec_id") % 2 == 1), incr_idx, threshold=0.25
-    )
-    got1 = [(r.vec_id_1, r.vec_id_2, r.cosine) for r in p1.collect()]
-    got2 = [(r.vec_id_1, r.vec_id_2, r.cosine) for r in p2.collect()]
-    got = got1 + got2
-    assert len(got) == len(set(got)), "a pair was emitted twice"
-    assert set(got) == truth
-
-    losers_full = {r.vec_id for r in semantic_losers(full).collect()}
-    losers_incr = {
-        r.vec_id
-        for df in (p1, p2)
-        for r in semantic_losers(df).collect()
-    }
-    assert losers_incr == losers_full
-
-
-def test_incremental_semdedup_replay_is_idempotent(spark, sf_dir, tmp_path):
-    """A replayed batch_id recomputes the SAME pair set against the
-    pre-batch index state and does not re-publish — exactly-once
-    under crash-retry, mirroring the minhash index contract."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from roborock_data_pipeline_spark.operators.incremental_semdedup import (
-        create_semantic_index,
-        update_semantic_index,
-    )
-    from roborock_data_pipeline_spark.sources.tables import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    idx = str(tmp_path / "sem_replay")
-    create_semantic_index(spark, emb, idx)
-    evens = emb.where(F.col("vec_id") % 2 == 0)
-    odds = emb.where(F.col("vec_id") % 2 == 1)
-
-    update_semantic_index(spark, evens, idx, threshold=0.25, batch_id="b1")
-    first = {
-        (r.vec_id_1, r.vec_id_2, r.cosine)
-        for r in update_semantic_index(
-            spark, odds, idx, threshold=0.25, batch_id="b2"
-        ).collect()
-    }
-    n_batches = len([d for d in os.listdir(idx) if d.startswith("batch-")])
-    replay = {
-        (r.vec_id_1, r.vec_id_2, r.cosine)
-        for r in update_semantic_index(
-            spark, odds, idx, threshold=0.25, batch_id="b2"
-        ).collect()
-    }
-    assert replay == first
-    assert (
-        len([d for d in os.listdir(idx) if d.startswith("batch-")])
-        == n_batches == 2
-    )
-
-
-def test_semantic_index_nonlatest_replay_is_exactly_once(spark, sf_dir, tmp_path):
-    """r4 review: replaying a NON-latest batch must return its stored
-    pair set, not a recompute against batches published after it
-    (which would re-emit the later batches' cross pairs)."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from roborock_data_pipeline_spark.operators.incremental_semdedup import (
-        create_semantic_index,
-        update_semantic_index,
-    )
-    from roborock_data_pipeline_spark.sources.tables import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    idx = str(tmp_path / "sem_nl")
-    create_semantic_index(spark, emb, idx)
-    b1 = emb.where(F.col("vec_id") % 2 == 0)
-    b2 = emb.where(F.col("vec_id") % 2 == 1)
-
-    p1 = {
-        (r.vec_id_1, r.vec_id_2)
-        for r in update_semantic_index(
-            spark, b1, idx, threshold=0.25, batch_id="b1"
-        ).collect()
-    }
-    p2 = {
-        (r.vec_id_1, r.vec_id_2)
-        for r in update_semantic_index(
-            spark, b2, idx, threshold=0.25, batch_id="b2"
-        ).collect()
-    }
-    assert p2 - p1  # b2 emitted cross pairs b1's run could not have
-    # replay the EARLIER batch after the later one is committed
-    p1_replay = {
-        (r.vec_id_1, r.vec_id_2)
-        for r in update_semantic_index(
-            spark, b1, idx, threshold=0.25, batch_id="b1"
-        ).collect()
-    }
-    assert p1_replay == p1  # stored pairs, no re-emission of b2's set
-    assert len([d for d in os.listdir(idx) if d.startswith("batch-")]) == 2
-
-
-def test_minhash_index_nonlatest_replay_is_exactly_once(spark, sf_dir, tmp_path):
-    """Same contract as the semantic index: replaying a committed
-    NON-latest minhash batch returns its stored pair set, never a
-    recompute against later batches."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from roborock_data_pipeline_spark.operators.incremental_dedup import (
-        update_minhash_index,
-    )
-    from roborock_data_pipeline_spark.sources.tables import load
-
-    docs = load(spark, sf_dir, "documents")
-    idx = str(tmp_path / "mh_nl")
-    b1 = docs.where(F.col("doc_id") % 2 == 0)
-    b2 = docs.where(F.col("doc_id") % 2 == 1)
-    p1 = {
-        (r.doc_id_1, r.doc_id_2)
-        for r in update_minhash_index(
-            spark, b1, idx, threshold=0.2, batch_id="b1"
-        ).collect()
-    }
-    p2 = {
-        (r.doc_id_1, r.doc_id_2)
-        for r in update_minhash_index(
-            spark, b2, idx, threshold=0.2, batch_id="b2"
-        ).collect()
-    }
-    assert p2 - p1
-    p1_replay = {
-        (r.doc_id_1, r.doc_id_2)
-        for r in update_minhash_index(
-            spark, b1, idx, threshold=0.2, batch_id="b1"
-        ).collect()
-    }
-    assert p1_replay == p1
-    assert len([d for d in os.listdir(idx) if d.startswith("batch-")]) == 2

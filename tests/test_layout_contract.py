@@ -26,12 +26,7 @@ import tempfile
 import pytest
 
 from roborock_data_pipeline_spark import pipeline, schemas
-from roborock_data_pipeline_spark.operators import index_segments
-from roborock_data_pipeline_spark.sources import (
-    commit_provider,
-    sinks,
-    versioned_dir,
-)
+from roborock_data_pipeline_spark.sources import sinks, versioned_dir
 
 
 @pytest.fixture()
@@ -117,12 +112,10 @@ def test_gold_reads_keep_their_shape_once_populated(spark, warehouse):
 # --- older layouts are refused by name -------------------------------
 
 
-def test_manifest_less_batch_log_refused(spark, warehouse):
+def test_manifest_less_batch_log_refused(spark, warehouse, drop_pointer):
     _append(spark, warehouse, [_rec(1)])
     td = sinks.table_path(warehouse, "cleaning_records")
-    commit_provider.BACKEND.delete_pointer(
-        os.path.join(td, sinks.BATCHES_MANIFEST)
-    )
+    drop_pointer(os.path.join(td, sinks.BATCHES_MANIFEST))
     for fn in (
         lambda: sinks.read_table(spark, warehouse, "cleaning_records"),
         lambda: sinks.list_batches(warehouse, "cleaning_records"),
@@ -164,32 +157,6 @@ def test_pointer_less_versioned_root_refused(tmp_path):
     staged = versioned_dir.staging_dir(root)
     _refused(lambda: versioned_dir.publish(root, staged), root)
     assert os.path.exists(os.path.join(root, "part-0.parquet"))
-
-
-def test_rename_layout_index_refused(tmp_path):
-    idx = str(tmp_path / "idx")
-    os.makedirs(os.path.join(idx, "batch-b0", "pairs"))
-    staged = str(tmp_path / "staged")
-    os.makedirs(os.path.join(staged, "pairs"))
-    for fn in (
-        lambda: index_segments.live_segments(idx),
-        lambda: index_segments.is_committed(idx, "b0"),
-        lambda: index_segments.publish_segment(
-            staged, os.path.join(idx, "batch-b1")
-        ),
-        lambda: index_segments.describe_index(idx),
-    ):
-        _refused(fn, idx)
-
-
-def test_manifest_less_epoch_dirs_refused(spark, tmp_path):
-    from roborock_data_pipeline_spark.streaming import near_dup_pairs
-
-    pairs_dir = str(tmp_path / "pairs")
-    spark.createDataFrame(
-        [(1, 2, 0.99)], "vec_id_1 long, vec_id_2 long, cosine double"
-    ).write.parquet(os.path.join(pairs_dir, "epoch-000000000000"))
-    _refused(lambda: near_dup_pairs.read_pairs(spark, pairs_dir), pairs_dir)
 
 
 def test_unversioned_partitions_refused(spark, tmp_path):

@@ -218,7 +218,7 @@ def test_rowops_refuse_root_level_snapshot_tables(spark, warehouse):
 
 def test_concurrent_rowop_raises_under_lease(spark, warehouse):
     _append(spark, warehouse, [_rec(1, "robo-a")])
-    from roborock_data_pipeline_spark.operators.index_segments import (
+    from roborock_data_pipeline_spark.sources.commit_provider import (
         ConcurrentWriterError,
     )
 
@@ -342,22 +342,22 @@ def test_partition_layout_refused_via_declared_manifest(spark, warehouse):
         )
 
 
-def _strip_batch_manifest(warehouse, name):
+def _strip_batch_manifest(warehouse, name, drop_pointer):
     """Turn a provisioned table dir into a manifest-less one (through
-    the commit seam, so it works on any backend)."""
-    from roborock_data_pipeline_spark.sources import commit_provider
-
-    commit_provider.BACKEND.delete_pointer(
+    the active commit backend, so it works on any backend)."""
+    drop_pointer(
         os.path.join(sinks.table_path(warehouse, name), sinks.BATCHES_MANIFEST)
     )
 
 
-def test_legacy_partition_dirs_without_batches_still_refused(spark, warehouse):
+def test_legacy_partition_dirs_without_batches_still_refused(
+    spark, warehouse, drop_pointer
+):
     """The pre-manifest gold layout — key=value dirs holding data, no
     manifest at all — is refused by name: DML never silently erases
     nothing from it."""
     td = sinks.table_path(warehouse, "daily_summary")
-    _strip_batch_manifest(warehouse, "daily_summary")
+    _strip_batch_manifest(warehouse, "daily_summary", drop_pointer)
     leaf = os.path.join(td, "date=2024-03-01")
     os.makedirs(leaf, exist_ok=True)
     spark.createDataFrame(
@@ -437,7 +437,7 @@ def test_overwrite_partitions_refuses_batch_log_table(spark, warehouse):
 
 
 def test_legacy_partition_data_with_stray_batch_still_refused(
-    spark, warehouse
+    spark, warehouse, drop_pointer
 ):
     """r10 review: a legacy partitioned table (data under date=X, no
     manifests) that also grew a stray batch dir must STILL refuse row
@@ -445,7 +445,7 @@ def test_legacy_partition_data_with_stray_batch_still_refused(
     Conversely an EMPTY key=value dir keeps not blocking (covered by
     test_stray_partition_dirname_does_not_block_dml)."""
     td = sinks.table_path(warehouse, "daily_summary")
-    _strip_batch_manifest(warehouse, "daily_summary")
+    _strip_batch_manifest(warehouse, "daily_summary", drop_pointer)
     leaf = os.path.join(td, "date=2024-03-01")
     os.makedirs(leaf, exist_ok=True)
     spark.createDataFrame(

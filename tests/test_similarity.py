@@ -102,40 +102,6 @@ def test_topk_is_sorted_descending(spark, sf_dir):
     assert len(rows) == 10
 
 
-def test_ivf_persisted_index_prunes_partitions(spark, sf_dir, tmp_path):
-    """The persisted cell-partitioned index: (1) the probe's scan
-    carries a PartitionFilter on `cell` (unprobed cells never read);
-    (2) results are identical to the in-memory ivf_topk at the same
-    nprobe."""
-    from roborock_data_pipeline_spark.operators.similarity import (
-        QUERY_VEC_ID,
-        ivf_probe_indexed,
-        ivf_topk,
-        write_ivf_index,
-    )
-    from roborock_data_pipeline_spark.plans.inspect import plan_string
-    from roborock_data_pipeline_spark.sources.tables import load
-
-    emb = load(spark, sf_dir, "embeddings")
-    idx = str(tmp_path / "ivf_index")
-    write_ivf_index(emb, idx)
-
-    qvec = emb.where(F.col("vec_id") == QUERY_VEC_ID).first()["embedding"]
-    got = ivf_probe_indexed(
-        spark, idx, qvec, nprobe=2, exclude_vec_id=QUERY_VEC_ID
-    )
-    plan = plan_string(got)
-    part_filters = plan.split("PartitionFilters", 1)
-    assert len(part_filters) == 2, "probe scan must have PartitionFilters"
-    assert "cell" in part_filters[1][:200]
-
-    expect = [
-        (r.vec_id, r.cosine)
-        for r in ivf_topk(emb, QUERY_VEC_ID, nprobe=2).collect()
-    ]
-    assert [(r.vec_id, r.cosine) for r in got.collect()] == expect
-
-
 def test_blocked_pairs_hot_block_bounded(spark):
     """Block-population cap property: one hot label holding 50% of the
     corpus generates ≤ n_bands·cap·|block| pairs (banded LSH
@@ -223,23 +189,45 @@ def test_blocked_pairs_cap_engaged_recall(spark):
 
 
 def test_pandas_brute_topk_equals_codegen(spark, sf_dir):
-    """The Arrow-batched numpy rerank returns exactly the codegen HOF
-    brute-force top-k (same scores, same order)."""
+    """An Arrow-batched numpy brute-force top-k -- one matmul per
+    batch, each batch pruned to its local top-k by (cosine desc,
+    vec_id asc), rounded JVM-side -- returns exactly the codegen HOF
+    q_similarity_search (same scores, same order)."""
+    import numpy as np
+    import pandas as pd
+
     from roborock_data_pipeline_spark.operators.similarity import (
         QUERY_VEC_ID,
-        brute_topk_pandas,
+        TOP_K,
         q_similarity_search,
     )
     from roborock_data_pipeline_spark.sources.tables import load
 
     emb = load(spark, sf_dir, "embeddings")
     qvec = emb.where(F.col("vec_id") == QUERY_VEC_ID).first()["embedding"]
-    got = [
-        (r.vec_id, r.label, r.cosine)
-        for r in brute_topk_pandas(
-            emb, qvec, exclude_vec_id=QUERY_VEC_ID
-        ).collect()
-    ]
+    q = np.asarray(qvec, dtype=np.float64)
+    qn = float(np.linalg.norm(q))
+
+    def score(batches):
+        for pdf in batches:
+            m = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
+            cos = (m @ q) / (np.linalg.norm(m, axis=1) * qn)
+            out = pd.DataFrame(
+                {"vec_id": pdf["vec_id"], "label": pdf["label"], "cosine": cos}
+            )
+            yield out.sort_values(
+                ["cosine", "vec_id"], ascending=[False, True]
+            ).head(TOP_K)
+
+    brute = (
+        emb.where(F.col("vec_id") != QUERY_VEC_ID)
+        .select("vec_id", "label", "embedding")
+        .mapInPandas(score, "vec_id long, label int, cosine double")
+        .select("vec_id", "label", F.round("cosine", 4).alias("cosine"))
+        .orderBy(F.col("cosine").desc(), "vec_id")
+        .limit(TOP_K)
+    )
+    got = [(r.vec_id, r.label, r.cosine) for r in brute.collect()]
     want = [
         (r.vec_id, r.label, r.cosine)
         for r in q_similarity_search(spark, sf_dir).collect()
@@ -294,59 +282,6 @@ def test_pq_recovers_clustered_neighbors(spark):
     assert same >= 9, [r["label"] for r in top]
 
 
-def test_ivfpq_probe_pruned_and_clustered_correct(spark, tmp_path):
-    """IVF-PQ persisted index: the probe partition-prunes to the
-    probed cell, the ADC phase's scan reads codes NOT the embedding
-    column, the rerank scan carries the candidate-id pushdown, and on
-    separated clusters the final top-k is same-cluster."""
-    import random
-
-    from pyspark.sql import functions as F
-
-    from roborock_data_pipeline_spark.operators import similarity as S
-    from roborock_data_pipeline_spark.plans.inspect import (
-        plan_string,
-        pushed_filters,
-        read_schemas,
-    )
-
-    rnd = random.Random(11)
-    rows = []
-    for vid in range(150):
-        cl = vid % 3
-        base = [0.0] * 64
-        base[cl * 20] = 10.0
-        rows.append(
-            (vid, [base[j] + rnd.gauss(0, 0.2) for j in range(64)], cl)
-        )
-    emb = spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>, label int"
-    )
-    idx = str(tmp_path / "ivfpq")
-    S.write_ivfpq_index(emb, idx)
-    q = rows[0][1]
-    res = S.ivfpq_probe_indexed(
-        spark, idx, q, k=5, nprobe=1, rerank=20, exclude_vec_id=0
-    )
-    got = res.collect()
-    assert len(got) == 5
-    assert all(r["label"] == 0 for r in got), [r["label"] for r in got]
-    # rerank scan: candidate ids pushed down, one partition probed
-    plan = plan_string(res)
-    assert "PartitionFilters" in plan and "cell" in plan
-    assert "vec_id" in pushed_filters(res)
-    # ADC phase reads codes, never the raw vectors (column pruning)
-    cells = [r["cell"] for r in spark.read.parquet(idx)
-             .where(F.col("vec_id") == 1).select("cell").collect()]
-    adc = (
-        spark.read.parquet(idx)
-        .where(F.col("cell").isin(cells))
-        .select("vec_id", "codes", "vnorm")
-    )
-    rs = read_schemas(adc)
-    assert "codes" in rs and "embedding" not in rs
-
-
 def _clustered_emb(spark, offset_dim, id_base=0, n=150, seed=11):
     """3 separated clusters whose peak dimension starts at
     ``offset_dim`` — shifting it simulates corpus drift."""
@@ -364,126 +299,6 @@ def _clustered_emb(spark, offset_dim, id_base=0, n=150, seed=11):
     return rows, spark.createDataFrame(
         rows, "vec_id long, embedding array<double>, label int"
     )
-
-
-def test_rebuild_ivfpq_index_retrains_and_swaps_atomically(
-    spark, tmp_path, monkeypatch
-):
-    """VERDICT r5 #7 + r12 #1: offline IVF-PQ refresh. Build on corpus
-    v1, drift to v2 (cluster peaks moved, new ids), rebuild — the
-    probe must serve v2 with retrained centroids/codebooks and pass
-    the approximation-ratio gate (>=0.7 of brute-force top-k quality).
-    The COMMIT is one `_current.json` pointer swap through the
-    commit-provider seam; a crash at the former two-rename kill window
-    (staged named, pointer not yet swapped) must leave the OLD index
-    fully serving — the pre-r13 code left NO index visible there —
-    with the retry converging over the invisible orphan."""
-    import os
-
-    import pytest
-    from pyspark.sql import functions as F
-
-    from roborock_data_pipeline_spark.functions.arrays import cosine
-    from roborock_data_pipeline_spark.operators import similarity as S
-    from roborock_data_pipeline_spark.sources import (
-        commit_provider,
-        versioned_dir,
-    )
-
-    rows1, emb1 = _clustered_emb(spark, 0, id_base=0)
-    rows2, emb2 = _clustered_emb(spark, 5, id_base=10_000, seed=13)
-    idx = str(tmp_path / "ivfpq")
-    S.write_ivfpq_index(emb1, idx)
-    # self-contained nested layout inside the pointer-named version
-    # dir: no sibling metadata dirs
-    live1 = versioned_dir.resolve(idx)
-    assert live1 == os.path.join(idx, "v-000001")
-    assert os.path.isdir(os.path.join(live1, "_centroids"))
-    assert os.path.isdir(os.path.join(live1, "_codebook"))
-    assert not os.path.isdir(idx + "_centroids")
-
-    q1 = rows1[0][1]
-    got1 = S.ivfpq_probe_indexed(spark, idx, q1, k=5, nprobe=1, rerank=20,
-                                 exclude_vec_id=0).collect()
-    assert [r["label"] for r in got1] == [0] * 5
-
-    # crash at the commit point: the pointer swap for THIS index dies
-    # after the naming rename (the exact window that used to leave no
-    # index) — old index must keep serving, orphan invisible
-    real_swap = commit_provider.BACKEND.swap_pointer
-    state = {"fired": False}
-
-    def bomb(path, data):
-        if path == os.path.join(idx, "_current.json") and not state["fired"]:
-            state["fired"] = True
-            raise OSError("injected commit crash")
-        return real_swap(path, data)
-
-    monkeypatch.setattr(commit_provider.BACKEND, "swap_pointer", bomb)
-    with pytest.raises(OSError, match="injected"):
-        S.rebuild_ivfpq_index(spark, idx, emb2)
-    monkeypatch.undo()
-    assert state["fired"]
-    assert os.path.isdir(os.path.join(idx, "v-000002"))  # orphan, named
-    assert versioned_dir.resolve(idx) == live1  # ...but NOT live
-    assert not [d for d in os.listdir(idx) if d.startswith(".staging-")]
-    still = S.ivfpq_probe_indexed(spark, idx, q1, k=5, nprobe=1, rerank=20,
-                                  exclude_vec_id=0).collect()
-    assert [(r["vec_id"], r["cosine"]) for r in still] == [
-        (r["vec_id"], r["cosine"]) for r in got1
-    ]
-
-    # retry: rebuild on the drifted corpus, then the gate
-    n = S.rebuild_ivfpq_index(spark, idx, emb2)
-    assert n == 150
-    q2 = rows2[0][1]
-    got2 = S.ivfpq_probe_indexed(spark, idx, q2, k=5, nprobe=1, rerank=20,
-                                 exclude_vec_id=10_000).collect()
-    assert [r["label"] for r in got2] == [0] * 5
-    assert all(r["vec_id"] >= 10_000 for r in got2)  # serving v2 only
-
-    qv = F.array(*[F.lit(float(x)) for x in q2])
-    brute = (
-        emb2.where(F.col("vec_id") != 10_000)
-        .select("vec_id", cosine(F.col("embedding"), qv).alias("cos"))
-        .orderBy(F.col("cos").desc(), "vec_id")
-        .limit(5)
-        .collect()
-    )
-    ratio = sum(r["cosine"] for r in got2) / sum(r["cos"] for r in brute)
-    assert ratio >= 0.7, ratio  # the q_similarity_pq_check bound
-
-    # self-rebuild (emb=None): retrain from the index's own vectors
-    assert S.rebuild_ivfpq_index(spark, idx) == 150
-    again = S.ivfpq_probe_indexed(spark, idx, q2, k=5, nprobe=1, rerank=20,
-                                  exclude_vec_id=10_000).collect()
-    assert [r["label"] for r in again] == [0] * 5
-
-
-def test_blocked_pairs_streaming_auto_banded(spark):
-    """r10 (VERDICT r9 missing #3): a STREAMING caller cannot reach
-    the eager regime probe — blocked_pairs auto-selects the lazily
-    split banded form when the input is streaming (an eager .first()
-    would throw at plan time, and a growing source invalidates a
-    baked-in exact regime anyway), and records the decision in the
-    driver-side regime telemetry."""
-    from roborock_data_pipeline_spark.operators import similarity
-
-    sdf = (
-        spark.readStream.format("rate").option("rowsPerSecond", "10").load()
-        .select(
-            F.col("value").alias("vec_id"),
-            (F.col("value") % 3).cast("int").alias("label"),
-            F.array(
-                *[(F.col("value") % (i + 2)).cast("float") for i in range(8)]
-            ).alias("embedding"),
-        )
-    )
-    pairs = similarity.blocked_pairs(sdf)  # must NOT run an eager probe
-    assert pairs.isStreaming
-    assert similarity.LAST_REGIME["path"] == "banded"
-    assert similarity.LAST_REGIME["forced"] is True
-    assert similarity.LAST_REGIME["streaming"] is True
 
 
 def test_regime_telemetry_in_warehouse_health(spark, sf_dir, tmp_path):
@@ -516,59 +331,6 @@ def test_regime_telemetry_in_warehouse_health(spark, sf_dir, tmp_path):
     hist = h2["_blocked_pairs_regime_history"]
     assert hist[-1]["tag"] == "probe" and hist[-1]["path"] == "banded"
     assert any(r["path"] == "exact" for r in hist[:-1])
-
-
-def test_blocked_pairs_streaming_executes_end_to_end(spark, tmp_path):
-    """The streaming banded form doesn't just plan — it RUNS as a
-    continuous query (stream-stream self-join, no post-join
-    aggregate, append mode) and produces within-label pairs. Pinned
-    because the r10 first-collision design is exactly what makes an
-    aggregate-free streaming plan possible."""
-    import time as _time
-
-    from roborock_data_pipeline_spark.operators import similarity
-
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        sdf = (
-            spark.readStream.format("rate")
-            .option("rowsPerSecond", "200")
-            .load()
-            .select(
-                F.col("value").alias("vec_id"),
-                (F.col("value") % 2).cast("int").alias("label"),
-                F.array(
-                    *[
-                        ((F.col("value") + i) % 7).cast("float")
-                        for i in range(8)
-                    ]
-                ).alias("embedding"),
-            )
-        )
-        pairs = similarity.blocked_pairs(sdf)
-        q = (
-            pairs.writeStream.format("memory")
-            .queryName("bp_stream_exec")
-            .outputMode("append")
-            .option("checkpointLocation", str(tmp_path / "ckpt"))
-            .trigger(processingTime="5 seconds")
-            .start()
-        )
-        try:
-            deadline = _time.time() + 120
-            rows = 0
-            while _time.time() < deadline and rows == 0:
-                _time.sleep(5)
-                assert q.exception() is None, str(q.exception())
-                rows = spark.sql(
-                    "select count(*) from bp_stream_exec"
-                ).first()[0]
-            assert rows > 0, "streaming banded form produced no pairs"
-        finally:
-            q.stop()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
 
 
 def test_pair_kernel_matches_join_form_exactly(spark, sf_dir):

@@ -31,7 +31,7 @@ import threading
 import pytest
 
 from roborock_data_pipeline_spark import pipeline, schemas
-from roborock_data_pipeline_spark.operators.index_segments import (
+from roborock_data_pipeline_spark.sources.commit_provider import (
     ConcurrentWriterError,
 )
 from roborock_data_pipeline_spark.sources import sinks
@@ -416,7 +416,7 @@ def test_partition_overwrite_commit_is_all_or_nothing(spark, tmp_path):
 
 def test_partition_overwrite_keeps_reader_grace_version(spark, tmp_path):
     """Superseded versions are GC'd at the NEXT overwrite's entry, not
-    at commit (the index_segments grace pattern): a reader that
+    at commit (a grace window): a reader that
     resolved the previous manifest keeps its files for a full
     maintenance interval."""
     wh = str(tmp_path / "wh")

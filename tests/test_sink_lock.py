@@ -5,9 +5,8 @@ publish→delete is a read-modify-write: two concurrent vacuums with
 different retention boundaries would each publish a base absorbing an
 overlapping prefix and double-count it — no rename-refusal can catch
 bases with different names. The lease makes the documented
-single-mutator assumption a CHECKED invariant (the batch-log twin of
-index_segments' CAS guard, VERDICT r5 #4), with atomic stale-lock
-takeover when a holder crashed.
+single-mutator assumption a CHECKED invariant (VERDICT r5 #4), with
+atomic stale-lock takeover when a holder crashed.
 """
 
 from __future__ import annotations
@@ -21,7 +20,7 @@ import tempfile
 import pytest
 
 from roborock_data_pipeline_spark import pipeline, schemas
-from roborock_data_pipeline_spark.operators.index_segments import (
+from roborock_data_pipeline_spark.sources.commit_provider import (
     ConcurrentWriterError,
 )
 from roborock_data_pipeline_spark.sources import sinks

@@ -374,57 +374,6 @@ def test_anomaly_detector_ewma_state(spark):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_running_totals_stateful_v2(spark):
-    """Stateful running totals: per-user state accumulates across
-    micro-batches and only batch-active users emit. Runs the Spark-4
-    transformWithStateInPandas processor where protobuf is available
-    and the semantically-identical applyInPandasWithState fallback
-    otherwise (VERDICT r3 #4) — same assertions either way."""
-    from roborock_data_pipeline_spark.streaming.stateful_v2 import (
-        running_totals_stream,
-    )
-
-    schema = "user_id long, ts timestamp, value double"
-    src_dir = tempfile.mkdtemp()
-    ckpt = tempfile.mkdtemp()
-    try:
-        spark.createDataFrame(
-            [(1, _ts(1, 8), 10.0), (1, _ts(1, 9), 5.0), (2, _ts(1, 8), 7.0)],
-            schema,
-        ).coalesce(1).write.mode("append").parquet(src_dir)
-        stream = spark.readStream.schema(schema).parquet(src_dir)
-        q = (
-            running_totals_stream(stream)
-            .writeStream.format("memory")
-            .queryName("totals_v2")
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.processAllAvailable()
-        first = {
-            r.user_id: (r.n_events, r.total_value)
-            for r in spark.sql("SELECT * FROM totals_v2").collect()
-        }
-        assert first == {1: (2, 15.0), 2: (1, 7.0)}
-
-        spark.sql("TRUNCATE TABLE totals_v2") if False else None
-        spark.createDataFrame([(1, _ts(1, 10), 3.0)], schema).coalesce(
-            1
-        ).write.mode("append").parquet(src_dir)
-        q.processAllAvailable()
-        rows = spark.sql("SELECT * FROM totals_v2").collect()
-        q.stop()
-        # batch 2 emits user 1 only, with state carried from batch 1
-        latest = [r for r in rows if r.n_events == 3]
-        assert len(latest) == 1
-        assert latest[0].user_id == 1 and latest[0].total_value == 18.0
-        assert not any(r.user_id == 2 and r.n_events > 1 for r in rows)
-    finally:
-        shutil.rmtree(src_dir, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
-
-
 def test_stream_left_outer_attribution(spark):
     """Watermarked LEFT OUTER stream-stream join: matched purchases
     emit immediately; an unmatched (organic) purchase emits with NULL

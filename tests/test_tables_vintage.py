@@ -1,7 +1,7 @@
 """Testdata-vintage + driver-surface regression gates (ADVICE r13
 medium: the r13 driver-contract rewrite deleted these without
 relocating them — restored here verbatim-in-spirit. The ns branch of
-``events_ts_unit`` is live code exercised by no current testdata,
+``ns_timestamp_cols`` is live code exercised by no current testdata,
 since the driver's fixtures are micros-vintage; round 2 lost 35
 queries to a silent unit mismatch these gates catch)."""
 
@@ -33,7 +33,7 @@ def test_events_ts_vintage(spark, sf_dir):
     ).collect()[0]
     assert r.y_min == 2024 and r.y_max == 2024, (
         f"events.ts out of epoch ({r.y_min}-{r.y_max}): ts unit misread "
-        f"(sniffed {tables.events_ts_unit(sf_dir)!r})"
+        f"(ns-sniffed columns: {tables.ns_timestamp_cols(sf_dir, 'events')!r})"
     )
     assert r.days == 30
 
@@ -56,7 +56,7 @@ def test_events_ns_vintage_roundtrip(spark, sf_dir, tmp_path):
     ns_dir = str(tmp_path / "nsvintage")
     os.makedirs(ns_dir)
     pq.write_table(t_ns, f"{ns_dir}/events.parquet", store_schema=False)
-    assert tables.events_ts_unit(ns_dir) == "ns"
+    assert "ts" in tables.ns_timestamp_cols(ns_dir, "events")
 
     native = tables.load(spark, sf_dir, "events").agg(
         F.min("ts").alias("mn"), F.max("ts").alias("mx")
@@ -196,10 +196,10 @@ def test_sniffer_covers_streaming_glob_layout(tmp_path, spark):
     part = g.glob(d + "/stage/part-*.parquet")[0]
     shutil.copy(part, d + "/events-0.parquet")
     shutil.rmtree(d + "/stage")
-    assert tables.events_ts_unit(d) == "ns"
+    assert "ts" in tables.ns_timestamp_cols(d, "events")
     # and an empty dir still sniffs to the native-µs default
     (tmp_path / "empty").mkdir()
-    assert tables.events_ts_unit(str(tmp_path / "empty")) == "us"
+    assert tables.ns_timestamp_cols(str(tmp_path / "empty"), "events") == ()
 
 
 def test_sniffer_handles_directory_shaped_stream_batches(tmp_path, spark):
@@ -215,7 +215,7 @@ def test_sniffer_handles_directory_shaped_stream_batches(tmp_path, spark):
     )
     d1 = str(tmp_path / "dirbatch")
     df.coalesce(1).write.mode("overwrite").parquet(d1 + "/events-0.parquet")
-    assert tables.events_ts_unit(d1) == "ns"
+    assert "ts" in tables.ns_timestamp_cols(d1, "events")
     d2 = str(tmp_path / "suffixless")
     df.coalesce(1).write.mode("overwrite").parquet(d2 + "/events_batch1")
-    assert tables.events_ts_unit(d2) == "ns"
+    assert "ts" in tables.ns_timestamp_cols(d2, "events")
