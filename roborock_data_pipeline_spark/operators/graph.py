@@ -17,10 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from roborock_data_pipeline_spark.functions.cache_tracking import (
-    leaked_persist,
-    track,
-)
+from roborock_data_pipeline_spark.functions.cache_tracking import leaked_persist
 from roborock_data_pipeline_spark.registry import query
 from roborock_data_pipeline_spark.sources.tables import load
 

@@ -14,7 +14,8 @@ deriving state from what the sink actually holds).
   mode schedule      T4  smart sync on a 12 h cadence
                          (schedule_sync, pipeline.py:575-594)
   mode record_sync   sec 3.2 watermark incremental sync of records
-  mode monitor       sec 3.3 continuous session detection (streaming)
+  mode monitor       sec 3.3 session detection: each call folds the
+                         status files landed since the last one
   mode history       O1  print the k most recent records
   mode daily_summary A6  build the gold table the reference declared
                          but never implemented
@@ -181,33 +182,187 @@ def mode_record_sync(spark: SparkSession, cloud: str, warehouse: str) -> None:
     sinks.append_with_console_fallback(fresh, warehouse, "cleaning_records")
 
 
+# The monitor's fold state, under the checkpoint dir: one pointer
+# naming the epoch, the per-device state file and every folded
+# device_status file. The pointer commit is the fold's only commit.
+MONITOR_POINTER = "monitor.json"
+
+
+def _monitor_state(checkpoint: str) -> dict:
+    raw = commit_provider.read_pointer(os.path.join(checkpoint, MONITOR_POINTER))
+    if raw is None:
+        return {"epoch": 0, "state": None, "folded": []}
+    return json.loads(raw)
+
+
+def _refuse_stream_layout(sessions_dir: str, checkpoint: str) -> None:
+    """The monitor once ran as a Structured Streaming query; its
+    layout is refused by name, not folded over. A file-sink log in the
+    sessions dir would make a plain reader list only the files the
+    log names and hide every newly folded one; a stream checkpoint
+    holds state the fold cannot read."""
+    log = os.path.join(sessions_dir, "_spark_metadata")
+    if os.path.isdir(log):
+        raise ValueError(
+            f"{log!r} is a streaming file-sink log: that sessions layout "
+            "is unsupported -- move the dir aside and re-run the monitor "
+            "on a fresh checkpoint"
+        )
+    for sub in ("offsets", "commits"):
+        p = os.path.join(checkpoint, sub)
+        if os.path.isdir(p):
+            raise ValueError(
+                f"{p!r} belongs to a Structured Streaming checkpoint: that "
+                "monitor state is unsupported -- use a fresh checkpoint dir"
+            )
+
+
+def _write_parquet(path: str, schema: T.StructType, cols: dict) -> None:
+    """Driver-side parquet write with ``schema``'s exact types:
+    timestamps as UTC-adjusted micros (given as epoch micros), ints as
+    int32 -- a plain Spark read gets back exactly ``schema``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    pq.write_table(pa.Table.from_pydict(cols, schema=to_arrow_schema(schema)), path)
+
+
 def mode_monitor(
     spark: SparkSession, cloud: str, warehouse: str, checkpoint: str
 ) -> None:
-    """sec 3.3 continuous monitor: streaming edge detection over status
-    ticks -> completed sessions appended to cleaning_history. State
-    lives in the checkpoint (survives restarts -- the reference's
-    dicts don't, pipeline.py:104-106)."""
+    """sec 3.3 monitor: fold the device_status files landed since the
+    last call into completed sessions, published to
+    cleaning_history_stream. Per-device state (prev_state, start_ts,
+    start_battery) lives in the checkpoint dir, so it survives
+    restarts -- the reference's two dicts don't (pipeline.py:104-106).
+
+    One batch fold on the JVM, two Spark jobs: the new files union the
+    state file (``k = 0``, so its row sorts before the ticks), and
+    windows over each device's rows ordered by ``k, ts`` (one shuffle)
+    find the start and end edges with ``lag``, carry the open
+    session's start with ``last(ignorenulls)`` and mark the device's
+    final row with ``lead``. The driver collects only the end edges and the final
+    rows -- |devices| + sessions rows per call -- and writes both
+    outputs. The pointer's folded-file list grows by one name per
+    landed file, as a file stream source's log does.
+
+    Exactly-once: the sessions go to ``part-{epoch}.parquet`` first,
+    then one pointer commit names the new state file and the folded
+    files. A crash between the two replays the same epoch and replaces
+    the same sessions file with a superset of its sessions. One
+    monitor runs per checkpoint. ``streaming/sessionize.py`` keeps the
+    long-running stream form of the same state machine."""
+    from roborock_data_pipeline_spark.schemas import CLEANING_STATES, IDLE_STATES
     from roborock_data_pipeline_spark.streaming.sessionize import (
-        detect_sessions_stream,
+        SESSION_SCHEMA,
+        STATE_SCHEMA,
     )
 
-    ticks = (
-        spark.readStream.schema(schemas.DEVICE_STATUS)
-        .parquet(f"{cloud}/device_status")
-        .select(
-            "device_name", F.col("timestamp").alias("ts"), "state", "battery"
+    sessions_dir = sinks.table_path(warehouse, "cleaning_history_stream")
+    _refuse_stream_layout(sessions_dir, checkpoint)
+    src = f"{cloud}/device_status"
+    state = _monitor_state(checkpoint)
+    folded = set(state["folded"])
+    new = sorted(
+        e.name for e in os.scandir(src)
+        if e.is_file() and not e.name.startswith(("_", ".")) and e.name not in folded
+    )
+    if not new:
+        return
+    epoch = state["epoch"] + 1
+
+    state_schema = T.StructType(
+        [T.StructField("device_name", T.StringType(), False), *STATE_SCHEMA.fields]
+    )
+    views = {"ticks": spark.read.schema(schemas.DEVICE_STATUS).parquet(
+        *[os.path.join(src, n) for n in new]
+    )}
+    prior = ""
+    if state["state"] is not None:
+        views["prior"] = spark.read.schema(state_schema).parquet(
+            os.path.join(checkpoint, state["state"])
         )
+        prior = """UNION ALL
+            SELECT device_name, 0, NULL, prev_state, NULL,
+                   named_struct('ts', start_ts, 'battery', start_battery)
+            FROM {prior}"""
+    cleaning = ", ".join(f"'{s}'" for s in CLEANING_STATES)
+    idle = ", ".join(f"'{s}'" for s in IDLE_STATES)
+    # one SQL text, not a chain of Column calls: the chain cost ~800
+    # py4j round trips and one analysis per step, about 0.2 s a call
+    out = spark.sql(
+        f"""
+        WITH rows AS (
+            -- the stream lowercases str(state): a null state is "none"
+            SELECT device_name, 1 AS k, timestamp AS ts,
+                   lower(coalesce(state, 'None')) AS cur, battery,
+                   CAST(NULL AS STRUCT<ts: TIMESTAMP, battery: INT>) AS carried
+            FROM {{ticks}}
+            {prior}
+        ), lagged AS (
+            SELECT *,
+                   coalesce(lag(cur) OVER w IN ({cleaning}), false) AS was,
+                   lead(k) OVER w IS NULL AS is_final
+            FROM rows
+            WINDOW w AS (PARTITION BY device_name ORDER BY k, ts)
+        ), edges AS (
+            SELECT *,
+                   k = 1 AND cur IN ({cleaning}) AND NOT was AS is_start,
+                   k = 1 AND was AND cur IN ({idle}) AS is_end
+            FROM lagged
+        ), started AS (
+            SELECT *,
+                   last(IF(is_start, named_struct('ts', ts, 'battery', battery),
+                           carried), true)
+                     OVER (PARTITION BY device_name ORDER BY k, ts
+                           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+                     AS start
+            FROM edges
+        )
+        SELECT device_name, is_end, is_final, cur, battery,
+               unix_micros(ts) AS ts_us, unix_micros(start.ts) AS start_us,
+               start.battery AS start_battery
+        FROM started
+        WHERE is_end OR is_final
+        """,
+        **views,
+    ).collect()
+
+    ends = [r for r in out if r.is_end]
+    if ends:
+        os.makedirs(sessions_dir, exist_ok=True)
+        name = f"part-{epoch:08d}.parquet"
+        staged = os.path.join(sessions_dir, f".{name}.tmp")
+        _write_parquet(staged, SESSION_SCHEMA, {
+            "device_name": [r.device_name for r in ends],
+            "session_start": [r.start_us for r in ends],
+            "session_end": [r.ts_us for r in ends],
+            "battery_start": [r.start_battery for r in ends],
+            "battery_end": [r.battery for r in ends],
+        })
+        # a replay of this epoch replaces the file with a superset
+        os.replace(staged, os.path.join(sessions_dir, name))
+
+    # an open session's start matters only while the device cleans
+    finals = [(r, r.cur in CLEANING_STATES) for r in out if r.is_final]
+    os.makedirs(checkpoint, exist_ok=True)
+    state_name = f"state-{epoch:08d}.parquet"
+    _write_parquet(os.path.join(checkpoint, state_name), state_schema, {
+        "device_name": [r.device_name for r, _ in finals],
+        "prev_state": [r.cur for r, _ in finals],
+        "start_ts": [r.start_us if open_ else None for r, open_ in finals],
+        "start_battery": [r.start_battery if open_ else None for r, open_ in finals],
+    })
+    commit_provider.commit_pointer(
+        os.path.join(checkpoint, MONITOR_POINTER),
+        json.dumps({
+            "epoch": epoch, "state": state_name, "folded": state["folded"] + new,
+        }).encode(),
     )
-    sessions = detect_sessions_stream(ticks)
-    q = (
-        sessions.writeStream.format("parquet")
-        .option("path", sinks.table_path(warehouse, "cleaning_history_stream"))
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    for e in os.scandir(checkpoint):
+        if e.name.startswith("state-") and e.name != state_name:
+            os.remove(e.path)
 
 
 def mode_history(spark: SparkSession, cloud: str, limit: int = 10) -> DataFrame:
@@ -1023,7 +1178,7 @@ def main(argv: list[str] | None = None) -> None:
     )
     p.add_argument("--cloud", help="telemetry parquet dir (device stand-in)")
     p.add_argument("--warehouse", help="warehouse dir")
-    p.add_argument("--checkpoint", help="streaming checkpoint dir")
+    p.add_argument("--checkpoint", help="monitor state dir")
     p.add_argument("--limit", type=int, default=10)
     p.add_argument(
         "--interval",

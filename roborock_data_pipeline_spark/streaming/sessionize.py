@@ -5,12 +5,14 @@ in-memory dicts keyed by device -- previous status and
 session-start battery -- and emits a CleaningRecord when a device
 transitions cleaning->idle. State dies with the process (sec 3.3).
 
-Streaming twin here: `applyInPandasWithState` keyed by device with a
-(prev_state, start_battery, start_ts) state tuple, checkpointable so
-state survives restarts -- strictly better than the reference. The
-batch-expressible shape (oracle-checked) is operators/windows.py::
-q_session_edges; this module is the live-stream form, exercised by
-tests/test_streaming.py via the in-memory sink.
+Streaming form here: `applyInPandasWithState` keyed by device with a
+(prev_state, start_ts, start_battery) state tuple, checkpointable so
+state survives restarts -- strictly better than the reference. It is
+the form for a long-running stream. The CLI's monitor mode
+(pipeline.mode_monitor) runs the same state machine as a batch fold
+per call, with the same state tuple in a parquet file, and
+tests/test_streaming.py pins the two equal. The batch shape over a
+whole table (oracle-checked) is operators/windows.py::q_session_edges.
 """
 
 from __future__ import annotations

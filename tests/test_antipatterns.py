@@ -39,7 +39,8 @@ COLLECT_ALLOW = {
     "sources/export.py": 1,      # shard manifest (one row per shard)
     "sources/sinks.py": 2,       # audit scalar; delete/update affected-dir
                                  # list (dir names + counts, never rows)
-    "pipeline.py": 2,            # touched-date list, CLI status rows
+    "pipeline.py": 3,            # touched-date list, CLI status rows,
+                                 # monitor fold (|devices| + sessions rows)
 }
 
 # crossJoin sites whose non-broadcast side is provably tiny
@@ -119,9 +120,10 @@ def test_driver_collects_stay_metadata_sized():
 # target reader-visible — a rename is either (a) inside
 # commit_provider itself (the local-FS form of the atomic pointer
 # PUT / rename-aside steal) or (b) pure NAMING under a naming lock
-# (the dir stays invisible until a manifest/pointer commit). Adding a
-# rename anywhere else must fail this pin and force a conscious
-# review.
+# (the dir stays invisible until a manifest/pointer commit). The one
+# exception is the monitor's sessions dir, which plain readers list
+# (below). Adding a rename anywhere else must fail this pin and force
+# a conscious review.
 REPLACE_ALLOW = {
     # (a) the provider's own primitives
     "sources/commit_provider.py": 2,   # swap_pointer tmp->path; steal aside
@@ -135,6 +137,11 @@ REPLACE_ALLOW = {
                                        # naming (commit = _partitions.json)
     # local build artifact (executor zip), not a data commit
     "session.py": 1,
+    # the monitor's sessions part file: the one reader-visible rename.
+    # A plain reader lists the dir, so a rename is the only way in; a
+    # replay of the same epoch replaces the same name with a superset,
+    # and the fold's commit (the state pointer) comes after it
+    "pipeline.py": 1,
 }
 
 
@@ -213,6 +220,9 @@ ENTRY_POINT_ALLOW = {
         "resets the registry's cache contract between tests",
     "operators/multimodal.py:decode_media":
         "codec slot (Pillow or stdlib PNG); next D8 candidate",
+    "streaming/sessionize.py:detect_sessions_stream":
+        "long-running stream form of the monitor; pipeline.mode_monitor "
+        "runs the batch fold, pinned equal to it in test_streaming",
 }
 # Test-only modules deferred to the next D8 pass; each goes together
 # with the tests that pin it.

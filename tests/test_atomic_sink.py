@@ -352,8 +352,6 @@ def test_dynamic_partition_overwrite(spark, tmp_path):
 def test_export_jsonl_shards_roundtrip(spark, sf_dir, tmp_path):
     """Deterministic JSONL shard export: stable shard assignment,
     manifest totals match the data, atomic republish swaps cleanly."""
-    import json as _json
-
     from roborock_data_pipeline_spark.sources.export import (
         export_jsonl_shards,
         read_export,

@@ -6,7 +6,6 @@ from __future__ import annotations
 
 import random
 
-from pyspark.sql import functions as F
 
 from roborock_data_pipeline_spark.operators.clustering import (
     assign_clusters,

@@ -4,8 +4,6 @@ def test_ahash_collides_on_dups_and_separates_text(spark, tmp_path, sf_dir):
     """aHash semantics: identical blobs share a hash; a small
     perturbation stays within a near-dup hamming radius while
     unrelated text is far."""
-    import shutil
-
     from pyspark.sql import functions as F
 
     from roborock_data_pipeline_spark.operators.multimodal import q_media_ahash

@@ -3,11 +3,15 @@
 from __future__ import annotations
 
 import datetime as dt
+import os
+import re
 import shutil
+import subprocess
+import sys
 import tempfile
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from roborock_data_pipeline_spark import pipeline, schemas
 from roborock_data_pipeline_spark.sources import sinks
@@ -139,18 +143,162 @@ def test_record_sync_watermark(spark, cloud_and_warehouse):
 
 
 def test_monitor_detects_session(spark, cloud_and_warehouse):
+    """The sessions dir is flat part files that a plain reader opens
+    with SESSION_SCHEMA's names and types (UTC timestamps, int
+    batteries)."""
+    from roborock_data_pipeline_spark.streaming.sessionize import SESSION_SCHEMA
+
     cloud, warehouse = cloud_and_warehouse
     ckpt = tempfile.mkdtemp()
     try:
         pipeline.mode_monitor(spark, cloud, warehouse, ckpt)
-        out = spark.read.parquet(
+        df = spark.read.parquet(
             sinks.table_path(warehouse, "cleaning_history_stream")
-        ).collect()
+        )
+        assert [(f.name, f.dataType) for f in df.schema] == [
+            (f.name, f.dataType) for f in SESSION_SCHEMA
+        ]
+        out = df.collect()
         assert len(out) == 1
         assert out[0].device_name == "bot1"
         assert out[0].battery_start == 95 and out[0].battery_end == 70
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
+
+
+# device_status with every column nullable, so a test can land a null
+# state the way a device cloud might
+_STATUS = T.StructType([
+    T.StructField(f.name, f.dataType, True) for f in schemas.DEVICE_STATUS
+])
+
+
+def _land(spark, cloud, polls):
+    """Land one new device_status file of (device, ts, state, battery)."""
+    rows = [(ts, d, st, b, None, None, None, None, None, None, None)
+            for d, ts, st, b in polls]
+    spark.createDataFrame(rows, _STATUS).coalesce(1).write.mode(
+        "append"
+    ).parquet(f"{cloud}/device_status")
+
+
+def _sessions(spark, warehouse):
+    df = spark.read.parquet(sinks.table_path(warehouse, "cleaning_history_stream"))
+    return sorted(tuple(r) for r in df.collect())
+
+
+@pytest.fixture()
+def monitor_dirs(tmp_path):
+    cloud, warehouse, ckpt = (str(tmp_path / n) for n in ("c", "w", "k"))
+    return cloud, warehouse, ckpt
+
+
+def test_monitor_session_open_across_calls(spark, monitor_dirs):
+    """A session that starts in one call's files and ends in the
+    next's comes out once, with its start from the first call."""
+    cloud, warehouse, ckpt = monitor_dirs
+    _land(spark, cloud, [("bot1", _ts(1, 8), "charging", 100),
+                         ("bot1", _ts(1, 9), "cleaning", 98)])
+    pipeline.mode_monitor(spark, cloud, warehouse, ckpt)
+    assert not os.path.exists(sinks.table_path(warehouse, "cleaning_history_stream"))
+    _land(spark, cloud, [("bot1", _ts(1, 10), "cleaning", 80),
+                         ("bot1", _ts(1, 11), "idle", 75)])
+    pipeline.mode_monitor(spark, cloud, warehouse, ckpt)
+    pipeline.mode_monitor(spark, cloud, warehouse, ckpt)  # nothing new: no-op
+    assert _sessions(spark, warehouse) == [("bot1", _ts(1, 9), _ts(1, 11), 98, 75)]
+
+
+@pytest.mark.local_fs_only("the monitor's pointer must outlive the process; the in-memory backend does not")
+def test_monitor_new_process_resumes_from_checkpoint(spark, monitor_dirs):
+    """A new process (the CLI) on the same checkpoint carries the open
+    session and emits it exactly once."""
+    cloud, warehouse, ckpt = monitor_dirs
+    _land(spark, cloud, [("bot1", _ts(1, 9), "cleaning", 98),
+                         ("bot2", _ts(1, 9), "idle", 60)])
+    pipeline.mode_monitor(spark, cloud, warehouse, ckpt)
+    _land(spark, cloud, [("bot1", _ts(1, 10), "charging", 70)])
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-m", "roborock_data_pipeline_spark.pipeline",
+         "--mode", "monitor", "--cloud", cloud, "--warehouse", warehouse,
+         "--checkpoint", ckpt],
+        cwd=repo, capture_output=True, text=True, timeout=300,
+        env={**os.environ, "SPARK_GRAFT_CPUS": "1", "SPARK_DRIVER_MEM": "1g"},
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    pipeline.mode_monitor(spark, cloud, warehouse, ckpt)  # nothing new
+    assert _sessions(spark, warehouse) == [("bot1", _ts(1, 9), _ts(1, 10), 98, 70)]
+
+
+def test_monitor_crash_between_publish_and_commit_emits_once(spark, monitor_dirs, monkeypatch):
+    """The sessions file is published before the state commit; a
+    crash between them replays the same epoch, which replaces the same
+    file -- every session once, including ones from files that landed
+    after the crash."""
+    from roborock_data_pipeline_spark.sources import commit_provider
+
+    cloud, warehouse, ckpt = monitor_dirs
+    _land(spark, cloud, [("bot1", _ts(1, 9), "cleaning", 98),
+                         ("bot1", _ts(1, 10), "idle", 90)])
+    real = commit_provider.commit_pointer
+
+    def crash(path, data):
+        if path.endswith(pipeline.MONITOR_POINTER):
+            raise OSError("injected crash before the state commit")
+        real(path, data)
+
+    monkeypatch.setattr(commit_provider, "commit_pointer", crash)
+    with pytest.raises(OSError, match="injected"):
+        pipeline.mode_monitor(spark, cloud, warehouse, ckpt)
+    assert len(_sessions(spark, warehouse)) == 1  # published, not committed
+    monkeypatch.setattr(commit_provider, "commit_pointer", real)
+    _land(spark, cloud, [("bot2", _ts(1, 9), "cleaning", 50),
+                         ("bot2", _ts(1, 10), "charging", 40)])
+    pipeline.mode_monitor(spark, cloud, warehouse, ckpt)
+    pipeline.mode_monitor(spark, cloud, warehouse, ckpt)
+    assert _sessions(spark, warehouse) == [
+        ("bot1", _ts(1, 9), _ts(1, 10), 98, 90),
+        ("bot2", _ts(1, 9), _ts(1, 10), 50, 40),
+    ]
+
+
+def test_monitor_refuses_streaming_layouts(spark, monitor_dirs):
+    """A file-sink log in the sessions dir or a Structured Streaming
+    checkpoint is refused by name, before any work."""
+    cloud, warehouse, ckpt = monitor_dirs
+    _land(spark, cloud, [("bot1", _ts(1, 9), "idle", 60)])
+    log = os.path.join(sinks.table_path(warehouse, "cleaning_history_stream"),
+                       "_spark_metadata")
+    os.makedirs(log)
+    with pytest.raises(ValueError, match=re.escape(log)):
+        pipeline.mode_monitor(spark, cloud, warehouse, ckpt)
+    shutil.rmtree(log)
+    offsets = os.path.join(ckpt, "offsets")
+    os.makedirs(offsets)
+    with pytest.raises(ValueError, match=re.escape(offsets)):
+        pipeline.mode_monitor(spark, cloud, warehouse, ckpt)
+
+
+def test_monitor_runs_two_jobs_warm(spark, monitor_dirs):
+    """Job-count pin: on a warm checkpoint the monitor is one shuffle
+    job and one result job, with no Python-worker stage."""
+    from perfbench.trace import SparkCounters
+
+    cloud, warehouse, ckpt = monitor_dirs
+    _land(spark, cloud, [("bot1", _ts(1, 9), "cleaning", 98)])
+    pipeline.mode_monitor(spark, cloud, warehouse, ckpt)
+    _land(spark, cloud, [("bot1", _ts(1, 10), "idle", 90)])
+    counters = SparkCounters(spark)
+    first = counters.executions()
+    counters.set_group("monitor-pin")
+    try:
+        pipeline.mode_monitor(spark, cloud, warehouse, ckpt)
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    counters.drain()
+    assert counters.group_stats("monitor-pin")["jobs"] == 2
+    assert counters.python_stats(first)["python.rows"] == 0
+    assert len(_sessions(spark, warehouse)) == 1
 
 
 def test_history_topk(spark, cloud_and_warehouse):

@@ -22,7 +22,6 @@ import shutil
 import tempfile
 
 import pytest
-from pyspark.sql import functions as F
 
 from roborock_data_pipeline_spark import schemas
 from roborock_data_pipeline_spark.sources import sinks

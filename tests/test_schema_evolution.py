@@ -17,7 +17,6 @@ import shutil
 import tempfile
 
 import pytest
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from roborock_data_pipeline_spark import schemas

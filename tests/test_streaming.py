@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import datetime as dt
+import os
 import shutil
 import tempfile
 
@@ -287,6 +288,78 @@ def test_sessionizer_survives_restart(spark):
         shutil.rmtree(src_dir, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
         shutil.rmtree(out_dir.rsplit("/", 1)[0], ignore_errors=True)
+
+
+def test_monitor_batch_fold_matches_session_stream(spark, tmp_path):
+    """Twin pin for pipeline.mode_monitor: its JVM window fold over the
+    files landed since the last call must emit exactly the sessions
+    detect_sessions_stream's per-row GroupState loop emits, file by
+    file -- a session spanning files, null state and battery, a state
+    that is neither cleaning nor idle, and mixed case included."""
+    from roborock_data_pipeline_spark import pipeline, schemas
+    from roborock_data_pipeline_spark.sources import sinks
+    from roborock_data_pipeline_spark.streaming.sessionize import (
+        detect_sessions_stream,
+    )
+    from pyspark.sql import types as T
+
+    status = T.StructType([
+        T.StructField(f.name, f.dataType, True) for f in schemas.DEVICE_STATUS
+    ])
+    cloud, warehouse, ckpt = (str(tmp_path / n) for n in ("c", "w", "k"))
+    src = f"{cloud}/device_status"
+    os.makedirs(src)
+    files = [
+        [("bot1", 1, "charging", 100), ("bot1", 2, "cleaning", None),
+         ("bot1", 3, "cleaning", 90),
+         ("bot2", 1, "cleaning", 80), ("bot2", 2, "error", 79),
+         ("bot2", 3, "idle", 79), ("bot2", 4, "cleaning", 78),
+         ("bot3", 1, "cleaning", 70), ("bot3", 2, None, 69),
+         ("bot3", 3, "cleaning", 68), ("bot5", 1, "idle", 50)],
+        [("bot1", 5, "cleaning", 85), ("bot1", 6, "idle", 80),
+         ("bot2", 5, "zone_cleaning", 77), ("bot2", 6, "paused", None),
+         ("bot3", 4, "charging", 67), ("bot4", 4, "Cleaning", 60),
+         ("bot6", 4, "cleaning", 40)],
+        [("bot4", 7, "IDLE", 55), ("bot1", 7, "segment_cleaning", 79),
+         ("bot1", 8, "returning", 78), ("bot1", 9, "charger", 78),
+         ("bot6", 8, "spot_cleaning", 35)],
+    ]
+    stream = (
+        spark.readStream.schema(schemas.DEVICE_STATUS).parquet(src)
+        .select("device_name", F.col("timestamp").alias("ts"), "state", "battery")
+    )
+    q = (
+        detect_sessions_stream(stream)
+        .writeStream.format("memory")
+        .queryName("twin_sessions")
+        .outputMode("append")
+        .option("checkpointLocation", str(tmp_path / "stream-ckpt"))
+        .start()
+    )
+    try:
+        for polls in files:
+            rows = [(_ts(1, h), d, st, b, None, None, None, None, None, None, None)
+                    for d, h, st, b in polls]
+            spark.createDataFrame(rows, status).coalesce(1).write.mode(
+                "append").parquet(src)
+            q.processAllAvailable()
+            pipeline.mode_monitor(spark, cloud, warehouse, ckpt)
+            streamed = sorted(
+                tuple(r) for r in spark.sql("SELECT * FROM twin_sessions").collect()
+            )
+            out = sinks.table_path(warehouse, "cleaning_history_stream")
+            folded = sorted(
+                tuple(r) for r in spark.read.parquet(out).collect()
+            ) if os.path.isdir(out) else []
+            assert folded == streamed
+    finally:
+        q.stop()
+    assert folded == [
+        ("bot1", _ts(1, 2), _ts(1, 6), None, 80),
+        ("bot2", _ts(1, 4), _ts(1, 6), 78, None),
+        ("bot3", _ts(1, 3), _ts(1, 4), 68, 67),
+        ("bot4", _ts(1, 4), _ts(1, 7), 60, 55),
+    ]
 
 
 def test_ewma_batch_fold_matches_streaming_recurrence(spark):
