@@ -429,14 +429,21 @@ FOLD_GRACE_NS = sinks.FOLD_GRACE_NS
 
 def _read_fold_state(path: str | None) -> dict:
     """Fold state at ``path``: JSON ``{"wm": stamp, "folded": [batch
-    ids within the grace band]}``; an absent file is the fresh state.
-    A plain-stamp file (the pre-grace format, which carries no folded
+    ids within the grace band]}``; an absent state is the fresh state.
+    Read through the commit seam that commits it (_write_rollup_state,
+    the lifetime noop branch), so it reads back on every backend; a
+    lifetime state that only its snapshot's publish wrote (a plain
+    file inside the version dir) is read from that file. A
+    plain-stamp state (the pre-grace format, which carries no folded
     set) is unsupported and raises, naming the path -- guessing its
     grace band would either re-fold or skip batches."""
-    raw = ""
-    if path is not None and os.path.exists(path):
-        with open(path) as fh:
-            raw = fh.read().strip()
+    data = None
+    if path is not None:
+        data = commit_provider.read_pointer(path)
+        if data is None and os.path.exists(path):
+            with open(path, "rb") as fh:
+                data = fh.read()
+    raw = (data or b"").decode().strip()
     if not raw:
         return {"wm": "", "folded": []}
     if not raw.startswith("{"):
@@ -467,13 +474,8 @@ def _base_provably_folded(
     absorbed = sinks._base_absorbed(os.path.join(table_dir, base))  # noqa: SLF001
     if not absorbed:
         return False
-    # membership by LOGICAL batch id (batch_fold_id): a v2 row rewrite
-    # republishes a batch under a versioned physical name, and a later
-    # vacuum's absorbed list records that versioned name -- the fold
-    # proof must still recognize it as the batch that was folded
     return all(
-        sinks.batch_fold_id(a) in folded
-        or sinks._batch_ns_prefix(a) <= lo  # noqa: SLF001
+        a in folded or sinks._batch_ns_prefix(a) <= lo  # noqa: SLF001
         for a in absorbed
     )
 
@@ -498,14 +500,7 @@ def _select_unfolded(
     new: list[str] = []
     implicit: list[str] = []
     for b in batches:
-        # fold membership by LOGICAL id: a v2 DML rewrite changes a
-        # batch's physical dirname (`.rw` version segment) but not its
-        # identity -- an in-band batch folded before a rewrite must not
-        # be re-selected (double-count) after it
-        if (
-            sinks._batch_ns_prefix(b) <= lo  # noqa: SLF001
-            or sinks.batch_fold_id(b) in folded
-        ):
+        if sinks._batch_ns_prefix(b) <= lo or b in folded:  # noqa: SLF001
             continue
         if (
             table_dir is not None
@@ -535,14 +530,11 @@ def _advance_fold_state(
     if not wm:  # nothing ever folded: the algebra stays total
         return {"wm": "", "folded": []}
     lo = _grace_floor(wm)
-    # stored as LOGICAL ids (batch_fold_id) so a later v2 DML rewrite
-    # of an in-band batch -- which changes its physical dirname -- still
-    # matches the fold record
-    folded = sorted({
-        sinks.batch_fold_id(b)
+    folded = sorted(
+        b
         for b in set(state["folded"]) | set(new) | set(implicit)
         if sinks._batch_ns_prefix(b) > lo  # noqa: SLF001
-    })
+    )
     return {"wm": wm, "folded": folded}
 
 

@@ -5,9 +5,8 @@ reaching the parquet scan (PushedFilters), scans pruned to referenced
 columns (ReadSchema), dims broadcast instead of shuffled, global
 top-k planned as TakeOrderedAndProject, aggregates partial+final.
 tests/test_plans.py pins those properties per operator so a
-regression in plan shape fails CI, and `python -m
-roborock_data_pipeline_spark.plans.inspect` dumps every registered
-query's formatted plan to PLANS.md for review.
+regression in plan shape fails CI, and `python scripts/dump_plans.py`
+dumps every registered query's formatted plan to PLANS.md for review.
 """
 
 from __future__ import annotations
@@ -43,28 +42,3 @@ def read_schemas(df: DataFrame) -> str:
 
 def count_occurrences(df: DataFrame, needle: str) -> int:
     return plan_string(df).count(needle)
-
-
-def main() -> None:
-    """Dump all registered query plans to PLANS.md (sf0.001)."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.getcwd())
-    from roborock_data_pipeline_spark.registry import all_queries
-    from roborock_data_pipeline_spark.session import get_spark
-
-    spark = get_spark("plan-dump")
-    spark.sparkContext.setLogLevel("ERROR")
-    sf_dir = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
-    out = ["# Physical plans (sf0.001, local)\n"]
-    for name, spec in sorted(all_queries().items()):
-        df = spec.fn(spark, sf_dir)
-        out.append(f"\n## {name}\n\n```\n{plan_string(df)}\n```\n")
-    with open("PLANS.md", "w") as f:
-        f.writelines(out)
-    print(f"wrote PLANS.md ({len(out) - 1} plans)")
-
-
-if __name__ == "__main__":
-    main()

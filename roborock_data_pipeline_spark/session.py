@@ -34,9 +34,8 @@ _RUNTIME_CONFS = {
     # engine itself writes (append_rows, vacuum bases, gold tables)
     # would silently lose timestamp predicate pushdown and file
     # skipping. INT64 micros carries full stats (and is what DuckDB
-    # and the testdata use); with it, clustered vacuum bases
-    # (vacuum_table cluster_by) get footer-level file pruning on
-    # time-range scans.
+    # and the testdata use), so start_time range predicates (e.g.
+    # pipeline.rollup_for_dates) prune row groups at the footer.
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
 }
 

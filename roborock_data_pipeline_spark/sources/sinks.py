@@ -20,7 +20,6 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import shutil
 import threading
 import time
@@ -74,14 +73,12 @@ SCHEMA_MANIFEST = "_schema.json"
 
 
 def table_schema(warehouse_dir: str, name: str) -> T.StructType:
-    """The table's CURRENT schema: the committed manifest if one
-    exists (written at provisioning, advanced by add_table_column),
-    else the code-pinned declaration (WAREHOUSE_TABLES or
-    PARTITIONED_TABLES). Every reader resolves through
-    here, so an evolved column is visible across ALL batches -- ones
-    written before the evolution read it as null (parquet
-    read-with-explicit-schema semantics), exactly Delta/Iceberg's
-    additive-evolution behavior."""
+    """The table's declared schema: the committed manifest if one
+    exists (written at provisioning, or by the first overwrite of a
+    table no code declares), else the code-pinned declaration
+    (WAREHOUSE_TABLES or PARTITIONED_TABLES); KeyError for a table
+    with neither. Every reader and every publish door resolves
+    through here."""
     p = os.path.join(table_path(warehouse_dir, name), SCHEMA_MANIFEST)
     raw = commit_provider.read_pointer(p)
     try:
@@ -90,256 +87,44 @@ def table_schema(warehouse_dir: str, name: str) -> T.StructType:
         return {**WAREHOUSE_TABLES, **PARTITIONED_TABLES}[name]
 
 
-def _publish_manifest(warehouse_dir: str, name: str, m: dict) -> None:
-    """Atomic, FENCE-CHECKED schema-manifest publish (tmp + replace)
-    -- the one door every manifest mutation goes through (r10 review:
-    an inline copy in overwrite_partitions had skipped the fence).
-    The tmp file is removed on any abort so a fenced writer leaves
-    no junk in the table dir."""
-    p = os.path.join(table_path(warehouse_dir, name), SCHEMA_MANIFEST)
-    _check_fence()  # abort a TTL-fenced migration before the commit
-    commit_pointer(p, json.dumps(m).encode())
-
-
 def _write_schema_manifest(
-    warehouse_dir: str, name: str, schema: T.StructType, version: int
+    warehouse_dir: str, name: str, schema: T.StructType
 ) -> None:
-    # read-modify-write: preserve manifest keys owned by other
-    # features (CHECK constraints) across a schema evolution
-    m = _manifest(warehouse_dir, name)
-    m["version"] = version
-    m["schema"] = schema.jsonValue()
-    _publish_manifest(warehouse_dir, name, m)
-
-
-def _schema_version(warehouse_dir: str, name: str) -> int:
+    """Fence-checked schema-manifest publish: one verified pointer
+    commit, so a TTL-fenced writer publishes nothing."""
     p = os.path.join(table_path(warehouse_dir, name), SCHEMA_MANIFEST)
-    raw = commit_provider.read_pointer(p)
+    _check_fence()
+    commit_pointer(p, json.dumps({"schema": schema.jsonValue()}).encode())
+
+
+def _pin_schema_if_undeclared(
+    warehouse_dir: str, name: str, schema: T.StructType
+) -> None:
+    """Commit ``schema`` as the manifest of a table that neither code
+    nor a manifest declares yet -- the first overwrite of such a table
+    (curated_corpus, a caller's own gold table) -- so its later reads
+    resolve a schema through table_schema. Called before the data
+    commit: a crash in between leaves a declared, empty table."""
     try:
-        return int(json.loads(raw)["version"])
-    except (TypeError, ValueError, KeyError):
-        return 0
-
-
-def _manifest(warehouse_dir: str, name: str) -> dict:
-    p = os.path.join(table_path(warehouse_dir, name), SCHEMA_MANIFEST)
-    raw = commit_provider.read_pointer(p)
-    try:
-        return json.loads(raw)
-    except (TypeError, ValueError):
-        return {}
-
-
-def table_constraints(warehouse_dir: str, name: str) -> dict[str, str]:
-    """The table's named CHECK constraints ({name: sql_expr})."""
-    return dict(_manifest(warehouse_dir, name).get("constraints") or {})
-
-
-def add_table_constraint(
-    warehouse_dir: str, name: str, constraint_name: str, sql_expr: str
-) -> None:
-    """Delta-style CHECK constraint: a SQL boolean expression every
-    appended row must satisfy (e.g. ``area_sqm >= 0``), enforced by
-    fusing an assert_true guard into the append job -- a violating
-    batch dies BEFORE the staged rename, so nothing partial
-    publishes. Constraints apply to FUTURE appends only (existing
-    batches are not re-validated -- validating history is a scan the
-    caller can run explicitly via read_table + filter). Committed
-    atomically in the schema manifest under the writer lease."""
-    with writer_lock(warehouse_dir, name):
-        m = _manifest(warehouse_dir, name)
-        schema = table_schema(warehouse_dir, name)
-        cons = dict(m.get("constraints") or {})
-        if constraint_name in cons:
-            raise ValueError(
-                f"constraint {constraint_name!r} already exists on "
-                f"table {name!r}"
-            )
-        cons[constraint_name] = sql_expr
-        m["constraints"] = cons
-        m["schema"] = schema.jsonValue()
-        m["version"] = int(m.get("version", 0)) + 1
-        _publish_manifest(warehouse_dir, name, m)
-
-
-def drop_table_constraint(
-    warehouse_dir: str, name: str, constraint_name: str
-) -> None:
-    """Remove a CHECK constraint (future appends stop validating it)."""
-    with writer_lock(warehouse_dir, name):
-        m = _manifest(warehouse_dir, name)
-        cons = dict(m.get("constraints") or {})
-        if constraint_name not in cons:
-            raise ValueError(
-                f"no constraint {constraint_name!r} on table {name!r}"
-            )
-        del cons[constraint_name]
-        m["constraints"] = cons
-        m["version"] = int(m.get("version", 0)) + 1
-        _publish_manifest(warehouse_dir, name, m)
-
-
-def add_table_column(
-    warehouse_dir: str, name: str, field: T.StructField
-) -> None:
-    """ADDITIVE schema evolution. The new column must be nullable
-    (every already-published batch reads it as null; a non-nullable
-    add would fabricate a constraint history can't satisfy) and must
-    not collide with an existing column -- nor with a RETIRED name
-    still held by rename history (old parquet files physically carry
-    that name; reusing it would make the rename resolution read their
-    values into an unrelated new column). Drops and lossy type
-    changes are refused; safe widening and renames have their own
-    zero-rewrite migrations (widen_table_column /
-    rename_table_column). Manifest commit is atomic (tmp+rename)
-    under the table's writer lease."""
-    if not field.nullable:
-        raise ValueError(
-            f"evolved column {field.name!r} must be nullable: batches "
-            "published before the evolution hold no values for it"
-        )
-    with writer_lock(warehouse_dir, name):
-        schema = table_schema(warehouse_dir, name)
-        if field.name in schema.fieldNames():
-            raise ValueError(
-                f"column {field.name!r} already exists on table {name!r}"
-            )
-        retired = {
-            old for olds in table_renames(warehouse_dir, name).values()
-            for old in olds
-        }
-        if field.name in retired:
-            raise ValueError(
-                f"column name {field.name!r} is retired by a rename on "
-                f"table {name!r}: published batches still carry it "
-                "physically -- pick a different name"
-            )
-        evolved = T.StructType(list(schema.fields) + [field])
-        _write_schema_manifest(
-            warehouse_dir, name, evolved, _schema_version(warehouse_dir, name) + 1
-        )
-
-
-# Safe read-time widenings, verified against Spark 4's parquet reader
-# (SPARK-40876 widening promotions): files written under the narrow
-# type are read back under the wide one with zero rewrite.
-_WIDENINGS: dict[str, set[str]] = {
-    "tinyint": {"smallint", "int", "bigint", "double"},
-    "smallint": {"int", "bigint", "double"},
-    "int": {"bigint", "double"},
-    "float": {"double"},
-}
-
-
-def table_renames(warehouse_dir: str, name: str) -> dict[str, list[str]]:
-    """Rename history: {current_name: [retired names, newest first]}."""
-    return {
-        k: list(v)
-        for k, v in (_manifest(warehouse_dir, name).get("renames") or {}).items()
-    }
-
-
-def widen_table_column(
-    warehouse_dir: str, name: str, column: str, new_type: T.DataType
-) -> None:
-    """Type-WIDENING schema migration with zero data rewrite
-    (VERDICT r6 #3): int->long, float->double, and the byte/short
-    chains. Published batches keep their narrow physical type; every
-    reader requests the wide type and Spark's parquet reader promotes
-    at scan time (verified upcast, SPARK-40876 semantics -- the same
-    mechanism Delta's type widening rides on). Appends carrying the
-    old narrow type are auto-upcast at the door (a safe implicit
-    insert cast); lossy changes (long->int, double->float, anything->
-    string) stay refused -- those are rewrites, not migrations."""
-    with writer_lock(warehouse_dir, name):
-        schema = table_schema(warehouse_dir, name)
-        if column not in schema.fieldNames():
-            raise ValueError(f"no column {column!r} on table {name!r}")
-        fields = []
-        for f in schema.fields:
-            if f.name != column:
-                fields.append(f)
-                continue
-            cur = f.dataType.simpleString()
-            new = new_type.simpleString()
-            if new not in _WIDENINGS.get(cur, set()):
-                raise ValueError(
-                    f"cannot widen {name!r}.{column} from {cur} to {new}: "
-                    "not a safe widening (published parquet under the "
-                    "old type could not be read back losslessly) -- a "
-                    "lossy type change is a rewrite, not a migration"
-                )
-            fields.append(T.StructField(column, new_type, f.nullable))
-        _write_schema_manifest(
-            warehouse_dir, name, T.StructType(fields),
-            _schema_version(warehouse_dir, name) + 1,
-        )
-
-
-def rename_table_column(
-    warehouse_dir: str, name: str, old: str, new: str
-) -> None:
-    """Column RENAME with zero data rewrite (VERDICT r6 #3): pure
-    metadata -- the manifest's schema carries the new name, and the
-    rename history maps it to every retired physical name. Readers
-    resolve ``coalesce(new, old, older, ...)`` over a physical schema
-    that requests all of them (each file has exactly one, the rest
-    read as null), so ANY mix of pre- and post-rename batches -- even
-    an append that was mid-flight during the rename -- reads
-    correctly without classifying batches by version. Appends must
-    use the new name (the old one becomes undeclared at the door)."""
-    with writer_lock(warehouse_dir, name):
-        m = _manifest(warehouse_dir, name)
-        schema = table_schema(warehouse_dir, name)
-        if old not in schema.fieldNames():
-            raise ValueError(f"no column {old!r} on table {name!r}")
-        renames = {k: list(v) for k, v in (m.get("renames") or {}).items()}
-        retired = {o for olds in renames.values() for o in olds}
-        if new in schema.fieldNames() or new in retired:
-            raise ValueError(
-                f"cannot rename {name!r}.{old} to {new!r}: the target "
-                "name is already declared or retired by an earlier "
-                "rename"
-            )
-        import re as _re
-
-        referencing = [
-            cn for cn, expr in (m.get("constraints") or {}).items()
-            if _re.search(rf"\b{_re.escape(old)}\b", expr)
-        ]
-        if referencing:
-            raise ValueError(
-                f"cannot rename {name!r}.{old}: CHECK constraint(s) "
-                f"{referencing} reference it -- drop and re-declare them "
-                "against the new name first"
-            )
-        renames[new] = [old] + renames.pop(old, [])
-        fields = [
-            T.StructField(new, f.dataType, f.nullable, f.metadata)
-            if f.name == old
-            else f
-            for f in schema.fields
-        ]
-        m["renames"] = renames
-        m["schema"] = T.StructType(fields).jsonValue()
-        m["version"] = int(m.get("version", 0)) + 1
-        _publish_manifest(warehouse_dir, name, m)
+        table_schema(warehouse_dir, name)
+    except KeyError:
+        _write_schema_manifest(warehouse_dir, name, schema)
 
 
 def setup_warehouse(spark: SparkSession, warehouse_dir: str) -> None:
     """S8/S9: provision every table manifest-first (idempotent, like
     the reference's 'already exists' tolerance,
     sheets_client.py:103-107): the schema manifest pins the declared
-    schema and makes it evolvable (add_table_column) without code
-    edits, then an empty generation-0 batch manifest makes the table's
-    first append an ordinary commit. Metadata only -- no Spark job."""
+    schema, then an empty generation-0 batch manifest makes the
+    table's first append an ordinary commit. Metadata only -- no Spark
+    job."""
     for name, schema in WAREHOUSE_TABLES.items():
         path = table_path(warehouse_dir, name)
         os.makedirs(path, exist_ok=True)
         if commit_provider.read_pointer(
             os.path.join(path, SCHEMA_MANIFEST)
         ) is None:
-            _write_schema_manifest(warehouse_dir, name, schema, 0)
+            _write_schema_manifest(warehouse_dir, name, schema)
         with _manifest_lock(path, name) as still_mine:
             _live_manifest(path, name, still_mine)
 
@@ -375,25 +160,28 @@ def _publish_stamp_ns() -> int:
         return _last_stamp_ns
 
 
-def _fuse_constraints(
+def _fuse_not_null(
     df: DataFrame, warehouse_dir: str, name: str, verb: str
 ) -> DataFrame:
-    """NOT NULL + CHECK enforcement, fused into the write job at plan
-    time via assert_true -- a violating batch dies BEFORE the staged
-    rename, so nothing partial publishes and the table is unchanged.
-    Shared by EVERY publish path (append_rows, overwrite_rows,
-    overwrite_partitions -- VERDICT r7 #4: the gold rebuild/refresh
-    paths previously bypassed validation, so a declared constraint
-    could be silently violated by every gold publish). NOT NULL is a
-    VALUE constraint Spark does not enforce on write (schema
-    nullability is advisory there); this is Delta's door-level
-    semantics -- one batch-sized scan, no second pass. Only declared
+    """NOT NULL enforcement, fused into the write job at plan time via
+    assert_true -- a violating batch dies BEFORE the staged rename, so
+    nothing partial publishes and the table is unchanged. Shared by
+    EVERY publish path (append_rows, overwrite_rows,
+    overwrite_partitions). NOT NULL is a VALUE constraint Spark does
+    not enforce on write (schema nullability is advisory there); this
+    is Delta's door-level semantics -- one batch-sized scan, no second
+    pass. The declared schema resolves through table_schema, so a
+    code-declared table is checked from its first publish on, manifest
+    or not (daily_summary_by_date has none); only a table that neither
+    code nor a manifest declares yet publishes unchecked. Only declared
     non-nullable columns PRESENT in df are asserted (overwrite paths
-    may publish projections); no-op for tables without a manifest."""
-    p = os.path.join(table_path(warehouse_dir, name), SCHEMA_MANIFEST)
-    if commit_provider.read_pointer(p) is None:
+    may publish projections)."""
+    try:
+        declared = {
+            f.name: f for f in table_schema(warehouse_dir, name).fields
+        }
+    except KeyError:
         return df
-    declared = {f.name: f for f in table_schema(warehouse_dir, name).fields}
     for c in df.columns:
         f = declared.get(c)
         if f is not None and not f.nullable:
@@ -410,20 +198,6 @@ def _fuse_constraints(
                     F.col(f.name),
                 ),
             )
-    for cn, expr in table_constraints(warehouse_dir, name).items():
-        # SQL three-valued CHECK (r9 review): a NULL predicate result
-        # SATISFIES the constraint (SQL standard / Delta semantics) --
-        # only FALSE rejects. Without the coalesce, `area >= 0` on a
-        # nullable column refused every batch carrying a NULL.
-        df = df.filter(
-            F.assert_true(
-                F.coalesce(F.expr(expr), F.lit(True)),
-                F.lit(
-                    f"{verb} to {name!r}: CHECK constraint {cn!r} "
-                    f"violated ({expr})"
-                ),
-            ).isNull()
-        )
     return df
 
 
@@ -447,12 +221,10 @@ def _fuse_constraints(
 # holds data but no manifest is an unsupported older layout and is     #
 # refused by name, never read around.                                  #
 #                                                                      #
-# Row-level rewrites (DELETE/UPDATE/MERGE) swap ALL affected batches   #
-# in ONE manifest commit (cross-batch atomic DML), by publishing each  #
-# rewritten batch under a VERSIONED physical name (`.rw<8hex>`         #
-# segment) that preserves the batch's stamp prefix, vacuum-base        #
-# suffix, and -- via batch_fold_id -- its logical identity to the      #
-# incremental refreshes' fold state.                                   #
+# A batch dir's name is its identity for life: a batch is published    #
+# once, never rewritten in place, and leaves the log only by being     #
+# absorbed into a vacuum base. The incremental refreshes' fold state   #
+# and a base's absorbed list key on the dirname.                       #
 #                                                                      #
 # Concurrency: every manifest commit (appends included) serializes on  #
 # a millisecond-scale naming lock (_manifest_lock) held only for       #
@@ -468,34 +240,6 @@ BATCHES_MANIFEST = "_batches.json"
 # contender steals through the same inode-checked rename-aside the
 # writer lease uses.
 MANIFEST_LOCK_TTL_S = 60.0
-
-_RW_SEG = re.compile(r"\.rw[0-9a-f]{8}")
-
-
-def batch_fold_id(batch_dirname: str) -> str:
-    """Logical batch identity across row-level rewrites: a
-    DELETE/UPDATE/MERGE republishes a batch under a versioned physical
-    name (`batch-<stamp>-<uuid>.rw<8hex>[-vb]`), and anything that
-    remembers batches ACROSS mutations -- the fold state of the
-    incremental refreshes, a vacuum base's absorbed list -- must key on
-    the stamp+uuid identity, not the physical dirname, or a rewrite
-    inside the fold grace band would be re-folded as a "new" batch and
-    double-counted. Identity = the dirname with any `.rw` version
-    segment stripped."""
-    return _RW_SEG.sub("", batch_dirname)
-
-
-def _bump_rw(batch_dirname: str) -> str:
-    """Next versioned physical name for a rewritten batch: fresh
-    `.rw<8hex>` segment spliced BEFORE the vacuum-base suffix so
-    `endswith(VACUUM_BASE_SUFFIX)` and the 20-digit stamp prefix both
-    survive the rewrite."""
-    token = f".rw{uuid.uuid4().hex[:8]}"
-    base = batch_fold_id(batch_dirname)
-    if base.endswith(VACUUM_BASE_SUFFIX):
-        return base[: -len(VACUUM_BASE_SUFFIX)] + token + VACUUM_BASE_SUFFIX
-    return base + token
-
 
 def _refuse_unmanifested(table_dir: str) -> None:
     """A table dir with no committed manifest (neither
@@ -590,7 +334,7 @@ def _commit_batches(
     temp file (fsync'd) and publish it with ONE single-file
     ``os.replace`` -- on an object store this line is one atomic
     manifest PUT. Guarded by the writer-lease fence (a TTL-fenced
-    vacuum/DML must not commit over its successor) and by the
+    vacuum/overwrite must not commit over its successor) and by the
     manifest-lock ownership probe (same property for the naming
     lock)."""
     _check_fence()
@@ -644,38 +388,26 @@ def append_rows(df: DataFrame, warehouse_dir: str, name: str) -> None:
     if commit_provider.read_pointer(
         os.path.join(table_dir, SCHEMA_MANIFEST)
     ) is not None:
-        # schema enforcement at the door (Delta-style): unknown
-        # columns are refused (evolve first -- add_table_column);
-        # missing NULLABLE columns are filled with typed nulls so
-        # pre-evolution writers keep working; a missing non-nullable
-        # column is a real contract break and refused
+        # schema enforcement at the door (Delta-style): undeclared
+        # columns and type drift are refused; missing NULLABLE columns
+        # are filled with typed nulls; a missing non-nullable column
+        # is a contract break and refused
         schema = table_schema(warehouse_dir, name)
         declared = {f.name: f for f in schema.fields}
         extra = [c for c in df.columns if c not in declared]
         if extra:
             raise ValueError(
-                f"append to {name!r} carries undeclared column(s) "
-                f"{extra}: evolve the table first (add_table_column)"
+                f"append to {name!r} carries undeclared column(s) {extra}"
             )
-        drifted = []
-        for c, t in df.dtypes:
-            if c not in declared or t == declared[c].dataType.simpleString():
-                continue
-            if declared[c].dataType.simpleString() in _WIDENINGS.get(t, set()):
-                # safe implicit insert cast: a pre-widening writer
-                # keeps working after widen_table_column (its narrow
-                # value upcasts losslessly to the declared wide type)
-                df = df.withColumn(c, F.col(c).cast(declared[c].dataType))
-            else:
-                drifted.append(
-                    f"{c}: {t} != {declared[c].dataType.simpleString()}"
-                )
+        drifted = [
+            f"{c}: {t} != {declared[c].dataType.simpleString()}"
+            for c, t in df.dtypes
+            if t != declared[c].dataType.simpleString()
+        ]
         if drifted:
             raise ValueError(
                 f"append to {name!r} carries type-drifted column(s) "
-                f"[{'; '.join(drifted)}]: a lossy type change is a "
-                "migration (rewrite), not an append -- safe widenings "
-                "are cast at the door"
+                f"[{'; '.join(drifted)}]"
             )
         missing = [f for f in schema.fields if f.name not in df.columns]
         broken = [f.name for f in missing if not f.nullable]
@@ -687,7 +419,7 @@ def append_rows(df: DataFrame, warehouse_dir: str, name: str) -> None:
         for f in missing:
             df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
         df = df.select(*[f.name for f in schema.fields])
-        df = _fuse_constraints(df, warehouse_dir, name, verb="append")
+        df = _fuse_not_null(df, warehouse_dir, name, verb="append")
     staging_root = os.path.join(warehouse_dir, ".staging")
     os.makedirs(staging_root, exist_ok=True)
     staged = os.path.join(staging_root, f"{name}-{uuid.uuid4().hex}")
@@ -760,79 +492,31 @@ def _fresh_batch_id() -> str:
     return batch_id
 
 
-def _read_paths(
-    spark: SparkSession, warehouse_dir: str, name: str, paths: list[str]
-) -> DataFrame:
-    """The one batch-reading core every reader resolves through:
-    CURRENT manifest schema (evolved columns null on pre-evolution
-    batches; widened types promoted at scan time by the parquet
-    reader's upcast) with rename resolution -- the physical read
-    schema requests every retired name alongside its current one
-    (same type, nullable), and ``coalesce(new, old, older, ...)``
-    recovers the value whichever name the file physically carries.
-    No per-batch classification, so any mix of pre-/post-migration
-    batches -- including appends mid-flight during the rename -- reads
-    correctly, still as ONE parquet scan."""
-    schema = table_schema(warehouse_dir, name)
-    if not paths:
-        return spark.createDataFrame([], schema)
-    renames = table_renames(warehouse_dir, name)
-    renames = {k: v for k, v in renames.items() if k in schema.fieldNames()}
-    phys_fields: list[T.StructField] = []
-    for f in schema.fields:
-        phys_fields.append(f)
-        for old in renames.get(f.name, []):
-            phys_fields.append(T.StructField(old, f.dataType, True))
-    df = (
-        spark.read.schema(T.StructType(phys_fields))
-        .option("recursiveFileLookup", "true")
-        .parquet(*paths)
-    )
-    if not renames:
-        return df
-    return df.select(
-        *[
-            F.coalesce(f.name, *renames[f.name]).alias(f.name)
-            if f.name in renames
-            else F.col(f.name)
-            for f in schema.fields
-        ]
-    )
-
-
 def read_batch_dirs(
     spark: SparkSession, warehouse_dir: str, name: str, batch_dirnames: list[str]
 ) -> DataFrame:
     """Read an explicit subset of a table's batch dirs (the
-    incremental refreshes' new-batch scans) through the same
-    schema/rename resolution as read_table."""
+    incremental refreshes' new-batch scans, read_table's live set):
+    ONE parquet scan pinned to the declared schema, so building the
+    frame runs no schema-inference job. No dirs -> an empty frame of
+    that schema."""
+    schema = table_schema(warehouse_dir, name)
+    if not batch_dirnames:
+        return spark.createDataFrame([], schema)
     table_dir = table_path(warehouse_dir, name)
-    return _read_paths(
-        spark, warehouse_dir, name,
-        [os.path.join(table_dir, b) for b in batch_dirnames],
+    return (
+        spark.read.schema(schema)
+        .option("recursiveFileLookup", "true")
+        .parquet(*[os.path.join(table_dir, b) for b in batch_dirnames])
     )
 
 
-def live_paths(warehouse_dir: str, name: str) -> list[str]:
-    """THE read set of a batch-log table: the live batch dirs its
-    committed manifest names, as paths. read_table and the
-    fresh-resolving SQL views (sources/warehouse_ds) both read exactly
-    this, so the engine has one definition of what a table holds."""
-    table_dir = table_path(warehouse_dir, name)
-    return [
-        os.path.join(table_dir, b) for b in list_batches(warehouse_dir, name)
-    ]
-
-
 def read_table(spark: SparkSession, warehouse_dir: str, name: str) -> DataFrame:
-    """S5: full-table read with the CURRENT schema (manifest-resolved
-    -- evolved columns read as null on pre-evolution batches, widened
-    types promoted at scan, renamed columns coalesced from their
-    retired physical names) over live_paths: the batch dirs the
-    committed manifest names. Orphans of a crashed writer and
-    ``.staging`` dirs are never named, so never read."""
-    return _read_paths(
-        spark, warehouse_dir, name, live_paths(warehouse_dir, name)
+    """S5: full-table read over the batch dirs the committed manifest
+    names. Orphans of a crashed writer and ``.staging`` dirs are never
+    named, so never read."""
+    return read_batch_dirs(
+        spark, warehouse_dir, name, list_batches(warehouse_dir, name)
     )
 
 
@@ -845,19 +529,12 @@ def overwrite_rows(df: DataFrame, warehouse_dir: str, name: str) -> None:
     manifest then names ONLY the new snapshot batch: old-until-commit,
     no aside window at all, object-store-safe. The replaced batch dirs
     are GC'd post-commit (orphaned-invisible on a crash; the vacuum
-    heal reclaims them). The schema manifest (declared schema + CHECK
-    constraints) stays in the table dir untouched. A snapshot table is
-    additionally stamped ``layout: snapshot`` BEFORE the data commit
-    (ADVICE r12: stamping after left a crash window in which a
-    committed snapshot manifest carried no stamp, so row DML did not
-    refuse it and a later edit was silently clobbered by the next
-    rebuild; the early stamp is idempotent and merely conservative if
-    the commit then fails) so row DML refuses it explicitly --
-    snapshot tables are rebuilt wholesale. The publish runs under the
-    writer lease (ADVICE r12): unleased, a snapshot racing a vacuum's
-    listing->commit window had its replaced batches resurrected by the
-    vacuum's base."""
-    df = _fuse_constraints(df, warehouse_dir, name, verb="overwrite")
+    heal reclaims them). A table no code declares gets df's schema as
+    its manifest (_pin_schema_if_undeclared). The publish runs under
+    the writer lease (ADVICE r12): unleased, a snapshot racing a
+    vacuum's listing->commit window had its replaced batches
+    resurrected by the vacuum's base."""
+    df = _fuse_not_null(df, warehouse_dir, name, verb="overwrite")
     table_dir = table_path(warehouse_dir, name)
     staging_root = os.path.join(warehouse_dir, ".staging")
     os.makedirs(staging_root, exist_ok=True)
@@ -873,29 +550,11 @@ def overwrite_rows(df: DataFrame, warehouse_dir: str, name: str) -> None:
     # dirs. overwrite_rows is a full-table mutation like every
     # other leased mutator -- it takes the same lease.
     with writer_lock(warehouse_dir, name):
-        _batches_manifest(table_dir)  # refuse an old layout before stamping
+        _batches_manifest(table_dir)  # refuse an old layout before writing
         try:
             df.write.mode("overwrite").parquet(staged)
             os.makedirs(table_dir, exist_ok=True)
-            # Stamp `layout: snapshot` BEFORE the data commit
-            # (ADVICE r11, low): a crash between a committed
-            # single-batch manifest and the stamp would leave a
-            # snapshot table the row-DML refusal does not
-            # recognize, so a later DELETE/UPDATE/MERGE would be
-            # silently clobbered by the next rebuild. The stamp is
-            # idempotent and harmless if the commit then fails --
-            # DML merely refuses a table that is ABOUT to become a
-            # snapshot.
-            m = _manifest(warehouse_dir, name)
-            if m.get("layout") != "snapshot":
-                m["layout"] = "snapshot"
-                if "schema" not in m:
-                    m["schema"] = (
-                        WAREHOUSE_TABLES[name].jsonValue()
-                        if name in WAREHOUSE_TABLES
-                        else df.schema.jsonValue()
-                    )
-                _publish_manifest(warehouse_dir, name, m)
+            _pin_schema_if_undeclared(warehouse_dir, name, df.schema)
             with _manifest_lock(table_dir, name) as still_mine:
                 cur = _live_manifest(table_dir, name, still_mine)
                 batch_id = _fresh_batch_id()
@@ -918,365 +577,13 @@ def overwrite_rows(df: DataFrame, warehouse_dir: str, name: str) -> None:
                 shutil.rmtree(staged, ignore_errors=True)
 
 
-def _rewrite_matching_batches(
-    spark: SparkSession,
-    warehouse_dir: str,
-    name: str,
-    find_matches,
-    transform,
-    verb: str,
-) -> dict[str, int]:
-    """Shared core of delete_rows / update_rows / merge_rows: find
-    the live batch dirs holding matching rows in ONE scan
-    (``find_matches(df) -> DataFrame`` of the matching subset; driver
-    state = affected dir names + match counts, never rows), then
-    stage-rewrite only those dirs and swap them all in ONE manifest
-    commit. Untouched batches are never rewritten -- at 100 TB a
-    targeted delete (one device, one day) touches the few batches
-    whose footer stats admit the predicate, not the table. A vacuum
-    base's absorbed manifest is carried into its rewrite (the fold
-    proof of the incremental refreshes reads it)."""
-    table_dir = table_path(warehouse_dir, name)
-    batches = list_batches(warehouse_dir, name)
-    # partition-overwrite layout (gold tables): no batch dirs, data
-    # under key=value version dirs -- a row rewrite here would
-    # otherwise report 0 matches and silently erase NOTHING (r9
-    # review: unacceptable for the right-to-erasure primitive).
-    # Decided from the AUTHORITATIVE signals (r10): the manifest's
-    # declared layout or the committed _partitions.json -- never by
-    # scanning dirnames for '=', which would let one stray key=value
-    # directory inside a batch-log table block its DML/erasure path.
-    if _manifest(warehouse_dir, name).get(
-        "layout"
-    ) == "partition-overwrite" or _partitions_manifest(table_dir) is not None:
-        raise ValueError(
-            f"{verb} targets partition-overwrite table {name!r}: row "
-            "rewrites do not apply to the partitioned gold layout -- "
-            "rebuild the affected partitions via overwrite_partitions"
-        )
-    if _manifest(warehouse_dir, name).get("layout") == "snapshot":
-        # the layout stamp is the refusal signal: a row edit here
-        # would be silently clobbered by the next wholesale rebuild
-        raise ValueError(
-            f"{verb} matches rows in {name!r}, a snapshot table; "
-            "snapshot tables are rebuilt wholesale (overwrite_rows), "
-            "not row-rewritten"
-        )
-    if not batches:
-        return {"batches_rewritten": 0, "rows_matched": 0, "_affected": []}
-    hits = (
-        find_matches(read_batch_dirs(spark, warehouse_dir, name, batches))
-        .groupBy(
-            F.element_at(F.split(F.input_file_name(), "/"), -2).alias("_dir")
-        )
-        .count()
-        .collect()
-    )
-    affected = sorted(r["_dir"] for r in hits)
-    rows_matched = sum(r["count"] for r in hits)
-    if not affected:
-        return {"batches_rewritten": 0, "rows_matched": 0, "_affected": []}
-    staging_root = os.path.join(warehouse_dir, ".staging")
-    os.makedirs(staging_root, exist_ok=True)
-    # every rewritten batch publishes under a fresh VERSIONED name
-    # (`.rw<8hex>` -- same stamp prefix, same -vb suffix, same fold
-    # identity via batch_fold_id) while staying invisible, then ALL
-    # affected batches swap in ONE manifest commit: row DML is
-    # cross-batch ATOMIC -- a reader sees the whole delete/update or
-    # none of it.
-    renames: list[tuple[str, str]] = []
-    committed = False
-    try:
-        for b in affected:
-            src = os.path.join(table_dir, b)
-            new_df = transform(
-                read_batch_dirs(spark, warehouse_dir, name, [b])
-            )
-            staged = os.path.join(
-                staging_root, f"{name}-rw-{uuid.uuid4().hex[:8]}"
-            )
-            try:
-                new_df.write.mode("overwrite").parquet(staged)
-                absorbed = os.path.join(src, ABSORBED_MANIFEST)
-                if os.path.exists(absorbed):
-                    shutil.copyfile(
-                        absorbed,
-                        os.path.join(staged, ABSORBED_MANIFEST),
-                    )
-                new_name = _bump_rw(b)
-                os.replace(
-                    staged, os.path.join(table_dir, new_name)
-                )  # invisible until the manifest commit
-            except BaseException:
-                if os.path.exists(staged):
-                    shutil.rmtree(staged, ignore_errors=True)
-                raise
-            renames.append((b, new_name))
-        with _manifest_lock(table_dir, name) as still_mine:
-            cur = _batches_manifest(table_dir)
-            olds = {o for o, _ in renames}
-            live = [x for x in cur["live"] if x not in olds]
-            live.extend(n for _, n in renames)
-            _commit_batches(
-                table_dir, name, live, cur["generation"] + 1, still_mine
-            )
-        committed = True
-    finally:
-        if not committed:
-            # pre-commit fault: the versioned dirs were never
-            # live -- remove them so the table is EXACTLY unchanged
-            for _, n in renames:
-                shutil.rmtree(
-                    os.path.join(table_dir, n), ignore_errors=True
-                )
-    for o, _ in renames:  # post-commit GC of the replaced versions
-        shutil.rmtree(os.path.join(table_dir, o), ignore_errors=True)
-    return {
-        "batches_rewritten": len(affected),
-        "rows_matched": rows_matched,
-        # the LIVE (post-rewrite, versioned) names -- consumers
-        # re-reading the affected dirs (merge_rows' insert half)
-        # must read what the manifest now names
-        "_affected": sorted(n for _, n in renames),
-    }
-
-
-def delete_rows(
-    spark: SparkSession, warehouse_dir: str, name: str, predicate: str
-) -> dict[str, int]:
-    """Row-level DELETE on a batch-log table (Delta's `DELETE FROM`,
-    the right-to-erasure primitive): rewrite only the live batch dirs
-    containing matching rows, dropping them. SQL three-valued DELETE
-    semantics -- rows where the predicate is NULL are KEPT.
-
-    ERASURE, not versioning: the affected batches are rewritten under
-    their existing stamps (batch_fold_id identity), so the rows
-    disappear from current reads AND from every as-of read -- a legal
-    erase must not survive in time travel. All affected batches swap
-    in ONE manifest commit; a crash before it changes nothing. Derived
-    gold tables do not see the delete until their rebuild path runs (mode daily_summary / refresh full fallback) --
-    the watermark refreshes fold NEW batches and a rewrite is
-    deliberately not new; an erasure pipeline runs the rebuild as its
-    propagation step. Runs under the writer lease (a concurrent
-    vacuum merging dirs mid-rewrite would corrupt both)."""
-    with writer_lock(warehouse_dir, name):
-        keep = ~F.coalesce(F.expr(predicate), F.lit(False))
-        out = _rewrite_matching_batches(
-            spark, warehouse_dir, name,
-            lambda df: df.where(F.expr(predicate)),
-            lambda df: df.where(keep), "delete",
-        )
-    out.pop("_affected")
-    out["rows_deleted"] = out.pop("rows_matched")
-    return out
-
-
-def update_rows(
-    spark: SparkSession,
-    warehouse_dir: str,
-    name: str,
-    predicate: str,
-    assignments: dict[str, str],
-) -> dict[str, int]:
-    """Row-level UPDATE (Delta's `UPDATE ... SET`): rewrite only the
-    affected live batches, applying ``assignments`` ({column: SQL
-    expr}) to rows matching ``predicate``; other rows pass through
-    byte-identical. The rewritten batch goes back through the
-    door-level contract (_fuse_constraints) -- an update cannot
-    violate NOT NULL/CHECK any more than an append can. Same
-    in-place/as-of/crash/propagation semantics as delete_rows."""
-    schema = table_schema(warehouse_dir, name)
-    bad = [c for c in assignments if c not in schema.fieldNames()]
-    if bad:
-        raise ValueError(f"update targets unknown columns on {name!r}: {bad}")
-    with writer_lock(warehouse_dir, name):
-        hit = F.coalesce(F.expr(predicate), F.lit(False))
-
-        def _apply(df: DataFrame) -> DataFrame:
-            # ONE select, not sequential withColumns (r9 review): SQL
-            # UPDATE evaluates the predicate and every assignment RHS
-            # against the PRE-UPDATE row -- chained withColumns made a
-            # later assignment see an earlier one's new value (and a
-            # predicate on an assigned column stop matching mid-way)
-            out = [
-                F.when(
-                    hit, F.expr(assignments[f.name]).cast(f.dataType)
-                ).otherwise(F.col(f.name)).alias(f.name)
-                if f.name in assignments
-                else F.col(f.name)
-                for f in schema.fields
-            ]
-            return _fuse_constraints(
-                df.select(*out), warehouse_dir, name, verb="update"
-            )
-
-        out = _rewrite_matching_batches(
-            spark, warehouse_dir, name,
-            lambda df: df.where(F.expr(predicate)), _apply, "update",
-        )
-    out.pop("_affected")
-    out["rows_updated"] = out.pop("rows_matched")
-    return out
-
-
-def merge_rows(
-    spark: SparkSession,
-    warehouse_dir: str,
-    name: str,
-    source: DataFrame,
-    on: list[str],
-    insert_unmatched: bool = True,
-) -> dict[str, int]:
-    """Delta-style MERGE INTO (upsert) on a batch-log table: target
-    rows whose key matches a source row take the source's values for
-    every shared non-key column (WHEN MATCHED UPDATE); source rows
-    with no target match append as one new batch (WHEN NOT MATCHED
-    INSERT, through the ordinary door -- schema + constraints + a
-    publish-stamped id the incremental refreshes fold).
-
-    Scale shape: the source is a CDC-batch (small) side -- its keys
-    broadcast into one target scan that discovers the affected batch
-    dirs (the _rewrite_matching_batches core: only those dirs
-    rewrite), each rewrite is a broadcast left join applying source
-    values, and the unmatched set is a broadcast anti join of the
-    source against the (source-sized) matched-key set. Nothing
-    target-sized ever shuffles or reaches the driver.
-
-    Duplicate source keys are refused (two updates for one key in a
-    single merge has no deterministic winner -- pre-dedup the source
-    with its own ordering, e.g. linkage.cdc_merge's latest-wins).
-    The update half and the insert half are each atomic; a crash
-    between them re-runs cleanly: already-updated rows match their
-    source values again, and the insert half appends only
-    still-unmatched keys. Snapshot-table upserts are
-    linkage.cdc_merge; this is the batch-log form."""
-    schema = table_schema(warehouse_dir, name)
-    missing = [c for c in on if c not in schema.fieldNames()]
-    if missing:
-        raise ValueError(f"merge keys not in {name!r} schema: {missing}")
-    undeclared = [c for c in source.columns if c not in schema.fieldNames()]
-    if undeclared:
-        # refused BEFORE the update half (r9 review): the door would
-        # reject the insert append anyway, but only after the batch
-        # rewrites had committed -- leaving the merge half-applied on
-        # every re-run
-        raise ValueError(
-            f"merge source carries columns not on {name!r}: {undeclared}"
-        )
-    if source.groupBy(*on).count().where("count > 1").limit(1).count():
-        raise ValueError(
-            "merge source has duplicate keys; pre-dedup with an explicit "
-            "ordering (latest-wins) before merging"
-        )
-    null_key = F.lit(False)
-    for c in on:
-        null_key = null_key | F.col(c).isNull()
-    if source.where(null_key).limit(1).count():
-        # a NULL key never equals anything in SQL joins, so such a row
-        # would re-insert on EVERY run -- breaking the documented
-        # idempotent re-run contract (r9 review)
-        raise ValueError(
-            f"merge source has NULL in merge key(s) {on}; NULL keys can "
-            "never match and would duplicate on re-run"
-        )
-    shared = [
-        c for c in source.columns
-        if c in schema.fieldNames() and c not in on
-    ]
-    src = source.select(
-        *on,
-        *[F.col(c).alias(f"_src_{c}") for c in shared],
-        F.lit(True).alias("_src_hit"),
-    ).cache()
-    try:
-        with writer_lock(warehouse_dir, name):
-            def _find(df: DataFrame) -> DataFrame:
-                return df.join(F.broadcast(src.select(*on)), on, "left_semi")
-
-            def _apply(df: DataFrame) -> DataFrame:
-                j = df.join(F.broadcast(src), on, "left")
-                for c in shared:
-                    typ = schema[c].dataType
-                    j = j.withColumn(
-                        c,
-                        F.when(
-                            F.col("_src_hit"),
-                            F.col(f"_src_{c}").cast(typ),
-                        ).otherwise(F.col(c)),
-                    )
-                j = j.select(*df.columns)
-                return _fuse_constraints(j, warehouse_dir, name, verb="merge")
-
-            out = _rewrite_matching_batches(
-                spark, warehouse_dir, name, _find, _apply, "merge"
-            )
-            affected = out.pop("_affected")
-            inserted = 0
-            if insert_unmatched:
-                # matched keys are a subset of the (small) source keys,
-                # and every matched row lives in an AFFECTED dir (that
-                # is the definition of affected -- the discovery scan
-                # already proved the other batches hold no matches), so
-                # the projection re-reads only those dirs instead of
-                # the whole batch log (VERDICT r8: 2x read
-                # amplification on every upsert at 100 TB). One
-                # broadcast anti join then leaves the to-insert rows.
-                matched_keys = (
-                    read_batch_dirs(spark, warehouse_dir, name, affected)
-                    .join(F.broadcast(src.select(*on)), on, "left_semi")
-                    .select(*on)
-                    .distinct()
-                ) if affected else None
-                # rebuilt from the CACHED src (r9 review): a live /
-                # non-deterministic `source` recomputed here could
-                # diverge from the snapshot the dup-key check and the
-                # update half saw
-                to_insert = src.select(
-                    *on, *[F.col(f"_src_{c}").alias(c) for c in shared]
-                )
-                if matched_keys is not None:
-                    to_insert = to_insert.join(
-                        F.broadcast(matched_keys), on, "left_anti"
-                    )
-                inserted = to_insert.count()
-                if inserted:
-                    append_rows(to_insert, warehouse_dir, name)
-    finally:
-        src.unpersist()
-    return {
-        "batches_rewritten": out["batches_rewritten"],
-        "rows_updated": out["rows_matched"],
-        "rows_inserted": inserted,
-    }
-
-
-def write_bucketed(
-    df: DataFrame, table_name: str, key: str, n_buckets: int = 16
-) -> None:
-    """Bucketed managed table: rows hash-partitioned into n_buckets
-    files by `key`, sorted within buckets.
-
-    Two tables bucketed the same way join WITHOUT a shuffle -- the
-    exchange disappears from the plan (asserted in
-    tests/test_bucketing.py). At 100 TB this is how the recurring
-    lineitem join orders-shaped joins avoid re-shuffling terabytes every
-    run: pay the shuffle once at write time, reuse it every query."""
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, key)
-        .sortBy(key)
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-
-
 def describe_table(warehouse_dir: str, name: str) -> dict[str, object]:
     """Operator-facing metadata snapshot, no Spark job: live batch
     count, retention point (the newest vacuum base's stamp, i.e. the
-    oldest exact as-of), schema version, declared columns, named
-    constraints. The 100 TB use is monitoring the maintenance loop:
-    batch_count growing without bound means vacuum stopped running;
-    a moving retention_point_ns confirms it is. Lock fields (r9,
+    oldest exact as-of), declared columns. The 100 TB use is
+    monitoring the maintenance loop: batch_count growing without
+    bound means vacuum stopped running; a moving retention_point_ns
+    confirms it is. Lock fields (r9,
     VERDICT r8 #7): a lock_age_s approaching LOCK_TTL_S on a
     supposedly-running maintenance job is the heartbeat-thread-died
     signal, and lock_stale says the next contender will take over."""
@@ -1312,9 +619,7 @@ def describe_table(warehouse_dir: str, name: str) -> dict[str, object]:
         "retention_point_ns": (
             int(_batch_ns_prefix(bases[-1])) if bases else None
         ),
-        "schema_version": _schema_version(warehouse_dir, name),
         "columns": [f.name for f in schema.fields],
-        "constraints": table_constraints(warehouse_dir, name),
         "lock_holder_pid": lock_holder,
         "lock_age_s": lock_age_s,
         # mirrors writer_lock's ACTUAL takeover rule: a dead holder is
@@ -1337,76 +642,6 @@ def describe_warehouse(warehouse_dir: str) -> dict[str, dict[str, object]]:
         for name in WAREHOUSE_TABLES
         if os.path.isdir(table_path(warehouse_dir, name))
     }
-
-
-def validate_table(
-    spark: SparkSession, warehouse_dir: str, name: str
-) -> dict[str, int]:
-    """Explicit HISTORY validation -- the scan that door-level
-    enforcement deliberately does not run on ALTER: count existing
-    rows violating each declared NOT NULL column and each named CHECK
-    constraint. One pass over the table (all predicates aggregated in
-    a single job, conditional counts -- no per-constraint scans);
-    returns {check_name: violating_rows} with zero entries included
-    so a clean report is explicit. Read-only: quarantining violators
-    is the caller's policy (filter + overwrite/append), not the
-    validator's."""
-    schema = table_schema(warehouse_dir, name)
-    checks: dict[str, object] = {
-        f"not_null:{f.name}": F.col(f.name).isNull()
-        for f in schema.fields
-        if not f.nullable
-    }
-    for cn, expr in table_constraints(warehouse_dir, name).items():
-        # same three-valued rule as the door: NULL satisfies CHECK
-        checks[f"check:{cn}"] = ~F.coalesce(F.expr(expr), F.lit(True))
-    if not checks:
-        return {}
-    row = (
-        read_table(spark, warehouse_dir, name)
-        .agg(
-            *[
-                F.count(F.when(cond, 1)).alias(label)
-                for label, cond in checks.items()
-            ]
-        )
-        .collect()[0]
-    )
-    return {label: int(row[label]) for label in checks}
-
-
-def register_warehouse_views(spark: SparkSession, warehouse_dir: str) -> list[str]:
-    """Register every provisioned table as a session temp view so the
-    warehouse is queryable with plain ``spark.sql`` -- the engine's
-    equivalent of the reference user opening the spreadsheet and
-    reading tabs (always-current, sheets_client.py:299-307).
-
-    FRESH-RESOLVING (VERDICT r6 #2): the views sit on the
-    ``roborock_warehouse`` Python Data Source, whose read lists the
-    live batch dirs at EXECUTION time -- a ``spark.sql`` query issued
-    after an append sees the new rows immediately, no re-registration.
-    The SCHEMA is still pinned at registration (views are typed), so
-    after a schema migration (add/widen/rename) re-register to expose
-    the new shape -- but data freshness never requires it. The engine's
-    own operators keep reading through the native JVM scan
-    (read_table); the view layer is the interactive surface (see
-    sources/warehouse_ds.py for the scale posture). Returns the
-    registered names."""
-    from roborock_data_pipeline_spark.sources import warehouse_ds
-
-    warehouse_ds.register(spark)
-    registered = []
-    for name in WAREHOUSE_TABLES:
-        if os.path.isdir(table_path(warehouse_dir, name)):
-            (
-                spark.read.format(warehouse_ds.FORMAT_NAME)
-                .option("warehouse_dir", warehouse_dir)
-                .option("table", name)
-                .load()
-                .createOrReplaceTempView(name)
-            )
-            registered.append(name)
-    return registered
 
 
 def append_with_console_fallback(
@@ -1735,10 +970,10 @@ def read_table_as_of(
     that instant. Because publishes are whole-batch renames, every
     historical version is a plain prefix of the batch log.
 
-    Retention (VERDICT r5 #5): ``vacuum_table``/``compact_table``
-    merge old history into a base batch stamped with the NEWEST
-    absorbed publish time, so every as-of INSIDE the retention window
-    stays exact after a vacuum. An as-of OLDER than a base's stamp
+    Retention (VERDICT r5 #5): ``vacuum_table`` merges old history
+    into a base batch stamped with the NEWEST absorbed publish time,
+    so every as-of INSIDE the retention window stays exact after a
+    vacuum. An as-of OLDER than a base's stamp
     would need history that was reclaimed -- that raises a clear
     error instead of silently returning a partial (or empty) state.
 
@@ -1757,9 +992,8 @@ def read_table_as_of(
         raise ValueError(
             f"as-of {as_of_ns} predates the retention point of table "
             f"{name!r} ({_batch_ns_prefix(beyond[0])} ns): history older "
-            "than the retained window was reclaimed by vacuum_table/"
-            "compact_table -- keep a longer retain window if older reads "
-            "are needed"
+            "than the retained window was reclaimed by vacuum_table -- "
+            "keep a longer retain window if older reads are needed"
         )
     return read_batch_dirs(spark, warehouse_dir, name, keep)
 
@@ -1769,8 +1003,6 @@ def _merge_batches(
     warehouse_dir: str,
     name: str,
     old: list[str],
-    cluster_by: list[str] | None = None,
-    cluster_partitions: int | None = None,
 ) -> int:
     """Merge the ``old`` batch dirs (a PREFIX of the log) into one
     vacuum-base batch stamped with the newest absorbed publish time --
@@ -1794,32 +1026,9 @@ def _merge_batches(
         if b.endswith(VACUUM_BASE_SUFFIX):
             absorbed.extend(_base_absorbed(os.path.join(table_dir, b)))
     try:
-        # the merge reads through the same rename/widen resolution as
-        # every reader and writes the base under the CURRENT schema --
-        # a vacuum spanning a migration materializes it
-        df = read_batch_dirs(spark, warehouse_dir, name, old)
-        if cluster_by:
-            missing = [c for c in cluster_by if c not in df.columns]
-            if missing:
-                raise ValueError(
-                    f"cluster_by columns not in {name!r} schema: {missing}"
-                )
-            # range-partition + sort so the base's files carry
-            # DISJOINT min/max footer stats on the cluster columns:
-            # any later range/point predicate on them skips whole
-            # files at the parquet-footer level (zone-map pruning --
-            # the OPTIMIZE-with-clustering half of a transactional
-            # table format, expressed as plain Spark). AQE may
-            # coalesce small adjacent ranges; adjacency preserves
-            # disjointness. cluster_partitions pins the file count
-            # when the caller wants to size files explicitly
-            # (defaults to AQE's advisory-size coalescing).
-            if cluster_partitions:
-                df = df.repartitionByRange(cluster_partitions, *cluster_by)
-            else:
-                df = df.repartitionByRange(*cluster_by)
-            df = df.sortWithinPartitions(*cluster_by)
-        df.write.mode("overwrite").parquet(staged)
+        read_batch_dirs(spark, warehouse_dir, name, old).write.mode(
+            "overwrite"
+        ).parquet(staged)
         with open(os.path.join(staged, ABSORBED_MANIFEST), "w") as fh:
             json.dump({"absorbed": sorted(set(absorbed))}, fh)
         _check_fence()  # abort a TTL-fenced vacuum before base publish
@@ -1875,8 +1084,6 @@ def vacuum_table(
     warehouse_dir: str,
     name: str,
     retain_last_n: int,
-    cluster_by: list[str] | None = None,
-    cluster_partitions: int | None = None,
 ) -> int:
     """VERDICT r5 #5: retention-windowed vacuum for the batch-log
     sinks. At 100 TB with hourly appends the log grows one directory
@@ -1892,16 +1099,6 @@ def vacuum_table(
       of silently fabricating a partial state;
     - the directory count is bounded at retain_last_n + 1.
 
-    ``cluster_by`` additionally lays the merged base out
-    range-partitioned and sorted on the given columns, so its files
-    carry disjoint parquet min/max stats there -- compaction doubles
-    as data clustering, and every later scan with a range/point
-    predicate on those columns skips non-matching files at the footer
-    (the dominant read pattern at 100 TB: time-ranged scans over the
-    merged bulk of history, which is exactly the data a vacuum owns).
-    Row content, as-of semantics, and the absorbed manifest are
-    unchanged -- clustering is pure physical layout.
-
     Single-writer: the whole list->merge->publish->delete sequence runs
     under :func:`writer_lock` -- a second concurrent vacuum raises
     ConcurrentWriterError instead of publishing an overlapping base
@@ -1912,12 +1109,13 @@ def vacuum_table(
         raise ValueError("retain_last_n must be >= 0")
     with writer_lock(warehouse_dir, name):
         # self-heal first: any on-disk batch dir the manifest does not
-        # name is an orphan -- a crashed append/vacuum/DML's invisible
-        # leftover. The orphan set is computed under the manifest lock
-        # (an in-flight append holds it across its naming rename ->
-        # commit, so a half-committed batch can never be judged an
-        # orphan); the deletion runs after release -- a batch committed
-        # later gets a fresh name and cannot collide with the set.
+        # name is an orphan -- a crashed append/overwrite/vacuum's
+        # invisible leftover. The orphan set is computed under the
+        # manifest lock (an in-flight append holds it across its naming
+        # rename -> commit, so a half-committed batch can never be
+        # judged an orphan); the deletion runs after release -- a batch
+        # committed later gets a fresh name and cannot collide with the
+        # set.
         table_dir = table_path(warehouse_dir, name)
         if _batches_manifest(table_dir) is not None:
             with _manifest_lock(table_dir, name):
@@ -1935,57 +1133,24 @@ def vacuum_table(
         old = batches[:-retain_last_n] if retain_last_n else batches
         if len(old) <= 1:
             return 0  # merging one batch would only rename it
-        return _merge_batches(
-            spark,
-            warehouse_dir,
-            name,
-            old,
-            cluster_by=cluster_by,
-            cluster_partitions=cluster_partitions,
-        )
+        return _merge_batches(spark, warehouse_dir, name, old)
 
 
 def warehouse_maintenance(
     spark: SparkSession,
     warehouse_dir: str,
     retain_last_n: int = 24,
-    cluster_by: dict[str, list[str]] | None = None,
 ) -> dict[str, int]:
     """One retention pass over every provisioned warehouse table,
-    schedulable with run_scheduled (T4). Default retention of 24 batches keeps a
-    day of hourly as-of versions addressable while bounding every
-    table at 25 live directories. ``cluster_by`` maps table name ->
-    clustering columns for that table's vacuum base (see
-    vacuum_table); tables not in the map compact unclustered.
-    Returns batches reclaimed per table (0 = already within
-    retention)."""
+    schedulable with run_scheduled (T4). Default retention of 24
+    batches keeps a day of hourly as-of versions addressable while
+    bounding every table at 25 live directories. Returns batches
+    reclaimed per table (0 = already within retention)."""
     return {
-        name: vacuum_table(
-            spark,
-            warehouse_dir,
-            name,
-            retain_last_n,
-            cluster_by=(cluster_by or {}).get(name),
-        )
+        name: vacuum_table(spark, warehouse_dir, name, retain_last_n)
         for name in WAREHOUSE_TABLES
         if os.path.isdir(table_path(warehouse_dir, name))
     }
-
-
-def compact_table(spark: SparkSession, warehouse_dir: str, name: str) -> int:
-    """Small-file compaction: rewrite the whole batch log as ONE
-    batch -- ``vacuum_table`` with an empty retention window. At
-    100 TB the small-files problem is the top operational cost of an
-    append table (every reader pays per-file open + footer parse +
-    task-schedule; metadata listings dominate) -- periodic compaction
-    amortizes it. Returns batches removed.
-
-    The compacted base is stamped with the newest absorbed publish
-    time (not the compaction time), so as-of reads at or after the
-    last append remain exact -- pre-r6 compaction stamped "now",
-    which made an as-of between the last append and the compaction
-    silently read EMPTY. Older as-of reads raise (retention)."""
-    return vacuum_table(spark, warehouse_dir, name, 0)
 
 
 PARTITIONS_MANIFEST = "_partitions.json"
@@ -2040,18 +1205,17 @@ def overwrite_partitions(
     no manifest is an unsupported older layout and is refused
     (_refuse_unmanifested), never overwritten around.
     """
-    df = _fuse_constraints(df, warehouse_dir, name, verb="overwrite")
+    df = _fuse_not_null(df, warehouse_dir, name, verb="overwrite")
     table_dir = table_path(warehouse_dir, name)
     os.makedirs(table_dir, exist_ok=True)
-    # a table with a live batch log is a batch-log table -- refusing
-    # here prevents a mistaken call from stamping the partition
-    # layout onto it and bricking its DML/erasure path (r10 review)
+    # a table with a live batch log is a batch-log table: its readers
+    # resolve _batches.json and would never see the partitions
     if list_batches(warehouse_dir, name):
         raise ValueError(
             f"overwrite_partitions targets batch-log table {name!r} "
             "(live batch dirs present): partitioned gold layout and "
-            "the batch log cannot share a table -- use append_rows/"
-            "delete_rows there, or a separate gold table here"
+            "the batch log cannot share a table -- use append_rows "
+            "there, or a separate gold table here"
         )
     committed = _partitions_manifest(table_dir)
     if committed is None:
@@ -2088,7 +1252,8 @@ def overwrite_partitions(
             os.makedirs(dst_parent, exist_ok=True)
             os.replace(root, os.path.join(dst_parent, vseg))
             new_pointers[rel.replace(os.sep, "/")] = vseg
-        # THE commit point: one rename publishes every touched
+        _pin_schema_if_undeclared(warehouse_dir, name, df.schema)
+        # THE commit point: one pointer swap publishes every touched
         # partition's new version together
         _check_fence()  # abort a TTL-fenced refresh before commit
         merged = {**committed, **new_pointers}
@@ -2096,31 +1261,6 @@ def overwrite_partitions(
             os.path.join(table_dir, PARTITIONS_MANIFEST),
             json.dumps({"partitions": merged}).encode(),
         )
-        # declare the layout in the schema manifest: one of the two
-        # signals _rewrite_matching_batches refuses row DML on.
-        # Stamped AFTER the _partitions.json commit (r11, ADVICE) -- a
-        # crash/fence between the two leaves a first-time conversion
-        # un-stamped but POINTER-COMMITTED, and the committed
-        # _partitions.json is itself an authoritative refusal signal
-        # (the `or` arm of the door check), so no protection window
-        # opens; the pre-r11 order could instead stamp the layout on
-        # a table whose conversion never committed, refusing DML on a
-        # table that is still batch-log shaped until a rerun healed
-        # it. Published through the fenced manifest door, not an
-        # inline copy (r10 review).
-        m = _manifest(warehouse_dir, name)
-        if m.get("layout") != "partition-overwrite":
-            m["layout"] = "partition-overwrite"
-            # a fresh manifest must be COMPLETE: every consumer of
-            # _schema.json (table_schema, _fuse_constraints' door
-            # check) expects a schema key
-            if "schema" not in m:
-                m["schema"] = (
-                    WAREHOUSE_TABLES[name].jsonValue()
-                    if name in WAREHOUSE_TABLES
-                    else df.schema.jsonValue()
-                )
-            _publish_manifest(warehouse_dir, name, m)
     finally:
         if os.path.exists(staged):
             shutil.rmtree(staged, ignore_errors=True)

@@ -1,7 +1,8 @@
 """Regenerate PLANS.md: the formatted physical plan of every
-registered query at sf0.001 — the artifact the per-round plan audits
-read. Committed as a script (r9) so the dump is reproducible instead
-of session-lore.
+registered query (sf0.001 unless --sf names another SF dir) — the
+artifact the per-round plan audits read. Committed as a script (r9)
+so the dump is reproducible instead of session-lore. A query whose
+plan fails is recorded in place, not fatal.
 
 Usage:  python scripts/dump_plans.py [--sf /root/testdata/sf0.001]
 """
@@ -12,31 +13,28 @@ import argparse
 import os
 import sys
 
-sys.path.insert(
-    0, os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-)
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf", default="/root/testdata/sf0.001")
-    ap.add_argument("--out", default="/root/repo/PLANS.md")
+    ap.add_argument("--out", default=os.path.join(REPO, "PLANS.md"))
     args = ap.parse_args()
 
+    from roborock_data_pipeline_spark.plans.inspect import plan_string
     from roborock_data_pipeline_spark.registry import all_queries
     from roborock_data_pipeline_spark.session import get_spark
 
     spark = get_spark("rdp-spark-plan-dump")
     spark.sparkContext.setLogLevel("ERROR")
-    lines = ["# Physical plans (sf0.001, local)", ""]
+    sf_name = os.path.basename(os.path.normpath(args.sf))
+    lines = [f"# Physical plans ({sf_name}, local)", ""]
     for name, spec in sorted(all_queries().items()):
         spark.catalog.clearCache()
         try:
-            plan = spec.fn(spark, args.sf)._jdf.queryExecution().explainString(
-                spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                    "formatted"
-                )
-            )
+            plan = plan_string(spec.fn(spark, args.sf))
         except Exception as exc:  # noqa: BLE001 - record, don't die
             plan = f"<plan unavailable: {exc}>"
         lines += [f"## {name}", "", "```", plan.rstrip(), "```", ""]

@@ -37,8 +37,6 @@ COLLECT_ALLOW = {
                                    # pq_fit's two k-means collects,
                                    # PQ probe+seed (k rows each)
     "sources/export.py": 1,      # shard manifest (one row per shard)
-    "sources/sinks.py": 2,       # audit scalar; delete/update affected-dir
-                                 # list (dir names + counts, never rows)
     "pipeline.py": 3,            # touched-date list, CLI status rows,
                                  # monitor fold (|devices| + sessions rows)
 }
@@ -131,7 +129,7 @@ REPLACE_ALLOW = {
     "sources/versioned_dir.py": 2,     # staged -> v-{gen} + the
                                        # trash-rename (both invisible
                                        # names, under _lock)
-    "sources/sinks.py": 5,             # append/overwrite/DML-rw/merge-base
+    "sources/sinks.py": 4,             # append/overwrite/merge-base
                                        # naming under _manifest_lock, and
                                        # overwrite_partitions' version-dir
                                        # naming (commit = _partitions.json)
@@ -196,21 +194,11 @@ ENTRY_POINT_ALLOW = {
     # readers of what mode_curate's export publishes
     "sources/export.py:read_export": "reader of the curate-mode export",
     "sources/export.py:read_manifest": "reader of the curate-mode export",
-    # warehouse table-format surface, left for the manifest-commit
-    # rework (ROADMAP D7) to convert or delete
-    "sources/sinks.py:add_table_constraint": "left for D7",
-    "sources/sinks.py:drop_table_constraint": "left for D7",
-    "sources/sinks.py:validate_table": "left for D7",
-    "sources/sinks.py:register_warehouse_views": "left for D7",
-    "sources/sinks.py:write_bucketed": "left for D7",
-    "sources/sinks.py:add_table_column": "schema evolution; left for D7",
-    "sources/sinks.py:widen_table_column": "schema evolution; left for D7",
-    "sources/sinks.py:rename_table_column": "schema evolution; left for D7",
-    "sources/sinks.py:delete_rows": "row-level DML; left for D7",
-    "sources/sinks.py:update_rows": "row-level DML; left for D7",
-    "sources/sinks.py:merge_rows": "row-level DML; left for D7",
-    "sources/sinks.py:read_table_as_of": "time-travel read; left for D7",
-    "sources/sinks.py:compact_table": "batch-log compaction; left for D7",
+    # the as-of oracle of the crash and vacuum tests: a vacuum base
+    # carries its newest absorbed stamp, the invariant the
+    # incremental refreshes' fold proof rests on
+    "sources/sinks.py:read_table_as_of":
+        "oracle for the vacuum-base stamp invariant the fold proof uses",
     # operator toolkit pieces with their own tests, not yet on a query
     "functions/skew.py:salted_count": "skew toolkit; next D8 candidate",
     "functions/skew.py:salted_join": "skew toolkit; next D8 candidate",

@@ -177,8 +177,8 @@ def test_time_travel_reads_batch_prefix(spark, warehouse):
 
 
 def test_compaction_preserves_rows_and_collapses_batches(spark, warehouse):
-    """compact_table folds N batch dirs into one with identical
-    content; appends keep working afterwards."""
+    """A vacuum with an empty retention window folds N batch dirs into
+    one with identical content; appends keep working afterwards."""
     sinks.setup_warehouse(spark, warehouse)
     for i in range(4):
         sinks.append_rows(
@@ -190,7 +190,7 @@ def test_compaction_preserves_rows_and_collapses_batches(spark, warehouse):
     }
     assert len(sinks.list_batches(warehouse, "cleaning_records")) == 4
 
-    removed = sinks.compact_table(spark, warehouse, "cleaning_records")
+    removed = sinks.vacuum_table(spark, warehouse, "cleaning_records", 0)
     assert removed == 4
     assert len(sinks.list_batches(warehouse, "cleaning_records")) == 1
     after = {
@@ -200,9 +200,9 @@ def test_compaction_preserves_rows_and_collapses_batches(spark, warehouse):
 
     sinks.append_rows(_records_df(spark, GOOD_ROWS[:1]), warehouse, "cleaning_records")
     assert sinks.read_table(spark, warehouse, "cleaning_records").count() == 5
-    assert sinks.compact_table(spark, warehouse, "cleaning_records") == 2
+    assert sinks.vacuum_table(spark, warehouse, "cleaning_records", 0) == 2
     # compacting an already-compacted (single-batch) table is a no-op
-    assert sinks.compact_table(spark, warehouse, "cleaning_records") == 0
+    assert sinks.vacuum_table(spark, warehouse, "cleaning_records", 0) == 0
     assert sinks.read_table(spark, warehouse, "cleaning_records").count() == 5
 
 
@@ -301,7 +301,7 @@ def test_compaction_keeps_asof_exact_at_boundary(spark, warehouse):
                       "cleaning_records")
     t_after_appends = time.time_ns()
 
-    assert sinks.compact_table(spark, warehouse, "cleaning_records") == 2
+    assert sinks.vacuum_table(spark, warehouse, "cleaning_records", 0) == 2
     assert sinks.read_table_as_of(
         spark, warehouse, "cleaning_records", t_after_appends
     ).count() == 2

@@ -4,11 +4,10 @@ The commit point for every batch-log mutation moves from a directory
 rename to ONE single-file swap of ``_batches.json`` (the object-store
 form: one atomic manifest PUT). These tests pin:
 
-- chaos at every new window (append / vacuum / DML, pre- and
-  post-commit crashes): readers always see a committed generation,
-  orphans are invisible and GC'd by the next vacuum;
-- the core flow (append → read → as-of → DML → vacuum) end to end;
-- fold identity across v2 DML rewrites (batch_fold_id);
+- chaos at every new window (append / snapshot overwrite / vacuum,
+  pre- and post-commit crashes): readers always see a committed
+  generation, orphans are invisible and GC'd by the next vacuum;
+- the core flow (append → read → as-of → vacuum) end to end;
 - manifest-lock fencing (a stolen lock's holder cannot publish).
 """
 
@@ -223,59 +222,23 @@ def test_vacuum_crash_after_commit_reads_stay_exact(
     assert _rows(spark, wh) == 4
 
 
-def test_dml_crash_before_commit_is_fully_rolled_back(
-    spark, wh, monkeypatch
-):
-    """Cross-batch atomic DML: a fault before the single manifest
-    commit leaves the table EXACTLY unchanged — even with several
-    affected batches already rewritten under versioned names."""
-    for i in range(3):
-        sinks.append_rows(_mk(spark, 7, n=2), wh, "cleaning_records")
-    before_live = sinks.list_batches(wh, "cleaning_records")
-    _bomb_manifest_commit(monkeypatch)
-    with pytest.raises(OSError, match="injected"):
-        sinks.delete_rows(
-            spark, wh, "cleaning_records", "duration_minutes = 7.0"
-        )
-    monkeypatch.undo()
-    assert sinks.list_batches(wh, "cleaning_records") == before_live
-    assert _rows(spark, wh) == 6
-    td = sinks.table_path(wh, "cleaning_records")
-    assert sorted(
-        d for d in os.listdir(td) if d.startswith("batch-")
-    ) == before_live  # versioned dirs cleaned up
-    # retry converges
-    res = sinks.delete_rows(
-        spark, wh, "cleaning_records", "duration_minutes = 7.0"
-    )
-    assert res["rows_deleted"] == 6
-    assert res["batches_rewritten"] == 3
-    assert _rows(spark, wh) == 0
+def test_select_unfolded_keys_on_fold_id():
+    """A batch's dirname is its fold id for life: a batch already in
+    the folded set is never re-selected, while a different batch
+    stamped inside the grace band (a late publish) still is."""
+    from roborock_data_pipeline_spark import pipeline
 
-
-def test_dml_rewrites_swap_in_one_commit(spark, wh):
-    """All affected batches change generation TOGETHER: exactly one
-    manifest generation separates pre- and post-DML states."""
-    for i in range(3):
-        sinks.append_rows(_mk(spark, 5, n=2), wh, "cleaning_records")
-    g0 = _manifest(wh)["generation"]
-    res = sinks.update_rows(
-        spark,
-        wh,
-        "cleaning_records",
-        "duration_minutes = 5.0",
-        {"task_status": "'scrubbed'"},
-    )
-    assert res["batches_rewritten"] == 3
-    m = _manifest(wh)
-    assert m["generation"] == g0 + 1
-    assert all(".rw" in b for b in m["live"])
-    got = (
-        sinks.read_table(spark, wh, "cleaning_records")
-        .where("task_status = 'scrubbed'")
-        .count()
-    )
-    assert got == 6
+    stamp = f"{10**18:020d}"
+    b = f"batch-{stamp}-abcdef01"
+    state = {"wm": stamp, "folded": [b]}
+    new, implicit = pipeline._select_unfolded([b], state)
+    assert new == [] and implicit == []  # not re-folded
+    late = f"batch-{10**18 - 1:020d}-12345678"
+    new, implicit = pipeline._select_unfolded([late, b], state)
+    assert new == [late] and implicit == []
+    state = pipeline._advance_fold_state(state, new, implicit)
+    assert state["wm"] == stamp and state["folded"] == sorted([b, late])
+    assert pipeline._select_unfolded([late, b], state) == ([], [])
 
 
 @pytest.mark.local_fs_only("manipulates the lock FILE/inode directly; the memory backend has version-id fencing covered in test_commit_provider")
@@ -320,8 +283,8 @@ def test_corrupt_manifest_refuses_listing_fallback(spark, wh):
 
 @pytest.mark.parametrize("layout", ["manifest"])
 def test_core_flow_identical_on_both_layouts(spark, tmp_path, layout):
-    """append → read → as-of → DML → vacuum on the manifest layout
-    (the one supported layout; older ones are refused by name —
+    """append → read → as-of → vacuum on the manifest layout (the
+    one supported layout; older ones are refused by name —
     tests/test_layout_contract.py)."""
     w = str(tmp_path / f"wh-{layout}")
     sinks.setup_warehouse(spark, w)
@@ -342,82 +305,17 @@ def test_core_flow_identical_on_both_layouts(spark, tmp_path, layout):
         ).count()
         == 3
     )
-    res = sinks.delete_rows(
-        spark, w, "cleaning_records", "duration_minutes = 3.0"
-    )
-    assert res["rows_deleted"] == 1
-    assert _rows(spark, w) == 4
     assert sinks.vacuum_table(
         spark, w, "cleaning_records", retain_last_n=2
     ) == 3
-    assert _rows(spark, w) == 4
+    assert _rows(spark, w) == 5
     # as-of inside retention still exact after the vacuum
     assert (
         sinks.read_table_as_of(
             spark, w, "cleaning_records", stamps[-1]
         ).count()
-        == 4
+        == 5
     )
-
-
-# --------------------------------------------------------------- #
-# fold identity across v2 rewrites                                 #
-# --------------------------------------------------------------- #
-
-
-def test_fold_id_survives_rw_versioning():
-    b = "batch-01234567890123456789-abcdef01"
-    v1 = sinks._bump_rw(b)
-    assert sinks.batch_fold_id(v1) == b
-    assert sinks._batch_ns_prefix(v1) == sinks._batch_ns_prefix(b)
-    v2 = sinks._bump_rw(v1)  # re-rewrite replaces, never stacks
-    assert sinks.batch_fold_id(v2) == b
-    assert v2.count(".rw") == 1
-    base = b + sinks.VACUUM_BASE_SUFFIX
-    vb = sinks._bump_rw(base)
-    assert vb.endswith(sinks.VACUUM_BASE_SUFFIX)
-    assert sinks.batch_fold_id(vb) == base
-
-
-def test_select_unfolded_keys_on_fold_id():
-    from roborock_data_pipeline_spark import pipeline
-
-    stamp = f"{10**18:020d}"
-    b = f"batch-{stamp}-abcdef01"
-    state = {"wm": stamp, "folded": [b], "legacy": False}
-    rewritten = sinks._bump_rw(b)
-    new, implicit = pipeline._select_unfolded([rewritten], state)
-    assert new == [] and implicit == []  # not re-folded after DML
-
-
-def test_incremental_refresh_not_double_counted_by_dml(
-    spark, wh, monkeypatch
-):
-    """End-to-end: fold a batch into the gold daily summary, DML-
-    rewrite that batch (versioned name), refresh again — the refresh
-    must not re-fold the rewritten batch."""
-    from roborock_data_pipeline_spark import pipeline
-
-    sinks.append_rows(_mk(spark, 1, n=4), wh, "cleaning_records")
-    pipeline.refresh_daily_summary(spark, wh)
-    gold0 = {
-        (r["date"], r["total_cleanings"])
-        for r in sinks.read_table(spark, wh, "daily_summary").collect()
-    }
-    res = sinks.update_rows(
-        spark,
-        wh,
-        "cleaning_records",
-        "duration_minutes = 1.0",
-        {"task_status": "'touched'"},
-    )
-    assert res["batches_rewritten"] == 1
-    pipeline.refresh_daily_summary(spark, wh)
-    gold1 = {
-        (r["date"], r["total_cleanings"])
-        for r in sinks.read_table(spark, wh, "daily_summary").collect()
-    }
-    assert gold1 == gold0
 
 
 _MANIFEST_SIGSTOP_CHILD = r"""
@@ -536,10 +434,8 @@ def test_snapshot_overwrite_crash_before_commit_keeps_old(
     sinks.overwrite_rows(df2, wh, "daily_summary")
     got = sinks.read_table(spark, wh, "daily_summary").collect()
     assert len(got) == 1 and got[0]["date"] == "2024-03-02"
-    # exactly one live batch; DML refuses the snapshot layout
+    # exactly one live batch
     assert len(sinks.list_batches(wh, "daily_summary")) == 1
-    with pytest.raises(ValueError, match="snapshot"):
-        sinks.delete_rows(spark, wh, "daily_summary", "1=1")
 
 
 # --------------------------------------------------------------- #
@@ -601,17 +497,21 @@ def test_overwrite_rows_v2_is_leased(spark, wh):
 
 
 def test_snapshot_stamp_lands_before_data_commit(spark, wh, monkeypatch):
-    """ADVICE r12 (low): `layout: snapshot` is stamped BEFORE the
-    manifest commit, so a crash between the two can no longer leave a
-    committed snapshot the row-DML refusal does not recognize."""
-    df = spark.createDataFrame(
-        [("2024-03-01", 1, 12.5, 30, 12.5, 30.0)],
-        sinks.WAREHOUSE_TABLES["daily_summary"],
-    )
+    """The first overwrite of a table no code declares stamps the
+    table's schema manifest BEFORE the data commit, so a crash between
+    the two leaves a declared, empty table (its reads resolve a schema)
+    and a retry converges."""
+    df = spark.createDataFrame([("doc-1", 3)], "doc_id string, n int")
+    with pytest.raises(KeyError):
+        sinks.table_schema(wh, "scratch_gold")
     _bomb_manifest_commit(monkeypatch)
     with pytest.raises(OSError, match="injected"):
-        sinks.overwrite_rows(df, wh, "daily_summary")
+        sinks.overwrite_rows(df, wh, "scratch_gold")
     monkeypatch.undo()
-    assert sinks._manifest(wh, "daily_summary").get("layout") == "snapshot"
-    with pytest.raises(ValueError, match="snapshot"):
-        sinks.delete_rows(spark, wh, "daily_summary", "1=1")
+    assert sinks.table_schema(wh, "scratch_gold").fieldNames() == [
+        "doc_id", "n"
+    ]
+    assert sinks.read_table(spark, wh, "scratch_gold").collect() == []
+    sinks.overwrite_rows(df, wh, "scratch_gold")
+    got = sinks.read_table(spark, wh, "scratch_gold").collect()
+    assert [(r["doc_id"], r["n"]) for r in got] == [("doc-1", 3)]

@@ -105,6 +105,28 @@ def test_noop_without_new_batches(spark, warehouse):
     assert _gold_rows(spark, warehouse) == rows
 
 
+def test_noop_refresh_reads_its_state_back_on_the_memory_backend(
+    spark, tmp_path, monkeypatch
+):
+    """The fold state commits through the commit seam, so it must read
+    back through it: on the in-memory object store, where a pointer is
+    not a file, a second refresh with nothing new folds nothing."""
+    from roborock_data_pipeline_spark.sources import commit_provider
+
+    monkeypatch.setattr(
+        commit_provider, "BACKEND",
+        commit_provider.InMemoryObjectStoreBackend(),
+    )
+    wh = str(tmp_path / "wh")
+    sinks.setup_warehouse(spark, wh)
+    _append(spark, wh, [_rec(1, 9)])
+    assert pipeline.refresh_daily_summary(spark, wh)["new_batches"] == 1
+    assert pipeline.refresh_daily_summary(spark, wh) == {
+        "new_batches": 0, "dates_refreshed": 0,
+    }
+    assert [r["total_cleanings"] for r in _gold_rows(spark, wh)] == [1]
+
+
 def test_crash_between_swap_and_watermark_converges(spark, warehouse):
     _append(spark, warehouse, [_rec(1, 9), _rec(2, 9)])
     pipeline.refresh_daily_summary(spark, warehouse)

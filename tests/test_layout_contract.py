@@ -7,13 +7,9 @@ layout is refused by name.
   declared schema on a freshly provisioned warehouse;
 - a table dir holding batch dirs or root part files but no manifest,
   a plain-stamp fold-state file, a pointer-less versioned root that
-  holds data, a rename-layout index, an epoch dir without its
-  manifest, and partition data outside a version segment each raise
+  holds data, and partition data outside a version segment each raise
   a ``ValueError`` that names the path — rows are never silently
-  hidden by a read set that skips them;
-- the fresh-resolving SQL views (sources/warehouse_ds) and
-  ``read_table`` share one read set, through appends, a crash orphan,
-  a vacuum, a DML rewrite and a snapshot overwrite.
+  hidden by a read set that skips them.
 """
 
 from __future__ import annotations
@@ -136,9 +132,13 @@ def test_plain_stamp_fold_state_refused(spark, warehouse):
         pipeline._lifetime_live(warehouse),  # noqa: SLF001
         pipeline.LIFETIME_WATERMARK,
     )
+    # planted through the seam the states are read through, so the
+    # refusal runs on every backend
+    from roborock_data_pipeline_spark.sources import commit_provider as cp
+
     for path in (daily_state, life_state):
-        with open(path, "w") as fh:
-            fh.write("00000000000000000042")
+        cp.BACKEND.swap_pointer(path, b"00000000000000000042")
+        cp.read_pointer(path)  # drain a possible modeled-stale read
     _refused(
         lambda: pipeline.refresh_daily_summary(spark, warehouse), daily_state
     )
@@ -168,43 +168,3 @@ def test_unversioned_partitions_refused(spark, tmp_path):
     td = sinks.table_path(wh, "daily")
     _refused(lambda: sinks.overwrite_partitions(df, wh, "daily", ["d"]), td)
     _refused(lambda: sinks.read_partitioned(spark, wh, "daily"), td)
-
-
-# --- one read set -----------------------------------------------------
-
-
-@pytest.mark.local_fs_only(
-    "the SQL views resolve the manifest in a Python worker process; the "
-    "in-memory backend's pointers live in the driver process only"
-)
-def test_views_and_read_table_share_one_read_set(spark, warehouse):
-    name = "cleaning_records"
-    sinks.register_warehouse_views(spark, warehouse)
-
-    def _same() -> set:
-        table = sinks.read_table(spark, warehouse, name)
-        native = {tuple(r) for r in table.collect()}
-        view = {tuple(r) for r in spark.sql(f"SELECT * FROM {name}").collect()}
-        assert view == native
-        return native
-
-    for day in range(1, 5):
-        _append(spark, warehouse, [_rec(day, area=float(day))])
-    assert len(_same()) == 4
-    # a crashed writer's orphan: on disk, never named by the manifest
-    td = sinks.table_path(warehouse, name)
-    live = sinks.list_batches(warehouse, name)
-    orphan = os.path.join(td, "batch-" + "9" * 20 + "-orphan0")
-    shutil.copytree(os.path.join(td, live[0]), orphan)
-    assert len(_same()) == 4
-    assert sinks.vacuum_table(spark, warehouse, name, retain_last_n=1) == 3
-    assert len(_same()) == 4
-    sinks.delete_rows(spark, warehouse, name, "area_sqm = 2.0")
-    assert len(_same()) == 3
-    sinks.overwrite_rows(
-        spark.createDataFrame([_rec(9, area=9.0)], schemas.CLEANING_RECORDS),
-        warehouse,
-        name,
-    )
-    rows = _same()
-    assert len(rows) == 1 and next(iter(rows))[4] == 9.0

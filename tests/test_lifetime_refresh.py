@@ -118,6 +118,31 @@ def test_snapshot_stores_unrounded_sums(spark, warehouse):
     assert got["a"] == 0.01  # round(0.008, 2), not round(0.0 + 0.0)
 
 
+def test_noop_records_proven_bases_on_the_memory_backend(
+    spark, tmp_path, monkeypatch
+):
+    """A noop refresh that proves an in-band vacuum base folded commits
+    that proof through the commit seam; the next read of the state
+    must see it on the in-memory object store too, not only the state
+    file its snapshot published with."""
+    from roborock_data_pipeline_spark.sources import commit_provider
+
+    monkeypatch.setattr(
+        commit_provider, "BACKEND",
+        commit_provider.InMemoryObjectStoreBackend(),
+    )
+    wh = str(tmp_path / "wh")
+    sinks.setup_warehouse(spark, wh)
+    _append(spark, wh, [_rec(1, "a", 10.0, 30.0)])
+    _append(spark, wh, [_rec(2, "b", 20.5, 45.0)])
+    assert pipeline.refresh_device_lifetime(spark, wh)["mode"] == "full"
+    assert sinks.vacuum_table(spark, wh, "cleaning_records", 0) == 2
+    (base,) = sinks.list_batches(wh, "cleaning_records")
+    assert pipeline.refresh_device_lifetime(spark, wh)["mode"] == "noop"
+    assert base in pipeline._read_lifetime_state(wh)["folded"]
+    assert _got(spark, wh) == _expected(spark, wh)
+
+
 def test_gold_maintenance_refreshes_then_vacuums(spark, warehouse):
     _append(spark, warehouse, [_rec(1, "a", 10.0, 30.0)])
     _append(spark, warehouse, [_rec(2, "b", 20.5, 45.0)])

@@ -6,8 +6,8 @@ generation-0 ``_batches.json`` and writes no part files), so a table
 dir that holds root part files but no manifest can only be an older
 layout. These tests pin that it is refused by name on every path that
 would otherwise commit a manifest over it and silently drop its root
-rows — append, vacuum, row DML — and that provisioned tables never
-trip the guard.
+rows — append, snapshot overwrite, vacuum — and that provisioned
+tables never trip the guard.
 """
 
 from __future__ import annotations
@@ -95,7 +95,6 @@ def test_vacuum_and_dml_refuse_on_mixed_legacy(spark, wh):
     before = sorted(os.listdir(td))
     for mutate in (
         lambda: sinks.vacuum_table(spark, wh, NAME, 0),
-        lambda: sinks.delete_rows(spark, wh, NAME, "device_name = 'd1'"),
         lambda: sinks.append_rows(_mk(spark, 9), wh, NAME),
         lambda: sinks.overwrite_rows(_mk(spark, 9), wh, NAME),
     ):

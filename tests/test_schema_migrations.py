@@ -1,26 +1,12 @@
-"""Schema migrations beyond additive (VERDICT r6 #3 / r7 missing #3):
-type WIDENING (int→long, float→double, byte/short chains) and column
-RENAME — both zero-data-rewrite manifest migrations.
-
-Widening rides Spark 4's parquet reader type promotion: batches keep
-their narrow physical type, every reader requests the wide one.
-Rename is pure metadata: the manifest maps the current name to every
-retired physical name and readers coalesce across them, so any mix of
-pre-/post-migration batches reads correctly without classifying
-batches by version.
-
-Pinned contract (the judge's four): pre-migration batches read
-correctly; time-travel across the migration point; appends enforced
-against the new schema (with safe auto-upcast at the door); vacuum
-spanning the migration.
-"""
+"""Type changes at the append door: a declared column's type is fixed,
+so an append that carries a lossy type for it is refused before any
+file is written."""
 
 from __future__ import annotations
 
 import datetime as dt
 import shutil
 import tempfile
-import time
 
 import pytest
 from pyspark.sql import types as T
@@ -37,69 +23,8 @@ def warehouse(spark):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def _rec(day, error_code=0, area=10.0):
-    ts = dt.datetime(2024, 3, day, 9)
-    return (ts, "dev", ts, 30.0, area, "s", "v", error_code, "ok")
-
-
-def _append(spark, warehouse, rows, schema=None):
-    df = spark.createDataFrame(rows, schema or schemas.CLEANING_RECORDS)
-    sinks.append_rows(df, warehouse, "cleaning_records")
-
-
-# ------------------------------------------------------------- widening
-
-
-def test_widen_reads_old_batches_and_enforces_new(spark, warehouse):
-    _append(spark, warehouse, [_rec(1, error_code=7)])
-    t_pre = time.time_ns()
-    sinks.widen_table_column(
-        warehouse, "cleaning_records", "error_code", T.LongType()
-    )
-    # post-migration append under the WIDE type
-    wide = T.StructType(
-        [
-            T.StructField(f.name, T.LongType(), f.nullable)
-            if f.name == "error_code"
-            else f
-            for f in schemas.CLEANING_RECORDS.fields
-        ]
-    )
-    _append(spark, warehouse, [_rec(2, error_code=2**40)], wide)
-
-    got = sinks.read_table(spark, warehouse, "cleaning_records")
-    assert dict(got.dtypes)["error_code"] == "bigint"
-    vals = sorted(r["error_code"] for r in got.collect())
-    assert vals == [7, 2**40]
-    # time travel ACROSS the migration point: pre-migration prefix,
-    # current (wide) schema, exact values
-    asof = sinks.read_table_as_of(spark, warehouse, "cleaning_records", t_pre)
-    assert dict(asof.dtypes)["error_code"] == "bigint"
-    assert [r["error_code"] for r in asof.collect()] == [7]
-
-
-def test_widen_autocasts_narrow_appends_at_the_door(spark, warehouse):
-    """A pre-widening writer (still sending int) keeps working: the
-    door applies the safe implicit insert cast instead of refusing."""
-    sinks.widen_table_column(
-        warehouse, "cleaning_records", "error_code", T.LongType()
-    )
-    _append(spark, warehouse, [_rec(1, error_code=3)])  # int-typed writer
-    got = sinks.read_table(spark, warehouse, "cleaning_records")
-    assert dict(got.dtypes)["error_code"] == "bigint"
-    assert [r["error_code"] for r in got.collect()] == [3]
-
-
 def test_lossy_type_changes_still_refused(spark, warehouse):
-    with pytest.raises(ValueError, match="not a safe widening"):
-        sinks.widen_table_column(
-            warehouse, "cleaning_records", "error_code", T.StringType()
-        )
-    with pytest.raises(ValueError, match="not a safe widening"):
-        sinks.widen_table_column(
-            warehouse, "cleaning_records", "duration_minutes", T.FloatType()
-        )
-    # lossy drift on append refused too (string into double)
+    # lossy drift on append refused (string into double)
     drifted = T.StructType(
         [
             T.StructField(f.name, T.StringType(), True)
@@ -114,121 +39,4 @@ def test_lossy_type_changes_still_refused(spark, warehouse):
     )
     with pytest.raises(ValueError, match="type-drifted"):
         sinks.append_rows(df, warehouse, "cleaning_records")
-
-
-def test_vacuum_spans_widening(spark, warehouse):
-    _append(spark, warehouse, [_rec(1, error_code=1)])
-    _append(spark, warehouse, [_rec(2, error_code=2)])
-    sinks.widen_table_column(
-        warehouse, "cleaning_records", "error_code", T.LongType()
-    )
-    wide = T.StructType(
-        [
-            T.StructField(f.name, T.LongType(), f.nullable)
-            if f.name == "error_code"
-            else f
-            for f in schemas.CLEANING_RECORDS.fields
-        ]
-    )
-    _append(spark, warehouse, [_rec(3, error_code=2**35)], wide)
-    assert sinks.compact_table(spark, warehouse, "cleaning_records") == 3
-    got = sinks.read_table(spark, warehouse, "cleaning_records")
-    assert dict(got.dtypes)["error_code"] == "bigint"
-    assert sorted(r["error_code"] for r in got.collect()) == [1, 2, 2**35]
-
-
-# --------------------------------------------------------------- rename
-
-
-def _renamed_schema(new="area_m2"):
-    return T.StructType(
-        [
-            T.StructField(new, f.dataType, f.nullable)
-            if f.name == "area_sqm"
-            else f
-            for f in schemas.CLEANING_RECORDS.fields
-        ]
-    )
-
-
-def test_rename_reads_mixed_history(spark, warehouse):
-    _append(spark, warehouse, [_rec(1, area=11.0)])  # physical: area_sqm
-    t_pre = time.time_ns()
-    sinks.rename_table_column(warehouse, "cleaning_records", "area_sqm", "area_m2")
-    _append(
-        spark, warehouse, [_rec(2, area=22.0)], _renamed_schema()
-    )  # physical: area_m2
-
-    got = sinks.read_table(spark, warehouse, "cleaning_records")
-    assert "area_m2" in got.columns and "area_sqm" not in got.columns
-    assert sorted(r["area_m2"] for r in got.collect()) == [11.0, 22.0]
-    # time travel across the rename point
-    asof = sinks.read_table_as_of(spark, warehouse, "cleaning_records", t_pre)
-    assert [r["area_m2"] for r in asof.collect()] == [11.0]
-    # appends enforced against the NEW schema: the retired name is
-    # undeclared at the door
-    with pytest.raises(ValueError, match="undeclared"):
-        _append(spark, warehouse, [_rec(3)])
-
-
-def test_rename_then_rename_again_chains(spark, warehouse):
-    _append(spark, warehouse, [_rec(1, area=1.0)])
-    sinks.rename_table_column(warehouse, "cleaning_records", "area_sqm", "area_m2")
-    _append(spark, warehouse, [_rec(2, area=2.0)], _renamed_schema("area_m2"))
-    sinks.rename_table_column(warehouse, "cleaning_records", "area_m2", "area")
-    _append(spark, warehouse, [_rec(3, area=3.0)], _renamed_schema("area"))
-    got = sinks.read_table(spark, warehouse, "cleaning_records")
-    assert sorted(r["area"] for r in got.collect()) == [1.0, 2.0, 3.0]
-
-
-def test_retired_name_cannot_be_recycled(spark, warehouse):
-    sinks.rename_table_column(warehouse, "cleaning_records", "area_sqm", "area_m2")
-    with pytest.raises(ValueError, match="retired"):
-        sinks.add_table_column(
-            warehouse,
-            "cleaning_records",
-            T.StructField("area_sqm", T.DoubleType(), True),
-        )
-    with pytest.raises(ValueError, match="already declared or retired"):
-        sinks.rename_table_column(
-            warehouse, "cleaning_records", "duration_minutes", "area_sqm"
-        )
-
-
-def test_rename_refused_while_check_references_column(spark, warehouse):
-    sinks.add_table_constraint(
-        warehouse, "cleaning_records", "area_nonneg", "area_sqm >= 0"
-    )
-    with pytest.raises(ValueError, match="area_nonneg"):
-        sinks.rename_table_column(
-            warehouse, "cleaning_records", "area_sqm", "area_m2"
-        )
-    sinks.drop_table_constraint(warehouse, "cleaning_records", "area_nonneg")
-    sinks.rename_table_column(warehouse, "cleaning_records", "area_sqm", "area_m2")
-
-
-def test_vacuum_spans_rename_and_materializes_new_name(spark, warehouse):
-    _append(spark, warehouse, [_rec(1, area=1.5)])
-    sinks.rename_table_column(warehouse, "cleaning_records", "area_sqm", "area_m2")
-    _append(spark, warehouse, [_rec(2, area=2.5)], _renamed_schema())
-    assert sinks.compact_table(spark, warehouse, "cleaning_records") == 2
-    got = sinks.read_table(spark, warehouse, "cleaning_records")
-    assert sorted(r["area_m2"] for r in got.collect()) == [1.5, 2.5]
-    # the base was written under the CURRENT schema: one more rename
-    # on top still resolves (the base physically carries area_m2)
-    sinks.rename_table_column(warehouse, "cleaning_records", "area_m2", "area")
-    got = sinks.read_table(spark, warehouse, "cleaning_records")
-    assert sorted(r["area"] for r in got.collect()) == [1.5, 2.5]
-
-
-def test_widen_and_rename_compose(spark, warehouse):
-    _append(spark, warehouse, [_rec(1, error_code=5)])
-    sinks.widen_table_column(
-        warehouse, "cleaning_records", "error_code", T.LongType()
-    )
-    sinks.rename_table_column(
-        warehouse, "cleaning_records", "error_code", "err"
-    )
-    got = sinks.read_table(spark, warehouse, "cleaning_records")
-    assert dict(got.dtypes)["err"] == "bigint"
-    assert [r["err"] for r in got.collect()] == [5]
+    assert sinks.list_batches(warehouse, "cleaning_records") == []

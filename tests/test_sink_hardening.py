@@ -13,8 +13,10 @@
 - a vacuum crash between base publish and absorbed-dir cleanup
   double-counts nothing (the base's `_absorbed.json` makes leftovers
   non-live) and the next vacuum self-heals;
-- NOT NULL / CHECK enforcement covers the overwrite publish paths
-  (gold rebuild/refresh), not just appends;
+- NOT NULL enforcement holds on the gold rebuild and on the first
+  partition overwrite of a table that has no schema manifest (the
+  append door's checks, NOT NULL included, are pinned in
+  test_schema_evolution.py);
 - the dynamic partition overwrite commits every touched partition
   through ONE manifest rename — readers see all-old or all-new,
   never mixed.
@@ -284,74 +286,50 @@ def test_incremental_refresh_ignores_vacuum_leftovers(spark, warehouse):
     ]
 
 
-# -------------------------------------------- overwrite-path constraints
+# ------------------------------------------------ publish-door checks
 
 
-def test_overwrite_rows_enforces_check_constraint(spark, warehouse):
-    """VERDICT r7 #4: the gold rebuild path must die pre-publish on a
-    declared CHECK violation, leaving the table unchanged."""
-    sinks.add_table_constraint(
-        warehouse, "daily_summary", "nonneg_count", "total_cleanings >= 0"
+def _all_nullable(schema):
+    from pyspark.sql import types as T
+
+    return T.StructType(
+        [T.StructField(f.name, f.dataType, True) for f in schema.fields]
     )
-    good = spark.createDataFrame(
-        [("2024-03-01", 2, 20.0, 60, 10.0, 30.0)],
-        sinks.WAREHOUSE_TABLES["daily_summary"],
-    )
-    sinks.overwrite_rows(good, warehouse, "daily_summary")
-    bad = spark.createDataFrame(
-        [("2024-03-02", -5, 20.0, 60, 10.0, 30.0)],
-        sinks.WAREHOUSE_TABLES["daily_summary"],
-    )
-    with pytest.raises(Exception, match="nonneg_count"):
-        sinks.overwrite_rows(bad, warehouse, "daily_summary")
-    rows = sinks.read_table(spark, warehouse, "daily_summary").collect()
-    assert [(r["date"], r["total_cleanings"]) for r in rows] == [
-        ("2024-03-01", 2)
-    ]
 
 
 def test_overwrite_rows_enforces_not_null(spark, warehouse):
-    from pyspark.sql import types as T
-
-    nullable = T.StructType(
-        [
-            T.StructField(f.name, f.dataType, True)
-            for f in sinks.WAREHOUSE_TABLES["daily_summary"].fields
-        ]
+    bad = spark.createDataFrame(
+        [(None, 1, 1.0, 1, 1.0, 1.0)],
+        _all_nullable(sinks.WAREHOUSE_TABLES["daily_summary"]),
     )
-    bad = spark.createDataFrame([(None, 1, 1.0, 1, 1.0, 1.0)], nullable)
     with pytest.raises(Exception, match="non-nullable"):
         sinks.overwrite_rows(bad, warehouse, "daily_summary")
 
 
-def test_overwrite_partitions_enforces_check_constraint(spark, warehouse):
-    sinks.add_table_constraint(
-        warehouse, "daily_summary", "nonneg_count", "total_cleanings >= 0"
+def test_first_overwrite_partitions_enforces_not_null(spark, warehouse):
+    """The partitioned gold table has no schema manifest before (or
+    after) its first overwrite; NOT NULL still holds there, from the
+    code-pinned declaration, and the failed publish commits nothing."""
+    name = pipeline.GOLD_PART_TABLE
+    assert sinks.table_schema(warehouse, name) == (
+        sinks.PARTITIONED_TABLES[name]
     )
+    bad = spark.createDataFrame(
+        [("2024-03-01", None, 20.0, 60, 10.0, 30.0)],
+        _all_nullable(sinks.PARTITIONED_TABLES[name]),
+    )
+    with pytest.raises(Exception, match="non-nullable column 'total_cleanings'"):
+        sinks.overwrite_partitions(bad, warehouse, name, ["date"])
+    assert sinks.read_partitioned(spark, warehouse, name).collect() == []
     good = spark.createDataFrame(
         [("2024-03-01", 2, 20.0, 60, 10.0, 30.0)],
-        sinks.WAREHOUSE_TABLES["daily_summary"],
+        sinks.PARTITIONED_TABLES[name],
     )
-    sinks.overwrite_partitions(good, warehouse, "daily_summary", ["date"])
-    before = {
-        (r["date"], r["total_cleanings"])
-        for r in sinks.read_partitioned(spark, warehouse, "daily_summary")
-        .withColumn("date", sinks.F.col("date").cast("string"))
-        .collect()
-    }
-    bad = spark.createDataFrame(
-        [("2024-03-01", -1, 20.0, 60, 10.0, 30.0)],
-        sinks.WAREHOUSE_TABLES["daily_summary"],
-    )
-    with pytest.raises(Exception, match="nonneg_count"):
-        sinks.overwrite_partitions(bad, warehouse, "daily_summary", ["date"])
-    after = {
-        (r["date"], r["total_cleanings"])
-        for r in sinks.read_partitioned(spark, warehouse, "daily_summary")
-        .withColumn("date", sinks.F.col("date").cast("string"))
-        .collect()
-    }
-    assert after == before  # commit never happened
+    sinks.overwrite_partitions(good, warehouse, name, ["date"])
+    assert [
+        r["total_cleanings"]
+        for r in sinks.read_partitioned(spark, warehouse, name).collect()
+    ] == [2]
 
 
 # ------------------------------------- cross-partition atomic overwrite

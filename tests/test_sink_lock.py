@@ -291,13 +291,12 @@ def test_fenced_lease_blocks_in_flight_publish(spark, warehouse):
         assert lease.is_fenced() is True
         with pytest.raises(sinks.FencedWriterError, match="TTL-fenced"):
             sinks._check_fence()
-        # a real mutation aborts BEFORE its swap: both batches stay
-        # exactly as published
+        # a real mutation (the vacuum merge this lease guards) aborts
+        # BEFORE its publish: both batches stay exactly as published
         before = sorted(sinks.list_batches(warehouse, "cleaning_records"))
         with pytest.raises(sinks.FencedWriterError):
-            sinks._rewrite_matching_batches(
-                spark, warehouse, "cleaning_records",
-                lambda df: df, lambda df: df.limit(0), "delete",
+            sinks._merge_batches(
+                spark, warehouse, "cleaning_records", before
             )
         assert sorted(
             sinks.list_batches(warehouse, "cleaning_records")

@@ -11,9 +11,8 @@ subprocess Spark drivers against a shared warehouse for ~20 s:
   contention outcome, never a failure.
 
 Final state must converge: every appended row readable exactly once
-(vacuum absorbs, never drops), ``validate_table`` clean against a
-CHECK constraint declared up front, the as-of read at "now" equal to
-the current read, and one last gold refresh agreeing with per-device
+(vacuum absorbs, never drops), the as-of read at "now" equal to the
+current read, and one last gold refresh agreeing with per-device
 ground truth.
 
 local-FS only: the in-memory object-store backend is in-process by
@@ -113,10 +112,6 @@ def test_two_process_append_maintain_soak(spark, tmp_path):
 
     w = str(tmp_path / "wh")
     sinks.setup_warehouse(spark, w)
-    sinks.add_table_constraint(
-        w, "cleaning_records", "soak_area_nonneg",
-        "area_sqm IS NULL OR area_sqm >= 0",
-    )
     dur = 20
     env = {**os.environ, "PYTHONPATH": ""}
     procs = [
@@ -149,9 +144,6 @@ def test_two_process_append_maintain_soak(spark, tmp_path):
     # every appended row survives, exactly once (vacuum absorbs)
     cur = sinks.read_table(spark, w, "cleaning_records")
     assert cur.count() == n_appended
-    # history validation clean against the declared constraint
-    report = sinks.validate_table(spark, w, "cleaning_records")
-    assert report and all(v == 0 for v in report.values()), report
     # as-of "now" == current read (publish stamps are monotone)
     asof = sinks.read_table_as_of(
         spark, w, "cleaning_records", time.time_ns()

@@ -1,16 +1,13 @@
-"""Model-based testing of the warehouse DML + MIGRATION state machine.
+"""Model-based testing of the warehouse batch-log state machine.
 
-Hypothesis drives random op sequences — append, delete, update,
-merge, vacuum, clustered vacuum, and (r9, VERDICT r8 missing-#3) the
-schema-migration alphabet: type widening, chained column renames,
-additive columns, CHECK constraints — against a real warehouse AND a
-plain-Python model of the table contents + logical schema; after
+Hypothesis drives random op sequences — append, vacuum with a random
+retention window, and a default warehouse_maintenance pass — against a
+real warehouse AND a plain-Python model of the table contents; after
 every op the two must agree exactly. Single-op semantics are pinned
 by their own suites; what THIS test hunts is interaction bugs
-(delete after vacuum rewrites a base; merge through a rename chain;
-an update rewriting batches published under a narrower type; vacuum
-absorbing mixed-schema batches; ...) that no hand-written pairing
-covers exhaustively.
+(appends landing between vacuums, a vacuum absorbing an earlier base,
+a maintenance pass over a freshly merged log) that no hand-written
+pairing covers exhaustively.
 
 Kept deliberately small (few examples, short sequences) — each op is
 a real Spark job; the value is the randomized INTERLEAVING, not bulk.
@@ -22,11 +19,9 @@ import datetime as dt
 import shutil
 import tempfile
 
-import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
-from pyspark.sql import functions as F  # noqa: F401 (parity with suite style)
-from pyspark.sql import types as T
 
+from roborock_data_pipeline_spark import schemas
 from roborock_data_pipeline_spark.sources import sinks
 
 DEVICES = ["robo-a", "robo-b", "robo-c"]
@@ -41,8 +36,8 @@ def _key(r):
     return (r[1], r[0].day, r[4], r[8])
 
 
-_ops = st.one_of(
-    st.tuples(
+def _append_op(max_rows):
+    return st.tuples(
         st.just("append"),
         st.lists(
             st.tuples(
@@ -51,43 +46,32 @@ _ops = st.one_of(
                 st.integers(1, 50),
             ),
             min_size=1,
-            max_size=3,
+            max_size=max_rows,
         ),
-    ),
-    st.tuples(st.just("delete"), st.sampled_from(DEVICES)),
-    st.tuples(
-        st.just("update"), st.sampled_from(DEVICES), st.integers(51, 99)
-    ),
-    st.tuples(
-        st.just("merge"),
-        st.lists(
-            st.tuples(st.sampled_from(DEVICES), st.integers(1, 9)),
-            min_size=1,
-            max_size=2,
-            unique_by=lambda t: t[0],
-        ),
-    ),
-    st.tuples(st.just("vacuum"), st.integers(0, 2), st.booleans()),
+    )
+
+
+_ops = st.one_of(
+    _append_op(3),
+    st.tuples(st.just("vacuum"), st.integers(0, 2)),
     # a default warehouse_maintenance pass (vacuum every table),
     # interleaved with everything else
     st.tuples(st.just("maintenance")),
-    # migration alphabet (r9): each mutates the logical schema the
-    # DML ops then have to live with
-    st.tuples(st.just("widen")),
-    st.tuples(st.just("rename")),
-    st.tuples(st.just("add_column")),
-    st.tuples(st.just("add_constraint")),
 )
 
 
-def _df_current_schema(spark, wh, rows9):
-    """Build an append/merge source under the CURRENT logical schema:
-    the base 9-tuple padded with nulls for every evolved column
-    (renames and widenings keep field positions, adds append)."""
-    schema = sinks.table_schema(wh, "cleaning_records")
-    extras = len(schema.fields) - 9
-    return spark.createDataFrame(
-        [tuple(r) + (None,) * extras for r in rows9], schema
+def _append(spark, wh, rows):
+    sinks.append_rows(
+        spark.createDataFrame(rows, schemas.CLEANING_RECORDS),
+        wh,
+        "cleaning_records",
+    )
+
+
+def _read_keys(spark, wh):
+    return sorted(
+        _key(tuple(r))
+        for r in sinks.read_table(spark, wh, "cleaning_records").collect()
     )
 
 
@@ -100,109 +84,19 @@ def _df_current_schema(spark, wh, rows9):
 def test_random_dml_interleavings_match_model(spark, ops):
     wh = tempfile.mkdtemp()
     sinks.setup_warehouse(spark, wh)
-    model: list[tuple] = []  # mirrors cleaning_records rows (base 9 cols)
-    widened = False
-    rename_n = 0  # clean_mode -> mode_v1 -> mode_v2 -> ...
-    add_n = 0
-    cons_n = 0
+    model: list[tuple] = []  # mirrors cleaning_records rows
     try:
         for op in ops:
             if op[0] == "append":
                 rows = [_row(d, day, area, "ok") for d, day, area in op[1]]
-                sinks.append_rows(
-                    _df_current_schema(spark, wh, rows),
-                    wh,
-                    "cleaning_records",
-                )
+                _append(spark, wh, rows)
                 model.extend(rows)
-            elif op[0] == "delete":
-                sinks.delete_rows(
-                    spark, wh, "cleaning_records",
-                    f"device_name = '{op[1]}'",
-                )
-                model = [r for r in model if r[1] != op[1]]
-            elif op[0] == "update":
-                device, area = op[1], op[2]
-                sinks.update_rows(
-                    spark, wh, "cleaning_records",
-                    f"device_name = '{device}'",
-                    {"area_sqm": str(float(area))},
-                )
-                model = [
-                    r if r[1] != device
-                    else r[:4] + (float(area),) + r[5:]
-                    for r in model
-                ]
-            elif op[0] == "merge":
-                src_rows = [
-                    _row(d, day, 77, "merged") for d, day in op[1]
-                ]
-                sinks.merge_rows(
-                    spark, wh, "cleaning_records",
-                    _df_current_schema(spark, wh, src_rows),
-                    on=["device_name"],
-                )
-                by_dev = {r[1]: r for r in src_rows}
-                merged = []
-                for r in model:
-                    s = by_dev.get(r[1])
-                    # matched target rows take the source's non-key cols
-                    merged.append(s if s is not None else r)
-                matched = {r[1] for r in model}
-                merged.extend(
-                    s for d, s in by_dev.items() if d not in matched
-                )
-                model = merged
             elif op[0] == "vacuum":
-                sinks.vacuum_table(
-                    spark, wh, "cleaning_records", op[1],
-                    cluster_by=["start_time"] if op[2] else None,
-                )
+                sinks.vacuum_table(spark, wh, "cleaning_records", op[1])
             elif op[0] == "maintenance":
                 sinks.warehouse_maintenance(spark, wh, retain_last_n=2)
-            elif op[0] == "widen":
-                if widened:
-                    # second widen of the same column must refuse
-                    # (bigint has no safe further widening here)
-                    with pytest.raises(ValueError, match="widen"):
-                        sinks.widen_table_column(
-                            wh, "cleaning_records", "error_code",
-                            T.LongType(),
-                        )
-                else:
-                    sinks.widen_table_column(
-                        wh, "cleaning_records", "error_code", T.LongType()
-                    )
-                    widened = True
-            elif op[0] == "rename":
-                cur = "clean_mode" if rename_n == 0 else f"mode_v{rename_n}"
-                rename_n += 1
-                sinks.rename_table_column(
-                    wh, "cleaning_records", cur, f"mode_v{rename_n}"
-                )
-            elif op[0] == "add_column":
-                add_n += 1
-                sinks.add_table_column(
-                    wh, "cleaning_records",
-                    T.StructField(f"extra_{add_n}", T.IntegerType(), True),
-                )
-            elif op[0] == "add_constraint":
-                cons_n += 1
-                sinks.add_table_constraint(
-                    wh, "cleaning_records", f"cons_{cons_n}",
-                    "area_sqm IS NULL OR area_sqm >= 0",
-                )
-            collected = [
-                tuple(r)
-                for r in sinks.read_table(
-                    spark, wh, "cleaning_records"
-                ).collect()
-            ]
-            got = sorted(_key(r) for r in collected)
-            assert got == sorted(_key(r) for r in model), (op, ops)
-            # evolved columns read as null through every rewrite path
-            assert all(
-                v is None for r in collected for v in r[9:]
+            assert _read_keys(spark, wh) == sorted(
+                _key(r) for r in model
             ), (op, ops)
     finally:
         shutil.rmtree(wh, ignore_errors=True)
@@ -217,24 +111,8 @@ def test_random_dml_interleavings_match_model(spark, ops):
 # ------------------------------------------------------------------ #
 
 _fault_ops = st.one_of(
-    st.tuples(
-        st.just("append"),
-        st.lists(
-            st.tuples(
-                st.sampled_from(DEVICES),
-                st.integers(1, 9),
-                st.integers(1, 50),
-            ),
-            min_size=1,
-            max_size=2,
-        ),
-    ),
-    st.tuples(st.just("delete"), st.sampled_from(DEVICES)),
-    st.tuples(
-        st.just("update"), st.sampled_from(DEVICES), st.integers(51, 99)
-    ),
+    _append_op(2),
     st.tuples(st.just("vacuum"), st.integers(0, 2)),
-    st.tuples(st.just("add_constraint")),
 )
 
 
@@ -248,62 +126,29 @@ def _drive_fault_schedule(spark, wh, ops):
     from roborock_data_pipeline_spark.sources import commit_provider as cp
 
     model: list[tuple] = []
-    cons_n = 0
     n_lost = 0
     for op in ops:
         try:
             if op[0] == "append":
                 rows = [_row(d, day, a, "ok") for d, day, a in op[1]]
-                sinks.append_rows(
-                    _df_current_schema(spark, wh, rows),
-                    wh, "cleaning_records",
-                )
+                _append(spark, wh, rows)
                 model.extend(rows)
-            elif op[0] == "delete":
-                sinks.delete_rows(
-                    spark, wh, "cleaning_records",
-                    f"device_name = '{op[1]}'",
-                )
-                model = [r for r in model if r[1] != op[1]]
-            elif op[0] == "update":
-                sinks.update_rows(
-                    spark, wh, "cleaning_records",
-                    f"device_name = '{op[1]}'",
-                    {"area_sqm": str(float(op[2]))},
-                )
-                model = [
-                    r if r[1] != op[1]
-                    else r[:4] + (float(op[2]),) + r[5:]
-                    for r in model
-                ]
             elif op[0] == "vacuum":
                 sinks.vacuum_table(spark, wh, "cleaning_records", op[1])
-            elif op[0] == "add_constraint":
-                cons_n += 1
-                sinks.add_table_constraint(
-                    wh, "cleaning_records", f"c_{cons_n}",
-                    "area_sqm IS NULL OR area_sqm >= 0",
-                )
         except cp.CommitLostError:
             # the mutation failed WHOLE: resync the model to the
             # last committed state; everything after must proceed
             # from it (locks released, manifests readable)
             n_lost += 1
             model = [
-                tuple(r)[:9]
+                tuple(r)
                 for r in sinks.read_table(
                     spark, wh, "cleaning_records"
                 ).collect()
             ]
-            if op[0] == "add_constraint":
-                cons_n -= 1
-        got = sorted(
-            _key(tuple(r))
-            for r in sinks.read_table(
-                spark, wh, "cleaning_records"
-            ).collect()
-        )
-        assert got == sorted(_key(r) for r in model), (op, ops)
+        assert _read_keys(spark, wh) == sorted(
+            _key(r) for r in model
+        ), (op, ops)
     return model, n_lost
 
 
@@ -337,18 +182,12 @@ def test_model_against_fault_injecting_backend(spark, ops, lose_at):
         # store recovered)
         cp.BACKEND = cp.LocalFSBackend()
         rows = [_row("robo-a", 1, 7, "ok")]
-        sinks.append_rows(
-            _df_current_schema(spark, wh, rows), wh, "cleaning_records"
-        )
+        _append(spark, wh, rows)
         model.extend(rows)
         sinks.vacuum_table(spark, wh, "cleaning_records", 0)
-        got = sorted(
-            _key(tuple(r))
-            for r in sinks.read_table(
-                spark, wh, "cleaning_records"
-            ).collect()
-        )
-        assert got == sorted(_key(r) for r in model), (ops, lose_at, n_lost)
+        assert _read_keys(spark, wh) == sorted(
+            _key(r) for r in model
+        ), (ops, lose_at, n_lost)
     finally:
         cp.BACKEND = backend_before
         shutil.rmtree(wh, ignore_errors=True)
@@ -389,18 +228,12 @@ def test_model_against_memory_backend_with_lost_puts(spark, ops, lose_at):
         # one would be an empty bucket), faults stopped
         b.clear_faults()
         rows = [_row("robo-a", 1, 7, "ok")]
-        sinks.append_rows(
-            _df_current_schema(spark, wh, rows), wh, "cleaning_records"
-        )
+        _append(spark, wh, rows)
         model.extend(rows)
         sinks.vacuum_table(spark, wh, "cleaning_records", 0)
-        got = sorted(
-            _key(tuple(r))
-            for r in sinks.read_table(
-                spark, wh, "cleaning_records"
-            ).collect()
-        )
-        assert got == sorted(_key(r) for r in model), (ops, lose_at, n_lost)
+        assert _read_keys(spark, wh) == sorted(
+            _key(r) for r in model
+        ), (ops, lose_at, n_lost)
     finally:
         cp.BACKEND = backend_before
         shutil.rmtree(wh, ignore_errors=True)
