@@ -10,10 +10,15 @@ deriving state from what the sink actually holds).
   mode status        read-only formatted snapshot per device
                          (quick_status, pipeline.py:393-438)
   mode log           S1  one-shot: append current device status
-  mode smart         sec 3.1 counter-dedup'd incremental sync
+  mode smart         sec 3.1 counter-dedup'd incremental sync: each
+                         call folds the status files landed since the
+                         last one against per-device marks committed
+                         in clean_summary's batch manifest
   mode schedule      T4  smart sync on a 12 h cadence
                          (schedule_sync, pipeline.py:575-594)
-  mode record_sync   sec 3.2 watermark incremental sync of records
+  mode record_sync   sec 3.2 watermark incremental sync of records:
+                         the same fold over the new records files,
+                         marks in cleaning_records' batch manifest
   mode monitor       sec 3.3 session detection: each call folds the
                          status files landed since the last one
   mode history       O1  print the k most recent records
@@ -31,15 +36,22 @@ keeps later runs delta-sized), sinks.warehouse_maintenance.
 (device_status + cleaning_records shapes) -- the process boundary the
 reference crosses via MQTT/HTTPS (roborock_collector.py:295-352)
 becomes a table scan; everything downstream is identical semantics.
+Cloud files are append-only: a file lands once under its final name
+and is never rewritten, which is what lets smart, record_sync and
+monitor fold each file exactly once by name.
 """
 
 from __future__ import annotations
 
 import argparse
+import datetime as dt
 import json
+import math
 import os
 import time
 from collections.abc import Callable
+from decimal import ROUND_HALF_UP, Decimal
+from zoneinfo import ZoneInfo
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -55,12 +67,14 @@ from roborock_data_pipeline_spark.sources import (
 from roborock_data_pipeline_spark.session import get_spark, prepare
 
 
+_CLOUD_SCHEMAS = {
+    "device_status": schemas.DEVICE_STATUS,
+    "cleaning_records": schemas.CLEANING_RECORDS,
+}
+
+
 def _cloud(spark: SparkSession, cloud_dir: str, name: str) -> DataFrame:
-    schema = {
-        "device_status": schemas.DEVICE_STATUS,
-        "cleaning_records": schemas.CLEANING_RECORDS,
-    }[name]
-    return spark.read.schema(schema).parquet(f"{cloud_dir}/{name}")
+    return spark.read.schema(_CLOUD_SCHEMAS[name]).parquet(f"{cloud_dir}/{name}")
 
 
 def mode_setup(spark: SparkSession, warehouse: str) -> None:
@@ -121,65 +135,142 @@ def mode_status(spark: SparkSession, cloud: str) -> DataFrame:
     return snap
 
 
+def _unfolded(
+    spark: SparkSession, cloud: str, name: str, folded: list[str]
+) -> tuple[list[str], DataFrame | None]:
+    """The ``cloud/name`` files not in ``folded``, in name order, and
+    one scan over only those files (None when there are none). A
+    cloud file lands once, under its final name, and is never
+    rewritten, so its name is its identity: a step that records the
+    names it folded never reads a file twice."""
+    src = f"{cloud}/{name}"
+    done = set(folded)
+    new = sorted(
+        e.name for e in os.scandir(src)
+        if e.is_file() and not e.name.startswith(("_", ".")) and e.name not in done
+    )
+    if not new:
+        return [], None
+    return new, spark.read.schema(_CLOUD_SCHEMAS[name]).parquet(
+        *[os.path.join(src, n) for n in new]
+    )
+
+
+def _arrow(schema: T.StructType, cols: dict):
+    """A pyarrow table with ``schema``'s exact types: timestamps as
+    UTC-adjusted micros (given as epoch micros), ints as int32 -- a
+    plain Spark read of its parquet gets back exactly ``schema``."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    return pa.Table.from_pydict(cols, schema=to_arrow_schema(schema))
+
+
+def _round2(x: float | None) -> float | None:
+    """Spark's ``round(x, 2)`` on the driver: HALF_UP on the double's
+    shortest decimal form, the form Spark rounds too."""
+    if x is None or not math.isfinite(x):
+        return x
+    return float(Decimal(repr(x)).quantize(Decimal("0.01"), ROUND_HALF_UP))
+
+
+def _plus(a, b):
+    """A SQL sum's merge: null only if both sides are."""
+    return b if a is None else a if b is None else a + b
+
+
 def mode_smart(spark: SparkSession, cloud: str, warehouse: str) -> None:
     """sec 3.1 smart_sync: per device, only if the cleaning counter
     advanced past what the warehouse already holds, append the new
-    summary snapshot + latest status. State is the sink itself --
-    re-running after a failed write simply retries (exactly-once),
-    unlike pipeline.py:562-568 which advances state regardless."""
-    st = _cloud(spark, cloud, "device_status")
-    # device-side lifetime counters (what get_clean_summary returns)
-    current = st.groupBy("device_name").agg(
-        F.max("timestamp").alias("timestamp"),
-        F.sum("clean_time").alias("total_clean_time"),
-        F.round(F.sum("clean_area"), 2).alias("total_clean_area"),
-        F.count("*").alias("total_clean_count"),
+    summary snapshot. The device-side lifetime counters
+    (get_clean_summary) are the count, clean-time and area sums and
+    the newest timestamp over every status row the device landed.
+
+    The state is the table's marks (sinks.read_marks): per device the
+    count, both unrounded sums and the newest timestamp, plus the
+    cloud files already folded. A call reads only the files landed
+    since (cloud files are append-only and land once), aggregates
+    them per device in one Spark aggregate (two jobs), merges that
+    with the marks on the driver and appends one row per device that
+    landed rows -- each such device's counter advanced. The rows are
+    written driver-side and publish in the same manifest commit as
+    the new marks, so the state is still what the sink holds: a
+    failed write moves neither and the rerun folds the same files
+    (exactly-once), unlike pipeline.py:562-568, which advances state
+    regardless."""
+    prior = sinks.read_marks(warehouse, "clean_summary")
+    new, status = _unfolded(spark, cloud, "device_status", prior.get("folded", []))
+    if not new:
+        return
+    delta = status.groupBy("device_name").agg(
+        F.count("*").alias("n"),
+        F.sum("clean_time").alias("time"),
+        F.sum("clean_area").alias("area"),
+        F.max(F.unix_micros("timestamp")).alias("ts"),
+    ).collect()
+    devices = dict(prior.get("devices", {}))
+    for r in delta:
+        m = devices.get(r.device_name, {"n": 0, "time": None, "area": None, "ts": None})
+        devices[r.device_name] = {
+            "n": m["n"] + r.n,
+            "time": _plus(m["time"], r.time),
+            "area": _plus(m["area"], r.area),
+            "ts": max((t for t in (m["ts"], r.ts) if t is not None), default=None),
+        }
+    fresh = [devices[r.device_name] for r in delta]
+    rows = _arrow(schemas.CLEAN_SUMMARY, {
+        "timestamp": [d["ts"] for d in fresh],
+        "device_name": [r.device_name for r in delta],
+        "total_clean_time": [d["time"] for d in fresh],
+        "total_clean_area": [_round2(d["area"]) for d in fresh],
+        "total_clean_count": [d["n"] for d in fresh],
+    })
+    sinks.append_with_console_fallback(
+        rows, warehouse, "clean_summary",
+        marks=(prior, {"folded": prior.get("folded", []) + new, "devices": devices}),
     )
-    prior = (
-        sinks.read_table(spark, warehouse, "clean_summary")
-        .groupBy("device_name")
-        .agg(F.max("total_clean_count").alias("last_count"))
-    )
-    fresh = (
-        current.join(F.broadcast(prior), "device_name", "left")
-        .where(
-            F.col("total_clean_count") > F.coalesce(F.col("last_count"), F.lit(0))
-        )
-        .select(
-            "timestamp",
-            "device_name",
-            "total_clean_time",
-            "total_clean_area",
-            "total_clean_count",
-        )
-    )
-    sinks.append_with_console_fallback(fresh, warehouse, "clean_summary")
 
 
 def mode_record_sync(spark: SparkSession, cloud: str, warehouse: str) -> None:
     """sec 3.2 sync_new_records: per device, append only records with
     start_time beyond the warehouse's high-water mark, oldest first.
-    Native timestamps, not ISO-string compares (fixes T7)."""
-    recs = _cloud(spark, cloud, "cleaning_records")
-    wm = (
-        sinks.read_table(spark, warehouse, "cleaning_records")
-        .groupBy("device_name")
-        .agg(F.max("start_time").alias("wm"))
+    Native timestamps, not ISO-string compares (fixes T7).
+
+    The high-water marks (newest synced start_time per device) and the
+    cloud files already folded are the table's marks
+    (sinks.read_marks). A call scans only the files landed since
+    (cloud files are append-only and land once) in one Spark job,
+    collects their rows -- the new files' rows, not the cloud's --
+    drops each row at or below its device's mark, and appends the
+    rest oldest first, written driver-side. Rows and advanced marks
+    publish in one manifest commit, so a failed write moves neither
+    and the rerun offers the same rows (exactly-once)."""
+    prior = sinks.read_marks(warehouse, "cleaning_records")
+    new, recs = _unfolded(spark, cloud, "cleaning_records", prior.get("folded", []))
+    if not new:
+        return
+    cols = [f.name for f in schemas.CLEANING_RECORDS]
+    got = recs.select(*[
+        F.unix_micros(f.name).alias(f.name)
+        if isinstance(f.dataType, T.TimestampType) else f.name
+        for f in schemas.CLEANING_RECORDS
+    ]).collect()
+    wm = dict(prior.get("devices", {}))
+    # a record at or below its device's mark was synced already (or
+    # is a late one the reference drops too, pipeline.py:725-726);
+    # an unseen device's mark is the epoch
+    fresh = sorted(
+        (r for r in got
+         if r.start_time is not None and r.start_time > wm.get(r.device_name, 0)),
+        key=lambda r: r.start_time,
     )
-    fresh = (
-        recs.join(F.broadcast(wm), "device_name", "left")
-        .where(
-            F.col("start_time")
-            > F.coalesce(F.col("wm"), F.lit("1970-01-01").cast("timestamp"))
-        )
-        .drop("wm")
-        # O3 oldest-first: per-partition sort at the sink is enough --
-        # a global orderBy would total-shuffle every new record at
-        # 100 TB for an ordering no downstream query depends on
-        .sortWithinPartitions("start_time")
-        .select(*[f.name for f in schemas.CLEANING_RECORDS])
+    for r in fresh:
+        wm[r.device_name] = max(wm.get(r.device_name, 0), r.start_time)
+    rows = _arrow(schemas.CLEANING_RECORDS, {c: [r[c] for r in fresh] for c in cols})
+    sinks.append_with_console_fallback(
+        rows, warehouse, "cleaning_records",
+        marks=(prior, {"folded": prior.get("folded", []) + new, "devices": wm}),
     )
-    sinks.append_with_console_fallback(fresh, warehouse, "cleaning_records")
 
 
 # The monitor's fold state, under the checkpoint dir: one pointer
@@ -218,14 +309,10 @@ def _refuse_stream_layout(sessions_dir: str, checkpoint: str) -> None:
 
 
 def _write_parquet(path: str, schema: T.StructType, cols: dict) -> None:
-    """Driver-side parquet write with ``schema``'s exact types:
-    timestamps as UTC-adjusted micros (given as epoch micros), ints as
-    int32 -- a plain Spark read gets back exactly ``schema``."""
-    import pyarrow as pa
+    """Driver-side parquet write of ``_arrow(schema, cols)``."""
     import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import to_arrow_schema
 
-    pq.write_table(pa.Table.from_pydict(cols, schema=to_arrow_schema(schema)), path)
+    pq.write_table(_arrow(schema, cols), path)
 
 
 def mode_monitor(
@@ -261,13 +348,8 @@ def mode_monitor(
 
     sessions_dir = sinks.table_path(warehouse, "cleaning_history_stream")
     _refuse_stream_layout(sessions_dir, checkpoint)
-    src = f"{cloud}/device_status"
     state = _monitor_state(checkpoint)
-    folded = set(state["folded"])
-    new = sorted(
-        e.name for e in os.scandir(src)
-        if e.is_file() and not e.name.startswith(("_", ".")) and e.name not in folded
-    )
+    new, ticks = _unfolded(spark, cloud, "device_status", state["folded"])
     if not new:
         return
     epoch = state["epoch"] + 1
@@ -275,9 +357,7 @@ def mode_monitor(
     state_schema = T.StructType(
         [T.StructField("device_name", T.StringType(), False), *STATE_SCHEMA.fields]
     )
-    views = {"ticks": spark.read.schema(schemas.DEVICE_STATUS).parquet(
-        *[os.path.join(src, n) for n in new]
-    )}
+    views = {"ticks": ticks}
     prior = ""
     if state["state"] is not None:
         views["prior"] = spark.read.schema(state_schema).parquet(
@@ -595,6 +675,51 @@ def rollup_for_dates(
     return _daily_rollup(bounded)
 
 
+def _touched_dates(spark: SparkSession, warehouse: str, batches: list[str]) -> list[str]:
+    """Every calendar date (in the session time zone, a region id that
+    session.prepare pins to UTC, as _daily_rollup formats them)
+    between the ``start_time`` min and max of each row group of
+    ``batches``, read from the parquet footers on the driver -- no
+    Spark job. The span over-approximates a row group's dates;
+    recompute-from-base makes that safe, and a date with no rows
+    recomputes to no partition. Every writer of cleaning_records
+    batches (the driver-side sync, Spark writes under
+    session.prepare's TIMESTAMP_MICROS, vacuum bases) leaves these
+    statistics; a row group without them is refused, naming its
+    file."""
+    import pyarrow.parquet as pq
+
+    zone = ZoneInfo(spark.conf.get("spark.sql.session.timeZone"))
+    table_dir = sinks.table_path(warehouse, "cleaning_records")
+    dates: set[str] = set()
+    for b in batches:
+        bdir = os.path.join(table_dir, b)
+        for f in sorted(os.listdir(bdir)):
+            if not f.endswith(".parquet") or f.startswith(("_", ".")):
+                continue
+            meta = pq.read_metadata(os.path.join(bdir, f))
+            col = meta.schema.names.index("start_time")
+            for i in range(meta.num_row_groups):
+                group = meta.row_group(i)
+                if not group.num_rows:
+                    continue
+                stats = group.column(col).statistics
+                if stats is None or not stats.has_min_max:
+                    raise ValueError(
+                        f"{os.path.join(bdir, f)!r} carries no start_time "
+                        "min/max statistics (an INT96 timestamp write?): "
+                        "the refresh cannot tell which dates it touches"
+                    )
+                lo, hi = (
+                    (v if v.tzinfo else v.replace(tzinfo=dt.timezone.utc))
+                    .astimezone(zone).date()
+                    for v in (stats.min, stats.max)
+                )
+                for k in range((hi - lo).days + 1):
+                    dates.add((lo + dt.timedelta(days=k)).isoformat())
+    return sorted(dates)
+
+
 def refresh_daily_summary(spark: SparkSession, warehouse: str) -> dict[str, int]:
     """EXT: INCREMENTAL maintenance of the Daily_Summary gold table --
     the 100 TB form of mode_daily_summary's full rebuild.
@@ -609,9 +734,9 @@ def refresh_daily_summary(spark: SparkSession, warehouse: str) -> dict[str, int]
        a FOLD_GRACE_NS band below the watermark deduplicated by batch
        id, so a publish that renamed in late after a slow stamp->
        rename gap is still folded exactly once);
-    2. scan ONLY those batch dirs for their distinct event dates
-       (driver state = a set of calendar dates, bounded by days of
-       history, not rows);
+    2. read ONLY those batches' parquet footers for their start_time
+       spans (_touched_dates: no Spark job; driver state = a set of
+       calendar dates, bounded by days of history, not rows);
     3. recompute exactly those dates from the base table via a
        range-pruned scan (rollup_for_dates);
     4. swap the touched date partitions into the hive-partitioned
@@ -627,7 +752,7 @@ def refresh_daily_summary(spark: SparkSession, warehouse: str) -> dict[str, int]
     byte-identical partitions (idempotent convergence: the publish is
     the commit point). Vacuum interplay:
     a vacuum base stamped newer than the grace floor and not yet in
-    the folded set makes the 'new' scan OVER-approximate touched
+    the folded set makes the footer spans OVER-approximate touched
     dates (the base also holds already-folded rows) --
     recompute-from-base makes any over-approximation safe, never
     wrong, and the base enters the folded set so it costs one pass.
@@ -644,7 +769,8 @@ def refresh_daily_summary(spark: SparkSession, warehouse: str) -> dict[str, int]
     the batch log; a transactional table format (Delta/Iceberg commit
     log) is what removes the window on a real deployment.
 
-    Returns {"new_batches": n, "dates_refreshed": n}.
+    Returns {"new_batches": n, "dates_refreshed": n}: the date
+    partitions the swap republished (touched dates that hold rows).
     """
     # gold lease first, then the SOURCE lease: the refresh lazily
     # scans cleaning_records batch dirs by explicit path, and a
@@ -672,21 +798,17 @@ def _refresh_daily_summary_locked(
                 warehouse, _advance_fold_state(state, [], implicit)
             )
         return {"new_batches": 0, "dates_refreshed": 0}
-    touched = (
-        sinks.read_batch_dirs(spark, warehouse, "cleaning_records", new)
-        .select(F.date_format("start_time", "yyyy-MM-dd").alias("d"))
-        .distinct()
-    )
-    dates = sorted(r["d"] for r in touched.collect() if r["d"] is not None)
+    dates = _touched_dates(spark, warehouse, new)
+    refreshed = 0
     if dates:
-        sinks.overwrite_partitions(
+        refreshed = sinks.overwrite_partitions(
             rollup_for_dates(spark, warehouse, dates),
             warehouse,
             GOLD_PART_TABLE,
             ["date"],
         )
     _write_rollup_state(warehouse, _advance_fold_state(state, new, implicit))
-    return {"new_batches": len(new), "dates_refreshed": len(dates)}
+    return {"new_batches": len(new), "dates_refreshed": refreshed}
 
 
 LIFETIME_TABLE = "device_lifetime"
@@ -723,10 +845,11 @@ def refresh_device_lifetime(spark: SparkSession, warehouse: str) -> dict[str, ob
     """EXT: KEYED incremental view maintenance -- the delta-merge twin
     of refresh_daily_summary's partition swap. A per-device lifetime
     rollup has no date axis to swap partitions on; instead it exploits
-    that count/sum are MERGEABLE: scan only the new batches, partial-
-    aggregate them per device, and merge into the prior |devices|-row
-    snapshot. History is never rescanned; the unit of work is the new
-    batches plus a snapshot the size of the key space.
+    that count/sum are MERGEABLE: scan only the new batches and
+    aggregate their raw rows together with the prior |devices|-row
+    snapshot in one aggregate (one shuffle, then a collect of the
+    |devices| rows, written driver-side: two jobs). History is never rescanned; the unit of work is the
+    new batches plus a snapshot the size of the key space.
 
     The merge-safety contract differs from the dated refresh in both
     directions, and both are handled:
@@ -758,11 +881,6 @@ def refresh_device_lifetime(spark: SparkSession, warehouse: str) -> dict[str, ob
     ):
         table_dir = sinks.table_path(warehouse, LIFETIME_TABLE)
         live = _lifetime_live(warehouse)
-        wm_path = (
-            os.path.join(live, LIFETIME_WATERMARK)
-            if live is not None
-            else None
-        )
         state = _read_lifetime_state(warehouse)
         batches = sinks.list_batches(warehouse, "cleaning_records")
         # grace-band re-list + id dedup (see FOLD_GRACE_NS): a batch
@@ -774,49 +892,46 @@ def refresh_device_lifetime(spark: SparkSession, warehouse: str) -> dict[str, ob
             batches, state, sinks.table_path(warehouse, "cleaning_records")
         )
         if not new:
-            if implicit and wm_path is not None:
+            if implicit and live is not None:
                 # record proven-folded bases: one verified pointer
                 # swap of the in-snapshot state file (data untouched;
                 # metadata-only, so mutating the live version in
                 # place is safe -- it cannot change query results)
                 commit_provider.commit_pointer(
-                    wm_path,
+                    os.path.join(live, LIFETIME_WATERMARK),
                     _dump_fold_state(
                         _advance_fold_state(state, [], implicit)
                     ).encode(),
                 )
             return {"new_batches": 0, "mode": "noop"}
 
-        def _partial(df: DataFrame) -> DataFrame:
-            return df.groupBy("device_name").agg(
-                F.count("*").alias("n"),
-                F.sum("area_sqm").alias("area_sum"),
-                F.sum("duration_minutes").alias("time_sum"),
+        def _rows(df: DataFrame) -> DataFrame:
+            # a raw record in the snapshot's shape: count one
+            return df.select(
+                "device_name",
+                F.lit(1).cast("long").alias("n"),
+                F.col("area_sqm").alias("area_sum"),
+                F.col("duration_minutes").alias("time_sum"),
             )
 
-        vacuum_base_arrived = any(
+        # no committed state (first refresh, or a snapshot without
+        # one) or an arriving vacuum base: recompute from the table
+        if not state["wm"] or any(
             b.endswith(sinks.VACUUM_BASE_SUFFIX) for b in new
-        )
-        if vacuum_base_arrived or wm_path is None or not os.path.exists(wm_path):
+        ):
             mode = "full"
-            merged = _partial(
-                sinks.read_table(spark, warehouse, "cleaning_records")
-            )
+            rows = _rows(sinks.read_table(spark, warehouse, "cleaning_records"))
         else:
             mode = "delta"
-            delta = _partial(
-                sinks.read_batch_dirs(spark, warehouse, "cleaning_records", new)
+            rows = spark.read.schema(LIFETIME_SCHEMA).parquet(live).unionByName(
+                _rows(sinks.read_batch_dirs(spark, warehouse, "cleaning_records", new))
             )
-            prior = spark.read.schema(LIFETIME_SCHEMA).parquet(live)
-            merged = (
-                prior.unionByName(delta)
-                .groupBy("device_name")
-                .agg(
-                    F.sum("n").alias("n"),
-                    F.sum("area_sum").alias("area_sum"),
-                    F.sum("time_sum").alias("time_sum"),
-                )
-            )
+        # |devices| rows, written driver-side below
+        merged = rows.groupBy("device_name").agg(
+            F.sum("n").alias("n"),
+            F.sum("area_sum").alias("area_sum"),
+            F.sum("time_sum").alias("time_sum"),
+        ).collect()
         # snapshot + folded watermark publish in ONE pointer commit
         # (r12 #1, sources/versioned_dir): no crash window between
         # data and watermark (delta-merge is not replay-idempotent,
@@ -825,7 +940,9 @@ def refresh_device_lifetime(spark: SparkSession, warehouse: str) -> dict[str, ob
         # is visible: readers see old-or-new, never a missing table
         staged = versioned_dir.staging_dir(table_dir)
         try:
-            merged.write.mode("overwrite").parquet(staged)
+            _write_parquet(os.path.join(staged, "part-00000.parquet"), LIFETIME_SCHEMA, {
+                c: [r[c] for r in merged] for c in LIFETIME_SCHEMA.names
+            })
             with open(os.path.join(staged, LIFETIME_WATERMARK), "w") as fh:
                 fh.write(
                     _dump_fold_state(_advance_fold_state(state, new, implicit))

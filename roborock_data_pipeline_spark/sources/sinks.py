@@ -26,9 +26,12 @@ import time
 import uuid
 from contextlib import contextmanager
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type, to_arrow_type
 
 from roborock_data_pipeline_spark import schemas
 from roborock_data_pipeline_spark.sources import commit_provider
@@ -291,7 +294,7 @@ def _batches_manifest(table_dir: str) -> dict | None:
         return None
     try:
         m = json.loads(raw)
-        return {"generation": int(m["generation"]), "live": list(m["live"])}
+        out = {"generation": int(m["generation"]), "live": list(m["live"])}
     except (ValueError, KeyError, TypeError) as exc:
         raise ValueError(
             f"corrupt batch manifest {path!r}: {exc} -- refusing the "
@@ -299,6 +302,9 @@ def _batches_manifest(table_dir: str) -> dict | None:
             "uncommitted orphan dirs); restore the manifest from the "
             "previous generation"
         ) from exc
+    if "marks" in m:
+        out["marks"] = m["marks"]
+    return out
 
 
 @contextmanager
@@ -329,14 +335,18 @@ def _commit_batches(
     live: list[str],
     generation: int,
     still_mine=None,
+    marks: dict | None = None,
 ) -> None:
     """THE commit point: stage the next manifest generation to a
     temp file (fsync'd) and publish it with ONE single-file
     ``os.replace`` -- on an object store this line is one atomic
-    manifest PUT. Guarded by the writer-lease fence (a TTL-fenced
-    vacuum/overwrite must not commit over its successor) and by the
-    manifest-lock ownership probe (same property for the naming
-    lock)."""
+    manifest PUT. ``marks`` (a sync's per-device marks, see
+    read_marks) ride in the same generation, so rows and marks
+    publish together; a caller that does not move them passes the
+    live generation's marks through unchanged. Guarded by the
+    writer-lease fence (a TTL-fenced vacuum/overwrite must not commit
+    over its successor) and by the manifest-lock ownership probe
+    (same property for the naming lock)."""
     _check_fence()
     if still_mine is not None and not still_mine():
         raise FencedWriterError(
@@ -345,11 +355,12 @@ def _commit_batches(
             "manifest publish so the successor's commit is not "
             "overwritten; rerun this mutation"
         )
+    manifest = {"generation": generation, "live": sorted(set(live))}
+    if marks is not None:
+        manifest["marks"] = marks
     commit_pointer(
         os.path.join(table_dir, BATCHES_MANIFEST),
-        json.dumps(
-            {"generation": generation, "live": sorted(set(live))}
-        ).encode(),
+        json.dumps(manifest).encode(),
     )
 
 
@@ -367,15 +378,72 @@ def _live_manifest(table_dir: str, name: str, still_mine) -> dict:
     return m
 
 
-def append_rows(df: DataFrame, warehouse_dir: str, name: str) -> None:
+def _door(name: str, schema: T.StructType, dtypes: list[tuple[str, str]]):
+    """The append door's declared-schema contract (Delta-style), the
+    same for a Spark-staged and a pyarrow-staged batch: undeclared
+    columns and type drift are refused, and so is a missing
+    non-nullable column. Returns the missing (nullable) fields, which
+    the caller fills with typed nulls."""
+    declared = {f.name: f for f in schema.fields}
+    extra = [c for c, _ in dtypes if c not in declared]
+    if extra:
+        raise ValueError(
+            f"append to {name!r} carries undeclared column(s) {extra}"
+        )
+    drifted = [
+        f"{c}: {t} != {declared[c].dataType.simpleString()}"
+        for c, t in dtypes
+        if t != declared[c].dataType.simpleString()
+    ]
+    if drifted:
+        raise ValueError(
+            f"append to {name!r} carries type-drifted column(s) "
+            f"[{'; '.join(drifted)}]"
+        )
+    present = {c for c, _ in dtypes}
+    missing = [f for f in schema.fields if f.name not in present]
+    broken = [f.name for f in missing if not f.nullable]
+    if broken:
+        raise ValueError(
+            f"append to {name!r} is missing non-nullable column(s) "
+            f"{broken}"
+        )
+    return missing
+
+
+def _arrow_door(rows, warehouse_dir: str, name: str):
+    """_door for a driver-side pyarrow batch, plus the NOT NULL check
+    _fuse_not_null fuses into a Spark write: the null counts are in
+    hand, so a violating batch is refused before anything is staged."""
+    schema = table_schema(warehouse_dir, name)
+    missing = _door(name, schema, [
+        (f.name, from_arrow_type(f.type).simpleString()) for f in rows.schema
+    ])
+    for f in missing:
+        rows = rows.append_column(
+            f.name, pa.nulls(rows.num_rows, to_arrow_type(f.dataType))
+        )
+    rows = rows.select([f.name for f in schema.fields])
+    for f in schema.fields:
+        if not f.nullable and rows.column(f.name).null_count:
+            raise ValueError(
+                f"append to {name!r}: null in non-nullable column {f.name!r}"
+            )
+    return rows
+
+
+def append_rows(
+    rows: DataFrame | pa.Table,
+    warehouse_dir: str,
+    name: str,
+    marks: tuple[dict, dict] | None = None,
+) -> None:
     """S6/S7: append a batch to a table -- job-level atomic.
 
     A raw ``mode("append")`` commits per-task part-files as tasks
     finish, so a job that dies mid-write leaves SOME new rows visible;
-    because the incremental modes derive their watermark from the sink
-    (pipeline.py mode_record_sync), a partially-committed newer record
-    could advance the per-device watermark past older rows that were
-    lost -- reintroducing the reference's T5 silent-loss bug
+    a sync whose state is what the sink holds could then advance past
+    older rows that were lost -- the reference's T5 silent-loss bug
     (reference pipeline.py:562-568) at the job level.
 
     Fix: write the whole batch to a staging dir, name it into the
@@ -383,76 +451,68 @@ def append_rows(df: DataFrame, warehouse_dir: str, name: str) -> None:
     manifest commit. Readers see either none of the batch or all of
     it -- the same contract a transactional table format
     (Delta/Iceberg commit log) gives on a real cluster.
+
+    ``rows`` is a Spark DataFrame (staged by a Spark write) or a
+    pyarrow Table already on the driver (staged by one pyarrow write,
+    no Spark job); both pass the same door and the same publish.
+    ``marks`` = (marks as read, marks after this batch) is a sync's
+    per-device state (read_marks): the new marks commit in the same
+    manifest generation as the rows, and only if the live marks are
+    still the ones the sync read -- otherwise another sync of the
+    same source committed first and this one raises
+    ConcurrentWriterError. An empty pyarrow batch publishes no batch
+    dir, only its marks. Without ``marks`` the live marks carry over.
     """
     table_dir = table_path(warehouse_dir, name)
+    arrow = isinstance(rows, pa.Table)
     if commit_provider.read_pointer(
         os.path.join(table_dir, SCHEMA_MANIFEST)
     ) is not None:
-        # schema enforcement at the door (Delta-style): undeclared
-        # columns and type drift are refused; missing NULLABLE columns
-        # are filled with typed nulls; a missing non-nullable column
-        # is a contract break and refused
-        schema = table_schema(warehouse_dir, name)
-        declared = {f.name: f for f in schema.fields}
-        extra = [c for c in df.columns if c not in declared]
-        if extra:
-            raise ValueError(
-                f"append to {name!r} carries undeclared column(s) {extra}"
-            )
-        drifted = [
-            f"{c}: {t} != {declared[c].dataType.simpleString()}"
-            for c, t in df.dtypes
-            if t != declared[c].dataType.simpleString()
-        ]
-        if drifted:
-            raise ValueError(
-                f"append to {name!r} carries type-drifted column(s) "
-                f"[{'; '.join(drifted)}]"
-            )
-        missing = [f for f in schema.fields if f.name not in df.columns]
-        broken = [f.name for f in missing if not f.nullable]
-        if broken:
-            raise ValueError(
-                f"append to {name!r} is missing non-nullable column(s) "
-                f"{broken}"
-            )
-        for f in missing:
-            df = df.withColumn(f.name, F.lit(None).cast(f.dataType))
-        df = df.select(*[f.name for f in schema.fields])
-        df = _fuse_not_null(df, warehouse_dir, name, verb="append")
+        if arrow:
+            rows = _arrow_door(rows, warehouse_dir, name)
+        else:
+            schema = table_schema(warehouse_dir, name)
+            for f in _door(name, schema, rows.dtypes):
+                rows = rows.withColumn(f.name, F.lit(None).cast(f.dataType))
+            rows = rows.select(*[f.name for f in schema.fields])
+            rows = _fuse_not_null(rows, warehouse_dir, name, verb="append")
     staging_root = os.path.join(warehouse_dir, ".staging")
     os.makedirs(staging_root, exist_ok=True)
     staged = os.path.join(staging_root, f"{name}-{uuid.uuid4().hex}")
     try:
-        df.write.mode("overwrite").parquet(staged)
+        if not arrow:
+            rows.write.mode("overwrite").parquet(staged)
+        elif rows.num_rows:
+            os.makedirs(staged)
+            pq.write_table(rows, os.path.join(staged, "part-00000.parquet"))
         os.makedirs(table_dir, exist_ok=True)
         # batch ids encode PUBLISH time (ns) so the batch log is
         # ordered: time-travel (read_table_as_of) and compaction cut
         # on this prefix; the uuid suffix keeps concurrent writers
-        # collision-free. The stamp is taken AFTER the Spark write,
+        # collision-free. The stamp is taken AFTER the write,
         # immediately before the atomic rename (ADVICE r6 high): a
         # staging-time stamp let a slow write publish an id BELOW a
         # watermark an incremental refresh (refresh_daily_summary /
         # refresh_device_lifetime) had already advanced past -- the
         # batch would then be <= watermark forever and never folded.
         # The publish-time stamp narrows that race from the whole
-        # Spark-write duration to the stamp->rename gap below
+        # write duration to the stamp->rename gap below
         # (microseconds); a writer preempted exactly in that gap can
         # still publish below a watermark advanced in the gap -- the
         # refreshes absorb that case by re-listing a grace band below
         # their watermark and deduplicating by batch id
         # (FOLD_GRACE_NS), so such a batch is folded exactly once as
         # long as the preemption is shorter than the grace. The
-        # freeze FENCE below covers the longer freeze (VERDICT r8
-        # wrong-#3): if the OS parked this writer past half the grace
-        # between stamping and reaching the rename, publishing the
-        # stale id could land below an advanced watermark's grace
-        # floor and never fold -- so re-stamp until the id is fresh.
-        # Re-stamping before visibility is safe (no reader has seen
-        # the old id); what remains unfenceable is a freeze inside
-        # the check->rename gap itself -- two adjacent operations with
-        # no syscall between, vs the multi-syscall stamp->rename path
-        # this narrows.
+        # freeze FENCE (_fresh_batch_id) covers the longer freeze
+        # (VERDICT r8 wrong-#3): if the OS parked this writer past
+        # half the grace between stamping and reaching the rename,
+        # publishing the stale id could land below an advanced
+        # watermark's grace floor and never fold -- so re-stamp until
+        # the id is fresh. Re-stamping before visibility is safe (no
+        # reader has seen the old id); what remains unfenceable is a
+        # freeze inside the check->rename gap itself -- two adjacent
+        # operations with no syscall between, vs the multi-syscall
+        # stamp->rename path this narrows.
         # EVERY append takes the (millisecond) naming lock: it
         # serializes manifest commits, and the manifest read (or the
         # bootstrap of an unprovisioned table) happens INSIDE it.
@@ -464,20 +524,49 @@ def append_rows(df: DataFrame, warehouse_dir: str, name: str) -> None:
         # monotone with commit order (the as-of/fold invariant).
         with _manifest_lock(table_dir, name) as still_mine:
             m = _live_manifest(table_dir, name, still_mine)
-            batch_id = _fresh_batch_id()
-            os.replace(
-                staged, os.path.join(table_dir, f"batch-{batch_id}")
-            )
+            live, new_marks = m["live"], m.get("marks")
+            if marks is not None:
+                if (new_marks or {}) != marks[0]:
+                    raise ConcurrentWriterError(
+                        f"table {name!r}: its sync marks moved since this "
+                        "sync read them -- another sync of the same source "
+                        "committed first; rerun this sync"
+                    )
+                new_marks = marks[1]
+            if os.path.exists(staged):
+                batch = f"batch-{_fresh_batch_id()}"
+                os.replace(staged, os.path.join(table_dir, batch))
+                live = live + [batch]
             _commit_batches(
-                table_dir,
-                name,
-                m["live"] + [f"batch-{batch_id}"],
-                m["generation"] + 1,
-                still_mine,
+                table_dir, name, live, m["generation"] + 1, still_mine,
+                new_marks,
             )
     finally:
         if os.path.exists(staged):  # job failed before publish
             shutil.rmtree(staged, ignore_errors=True)
+
+
+def read_marks(warehouse_dir: str, name: str) -> dict:
+    """A synced table's per-device marks, as committed in its
+    ``_batches.json`` with the rows they describe; {} before the first
+    sync. The sync that owns the table defines their shape (pipeline
+    mode_smart / mode_record_sync); every other commit carries them
+    over unchanged. A table holding live batches but no marks was
+    synced by a build that derived its state from a full read of the
+    sink: that layout is unsupported and is refused by name -- its
+    marks cannot be rebuilt without that full read."""
+    table_dir = table_path(warehouse_dir, name)
+    m = _batches_manifest(table_dir)
+    if m is None or "marks" in m:
+        return (m or {}).get("marks") or {}
+    if m["live"]:
+        raise ValueError(
+            f"table dir {table_dir!r} holds live batches but its "
+            f"{BATCHES_MANIFEST} carries no sync marks: a table synced "
+            "by an older build is unsupported -- rebuild it from the "
+            "device cloud into a freshly provisioned warehouse"
+        )
+    return {}
 
 
 def _fresh_batch_id() -> str:
@@ -567,6 +656,7 @@ def overwrite_rows(df: DataFrame, warehouse_dir: str, name: str) -> None:
                     [f"batch-{batch_id}"],
                     cur["generation"] + 1,
                     still_mine,
+                    cur.get("marks"),
                 )
             for b in cur["live"]:  # post-commit GC of the old snapshot
                 shutil.rmtree(
@@ -592,23 +682,29 @@ def describe_table(warehouse_dir: str, name: str) -> dict[str, object]:
     schema = table_schema(warehouse_dir, name)
     lock_age_s = lock_holder = None
     holder_alive = False
-    try:
-        lock = os.path.join(warehouse_dir, f".lock-{name}")
-        with open(lock) as fh:
-            lock_holder = int(fh.read().strip() or 0) or None
-        lock_age_s = round(time.time() - os.stat(lock).st_mtime, 3)
-        if lock_holder:
-            try:
-                os.kill(lock_holder, 0)
-                holder_alive = True
-            except ProcessLookupError:
-                holder_alive = False
-            except PermissionError:
-                holder_alive = True
-    except (FileNotFoundError, ValueError):
-        # released (or replaced) mid-snapshot: report a consistent
-        # "no lock" row rather than a half-read one
-        lock_age_s = lock_holder = None
+    # the lease is read through the seam writer_lock takes it through,
+    # so the snapshot sees it on every backend; inspect returns holder
+    # and age from one observation, so a lease released or replaced
+    # mid-snapshot reads as consistent "no lock" or the new holder
+    info = commit_provider.BACKEND.inspect(
+        os.path.join(warehouse_dir, f".lock-{name}")
+    )
+    if info.holder is not None:
+        try:
+            lock_holder = int(info.holder or 0) or None
+        except ValueError:
+            pass  # unparsable holder: reported as no lock
+        else:
+            if info.age_s is not None:
+                lock_age_s = round(info.age_s, 3)
+    if lock_holder:
+        try:
+            os.kill(lock_holder, 0)
+            holder_alive = True
+        except ProcessLookupError:
+            holder_alive = False
+        except PermissionError:
+            holder_alive = True
     bm = _batches_manifest(table_path(warehouse_dir, name))
     return {
         "batch_count": len(batches),
@@ -645,18 +741,26 @@ def describe_warehouse(warehouse_dir: str) -> dict[str, dict[str, object]]:
 
 
 def append_with_console_fallback(
-    df: DataFrame, warehouse_dir: str, name: str, n_show: int = 20
+    rows: DataFrame | pa.Table,
+    warehouse_dir: str,
+    name: str,
+    n_show: int = 20,
+    marks: tuple[dict, dict] | None = None,
 ) -> bool:
     """S10: the reference's fallback sink -- on any sink failure,
     pretty-print the rows instead of losing them silently
-    (pipeline.py:43-89, 186-196). Returns True if the real sink
-    succeeded."""
+    (pipeline.py:43-89, 186-196). A failed sync's marks do not move,
+    so its next call offers the same rows again. Returns True if the
+    real sink succeeded."""
     try:
-        append_rows(df, warehouse_dir, name)
+        append_rows(rows, warehouse_dir, name, marks)
         return True
     except Exception as exc:  # noqa: BLE001 - mirror reference behavior
         print(f"[sink fallback] write to {name} failed ({exc}); rows were:")
-        df.show(n_show, truncate=False)
+        if isinstance(rows, pa.Table):
+            print(rows.slice(0, n_show).to_pandas().to_string())
+        else:
+            rows.show(n_show, truncate=False)
         return False
 
 
@@ -1069,7 +1173,8 @@ def _merge_batches(
             live = [b for b in cur["live"] if b not in gone]
             live.append(f"batch-{batch_id}")
             _commit_batches(
-                table_dir, name, live, cur["generation"] + 1, still_mine
+                table_dir, name, live, cur["generation"] + 1, still_mine,
+                cur.get("marks"),
             )
         for b in old:
             shutil.rmtree(os.path.join(table_dir, b), ignore_errors=True)
@@ -1172,7 +1277,7 @@ def _partitions_manifest(table_dir: str) -> dict[str, str] | None:
 
 def overwrite_partitions(
     df: DataFrame, warehouse_dir: str, name: str, partition_cols: list[str]
-) -> None:
+) -> int:
     """EXT: dynamic partition overwrite -- replace ONLY the partitions
     present in ``df``, leaving every other partition untouched -- with
     a CROSS-PARTITION-ATOMIC commit (VERDICT r6 #1 / r7 missing #1).
@@ -1204,6 +1309,9 @@ def overwrite_partitions(
     A table dir holding partition files outside a version segment and
     no manifest is an unsupported older layout and is refused
     (_refuse_unmanifested), never overwritten around.
+
+    Returns the number of partitions the commit swapped in: those
+    ``df`` holds rows for.
     """
     df = _fuse_not_null(df, warehouse_dir, name, verb="overwrite")
     table_dir = table_path(warehouse_dir, name)
@@ -1261,6 +1369,7 @@ def overwrite_partitions(
             os.path.join(table_dir, PARTITIONS_MANIFEST),
             json.dumps({"partitions": merged}).encode(),
         )
+        return len(new_pointers)
     finally:
         if os.path.exists(staged):
             shutil.rmtree(staged, ignore_errors=True)

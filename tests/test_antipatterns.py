@@ -27,9 +27,11 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 ENGINE = os.path.join(REPO, "roborock_data_pipeline_spark")
 
 # files allowed to call .collect(), with the maximum number of call
-# sites; every one is driver-state-sized (dates / centroids /
-# codebooks / audit scalars), never table rows. Raising a number
-# here is a conscious review act.
+# sites; every one is driver-state-sized (centroids / codebooks /
+# audit scalars / |devices| rows), never a table's rows -- the one
+# exception is the record sync's collect of the rows of the cloud
+# files landed since its last call, which is what it appends. Raising
+# a number here is a conscious review act.
 COLLECT_ALLOW = {
     "plans/inspect.py": 1,       # plan-string capture for tests
     "operators/clustering.py": 2,  # k x d centroids
@@ -37,8 +39,13 @@ COLLECT_ALLOW = {
                                    # pq_fit's two k-means collects,
                                    # PQ probe+seed (k rows each)
     "sources/export.py": 1,      # shard manifest (one row per shard)
-    "pipeline.py": 3,            # touched-date list, CLI status rows,
-                                 # monitor fold (|devices| + sessions rows)
+    "pipeline.py": 5,            # CLI status rows, monitor fold
+                                 # (|devices| + sessions rows), smart's
+                                 # per-device aggregate of the new files
+                                 # and the lifetime snapshot (|devices|
+                                 # rows each), record sync's new files'
+                                 # rows (delta-sized: the batch it
+                                 # appends); all written driver-side
 }
 
 # crossJoin sites whose non-broadcast side is provably tiny

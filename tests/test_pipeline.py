@@ -301,6 +301,208 @@ def test_monitor_runs_two_jobs_warm(spark, monitor_dirs):
     assert len(_sessions(spark, warehouse)) == 1
 
 
+def _land_records(spark, cloud, recs):
+    """Land one new cleaning_records file of (device, start, area)."""
+    rows = [(start, d, start, 30.0, area, "vacuum", "auto", None, "completed")
+            for d, start, area in recs]
+    spark.createDataFrame(rows, schemas.CLEANING_RECORDS).coalesce(1).write.mode(
+        "append"
+    ).parquet(f"{cloud}/cleaning_records")
+
+
+def _land_tick(spark, cloud, hour):
+    """One ingest tick's landing: a status file and a records file."""
+    _land(spark, cloud, [("bot1", _ts(1, hour), "cleaning", 90),
+                         ("bot1", _ts(1, hour, 30), "idle", 80),
+                         ("bot2", _ts(1, hour, 10), "idle", 60)])
+    _land_records(spark, cloud, [("bot1", _ts(1, hour), 12.5),
+                                 ("bot2", _ts(1, hour, 5), 3.25)])
+
+
+def _group_stats(spark, step):
+    """SparkCounters over the jobs ``step`` runs, under a fresh group."""
+    import uuid
+
+    from perfbench.trace import SparkCounters
+
+    counters = SparkCounters(spark)
+    group = f"pin-{uuid.uuid4().hex[:8]}"
+    counters.set_group(group)
+    try:
+        step()
+    finally:
+        spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    counters.drain()
+    return counters.group_stats(group)
+
+
+def test_ingest_steps_job_counts_warm(spark, monitor_dirs):
+    """Job-count pins for a warm ingest tick: record_sync is one
+    scan-collect of the new files; smart one aggregate (a shuffle
+    job and a result job); each gold refresh one aggregate plus its
+    write."""
+    cloud, warehouse, _ = monitor_dirs
+    pipeline.mode_setup(spark, warehouse)
+    steps = {
+        "record_sync": lambda: pipeline.mode_record_sync(spark, cloud, warehouse),
+        "smart": lambda: pipeline.mode_smart(spark, cloud, warehouse),
+        "refresh_daily": lambda: pipeline.refresh_daily_summary(spark, warehouse),
+        "refresh_lifetime": lambda: pipeline.refresh_device_lifetime(spark, warehouse),
+    }
+    _land_tick(spark, cloud, 8)
+    for step in steps.values():
+        step()
+    _land_tick(spark, cloud, 9)
+    jobs = {name: _group_stats(spark, step)["jobs"] for name, step in steps.items()}
+    assert jobs == {"record_sync": 1, "smart": 2, "refresh_daily": 2,
+                    "refresh_lifetime": 2}
+    assert sinks.read_table(spark, warehouse, "cleaning_records").count() == 4
+    assert sinks.read_table(spark, warehouse, "clean_summary").count() == 4
+
+
+@pytest.mark.parametrize("mode, source", [
+    (pipeline.mode_record_sync, "cleaning_records"),
+    (pipeline.mode_smart, "device_status"),
+])
+def test_sync_reads_only_the_files_landed_since(spark, monitor_dirs, mode, source):
+    """Delta-sized sync: after two landed files were synced, the next
+    call's jobs read the rows of the one file landed since, not the
+    cloud's."""
+    import pyarrow.parquet as pq
+
+    cloud, warehouse, _ = monitor_dirs
+    pipeline.mode_setup(spark, warehouse)
+    _land_tick(spark, cloud, 8)
+    _land_tick(spark, cloud, 9)
+    mode(spark, cloud, warehouse)
+    src = os.path.join(cloud, source)
+    before = set(os.listdir(src))
+    _land_tick(spark, cloud, 10)
+    (landed,) = [f for f in set(os.listdir(src)) - before if f.endswith(".parquet")]
+    rows = pq.read_metadata(os.path.join(src, landed)).num_rows
+    stats = _group_stats(spark, lambda: mode(spark, cloud, warehouse))
+    assert stats["input_rows"] == rows
+
+
+def _marks(warehouse, name):
+    return sinks.read_marks(warehouse, name)
+
+
+def _sync_both(spark, cloud, warehouse):
+    pipeline.mode_record_sync(spark, cloud, warehouse)
+    pipeline.mode_smart(spark, cloud, warehouse)
+
+
+def _summary_keys(spark, warehouse):
+    cs = sinks.read_table(spark, warehouse, "clean_summary").collect()
+    return sorted((r.device_name, r.total_clean_count) for r in cs)
+
+
+def test_sync_crash_before_manifest_commit_publishes_once(spark, monitor_dirs, monkeypatch):
+    """The batch is staged and named, then the _batches.json commit
+    fails: nothing publishes and the marks stay, so the rerun folds
+    the same files and publishes their rows once."""
+    cloud, warehouse, _ = monitor_dirs
+    pipeline.mode_setup(spark, warehouse)
+    _land_tick(spark, cloud, 8)
+    real = sinks.commit_pointer
+
+    def crash(path, data):
+        if path.endswith(sinks.BATCHES_MANIFEST):
+            raise OSError("injected crash at the manifest commit")
+        real(path, data)
+
+    monkeypatch.setattr(sinks, "commit_pointer", crash)
+    _sync_both(spark, cloud, warehouse)  # the console fallback reports it
+    monkeypatch.undo()
+    for name in ("cleaning_records", "clean_summary"):
+        assert sinks.read_table(spark, warehouse, name).count() == 0
+        assert _marks(warehouse, name) == {}
+    _sync_both(spark, cloud, warehouse)
+    _sync_both(spark, cloud, warehouse)  # nothing new: no-op
+    assert sinks.read_table(spark, warehouse, "cleaning_records").count() == 2
+    assert _summary_keys(spark, warehouse) == [("bot1", 2), ("bot2", 1)]
+
+
+def test_sync_on_stale_marks_publishes_nothing(spark, monitor_dirs, monkeypatch):
+    """A sync whose marks moved between its read and its commit (a
+    second sync of the same cloud committed first) would re-append
+    every row that sync folded: the commit refuses, and the rows stay
+    once."""
+    cloud, warehouse, _ = monitor_dirs
+    pipeline.mode_setup(spark, warehouse)
+    _land_tick(spark, cloud, 8)
+    pipeline.mode_record_sync(spark, cloud, warehouse)
+    marks = _marks(warehouse, "cleaning_records")
+    monkeypatch.setattr(sinks, "read_marks", lambda w, n: {})
+    pipeline.mode_record_sync(spark, cloud, warehouse)  # the fallback reports it
+    monkeypatch.undo()
+    assert _marks(warehouse, "cleaning_records") == marks
+    assert sinks.read_table(spark, warehouse, "cleaning_records").count() == 2
+
+
+def test_vacuum_between_syncs_keeps_the_marks(spark, monitor_dirs):
+    """gold_maintenance's vacuum merges synced batches into a base and
+    carries the marks over: the next sync folds only the new file, and
+    no clean_summary row is repeated."""
+    cloud, warehouse, _ = monitor_dirs
+    pipeline.mode_setup(spark, warehouse)
+    for hour in (8, 9, 10):
+        _land_tick(spark, cloud, hour)
+        _sync_both(spark, cloud, warehouse)
+    marks = {n: _marks(warehouse, n) for n in ("cleaning_records", "clean_summary")}
+    out = pipeline.gold_maintenance(spark, warehouse, retain_last_n=1)
+    assert out["vacuumed"]["cleaning_records"] == 2
+    assert out["vacuumed"]["clean_summary"] == 2
+    assert {n: _marks(warehouse, n) for n in marks} == marks
+    _sync_both(spark, cloud, warehouse)  # nothing new
+    _land_tick(spark, cloud, 11)
+    _sync_both(spark, cloud, warehouse)
+    keys = _summary_keys(spark, warehouse)
+    assert keys == sorted(set(keys))
+    assert keys == [("bot1", n) for n in (2, 4, 6, 8)] + [("bot2", n) for n in (1, 2, 3, 4)]
+    assert sinks.read_table(spark, warehouse, "cleaning_records").count() == 8
+
+
+def test_overwrite_of_a_synced_table_keeps_the_marks(spark, monitor_dirs):
+    """overwrite_rows replaces a synced table's rows but not its fold
+    position: the marks carry over, so files already folded are not
+    synced again and a new file's rows are still filtered against
+    the old high-water marks."""
+    cloud, warehouse, _ = monitor_dirs
+    pipeline.mode_setup(spark, warehouse)
+    _land_tick(spark, cloud, 8)
+    pipeline.mode_record_sync(spark, cloud, warehouse)
+    marks = _marks(warehouse, "cleaning_records")
+    recs = sinks.read_table(spark, warehouse, "cleaning_records")
+    sinks.overwrite_rows(recs.where("device_name = 'bot1'"), warehouse, "cleaning_records")
+    assert _marks(warehouse, "cleaning_records") == marks
+    pipeline.mode_record_sync(spark, cloud, warehouse)  # nothing new
+    _land_records(spark, cloud, [("bot2", _ts(1, 8, 5), 9.0),  # at bot2's mark
+                                 ("bot2", _ts(1, 9), 4.0)])
+    pipeline.mode_record_sync(spark, cloud, warehouse)
+    got = sorted((r.device_name, r.start_time) for r in
+                 sinks.read_table(spark, warehouse, "cleaning_records").collect())
+    assert got == [("bot1", _ts(1, 8)), ("bot2", _ts(1, 9))]
+
+
+def test_sync_refuses_a_table_without_marks(spark, monitor_dirs):
+    """A table holding live batches but no sync marks -- synced by a
+    build that kept its state nowhere but in the rows -- is refused
+    by name, before any job."""
+    cloud, warehouse, _ = monitor_dirs
+    pipeline.mode_setup(spark, warehouse)
+    _land_tick(spark, cloud, 8)
+    sinks.append_rows(
+        spark.read.schema(schemas.CLEANING_RECORDS).parquet(f"{cloud}/cleaning_records"),
+        warehouse, "cleaning_records",
+    )
+    with pytest.raises(ValueError, match=re.escape(
+        sinks.table_path(warehouse, "cleaning_records")
+    )):
+        pipeline.mode_record_sync(spark, cloud, warehouse)
+
+
 def test_history_topk(spark, cloud_and_warehouse):
     cloud, _ = cloud_and_warehouse
     rows = pipeline.mode_history(spark, cloud, limit=2).collect()

@@ -106,6 +106,33 @@ def test_null_in_non_nullable_column_refused(spark, warehouse):
     assert sinks.list_batches(warehouse, "cleaning_records") == []
 
 
+def test_driver_side_batch_passes_the_same_door(spark, warehouse):
+    """A pyarrow batch (the syncs' driver-side write) meets the same
+    contract as a Spark one: drift and NOT NULL are refused before
+    anything stages, and an omitted nullable column is null-filled."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    ts = dt.datetime(2024, 3, 1, 9, tzinfo=dt.timezone.utc)
+    full = to_arrow_schema(schemas.CLEANING_RECORDS)
+
+    def batch(schema=full, **over):
+        cols = {"timestamp": [ts], "device_name": ["dev"], "start_time": [ts],
+                "duration_minutes": [30.0], "area_sqm": [10.0], "clean_mode": ["s"],
+                "clean_way": ["v"], "error_code": [0], "task_status": ["ok"], **over}
+        return pa.Table.from_pydict(cols, schema=schema)
+
+    drifted = full.set(full.get_field_index("area_sqm"), pa.field("area_sqm", pa.string()))
+    with pytest.raises(ValueError, match="type-drifted"):
+        sinks.append_rows(batch(drifted, area_sqm=["ten"]), warehouse, "cleaning_records")
+    with pytest.raises(ValueError, match="non-nullable column 'device_name'"):
+        sinks.append_rows(batch(device_name=[None]), warehouse, "cleaning_records")
+    assert sinks.list_batches(warehouse, "cleaning_records") == []
+    sinks.append_rows(batch().drop_columns(["task_status"]), warehouse, "cleaning_records")
+    (row,) = sinks.read_table(spark, warehouse, "cleaning_records").collect()
+    assert row.task_status is None and row.area_sqm == 10.0
+
+
 def test_describe_table_reflects_lifecycle(spark, warehouse):
     d0 = sinks.describe_table(warehouse, "cleaning_records")
     assert d0["batch_count"] == 0 and d0["retention_point_ns"] is None

@@ -235,6 +235,25 @@ def test_describe_table_reports_lock_health(spark, warehouse):
     os.unlink(lock)
 
 
+def test_describe_table_reads_the_lease_through_the_seam(spark, tmp_path, monkeypatch):
+    """describe_table reads the lease the way writer_lock takes it:
+    on the in-memory object store, where a lease is no file, a held
+    lease still reports its holder and age."""
+    from roborock_data_pipeline_spark.sources import commit_provider
+
+    monkeypatch.setattr(
+        commit_provider, "BACKEND", commit_provider.InMemoryObjectStoreBackend()
+    )
+    wh = str(tmp_path / "wh")
+    sinks.setup_warehouse(spark, wh)
+    with sinks.writer_lock(wh, "cleaning_records"):
+        held = sinks.describe_table(wh, "cleaning_records")
+    assert held["lock_holder_pid"] == os.getpid()
+    assert held["lock_age_s"] is not None and held["lock_age_s"] >= 0
+    assert held["lock_stale"] is False
+    assert sinks.describe_table(wh, "cleaning_records")["lock_holder_pid"] is None
+
+
 def test_fenced_zombie_release_spares_successor_lock(warehouse):
     """r9 review: a holder fenced out by the TTL takeover must not,
     on resume, unlink its SUCCESSOR's lease — release verifies inode
