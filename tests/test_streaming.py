@@ -290,12 +290,40 @@ def test_sessionizer_survives_restart(spark):
         shutil.rmtree(out_dir.rsplit("/", 1)[0], ignore_errors=True)
 
 
+def _reference_monitor(state, polls):
+    """The reference's dict loop (pipeline.py:132-163) over one file's
+    (device, ts, state, battery) polls: per device, in ts order, a
+    cleaning-start edge captures ts and battery, and an idle edge
+    after cleaning emits the session. ``state`` maps device ->
+    (prev_state, start_ts, start_battery) and carries across calls."""
+    from roborock_data_pipeline_spark.schemas import CLEANING_STATES, IDLE_STATES
+
+    by_device = {}
+    for device, ts, st, battery in polls:
+        by_device.setdefault(device, []).append((ts, st, battery))
+    out = []
+    for device, rows in by_device.items():
+        prev, start_ts, start_battery = state.get(device, (None, None, None))
+        for ts, st, battery in sorted(rows, key=lambda r: r[0]):
+            cur = str(st).lower()
+            was_cleaning = prev in CLEANING_STATES
+            if cur in CLEANING_STATES and not was_cleaning:
+                start_ts, start_battery = ts, battery
+            elif was_cleaning and cur in IDLE_STATES:
+                out.append((device, start_ts, ts, start_battery, battery))
+                start_ts, start_battery = None, None
+            prev = cur
+        state[device] = (prev, start_ts, start_battery)
+    return out
+
+
 def test_monitor_batch_fold_matches_session_stream(spark, tmp_path):
-    """Twin pin for pipeline.mode_monitor: its JVM window fold over the
-    files landed since the last call must emit exactly the sessions
-    detect_sessions_stream's per-row GroupState loop emits, file by
-    file -- a session spanning files, null state and battery, a state
-    that is neither cleaning nor idle, and mixed case included."""
+    """Three-way twin pin for pipeline.mode_monitor: after every landed
+    file, the JVM window fold, detect_sessions_stream's per-row
+    GroupState loop and the pure-Python reference loop emit exactly
+    the same sessions -- a session spanning files, null state and
+    battery, a state that is neither cleaning nor idle, and mixed case
+    included."""
     from roborock_data_pipeline_spark import pipeline, schemas
     from roborock_data_pipeline_spark.sources import sinks
     from roborock_data_pipeline_spark.streaming.sessionize import (
@@ -336,14 +364,17 @@ def test_monitor_batch_fold_matches_session_stream(spark, tmp_path):
         .option("checkpointLocation", str(tmp_path / "stream-ckpt"))
         .start()
     )
+    ref_state, reference = {}, []
     try:
-        for polls in files:
+        for i, polls in enumerate(files):
             rows = [(_ts(1, h), d, st, b, None, None, None, None, None, None, None)
                     for d, h, st, b in polls]
             spark.createDataFrame(rows, status).coalesce(1).write.mode(
                 "append").parquet(src)
             q.processAllAvailable()
             pipeline.mode_monitor(spark, cloud, warehouse, ckpt)
+            reference = sorted(reference + _reference_monitor(
+                ref_state, [(d, _ts(1, h), st, b) for d, h, st, b in polls]))
             streamed = sorted(
                 tuple(r) for r in spark.sql("SELECT * FROM twin_sessions").collect()
             )
@@ -351,7 +382,11 @@ def test_monitor_batch_fold_matches_session_stream(spark, tmp_path):
             folded = sorted(
                 tuple(r) for r in spark.read.parquet(out).collect()
             ) if os.path.isdir(out) else []
-            assert folded == streamed
+            print(f"file {i + 1}: stream {len(streamed)}, reference "
+                  f"{len(reference)}, fold {len(folded)} sessions; "
+                  f"all equal: {streamed == reference == folded}")
+            assert streamed == reference
+            assert folded == reference
     finally:
         q.stop()
     assert folded == [
