@@ -11,6 +11,9 @@ Design stance (SURVEY.md sec 7):
 - No Python UDFs on hot paths; Pandas UDFs only where built-ins
   genuinely can't express the semantics.
 - Explicit StructType schemas; no inference.
+- Batch folds, not long-running queries: the continuous monitor is
+  one batch fold per call (``pipeline.mode_monitor``); the engine has
+  no Structured Streaming.
 - Every operator is a small pure function ``(spark, sf_dir) ->
   DataFrame`` registered in :mod:`.registry` so the driver contract
   (``__spark_entry__.py``) is assembled automatically.

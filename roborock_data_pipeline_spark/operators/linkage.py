@@ -42,8 +42,7 @@ def cdc_merge(snapshot: DataFrame, changes: DataFrame, key_cols: list[str],
     ``delete_col = true`` are tombstones and drop out entirely --
     unless ``keep_tombstones`` is set, which retains them (with
     ``delete_col``) so a *stored* snapshot remembers deletions and a
-    late-arriving older version cannot resurrect a deleted key. The
-    streaming upserter stores with tombstones and filters on read.
+    late-arriving older version cannot resurrect a deleted key.
 
     Scale shape: one shuffle on ``key_cols`` (the window), rank=1
     filter inside the window operator -- identical cost to

@@ -6,11 +6,12 @@ feature-extraction runs as Arrow-batched Pandas functions via
 `mapInPandas` (per-partition batch iterator -- the only part of the
 engine allowed off the JVM, because codec work is genuinely Python).
 
-The container has no image/audio codecs, so `decode_media` is a
-STUB: real decode raises NotImplementedError; the default is a
-deterministic fake (byte-statistics features) so the Spark-side
-plumbing -- schema, batch iteration, partitioning -- is real and
-tested end to end.
+The container has no image/audio codecs, so the queries default to
+a deterministic fake (byte statistics, strided resample) that keeps
+the Spark-side plumbing -- schema, batch iteration, partitioning --
+real and tested end to end. The real-codec slot is `resize_image`:
+Pillow when installed, else the stdlib gray8-PNG decoder
+`_decode_png_gray8`; anything else raises NotImplementedError.
 """
 
 from __future__ import annotations
@@ -130,42 +131,6 @@ def _decode_png_gray8(blob: bytes) -> tuple[int, int, bytes] | None:
         out[r * w:(r + 1) * w] = row
         prev = row
     return w, h, bytes(out)
-
-
-def decode_media(blob: bytes, fmt: str, *, fake: bool = True) -> list[float]:
-    """Decode step. `fake=True` (default) produces deterministic
-    byte-statistic features so the pipeline is testable without
-    codecs. `fake=False` takes the real-codec path: Pillow when
-    installed; otherwise the stdlib gray8-PNG fallback decoder
-    (VERDICT r5 #2 -- the contract executes even in this codec-free
-    container). Shapes neither path can decode raise
-    NotImplementedError naming the dependency -- never a silent
-    fallback to the fake."""
-    if not fake:
-        if fmt.startswith("image/"):
-            try:
-                import io
-
-                from PIL import Image  # type: ignore[import-not-found]
-
-                px = list(Image.open(io.BytesIO(blob)).convert("L").getdata())
-            except ImportError:
-                decoded = _decode_png_gray8(blob)
-                if decoded is None:
-                    raise NotImplementedError(
-                        f"no codec for this {fmt!r} payload -- the stdlib "
-                        "fallback handles 8-bit grayscale PNG only; "
-                        "install Pillow for the general image decode path"
-                    ) from None
-                px = list(decoded[2])
-            return [sum(px) / len(px), float(px[0])] if px else [0.0, 0.0]
-        raise NotImplementedError(
-            f"no codec for {fmt!r} in this environment -- plug in the real "
-            "decoder here (av.open / soundfile.read)"
-        )
-    if not blob:
-        return [0.0, 0.0]
-    return [sum(blob) / len(blob), float(blob[0])]
 
 
 def resize_image(blob: bytes, width: int, height: int) -> bytes:

@@ -287,8 +287,7 @@ def q_weekday_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TS+ (r11): day-of-week seasonal profile -- mean daily event
     volume per weekday and its share of the weekly total, the
     seasonal baseline an anomaly detector divides out before
-    thresholding (the streaming EWMA detector's batch-side
-    calibration table).
+    thresholding (an EWMA detector's calibration table).
 
     Plan shape: one date-grain partial-agg over events (the only
     full-data pass), then a 7-row weekday aggregate; the share window

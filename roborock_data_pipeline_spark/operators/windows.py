@@ -4,9 +4,10 @@ The reference's continuous monitor keeps a per-device dict of the
 previous status and fires a "cleaning session completed" event on the
 cleaning->idle transition (pipeline.py:104-156). Declaratively that is
 `lag(state) OVER (PARTITION BY device ORDER BY ts)` -- one shuffle on
-the device key, then a narrow filter. The genuinely streaming twin
-lives in streaming/sessionize.py; these batch forms are the
-oracle-checkable contract.
+the device key, then a narrow filter. The CLI's monitor
+(pipeline.mode_monitor) runs the same edge detection as a per-call
+fold with carried state; these batch forms are the oracle-checkable
+contract.
 """
 
 from __future__ import annotations

@@ -338,10 +338,10 @@ def mode_monitor(
     then one pointer commit names the new state file and the folded
     files. A crash between the two replays the same epoch and replaces
     the same sessions file with a superset of its sessions. One
-    monitor runs per checkpoint. ``streaming/sessionize.py`` keeps the
-    long-running stream form of the same state machine."""
-    from roborock_data_pipeline_spark.schemas import CLEANING_STATES, IDLE_STATES
-    from roborock_data_pipeline_spark.streaming.sessionize import (
+    monitor runs per checkpoint."""
+    from roborock_data_pipeline_spark.schemas import (
+        CLEANING_STATES,
+        IDLE_STATES,
         SESSION_SCHEMA,
         STATE_SCHEMA,
     )
@@ -374,7 +374,7 @@ def mode_monitor(
     out = spark.sql(
         f"""
         WITH rows AS (
-            -- the stream lowercases str(state): a null state is "none"
+            -- lower(str(state)), as the dict loop does: a null state is "none"
             SELECT device_name, 1 AS k, timestamp AS ts,
                    lower(coalesce(state, 'None')) AS cur, battery,
                    CAST(NULL AS STRUCT<ts: TIMESTAMP, battery: INT>) AS carried

@@ -114,9 +114,9 @@ TESTDATA_SCHEMAS: dict[str, T.StructType] = {
 }
 
 # ---------------------------------------------------------------------------
-# Reference-domain tables (SURVEY sec 1.2). Used by the streaming demo, the
-# sessionization operator's unit tests, and as the documented target schema
-# for anyone pointing this engine at real device telemetry.
+# Reference-domain tables (SURVEY sec 1.2). Used by the pipeline modes and
+# their tests, and as the documented target schema for anyone pointing this
+# engine at real device telemetry.
 # ---------------------------------------------------------------------------
 
 CLEANING_HISTORY = T.StructType([  # CleaningRecord, roborock_collector.py:16-28
@@ -180,3 +180,20 @@ CLEANING_RECORDS = T.StructType([  # CleaningHistoryRecord, roborock_collector.p
 # Device-state categorical domains (config/settings.py:37-38).
 CLEANING_STATES = ["cleaning", "segment_cleaning", "zone_cleaning", "spot_cleaning"]
 IDLE_STATES = ["charger", "idle", "paused", "charging"]
+
+# mode_monitor's outputs: one row per completed session (cf.
+# CleaningRecord, roborock_collector.py:16-28 -- the live-captured
+# shape), and the per-device fold state carried between calls.
+SESSION_SCHEMA = T.StructType([
+    T.StructField("device_name", T.StringType(), False),
+    T.StructField("session_start", T.TimestampType(), True),
+    T.StructField("session_end", T.TimestampType(), False),
+    T.StructField("battery_start", T.IntegerType(), True),
+    T.StructField("battery_end", T.IntegerType(), True),
+])
+
+STATE_SCHEMA = T.StructType([
+    T.StructField("prev_state", T.StringType(), True),
+    T.StructField("start_ts", T.TimestampType(), True),
+    T.StructField("start_battery", T.IntegerType(), True),
+])

@@ -206,40 +206,12 @@ ENTRY_POINT_ALLOW = {
     # incremental refreshes' fold proof rests on
     "sources/sinks.py:read_table_as_of":
         "oracle for the vacuum-base stamp invariant the fold proof uses",
-    # operator toolkit pieces with their own tests, not yet on a query
-    "functions/skew.py:salted_count": "skew toolkit; next D8 candidate",
-    "functions/skew.py:salted_join": "skew toolkit; next D8 candidate",
+    # the cache contract the registry keeps
     "functions/cache_tracking.py:tracked_count":
         "observes the registry's cache contract",
     "functions/cache_tracking.py:release_all":
         "resets the registry's cache contract between tests",
-    "operators/multimodal.py:decode_media":
-        "codec slot (Pillow or stdlib PNG); next D8 candidate",
-    "streaming/sessionize.py:detect_sessions_stream":
-        "long-running stream form of the monitor; pipeline.mode_monitor "
-        "runs the batch fold, pinned equal to it in test_streaming",
 }
-# Test-only modules deferred to the next D8 pass; each goes together
-# with the tests that pin it.
-_DEFERRED = {
-    "sources/formats.py": (
-        "write_csv", "read_csv", "write_json", "read_json",
-        "write_date_partitioned", "write_orc", "read_orc", "read_evolved",
-        "read_json_audited",
-    ),
-    "streaming/aggregations.py": (
-        "hourly_rollup_stream", "incremental_sync", "dedup_stream",
-        "purchase_view_join_stream", "purchase_attribution_stream",
-    ),
-    "streaming/anomaly.py": ("detect_anomalies_stream",),
-    "streaming/cdc_upsert.py": ("read_snapshot", "cdc_upsert_stream"),
-    "streaming/trending.py": ("read_board", "trending_stream"),
-}
-ENTRY_POINT_ALLOW.update({
-    f"{rel}:{name}": "test-only; deferred to the next D8 pass"
-    for rel, names in _DEFERRED.items()
-    for name in names
-})
 
 
 def _code_names(src: str) -> list[tuple[str, int]]:
@@ -302,3 +274,23 @@ def test_no_test_only_engine_entry_points():
     stale = sorted(set(ENTRY_POINT_ALLOW) - set(orphans))
     assert stale == [], f"allowlisted but now reached or gone: {stale}"
     assert all(ENTRY_POINT_ALLOW.values()), "every entry needs a reason"
+
+
+def test_engine_runs_no_structured_streaming():
+    """The monitor is one batch fold per call, with its state committed
+    through the seam. A long-running query object would keep state in
+    a checkpoint the seam does not hold and that perfbench does not
+    trace, so the engine neither imports pyspark.sql.streaming nor
+    starts a stream."""
+    calls = {"readStream", "writeStream", "applyInPandasWithState"}
+    found = []
+    for rel, src in _engine_files():
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(
+                "pyspark.sql.streaming"
+            ) or isinstance(node, ast.Import) and any(
+                a.name.startswith("pyspark.sql.streaming") for a in node.names
+            ):
+                found.append(f"{rel}:{node.lineno}: import")
+        found += [f"{rel}:{line}: {n}" for n, line in _code_names(src) if n in calls]
+    assert found == [], f"Structured Streaming in the engine: {found}"

@@ -104,16 +104,13 @@ def test_approx_percentiles_close_to_exact(spark, sf_dir):
 def test_multimodal_stub_raises_without_fake():
     import pytest
 
-    from roborock_data_pipeline_spark.operators.multimodal import decode_media
-
-    with pytest.raises(NotImplementedError):
-        decode_media(b"abc", "image/png", fake=False)
-    assert decode_media(b"ab", "text/plain") == [97.5, 97.0]
-
     from roborock_data_pipeline_spark.operators.multimodal import (
+        _decode_png_gray8,
         resize_image,
         sample_frames,
     )
+
+    assert _decode_png_gray8(b"abc") is None  # not a PNG: no decode
 
     with pytest.raises(NotImplementedError):
         resize_image(b"abc", 64, 64)

@@ -8,8 +8,9 @@ the touched dates. These tests pin the contract:
 - equivalence: after any append/refresh interleaving the partitioned
   gold table equals the full rebuild's rollup;
 - no-op: a refresh with no new batches touches nothing;
-- crash convergence: losing the watermark after the partition swap
-  replays to byte-identical content (publish is idempotent);
+- crash convergence: a crash between the partition swap and the
+  fold-state commit replays to identical content (publish is
+  idempotent);
 - vacuum interplay: a vacuum base newer than the watermark only
   over-approximates touched dates — never wrong;
 - plan: the per-date recompute scan carries a pushed start_time range.
@@ -127,17 +128,33 @@ def test_noop_refresh_reads_its_state_back_on_the_memory_backend(
     assert [r["total_cleanings"] for r in _gold_rows(spark, wh)] == [1]
 
 
-def test_crash_between_swap_and_watermark_converges(spark, warehouse):
+def test_crash_between_swap_and_watermark_converges(spark, warehouse, monkeypatch):
+    """A crash AFTER the partition swap, BEFORE the fold state commits:
+    the next refresh replays the same batches and converges. The crash
+    is injected at the commit seam, so it holds on every backend."""
+    from roborock_data_pipeline_spark.sources import commit_provider
+
     _append(spark, warehouse, [_rec(1, 9), _rec(2, 9)])
     pipeline.refresh_daily_summary(spark, warehouse)
+    _append(spark, warehouse, [_rec(2, 20), _rec(3, 9)])
+    state_path = pipeline._rollup_watermark_path(warehouse)
+    real = commit_provider.commit_pointer
+
+    def crash(path, data):
+        if path == state_path:
+            raise OSError("injected crash before the fold-state commit")
+        real(path, data)
+
+    monkeypatch.setattr(commit_provider, "commit_pointer", crash)
+    with pytest.raises(OSError, match="injected"):
+        pipeline.refresh_daily_summary(spark, warehouse)
     rows = _gold_rows(spark, warehouse)
-    # simulate a crash AFTER the partition swap, BEFORE the watermark
-    # advanced: the refresh must replay the same batches and converge
-    os.remove(pipeline._rollup_watermark_path(warehouse))
+    assert rows == _full_rollup_rows(spark, warehouse)  # swapped, not committed
+    monkeypatch.setattr(commit_provider, "commit_pointer", real)
     out = pipeline.refresh_daily_summary(spark, warehouse)
-    assert out["new_batches"] >= 1  # replayed
+    assert out["new_batches"] == 1  # replayed
     assert _gold_rows(spark, warehouse) == rows
-    # and the watermark is restored: next run is a no-op
+    # and the fold state is committed: next run is a no-op
     assert pipeline.refresh_daily_summary(spark, warehouse) == {
         "new_batches": 0,
         "dates_refreshed": 0,

@@ -79,7 +79,7 @@ def _png_gray(pixels):
 
 def test_real_codec_slot(spark):
     """VERDICT r4 #7 + r5 #2 (now unconditional — no skip): push a
-    real PNG through the codec slot — decode_media(fake=False) and
+    real PNG through the codec slot — the stdlib gray8-PNG decoder and
     resize_media(fake=False) → aHash — proving the Arrow slot's
     contract (image bytes in → w*h grayscale bytes out → 64-bit hash)
     against an actual decoder, not the deterministic fake. Without
@@ -90,8 +90,8 @@ def test_real_codec_slot(spark):
     from roborock_data_pipeline_spark.operators.multimodal import (
         RESIZE_H,
         RESIZE_W,
+        _decode_png_gray8,
         ahash_fingerprints,
-        decode_media,
         resize_media,
     )
 
@@ -99,8 +99,7 @@ def test_real_codec_slot(spark):
     pixels = [[20 if r < 8 else 220 for _c in range(16)] for r in range(16)]
     png = _png_gray(pixels)
 
-    feats = decode_media(png, "image/png", fake=False)
-    assert feats == [120.0, 20.0]  # mean gray, first pixel
+    assert _decode_png_gray8(png) == (16, 16, bytes(sum(pixels, [])))
 
     df = spark.createDataFrame([(1, bytearray(png))],
                                "doc_id long, media binary")
@@ -212,19 +211,14 @@ def test_real_codec_unsupported_raises_clearly():
     except ImportError:
         pass
 
-    from roborock_data_pipeline_spark.operators.multimodal import (
-        decode_media,
-        resize_image,
-    )
+    from roborock_data_pipeline_spark.operators.multimodal import resize_image
 
     # truncated magic-only blob, a JPEG, and an RGB (color type 2) PNG
     # are all outside the gray8 fallback's shape
     with pytest.raises(NotImplementedError, match="Pillow"):
-        decode_media(b"\x89PNG", "image/png", fake=False)
-    with pytest.raises(NotImplementedError, match="Pillow"):
-        decode_media(b"\xff\xd8\xff\xe0jpeg", "image/jpeg", fake=False)
-    with pytest.raises(NotImplementedError, match="Pillow"):
         resize_image(b"\x89PNG", 8, 8)
+    with pytest.raises(NotImplementedError, match="Pillow"):
+        resize_image(b"\xff\xd8\xff\xe0jpeg", 8, 8)
 
     import struct
     import zlib
@@ -243,34 +237,30 @@ def test_real_codec_unsupported_raises_clearly():
 
 def test_pillow_branch_executes_via_api_stub(monkeypatch):
     """VERDICT r7 missing #4: the `PIL Image.open/convert("L")` lines
-    in decode_media and resize_image had ZERO executions anywhere (the
+    in resize_image had ZERO executions anywhere (the
     codec-free container always takes the stdlib-fallback arm). This
     test executes the Pillow branch itself by injecting a PIL-API
     stub into sys.modules whose decode and NEAREST resample are
     implemented INDEPENDENTLY of operators.multimodal (own chunk
     parser, own center-sampling math) — so it verifies the branch's
-    call sequence (open → convert("L") → getdata / resize(NEAREST) →
-    tobytes), its dtype/shape handling, and byte parity with the
-    stdlib-fallback arm, not merely that a mock was called. Both
-    functions are pure driver-side (the mapInPandas wrapper calls
-    them per-row), so no Spark worker import is involved."""
+    call sequence (open → convert("L") → resize(NEAREST) → tobytes),
+    its dtype/shape handling, and byte parity with the stdlib-fallback
+    arm, not merely that a mock was called. The function is pure
+    driver-side (the mapInPandas wrapper calls it per row), so no
+    Spark worker import is involved."""
     import io
     import struct
     import sys
     import types
     import zlib
 
-    from roborock_data_pipeline_spark.operators.multimodal import (
-        decode_media,
-        resize_image,
-    )
+    from roborock_data_pipeline_spark.operators.multimodal import resize_image
 
     pixels = [[20 if r < 8 else 220 for _c in range(16)] for r in range(16)]
     png = _png_gray(pixels)
 
     # capture the fallback arm's output BEFORE patching (this
-    # container has no Pillow, so these calls take the stdlib path)
-    fallback_feats = decode_media(png, "image/png", fake=False)
+    # container has no Pillow, so this call takes the stdlib path)
     fallback_resized = resize_image(png, 8, 8)
 
     calls = []
@@ -283,10 +273,6 @@ def test_pillow_branch_executes_via_api_stub(monkeypatch):
             calls.append(f"convert:{mode}")
             assert mode == "L"
             return self
-
-        def getdata(self):
-            calls.append("getdata")
-            return list(self.px)
 
         def resize(self, size, resample):
             calls.append("resize")
@@ -337,11 +323,6 @@ def test_pillow_branch_executes_via_api_stub(monkeypatch):
     pil.Image = image_mod
     monkeypatch.setitem(sys.modules, "PIL", pil)
 
-    feats = decode_media(png, "image/png", fake=False)
-    assert calls[:2] == ["open", "convert:L"], "PIL branch did not run"
-    assert feats == [120.0, 20.0] == fallback_feats
-
-    calls.clear()
     resized = resize_image(png, 8, 8)
     assert calls == ["open", "convert:L", "resize", "tobytes"]
     # independent reference AND parity with the stdlib arm: the two

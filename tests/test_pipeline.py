@@ -146,8 +146,6 @@ def test_monitor_detects_session(spark, cloud_and_warehouse):
     """The sessions dir is flat part files that a plain reader opens
     with SESSION_SCHEMA's names and types (UTC timestamps, int
     batteries)."""
-    from roborock_data_pipeline_spark.streaming.sessionize import SESSION_SCHEMA
-
     cloud, warehouse = cloud_and_warehouse
     ckpt = tempfile.mkdtemp()
     try:
@@ -156,7 +154,7 @@ def test_monitor_detects_session(spark, cloud_and_warehouse):
             sinks.table_path(warehouse, "cleaning_history_stream")
         )
         assert [(f.name, f.dataType) for f in df.schema] == [
-            (f.name, f.dataType) for f in SESSION_SCHEMA
+            (f.name, f.dataType) for f in schemas.SESSION_SCHEMA
         ]
         out = df.collect()
         assert len(out) == 1
@@ -301,6 +299,70 @@ def test_monitor_runs_two_jobs_warm(spark, monitor_dirs):
     assert len(_sessions(spark, warehouse)) == 1
 
 
+def _reference_monitor(state, polls):
+    """The reference's dict loop (pipeline.py:132-163) over one file's
+    (device, ts, state, battery) polls: per device, in ts order, a
+    cleaning-start edge captures ts and battery, and an idle edge
+    after cleaning emits the session. ``state`` maps device ->
+    (prev_state, start_ts, start_battery) and carries across calls."""
+    by_device = {}
+    for device, ts, st, battery in polls:
+        by_device.setdefault(device, []).append((ts, st, battery))
+    out = []
+    for device, rows in by_device.items():
+        prev, start_ts, start_battery = state.get(device, (None, None, None))
+        for ts, st, battery in sorted(rows, key=lambda r: r[0]):
+            cur = str(st).lower()
+            was_cleaning = prev in schemas.CLEANING_STATES
+            if cur in schemas.CLEANING_STATES and not was_cleaning:
+                start_ts, start_battery = ts, battery
+            elif was_cleaning and cur in schemas.IDLE_STATES:
+                out.append((device, start_ts, ts, start_battery, battery))
+                start_ts, start_battery = None, None
+            prev = cur
+        state[device] = (prev, start_ts, start_battery)
+    return out
+
+
+def test_monitor_fold_matches_reference_loop(spark, monitor_dirs):
+    """Twin pin for mode_monitor: after every landed file, its JVM
+    window fold emits exactly the sessions the reference's per-device
+    dict loop emits -- a session spanning files, null state and
+    battery, a state that is neither cleaning nor idle, and mixed case
+    included."""
+    cloud, warehouse, ckpt = monitor_dirs
+    files = [
+        [("bot1", 1, "charging", 100), ("bot1", 2, "cleaning", None),
+         ("bot1", 3, "cleaning", 90),
+         ("bot2", 1, "cleaning", 80), ("bot2", 2, "error", 79),
+         ("bot2", 3, "idle", 79), ("bot2", 4, "cleaning", 78),
+         ("bot3", 1, "cleaning", 70), ("bot3", 2, None, 69),
+         ("bot3", 3, "cleaning", 68), ("bot5", 1, "idle", 50)],
+        [("bot1", 5, "cleaning", 85), ("bot1", 6, "idle", 80),
+         ("bot2", 5, "zone_cleaning", 77), ("bot2", 6, "paused", None),
+         ("bot3", 4, "charging", 67), ("bot4", 4, "Cleaning", 60),
+         ("bot6", 4, "cleaning", 40)],
+        [("bot4", 7, "IDLE", 55), ("bot1", 7, "segment_cleaning", 79),
+         ("bot1", 8, "returning", 78), ("bot1", 9, "charger", 78),
+         ("bot6", 8, "spot_cleaning", 35)],
+    ]
+    out = sinks.table_path(warehouse, "cleaning_history_stream")
+    state, reference = {}, []
+    for polls in files:
+        polls = [(d, _ts(1, h), st, b) for d, h, st, b in polls]
+        _land(spark, cloud, polls)
+        pipeline.mode_monitor(spark, cloud, warehouse, ckpt)
+        reference = sorted(reference + _reference_monitor(state, polls))
+        folded = _sessions(spark, warehouse) if os.path.isdir(out) else []
+        assert folded == reference
+    assert folded == [
+        ("bot1", _ts(1, 2), _ts(1, 6), None, 80),
+        ("bot2", _ts(1, 4), _ts(1, 6), 78, None),
+        ("bot3", _ts(1, 3), _ts(1, 4), 68, 67),
+        ("bot4", _ts(1, 4), _ts(1, 7), 60, 55),
+    ]
+
+
 def _land_records(spark, cloud, recs):
     """Land one new cleaning_records file of (device, start, area)."""
     rows = [(start, d, start, 30.0, area, "vacuum", "auto", None, "completed")
@@ -340,7 +402,11 @@ def test_ingest_steps_job_counts_warm(spark, monitor_dirs):
     """Job-count pins for a warm ingest tick: record_sync is one
     scan-collect of the new files; smart one aggregate (a shuffle
     job and a result job); each gold refresh one aggregate plus its
-    write."""
+    write. gold_maintenance runs after them, as perfbench's
+    maintenance tick does: both golds are then already folded, so its
+    jobs are the vacuum's merge writes, one per batch-log table."""
+    from perfbench.ingest import RETAIN_BATCHES
+
     cloud, warehouse, _ = monitor_dirs
     pipeline.mode_setup(spark, warehouse)
     steps = {
@@ -348,16 +414,21 @@ def test_ingest_steps_job_counts_warm(spark, monitor_dirs):
         "smart": lambda: pipeline.mode_smart(spark, cloud, warehouse),
         "refresh_daily": lambda: pipeline.refresh_daily_summary(spark, warehouse),
         "refresh_lifetime": lambda: pipeline.refresh_device_lifetime(spark, warehouse),
+        "gold_maintenance": lambda: pipeline.gold_maintenance(
+            spark, warehouse, retain_last_n=RETAIN_BATCHES),
     }
-    _land_tick(spark, cloud, 8)
-    for step in steps.values():
-        step()
-    _land_tick(spark, cloud, 9)
+    for hour in (8, 9):  # two warm ticks: the third's vacuum has two batches to merge
+        _land_tick(spark, cloud, hour)
+        for step in steps.values():
+            step()
+    _land_tick(spark, cloud, 10)
     jobs = {name: _group_stats(spark, step)["jobs"] for name, step in steps.items()}
     assert jobs == {"record_sync": 1, "smart": 2, "refresh_daily": 2,
-                    "refresh_lifetime": 2}
-    assert sinks.read_table(spark, warehouse, "cleaning_records").count() == 4
-    assert sinks.read_table(spark, warehouse, "clean_summary").count() == 4
+                    "refresh_lifetime": 2, "gold_maintenance": 2}
+    for table in ("cleaning_records", "clean_summary"):
+        assert sinks.read_table(spark, warehouse, table).count() == 6
+        # the vacuum merged the two older batches: one base, one retained
+        assert len(sinks.list_batches(warehouse, table)) == 2
 
 
 @pytest.mark.parametrize("mode, source", [

@@ -219,3 +219,23 @@ def test_sniffer_handles_directory_shaped_stream_batches(tmp_path, spark):
     d2 = str(tmp_path / "suffixless")
     df.coalesce(1).write.mode("overwrite").parquet(d2 + "/events_batch1")
     assert "ts" in tables.ns_timestamp_cols(d2, "events")
+
+
+def test_register_views_sql_interface(spark, sf_dir):
+    """After register_views, raw Spark SQL runs against the same
+    table names the oracles use."""
+    from roborock_data_pipeline_spark.sources import tables
+
+    tables.register_views(spark, sf_dir)
+    got = spark.sql(
+        "SELECT r_name, COUNT(*) AS n FROM region GROUP BY r_name"
+    ).count()
+    assert got == 5
+    joined = spark.sql(
+        """
+        SELECT n.n_name, COUNT(*) AS n_cust
+        FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
+        GROUP BY n.n_name
+        """
+    )
+    assert joined.count() == 25
