@@ -278,19 +278,17 @@ def test_no_test_only_engine_entry_points():
 
 def test_engine_runs_no_structured_streaming():
     """The monitor is one batch fold per call, with its state committed
-    through the seam. A long-running query object would keep state in
-    a checkpoint the seam does not hold and that perfbench does not
-    trace, so the engine neither imports pyspark.sql.streaming nor
-    starts a stream."""
+    through the seam. A long-running query would keep its state in a
+    stream checkpoint outside the seam, so the engine neither imports
+    pyspark.sql.streaming nor starts a stream."""
     calls = {"readStream", "writeStream", "applyInPandasWithState"}
     found = []
     for rel, src in _engine_files():
         for node in ast.walk(ast.parse(src)):
-            if isinstance(node, ast.ImportFrom) and (node.module or "").startswith(
-                "pyspark.sql.streaming"
-            ) or isinstance(node, ast.Import) and any(
-                a.name.startswith("pyspark.sql.streaming") for a in node.names
-            ):
+            mods = ([a.name for a in node.names] if isinstance(node, ast.Import)
+                    else [node.module or ""] if isinstance(node, ast.ImportFrom)
+                    else [])
+            if any(m.startswith("pyspark.sql.streaming") for m in mods):
                 found.append(f"{rel}:{node.lineno}: import")
         found += [f"{rel}:{line}: {n}" for n, line in _code_names(src) if n in calls]
     assert found == [], f"Structured Streaming in the engine: {found}"
