@@ -31,7 +31,7 @@ tests/test_antipatterns.py, which guards it:
    daily_summary, daily_refresh, curate, health; the library forms
    ``pipeline.refresh_device_lifetime`` / ``gold_maintenance`` /
    ``run_scheduled``; and the readers of what those modes write:
-   ``sinks.read_table`` / ``read_partitioned`` / ``read_batch_dirs``,
+   ``sinks.read_table`` / ``read_batch_dirs``,
    ``pipeline.read_daily_summary`` / ``read_device_lifetime``,
    ``export.read_export``.
 3. What ``perfbench/`` drives: ``session.get_spark``, the registry
@@ -40,7 +40,7 @@ tests/test_antipatterns.py, which guards it:
    ``mode_smart`` / ``mode_monitor`` / ``refresh_daily_summary`` /
    ``refresh_device_lifetime`` / ``gold_maintenance``, then the gold
    readers) over ``sinks.append_rows`` / ``list_batches`` /
-   ``overwrite_partitions`` / ``vacuum_table``.
+   ``vacuum_table`` and ``versioned_dir.publish``.
 4. The commit seam: ``sources.commit_provider.BACKEND`` --
    ``LocalFSBackend`` by default; ``InMemoryObjectStoreBackend`` and
    ``FaultInjectingBackend`` model an object store and its faults.

@@ -29,8 +29,7 @@ CDC_CUTOFF = "2024-01-16"
 
 
 def cdc_merge(snapshot: DataFrame, changes: DataFrame, key_cols: list[str],
-              order_cols: list[str], delete_col: str,
-              keep_tombstones: bool = False) -> DataFrame:
+              order_cols: list[str], delete_col: str) -> DataFrame:
     """Latest-writer-wins merge of a CDC batch onto a snapshot.
 
     The max of ``order_cols`` wins across both sides; ``changes``
@@ -39,10 +38,10 @@ def cdc_merge(snapshot: DataFrame, changes: DataFrame, key_cols: list[str],
     ``order_cols`` dominant is what makes late-arriving old versions
     harmless: a change row older than the stored version -- including
     a stored tombstone -- loses. Rows whose winning version has
-    ``delete_col = true`` are tombstones and drop out entirely --
-    unless ``keep_tombstones`` is set, which retains them (with
-    ``delete_col``) so a *stored* snapshot remembers deletions and a
-    late-arriving older version cannot resurrect a deleted key.
+    ``delete_col = true`` are tombstones and drop out entirely; a
+    ``snapshot`` that stores them (with ``delete_col``) remembers
+    deletions, so a late-arriving older version cannot resurrect a
+    deleted key.
 
     Scale shape: one shuffle on ``key_cols`` (the window), rank=1
     filter inside the window operator -- identical cost to
@@ -61,8 +60,6 @@ def cdc_merge(snapshot: DataFrame, changes: DataFrame, key_cols: list[str],
         .where(F.col("_rn") == 1)
         .drop("_rn", "_src")
     )
-    if keep_tombstones:
-        return latest
     return latest.where(~F.col(delete_col)).drop(delete_col)
 
 

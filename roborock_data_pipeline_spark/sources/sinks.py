@@ -6,14 +6,17 @@ header rows (:80-126), one-shot spreadsheet provisioning (:258-328),
 and a console pretty-printer fallback when the sink is unavailable
 (pipeline.py:43-89, wired at 186-196).
 
-Engine equivalents: parquet table appends (partition-level atomic,
-schema-enforced -- the A:K range bug of sheets_client.py:136 cannot
-happen), warehouse bootstrap as directories + schema manifests, and
-the same console fallback semantics via show().
+Engine equivalents: parquet table appends (batch-atomic through one
+manifest commit, schema-enforced -- the A:K range bug of
+sheets_client.py:136 cannot happen), warehouse bootstrap as
+directories + schema manifests, and the same console fallback
+semantics via show().
 
-Scale: appends write date-partitioned parquet
-(`partitionBy("date")`), which is what makes the incremental
-queries' date predicates prune partitions at 100 TB.
+Scale: every append is one batch dir of plain parquet; readers scan
+the batches the manifest names, and start_time predicates prune by
+the parquet row-group statistics. The derived gold tables are not
+batch logs: they are versioned snapshots (sources/versioned_dir,
+published by pipeline._publish_gold).
 """
 
 from __future__ import annotations
@@ -47,24 +50,6 @@ WAREHOUSE_TABLES: dict[str, T.StructType] = {
     "clean_summary": schemas.CLEAN_SUMMARY,
     "consumables": schemas.CONSUMABLES,
     "cleaning_records": schemas.CLEANING_RECORDS,
-    # the declared-but-never-populated gold table the engine DOES build
-    "daily_summary": T.StructType([
-        T.StructField("date", T.StringType(), False),
-        T.StructField("total_cleanings", T.LongType(), False),
-        T.StructField("total_area_m2", T.DoubleType(), True),
-        T.StructField("total_time_min", T.LongType(), True),
-        T.StructField("avg_area_m2", T.DoubleType(), True),
-        T.StructField("avg_time_min", T.DoubleType(), True),
-    ]),
-}
-
-
-# Partition-maintained gold tables (overwrite_partitions /
-# read_partitioned, built by pipeline.refresh_daily_summary): the daily
-# gold keeps the daily_summary shape, so a read before its first
-# refresh returns an empty frame of that shape.
-PARTITIONED_TABLES: dict[str, T.StructType] = {
-    "daily_summary_by_date": WAREHOUSE_TABLES["daily_summary"],
 }
 
 
@@ -79,15 +64,14 @@ def table_schema(warehouse_dir: str, name: str) -> T.StructType:
     """The table's declared schema: the committed manifest if one
     exists (written at provisioning, or by the first overwrite of a
     table no code declares), else the code-pinned declaration
-    (WAREHOUSE_TABLES or PARTITIONED_TABLES); KeyError for a table
-    with neither. Every reader and every publish door resolves
-    through here."""
+    (WAREHOUSE_TABLES); KeyError for a table with neither. Every
+    reader and every publish door resolves through here."""
     p = os.path.join(table_path(warehouse_dir, name), SCHEMA_MANIFEST)
     raw = commit_provider.read_pointer(p)
     try:
         return T.StructType.fromJson(json.loads(raw)["schema"])
     except (TypeError, ValueError, KeyError):
-        return {**WAREHOUSE_TABLES, **PARTITIONED_TABLES}[name]
+        return WAREHOUSE_TABLES[name]
 
 
 def _write_schema_manifest(
@@ -169,16 +153,15 @@ def _fuse_not_null(
     """NOT NULL enforcement, fused into the write job at plan time via
     assert_true -- a violating batch dies BEFORE the staged rename, so
     nothing partial publishes and the table is unchanged. Shared by
-    EVERY publish path (append_rows, overwrite_rows,
-    overwrite_partitions). NOT NULL is a VALUE constraint Spark does
-    not enforce on write (schema nullability is advisory there); this
-    is Delta's door-level semantics -- one batch-sized scan, no second
-    pass. The declared schema resolves through table_schema, so a
-    code-declared table is checked from its first publish on, manifest
-    or not (daily_summary_by_date has none); only a table that neither
-    code nor a manifest declares yet publishes unchecked. Only declared
-    non-nullable columns PRESENT in df are asserted (overwrite paths
-    may publish projections)."""
+    every Spark publish path (append_rows, overwrite_rows). NOT NULL is
+    a VALUE constraint Spark does not enforce on write (schema
+    nullability is advisory there); this is Delta's door-level
+    semantics -- one batch-sized scan, no second pass. The declared
+    schema resolves through table_schema, so a code-declared table is
+    checked from its first publish on, manifest or not; only a table
+    that neither code nor a manifest declares yet publishes unchecked.
+    Only declared non-nullable columns PRESENT in df are asserted
+    (overwrite paths may publish projections)."""
     try:
         declared = {
             f.name: f for f in table_schema(warehouse_dir, name).fields
@@ -211,7 +194,7 @@ def _fuse_not_null(
 # `_batches.json` (a generation-numbered manifest naming the live      #
 # batch dirs) -- the local-FS form of an object store's atomic or      #
 # conditional PUT of a manifest object, the same commit primitive the  #
-# partitioned gold tables use (_partitions.json) and the one           #
+# versioned gold snapshots use (_current.json) and the one             #
 # Delta/Iceberg commit through. Nothing depends on a directory rename  #
 # being atomic, which it is not on object storage. Data dirs are       #
 # written fully INVISIBLE (readers resolve the manifest, never the     #
@@ -245,26 +228,16 @@ BATCHES_MANIFEST = "_batches.json"
 MANIFEST_LOCK_TTL_S = 60.0
 
 def _refuse_unmanifested(table_dir: str) -> None:
-    """A table dir with no committed manifest (neither
-    `_batches.json` nor `_partitions.json`) is a fresh table only while
-    it holds no data. Batch dirs, root-level part files, or partition
-    dirs with parquet outside a version segment belong to the
-    pre-manifest layouts (rename-committed batch log, plain parquet,
-    unversioned partitions), which are unsupported: raise, naming the
-    path, rather than serve a read set that silently omits their rows.
-    A first partition overwrite that crashed before its commit leaves
-    only version segments, which are not data and pass."""
+    """A table dir with no committed `_batches.json` is a fresh table
+    only while it holds no data. Batch dirs, root-level part files, or
+    partition dirs holding parquet belong to the pre-manifest layouts
+    (rename-committed batch log, plain parquet, hive partitions),
+    which are unsupported: raise, naming the path, rather than serve a
+    read set that silently omits their rows."""
     if not os.path.isdir(table_dir):
         return
-    for m in (BATCHES_MANIFEST, PARTITIONS_MANIFEST):
-        path = os.path.join(table_dir, m)
-        if commit_provider.read_pointer(path) is not None:
-            return
     for root, dirs, files in os.walk(table_dir):
-        dirs[:] = [
-            d for d in dirs
-            if not d.startswith((".", "_", f"{_VERSION_SEG}="))
-        ]
+        dirs[:] = [d for d in dirs if not d.startswith((".", "_"))]
         batch_dirs = root == table_dir and any(
             d.startswith("batch-") for d in dirs
         )
@@ -274,9 +247,9 @@ def _refuse_unmanifested(table_dir: str) -> None:
         ):
             raise ValueError(
                 f"table dir {table_dir!r} holds data but no "
-                f"{BATCHES_MANIFEST} or {PARTITIONS_MANIFEST}: this "
-                "pre-manifest layout is unsupported -- rebuild the table "
-                "from its source into a freshly provisioned warehouse"
+                f"{BATCHES_MANIFEST}: this pre-manifest layout is "
+                "unsupported -- rebuild the table from its source into a "
+                "freshly provisioned warehouse"
             )
 
 
@@ -1258,157 +1231,13 @@ def warehouse_maintenance(
     }
 
 
-PARTITIONS_MANIFEST = "_partitions.json"
-_VERSION_SEG = "__rrpv"  # versioned leaf dir: <part>=<val>/__rrpv=<hex>
-
-
-def _partitions_manifest(table_dir: str) -> dict[str, str] | None:
-    """{partition relpath (e.g. 'date=2024-03-01'): version segment
-    ('__rrpv=<hex>')} -- the committed partition set. None = the table
-    has never committed a partition overwrite."""
-    raw = commit_provider.read_pointer(
-        os.path.join(table_dir, PARTITIONS_MANIFEST)
+# Only perfbench's traced tick still names these two (it wraps them by
+# getattr); the partitioned table layout they served is retired.
+def _partitioned_layout_retired(*_args, **_kwargs):
+    raise ValueError(
+        "the partitioned table layout is retired: the gold tables are "
+        "versioned snapshots (pipeline.read_daily_summary)"
     )
-    try:
-        return dict(json.loads(raw)["partitions"])
-    except (TypeError, ValueError, KeyError):
-        return None
 
 
-def overwrite_partitions(
-    df: DataFrame, warehouse_dir: str, name: str, partition_cols: list[str]
-) -> int:
-    """EXT: dynamic partition overwrite -- replace ONLY the partitions
-    present in ``df``, leaving every other partition untouched -- with
-    a CROSS-PARTITION-ATOMIC commit (VERDICT r6 #1 / r7 missing #1).
-
-    This is the 100 TB form of a gold-table refresh: mode_daily_summary
-    full-rebuilds (fine at reference scale, ~1 row/day), but a
-    1000-executor deployment recomputes just the recent dates and
-    swaps those date partitions in place.
-
-    Pre-r8 this was Spark's ``partitionOverwriteMode=dynamic``, which
-    swaps each date dir atomically but not the SET -- a concurrent
-    reader could see mixed old/new dates mid-refresh. Now each
-    partition's files live under a versioned leaf dir
-    (``date=X/__rrpv=<hex>``, invisible until referenced) and the
-    entire touched set commits through ONE atomic manifest rename
-    (``_partitions.json``, resolved by read_partitioned exactly like
-    table_schema resolves ``_schema.json``): every reader sees all
-    touched dates old, or all new -- never mixed, never missing.
-    A crash before the manifest rename leaves only unreferenced
-    version dirs (readers unaffected; a deterministic re-run
-    converges and the orphans are GC'd).
-
-    Version GC runs at ENTRY, not at commit (a grace window):
-    versions superseded by the PREVIOUS overwrite are
-    reclaimed here, so a reader that resolved the old manifest keeps
-    its files for a full maintenance interval. Disk cost: at most two
-    versions per partition.
-
-    A table dir holding partition files outside a version segment and
-    no manifest is an unsupported older layout and is refused
-    (_refuse_unmanifested), never overwritten around.
-
-    Returns the number of partitions the commit swapped in: those
-    ``df`` holds rows for.
-    """
-    df = _fuse_not_null(df, warehouse_dir, name, verb="overwrite")
-    table_dir = table_path(warehouse_dir, name)
-    os.makedirs(table_dir, exist_ok=True)
-    # a table with a live batch log is a batch-log table: its readers
-    # resolve _batches.json and would never see the partitions
-    if list_batches(warehouse_dir, name):
-        raise ValueError(
-            f"overwrite_partitions targets batch-log table {name!r} "
-            "(live batch dirs present): partitioned gold layout and "
-            "the batch log cannot share a table -- use append_rows "
-            "there, or a separate gold table here"
-        )
-    committed = _partitions_manifest(table_dir)
-    if committed is None:
-        _refuse_unmanifested(table_dir)
-        committed = {}
-    # entry GC: reclaim version dirs no manifest references (previous
-    # overwrite's superseded versions + crash orphans)
-    for key, vseg in list(committed.items()):
-        part_dir = os.path.join(table_dir, key)
-        if not os.path.isdir(part_dir):
-            continue
-        for d in os.listdir(part_dir):
-            if d.startswith(f"{_VERSION_SEG}=") and d != vseg:
-                shutil.rmtree(os.path.join(part_dir, d), ignore_errors=True)
-
-    staging_root = os.path.join(warehouse_dir, ".staging")
-    os.makedirs(staging_root, exist_ok=True)
-    staged = os.path.join(staging_root, f"{name}-parts-{uuid.uuid4().hex[:8]}")
-    try:
-        df.write.mode("overwrite").partitionBy(*partition_cols).parquet(staged)
-        # move each staged partition under an (unreferenced) version
-        # dir -- invisible to readers until the manifest commit below
-        new_pointers: dict[str, str] = {}
-        for root, _dirs, files in os.walk(staged):
-            rel = os.path.relpath(root, staged)
-            if rel == "." or not any(
-                not f.startswith((".", "_")) for f in files
-            ):
-                continue
-            if rel.count(os.sep) + 1 != len(partition_cols):
-                continue  # not a leaf partition dir
-            vseg = f"{_VERSION_SEG}={uuid.uuid4().hex[:12]}"
-            dst_parent = os.path.join(table_dir, rel)
-            os.makedirs(dst_parent, exist_ok=True)
-            os.replace(root, os.path.join(dst_parent, vseg))
-            new_pointers[rel.replace(os.sep, "/")] = vseg
-        _pin_schema_if_undeclared(warehouse_dir, name, df.schema)
-        # THE commit point: one pointer swap publishes every touched
-        # partition's new version together
-        _check_fence()  # abort a TTL-fenced refresh before commit
-        merged = {**committed, **new_pointers}
-        commit_pointer(
-            os.path.join(table_dir, PARTITIONS_MANIFEST),
-            json.dumps({"partitions": merged}).encode(),
-        )
-        return len(new_pointers)
-    finally:
-        if os.path.exists(staged):
-            shutil.rmtree(staged, ignore_errors=True)
-
-
-def read_partitioned(
-    spark: SparkSession, warehouse_dir: str, name: str
-) -> DataFrame:
-    """Read a hive-partitioned table written by overwrite_partitions,
-    resolving the committed partition->version mapping from
-    ``_partitions.json`` -- one manifest read, no directory walk, and
-    a snapshot that is consistent across a concurrent refresh's
-    commit (all touched dates old or all new, never mixed).
-
-    The scan is pinned to the table's manifest schema (partition
-    columns included; they come back from directory names via
-    ``basePath``), so building the frame runs no schema-inference job.
-    Filters on partition columns prune directories at planning time
-    (PartitionFilters -- pinned in tests/test_atomic_sink.py), so a
-    query for one date never lists or opens the other dates' files.
-    A table with no committed partition yet reads as an empty frame of
-    its declared schema."""
-    table_dir = table_path(warehouse_dir, name)
-    committed = _partitions_manifest(table_dir)
-    if not committed:
-        _refuse_unmanifested(table_dir)
-        return spark.createDataFrame([], table_schema(warehouse_dir, name))
-    schema = table_schema(warehouse_dir, name)
-    paths = [
-        os.path.join(table_dir, key.replace("/", os.sep), vseg)
-        for key, vseg in sorted(committed.items())
-    ]
-    return (
-        spark.read.schema(
-            T.StructType(
-                schema.fields + [T.StructField(_VERSION_SEG, T.StringType())]
-            )
-        )
-        .option("basePath", table_dir)
-        .parquet(*paths)
-        .drop(_VERSION_SEG)
-    )
+overwrite_partitions = read_partitioned = _partitioned_layout_retired

@@ -27,37 +27,16 @@ TABLE_NAMES = [
 
 
 def _physical_parquet_files(sf_dir: str, name: str) -> list[str]:
-    """The physical parquet file(s) behind the paths the engine reads.
-
-    Batch load() reads exactly ``{sf_dir}/{name}.parquet`` (plain file
-    or directory layout) -- when that exists, the sniffer inspects it
-    and nothing else, so it can never classify from a file the scan
-    does not read. The STREAMING file source reads the glob
-    ``{sf_dir}/{name}*``; when the exact batch path is absent the
-    sniffer falls back to that SAME glob (not a narrower
-    ``*.parquet`` one) so it sees every layout the stream reads:
-    plain ``events-0.parquet`` files, Spark-written ``events-0.
-    parquet/`` directories (df.write.parquet always makes a dir), and
-    suffixless ``events_batch1/`` dirs. Directory matches walk to
-    their part files; non-parquet plain files are skipped (the stream
-    would reject them too, but the sniffer's job is units, not
-    validation)."""
+    """The physical parquet file(s) behind ``{sf_dir}/{name}.parquet``,
+    the one path load() reads (plain file or directory layout; none
+    when it is absent), so the sniffer can never classify from a file
+    the scan does not read."""
     path = os.path.join(sf_dir, f"{name}.parquet")
     if os.path.isdir(path):
         return sorted(
             glob.glob(os.path.join(path, "**", "*.parquet"), recursive=True)
         )
-    if os.path.exists(path):
-        return [path]
-    out: list[str] = []
-    for m in sorted(glob.glob(os.path.join(sf_dir, f"{name}*"))):
-        if os.path.isdir(m):
-            out.extend(
-                sorted(glob.glob(os.path.join(m, "**", "*.parquet"), recursive=True))
-            )
-        elif m.endswith(".parquet"):
-            out.append(m)
-    return out
+    return [path] if os.path.exists(path) else []
 
 
 # Footers sniffed per table: first/last plus an even spread. At 100 TB

@@ -39,13 +39,15 @@ COLLECT_ALLOW = {
                                    # pq_fit's two k-means collects,
                                    # PQ probe+seed (k rows each)
     "sources/export.py": 1,      # shard manifest (one row per shard)
-    "pipeline.py": 5,            # CLI status rows, monitor fold
+    "pipeline.py": 6,            # CLI status rows, monitor fold
                                  # (|devices| + sessions rows), smart's
                                  # per-device aggregate of the new files
                                  # and the lifetime snapshot (|devices|
-                                 # rows each), record sync's new files'
-                                 # rows (delta-sized: the batch it
-                                 # appends); all written driver-side
+                                 # rows each), the daily gold's
+                                 # recomputed dates (|dates| rows),
+                                 # record sync's new files' rows
+                                 # (delta-sized: the batch it appends);
+                                 # all written driver-side
 }
 
 # crossJoin sites whose non-broadcast side is provably tiny
@@ -136,10 +138,9 @@ REPLACE_ALLOW = {
     "sources/versioned_dir.py": 2,     # staged -> v-{gen} + the
                                        # trash-rename (both invisible
                                        # names, under _lock)
-    "sources/sinks.py": 4,             # append/overwrite/merge-base
-                                       # naming under _manifest_lock, and
-                                       # overwrite_partitions' version-dir
-                                       # naming (commit = _partitions.json)
+    "sources/sinks.py": 3,             # append/overwrite/merge-base
+                                       # naming under _manifest_lock
+                                       # (commit = _batches.json)
     # local build artifact (executor zip), not a data commit
     "session.py": 1,
     # the monitor's sessions part file: the one reader-visible rename.

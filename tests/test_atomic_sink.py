@@ -122,9 +122,9 @@ def test_daily_summary_rerun_is_idempotent(spark, warehouse):
     sinks.setup_warehouse(spark, warehouse)
     sinks.append_rows(_records_df(spark, GOOD_ROWS), warehouse, "cleaning_records")
     pipeline.mode_daily_summary(spark, warehouse)
-    n1 = sinks.read_table(spark, warehouse, "daily_summary").count()
+    n1 = pipeline.read_daily_summary(spark, warehouse).count()
     pipeline.mode_daily_summary(spark, warehouse)
-    n2 = sinks.read_table(spark, warehouse, "daily_summary").count()
+    n2 = pipeline.read_daily_summary(spark, warehouse).count()
     assert n1 == 1
     assert n2 == n1
 
@@ -310,43 +310,6 @@ def test_compaction_keeps_asof_exact_at_boundary(spark, warehouse):
     ).count() == 2
     with pytest.raises(ValueError, match="retention"):
         sinks.read_table_as_of(spark, warehouse, "cleaning_records", t_mid)
-
-
-def test_dynamic_partition_overwrite(spark, tmp_path):
-    """overwrite_partitions replaces only the dates present in the
-    new batch; untouched dates survive byte-for-byte, and a filtered
-    read partition-prunes."""
-    from roborock_data_pipeline_spark.sources import sinks
-
-    wh = str(tmp_path / "wh")
-    base = spark.createDataFrame(
-        [("2024-01-01", 1, 10.0), ("2024-01-02", 2, 20.0), ("2024-01-03", 3, 30.0)],
-        "d string, n int, v double",
-    )
-    sinks.overwrite_partitions(base, wh, "daily", ["d"])
-
-    fix = spark.createDataFrame(
-        [("2024-01-02", 99, 99.0)], "d string, n int, v double"
-    )
-    sinks.overwrite_partitions(fix, wh, "daily", ["d"])
-
-    got = {
-        (str(r.d), r.n, r.v)  # partition col type-infers to DATE on read
-        for r in sinks.read_partitioned(spark, wh, "daily").collect()
-    }
-    assert got == {
-        ("2024-01-01", 1, 10.0),
-        ("2024-01-02", 99, 99.0),  # replaced, old day-2 row gone
-        ("2024-01-03", 3, 30.0),
-    }
-
-    from roborock_data_pipeline_spark.plans.inspect import plan_string
-
-    pruned = sinks.read_partitioned(spark, wh, "daily").where(
-        "d = '2024-01-03'"
-    )
-    plan = plan_string(pruned)
-    assert "PartitionFilters" in plan and "2024-01-03" in plan
 
 
 def test_export_jsonl_shards_roundtrip(spark, sf_dir, tmp_path):

@@ -414,28 +414,28 @@ def test_snapshot_overwrite_crash_before_commit_keeps_old(
     window at all — and a retry converges; the crashed attempt's
     batch dir is an invisible orphan."""
     df1 = spark.createDataFrame(
-        [("2024-03-01", 1, 12.5, 30, 12.5, 30.0)],
-        sinks.WAREHOUSE_TABLES["daily_summary"],
+        [(dt.datetime(2024, 3, 1, 9), "dev-a", 90, 80, 70, 10, 60)],
+        sinks.WAREHOUSE_TABLES["consumables"],
     )
     df2 = spark.createDataFrame(
-        [("2024-03-02", 2, 25.0, 60, 12.5, 30.0)],
-        sinks.WAREHOUSE_TABLES["daily_summary"],
+        [(dt.datetime(2024, 3, 2, 9), "dev-b", 89, 79, 69, 11, 59)],
+        sinks.WAREHOUSE_TABLES["consumables"],
     )
-    sinks.overwrite_rows(df1, wh, "daily_summary")
-    assert sinks.describe_table(wh, "daily_summary")["layout"] == (
+    sinks.overwrite_rows(df1, wh, "consumables")
+    assert sinks.describe_table(wh, "consumables")["layout"] == (
         "batch-manifest"
     )
     _bomb_manifest_commit(monkeypatch)
     with pytest.raises(OSError, match="injected"):
-        sinks.overwrite_rows(df2, wh, "daily_summary")
+        sinks.overwrite_rows(df2, wh, "consumables")
     monkeypatch.undo()
-    got = sinks.read_table(spark, wh, "daily_summary").collect()
-    assert len(got) == 1 and got[0]["date"] == "2024-03-01"
-    sinks.overwrite_rows(df2, wh, "daily_summary")
-    got = sinks.read_table(spark, wh, "daily_summary").collect()
-    assert len(got) == 1 and got[0]["date"] == "2024-03-02"
+    got = sinks.read_table(spark, wh, "consumables").collect()
+    assert len(got) == 1 and got[0]["device_name"] == "dev-a"
+    sinks.overwrite_rows(df2, wh, "consumables")
+    got = sinks.read_table(spark, wh, "consumables").collect()
+    assert len(got) == 1 and got[0]["device_name"] == "dev-b"
     # exactly one live batch
-    assert len(sinks.list_batches(wh, "daily_summary")) == 1
+    assert len(sinks.list_batches(wh, "consumables")) == 1
 
 
 # --------------------------------------------------------------- #
@@ -486,14 +486,14 @@ def test_overwrite_rows_v2_is_leased(spark, wh):
     writer lease like every other full-table mutator, so it can no
     longer interleave with a vacuum's listing→commit window."""
     df = spark.createDataFrame(
-        [("2024-03-01", 1, 12.5, 30, 12.5, 30.0)],
-        sinks.WAREHOUSE_TABLES["daily_summary"],
+        [(dt.datetime(2024, 3, 1, 9), "dev-a", 90, 80, 70, 10, 60)],
+        sinks.WAREHOUSE_TABLES["consumables"],
     )
-    sinks.overwrite_rows(df, wh, "daily_summary")
-    with sinks.writer_lock(wh, "daily_summary"):
+    sinks.overwrite_rows(df, wh, "consumables")
+    with sinks.writer_lock(wh, "consumables"):
         with pytest.raises(sinks.ConcurrentWriterError):
-            sinks.overwrite_rows(df, wh, "daily_summary")
-    sinks.overwrite_rows(df, wh, "daily_summary")  # lease released
+            sinks.overwrite_rows(df, wh, "consumables")
+    sinks.overwrite_rows(df, wh, "consumables")  # lease released
 
 
 def test_snapshot_stamp_lands_before_data_commit(spark, wh, monkeypatch):

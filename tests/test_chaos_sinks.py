@@ -14,6 +14,7 @@ snapshot. Two injected faults per surface:
 
 from __future__ import annotations
 
+import datetime as dt
 import os
 
 import pytest
@@ -180,11 +181,11 @@ def test_overwrite_rows_fault_rolls_old_back(spark, tmp_path, monkeypatch):
     w = str(tmp_path)
     sinks.setup_warehouse(spark, w)
     one = spark.createDataFrame(
-        [("2024-03-01", 1, 10.0, 30, 10.0, 30.0)],
-        sinks.WAREHOUSE_TABLES["daily_summary"],
+        [(dt.datetime(2024, 3, 1, 9), "dev-a", 90, 80, 70, 10, 60)],
+        sinks.WAREHOUSE_TABLES["consumables"],
     )
-    sinks.overwrite_rows(one, w, "daily_summary")
-    table_dir = sinks.table_path(w, "daily_summary")
+    sinks.overwrite_rows(one, w, "consumables")
+    table_dir = sinks.table_path(w, "consumables")
     real = os.replace
     state = {"fired": False}
 
@@ -203,17 +204,17 @@ def test_overwrite_rows_fault_rolls_old_back(spark, tmp_path, monkeypatch):
 
     monkeypatch.setattr("os.replace", bomb)
     two = spark.createDataFrame(
-        [("2024-03-02", 2, 20.0, 60, 10.0, 30.0)],
-        sinks.WAREHOUSE_TABLES["daily_summary"],
+        [(dt.datetime(2024, 3, 2, 9), "dev-b", 89, 79, 69, 11, 59)],
+        sinks.WAREHOUSE_TABLES["consumables"],
     )
     with pytest.raises(OSError, match="injected"):
-        sinks.overwrite_rows(two, w, "daily_summary")
+        sinks.overwrite_rows(two, w, "consumables")
     monkeypatch.undo()
-    rows = sinks.read_table(spark, w, "daily_summary").collect()
-    assert [r["date"] for r in rows] == ["2024-03-01"]  # old rolled back
-    sinks.overwrite_rows(two, w, "daily_summary")  # retry converges
-    rows = sinks.read_table(spark, w, "daily_summary").collect()
-    assert [r["date"] for r in rows] == ["2024-03-02"]
+    rows = sinks.read_table(spark, w, "consumables").collect()
+    assert [r["device_name"] for r in rows] == ["dev-a"]  # old rolled back
+    sinks.overwrite_rows(two, w, "consumables")  # retry converges
+    rows = sinks.read_table(spark, w, "consumables").collect()
+    assert [r["device_name"] for r in rows] == ["dev-b"]
 
 
 def test_gold_snapshot_lost_put_on_memory_backend(

@@ -149,7 +149,7 @@ def test_advance_fold_state_never_regresses_and_prunes():
 def test_daily_refresh_folds_late_publish_exactly_once(spark, warehouse):
     _append(spark, warehouse, [_rec(1, "robo-a", 10.0, 20)])
     pipeline.refresh_daily_summary(spark, warehouse)
-    wm = pipeline._read_rollup_state(warehouse)["wm"]
+    wm = pipeline._read_gold(warehouse, pipeline.DAILY_TABLE)[1]["wm"]
 
     _append(spark, warehouse, [_rec(2, "robo-a", 30.0, 40)])
     late = _backdate_last_batch(warehouse, wm)
@@ -157,13 +157,11 @@ def test_daily_refresh_folds_late_publish_exactly_once(spark, warehouse):
 
     r = pipeline.refresh_daily_summary(spark, warehouse)
     assert r["new_batches"] == 1 and r["dates_refreshed"] == 1
-    gold = spark.read.parquet(
-        sinks.table_path(warehouse, pipeline.GOLD_PART_TABLE)
-    )
+    gold = pipeline.read_daily_summary(spark, warehouse)
     assert gold.where(F.col("date") == "2024-03-02").count() == 1
     # exactly once: the late batch is now in the folded set, a re-run
     # is a no-op, and the watermark did not regress
-    st = pipeline._read_rollup_state(warehouse)
+    st = pipeline._read_gold(warehouse, pipeline.DAILY_TABLE)[1]
     assert late in st["folded"] and st["wm"] == wm
     assert pipeline.refresh_daily_summary(spark, warehouse) == {
         "new_batches": 0,
@@ -178,11 +176,7 @@ def test_lifetime_refresh_folds_late_publish_without_double_count(
     pipeline.refresh_device_lifetime(spark, warehouse)
     # r13: the watermark lives INSIDE the pointer-resolved live
     # snapshot version dir (data + watermark commit in one swap)
-    wm_file = os.path.join(
-        pipeline._lifetime_live(warehouse),
-        pipeline.LIFETIME_WATERMARK,
-    )
-    wm = pipeline._read_fold_state(wm_file)["wm"]
+    wm = pipeline._read_gold(warehouse, pipeline.LIFETIME_TABLE)[1]["wm"]
 
     _append(spark, warehouse, [_rec(2, "robo-a", 30.0, 40)])
     _backdate_last_batch(warehouse, wm)
@@ -275,16 +269,13 @@ def test_noop_refresh_records_proven_folded_base(spark, warehouse):
         "new_batches": 0,
         "dates_refreshed": 0,
     }
-    assert base in pipeline._read_rollup_state(warehouse)["folded"]
+    assert base in pipeline._read_gold(warehouse, pipeline.DAILY_TABLE)[1]["folded"]
 
     assert pipeline.refresh_device_lifetime(spark, warehouse)["mode"] == "noop"
     # r13: the watermark lives INSIDE the pointer-resolved live
     # snapshot version dir (data + watermark commit in one swap)
-    wm_file = os.path.join(
-        pipeline._lifetime_live(warehouse),
-        pipeline.LIFETIME_WATERMARK,
-    )
-    assert base in pipeline._read_fold_state(wm_file)["folded"]
+    life = pipeline._read_gold(warehouse, pipeline.LIFETIME_TABLE)[1]
+    assert base in life["folded"]
     row = pipeline.read_device_lifetime(spark, warehouse).collect()[0]
     assert row["total_clean_count"] == 2
 
@@ -295,7 +286,7 @@ def test_warehouse_health_surfaces_fold_and_lock_signals(spark, warehouse):
     staleness — come out of one no-Spark-job snapshot."""
     # before any refresh: no watermark, no lock
     h0 = pipeline.warehouse_health(warehouse)
-    g0 = h0[pipeline.GOLD_PART_TABLE]
+    g0 = h0[pipeline.DAILY_TABLE]
     assert g0["fold_watermark_age_s"] is None
     assert g0["fold_grace_band_folded"] == 0
     assert h0["cleaning_records"]["lock_holder_pid"] is None
@@ -305,7 +296,7 @@ def test_warehouse_health_surfaces_fold_and_lock_signals(spark, warehouse):
     pipeline.refresh_daily_summary(spark, warehouse)
     pipeline.refresh_device_lifetime(spark, warehouse)
     h1 = pipeline.warehouse_health(warehouse)
-    for table in (pipeline.GOLD_PART_TABLE, pipeline.LIFETIME_TABLE):
+    for table in (pipeline.DAILY_TABLE, pipeline.LIFETIME_TABLE):
         f = h1[table]
         # fresh fold: the watermark is seconds old and the folded
         # batch sits in the grace band
@@ -363,4 +354,4 @@ def test_health_cli_mode_prints_snapshot(spark, warehouse, capsys):
     out = json.loads(capsys.readouterr().out)
     assert "cleaning_records" in out
     assert out["cleaning_records"]["lock_stale"] is False
-    assert "fold_watermark_age_s" in out[pipeline.GOLD_PART_TABLE]
+    assert "fold_watermark_age_s" in out[pipeline.DAILY_TABLE]

@@ -2,15 +2,15 @@
 
 The 100 TB form of mode_daily_summary: the full rebuild rescans all of
 history every run; the refresh does new-batch-sized discovery, a
-range-pruned per-date recompute, and a dynamic partition swap of only
-the touched dates. These tests pin the contract:
+range-pruned per-date recompute, and republishes the |dates|-row gold
+snapshot with only the touched dates replaced. These tests pin the
+contract:
 
-- equivalence: after any append/refresh interleaving the partitioned
-  gold table equals the full rebuild's rollup;
+- equivalence: after any append/refresh interleaving the gold
+  snapshot equals the full rebuild's rollup;
 - no-op: a refresh with no new batches touches nothing;
-- crash convergence: a crash between the partition swap and the
-  fold-state commit replays to identical content (publish is
-  idempotent);
+- crash convergence: a crash at the snapshot's commit leaves the old
+  snapshot live, and the rerun folds the same batches and converges;
 - vacuum interplay: a vacuum base newer than the watermark only
   over-approximates touched dates — never wrong;
 - plan: the per-date recompute scan carries a pushed start_time range.
@@ -78,25 +78,6 @@ def test_incremental_matches_full_rebuild(spark, warehouse):
     assert _gold_rows(spark, warehouse) == _full_rollup_rows(spark, warehouse)
 
 
-def test_untouched_partitions_not_rewritten(spark, warehouse):
-    _append(spark, warehouse, [_rec(1, 9), _rec(2, 9)])
-    pipeline.refresh_daily_summary(spark, warehouse)
-    d1 = os.path.join(
-        warehouse, pipeline.GOLD_PART_TABLE, "date=2024-03-01"
-    )
-    before = {
-        f: os.path.getmtime(os.path.join(d1, f)) for f in os.listdir(d1)
-    }
-    _append(spark, warehouse, [_rec(2, 20)])  # touches only date 2
-    out = pipeline.refresh_daily_summary(spark, warehouse)
-    assert out == {"new_batches": 1, "dates_refreshed": 1}
-    after = {
-        f: os.path.getmtime(os.path.join(d1, f)) for f in os.listdir(d1)
-    }
-    assert before == after  # date 1's partition untouched
-    assert _gold_rows(spark, warehouse) == _full_rollup_rows(spark, warehouse)
-
-
 def test_noop_without_new_batches(spark, warehouse):
     _append(spark, warehouse, [_rec(1, 9)])
     pipeline.refresh_daily_summary(spark, warehouse)
@@ -129,31 +110,36 @@ def test_noop_refresh_reads_its_state_back_on_the_memory_backend(
 
 
 def test_crash_between_swap_and_watermark_converges(spark, warehouse, monkeypatch):
-    """A crash AFTER the partition swap, BEFORE the fold state commits:
-    the next refresh replays the same batches and converges. The crash
-    is injected at the commit seam, so it holds on every backend."""
-    from roborock_data_pipeline_spark.sources import commit_provider
+    """A crash at the gold snapshot's commit (its `_current.json`
+    pointer, which publishes data and fold state together): the old
+    snapshot stays live, and the next refresh folds the same batches
+    and converges. The crash is injected at the commit seam, so it
+    holds on every backend."""
+    from roborock_data_pipeline_spark.sources import commit_provider, versioned_dir
 
     _append(spark, warehouse, [_rec(1, 9), _rec(2, 9)])
     pipeline.refresh_daily_summary(spark, warehouse)
+    old = _gold_rows(spark, warehouse)
     _append(spark, warehouse, [_rec(2, 20), _rec(3, 9)])
-    state_path = pipeline._rollup_watermark_path(warehouse)
+    pointer = os.path.join(
+        sinks.table_path(warehouse, pipeline.DAILY_TABLE),
+        versioned_dir.CURRENT_POINTER,
+    )
     real = commit_provider.commit_pointer
 
     def crash(path, data):
-        if path == state_path:
-            raise OSError("injected crash before the fold-state commit")
+        if path == pointer:
+            raise OSError("injected crash at the snapshot commit")
         real(path, data)
 
     monkeypatch.setattr(commit_provider, "commit_pointer", crash)
     with pytest.raises(OSError, match="injected"):
         pipeline.refresh_daily_summary(spark, warehouse)
-    rows = _gold_rows(spark, warehouse)
-    assert rows == _full_rollup_rows(spark, warehouse)  # swapped, not committed
+    assert _gold_rows(spark, warehouse) == old  # the old snapshot is live
     monkeypatch.setattr(commit_provider, "commit_pointer", real)
     out = pipeline.refresh_daily_summary(spark, warehouse)
     assert out["new_batches"] == 1  # replayed
-    assert _gold_rows(spark, warehouse) == rows
+    assert _gold_rows(spark, warehouse) == _full_rollup_rows(spark, warehouse)
     # and the fold state is committed: next run is a no-op
     assert pipeline.refresh_daily_summary(spark, warehouse) == {
         "new_batches": 0,

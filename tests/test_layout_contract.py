@@ -7,9 +7,9 @@ layout is refused by name.
   declared schema on a freshly provisioned warehouse;
 - a table dir holding batch dirs or root part files but no manifest,
   a plain-stamp fold-state file, a pointer-less versioned root that
-  holds data, and partition data outside a version segment each raise
-  a ``ValueError`` that names the path — rows are never silently
-  hidden by a read set that skips them.
+  holds data, and an old partitioned daily gold table each raise a
+  ``ValueError`` that names the path — rows are never silently hidden
+  by a read set that skips them.
 """
 
 from __future__ import annotations
@@ -71,7 +71,7 @@ def test_setup_provisions_every_table_manifest_first(spark, warehouse):
 
 
 def test_gold_reads_on_a_fresh_warehouse_are_empty(spark, warehouse):
-    daily_cols = sinks.WAREHOUSE_TABLES["daily_summary"].fieldNames()
+    daily_cols = pipeline.DAILY_SCHEMA.fieldNames()
     lifetime_cols = [
         "device_name", "total_clean_count", "total_clean_area",
         "total_clean_time",
@@ -127,10 +127,12 @@ def test_plain_stamp_fold_state_refused(spark, warehouse):
     _append(spark, warehouse, [_rec(1)])
     pipeline.refresh_daily_summary(spark, warehouse)
     pipeline.refresh_device_lifetime(spark, warehouse)
-    daily_state = pipeline._rollup_watermark_path(warehouse)  # noqa: SLF001
-    life_state = os.path.join(
-        pipeline._lifetime_live(warehouse),  # noqa: SLF001
-        pipeline.LIFETIME_WATERMARK,
+    daily_state, life_state = (
+        os.path.join(
+            pipeline._read_gold(warehouse, table)[0],  # noqa: SLF001
+            pipeline.GOLD_STATE,
+        )
+        for table in (pipeline.DAILY_TABLE, pipeline.LIFETIME_TABLE)
     )
     # planted through the seam the states are read through, so the
     # refusal runs on every backend
@@ -159,12 +161,12 @@ def test_pointer_less_versioned_root_refused(tmp_path):
     assert os.path.exists(os.path.join(root, "part-0.parquet"))
 
 
-def test_unversioned_partitions_refused(spark, tmp_path):
-    wh = str(tmp_path / "wh")
-    df = spark.createDataFrame(
-        [("2024-01-01", 1)], "d string, n int"
-    )
-    df.write.partitionBy("d").parquet(os.path.join(wh, "daily"))
-    td = sinks.table_path(wh, "daily")
-    _refused(lambda: sinks.overwrite_partitions(df, wh, "daily", ["d"]), td)
-    _refused(lambda: sinks.read_partitioned(spark, wh, "daily"), td)
+def test_unversioned_partitions_refused(spark, warehouse):
+    """The daily gold's retired layout -- ``date=...`` partition dirs
+    under ``daily_summary_by_date``, no ``_current.json`` -- is refused
+    by name on its read and its refresh."""
+    td = sinks.table_path(warehouse, pipeline.DAILY_TABLE)
+    old = spark.createDataFrame([("2024-01-01", 1)], "date string, n int")
+    old.write.partitionBy("date").parquet(td)
+    _refused(lambda: pipeline.read_daily_summary(spark, warehouse), td)
+    _refused(lambda: pipeline.refresh_daily_summary(spark, warehouse), td)

@@ -139,7 +139,7 @@ def test_noop_records_proven_bases_on_the_memory_backend(
     assert sinks.vacuum_table(spark, wh, "cleaning_records", 0) == 2
     (base,) = sinks.list_batches(wh, "cleaning_records")
     assert pipeline.refresh_device_lifetime(spark, wh)["mode"] == "noop"
-    assert base in pipeline._read_lifetime_state(wh)["folded"]
+    assert base in pipeline._read_gold(wh, pipeline.LIFETIME_TABLE)[1]["folded"]
     assert _got(spark, wh) == _expected(spark, wh)
 
 

@@ -112,16 +112,17 @@ def test_cdc_merge_matches_reference_model_randomized(spark):
         expect = {k: r[1] for k, r in best.items() if not r[4]}
 
         cut = len(ops) // 2
-        snap_src = _snap(spark, ops[:cut])
         # snapshot = latest per key of the first half, tombstones kept
+        stored: dict[int, tuple] = {}
+        for k, v, ts, seq, is_del in ops[:cut]:
+            if k not in stored or (ts, seq) > (stored[k][2], stored[k][3]):
+                stored[k] = (k, v, ts, seq, is_del)
+        assert any(r[4] for r in stored.values()), f"seed {seed}"
         from roborock_data_pipeline_spark.operators.linkage import cdc_merge
 
-        snapshot = cdc_merge(
-            snap_src.limit(0), snap_src, ["k"], ["ts", "seq"], "is_delete",
-            keep_tombstones=True,
-        )
         merged = cdc_merge(
-            snapshot, _snap(spark, ops[cut:]), ["k"], ["ts", "seq"], "is_delete"
+            _snap(spark, list(stored.values())), _snap(spark, ops[cut:]),
+            ["k"], ["ts", "seq"], "is_delete",
         )
         got = {r.k: r.v for r in merged.collect()}
         assert got == expect, f"seed {seed}"

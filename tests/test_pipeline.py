@@ -401,8 +401,9 @@ def _group_stats(spark, step):
 def test_ingest_steps_job_counts_warm(spark, monitor_dirs):
     """Job-count pins for a warm ingest tick: record_sync is one
     scan-collect of the new files; smart one aggregate (a shuffle
-    job and a result job); each gold refresh one aggregate plus its
-    write. gold_maintenance runs after them, as perfbench's
+    job and a result job); each gold refresh one collected aggregate
+    (a shuffle job and a result job), written driver-side.
+    gold_maintenance runs after them, as perfbench's
     maintenance tick does: both golds are then already folded, so its
     jobs are the vacuum's merge writes, one per batch-log table."""
     from perfbench.ingest import RETAIN_BATCHES
@@ -586,7 +587,7 @@ def test_daily_summary_gold_table(spark, cloud_and_warehouse):
     pipeline.mode_setup(spark, warehouse)
     pipeline.mode_record_sync(spark, cloud, warehouse)
     pipeline.mode_daily_summary(spark, warehouse)
-    rows = sinks.read_table(spark, warehouse, "daily_summary").collect()
+    rows = pipeline.read_daily_summary(spark, warehouse).collect()
     assert len(rows) == 1
     r = rows[0]
     assert r.date == "2024-02-01"

@@ -1,16 +1,12 @@
-"""Layout guards on the paths that rewrite a warehouse table's rows:
-vacuum_table (the batch log's merge) and overwrite_partitions (the
-partitioned gold's dynamic overwrite).
+"""Layout guards on the paths that read or rewrite a warehouse
+table's rows: read_table and vacuum_table (the batch log's merge).
 
 Contract pinned here:
-- the layout is decided from the committed manifests
-  (`_batches.json` / `_partitions.json`), never by scanning dirnames:
-  a stray key=value directory inside a batch-log table blocks nothing;
+- the layout is decided from the committed manifest
+  (`_batches.json`), never by scanning dirnames: a stray key=value
+  directory inside a batch-log table blocks nothing;
 - a pre-manifest partition layout is refused by name on every read
-  and rewrite path, also when a stray batch dir sits beside it;
-- overwrite_partitions refuses a batch-log table up front;
-- a first partition overwrite that dies at its commit point leaves
-  no `_partitions.json`, and a rerun converges.
+  and rewrite path, also when a stray batch dir sits beside it.
 """
 
 from __future__ import annotations
@@ -23,7 +19,7 @@ import tempfile
 import pytest
 
 from roborock_data_pipeline_spark import schemas
-from roborock_data_pipeline_spark.sources import commit_provider, sinks
+from roborock_data_pipeline_spark.sources import sinks
 
 
 @pytest.fixture()
@@ -42,12 +38,6 @@ def _rec(day, device, status="ok"):
 def _append(spark, warehouse, rows):
     df = spark.createDataFrame(rows, schemas.CLEANING_RECORDS)
     sinks.append_rows(df, warehouse, "cleaning_records")
-
-
-def _partitions_committed(warehouse, name):
-    return commit_provider.read_pointer(
-        os.path.join(sinks.table_path(warehouse, name), sinks.PARTITIONS_MANIFEST)
-    ) is not None
 
 
 def test_stray_partition_dirname_does_not_block_dml(spark, warehouse):
@@ -96,65 +86,12 @@ def test_legacy_partition_dirs_without_batches_still_refused(
     """The pre-manifest gold layout -- key=value dirs holding data, no
     manifest at all -- is refused by name: no read or rewrite silently
     serves or replaces nothing from it."""
-    _strip_batch_manifest(warehouse, "daily_summary", drop_pointer)
-    _plant_legacy_partition(spark, warehouse, "daily_summary", ".tmp-legacy")
+    _strip_batch_manifest(warehouse, "consumables", drop_pointer)
+    _plant_legacy_partition(spark, warehouse, "consumables", ".tmp-legacy")
     with pytest.raises(ValueError, match="unsupported"):
-        sinks.read_partitioned(spark, warehouse, "daily_summary")
+        sinks.read_table(spark, warehouse, "consumables")
     with pytest.raises(ValueError, match="unsupported"):
-        sinks.read_table(spark, warehouse, "daily_summary")
-    with pytest.raises(ValueError, match="unsupported"):
-        sinks.vacuum_table(spark, warehouse, "daily_summary", 0)
-    df = spark.createDataFrame(
-        [("2024-03-02", "dev-b", 2)], "date string, device_id string, n int"
-    )
-    with pytest.raises(ValueError, match="unsupported"):
-        sinks.overwrite_partitions(df, warehouse, "daily_summary", ["date"])
-    assert not _partitions_committed(warehouse, "daily_summary")
-
-
-def test_first_conversion_crash_leaves_no_layout_stamp(
-    spark, warehouse, monkeypatch
-):
-    """`_partitions.json` is the partitioned layout's only marker and
-    its commit point. A crash/fence in the commit window of a
-    FIRST-TIME conversion leaves no marker on a table whose conversion
-    never committed; a rerun then converges to a pointer-committed
-    table."""
-    df = spark.createDataFrame(
-        [("2024-03-01", "dev-a", 1)], "date string, device_id string, n int"
-    )
-
-    def _boom():
-        raise sinks.FencedWriterError("simulated fence at commit point")
-
-    monkeypatch.setattr(sinks, "_check_fence", _boom)
-    with pytest.raises(sinks.FencedWriterError):
-        sinks.overwrite_partitions(df, warehouse, "daily_summary", ["date"])
-    # the commit artifact does not exist: the table never converted
-    assert not _partitions_committed(warehouse, "daily_summary")
-    assert sinks.read_partitioned(spark, warehouse, "daily_summary").count() == 0
-    monkeypatch.undo()
-    sinks.overwrite_partitions(df, warehouse, "daily_summary", ["date"])
-    assert _partitions_committed(warehouse, "daily_summary")
-    got = sinks.read_partitioned(spark, warehouse, "daily_summary")
-    assert got.count() == 1
-
-
-def test_overwrite_partitions_refuses_batch_log_table(spark, warehouse):
-    """A mistaken overwrite_partitions on a batch-log table refuses up
-    front: its readers resolve _batches.json and would never see the
-    partitions, and the table keeps its batch log intact."""
-    _append(spark, warehouse, [_rec(1, "dev-a")])
-    df = spark.createDataFrame([("2024-03-01", 1)], "date string, n int")
-    with pytest.raises(ValueError, match="batch-log"):
-        sinks.overwrite_partitions(
-            df, warehouse, "cleaning_records", ["date"]
-        )
-    assert not _partitions_committed(warehouse, "cleaning_records")
-    assert sinks.read_table(spark, warehouse, "cleaning_records").count() == 1
-    _append(spark, warehouse, [_rec(2, "dev-b")])
-    assert sinks.vacuum_table(spark, warehouse, "cleaning_records", 0) == 2
-    assert sinks.read_table(spark, warehouse, "cleaning_records").count() == 2
+        sinks.vacuum_table(spark, warehouse, "consumables", 0)
 
 
 def test_legacy_partition_data_with_stray_batch_still_refused(
@@ -165,12 +102,10 @@ def test_legacy_partition_data_with_stray_batch_still_refused(
     vacuum of the batch log would silently skip the partition files.
     Conversely an EMPTY key=value dir keeps not blocking (covered by
     test_stray_partition_dirname_does_not_block_dml)."""
-    _strip_batch_manifest(warehouse, "daily_summary", drop_pointer)
-    td = _plant_legacy_partition(spark, warehouse, "daily_summary", ".tmp-leg2")
+    _strip_batch_manifest(warehouse, "consumables", drop_pointer)
+    td = _plant_legacy_partition(spark, warehouse, "consumables", ".tmp-leg2")
     os.makedirs(os.path.join(td, "batch-00000000000000000001-x"), exist_ok=True)
     with pytest.raises(ValueError, match="unsupported"):
-        sinks.read_table(spark, warehouse, "daily_summary")
+        sinks.read_table(spark, warehouse, "consumables")
     with pytest.raises(ValueError, match="unsupported"):
-        sinks.vacuum_table(spark, warehouse, "daily_summary", 0)
-    with pytest.raises(ValueError, match="unsupported"):
-        sinks.read_partitioned(spark, warehouse, "daily_summary")
+        sinks.vacuum_table(spark, warehouse, "consumables", 0)

@@ -145,4 +145,4 @@ def test_describe_table_reflects_lifecycle(spark, warehouse):
     assert d["retention_point_ns"] is not None
     # the warehouse-wide form covers every provisioned table
     everything = sinks.describe_warehouse(warehouse)
-    assert "cleaning_records" in everything and "daily_summary" in everything
+    assert "cleaning_records" in everything and "consumables" in everything

@@ -13,13 +13,8 @@
 - a vacuum crash between base publish and absorbed-dir cleanup
   double-counts nothing (the base's `_absorbed.json` makes leftovers
   non-live) and the next vacuum self-heals;
-- NOT NULL enforcement holds on the gold rebuild and on the first
-  partition overwrite of a table that has no schema manifest (the
-  append door's checks, NOT NULL included, are pinned in
-  test_schema_evolution.py);
-- the dynamic partition overwrite commits every touched partition
-  through ONE manifest rename — readers see all-old or all-new,
-  never mixed.
+- NOT NULL enforcement holds on a full overwrite (the append door's
+  checks, NOT NULL included, are pinned in test_schema_evolution.py).
 """
 
 from __future__ import annotations
@@ -299,123 +294,8 @@ def _all_nullable(schema):
 
 def test_overwrite_rows_enforces_not_null(spark, warehouse):
     bad = spark.createDataFrame(
-        [(None, 1, 1.0, 1, 1.0, 1.0)],
-        _all_nullable(sinks.WAREHOUSE_TABLES["daily_summary"]),
+        [(None, "dev-a", 1, 1, 1, 1, 1)],
+        _all_nullable(sinks.WAREHOUSE_TABLES["consumables"]),
     )
     with pytest.raises(Exception, match="non-nullable"):
-        sinks.overwrite_rows(bad, warehouse, "daily_summary")
-
-
-def test_first_overwrite_partitions_enforces_not_null(spark, warehouse):
-    """The partitioned gold table has no schema manifest before (or
-    after) its first overwrite; NOT NULL still holds there, from the
-    code-pinned declaration, and the failed publish commits nothing."""
-    name = pipeline.GOLD_PART_TABLE
-    assert sinks.table_schema(warehouse, name) == (
-        sinks.PARTITIONED_TABLES[name]
-    )
-    bad = spark.createDataFrame(
-        [("2024-03-01", None, 20.0, 60, 10.0, 30.0)],
-        _all_nullable(sinks.PARTITIONED_TABLES[name]),
-    )
-    with pytest.raises(Exception, match="non-nullable column 'total_cleanings'"):
-        sinks.overwrite_partitions(bad, warehouse, name, ["date"])
-    assert sinks.read_partitioned(spark, warehouse, name).collect() == []
-    good = spark.createDataFrame(
-        [("2024-03-01", 2, 20.0, 60, 10.0, 30.0)],
-        sinks.PARTITIONED_TABLES[name],
-    )
-    sinks.overwrite_partitions(good, warehouse, name, ["date"])
-    assert [
-        r["total_cleanings"]
-        for r in sinks.read_partitioned(spark, warehouse, name).collect()
-    ] == [2]
-
-
-# ------------------------------------- cross-partition atomic overwrite
-
-
-def _daily(spark, rows):
-    return spark.createDataFrame(rows, "d string, n int, v double")
-
-
-def test_partition_overwrite_commit_is_all_or_nothing(spark, tmp_path):
-    """VERDICT r6 #1 / r7 missing #1: a refresh crash mid-publish must
-    leave EVERY date old (manifest untouched — the new version dirs
-    are unreferenced and invisible); the re-run converges to all-new.
-    No reader ever observes a mixed or missing set."""
-    wh = str(tmp_path / "wh")
-    sinks.overwrite_partitions(
-        _daily(
-            spark,
-            [
-                ("2024-01-01", 1, 10.0),
-                ("2024-01-02", 2, 20.0),
-                ("2024-01-03", 3, 30.0),
-            ],
-        ),
-        wh,
-        "daily",
-        ["d"],
-    )
-    old = {
-        (str(r.d), r.n)
-        for r in sinks.read_partitioned(spark, wh, "daily").collect()
-    }
-
-    fix = _daily(spark, [("2024-01-02", 99, 99.0), ("2024-01-03", 98, 98.0)])
-    orig_replace = os.replace
-    with pytest.MonkeyPatch.context() as mp:
-
-        def crash_at_commit(src, dst, *a, **kw):
-            if dst.endswith(sinks.PARTITIONS_MANIFEST):
-                raise OSError("simulated crash at the commit rename")
-            return orig_replace(src, dst, *a, **kw)
-
-        mp.setattr(sinks.os, "replace", crash_at_commit)
-        with pytest.raises(OSError, match="simulated crash"):
-            sinks.overwrite_partitions(fix, wh, "daily", ["d"])
-
-    # every date still OLD — never mixed, never missing
-    got = {
-        (str(r.d), r.n)
-        for r in sinks.read_partitioned(spark, wh, "daily").collect()
-    }
-    assert got == old
-
-    # deterministic re-run converges: both touched dates flip together
-    sinks.overwrite_partitions(fix, wh, "daily", ["d"])
-    got = {
-        (str(r.d), r.n)
-        for r in sinks.read_partitioned(spark, wh, "daily").collect()
-    }
-    assert got == {("2024-01-01", 1), ("2024-01-02", 99), ("2024-01-03", 98)}
-
-
-def test_partition_overwrite_keeps_reader_grace_version(spark, tmp_path):
-    """Superseded versions are GC'd at the NEXT overwrite's entry, not
-    at commit (a grace window): a reader that
-    resolved the previous manifest keeps its files for a full
-    maintenance interval."""
-    wh = str(tmp_path / "wh")
-    sinks.overwrite_partitions(
-        _daily(spark, [("2024-01-01", 1, 10.0)]), wh, "daily", ["d"]
-    )
-    pinned = sinks.read_partitioned(spark, wh, "daily")  # resolves v1
-    sinks.overwrite_partitions(
-        _daily(spark, [("2024-01-01", 2, 20.0)]), wh, "daily", ["d"]
-    )
-    # v1 files still on disk: the pinned reader completes exactly
-    assert [(str(r.d), r.n) for r in pinned.collect()] == [("2024-01-01", 1)]
-    part_dir = os.path.join(wh, "daily", "d=2024-01-01")
-    assert len(os.listdir(part_dir)) == 2  # v1 (grace) + v2 (live)
-    # third overwrite: entry GC reclaims v1
-    sinks.overwrite_partitions(
-        _daily(spark, [("2024-01-01", 3, 30.0)]), wh, "daily", ["d"]
-    )
-    assert len(os.listdir(part_dir)) == 2  # v2 (grace) + v3 (live)
-    got = [
-        (str(r.d), r.n)
-        for r in sinks.read_partitioned(spark, wh, "daily").collect()
-    ]
-    assert got == [("2024-01-01", 3)]
+        sinks.overwrite_rows(bad, warehouse, "consumables")

@@ -95,7 +95,7 @@ def test_unreadable_lock_is_treated_as_live(spark, warehouse):
 
 def test_gold_refresh_is_leased(spark, warehouse):
     _append_n(spark, warehouse, 2)
-    with sinks.writer_lock(warehouse, pipeline.GOLD_PART_TABLE):
+    with sinks.writer_lock(warehouse, pipeline.DAILY_TABLE):
         with pytest.raises(ConcurrentWriterError):
             pipeline.refresh_daily_summary(spark, warehouse)
     # released → refresh proceeds and the watermark advanced

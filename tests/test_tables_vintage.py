@@ -174,53 +174,6 @@ def test_queries_and_oracles_align(spark):
     }
 
 
-def test_sniffer_covers_streaming_glob_layout(tmp_path, spark):
-    """The streaming file source reads {dir}/events* — change-batch
-    fixtures named events-0.parquet etc. carry NO bare events.parquet.
-    The unit sniffer must classify from the same glob the stream
-    reads (regression: the strict exact-path sniffer returned "us"
-    for raw-int64 change batches and the stream read them as
-    TimestampType, failing with PARQUET_COLUMN_DATA_TYPE_MISMATCH)."""
-    from roborock_data_pipeline_spark.sources import tables
-
-    d = str(tmp_path)
-    df = spark.createDataFrame(
-        [(1, 1_704_067_200 * 1_000_000_000, 1, "signup", 1.0, None)],
-        "event_id long, ts long, user_id long, event_type string, "
-        "value double, props string",
-    )
-    df.coalesce(1).write.mode("overwrite").parquet(d + "/stage")
-    import glob as g
-    import shutil
-
-    part = g.glob(d + "/stage/part-*.parquet")[0]
-    shutil.copy(part, d + "/events-0.parquet")
-    shutil.rmtree(d + "/stage")
-    assert "ts" in tables.ns_timestamp_cols(d, "events")
-    # and an empty dir still sniffs to the native-µs default
-    (tmp_path / "empty").mkdir()
-    assert tables.ns_timestamp_cols(str(tmp_path / "empty"), "events") == ()
-
-
-def test_sniffer_handles_directory_shaped_stream_batches(tmp_path, spark):
-    """Spark's own df.write.parquet('events-0.parquet') creates a
-    DIRECTORY — the fallback sniff must walk it (and suffixless dirs
-    the stream glob also reads), not crash pyarrow on a dir path."""
-    from roborock_data_pipeline_spark.sources import tables
-
-    df = spark.createDataFrame(
-        [(1, 1_704_067_200 * 1_000_000_000, 1, "signup", 1.0, None)],
-        "event_id long, ts long, user_id long, event_type string, "
-        "value double, props string",
-    )
-    d1 = str(tmp_path / "dirbatch")
-    df.coalesce(1).write.mode("overwrite").parquet(d1 + "/events-0.parquet")
-    assert "ts" in tables.ns_timestamp_cols(d1, "events")
-    d2 = str(tmp_path / "suffixless")
-    df.coalesce(1).write.mode("overwrite").parquet(d2 + "/events_batch1")
-    assert "ts" in tables.ns_timestamp_cols(d2, "events")
-
-
 def test_register_views_sql_interface(spark, sf_dir):
     """After register_views, raw Spark SQL runs against the same
     table names the oracles use."""
